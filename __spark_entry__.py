@@ -1,35 +1,24 @@
 """Driver contract for the insights_spark engine.
 
-`queries()` maps every implemented operator family from SURVEY.md §2 onto
-the driver's testdata tables (region nation customer supplier part orders
-lineitem events documents embeddings); `oracle_sql()` gives the ANSI-SQL
-equivalent DuckDB runs on the same parquet.
-
-Cross-engine exactness rules used throughout (so value-hashes match):
-- integer arithmetic everywhere possible; DuckDB SUM(int) returns HUGEINT,
-  so every oracle sum is CAST(... AS BIGINT).
-- double expressions only where both engines evaluate the identical IEEE
-  expression tree (ratios of ints, squared distances, sequential dot-product
-  folds) — never engine-reassociated SUM(double).
-- every computed column aliased identically on both sides.
-- deterministic tie-breaks (rank by (score, id)) everywhere top-k appears.
-
-Synthetic geo derivation (documented, same formula both sides):
-    lon = mod(key * 7919,  360000) / 1000.0 - 180.0
-    lat = mod(key * 104729, 170000) / 1000.0 - 85.0
+`queries()` maps every registered query name to its Spark builder over the
+driver's testdata tables; `oracle_sql()` gives the ANSI-SQL equivalent
+DuckDB runs on the same parquet. Both are read from the registry in
+`insights_spark/queries/`, where each query is declared once, next to its
+oracle.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from insights_spark.queries import REGISTRY, Builder  # noqa: E402
+from insights_spark.queries._fixtures import _COUNTRIES, _points  # noqa: E402,F401
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -37,3490 +26,33 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # r6 fan-out (guide §2.5 input skew): the fixture parquet ships ONE
-    # row group per file (verified with pyarrow), so no matter how many
-    # byte-range splits the scan planner makes, every row lands in the
-    # single task holding the row group's offset — ALL map-side work
-    # (cell encodes, gram/quality kernels, partial aggregation) was
-    # serializing on one core. A round-robin repartition to default
-    # parallelism fans it out once, right after the scan; the size gate
-    # keeps production-scale tables (many row groups, splits >> cores)
-    # from ever paying the shuffle. Filters/pruning still push below the
-    # repartition (PushDownPredicates handles RepartitionOperation), and
-    # every registered query is partition-assignment invariant (the
-    # two-phase prefix scans range-partition on a total order), so
-    # results are unchanged — the full selfcheck gate re-verified.
-    # The gate is workload-based, A/B-measured per table class: the text
-    # and vector tables feed per-row Arrow kernels (grams, signatures,
-    # fold dots) whose map cost per byte dwarfs one pass of shuffle, so
-    # fanning them out won 2-5x per query; the point/fact tables
-    # (events, lineitem, orders) are keyed by their first exchange anyway
-    # and measured uniformly SLOWER with a blanket fan-out (the
-    # repartition's pre-sort + shuffle exceeds their single-core scan).
-    # The 256 MiB cap keeps production-scale text shards (many row
-    # groups, splits >> cores) from paying the shuffle at all.
-    fan_tables = os.environ.get(
-        "SPARK_GRAFT_FANOUT", "documents,embeddings"
-    )
-    if name in {t for t in fan_tables.split(",") if t}:
-        path = f"{sf_dir}/{name}.parquet"
-        try:
-            if os.path.isdir(path):
-                # spark-written tables are directories of part files
-                sz = sum(
-                    e.stat().st_size for e in os.scandir(path)
-                    if e.is_file()
-                )
-            else:
-                sz = os.path.getsize(path)
-        except OSError:
-            sz = 1 << 40
-        if sz < 256 * 1024 * 1024:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
-
-
-def _points(df: DataFrame, key: str) -> DataFrame:
-    """Deterministic synthetic lon/lat from an integer key (same math as
-    the SQL oracle; all values are multiples of 0.001 so they never sit on
-    the synthetic polygon edges, which are offset by 0.0005)."""
-    return df.withColumn(
-        "lon", F.pmod(F.col(key) * 7919, F.lit(360000)) / 1000.0 - 180.0
-    ).withColumn("lat", F.pmod(F.col(key) * 104729, F.lit(170000)) / 1000.0 - 85.0)
-
-
-_POINTS_SQL = (
-    "mod({k} * 7919, 360000) / 1000.0 - 180.0 AS lon, "
-    "mod({k} * 104729, 170000) / 1000.0 - 85.0 AS lat"
+# ORDER MATTERS: the driver's correctness gate checks the FIRST 50 entries
+# of queries(), so those are pinned here; every other query follows in
+# registry order. The window leads with the queries that were last to get a
+# driver-green row (late round-4 and round-5 registrations).
+DRIVER_WINDOW = (
+    "zonal_stats", "knn_join", "tile_diff", "cluster_savings", "token_lorenz",
+    "top_terms_per_source", "doc_geotag", "fuzzy_join", "quantize",
+    "trending_cells", "frontier_cells", "kcore", "hybrid_search",
+    "regional_revenue", "normalize_text", "theil_sen", "mann_kendall",
+    "sorted_neighborhood", "hits", "od_flows", "communities", "cusum",
+    "concurrency", "kmeans", "prefix_jaccard", "sssp", "semivariogram",
+    "idw_fill", "getis_ord", "lm_perplexity", "host_stats", "shard_assign",
+    "hot_changesets_inc", "pagerank", "moran_i", "quad_compact",
+    "source_drift", "cooccur", "table_merge_read", "table_time_travel",
+    "pps_sample", "gapfill_weeks", "spatial_layout_scan", "bfs_hops",
+    "anomaly_weeks", "ann_int8", "phash_pairs", "scd2_intervals",
+    "funnel_steps", "ripley_k",
 )
-
-# Synthetic countries for the PIP operator (lon0, lat0, lon1, lat1).
-# Tie-break order (priority DESC, name ASC): Aztlan, Westland, Eastland, Northia.
-# Aztlan overlaps Eastland — overlap points go to Aztlan (priority).
-_COUNTRIES = [
-    ("Aztlan", True, 60.0005, -10.0005, 100.0005, 30.0005),
-    ("Westland", True, -150.0005, -60.0005, -30.0005, 20.0005),
-    ("Eastland", False, 0.0005, -20.0005, 90.0005, 60.0005),
-    ("Northia", False, -29.9995, 30.0005, -0.0005, 79.9995),
-]
-
-
-def _boundary_rows():
-    rows = []
-    for name, pri, x0, y0, x1, y1 in _COUNTRIES:
-        ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-        rows.append(
-            {"name_en": name, "admin_level": 2, "tags": {}, "polygons": [[ring]],
-             "priority": pri}
-        )
-    return rows
-
-
-def _country_case_sql(lon: str = "lon", lat: str = "lat") -> str:
-    """CASE replicating the PIP kernel's deterministic tie-break order."""
-    branches = []
-    for name, _pri, x0, y0, x1, y1 in [
-        _COUNTRIES[0], _COUNTRIES[1], _COUNTRIES[2], _COUNTRIES[3]
-    ]:
-        branches.append(
-            f"WHEN {lon} >= {x0} AND {lon} <= {x1} AND {lat} >= {y0} AND {lat} <= {y1} "
-            f"THEN '{name}'"
-        )
-    return "CASE " + " ".join(branches) + " ELSE NULL END"
-
-
-# ---------------------------------------------------------------------------
-# queries
-# ---------------------------------------------------------------------------
-
-def _q_flagship_tile_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: events → synthetic points → broadcast PIP country join →
-    z6 slippy tiles → density rollup (SURVEY §2.11 + J6 + tile math)."""
-    from insights_spark.geo import pip, tiles
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    located = pip.assign_country(pts, _boundary_rows())
-    tiled = tiles.with_tile(located, z=6)
-    return (
-        tiled.groupBy("country", "z", "x", "y")
-        .agg(F.count(F.lit(1)).alias("density"))
-    )
-
-
-def _q_conditional_battery(spark, sf_dir):
-    """A1/P5/P7 — conditional-sum battery, GROUP BY order key."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_orderkey").agg(
-        F.sum((F.col("l_quantity") > 25).cast("int")).alias("qty_gt25"),
-        F.sum((F.col("l_discount") > 0.05).cast("int")).alias("disc_gt5"),
-        F.sum(((F.col("l_tax") > 0.04) & (F.col("l_returnflag") == "R")).cast("int")
-              ).alias("taxed_returns"),
-        F.sum(F.col("l_returnflag").isin("A", "N").cast("int")).alias("flag_an"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def _q_semi_join(spark, sf_dir):
-    """J1 — IN-subquery semi-join lineitem ⋉ filtered orders."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 1000)
-    )
-    return (
-        li.join(F.broadcast(o.select(F.col("o_orderkey").alias("l_orderkey"))),
-                "l_orderkey", "left_semi")
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("l_linenumber").alias("sum_line"))
-    )
-
-
-def _q_anti_join(spark, sf_dir):
-    """J3 — left-outer + IS NULL ⇒ anti-join (missed-changeset repair shape)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 49)
-    return (
-        o.join(li.select(F.col("l_orderkey").alias("o_orderkey")), "o_orderkey", "left_anti")
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _q_latest_event(spark, sf_dir):
-    """J5 — latest-version window dedup (latest event per user)."""
-    from insights_spark.ops.latest import latest_version
-
-    ev = _t(spark, sf_dir, "events")
-    return latest_version(
-        ev, keys=("user_id",), version_col="ts", cutoff_col="ts", cutoff=None
-    ).select("user_id", "event_id", "event_type", "value")
-
-
-def _q_latest_event_asof(spark, sf_dir):
-    """J5 as-of — latest event per user strictly before a cutoff."""
-    from insights_spark.ops.latest import latest_version
-
-    ev = _t(spark, sf_dir, "events")
-    # NTZ literal: a naive-datetime lit would be TIMESTAMP_LTZ and shift
-    # under a non-UTC driver session timezone
-    cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-    return latest_version(
-        ev, keys=("user_id",), version_col="ts", cutoff_col="ts", cutoff=cutoff
-    ).select("user_id", "event_id", "event_type")
-
-
-def _q_scalar_pick(spark, sf_dir):
-    """J4 — deterministic scalar-subquery replacement (max-key value pick)."""
-    from insights_spark.ops.latest import scalar_pick
-
-    c = _t(spark, sf_dir, "customer")
-    return scalar_pick(c, ("c_nationkey",), "c_name", "c_custkey")
-
-
-def _q_tokenize(spark, sf_dir):
-    """P9/F17/A9 — regexp split → trim → prefix filter → distinct counts."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"))
-        .select(F.trim(F.col("tok")).alias("token"))
-        .filter(F.col("token").startswith("s"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _q_pattern_filter(spark, sf_dir):
-    """P3/P4 — multi-pattern LIKE disjunction with word-boundary anchors."""
-    d = _t(spark, sf_dir, "documents")
-    t = F.lower(F.col("text"))
-    m = (
-        t.like("% merge %") | t.like("merge %") | t.like("% merge") | (t == "merge")
-    )
-    return d.filter(m).groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-
-
-def _q_json_props(spark, sf_dir):
-    """P1/P2 — key-exists + typed value access on a map-ish column (the
-    events.props JSON stands in for hstore tags)."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    return (
-        ev.withColumn("k", k)
-        .filter(F.col("k").isNotNull() & (F.col("k") >= 50))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("sum_k"))
-    )
-
-
-def _q_month_rollup(spark, sf_dir):
-    """F7/A3/A5 — calendar month buckets + exact aggregates."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        # cast back to NTZ: date_trunc yields LTZ, which would shift values
-        # under a non-UTC driver session timezone
-        ev.withColumn("month", F.date_trunc("month", F.col("ts")).cast("timestamp_ntz"))
-        .withColumn("quarter", F.date_trunc("quarter", F.col("ts")).cast("timestamp_ntz"))
-        .groupBy("month", "quarter", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("user_id").alias("users"),
-            F.max("value").alias("max_value"),
-            F.min("value").alias("min_value"),
-        )
-    )
-
-
-def _q_friday_weeks(spark, sf_dir):
-    """F6 — Friday-noon week anchoring (NOT date_trunc('week'))."""
-    from insights_spark.ops.hashtags import week_start
-
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.withColumn("week_start", week_start(F.col("ts")))
-        .groupBy("week_start")
-        .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("user_id").alias("users"))
-    )
-
-
-def _q_editors_concat(spark, sf_dir):
-    """U2 — sorted distinct concat with trailing separator."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.concat(
-            F.concat_ws(",", F.array_sort(F.collect_set("event_type"))), F.lit(",")
-        ).alias("editors")
-    )
-
-
-def _q_knn(spark, sf_dir):
-    """kNN exact — broadcast + window top-k over customer points."""
-    from insights_spark.geo.knn import knn_exact
-
-    pts = _points(_t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey")
-    return knn_exact(pts, k=3, id_col="c_custkey")
-
-
-def _q_pip_countries(spark, sf_dir):
-    """J6 — broadcast R-tree point-in-polygon with deterministic tie-break."""
-    from insights_spark.geo import pip
-
-    pts = _points(_t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey")
-    return pip.assign_country(pts, _boundary_rows()).select(
-        "c_custkey", "country"
-    )
-
-
-def _q_pip_via_cells(spark, sf_dir):
-    """J6 again as a CELL EQUI-JOIN: polyfilled padded covers broadcast,
-    interior cells skip the exact test, boundary cells run the closed-box
-    predicate — same answer as the R-tree path, same oracle SQL."""
-    from insights_spark.geo import pip
-
-    pts = _points(_t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey")
-    return pip.assign_country_cells(pts, list(_COUNTRIES), "c_custkey").select(
-        "c_custkey", "country"
-    )
-
-
-def _q_tile_pyramid(spark, sf_dir):
-    """Tile rollup pyramid — z6 base aggregated to z4 (log-depth rollup)."""
-    from insights_spark.geo import tiles
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return tiles.tile_pyramid(pts, [6, 4])
-
-
-_RASTER_MEMO: dict = {}
-
-
-def _z5_raster_thr(spark, sf_dir):
-    """Shared persisted z5 density raster + avg-density threshold for the
-    three raster queries (vectorize / regions / regions_star): ONE rollup
-    per (session, sf_dir) instead of three (r3 verdict #7). The `.first()`
-    is a bounded 1-row aggregate over the ≤4^z-row persisted raster."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _RASTER_MEMO.get(key)
-    if hit is None:
-        from insights_spark.geo import tiles
-
-        pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-        raster = tiles.density_rollup(pts, 5).persist()
-        thr = raster.agg(F.avg("density")).first()[0]
-        _RASTER_MEMO[key] = hit = (raster, thr)
-    return hit
-
-
-def _q_tile_vectorize(spark, sf_dir):
-    """Raster→vector half of the north rule's raster↔vector pair: z5
-    density raster over events → above-average tiles as lon/lat quad
-    bounds (inverse web-mercator; sinh in exp-form and 9-dp rounding on
-    BOTH engines so the float comparison is libm-ulp-proof). The
-    above-AVERAGE threshold keeps the hot-tile structure stable across
-    scale factors."""
-    from insights_spark.geo import vectorize
-
-    raster, thr = _z5_raster_thr(spark, sf_dir)
-    return vectorize.vectorize_tiles(raster, min_density=thr)
-
-
-def _q_tile_regions(spark, sf_dir):
-    """Merged hot-tile regions: 4-adjacency connected components over the
-    z5 above-average raster via distributed min-label propagation
-    (Pregel-style; sweeps = region diameter, each ONE shuffle on the
-    bounded ≤4^z tile table). Oracle: DuckDB recursive-CTE transitive
-    closure over the same adjacency — region_id is the min tile id of the
-    component on both engines."""
-    from insights_spark.geo import vectorize
-
-    raster, thr = _z5_raster_thr(spark, sf_dir)
-    return vectorize.tile_regions(raster, min_density=thr)
-
-
-def _q_tile_regions_star(spark, sf_dir):
-    """Same regions via alternating large-star/small-star contraction
-    (Kiveris et al. — O(log² n) rounds on ANY topology, the adversarial-
-    snake-safe path). Shares tile_regions' recursive-CTE oracle: both
-    algorithms must label identically."""
-    from insights_spark.geo import vectorize
-
-    raster, thr = _z5_raster_thr(spark, sf_dir)
-    return vectorize.tile_regions(raster, min_density=thr, algorithm="star")
-
-
-def _q_grid_cells(spark, sf_dir):
-    """Grid-cell binning (pure-column spatial index primitive)."""
-    from insights_spark.geo.cells import grid_cell_col
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return (
-        pts.withColumn("cell", grid_cell_col(F.col("lon"), F.col("lat"), 4))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _q_envelope(spark, sf_dir):
-    """J9 — ST_CoveredBy as pure bbox column math."""
-    pts = _points(_t(spark, sf_dir, "events").select("event_id", "event_type"),
-                  "event_id")
-    inside = (
-        (F.col("lon") >= -10.0) & (F.col("lon") <= 50.0)
-        & (F.col("lat") >= -5.0) & (F.col("lat") <= 45.0)
-    )
-    return pts.filter(inside).groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-
-
-def _q_exact_dedup(spark, sf_dir):
-    """Dedup: exact — hash-groupBy on normalized text, min-id representative."""
-    from insights_spark.text.dedup import exact_dedup
-
-    return exact_dedup(_t(spark, sf_dir, "documents"))
-
-
-def _q_token_stats(spark, sf_dir):
-    """Token counting: whitespace tokens + BPE-ish regex count."""
-    from insights_spark.text.quality import bpe_ish_count, token_count
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        token_count(F.col("text")).alias("n_tokens"),
-        bpe_ish_count(F.col("text")).alias("n_bpe"),
-    )
-
-
-def _q_quality(spark, sf_dir):
-    """Quality scoring: stopword/uniq-token/punct ratios (exact ratios)."""
-    from insights_spark.text.quality import quality_scores
-
-    d = _t(spark, sf_dir, "documents")
-    return quality_scores(d).select(
-        "doc_id", "n_tokens", "stopword_ratio", "uniq_token_ratio", "avg_token_len"
-    )
-
-
-def _q_lang_id(spark, sf_dir):
-    """Language id: stopword-density argmax with deterministic ties."""
-    from insights_spark.text.quality import lang_id
-
-    d = _t(spark, sf_dir, "documents")
-    return lang_id(d).select("doc_id", "lang_pred")
-
-
-def _q_cdc_chunks(spark, sf_dir):
-    """Content-defined chunking (text/dedup.py cdc_chunks): rolling-hash
-    anchors cut chunks where poly_hash of the trailing 8 chars ≡ 0 mod
-    64 — boundaries track CONTENT, so edits only perturb chunks up to
-    the next anchor (the robustness fixed-stride passage_dedup lacks).
-    Map-only, no shuffle; the oracle replays the same per-window
-    polynomial predicate + lag spans in SQL."""
-    from insights_spark.text.dedup import cdc_chunks
-
-    return cdc_chunks(_t(spark, sf_dir, "documents"))
-
-
-def _q_cdc_containment(spark, sf_dir):
-    """CDC-chunk containment (text/dedup.py cdc_containment): pairs from
-    the chunk-hash equi-join only (df-capped at 64 — boilerplate chunks
-    leave candidate generation like hot grams in the minhash cap), shared
-    DISTINCT chunk bytes vs min(doc length), exact integer gate at 20%."""
-    from insights_spark.text.dedup import cdc_containment
-
-    return cdc_containment(_t(spark, sf_dir, "documents"))
-
-
-def _q_fingerprint(spark, sf_dir):
-    """Document fingerprint: portable polynomial rolling hash."""
-    from insights_spark.text.quality import doc_fingerprint
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", doc_fingerprint(F.col("text")).alias("fp"))
-
-
-def _q_minhash(spark, sf_dir):
-    """MinHash signatures (token-level, 4 portable hash functions)."""
-    from insights_spark.text.dedup import minhash_signature_np
-
-    d = _t(spark, sf_dir, "documents")
-    sig = minhash_signature_np(num_hashes=4, n=1)(F.col("text"))
-    return d.select(
-        "doc_id",
-        sig[0].alias("mh0"), sig[1].alias("mh1"),
-        sig[2].alias("mh2"), sig[3].alias("mh3"),
-    )
-
-
-def _q_ngram_jaccard(spark, sf_dir):
-    """Near-dup: word-3-gram Jaccard pairs ≥ 0.5 with the df-cap guard
-    (grams in > 50 docs excluded from both intersection and sizes — the
-    hot-gram quadratic-blowup protection; the oracle applies the identical
-    cap)."""
-    from insights_spark.text.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5, max_gram_df=50
-    )
-
-
-def _q_kcore(spark, sf_dir):
-    """k-core peel (text/links.py:kcore_peel): 6 synchronous rounds of
-    degree-<3 removal over the symmetrized 3-out doc graph — the
-    cohesion measure degree and triangles both miss; R-round recurrence
-    bit-equal to the unrolled SQL."""
-    from insights_spark.text.links import kcore_peel
-
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return kcore_peel(edges, k=5, rounds=6).select(
-        F.col("id").alias("doc_id"), "core_deg"
-    )
-
-
-def _q_hybrid_search(spark, sf_dir):
-    """Hybrid search via reciprocal-rank fusion (text/rank.py:rrf_fuse,
-    Cormack et al. SIGIR'09): BM25 lexical ranking ⊕ embedding-cosine
-    semantic ranking (query = vec_id 0, sequential-fold dot), fused on
-    RANKS with integer floor(scale/(k+rank)) — score-scale-free; both
-    global ranks ride the two-phase prefix scan."""
-    from insights_spark.text.rank import (
-        bm25_scores,
-        query_terms_by_df,
-        rrf_fuse,
-    )
-    from insights_spark.text.simsearch import dot, norm
-
-    docs = _t(spark, sf_dir, "documents")
-    bm = bm25_scores(docs, query_terms_by_df(docs, n_terms=8, max_df=50))
-    emb = _t(spark, sf_dir, "embeddings")
-    qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-    cos = emb.crossJoin(F.broadcast(qv)).select(
-        F.col("vec_id").alias("doc_id"),
-        (dot(F.col("embedding"), F.col("qv"))
-         / (norm(F.col("embedding")) * norm(F.col("qv"))))
-        .alias("score"),
-    )
-    return rrf_fuse(bm.select("doc_id", "score"), cos)
-
-
-def _q_regional_revenue(spark, sf_dir):
-    """TPC-H Q5-shape star query (local-supplier volume): region →
-    nation → customer ⋈ supplier (same nation) → orders (1-year window)
-    → lineitem, revenue per nation. The Catalyst join-planning
-    showcase: three broadcast-able dims, the fact join last, ONE
-    nation-keyed rollup. Revenue is the EXACT integer
-    Σ price_cents·(100 − disc_pct) in 10⁻⁴-dollar units — both engines
-    round the identical doubles to the identical integers, so the sum
-    is order-free and bit-equal (float Σ p·(1−d) would reorder under
-    shuffle)."""
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    rev = (
-        F.round(F.col("l_extendedprice") * 100).cast("long")
-        * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-    )
-    j = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(s, (li["l_suppkey"] == s["s_suppkey"])
-              & (c["c_nationkey"] == s["s_nationkey"]))
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-    )
-    return j.groupBy("n_name").agg(
-        F.sum(rev).cast("long").alias("revenue_e4"),
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-    )
-
-
-def _q_normalize_text(spark, sf_dir):
-    """NFC + control + whitespace normalization (text/clean.py:
-    normalize_text_nfc) with PLANTED decomposed-unicode / control-char
-    suffixes on doc_id ≡ 0,1 (mod 5) so every branch is non-vacuous;
-    both engines implement the same public Unicode NFC algorithm and
-    the EXPLICIT ASCII whitespace class (Python \\s vs RE2 \\s diverge
-    on NBSP — pinned deliberately)."""
-    from insights_spark.text.clean import normalize_text_nfc
-
-    aug = F.concat(
-        F.coalesce(F.col("text"), F.lit("")),
-        F.when(F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-               F.lit(" cafe\u0301 du   monde "))
-        .when(F.pmod(F.col("doc_id"), F.lit(5)) == 1,
-              F.concat(F.lit("\ttab"), F.expr("chr(1)")))
-        .otherwise(F.lit("")),
-    )
-    d = _t(spark, sf_dir, "documents").select("doc_id", aug.alias("text"))
-    return normalize_text_nfc(d)
-
-
-def _q_theil_sen(spark, sf_dir):
-    """Theil–Sen robust slope (ops/timeseries.py:theil_sen_slope) per
-    res-0 hex cell over the SAME planted-trend daily series as
-    mann_kendall — MK detects the trend, Sen estimates its magnitude;
-    lower-median pairwise fraction under the engine-exact
-    (double, num, den) order."""
-    from insights_spark.geo import cells
-    from insights_spark.ops.timeseries import theil_sen_slope
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
-    )
-    wk = pts.groupBy(
-        cells.hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
-        .alias("cell"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.min("event_id").alias("_mid"),
-    )
-    wk = wk.select(
-        "cell", "day",
-        (F.col("_cnt") + F.when(
-            F.pmod(F.col("cell"), F.lit(7)) == 0,
-            F.expr("_mid div 1000"),
-        ).otherwise(F.lit(0))).cast("long").alias("n"),
-    )
-    return theil_sen_slope(wk, ["cell"], "day", "n", min_points=6)
-
-
-def _q_mann_kendall(spark, sf_dir):
-    """Mann–Kendall monotonic trend test (ops/timeseries.py:
-    mann_kendall) per res-0 hex cell over daily counts — sign-only S
-    statistic, tie-corrected 18·Var, continuity-corrected integer
-    significance gate; the distribution-free 'is there a trend at all'
-    sibling of cusum's 'when did it shift'."""
-    from insights_spark.geo import cells
-    from insights_spark.ops.timeseries import mann_kendall
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
-    )
-    wk = pts.groupBy(
-        cells.hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
-        .alias("cell"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.min("event_id").alias("_mid"),
-    )
-    # plant a REAL upward trend in cells ≡ 0 (mod 7): event_ids are
-    # chronological, so min(event_id)/1000 grows ~10 over the month —
-    # both is_sig branches are exercised (pii_scrub planted precedent)
-    wk = wk.select(
-        "cell", "day",
-        (F.col("_cnt") + F.when(
-            F.pmod(F.col("cell"), F.lit(7)) == 0,
-            F.expr("_mid div 1000"),
-        ).otherwise(F.lit(0))).cast("long").alias("n"),
-    )
-    return mann_kendall(wk, ["cell"], "day", "n", min_points=6)
-
-
-def _q_sorted_neighborhood(spark, sf_dir):
-    """Sorted-neighborhood blocking (text/fuzzy.py:
-    sorted_neighborhood_pairs) over the fuzzy_join messy-title fixture:
-    global sort rank on the two-phase scan, window-4 band pairing
-    (n·window candidates, never quadratic), exact Levenshtein measure
-    JVM-side on candidates only."""
-    from insights_spark.text.fuzzy import sorted_neighborhood_pairs
-    from insights_spark.text.quality import tokens
-
-    base = F.array_join(F.slice(tokens(F.col("text")), 1, 4), " ")
-    title = F.when(
-        (F.pmod(F.col("doc_id"), F.lit(5)) == 0) & (F.length(base) >= 2),
-        F.concat(
-            F.substring(base, 1, 1), F.lit("x"), F.substring(base, 3, 1 << 20)
-        ),
-    ).otherwise(base)
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", title.alias("title")
-    )
-    return sorted_neighborhood_pairs(d, "title", window=4)
-
-
-def _q_hits(spark, sf_dir):
-    """HITS hubs & authorities (text/links.py:hits_fixed_point): 4
-    rounds of integer sum + L∞ div-normalization over the directed
-    3-out doc graph — the directory-vs-content distinction PageRank's
-    single score cannot make; bit-equal to the unrolled SQL recurrence."""
-    from insights_spark.text.links import hits_fixed_point
-
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return hits_fixed_point(edges, iters=4).select(
-        F.col("id").alias("doc_id"), "hub", "auth"
-    )
-
-
-def _q_od_flows(spark, sf_dir):
-    """Origin–destination flow matrix (geo/track.py:od_flows) between
-    res-0 hex cells over each user's chronological event points — one
-    user-partitioned window lag + ONE (from, to)-keyed rollup with
-    exact distinct movers; dwell (same-cell) pairs excluded."""
-    from insights_spark.geo.track import od_flows
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    pts = _points(ev, "event_id")
-    return od_flows(pts, res=0, id_col="event_id")
-
-
-def _q_communities(spark, sf_dir):
-    """Label-propagation communities (text/links.py:label_propagation):
-    4 synchronous rounds over the symmetrized 3-out doc graph,
-    (count DESC, label ASC) deterministic ties — the modular structure
-    star-CC (one component here) cannot see."""
-    from insights_spark.text.links import label_propagation
-
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return label_propagation(edges, iters=4).select(
-        F.col("id").alias("doc_id"), "label"
-    )
-
-
-def _q_cusum(spark, sf_dir):
-    """Per-cell CUSUM changepoint (ops/timeseries.py:cusum_changepoint)
-    over daily res-0 hex counts: S'_t = T·prefix − t·total exact
-    BIGINT, argmax |S'| by one min(struct) — integrates shift evidence
-    across the whole series where single-bucket z-tests stay silent."""
-    from insights_spark.geo import cells
-    from insights_spark.ops.timeseries import cusum_changepoint
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
-    )
-    wk = pts.groupBy(
-        cells.hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
-        .alias("cell"),
-        F.date_trunc("day", F.col("ts")).alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return cusum_changepoint(wk, ["cell"], "day", "n", min_points=6)
-
-
-def _q_concurrency(spark, sf_dir):
-    """Peak-concurrency sweep (ops/intervals.py:concurrency_sweep) over
-    the 6 h-gap session intervals: boundary rollup (one decomposable
-    shuffle, bounded by distinct instants) + BOTH running sums on the
-    shared two-phase prefix scan — closed-interval concurrent and
-    half-open concurrent_after, all integer."""
-    from insights_spark.ops.intervals import concurrency_sweep
-    from insights_spark.ops.sessions import sessionize
-
-    sess = sessionize(_t(spark, sf_dir, "events"), gap_minutes=360.0)
-    return concurrency_sweep(sess)
-
-
-def _q_kmeans(spark, sf_dir):
-    """Integer-exact Lloyd k-means (text/simsearch.py:kmeans_lloyd_int):
-    k=8, 3 iterations over the 64-d embeddings — broadcast-centroid
-    literals, JVM-codegen'd zip_with distance, decomposable (cluster,
-    dim)-keyed update; bit-identical to the unrolled SQL recurrence."""
-    from insights_spark.text.simsearch import kmeans_lloyd_int
-
-    return kmeans_lloyd_int(
-        _t(spark, sf_dir, "embeddings"), k=8, iters=3, scale=1024
-    )
-
-
-def _q_prefix_jaccard(spark, sf_dir):
-    """Exact Jaccard similarity join via prefix filtering
-    (text/dedup.py:prefix_jaccard_pairs): candidates only from each
-    doc's rarest grams under the global (df, gram) order, integer
-    threshold gate inter·2 ≥ uni·1. The oracle is the INDEPENDENT
-    brute-force all-pairs join — its agreement empirically proves the
-    prefix lemma's completeness on real data."""
-    from insights_spark.text.dedup import prefix_jaccard_pairs
-
-    return prefix_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), t_num=1, t_den=2, n=3
-    )
-
-
-def _q_bm25(spark, sf_dir):
-    """BM25 ranked retrieval (text/rank.py) with the rational (log-free)
-    Robertson idf and a sorted-fold score sum, so the oracle reproduces
-    every double bit-for-bit. The query is the deterministic df-band pick
-    (8 heaviest terms with df ≤ 50) — self-contained, no literals the
-    oracle can't derive."""
-    from insights_spark.text.rank import bm25_scores, query_terms_by_df
-
-    docs = _t(spark, sf_dir, "documents")
-    return bm25_scores(docs, query_terms_by_df(docs, n_terms=8, max_df=50))
-
-
-def _q_containment(spark, sf_dir):
-    """Directed word-3-gram containment pairs ≥ 0.6 (quote-inclusion
-    near-dup — text/dedup.py:containment_pairs): the pattern Jaccard
-    structurally misses (short doc pasted inside a long one). Same gram
-    machinery and df-cap as ngram_jaccard; denominator is |grams(a)|
-    alone and BOTH directions are kept."""
-    from insights_spark.text.dedup import containment_pairs
-
-    return containment_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.6, max_gram_df=50
-    )
-
-
-def _q_url_dedup(spark, sf_dir):
-    """URL canonicalization + canonical-key latest-wins dedup
-    (text/urls.py). The corpus tables carry no url column, so the query
-    PLANTS deterministic messy spellings (same precedent as pii_scrub's
-    planted PII — the fixture must be non-vacuous): three docs share each
-    logical page, decorated per variant with an uppercase host + default
-    port + trailing slash + fragment, or tracking params in shuffled
-    order. All three spellings canonicalize to one key; warc_ts is a
-    deterministic fetch time (doc_id-minute offsets)."""
-    from insights_spark.text.urls import url_dedup
-
-    page = F.expr("doc_id DIV 3").cast("string")
-    variant = F.pmod(F.col("doc_id"), F.lit(3))
-    url = (
-        F.when(
-            variant == 0,
-            F.concat(
-                F.lit("https://www.example.com/articles/"), page,
-                F.lit("?id="), page,
-            ),
-        )
-        .when(
-            variant == 1,
-            F.concat(
-                F.lit("HTTPS://www.Example.COM:443/articles/"), page,
-                F.lit("/?utm_source=feed&id="), page, F.lit("#frag"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://www.example.com/articles/"), page,
-                F.lit("?utm_campaign=x&id="), page,
-            )
-        )
-    )
-    pages = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id"),
-        url.alias("url"),
-        F.timestamp_seconds(
-            F.lit(1609459200) + F.col("doc_id") * F.lit(60)
-        ).alias("warc_ts"),
-    )
-    return url_dedup(pages)
-
-
-def _q_passage_dedup(spark, sf_dir):
-    """Sub-document exact dedup (text/dedup.py:passage_dedup): 10-token
-    chunks, keep-first by global (doc_id, position) order, per-doc
-    kept/removed token accounting — the repeated-passage rule whole-doc
-    dedup misses."""
-    from insights_spark.text.dedup import passage_dedup
-
-    return passage_dedup(_t(spark, sf_dir, "documents"), chunk_tokens=10)
-
-
-def _q_heavy_hitters(spark, sf_dir):
-    """Frequent terms via Misra–Gries candidates + exact recount
-    (text/freq.py) — the third mergeable sketch in the family (HLL,
-    KLL-style, MG), in the same sketch-bounds-work / exact-answers shape:
-    output is provably the exact heavy-hitter set. k = 32 sits on a real
-    selection boundary for this corpus (29 of 31 terms qualify at
-    sf0.01; 'the' and the planted 'dup' marker do not)."""
-    from insights_spark.text.freq import heavy_hitters
-
-    return heavy_hitters(_t(spark, sf_dir, "documents"), k=32)
-
-
-def _q_novelty(spark, sf_dir):
-    """Per-doc trigram novelty (text/freq.py): fraction of the doc's
-    distinct 3-grams with corpus df = 1 — near 0 for boilerplate/template
-    spam, near 1 for unique prose; one gram pass + one gram-keyed
-    shuffle, division is one IEEE op on exact integers."""
-    from insights_spark.text.freq import novelty_scores
-
-    return novelty_scores(_t(spark, sf_dir, "documents"), n=3)
-
-
-def _q_doc_geotag(spark, sf_dir):
-    """Gazetteer geotagging (text/geotag.py) — the cross-domain join that
-    ties the corpus to the spatial stack: place-name tokens matched
-    against the synth country gazetteer (broadcast), MIN-country tie
-    rule. Mentions are PLANTED per doc_id class (pii_scrub precedent):
-    ¼ kenya, ¼ fiji, ¼ 'somalia fiji' (exercises the tie rule), ¼ none."""
-    from insights_spark import synth
-    from insights_spark.text.geotag import geotag_documents
-
-    mention = (
-        F.when(F.pmod(F.col("doc_id"), F.lit(4)) == 0, F.lit(" kenya"))
-        .when(F.pmod(F.col("doc_id"), F.lit(4)) == 1, F.lit(" fiji"))
-        .when(F.pmod(F.col("doc_id"), F.lit(4)) == 2, F.lit(" somalia fiji"))
-        .otherwise(F.lit(""))
-    )
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(F.coalesce(F.col("text"), F.lit("")), mention).alias("text"),
-    )
-    gaz = spark.createDataFrame(
-        [(b["name_en"].lower(), b["name_en"]) for b in synth.gen_boundaries()],
-        "tok string, country string",
-    )
-    return geotag_documents(docs, gaz)
-
-
-def _q_top_terms_per_source(spark, sf_dir):
-    """Per-source top-5 terms (text/freq.py:top_terms_per_source): the
-    per-GROUP top-k shape, vs term_freq's global TakeOrderedAndProject —
-    one map-side-combined rollup + one source-partitioned window."""
-    from insights_spark.text.freq import top_terms_per_source
-
-    return top_terms_per_source(_t(spark, sf_dir, "documents"), k=5)
-
-
-def _q_kn_continuation(spark, sf_dir):
-    """Kneser-Ney continuation counts per token (text/freq.py): freq +
-    distinct predecessors N1+(•w) + distinct successors N1+(w•), from
-    SEQUENTIAL bigrams with multiplicity (LM counts, not the dedup
-    family's distinct grams). Continuation counts are count(*) scans of
-    the distinct-pair rollup — no countDistinct shuffle anywhere."""
-    from insights_spark.text.freq import kn_continuation
-
-    return kn_continuation(_t(spark, sf_dir, "documents"))
-
-
-def _q_winsorized_stats(spark, sf_dir):
-    """Winsorized robust stats per event_type (ops/stats.py): rank-exact
-    type-1 percentiles (k = max(1, ceil(q·n)) — well-defined under ties),
-    integer-cents clamp + exact BIGINT sum; the winsorized mean division
-    stays with the consumer."""
-    from insights_spark.ops.stats import winsorized_stats
-
-    return winsorized_stats(
-        _t(spark, sf_dir, "events"), "event_type", "value"
-    )
-
-
-def _q_freq_of_freqs(spark, sf_dir):
-    """Good-Turing N_r table (text/freq.py): distinct token types per
-    occurrence count — the smoothing companion to kn_continuation; two
-    decomposable shuffles, output bounded by distinct frequency values."""
-    from insights_spark.text.freq import freq_of_freqs
-
-    return freq_of_freqs(_t(spark, sf_dir, "documents"))
-
-
-def _q_token_lorenz(spark, sf_dir):
-    """Corpus concentration deciles (text/freq.py:token_share_curve):
-    both global prefix sums (token cum + rank) ride ONE
-    global_cumsum_multi scan — never an unpartitioned window."""
-    from insights_spark.text.freq import token_share_curve
-
-    return token_share_curve(_t(spark, sf_dir, "documents"), buckets=10)
-
-
-def _q_ann_topk(spark, sf_dir):
-    """Similarity search: exact cosine top-5 (sequential-fold dot product)."""
-    from insights_spark.text.simsearch import cosine_topk
-
-    return cosine_topk(_t(spark, sf_dir, "embeddings"), k=5)
-
-
-def _q_cos_near_dups(spark, sf_dir):
-    """Embedding-cosine near-dup pairs ≥ 0.4 (exact, sequential-fold dot
-    product = DuckDB list_dot_product parity). The LSH-bucketed candidate
-    path (embedding_lsh_candidates) is the scale route, recall-tested in
-    pytest against this exact baseline."""
-    from insights_spark.text.simsearch import embedding_near_dups
-
-    return embedding_near_dups(_t(spark, sf_dir, "embeddings"), threshold=0.4)
-
-
-def _q_cos_near_dups_lsh(spark, sf_dir):
-    """Embedding near-dups via the 100 TB SCALE route — RH-LSH candidates →
-    exact-cosine verify — with built-in recall + sub-quadratic gates (the
-    ann_ivf shape). A fixed ~256-vector hash-threshold sample's true pairs
-    (exact cosine ≥ 0.4 against ALL vectors — O(256·n), SQL-reproducible)
-    anchor recall; geometry 6 bands × 6 bits calibrated on the synthetic
-    RANDOM embeddings (the LSH worst case — no cluster structure): measured
-    recall 0.30-0.37, candidate fraction 0.125-0.131. Gates: recall ≥ 0.25
-    AND candidates ≤ 0.18·allpairs — a similarity-blind bucketing cannot
-    pass both (random collisions give recall ≈ candidate fraction ≤ 0.18 <
-    0.25). Pair-level exactness of the verify step is oracle-checked by
-    cos_near_dups; this query makes the SCALE path driver-visible."""
-    from insights_spark.text.simsearch import (
-        dot, embedding_lsh_candidates, embedding_near_dups_lsh, norm)
-
-    emb = _t(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
-    cand = embedding_lsh_candidates(emb, n_bits=36, bands=6).persist()
-    pairs = embedding_near_dups_lsh(
-        emb, threshold=0.4, n_bits=36, bands=6, candidates=cand
-    ).persist()
-
-    m_mod = 1 << 20
-    n_row = emb.agg(F.count(F.lit(1)).alias("_n"))
-    sample = (
-        emb.crossJoin(F.broadcast(n_row))
-        .filter(
-            F.pmod(F.pmod(F.col("vec_id"), F.lit(m_mod)) * 1000003 + 99,
-                   F.lit(m_mod)) * F.col("_n")
-            < F.lit(256 * m_mod)
-        )
-        .drop("_n")
-    )
-    allv = emb.select(
-        F.col("vec_id").alias("_oid"), F.col("embedding").alias("_ov")
-    ).withColumn("_on", norm(F.col("_ov")))
-    sv = (
-        sample.select(F.col("vec_id").alias("_sid"),
-                      F.col("embedding").alias("_sv"))
-        .repartition(par)
-        .withColumn("_sn", norm(F.col("_sv")))
-    )
-    cosx = dot(F.col("_sv"), F.col("_ov")) / (F.col("_sn") * F.col("_on"))
-    truep = (
-        sv.join(F.broadcast(allv), F.col("_sid") != F.col("_oid"))
-        .withColumn("_c", cosx)
-        .filter(F.col("_c") >= 0.4)
-        .select(F.least("_sid", "_oid").alias("a"),
-                F.greatest("_sid", "_oid").alias("b"))
-        .distinct()
-    )
-    hit = truep.join(
-        pairs.select("a", "b").withColumn("_h", F.lit(1)), ["a", "b"], "left"
-    )
-    tstats = hit.agg(
-        F.count(F.lit(1)).cast("long").alias("n_true_pairs"),
-        F.sum(F.coalesce("_h", F.lit(0))).alias("_nh"),
-    )
-    cstats = cand.agg(F.count(F.lit(1)).alias("_nc"))
-    return (
-        n_row.crossJoin(tstats).crossJoin(cstats)
-        .select(
-            F.col("_n").cast("long").alias("n_vectors"),
-            "n_true_pairs",
-            F.when(F.col("n_true_pairs") == 0, F.lit(True))
-            .otherwise(F.col("_nh") / F.col("n_true_pairs") >= 0.25)
-            .alias("recall_ok"),
-            (F.col("_nc")
-             <= 0.18 * F.col("_n") * (F.col("_n") - 1) / 2).alias("sub_quadratic_ok"),
-        )
-    )
-
-
-def _q_lang_quality_median(spark, sf_dir):
-    """Exact per-language percentile rollup (median + p90 token counts) —
-    the quality-cutoff calibration shape. Spark's exact `percentile`
-    (sort-based, linear interpolation) == DuckDB `quantile_cont`; exact,
-    not approx_percentile, so the oracle can hash it."""
-    from insights_spark.text.quality import lang_id, token_count
-
-    d = _t(spark, sf_dir, "documents")
-    t = lang_id(d).select(
-        "lang_pred", token_count(F.col("text")).alias("n_tokens")
-    )
-    return t.groupBy("lang_pred").agg(
-        F.count(F.lit(1)).cast("bigint").alias("docs"),
-        F.expr("percentile(n_tokens, 0.5)").alias("p50_tokens"),
-        F.expr("percentile(n_tokens, 0.9)").alias("p90_tokens"),
-    )
-
-
-def _q_term_freq(spark, sf_dir):
-    """Corpus vocabulary rollup: top-25 tokens by document frequency
-    (distinct docs containing the token), ties by token asc — the
-    vocabulary-building shape: explode → distinct per doc → count →
-    deterministic top-k. Partial aggregation runs map-side; the top-k is a
-    TakeOrderedAndProject over the aggregated term table (per-partition
-    local top-25, driver merge — at web scale the vocabulary is 10⁸ terms
-    and a global window would put them all on one task; round-2 verdict #3),
-    with rank attached by a window over the 25-row take."""
-    from pyspark.sql.window import Window
-
-    from insights_spark.text.quality import tokens
-
-    d = _t(spark, sf_dir, "documents")
-    df_counts = (
-        d.select("doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("docs"))
-    )
-    top = df_counts.orderBy(F.desc("docs"), F.asc("term")).limit(25)
-    w = Window.orderBy(F.desc("docs"), F.asc("term"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "term", "docs"
-    )
-
-
-def _q_clean_corpus(spark, sf_dir):
-    """The composed C4-style cleaning chain as ONE query: quality gates →
-    lang filter → exact dedup → df-capped trigram-Jaccard near-dup drop.
-    Every stage reuses an oracle-checked primitive; the composition gets
-    its own oracle (same CTE chain in SQL)."""
-    from insights_spark.text.clean import clean_corpus
-
-    return clean_corpus(_t(spark, sf_dir, "documents"))
-
-
-def _q_prepare_corpus(spark, sf_dir):
-    """THE end-to-end training-data preparation pipeline as ONE lazy plan:
-    C4-style clean (gates → lang → exact dedup → capped near-dup drop) →
-    per-domain cap (crawl balance) → deterministic train/test split →
-    per-(split, language) corpus accounting. Every stage is an
-    independently-oracle-checked operator; the composition gets its own
-    chained-CTE oracle. This is the query a user runs before tokenizing a
-    crawl snapshot."""
-    from insights_spark.text.clean import (
-        clean_corpus, per_source_cap, train_test_split,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    cleaned = clean_corpus(docs)
-    with_src = cleaned.join(docs.select("doc_id", "source"), "doc_id")
-    capped = per_source_cap(with_src, 15)
-    split = train_test_split(capped, test_permille=100)
-    return split.groupBy("split", "lang_pred").agg(
-        F.count(F.lit(1)).cast("bigint").alias("docs"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-    )
-
-
-def _q_pack_sequences(spark, sf_dir):
-    """Sequence packing for pretraining: docs → fixed-512-token window
-    assignments via a DISTRIBUTED prefix sum (range-partition → local
-    cumsum → bounded partition-totals collect → broadcast offsets) — the
-    global `sum OVER (ORDER BY)` the oracle runs would be a one-task
-    shuffle at corpus scale (the banned top-k shape)."""
-    from insights_spark.text.pack import pack_sequences
-
-    return pack_sequences(_t(spark, sf_dir, "documents"), seq_len=512)
-
-
-def _q_union_distinct(spark, sf_dir):
-    """U1/A9 — distinct union of two differently-tokenized sources (the
-    hashtag-vocabulary shape: two delimiter classes → union → dedup)."""
-    d = _t(spark, sf_dir, "documents")
-    a = d.select(F.explode(F.split(F.lower("text"), r"[\s,;]")).alias("token"))
-    b = d.select(F.explode(F.split(F.lower("text"), r"[\s;,.@]")).alias("token"))
-    return (
-        a.union(b)
-        .select(F.trim("token").alias("token"))
-        .filter(F.col("token").startswith("t"))
-        .distinct()
-    )
-
-
-def _q_topk(spark, sf_dir):
-    """O1-O4 — deterministic top-k: rank by (totalprice desc, key asc).
-
-    Shape matters at scale: `orderBy(...).limit(k)` compiles to
-    TakeOrderedAndProject — each partition keeps its local top-k, the
-    driver merges k×partitions rows. The rank window then runs over the
-    already-taken k-row result (k rows on one task, bounded by construction).
-    The old shape — row_number over a global unpartitioned window — shuffled
-    EVERY row to one partition (round-2 verdict #3)."""
-    from pyspark.sql.window import Window
-
-    o = _t(spark, sf_dir, "orders")
-    top = (
-        o.select("o_orderkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-    w = Window.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "o_orderkey", "o_totalprice"
-    )
-
-
-def _q_covered_time(spark, sf_dir):
-    """Interval-union active time per user (ops/sessions.py covered_time):
-    each event opens a 600 s window, overlaps count once — the closed
-    form Σ min(gap, window) over the (ts, id)-sorted stream, one lead()
-    window + one rollup, exact integer seconds."""
-    from insights_spark.ops.sessions import covered_time
-
-    return covered_time(_t(spark, sf_dir, "events"))
-
-
-def _q_sessionize(spark, sf_dir):
-    """Gaps-and-islands sessionization over the event stream (6 h timeout):
-    lag → new-session flag → running sum → per-session rollup, all windows
-    PARTITIONED BY user (no global shuffle; skew bounded by the busiest
-    user). Ties on ts are ordered by event_id so Spark and the SQL oracle
-    see identical lag sequences."""
-    from insights_spark.ops.sessions import sessionize
-
-    return sessionize(_t(spark, sf_dir, "events"), gap_minutes=360.0)
-
-
-def _q_asof_join(spark, sf_dir):
-    """Generic two-table AS-OF join (ops.latest.asof_join): every event
-    matched to the user's latest profile snapshot at-or-before its
-    timestamp. One union + one window pass per key — never a correlated
-    per-row scan. Oracle: DuckDB's NATIVE `ASOF LEFT JOIN` — two
-    independent implementations of the operator must agree exactly."""
-    from insights_spark.ops.latest import asof_join, scalar_pick
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    snaps = scalar_pick(
-        ev.filter(F.pmod(F.col("event_id"), F.lit(10)) == 0)
-        .select("user_id", "ts", F.col("event_id").alias("snap_id")),
-        ("user_id", "ts"), "snap_id", "snap_id",
-    )
-    return asof_join(
-        ev, snaps, on="user_id", left_ts="ts", right_ts="ts",
-        right_cols=["snap_id"],
-    )
-
-
-def _q_interval_join(spark, sf_dir):
-    """Temporal interval-overlap join (the time-domain within_distance):
-    even-id event intervals × odd-id event intervals, chunk-bucketed
-    equi-join + exact overlap verify — never the all-pairs theta-join.
-    Interval length = (event_id mod 7 + 1) minutes; chunk auto-picked at
-    the median interval span (one cheap mergeable agg — r3 verdict #6),
-    explicit override retained in the API. Oracle: the plain brute-force
-    range join (bucketing AND chunk choice must be result-invisible)."""
-    from insights_spark.ops.intervals import interval_join
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.make_dt_interval(
-            mins=F.pmod(F.col("event_id"), F.lit(7)) + 1
-        )).alias("end_ts"),
-    )
-    left = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0)
-    right = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 1)
-    return interval_join(
-        left, right,
-        left_cols=("event_id", "start_ts", "end_ts"),
-        right_cols=("event_id", "start_ts", "end_ts"),
-    ).select("a", "b")
-
-
-def _q_rolling_activity(spark, sf_dir):
-    """RANGE-frame sliding window: per event, the same user's event count
-    in the trailing 6 h (value-based frame → tie-order-independent, no
-    tiebreaker needed). One user-keyed shuffle."""
-    from insights_spark.ops.sessions import rolling_user_activity
-
-    return rolling_user_activity(
-        _t(spark, sf_dir, "events"), window_seconds=6 * 3600.0
-    )
-
-
-def _q_semi_join_salted(spark, sf_dir):
-    """J1 through the EXPLICIT skew path (runtime.skew.salted_join_skewed):
-    fact side salted, dim side replicated per salt, left_semi on
-    (key, salt) — one hot orderkey spreads over 16 tasks. Shares the
-    semi_join oracle byte-for-byte: pure physical rewrite."""
-    from insights_spark.runtime.skew import salted_join_skewed
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter((F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 1000))
-        .select(F.col("o_orderkey").alias("l_orderkey"))
-    )
-    return (
-        salted_join_skewed(
-            li, o, "l_orderkey",
-            salt_source_cols=["l_linenumber", "l_partkey"], how="left_semi",
-        )
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("l_linenumber").alias("sum_line"))
-    )
-
-
-def _q_train_split(spark, sf_dir):
-    """Deterministic content-stable train/test split: multiplicative-hash
-    bucket on doc_id (never row position / RNG), so assignment survives
-    repartitioning and incremental appends. Map-only stamp, no shuffle."""
-    from insights_spark.text.clean import train_test_split
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    return train_test_split(d, test_permille=100).select("doc_id", "split")
-
-
-def _q_inverted_index(spark, sf_dir):
-    """PHRASE inverted index (word bigrams, df bounds [2, 50]): explode
-    distinct bigrams per doc → ONE term-keyed shuffle → sorted posting
-    list + df from the same aggregation — the benchmark-contamination
-    lookup structure. The max_df cut is the stop-gram skew-bomb defuser (a
-    hot phrase row would otherwise hold the whole corpus); postings are a
-    comma-joined string so both engines hash identically. (Bigrams, not
-    unigrams, because the synthetic corpus has a 31-word vocabulary where
-    every unigram is a stop word — dfs ~doc count.)"""
-    from insights_spark.text.index import inverted_index
-
-    return inverted_index(
-        _t(spark, sf_dir, "documents"), min_df=2, max_df=50, ngram=2
-    )
-
-
-def _q_source_cap(spark, sf_dir):
-    """C4-style per-domain cap: ≤10 docs per source, deterministic
-    hash-ranked membership (content-stable across re-ingestion). One
-    source-partitioned window shuffle."""
-    from insights_spark.text.clean import per_source_cap
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return per_source_cap(d, 10)
-
-
-def _q_source_cap_stream_twin(spark, sf_dir):
-    """Batch twin of the streaming per-source cap (r3 verdict #5): the
-    streaming admission counter, for a corpus presented as one micro-batch,
-    admits exactly the lowest 10 doc ids per source; this query reproduces
-    that membership as one keyed window. Streaming == batch equivalence is
-    pinned in tests/test_streaming.py; this row makes the semantics
-    oracle-anchored and driver-visible."""
-    from insights_spark.text.clean import per_source_cap_arrival
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return per_source_cap_arrival(d, 10)
-
-
-def _q_decontam(spark, sf_dir):
-    """Benchmark decontamination (LLM-pipeline hygiene): flag corpus docs
-    containing any benchmark 13-gram. The benchmark set is synthesized
-    in-query (every 97th doc contributes its tokens 4-16 as one eval item)
-    so the check is self-contained and deterministic; at scale the
-    benchmark side is the broadcast-small side by construction. Output:
-    (doc_id, n_bench_grams) per contaminated doc — each source doc flags
-    itself (it contains its own span), plus any verbatim copies."""
-    from insights_spark.text.decontam import contaminated_docs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
-    bench = (
-        d.filter(F.col("text").isNotNull())
-        .filter(F.pmod(F.col("doc_id"), F.lit(97)) == 0)
-        .filter(F.size(toks) >= 16)
-        .select(F.array_join(F.slice(toks, 4, 13), " ").alias("text"))
-    )
-    return contaminated_docs(d, bench, n=13)
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """Balanced per-language sample (20/stratum): the training-mix
-    balancing draw, hash-rank deterministic."""
-    from insights_spark.text.clean import stratified_sample
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stratified_sample(d, 20)
-
-
-def _q_approx_quantile(spark, sf_dir):
-    """Quantile sketch + exactness certificate per language: exact
-    interpolated median of n_chars (bit-matches DuckDB quantile_cont) and
-    within_bounds = sketch within 5% of it."""
-    from insights_spark.ops.stats import approx_quantile_gate
-
-    return approx_quantile_gate(
-        _t(spark, sf_dir, "documents"), "n_chars", ["lang"], q=0.5
-    )
-
-
-def _q_approx_distinct(spark, sf_dir):
-    """A3 at scale — HLL++ count-distinct with the built-in exactness gate
-    (the ann_ivf pattern for cardinality): emits the exact count plus
-    within_bounds = |sketch − exact|/exact ≤ 5%, so a broken sketch flips
-    the boolean and fails the hash while the approximate value itself
-    never needs cross-engine pinning."""
-    from insights_spark.ops.stats import approx_distinct_gate
-
-    return approx_distinct_gate(
-        _t(spark, sf_dir, "lineitem"), "l_partkey", ["l_returnflag"]
-    )
-
-
-def _q_bbox_area(spark, sf_dir):
-    """F13/F14 — bbox centroid + equal-area km² with lat clamping; the
-    mega-changeset filter count per bucket. Doubles rounded to 4 dp (cos()
-    may differ by 1 ulp between JVM and DuckDB libm)."""
-    from insights_spark.geo import bbox
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey")
-    b = (
-        o.withColumn("min_lon", F.pmod(F.col("o_orderkey") * 7919, F.lit(340000)) / 1000.0 - 170.0)
-        .withColumn("min_lat", F.pmod(F.col("o_orderkey") * 104729, F.lit(160000)) / 1000.0 - 80.0)
-    ).withColumn("max_lon", F.col("min_lon") + 0.5).withColumn(
-        "max_lat", F.col("min_lat") + 0.25
-    )
-    return b.select(
-        "o_orderkey",
-        F.round(
-            bbox.bbox_area_km2(F.col("min_lon"), F.col("min_lat"),
-                               F.col("max_lon"), F.col("max_lat")), 4
-        ).alias("area_km2"),
-        F.round(bbox.centroid_lat(F.col("min_lat"), F.col("max_lat")), 6).alias("c_lat"),
-        (
-            bbox.bbox_area_km2(F.col("min_lon"), F.col("min_lat"),
-                               F.col("max_lon"), F.col("max_lat"))
-            < F.lit(bbox.MEGA_CHANGESET_KM2)
-        ).alias("is_small"),
-    )
-
-
-def _q_explode_map(spark, sf_dir):
-    """P8 — each(tags): explode a map column into (key, value) rows."""
-    d = _t(spark, sf_dir, "documents")
-    m = F.create_map(
-        F.lit("lang"), F.col("lang"), F.lit("source"), F.col("source")
-    )
-    return (
-        d.select(F.explode(m).alias("key", "value"))
-        .groupBy("key", "value")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-# ---- custom geo/sketch kernels ---------------------------------------------
-
-def _q_s2_cells(spark, sf_dir):
-    """S2 level-12 cell rollup. The oracle is a full ANSI-SQL replica of
-    the Hilbert construction (see _s2_cells_sql) — 12 unrolled curve steps
-    over the public lookup tables, bit-exact vs the numpy kernel."""
-    from insights_spark.geo import cells
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return (
-        cells.with_cells(pts)
-        .groupBy("s2_l12")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _q_hex_cells(spark, sf_dir):
-    from insights_spark.geo import cells
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    # use_h3=False: the oracle replicates the AXIAL formula; in an
-    # environment where the optional real-h3 package exists, the library
-    # path would diverge from the SQL by construction
-    return pts.groupBy(
-        cells.hex_udf(6, use_h3=False)(F.col("lon"), F.col("lat")).alias("h3_r6")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def _q_hex_smooth(spark, sf_dir):
-    """Ring-1 focal smoothing + hotspot flag over the hex res-6 rollup
-    (geo/smooth.py). Neighbor ids are pure BIGINT arithmetic on the packed
-    axial id, so the oracle replicates the whole pass — encoding, focal
-    sum, smoothed mean, integer hotspot gate — bit-for-bit."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.smooth import hex_focal_smooth
-
-    # res 1, NOT the res-6 rollup res: the derived points sit ~2.5° apart,
-    # so finer grids make every ring a singleton (a vacuous fixture);
-    # res-1 cells hold ~6 points and rings are genuinely occupied.
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return hex_focal_smooth(counts, cell_col="cell", cnt_col="n")
-
-
-def _q_cell_clusters(spark, sf_dir):
-    """Grid DBSCAN over the hex res-1 rollup (geo/cluster.py): core cells
-    (n ≥ 8) connected through ring-1 axial adjacency via star-contraction
-    CC, border cells attached to the min neighboring cluster, noise
-    dropped. Everything after the one point→cell rollup runs on the
-    bounded occupied-cell table; the oracle replays adjacency + components
-    with a recursive CTE over the same BIGINT neighbor arithmetic."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.cluster import cell_dbscan
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return cell_dbscan(counts, minpts=8)
-
-
-def _q_region_shape(spark, sf_dir):
-    """Per-region area/perimeter/mass over the hex res-2 rollup
-    (geo/cluster.py region_shape): ring-1 connected components of ALL
-    occupied cells, then integer shape metrics — area = member cells,
-    perimeter = Σ(6 − occupied-neighbor degree), total_n = Σ counts. The
-    oracle replays adjacency + components with the same recursive CTE as
-    cell_clusters plus a degree rollup; compactness P²/A stays with the
-    consumer so the engine output is float-free."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.cluster import region_shape
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(2, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return region_shape(counts)
-
-
-def _q_st_join(spark, sf_dir):
-    """Spatiotemporal proximity pairs (geo/stjoin.py): ≤ 3.0° AND
-    ≤ 250000 s apart. Composite (hex cell, ⌊epoch/τ⌋ chunk) shuffle key —
-    bucket population is LOCAL density × τ, the property that survives a
-    1000× history scale-up where pure-spatial buckets grow unboundedly.
-    Oracle is the plain brute-force range join."""
-    from insights_spark.geo.stjoin import st_within
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
-    )
-    return st_within(
-        pts, radius_deg=3.0, tau_seconds=250000, id_col="event_id", rings=2
-    )
-
-
-def _q_directional_hull(spark, sf_dir):
-    """BFP 8-direction extreme points per user (geo/track.py
-    directional_hull): the decomposable convex-hull approximation — K
-    independent integer argmaxes with map-side combine, ties to smallest
-    event id via struct-max on (dot, −id)."""
-    from insights_spark.geo.track import directional_hull
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "user_id"), "event_id"
-    )
-    return directional_hull(pts, id_col="event_id")
-
-
-def _q_simplify_tracks(spark, sf_dir):
-    """Depth-capped Douglas-Peucker per user track (geo/track.py
-    simplify_tracks): eps 20°, 4 argmax levels, integer millidegree
-    geometry — the oracle unrolls the same 4 levels as SQL stages over
-    HUGEINT cross-products (kmeans-unroll discipline)."""
-    from insights_spark.geo.track import simplify_tracks
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "user_id", "ts"),
-        "event_id",
-    )
-    return simplify_tracks(pts, eps_milli=20000, max_depth=4, id_col="event_id")
-
-
-def _q_move_rose(spark, sf_dir):
-    """Octant rose of per-user moves (geo/track.py move_rose): sector =
-    ⌊θ/45°⌋ via pure integer sign / |dx| vs |dy| tests (boundaries are
-    exactly the 45° rays — no atan2, no libm), 9-row decomposable
-    rollup weighted by exact squared milli-degree lengths."""
-    from insights_spark.geo.track import move_rose
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "user_id", "ts"),
-        "event_id",
-    )
-    return move_rose(pts, id_col="event_id")
-
-
-def _q_user_tracks(spark, sf_dir):
-    """Per-user trajectory summaries (geo/track.py): path length, net
-    displacement, longest hop, duration — every double a fixed IEEE
-    expression tree, the one order-sensitive sum folded in sorted order
-    (bm25 pattern), so the oracle reproduces all of it bit-for-bit."""
-    from insights_spark.geo.track import user_tracks
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "user_id", "ts"),
-        "event_id",
-    )
-    return user_tracks(pts, id_col="event_id")
-
-
-def _q_home_cells(spark, sf_dir):
-    """Per-user home cell (geo/track.py:home_cells): most-visited res-1
-    hex cell, ties to the smallest cell id via one max(struct) argmax —
-    two decomposable keyed shuffles, no window, no self-join."""
-    from insights_spark.geo.track import home_cells
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "user_id"), "event_id"
-    )
-    return home_cells(pts, res=1)
-
-
-def _q_mix_sources(spark, sf_dir):
-    """Corpus mixing to target proportions (text/clean.py:mix_sources):
-    weights 4:2:1 over three sources at total=60 → quotas 34/17/8, which
-    exercises BOTH regimes at sf0.01 (src0 holds only 25 docs → shortfall
-    takes all; src1/src2 select hash-ranked subsets)."""
-    from insights_spark.text.clean import mix_sources
-
-    return mix_sources(
-        _t(spark, sf_dir, "documents"),
-        weights={"src0": 4.0, "src1": 2.0, "src2": 1.0},
-        total=60,
-    )
-
-
-def _q_sliding_windows(spark, sf_dir):
-    """Overlapping context windows (text/pack.py:sliding_windows),
-    window=16 stride=8 — map-only, zero shuffle: the chunking pass in
-    front of an embedding/retrieval indexer."""
-    from insights_spark.text.pack import sliding_windows
-
-    return sliding_windows(
-        _t(spark, sf_dir, "documents"), window=16, stride=8
-    )
-
-
-def _q_tile_pyramid_inc(spark, sf_dir):
-    """Incremental pyramid maintenance (geo/tiles.py:tile_pyramid_merge):
-    stored pyramid (event_id ≢ 0 mod 3) ⊕ delta batch (≡ 0) — the oracle
-    is the FULL-recompute pyramid SQL, so the green row IS the merge
-    theorem pyramid(A∪B) == merge(pyramid(A), pyramid(B))."""
-    from insights_spark.geo import tiles
-
-    ev = _t(spark, sf_dir, "events").select("event_id")
-    stored = tiles.tile_pyramid(
-        _points(ev.filter(F.pmod(F.col("event_id"), F.lit(3)) != 0), "event_id"),
-        [6, 4],
-    )
-    delta = _points(
-        ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 0), "event_id"
-    )
-    return tiles.tile_pyramid_merge(stored, delta, [6, 4])
-
-
-def _q_trending_cells(spark, sf_dir):
-    """Time-decayed per-cell activity (geo/smooth.py:decayed_cell_scores),
-    halflife 3 d, now = 2024-02-01: every weight is a power of two and
-    every partial sum an exact dyadic rational, so the float sum is
-    order-free and the oracle bit-exact with NO sorted fold."""
-    from insights_spark.geo.smooth import decayed_cell_scores
-
-    pts = _points(
-        _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
-    )
-    return decayed_cell_scores(
-        pts, res=1, halflife_s=259200, now_epoch_s=1706745600
-    )
-
-
-def _q_fuzzy_join(spark, sf_dir):
-    """Edit-distance-1 title pairs via FastSS deletion neighborhoods
-    (text/fuzzy.py) — provably complete candidates from a variant-keyed
-    equi-join, exact levenshtein verify, never all-pairs. Titles are the
-    4-token prefix with a typo PLANTED on doc_id ≡ 0 mod 5 (pii_scrub
-    precedent) so both distance classes are populated (11 exact + 15
-    one-edit pairs at sf0.01)."""
-    from insights_spark.text.fuzzy import fuzzy_pairs
-    from insights_spark.text.quality import tokens
-
-    base = F.array_join(F.slice(tokens(F.col("text")), 1, 4), " ")
-    title = F.when(
-        (F.pmod(F.col("doc_id"), F.lit(5)) == 0) & (F.length(base) >= 2),
-        F.concat(
-            F.substring(base, 1, 1), F.lit("x"), F.substring(base, 3, 1 << 20)
-        ),
-    ).otherwise(base)
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", title.alias("title")
-    )
-    return fuzzy_pairs(d, id_col="doc_id", str_col="title")
-
-
-def _q_frontier_cells(spark, sf_dir):
-    """Mapping-frontier cells (geo/smooth.py:frontier_cells): occupied
-    res-1 cells with ≥ 1 empty ring-1 neighbor — one 6× explode + one
-    anti-join on the BIGINT neighbor id, all on the bounded cell rollup."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.smooth import frontier_cells
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return frontier_cells(counts)
-
-
-def _q_idw_fill(spark, sf_dir):
-    """IDW gap-fill (geo/smooth.py:idw_fill): inverse-distance-weighted
-    estimate at EMPTY res-1 cells from occupied ring-1 (weight 2) and
-    ring-2 (weight 1) neighbors — one 18× explode + ONE target-keyed
-    shuffle + one left_anti on the same key, all on the bounded cell
-    rollup; est is one IEEE division of two exact BIGINTs."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.smooth import idw_fill
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return idw_fill(counts, min_ring1=3)
-
-
-def _q_semivariogram(spark, sf_dir):
-    """Empirical semivariogram (geo/smooth.py:semivariogram_exact):
-    per-lag γ(h) for h=1..3 over the res-1 cell rollup — positive-packed
-    half-offset fan (9×) + ONE equi-join on the neighbor id + a 3-row
-    rollup; sse exact BIGINT, gamma one IEEE division."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.smooth import semivariogram_exact
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return semivariogram_exact(counts, max_h=3)
-
-
-def _q_quantize(spark, sf_dir):
-    """Per-vector affine int8 quantization (text/quant.py) — the storage
-    half of the embedding stack: map-only, zero shuffle, no UDF; both
-    engines evaluate the identical double-precision expression tree."""
-    from insights_spark.text.quant import quantize_embeddings
-
-    return quantize_embeddings(_t(spark, sf_dir, "embeddings"))
-
-
-def _q_knn_join(spark, sf_dir):
-    """Two-table certified-exact kNN join (geo/knn.py:knn_join): each
-    customer's 3 nearest events — the lookup generalization of the
-    self-join kNN; equal ids across tables are distinct entities, and
-    the auto-res pick tracks CANDIDATE density. Oracle = brute-force
-    window over the full cross product."""
-    from insights_spark.geo.knn import knn_join
-
-    cust = _points(
-        _t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey"
-    )
-    ev = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return knn_join(cust, ev, k=3, q_id="c_custkey", c_id="event_id", rings=2)
-
-
-def _q_zonal_stats(spark, sf_dir):
-    """Zonal statistics (geo/tiles.py:zonal_tile_stats): per-country
-    summary of the z6 tile-density raster — PIP zone assignment composed
-    with the tile rollup, the classic raster × vector product."""
-    from insights_spark.geo import pip
-    from insights_spark.geo.tiles import zonal_tile_stats
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    zoned = pip.assign_country(pts, _boundary_rows())
-    return zonal_tile_stats(zoned, z=6, zone_col="country")
-
-
-def _q_tile_diff(spark, sf_dir):
-    """Per-tile change detection (geo/tiles.py:tile_diff): first half of
-    January vs the rest — one signed-weight union + one keyed rollup,
-    never a full-outer join of two rollups."""
-    from insights_spark.geo.tiles import tile_diff
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "ts")
-    pts = _points(ev, "event_id")
-    cut = "2024-01-15 00:00:00"
-    return tile_diff(
-        pts.filter(F.col("ts") < cut),
-        pts.filter(F.col("ts") >= cut),
-        z=6,
-    )
-
-
-def _q_knn_cell_local(spark, sf_dir):
-    """Cell-local kNN in certified-exact mode: first pass is the hex-cell
-    ring join; queries whose k-th distance can't be certified inside the
-    ring-coverage radius re-run exactly. Output therefore equals knn_exact
-    and shares the `knn` oracle SQL."""
-    from insights_spark.geo.knn import knn_cell_local
-
-    # res=None → density-matched auto pick (auto_cell_res): at sf0.1 it
-    # lands on the hand-tuned res 2 (cert radius 2.5·edge ≈ 3.57°,
-    # 14995/15000 first-pass certifications); at sf1's 10× density it steps
-    # finer, keeping ring-join pairs ∝ n instead of ∝ n·density (the 21×
-    # sf1 tail the r4 scale-step measured). Certified-exact output is
-    # res-invariant, so the oracle is untouched by the pick.
-    pts = _points(_t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey")
-    return knn_cell_local(pts, k=3, id_col="c_custkey", res=None, rings=2)
-
-
-def _q_geohash_cells(spark, sf_dir):
-    """Fourth cell family — geohash (base-32 lon/lat bit interleave, public
-    spec): pure unrolled-shift column math, codegen'd, no UDF; the oracle
-    runs the IDENTICAL integer arithmetic (geo.cells.geohash_sql). Rollup
-    per cell mirrors the hex/S2 query shapes."""
-    from insights_spark.geo.cells import geohash_col
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return (
-        pts.select(geohash_col(F.col("lon"), F.col("lat"), 5).alias("gh"))
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-
-
-def _q_hex_cover(spark, sf_dir):
-    """Polygon→cells polyfill (the inverse of point→cell binning): hex
-    cells at res 2 whose centers lie inside each synthetic country bbox —
-    pure sequence()/explode column math, oracle = DuckDB generate_series
-    over the identical axial-center ranges."""
-    from insights_spark.geo import cells
-
-    boxes = spark.createDataFrame(
-        [(n, x0, y0, x1, y1) for n, _p, x0, y0, x1, y1 in _COUNTRIES],
-        "country string, lon0 double, lat0 double, lon1 double, lat1 double",
-    )
-    return cells.hex_cover_bbox(boxes, 2).select("country", "cell")
-
-
-def _q_within_distance(spark, sf_dir):
-    """Certified-exact spatial range join (kNN's sibling): all event point
-    pairs within 3° planar distance via the cell+ring bucketed join —
-    cert_radius(res,rings) ≥ radius guarantees candidate completeness, so
-    the bucketed join + filter IS exact (oracle: brute-force n² in SQL).
-
-    Fixture is deliberately NON-vacuous: the events lattice has 90 true
-    pairs at sf0.001 and 20,500 at sf0.01 for radius 3.0, so the oracle
-    exercises the completeness guarantee, not just absence of false
-    positives (round-2 verdict: radius 2.0 over customers matched 0==0)."""
-    from insights_spark.geo.knn import within_distance
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    # rings=2 → finest certifying res is 2 (cert 3.57° ≥ 3.0): 2.6× smaller
-    # buckets than the rings=1 default (res=1, edge 3.78°), measured 25%
-    # faster at sf0.1 — replication ×19 is cheaper than ×7 on fat cells
-    return within_distance(pts.withColumnRenamed("event_id", "id"), 3.0, rings=2)
-
-
-def _q_ripley_k(spark, sf_dir):
-    """Ripley's K pair-count curve over the events point lattice at radii
-    1°/2°/3°: one certified cell+ring join at the LARGEST radius feeds all
-    bands via conditional aggregation (oracle: brute-force n² in SQL).
-    Shares within_distance's non-vacuous fixture; the synthetic lattice's
-    minimum pair spacing is ~1.7°, so the curve shows the classic
-    dispersed→clustered shape: (1°: 0, 2°: 1,577, 3°: 20,500 pairs at
-    sf0.01) — the zero band is the real K-statistic answer at that radius,
-    and both non-zero bands exercise the completeness certificate."""
-    from insights_spark.geo.knn import ripley_k
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return ripley_k(
-        pts.withColumnRenamed("event_id", "id"), [1.0, 2.0, 3.0], rings=2
-    )
-
-
-def _q_nn_distance_hist(spark, sf_dir):
-    """Clark-Evans NN-distance histogram (geo/knn.py nn_distance_hist):
-    certified-exact k=1 search, distances recomputed in integer milli
-    arithmetic and banded by decimal digit count (floor(log10)+1 without
-    libm) — the local companion to ripley_k's global pair curve."""
-    from insights_spark.geo.knn import nn_distance_hist
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return nn_distance_hist(
-        pts.withColumnRenamed("event_id", "id"), res=None
-    )
-
-
-def _q_ann_ivf(spark, sf_dir):
-    """IVF ANN with a built-in recall gate: the bucketed approximate top-k
-    runs over all vectors; a deterministic FIXED-COUNT (~256) hash-threshold
-    sample of queries is also answered exactly, and the query emits whether
-    IVF recall on that sample clears a floor. The floor (0.12) is calibrated
-    to the synthetic embeddings, which are RANDOM vectors — the IVF worst
-    case (no cluster structure, recall ≈ probed fraction; measured 0.24-0.44
-    across SFs) — so it catches structural regressions (garbage buckets →
-    recall ≈ k/n) without over-fitting one fixture. Exact-search correctness
-    itself is oracle-checked by `ann_topk`.
-
-    The gate's exact pass costs O(sample × n) with sample bounded at ~256
-    REGARDLESS of n (round-2 verdict fix: the old 1/16-fraction sample made
-    the gate itself O(n²/16) at scale). The sample is picked by the same
-    hash-threshold trick as `sample_centroids`: h(vec_id)·n < target·M —
-    a map-side filter joined to the 1-row count, no sort, no collect.
-    r4: the exact pass runs as the numpy-matmul SCAN (cosine_topk_sample,
-    one pass over the vectors, no per-pair interpreted fold — the sf1
-    scale-step measured the fold-based gate at 115 s vs ~4 s); valid here
-    because this oracle checks counts + gate booleans, never hashed float
-    scores (those stay with the fold-based `ann_topk`)."""
-    from insights_spark.text.simsearch import (
-        cosine_topk_bucketed, cosine_topk_sample)
-
-    emb = _t(spark, sf_dir, "embeddings")
-    approx = cosine_topk_bucketed(emb, k=5, nprobe=3)
-    m_mod = 1 << 20
-    n_row = emb.agg(F.count(F.lit(1)).alias("_n"))
-    sample = (
-        emb.crossJoin(F.broadcast(n_row))
-        .filter(
-            F.pmod(F.col("vec_id") * 1000003 + 42, F.lit(m_mod)) * F.col("_n")
-            < F.lit(256 * m_mod)
-        )
-        .drop("_n")
-    )
-    exact = cosine_topk_sample(emb, queries=sample, k=5)
-    hit = exact.join(
-        approx.select("id", "neighbor_id").withColumn("_h", F.lit(1)),
-        ["id", "neighbor_id"], "left",
-    )
-    stats = hit.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(F.coalesce("_h", F.lit(0))).alias("_nh"),
-    )
-    totals = emb.agg(F.count(F.lit(1)).alias("n_vectors"))
-    return totals.crossJoin(stats).select(
-        "n_vectors",
-        F.col("n_pairs").cast("long").alias("n_pairs"),
-        (F.col("_nh") / F.col("n_pairs") >= 0.12).alias("recall_ok"),
-    )
-
-
-def _q_simhash_pairs(spark, sf_dir):
-    from insights_spark.text.dedup import simhash_near_dups
-
-    return simhash_near_dups(_t(spark, sf_dir, "documents"), max_hamming=10)
-
-
-def _q_minhash_lsh(spark, sf_dir):
-    from insights_spark.text.dedup import minhash_near_dups
-
-    return minhash_near_dups(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
-def _q_multimodal(spark, sf_dir):
-    """Multimodal plumbing: documents → binary media payloads → mapInPandas
-    decode (deterministic payload-byte fake; PIL absent here) → per-bin
-    histogram rows. Output is all-scalar columns (bin exploded) so the
-    driver canonicalizer can hash it, and the fake decode is payload-derived
-    byte bucketing, so DuckDB reproduces it from the text column."""
-    from insights_spark.text.multimodal import image_features, media_from_docs
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    feats = image_features(media)
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.posexplode("hist").alias("bin", "n_in_bin"),
-    ).select(
-        "media_id", "n_bytes", "bin", "n_in_bin",
-        (F.col("n_in_bin") / F.lit(768.0)).alias("share"),
-    )
-
-
-def _q_audio_features(spark, sf_dir):
-    """Multimodal audio path: payload → fake waveform (byte−64 centered
-    samples) → INTEGER-exact summary stats (peak, Σs², zero crossings) via
-    the same mapInPandas plumbing as image_features. No float aggregates
-    on purpose: integer sums are shuffle-order-independent, so the oracle
-    hashes exactly. NULL-text docs (payload-less) are filtered on both
-    engines."""
-    from insights_spark.text.multimodal import audio_features, media_from_docs
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    return audio_features(media).filter(F.col("n_samples").isNotNull())
-
-
-def _q_frame_schedule(spark, sf_dir):
-    """Multimodal video path: the frame-sampling SCHEDULE (which frames to
-    decode, at what timestamps) computed from metadata alone — the plan
-    never touches payload bytes, so Parquet column pruning keeps the scan
-    payload-free (the decode itself is the honest NotImplementedError
-    without a codec; text/multimodal.py:212). Completes the multimodal
-    triple: image histogram, audio waveform stats, video frame schedule.
-    Reference parity: the insights pipeline treats raster/media payloads
-    as opaque blobs and schedules work from metadata (SURVEY §2.11)."""
-    from insights_spark.text.multimodal import frame_sample, media_from_docs
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    return frame_sample(media, every_ms=1000).select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("frame_idx").cast("int").alias("frame_idx"),
-        F.col("ts_ms").cast("long").alias("ts_ms"),
-    )
-
-
-def _q_phash_pairs(spark, sf_dir):
-    """Image near-dup by perceptual hash: 64-bit integer-exact aHash over
-    the fake-decoded 16x16 images (per-pixel r+g+b sums, 2x2 pooling, bit
-    = block*64 > total — no floats anywhere), then the SAME banded
-    self-join as simhash text dedup (4 bands x 16 bits, pigeonhole-
-    complete for hamming ≤ 3, popcount verify). The oracle replays the
-    whole hash in DuckDB list algebra and does the O(n²) verify — banding
-    completeness means the two result sets are provably identical.
-    Reference parity: raster tiles deduped as opaque blobs (SURVEY §2.11);
-    this is the image half of the near-dup lane."""
-    from insights_spark.text.multimodal import media_from_docs, phash_near_dups
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    return phash_near_dups(media, max_hamming=3, bands=4, use_codec=False)
-
-
-def _q_rep_filters(spark, sf_dir):
-    """Gopher-style repetition quality gates (duplicate-token fraction,
-    duplicate-token char fraction, top-2-gram char fraction, duplicate-
-    2-gram char fraction) — the standard web-crawl repetition filters.
-    Two doc-keyed aggregations over exploded terms; no Python. Fractions
-    are integer-sum / integer-sum single divisions, so DuckDB reproduces
-    the doubles bit-exactly."""
-    from insights_spark.text.quality import repetition_scores
-
-    return repetition_scores(
-        _t(spark, sf_dir, "documents"), gram_n=2
-    ).select(
-        "doc_id",
-        "n_tokens",
-        "dup_token_frac",
-        "dup_token_char_frac",
-        F.col("top_gram_char_frac").alias("top_2gram_char_frac"),
-        F.col("dup_gram_char_frac").alias("dup_2gram_char_frac"),
-    )
-
-
-def _q_boilerplate(spark, sf_dir):
-    """CCNet-style boilerplate detection: cross-document duplicate
-    10-token segments flagged by document frequency (df >= 2), rolled up
-    to per-doc boilerplate fraction + post-removal token accounting. One
-    content-keyed aggregation builds the (small) boilerplate dictionary;
-    AQE broadcasts it back onto the segment stream."""
-    from insights_spark.text.clean import boilerplate_flags
-
-    return boilerplate_flags(_t(spark, sf_dir, "documents"))
-
-
-def _q_pii_scrub(spark, sf_dir):
-    """PII hygiene pass: per-doc email/phone/IPv4 counts + typed-token
-    redaction (text/pii.py — map-only JVM regex, zero shuffle). The
-    fixture text is PII-free word soup, so the query deterministically
-    plants PII in ~3/13 of docs first (keyed on doc_id alone) — the
-    redaction path is exercised non-vacuously and the oracle replants
-    identically."""
-    from insights_spark.text.pii import pii_scrub
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    m = F.pmod(F.col("doc_id"), F.lit(13))
-    did = F.col("doc_id").cast("string")
-    aug = (
-        F.when(
-            m == 0,
-            F.concat(F.col("text"), F.lit(" contact user"), did,
-                     F.lit("@example.com now")),
-        )
-        .when(
-            m == 1,
-            F.concat(
-                F.col("text"), F.lit(" call (555) 010-"),
-                F.lpad(F.pmod(F.col("doc_id"), F.lit(10000)).cast("string"),
-                       4, "0"),
-            ),
-        )
-        .when(
-            m == 2,
-            F.concat(
-                F.col("text"), F.lit(" from 10.0."),
-                F.pmod(F.col("doc_id"), F.lit(256)).cast("string"),
-                F.lit("."),
-                F.pmod(F.col("doc_id"), F.lit(256)).cast("string"),
-                F.lit(" logged"),
-            ),
-        )
-        .otherwise(F.col("text"))
-    )
-    return pii_scrub(d.select("doc_id", aug.alias("text")))
-
-
-def _q_budget_select(spark, sf_dir):
-    """Token-budget corpus selection: best-quality-first docs until 8000
-    cumulative tokens (text/clean.py:budget_select). The global ordered
-    prefix sum runs as the two-phase distributed scan (pack.global_cumsum),
-    NOT a single-partition window — same plan discipline as
-    pack_sequences, now keyed on a computed quality order."""
-    from insights_spark.text.clean import budget_select
-
-    return budget_select(_t(spark, sf_dir, "documents"), token_budget=8000)
-
-
-def _q_classifier_score(spark, sf_dir):
-    """fastText-style linear quality classifier (text/classify.py): token
-    stream broadcast-joined to a weight table, doc-keyed integer rollup,
-    ONE final division (no order-dependent float sums → engine-exact
-    score), threshold on the exact integer sum. The weight table derives
-    in-query from the corpus vocabulary (a real run broadcasts its
-    exported model instead)."""
-    from insights_spark.text.classify import classifier_score
-
-    return classifier_score(_t(spark, sf_dir, "documents"))
-
-
-def _q_dedup_clusters(spark, sf_dir):
-    """Near-dup pairs → duplicate clusters → canonical survivors
-    (text/dedup.py:near_dup_clusters): MinHash-LSH pairs fed through the
-    generic star-contraction connected components (the same
-    star_cc_labels the tile regions use — O(log² n) rounds, state = the
-    shrinking edge list). Pairwise dedup is wrong under transitivity
-    (A~B, B~C must keep ONE doc); this is the step that makes it right."""
-    from insights_spark.text.dedup import minhash_near_dups, near_dup_clusters
-
-    d = _t(spark, sf_dir, "documents")
-    return near_dup_clusters(d, minhash_near_dups(d, threshold=0.5))
-
-
-def _q_cluster_savings(spark, sf_dir):
-    """Dedup accounting (text/dedup.py:cluster_savings): per near-dup
-    cluster, chars kept vs saved by keeping only the canonical doc —
-    composed on near_dup_clusters; the oracle composes the recursive-CTE
-    reachability with a documents join."""
-    from insights_spark.text.dedup import (
-        cluster_savings,
-        minhash_near_dups,
-        near_dup_clusters,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    return cluster_savings(d, near_dup_clusters(d, minhash_near_dups(d, threshold=0.5)))
-
-
-def _q_corpus_shuffle(spark, sf_dir):
-    """Deterministic global training-order shuffle (text/pack.py:
-    corpus_shuffle): content-stable hash order, global rank via the
-    shared two-phase distributed scan — the oracle's single-node
-    row_number() window is exactly the plan shape the operator avoids."""
-    from insights_spark.text.pack import corpus_shuffle
-
-    return corpus_shuffle(_t(spark, sf_dir, "documents"))
-
-
-def _q_minhash_vs_index(spark, sf_dir):
-    """Incremental cross-corpus near-dedup (text/dedup.py:
-    minhash_vs_index): a new batch (doc_id ≡ 0 mod 3) checked against the
-    existing corpus's signature index (the rest) — band-bucket join,
-    signature-estimated Jaccard verify, indexed text never re-read."""
-    from insights_spark.text.dedup import minhash_signature_np, minhash_vs_index
-
-    # persisted (r6): each side feeds BOTH the band explode and the
-    # signature re-attach join inside minhash_vs_index — without the pin
-    # the signature UDF pass would run twice per side
-    sigs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", minhash_signature_np()(F.col("text")).alias("sig"))
-        .persist()
-    )
-    batch = sigs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    index = sigs.filter(F.pmod(F.col("doc_id"), F.lit(3)) != 0)
-    return minhash_vs_index(batch, index, threshold=0.5)
-
-
-def _q_country_insights(spark, sf_dir):
-    """A10 — per-country building counts as-of a cutoff: latest version per
-    (type, id) strictly before the month (J5 as-of), THEN the building/type/
-    country predicates, count distinct ids (ops.country.building_counts_asof)."""
-    from insights_spark.ops.country import building_counts_asof
-
-    li = _t(spark, sf_dir, "lineitem")
-    k = F.col("l_orderkey")
-    els = li.select(
-        k.alias("id"),
-        # (l_orderkey, l_linenumber) is NOT unique in the synthetic data —
-        # fold partkey/suppkey in so the latest-version pick is deterministic
-        (
-            F.col("l_linenumber").cast("long") * F.lit(1000000000000)
-            + F.col("l_partkey") * F.lit(1000000)
-            + F.col("l_suppkey")
-        ).alias("version"),
-        F.when(F.pmod(k, F.lit(4)) == 0, F.lit("node"))
-        .when(F.pmod(k, F.lit(4)) == 1, F.lit("relation"))
-        .otherwise(F.lit("way"))
-        .alias("type"),
-        F.col("l_shipdate").alias("timestamp"),
-        F.when(
-            F.pmod(F.col("l_partkey"), F.lit(3)) == 0,
-            F.create_map(F.lit("building"), F.lit("yes")),
-        )
-        .otherwise(F.create_map().cast("map<string,string>"))
-        .alias("tags"),
-        F.when(F.pmod(F.col("l_suppkey"), F.lit(5)) == 4, F.lit(None).cast("string"))
-        .otherwise(
-            F.concat(F.lit("C"), F.pmod(F.col("l_suppkey"), F.lit(5)).cast("string"))
-        )
-        .alias("country"),
-    )
-    return building_counts_asof(els, "1997-01-01 00:00:00")
-
-
-def _build_elements_with_changeset(spark, sf_dir):
-    """The country_insights element fixture + a changeset column (l_partkey)
-    so the Tasking-Manager semi-join has something to key on."""
-    li = _t(spark, sf_dir, "lineitem")
-    k = F.col("l_orderkey")
-    return li.select(
-        k.alias("id"),
-        (
-            F.col("l_linenumber").cast("long") * F.lit(1000000000000)
-            + F.col("l_partkey") * F.lit(1000000)
-            + F.col("l_suppkey")
-        ).alias("version"),
-        F.when(F.pmod(k, F.lit(4)) == 0, F.lit("node"))
-        .when(F.pmod(k, F.lit(4)) == 1, F.lit("relation"))
-        .otherwise(F.lit("way"))
-        .alias("type"),
-        F.col("l_shipdate").alias("timestamp"),
-        F.col("l_partkey").alias("changeset"),
-        F.when(
-            F.pmod(F.col("l_partkey"), F.lit(3)) == 0,
-            F.create_map(F.lit("building"), F.lit("yes")),
-        )
-        .otherwise(F.create_map().cast("map<string,string>"))
-        .alias("tags"),
-        F.when(F.pmod(F.col("l_suppkey"), F.lit(5)) == 4, F.lit(None).cast("string"))
-        .otherwise(
-            F.concat(F.lit("C"), F.pmod(F.col("l_suppkey"), F.lit(5)).cast("string"))
-        )
-        .alias("country"),
-    )
-
-
-def _q_unpivot_counts(spark, sf_dir):
-    """Unpivot (melt) surface — the inverse reshape of pivot_counts:
-    wide per-user type counts back to long (user_id, event_type, n) via
-    DataFrame.unpivot, zero-count cells preserved (the round trip is
-    lossless, unlike re-aggregating raw events which drops absent
-    pairs). Map-only on the wide table."""
-    wide = _q_pivot_counts(spark, sf_dir)
-    types = ["click", "view", "purchase", "signup", "error"]
-    return (
-        wide.unpivot(
-            "user_id", [f"n_{t}" for t in types], "metric", "n"
-        )
-        .select(
-            "user_id",
-            F.expr("substring(metric, 3)").alias("event_type"),
-            F.col("n").cast("bigint").alias("n"),
-        )
-    )
-
-
-def _q_event_gaps(spark, sf_dir):
-    """Inter-arrival cadence per event type (ops/sessions.py
-    event_gap_stats): per-(user, type) lag window → exact interpolated
-    p50/p90 of gap seconds — session-timeout tuning / bot-cadence
-    profiling. Gap = integer µs / 1e6, identical doubles both engines."""
-    from insights_spark.ops.sessions import event_gap_stats
-
-    return event_gap_stats(_t(spark, sf_dir, "events"))
-
-
-def _q_cube_rollup(spark, sf_dir):
-    """OLAP ROLLUP over the flagship's located events: tile-density
-    totals at (country, z-tile), per-country subtotals, and the grand
-    total in ONE pass — Spark's native `rollup()` compiles to a single
-    Expand + aggregation (no per-level re-scan), the same shape DuckDB's
-    ROLLUP produces. grouping_id disambiguates NULL-as-subtotal from
-    NULL-as-value (events outside every country)."""
-    from insights_spark.geo import pip, tiles
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    located = tiles.with_tile(pip.assign_country(pts, _boundary_rows()), z=4)
-    return (
-        located.rollup("country", "x")
-        .agg(
-            F.grouping_id().cast("int").alias("gid"),
-            F.count(F.lit(1)).cast("bigint").alias("density"),
-        )
-        .select("country", F.col("x").cast("long").alias("x"), "gid", "density")
-    )
-
-
-def _q_pivot_counts(spark, sf_dir):
-    """Pivot surface: per-user event counts spread into one column per
-    event type (`groupBy().pivot(values pinned)`) — pinning the pivot
-    values keeps the plan a single pass with NO distinct-values pre-query
-    (the two-job surprise of unpinned pivot). Oracle = conditional
-    aggregation, which is exactly what pivot compiles to."""
-    ev = _t(spark, sf_dir, "events")
-    types = ["click", "view", "purchase", "signup", "error"]
-    out = (
-        ev.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-    )
-    return out.select(
-        "user_id",
-        *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"n_{t}")
-          for t in types],
-    )
-
-
-def _q_rolling_active(spark, sf_dir):
-    """Trailing-7-day active users per day from stored per-day HLL
-    sketches (ops/timeseries.py rolling_active_sketches): one raw scan,
-    bounded sequence-explode contribution join, register-max merges —
-    never a distinct over a range window, never a window_days× re-scan.
-    Rows-only driver check (HLL internals engine-specific); the
-    lossless-merge equality is pytest-pinned."""
-    from insights_spark.ops.timeseries import rolling_active_sketches
-
-    return rolling_active_sketches(_t(spark, sf_dir, "events"), 7)
-
-
-def _q_event_transitions(spark, sf_dir):
-    """First-order clickstream transition matrix (ops/sessions.py
-    event_transitions): per-user lag window → (cur, nxt) pair rollup →
-    probability as one division over the |types|²-row pair table. Ties
-    on ts break by event_id on both engines."""
-    from insights_spark.ops.sessions import event_transitions
-
-    return event_transitions(_t(spark, sf_dir, "events"))
-
-
-def _q_triangles(spark, sf_dir):
-    """Per-node triangle counts (text/links.py triangle_counts) over the
-    pagerank fixture's deterministic 3-out graph: degree-ordered
-    orientation caps the wedge join at O(√m) out-degree per node (the
-    hub-skew bound id-order cannot give); the result is
-    orientation-invariant, so the oracle verifies with the plain
-    canonical a<b<c three-way self-join."""
-    from insights_spark.text.links import triangle_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return triangle_counts(edges)
-
-
-def _q_scd2_lookup(spark, sf_dir):
-    """SCD2 as-of enrichment (ops/latest.py scd2_lookup): every order
-    probes the element dimension at its order date — ONE key equi-join
-    + [valid_from, valid_to) range filter instead of a window over
-    version history; at most one interval matches (gapless TIME-ordered
-    tiling), and keys with no version as of the probe keep NULL.
-
-    The fixture's composite version is NOT time-ordered (an out-of-order
-    history — scd2_merge's splice case), so the dimension build first
-    normalizes to a per-key (ts, version) rank: intervals only tile the
-    timeline when the interval order IS time order. Probing the
-    version-ordered build instead fans out (measured: 18.7k rows from
-    15k probes) — that ordering contract is the lookup's precondition."""
-    from insights_spark.ops.latest import scd2_intervals, scd2_lookup
-
-    els = _build_elements_with_changeset(spark, sf_dir)
-    w = Window.partitionBy("type", "id").orderBy("timestamp", "version")
-    seq = els.withColumn("seq", F.row_number().over(w))
-    dim = scd2_intervals(seq, version_col="seq").select(
-        "type", "id", "version", "valid_from", "valid_to"
-    )
-    k = F.col("o_orderkey")
-    facts = _t(spark, sf_dir, "orders").select(
-        F.when(F.pmod(k, F.lit(4)) == 0, F.lit("node"))
-        .when(F.pmod(k, F.lit(4)) == 1, F.lit("relation"))
-        .otherwise(F.lit("way"))
-        .alias("type"),
-        k.alias("id"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    return scd2_lookup(facts, dim, keys=("type", "id"), attrs=("version",)
-                       ).select("type", "id", "ts",
-                                F.col("version").alias("asof_version"))
-
-
-def _q_lang_margin(spark, sf_dir):
-    """Language-id confidence (text/quality.py lang_margin): top-1/top-2
-    stopword-density margin + mixed-language flag (the CLD-style
-    'reliable' bit) — code-switched pages must not route on the argmax
-    alone. Map-only column scoring, ties by language code both engines."""
-    from insights_spark.text.quality import lang_margin
-
-    return lang_margin(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "lang_pred", "lang_second", "margin", "is_mixed"
-    )
-
-
-def _q_score_calibration(spark, sf_dir):
-    """Per-source percentile-rank score calibration (text/quality.py
-    score_percentile_rank): cume_dist semantics without the
-    partitionBy(source) window (a handful of giant sources would each
-    sort on one task) — global rank on the shared two-phase prefix scan,
-    per-source offsets broadcast back. Score = uniq_token_ratio."""
-    from insights_spark.text.quality import quality_scores, score_percentile_rank
-
-    d = _t(spark, sf_dir, "documents")
-    q = quality_scores(d).select(
-        "doc_id", "uniq_token_ratio"
-    ).join(d.select("doc_id", "source"), "doc_id")
-    return score_percentile_rank(q, "uniq_token_ratio")
-
-
-def _q_check_constraints(spark, sf_dir):
-    """Declarative data-quality gate (runtime/profile.py
-    check_constraints): not-null / range / accepted-values / unique in
-    ONE aggregation pass (conditional sums + count-distinct share the
-    shuffle), plus a referential-integrity anti-join of lineitem order
-    keys against orders. The range rule on o_custkey is planted to FAIL
-    (violations > 0) so the gate is non-vacuous."""
-    from insights_spark.runtime.profile import check_constraints
-
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
-    rules = [
-        {"rule": "not_null", "col": "o_orderkey"},
-        {"rule": "unique", "col": "o_orderkey"},
-        {"rule": "range", "col": "o_totalprice", "lo": 0.0, "hi": 1e9},
-        {"rule": "range", "col": "o_custkey", "lo": 0, "hi": 10},
-        {"rule": "accepted", "col": "o_orderstatus",
-         "values": ["O", "F", "P"]},
-    ]
-    base = check_constraints(o, rules)
-    ref = check_constraints(
-        li, [{"rule": "ref", "col": "l_orderkey", "other": o,
-              "other_col": "o_orderkey"}]
-    )
-    return base.unionByName(ref)
-
-
-def _q_snapshot_diff(spark, sf_dir):
-    """Snapshot CDC (runtime/tablefmt.py snapshot_diff): the change feed
-    between the fixture's append (ts=100) and merge (ts=200) commits —
-    inserts are the odd mod-3 docs the merge brought in, updates are the
-    evens∩mod-3 rows it bumped by 1000 chars; unchanged keys are absent
-    (output is change-sized). One full-outer key join over two
-    time-travel reads."""
-    from insights_spark.runtime.tablefmt import snapshot_diff
-
-    t = _snapshot_table_fixture(spark, sf_dir, "cdc")
-    return snapshot_diff(
-        t, ["doc_id"], from_ts=100, to_ts=200, compare_cols=["n_chars"]
-    )
-
-
-def _q_equi_depth_hist(spark, sf_dir):
-    """Equal-population histogram of order totals (runtime/profile.py
-    equi_depth_histogram): exact interpolated percentile boundaries
-    (percentile == quantile_cont parity), branch-free bucket rule
-    1 + Σ[v > bound], two passes (bounds agg broadcast back + one
-    groupBy). approx=True is the t-digest scale path, same shape."""
-    from insights_spark.runtime.profile import equi_depth_histogram
-
-    return equi_depth_histogram(_t(spark, sf_dir, "orders"), "o_totalprice", 8)
-
-
-def _q_curriculum(spark, sf_dir):
-    """Curriculum training order (text/pack.py curriculum_order): quality
-    VALUE bands (map-only, content-stable — not ntile rank bands, which
-    would need a global sort), highest first, hash-shuffled within band;
-    the global position rides the shared two-phase prefix scan, never a
-    single-partition ORDER BY window (suite-wide plan rule)."""
-    from insights_spark.text.pack import curriculum_order
-
-    return curriculum_order(_t(spark, sf_dir, "documents"))
-
-
-def _q_cluster_safe_split(spark, sf_dir):
-    """Leakage-free train/test split (text/clean.py cluster_safe_split):
-    the split key is the near-dup CLUSTER id, so a doc and its 0.95-twin
-    can never straddle train/eval — the contamination a doc-keyed split
-    can't prevent. Oracle = the dedup_clusters reachability composed
-    verbatim + the same overflow-safe bucket hash on cluster_id."""
-    from insights_spark.text.clean import cluster_safe_split
-    from insights_spark.text.dedup import minhash_near_dups, near_dup_clusters
-
-    d = _t(spark, sf_dir, "documents")
-    labels = near_dup_clusters(d, minhash_near_dups(d, threshold=0.5))
-    return cluster_safe_split(labels)
-
-
-def _q_geofence_dwell(spark, sf_dir):
-    """Geofence dwell (geo × sessions composition): events → synthetic
-    points → broadcast PIP country join (flagship's J6 kernel) → per-user
-    gaps-and-islands on region CHANGES (ops/sessions.py dwell_segments)
-    → per (user, country) visit counts + total observed dwell in exact
-    integer microseconds. Leaving a region (including to no-region NULL)
-    ends the visit."""
-    from insights_spark.geo import pip
-    from insights_spark.ops.sessions import dwell_segments
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    pts = _points(ev, "event_id")
-    located = pip.assign_country(pts, _boundary_rows())
-    return dwell_segments(located, region_col="country").select(
-        "user_id", "country", "n_visits", "dwell_us"
-    )
-
-
-def _q_sketch_rollup(spark, sf_dir):
-    """Re-aggregatable distinct-count sketches (ops/timeseries.py): weekly
-    HLL++ user sketches per event_type, merged to ALL-TIME estimates
-    without re-scanning raw events — the 100 TB rollup pattern. Output
-    pairs the merged estimate with the exact distinct and a within-5%%
-    flag. HLL internals are engine-specific, so this is a rows-only
-    driver check; the lossless-merge / partitioning-invariance /
-    parquet-roundtrip properties are pytest-pinned."""
-    from insights_spark.ops.timeseries import (
-        build_distinct_sketches,
-        merge_distinct_sketches,
-    )
-
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "wk", F.date_trunc("week", F.col("ts"))
-    )
-    sk = build_distinct_sketches(ev, ("event_type", "wk"), "user_id")
-    est = merge_distinct_sketches(sk, ("event_type",))
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").cast("bigint").alias("exact_distinct")
-    )
-    return est.join(exact, "event_type").select(
-        "event_type",
-        "est_distinct",
-        "exact_distinct",
-        (
-            F.abs(F.col("est_distinct") - F.col("exact_distinct"))
-            <= 0.05 * F.col("exact_distinct")
-        ).cast("int").alias("within_5pct"),
-    )
-
-
-def _q_scd2_merge(spark, sf_dir):
-    """Incremental SCD2 maintenance (ops/latest.py scd2_merge): the stored
-    dimension is built from pre-1996 versions, then the 1996+ versions
-    apply as a batch — untouched keys pass through, touched keys rebuild
-    from the table's own rows (valid_from IS the version timestamp). The
-    oracle is the FULL recompute over all versions: the merge theorem,
-    same discipline as hot_changesets_inc. The ts split does NOT respect
-    version order per key, so this exercises the out-of-order splice path,
-    not just append-at-the-end."""
-    from insights_spark.ops.latest import scd2_intervals, scd2_merge
-
-    els = _build_elements_with_changeset(spark, sf_dir)
-    cols = ("type", "id", "version", "valid_from", "valid_to", "is_current")
-    # NOT persisted (r6 cold-cache A/B): scd2_merge reads the dimension on
-    # both its anti-join and semi-join branches, but materializing the
-    # 60k-row window output costs more than letting the two branches share
-    # the exchange (cold min-of-4 interleaved: plain 2.43 s vs persisted
-    # 2.84 s — in production the dimension IS a stored table, so neither
-    # side pays the rebuild)
-    base = scd2_intervals(els.filter(F.col("timestamp") < "1996-01-01")) \
-        .select(*cols)
-    batch = els.filter(F.col("timestamp") >= "1996-01-01").select(
-        "type", "id", "version", "timestamp"
-    )
-    return scd2_merge(base, batch).withColumn(
-        "is_current", F.col("is_current").cast("int")
-    )
-
-
-def _q_cohort_retention(spark, sf_dir):
-    """Weekly signup-cohort retention (ops/sessions.py cohort_retention):
-    first-signup week per user → distinct (cohort, user, activity-week) →
-    (cohort, offset) count-distinct, joined to cohort sizes. One pass over
-    the fact table; everything downstream user-/cohort-keyed."""
-    from insights_spark.ops.sessions import cohort_retention
-
-    r = cohort_retention(_t(spark, sf_dir, "events"))
-    # DuckDB's date_trunc('week') yields DATE; align the bucket type
-    return r.withColumn("cohort_week", F.col("cohort_week").cast("date"))
-
-
-def _q_semantic_prune(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): IVF-bucket the embedding space
-    (hash-sampled centroids), within-bucket exact cosine pairs ≥ 0.4,
-    transitive components via star-contraction CC, keep min-id per
-    component. Quadratic only per bucket (k ∝ √n keeps buckets ~√n);
-    the oracle replays assignment + pairs + a recursive-CTE reachability
-    with list_dot_product float parity (same fold as cos_near_dups)."""
-    from insights_spark.text.simsearch import semantic_prune
-
-    return semantic_prune(
-        _t(spark, sf_dir, "embeddings"), num_centroids=16, threshold=0.4
-    )
-
-
-def _q_column_profile(spark, sf_dir):
-    """Post-ingest data-quality profile of the orders table: per-column
-    null/distinct counts and min/max in ONE aggregation pass (exact
-    distincts compile to a single Expand+shuffle; runtime/profile.py has
-    the approx=True HLL path for 100 TB). Numeric min/max stay DOUBLE —
-    exact value comparison, no cross-engine string formatting."""
-    from insights_spark.runtime.profile import column_profile
-
-    # fan the single-row-group scan out (r6): the exact multi-column
-    # count-distinct compiles to Expand (rows x #cols) INSIDE the scan
-    # stage, which otherwise runs on the one task holding the row group
-    return column_profile(
-        _t(spark, sf_dir, "orders")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-
-def _q_funnel(spark, sf_dir):
-    """Ordered conversion funnel (view → click → purchase within 72 h,
-    greedy earliest-completion): k-1 user-keyed joins against a
-    monotonically shrinking survivor set — no all-events window, no
-    per-user state (ops/sessions.py funnel_steps). The dependent-minimum
-    chain (step k's min ts depends on step k-1's) is what plain
-    conditional aggregation can't express in one pass."""
-    from insights_spark.ops.sessions import funnel_steps
-
-    ev = _t(spark, sf_dir, "events")
-    return funnel_steps(ev, ("view", "click", "purchase"), max_gap_hours=72)
-
-
-def _q_scd2(spark, sf_dir):
-    """SCD Type-2 validity intervals over element history: one window per
-    (type, id) ordered by version turns the reference's query-time as-of
-    window (latest_version, advanced-queries.md latest-state CTEs) into a
-    materialized [valid_from, valid_to) dimension — the standard warehouse
-    twin. Same element fixture as country_insights; linear output (one row
-    per input version)."""
-    from insights_spark.ops.latest import scd2_intervals
-
-    els = _build_elements_with_changeset(spark, sf_dir)
-    return scd2_intervals(els).select(
-        "type", "id", "version",
-        F.col("valid_from").alias("valid_from"),
-        F.col("valid_to").alias("valid_to"),
-        F.col("is_current").cast("int").alias("is_current"),
-    )
-
-
-def _q_country_insights_tm(spark, sf_dir):
-    """A10 TM variant — the reference's tm_building_count column
-    (advanced-queries.md:144-150): same as-of building count, plus the
-    `changeset IN (SELECT id FROM hot_changeset)` condition on the LATEST
-    row's changeset, as a broadcast semi-join inside building_counts_asof.
-    The hot set here is the '#hotosm'-rule subset of the part keyspace
-    (every third key), mirroring the hot_changesets materialized view."""
-    from insights_spark.ops.country import building_counts_asof
-
-    els = _build_elements_with_changeset(spark, sf_dir)
-    hot = (
-        _t(spark, sf_dir, "part")
-        .filter(F.pmod(F.col("p_partkey"), F.lit(3)) == 0)
-        .select(F.col("p_partkey").alias("id"))
-    )
-    return building_counts_asof(els, "1997-01-01 00:00:00", hot_changeset_ids=hot)
-
-
-def _q_first_last_used(spark, sf_dir):
-    """A6 — first/last-used refresh THROUGH the incremental path
-    (reference hashtags.py:60-111): the registry arrives with camp1's
-    first/last already set (the watermark case) and camp0/camp2 unset (the
-    full-scan case); update_first_last_used merges
-    first = coalesce(old, min(created_at)), last = greatest(old, max).
-    The oracle replays the identical merge in SQL, so BOTH branches of the
-    incremental rule are hash-pinned. (Incremental == full-recompute
-    equivalence is additionally pytest-pinned in tests/test_ops.py.)"""
-    import datetime
-
-    from insights_spark.ops.hashtags import update_first_last_used
-
-    o = _t(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-    changesets = o.select(
-        ok.alias("id"),
-        F.col("o_orderdate").alias("created_at"),
-        F.create_map(
-            F.lit("comment"),
-            F.concat(
-                F.lit("fix #camp"),
-                F.pmod(ok, F.lit(4)).cast("string"),
-                F.when(F.pmod(ok, F.lit(3)) == 0, F.lit(" work")).otherwise(F.lit("")),
-            ),
-        ).alias("tags"),
-    )
-    reg = spark.createDataFrame(
-        [
-            (1, "camp0", None, None),
-            # pre-existing watermark: first_used must stay 1990-01-01, and
-            # last_used only moves if the fresh max exceeds 1994-06-15
-            (2, "camp1", datetime.date(1990, 1, 1), datetime.date(1994, 6, 15)),
-            (3, "camp2", None, None),
-        ],
-        "id long, name string, first_used date, last_used date",
-    )
-    return update_first_last_used(changesets, reg)
-
-
-def _q_conditional_battery_salted(spark, sf_dir):
-    """A1 via the EXPLICIT two-level salted aggregate (SURVEY §4 X10,
-    runtime.skew.salted_agg): partial agg on (key, salt), final re-SUM on
-    key. Shares conditional_battery's oracle byte-for-byte — the skew
-    machinery must be a pure physical rewrite."""
-    from insights_spark.runtime.skew import salted_agg
-
-    li = _t(spark, sf_dir, "lineitem")
-    aggs = {
-        "qty_gt25": F.sum((F.col("l_quantity") > 25).cast("int")),
-        "disc_gt5": F.sum((F.col("l_discount") > 0.05).cast("int")),
-        "taxed_returns": F.sum(
-            ((F.col("l_tax") > 0.04) & (F.col("l_returnflag") == "R")).cast("int")
-        ),
-        "flag_an": F.sum(F.col("l_returnflag").isin("A", "N").cast("int")),
-        "n": F.count(F.lit(1)),
-    }
-    return salted_agg(
-        li, ["l_orderkey"], aggs, salt_source_cols=["l_linenumber", "l_partkey"],
-        buckets=16,
-    )
-
-
-def _q_propagate_ways(spark, sf_dir):
-    """J7 — way location propagation: latest-version node dim (two node
-    versions; even ids get a v2 at shifted coordinates) joined on nds[0];
-    empty-nds ways stay NULL; a way's own non-NULL country wins (coalesce)."""
-    from insights_spark.ops.propagate import propagate_way_locations
-
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    n1 = _points(cust, "c_custkey").select(
-        F.col("c_custkey").alias("id"),
-        F.lit("node").alias("type"),
-        F.lit(1).cast("long").alias("version"),
-        F.col("lat"),
-        F.col("lon"),
-        F.concat(
-            F.lit("N"), F.pmod(F.col("c_custkey"), F.lit(5)).cast("string")
-        ).alias("country"),
-        F.lit(None).cast("array<bigint>").alias("nds"),
-    )
-    c2 = cust.filter(F.pmod(F.col("c_custkey"), F.lit(2)) == 0).withColumn(
-        "k2", F.col("c_custkey") + F.lit(1000000)
-    )
-    n2 = _points(c2, "k2").select(
-        F.col("c_custkey").alias("id"),
-        F.lit("node").alias("type"),
-        F.lit(2).cast("long").alias("version"),
-        F.col("lat"),
-        F.col("lon"),
-        F.concat(
-            F.lit("M"), F.pmod(F.col("c_custkey"), F.lit(5)).cast("string")
-        ).alias("country"),
-        F.lit(None).cast("array<bigint>").alias("nds"),
-    )
-    o = _t(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-    ways = o.select(
-        ok.alias("id"),
-        F.lit("way").alias("type"),
-        F.lit(1).cast("long").alias("version"),
-        F.lit(None).cast("double").alias("lat"),
-        F.lit(None).cast("double").alias("lon"),
-        F.when(F.pmod(ok, F.lit(7)) == 0, F.lit("OWN"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("country"),
-        F.when(F.pmod(ok, F.lit(50)) == 0, F.array().cast("array<bigint>"))
-        .otherwise(F.array(F.col("o_custkey")))
-        .alias("nds"),
-    )
-    els = n1.unionByName(n2).unionByName(ways)
-    return (
-        propagate_way_locations(els)
-        .filter(F.col("type") == "way")
-        .select("id", "lon", "lat", "country")
-    )
-
-
-def _q_campaign_rollup(spark, sf_dir):
-    """A7/J2/P4/F7 — one-pass hashtag campaign rollup for monthly periods:
-    broadcast registry theta-join on the 4-pattern match, left join to the
-    per-changeset stats battery (some changesets lack stats → coalesce 0),
-    groupBy(hashtag, month) (ops.hashtags.hashtag_period_stats)."""
-    from insights_spark.ops.hashtags import hashtag_period_stats
-
-    o = _t(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-    changesets = o.select(
-        ok.alias("id"),
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("created_at"),
-        F.create_map(
-            F.lit("comment"),
-            F.concat(
-                F.lit("fix #camp"),
-                F.pmod(ok, F.lit(4)).cast("string"),
-                # exercise both comment patterns: '%#h %' and trailing '%#h'
-                F.when(F.pmod(ok, F.lit(3)) == 0, F.lit(" work")).otherwise(F.lit("")),
-            ),
-        ).alias("tags"),
-    )
-    reg = spark.createDataFrame(
-        [(1, "camp0"), (2, "camp1"), (3, "camp2")], "id long, name string"
-    )
-    stats = o.filter(F.pmod(ok, F.lit(11)) != 0).select(
-        ok.alias("changeset"),
-        F.pmod(ok, F.lit(10)).cast("int").alias("added_buildings"),
-        F.pmod(ok, F.lit(7)).cast("double").alias("added_highway_meters"),
-        F.pmod(ok, F.lit(5)).cast("int").alias("added_amenity"),
-        F.pmod(ok, F.lit(4)).cast("int").alias("modified_amenity"),
-        F.pmod(ok, F.lit(3)).cast("int").alias("added_places"),
-        F.pmod(ok, F.lit(2)).cast("int").alias("modified_places"),
-    )
-    return hashtag_period_stats(changesets, stats, reg, "m")
-
-
-def _q_mapathon_report(spark, sf_dir):
-    """J1/P8/A4 — mapathon tag/action report: semi-join elements against the
-    filtered changeset set, explode the tag map, countDistinct features per
-    (key, action) (ops.country.mapathon_tag_action_report)."""
-    from insights_spark.ops.country import mapathon_tag_action_report
-
-    li = _t(spark, sf_dir, "lineitem")
-    els = li.select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("id"),
-        F.col("l_orderkey").alias("changeset"),
-        F.when(F.pmod(F.col("l_linenumber"), F.lit(3)) == 0, F.lit("create"))
-        .when(F.pmod(F.col("l_linenumber"), F.lit(3)) == 1, F.lit("modify"))
-        .otherwise(F.lit("delete"))
-        .alias("action"),
-        F.map_filter(
-            F.create_map(
-                F.lit("building"),
-                F.when(F.pmod(F.col("l_partkey"), F.lit(3)) == 0, F.lit("yes")),
-                F.lit("highway"),
-                F.when(
-                    F.pmod(F.col("l_partkey"), F.lit(5)) == 0, F.lit("residential")
-                ),
-            ),
-            lambda k, v: v.isNotNull(),
-        ).alias("tags"),
-    )
-    ids = (
-        _t(spark, sf_dir, "orders")
-        .filter((F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000))
-        .select(F.col("o_orderkey").alias("id"))
-    )
-    return mapathon_tag_action_report(els, ids)
-
-
-def _q_mapathon_user_report(spark, sf_dir):
-    """Reference advanced-queries.md:53-75 — detailed per-user mapathon
-    report uid|username|key|action|features: the A4 rollup grouped by uid,
-    with the correlated LIMIT-1 username lookup replaced by the
-    deterministic J4 scalar pick (username on the user's max changeset id)."""
-    from insights_spark.ops.country import mapathon_user_report
-
-    li = _t(spark, sf_dir, "lineitem")
-    els = li.select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("id"),
-        F.col("l_orderkey").alias("changeset"),
-        F.pmod(F.col("l_suppkey"), F.lit(23)).alias("uid"),
-        F.when(F.pmod(F.col("l_linenumber"), F.lit(3)) == 0, F.lit("create"))
-        .when(F.pmod(F.col("l_linenumber"), F.lit(3)) == 1, F.lit("modify"))
-        .otherwise(F.lit("delete"))
-        .alias("action"),
-        F.map_filter(
-            F.create_map(
-                F.lit("building"),
-                F.when(F.pmod(F.col("l_partkey"), F.lit(3)) == 0, F.lit("yes")),
-                F.lit("highway"),
-                F.when(
-                    F.pmod(F.col("l_partkey"), F.lit(5)) == 0, F.lit("residential")
-                ),
-            ),
-            lambda k, v: v.isNotNull(),
-        ).alias("tags"),
-    )
-    o = _t(spark, sf_dir, "orders")
-    changesets = o.select(
-        F.col("o_orderkey").alias("id"),
-        F.pmod(F.col("o_orderkey"), F.lit(23)).alias("user_id"),
-        F.concat(
-            F.lit("user_"), F.pmod(F.col("o_orderkey"), F.lit(23)).cast("string"),
-            F.lit("_"), F.col("o_orderkey").cast("string"),
-        ).alias("user_name"),
-    )
-    ids = o.filter(
-        (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
-    ).select(F.col("o_orderkey").alias("id"))
-    return mapathon_user_report(els, changesets, ids)
-
-
-def _q_propagate_relations(spark, sf_dir):
-    """J7 two-hop — relation location propagation from the first member
-    (reference advanced-queries.md:203-230): node members resolve directly;
-    way members resolve through the way's OWN propagated location (ways
-    first, then relations); empty-member relations stay NULL; a relation's
-    own non-NULL country wins (coalesce)."""
-    from insights_spark.ops.propagate import (
-        propagate_relation_locations, propagate_way_locations,
-    )
-
-    member_t = "array<struct<type:string,ref:bigint>>"
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    nodes = _points(cust, "c_custkey").select(
-        F.col("c_custkey").alias("id"),
-        F.lit("node").alias("type"),
-        F.lit(1).cast("long").alias("version"),
-        F.col("lat"), F.col("lon"),
-        F.concat(F.lit("N"), F.pmod(F.col("c_custkey"), F.lit(5)).cast("string"))
-        .alias("country"),
-        F.lit(None).cast("array<bigint>").alias("nds"),
-        F.lit(None).cast(member_t).alias("members"),
-    )
-    o = _t(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-    ways = o.select(
-        ok.alias("id"),
-        F.lit("way").alias("type"),
-        F.lit(1).cast("long").alias("version"),
-        F.lit(None).cast("double").alias("lat"),
-        F.lit(None).cast("double").alias("lon"),
-        F.when(F.pmod(ok, F.lit(7)) == 0, F.lit("OWN"))
-        .otherwise(F.lit(None).cast("string")).alias("country"),
-        F.array(F.col("o_custkey")).cast("array<bigint>").alias("nds"),
-        F.lit(None).cast(member_t).alias("members"),
-    )
-    p = _t(spark, sf_dir, "part")
-    pk = F.col("p_partkey")
-    rels = p.select(
-        pk.alias("id"),
-        F.lit("relation").alias("type"),
-        F.lit(1).cast("long").alias("version"),
-        F.lit(None).cast("double").alias("lat"),
-        F.lit(None).cast("double").alias("lon"),
-        F.when(F.pmod(pk, F.lit(11)) == 0, F.lit("ROWN"))
-        .otherwise(F.lit(None).cast("string")).alias("country"),
-        F.lit(None).cast("array<bigint>").alias("nds"),
-        F.when(
-            F.pmod(pk, F.lit(3)) == 0,
-            F.array(F.struct(
-                F.lit("node").alias("type"),
-                F.pmod(pk, F.lit(100)).cast("bigint").alias("ref"),
-            )),
-        )
-        .when(
-            F.pmod(pk, F.lit(3)) == 1,
-            F.array(F.struct(
-                F.lit("way").alias("type"),
-                F.pmod(pk, F.lit(200)).cast("bigint").alias("ref"),
-            )),
-        )
-        .otherwise(F.array().cast(member_t))
-        .alias("members"),
-    )
-    els = nodes.unionByName(ways).unionByName(rels)
-    out = propagate_relation_locations(propagate_way_locations(els))
-    return (
-        out.filter(F.col("type") == "relation")
-        .select("id", "lon", "lat", "country")
-    )
-
-
-def _q_hot_changesets(spark, sf_dir):
-    """J8/X6 — hot_changeset materialized view: '%hotosm%' filter, then
-    country by centroid-in-polygon (geo.bbox.hot_changesets_with_country).
-    Bbox widths (1.0, 0.25) keep centroids off the synthetic polygon edges;
-    centroid = (min+max)/2 written identically in the oracle so both engines
-    evaluate the same IEEE expression tree."""
-    from insights_spark.geo.bbox import hot_changesets_with_country
-
-    o = _t(spark, sf_dir, "orders")
-    return hot_changesets_with_country(
-        _hot_cs_input(o), _boundary_rows()).select("id", "country")
-
-
-def _hot_cs_input(o, batch: bool = False):
-    """Changeset fixture for the hot_changesets family. ``batch=False`` is
-    the v1 table (hot iff id≡0 mod 3); ``batch=True`` derives the v2
-    refresh batch: bboxes shift north 0.125° and the comment is re-derived
-    (hot iff id even) — so vs the stored MV the batch contains updates
-    (id≡0 mod 21, even), inserts (even, ≢0 mod 3) and deletes (odd, ≡0
-    mod 3). All constants are exact dyadics; the float expression trees
-    are written identically in the oracle."""
-    ok = F.col("o_orderkey")
-    min_lat = F.pmod(ok * 104729, F.lit(160000)) / 1000.0 - 80.0
-    if batch:
-        min_lat = min_lat + 0.125
-        hot = F.pmod(ok, F.lit(2)) == 0
-    else:
-        hot = F.pmod(ok, F.lit(3)) == 0
-    return (
-        o.select(
-            ok.alias("id"),
-            F.create_map(
-                F.lit("comment"),
-                F.when(hot, F.lit("#hotosm-project fix"))
-                .otherwise(F.lit("routine edit")),
-            ).alias("tags"),
-            (F.pmod(ok * 7919, F.lit(340000)) / 1000.0 - 170.0).alias("min_lon"),
-            min_lat.alias("min_lat"),
-        )
-        .withColumn("max_lon", F.col("min_lon") + 1.0)
-        .withColumn("max_lat", F.col("min_lat") + 0.25)
-    )
-
-
-def _q_hot_changesets_inc(spark, sf_dir):
-    """X6 incremental (reference refresh = full recompute,
-    advanced-queries.md:235-261) — stored MV built from the v1 changesets,
-    then a refresh batch (ids ≡0 mod 7, v2: bbox shifted, comment
-    re-derived) applied via geo.bbox.hot_changesets_incremental:
-    delete-then-insert on touched ids, PIP on the batch only. The oracle is
-    the FULL recompute over the effective post-batch table, pinning the
-    merge theorem incremental == full."""
-    from insights_spark.geo.bbox import (hot_changesets_incremental,
-                                         hot_changesets_with_country)
-
-    o = _t(spark, sf_dir, "orders")
-    stored = hot_changesets_with_country(
-        _hot_cs_input(o), _boundary_rows()).select("id", "country")
-    batch = _hot_cs_input(o, batch=True).filter(
-        F.pmod(F.col("id"), F.lit(7)) == 0)
-    return hot_changesets_incremental(stored, batch, _boundary_rows())
-
-
-def _snapshot_table_fixture(spark, sf_dir, tag):
-    """Build a SnapshotTable (runtime/tablefmt.py) from `documents` with a
-    3-commit history — the catalog-lane fixture shared by the tablefmt
-    queries. Commits: (1) append evens ts=100, (2) MERGE keep_last of the
-    mod-3 docs with n_chars+1000 ts=200 (updates evens∩mod3, inserts odd
-    mod3 — keep_first would give a DIFFERENT answer, so the oracle pins the
-    precedence rule), (3) overwrite with a 1-row tombstone ts=300 (so
-    time-travel reads must survive a logically-destroyed table)."""
-    import hashlib
-    import shutil
-
-    from insights_spark.runtime.tablefmt import SnapshotTable
-
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/spark_graft_tablefmt_{tag}_{digest}"
-    shutil.rmtree(path, ignore_errors=True)
-    t = SnapshotTable(spark, path)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    t.append(docs.filter(F.col("doc_id") % 2 == 0), ts=100)
-    t.merge(
-        docs.filter(F.col("doc_id") % 3 == 0)
-        .withColumn("n_chars", F.col("n_chars") + F.lit(1000)),
-        keys=["doc_id"], mode="keep_last", ts=200,
-    )
-    t.overwrite(
-        docs.filter(F.col("doc_id") == 0).limit(1), ts=300
-    )
-    return t
-
-
-def _q_table_merge_read(spark, sf_dir):
-    """Snapshot-table MERGE (runtime/tablefmt.py:SnapshotTable.merge) —
-    append evens, MERGE keep_last mod-3 updates, read snapshot 2: updated
-    evens∩mod3 carry +1000, odd mod3 inserted, other evens untouched. The
-    oracle is the equivalent relational expression over `documents`."""
-    t = _snapshot_table_fixture(spark, sf_dir, "merge")
-    return t.read(snapshot_id=2).select("doc_id", "source", "n_chars")
-
-
-def _q_table_time_travel(spark, sf_dir):
-    """Snapshot time travel (runtime/tablefmt.py:SnapshotTable.read):
-    as_of_ts=250 resolves the post-merge state even though snapshot 3
-    OVERWROTE the table — history survives replace commits because commits
-    only add files; expire_snapshots is the sole deletion path."""
-    t = _snapshot_table_fixture(spark, sf_dir, "tt")
-    assert t.current_snapshot_id() == 3  # the overwrite is live
-    return t.read(as_of_ts=250).select("doc_id", "source", "n_chars")
-
-
-def _q_pps_sample(spark, sf_dir):
-    """Weighted (PPS) corpus sampling (text/sample.py:pps_sample), n=97
-    grid points over char mass — integer-exact systematic sampling
-    (Madow 1949): DECIMAL(38,0) products, mod-only floor comparison (the
-    measured Spark DECIMAL-DIV wrap rules out quotients), prefix sums on
-    the shared two-phase distributed scan."""
-    from insights_spark.text.sample import pps_sample
-
-    return pps_sample(_t(spark, sf_dir, "documents"), 97)
-
-
-def _q_gapfill_weeks(spark, sf_dir):
-    """Gap-filled weekly rollup (ops/timeseries.py:gapfill_counts):
-    per-event_type weekly counts with EXPLICIT ZERO rows on the full
-    Monday-bucket spine — the time_bucket_gapfill shape; spine =
-    dimension-sized keys × sequence() explode, facts touched by ONE
-    decomposable rollup shuffle."""
-    from insights_spark.ops.timeseries import gapfill_counts
-
-    return gapfill_counts(_t(spark, sf_dir, "events"))
-
-
-def _q_ann_int8(spark, sf_dir):
-    """int8 code-space top-k (text/quant.py:int8_topk): search runs on
-    the quantized store without dequantizing — integer dot products
-    (zip_with+aggregate, JVM codegen, no UDF), queries broadcast, one
-    scan, k-bounded TakeOrdered state. dot ≤ 255²·dim is exact BIGINT
-    here and exact ≤2⁵³ DOUBLE in the oracle's list_dot_product."""
-    from insights_spark.text.quant import int8_topk, quantize_embeddings
-
-    codes = quantize_embeddings(_t(spark, sf_dir, "embeddings"))
-    return int8_topk(codes, query_ids=[0, 1, 2, 3], k=5)
-
-
-def _q_anomaly_weeks(spark, sf_dir):
-    """Volume-spike detection (ops/timeseries.py:anomaly_buckets) over a
-    deterministically planted burst — 9 extra copies of click's first
-    week (the pii_scrub plant-so-it's-non-vacuous rule): that bucket
-    exceeds 4× click's median and flags True, every other bucket
-    (including the zero-filled spine) stays False. Median = exact
-    interpolated percentile == quantile_cont."""
-    from insights_spark.ops.timeseries import anomaly_buckets
-
-    ev = _t(spark, sf_dir, "events").select("event_type", "ts").filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull())
-    clicks = ev.filter(F.col("event_type") == "click")
-    w0 = clicks.agg(F.date_trunc("week", F.min("ts")).alias("w0"))
-    burst = (
-        clicks.crossJoin(F.broadcast(w0))
-        .filter(F.date_trunc("week", F.col("ts")) == F.col("w0"))
-        .withColumn("_k", F.explode(F.sequence(F.lit(1), F.lit(9))))
-        .select("event_type", "ts")
-    )
-    return anomaly_buckets(ev.unionByName(burst), factor=4)
-
-
-def _q_bfs_hops(spark, sf_dir):
-    """Multi-source BFS hop distance (text/links.py:bfs_hop_distance),
-    max 3 hops from the doc_id≡0 (mod 97) seed set over the pagerank
-    fixture's deterministic 3-out graph — all-integer first-visit levels,
-    so the recursive-CTE oracle (UNION dedup bounds the walk on cycles)
-    matches exactly."""
-    from insights_spark.text.links import bfs_hop_distance
-
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    sources = docs.select(F.col("doc_id").alias("id")).filter(
-        F.pmod(F.col("id"), F.lit(97)) == 0)
-    return bfs_hop_distance(edges, sources, max_hops=3).select(
-        F.col("id").alias("doc_id"), "dist")
-
-
-def _q_sssp(spark, sf_dir):
-    """Bounded weighted SSSP (text/links.py:sssp_weighted): min total
-    edge weight within 4 edges from the doc_id≡0 (mod 97) seeds over the
-    shared 3-out graph, weight 1+(src+dst) mod 9 — frontier-pruned
-    Bellman–Ford supersteps (join + dst-keyed MIN pre-combine), all
-    integer, so the bounded-step path-enumeration oracle matches exactly."""
-    from insights_spark.text.links import sssp_weighted
-
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-        .withColumn(
-            "w", F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(9))
-        )
-    )
-    sources = docs.select(F.col("doc_id").alias("id")).filter(
-        F.pmod(F.col("id"), F.lit(97)) == 0)
-    return sssp_weighted(edges, sources, rounds=4).select(
-        F.col("id").alias("doc_id"), "dist")
-
-
-def _layout_qcell(level: int = 3) -> int:
-    """Level-`level` S2 cell of event_id=1's synthetic point — the
-    deterministic probe cell for the layout-scan query (same derivation
-    formula both engines)."""
-    import numpy as np
-
-    from insights_spark.geo.cells import s2_cell_id
-
-    lon = np.array([(1 * 7919 % 360000) / 1000.0 - 180.0])
-    lat = np.array([(1 * 104729 % 170000) / 1000.0 - 85.0])
-    return int(s2_cell_id(lon, lat, level)[0])
-
-
-def _q_spatial_layout_scan(spark, sf_dir):
-    """Space-filling-curve layout + pruned scan (runtime/layout.py):
-    events clustered on the level-14 Hilbert key, then ONE BETWEEN over
-    the level-3 probe cell's descendant interval — pushed to the parquet
-    scan, row groups pruned by footer stats. The oracle recomputes exact
-    level-3 cell membership via the unrolled Hilbert SQL, so the green
-    row pins the S2 interval property (BETWEEN on level-14 keys ==
-    level-3 containment) across the write/read roundtrip."""
-    import hashlib
-    import shutil
-
-    from insights_spark.runtime.layout import cluster_spatial, spatial_scan
-
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/spark_graft_layout_{digest}"
-    shutil.rmtree(path, ignore_errors=True)
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    cluster_spatial(pts, path, level=14, partitions=8)
-    return spatial_scan(spark, path, _layout_qcell()).select("event_id")
-
-
-def _q_tasks_per_user(spark, sf_dir):
-    """J10/U1 — tasks_per_user modeled on a local task_history fixture:
-    project/window/action filter → per-user count (ops.users.tasks_per_user)."""
-    from insights_spark.ops.users import tasks_per_user
-
-    th = _t(spark, sf_dir, "events").select(
-        F.col("user_id"),
-        F.pmod(F.col("event_id"), F.lit(20)).cast("int").alias("project_id"),
-        F.col("ts").alias("action_date"),
-        F.col("event_type").alias("action_text"),
-    )
-    return tasks_per_user(
-        th, [1, 2, 3], "2024-01-01 00:00:00", "2024-01-15 00:00:00", "click"
-    )
-
-
-def _q_way_meters(spark, sf_dir):
-    """A2/U3/F15 — construct_way_geometry (explode nds → as-of node join →
-    ordered collect) + geodesic length. Vincenty itself has no ANSI-SQL
-    equivalent, so the oracle checks what SQL CAN express exactly: the
-    resolved vertex count per way, plus a haversine BAND on the geodesic
-    length — an independent Spark-column great-circle length must bracket
-    the Vincenty meters within ±1% (WGS84 vs mean-radius sphere differ by
-    at most ~0.56%). The oracle emits the same row set with len_ok=TRUE, so
-    a regression that returns garbage meters (or NaN) flips len_ok and
-    fails the hash. Exact arc values are pinned by pytest against known
-    WGS84 distances (tests/test_geo.py)."""
-    from insights_spark.geo.length import construct_way_geometry, linestring_length_udf
-
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    nodes = _points(cust, "c_custkey").select(
-        F.col("c_custkey").alias("id"),
-        F.lit(1).cast("long").alias("version"),
-        F.lit("1990-01-01 00:00:00").cast("timestamp_ntz").alias("timestamp"),
-        "lat",
-        "lon",
-    )
-    o = _t(spark, sf_dir, "orders")
-    ways = o.select(
-        F.col("o_orderkey").alias("id"),
-        F.lit(1).cast("long").alias("version"),
-        F.col("o_orderdate").alias("timestamp"),
-        F.array(
-            F.col("o_custkey"),
-            F.pmod(F.col("o_custkey") * 31, F.lit(100)),
-            F.pmod(F.col("o_custkey") * 7, F.lit(100)),
-        ).alias("nds"),
-    )
-    geom = construct_way_geometry(ways, nodes)
-
-    R = 6371008.8  # mean-radius sphere (same R as the Vincenty fallback)
-    def _hav_seg(p1, p2):
-        phi1, phi2 = F.radians(p1[1]), F.radians(p2[1])
-        dphi, dlam = phi2 - phi1, F.radians(p2[0] - p1[0])
-        h = F.sin(dphi / 2) ** 2 + F.cos(phi1) * F.cos(phi2) * F.sin(dlam / 2) ** 2
-        return 2 * R * F.asin(F.sqrt(h))
-
-    c = F.col("coords")
-    hav = F.when(
-        F.size(c) >= 2,
-        F.aggregate(
-            F.transform(
-                F.sequence(F.lit(1), F.size(c) - 1),
-                lambda i: _hav_seg(F.element_at(c, i), F.element_at(c, i + 1)),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-    ).otherwise(F.lit(0.0))
-    vinc = linestring_length_udf()(c)
-    return geom.select(
-        "way_id",
-        "way_version",
-        F.size(c).alias("n_pts"),
-        F.when(hav == 0.0, vinc == 0.0)
-        .otherwise((vinc >= hav * 0.99) & (vinc <= hav * 1.01))
-        .alias("len_ok"),
-    )
-
-
-def _q_moran_i(spark, sf_dir):
-    """Global Moran's I spatial autocorrelation over the hex res-1 rollup
-    (geo/smooth.py:moran_i_exact) — exact integer quadruple
-    (n_cells, w_pairs, num, den); the oracle replays the encode, the
-    6-direction BIGINT neighbor join, and the deviation algebra with
-    HUGEINT products. Res 1 for the same fixture reason as hex_smooth:
-    finer grids make every cell a singleton with no occupied neighbors."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.smooth import moran_i_exact
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return moran_i_exact(counts)
-
-
-def _q_getis_ord(spark, sf_dir):
-    """Per-cell Getis-Ord G_i* hotspot flags (geo/smooth.py:
-    getis_ord_exact) — the LOCAL sibling of moran_i: which hex cells are
-    significantly hot at z > 1.96, decided by an exact integer
-    cross-multiplied significance test (no sqrt, no floats). Cells are
-    weighted by floor(value) — floor is exact in both engines, and raw
-    counts on this hash-spread fixture are TOO uniform to light any cell
-    (measured: 0/1721 hot) while the value surface yields 46/1721 ≈ the
-    2.5% a z>1.96 tail should pass, keeping the flag non-vacuous (pii
-    precedent). Same res-1 fixture reasoning as hex_smooth/moran_i."""
-    from insights_spark.geo import cells
-    from insights_spark.geo.smooth import getis_ord_exact
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id", "value"),
-                  "event_id")
-    counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
-    ).agg(F.sum(F.floor(F.col("value"))).cast("long").alias("n"))
-    return getis_ord_exact(counts)
-
-
-def _q_lm_perplexity(spark, sf_dir):
-    """CCNet-style LM quality filter (text/lm.py): a bigram model trained
-    on the trusted slice doc_id % 4 == 0 scores EVERY document in integer
-    milli-bits per bigram (floor-log2-quantized Laplace surprisal — no
-    libm, so the oracle matches bit-for-bit). keep_below 24450 splits the
-    sf0.01 fixture non-vacuously (measured: train docs average 24302,
-    held-out 24484; ~half the corpus on each side of the cut)."""
-    from insights_spark.text.lm import bigram_lm_scores
-
-    docs = _t(spark, sf_dir, "documents")
-    return bigram_lm_scores(
-        docs, F.expr("doc_id % 4 = 0"), keep_below_milli=24450
-    )
-
-
-def _q_path_tree(spark, sf_dir):
-    """URL path-hierarchy rollup (text/urls.py path_tree): planted
-    hierarchical URLs (host = doc_id%5, 0-2 directory levels by doc_id%3,
-    uppercase hosts + query/fragment decorations on every 7th doc to
-    exercise the parser) — Spark parses the REAL url strings while the
-    oracle derives the expected tree from the planted structure directly:
-    an independent ground truth, the host_stats precedent."""
-    from insights_spark.text.urls import path_tree
-
-    d = _t(spark, sf_dir, "documents")
-    h = F.pmod(F.col("doc_id"), F.lit(5)).cast("string")
-    d1 = F.pmod(F.col("doc_id") / F.lit(5), F.lit(4)).cast("int").cast("string")
-    d2 = F.pmod(F.col("doc_id") / F.lit(20), F.lit(3)).cast("int").cast("string")
-    nd = F.pmod(F.col("doc_id"), F.lit(3))
-    url = F.concat(
-        F.lit("https://H"), h, F.lit(".TEST/"),
-        F.when(nd >= 1, F.concat(F.lit("d"), d1, F.lit("/"))).otherwise(F.lit("")),
-        F.when(nd == 2, F.concat(F.lit("e"), d2, F.lit("/"))).otherwise(F.lit("")),
-        F.lit("p"), F.col("doc_id").cast("string"),
-        F.when(F.pmod(F.col("doc_id"), F.lit(7)) == 0,
-               F.lit("?utm=x#top")).otherwise(F.lit("")),
-    )
-    return path_tree(d.select(url.alias("url")))
-
-
-def _q_host_stats(spark, sf_dir):
-    """Host-level crawl rollup (text/urls.py:host_stats). Planted URLs
-    spread docs over 5 hosts with a host-dependent mirror factor: host h
-    gets page ids doc_id DIV (5·(h+1)), so dup_per_mille climbs ≈ 0 / 500
-    / 660 / 750 / 800 across hosts — the keep gate (≤ 600, ≥ 50 docs)
-    splits them 2-keep / 3-drop, non-vacuous both ways. Every 10th doc
-    wears a MESSY spelling (case-variant host, default port, fragment):
-    Spark runs the real canonicalizer on it while the oracle derives the
-    clean form from the planted structure — an independent ground truth,
-    stronger than replaying the same regexes."""
-    from insights_spark.text.urls import host_stats
-
-    h = F.pmod(F.col("doc_id"), F.lit(5))
-    page = F.expr("doc_id DIV (5 * (doc_id % 5 + 1))").cast("string")
-    clean = F.concat(F.lit("https://www.site"), h.cast("string"),
-                     F.lit(".example/p/"), page)
-    messy = F.concat(F.lit("HTTPS://www.Site"), h.cast("string"),
-                     F.lit(".Example:443/p/"), page, F.lit("#ref"))
-    pages = _t(spark, sf_dir, "documents").select(
-        F.when(F.pmod(F.col("doc_id"), F.lit(10)) == 9, messy)
-        .otherwise(clean).alias("url"),
-        F.col("n_chars"),
-    )
-    return host_stats(pages, bytes_col="n_chars", min_docs=50,
-                      max_dup_per_mille=600)
-
-
-def _q_shard_assign(spark, sf_dir):
-    """Equal-byte output-shard layout (text/pack.py:shard_layout): docs in
-    doc_id order cut into ~4 KiB shards by exclusive-prefix-sum offset —
-    the two-phase distributed scan, never a single-partition window. The
-    oracle is the window-function prefix sum, which DuckDB can afford at
-    oracle scale."""
-    from insights_spark.text.pack import shard_layout
-
-    return shard_layout(_t(spark, sf_dir, "documents"), target_bytes=4096)
-
-
-def _q_pagerank(spark, sf_dir):
-    """Fixed-point int64 PageRank (text/links.py), 5 supersteps over a
-    deterministic 3-out link graph on the documents table (dst =
-    (doc_id·7919 + 104729·k) mod n, self-links dropped). Integer
-    arithmetic end-to-end, so the unrolled-CTE oracle matches bit-for-bit
-    — the determinism a float PageRank cannot offer under shuffle."""
-    from insights_spark.text.links import pagerank_fixed_point
-
-    docs = _t(spark, sf_dir, "documents")
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    pr = pagerank_fixed_point(nodes, edges, iters=5)
-    return pr.select(F.col("id").alias("doc_id"),
-                     F.col("score").alias("score_fp"))
-
-
-def _q_quad_compact(spark, sf_dir):
-    """Quadtree compaction of the occupied z7 tile set, two levels
-    (geo/tiles.py:compact_tile_cover). z7 tiles are ~2.8° — at the
-    fixture's ~2.57° point lattice sibling groups complete and compaction
-    genuinely fires (finer z: isolated tiles, vacuous). Integer-only key
-    arithmetic; the oracle unrolls both levels."""
-    from insights_spark.geo.tiles import compact_tile_cover, with_tile
-
-    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    t7 = (
-        with_tile(pts, 7)
-        .select("z", F.col("x").cast("long").alias("x"),
-                F.col("y").cast("long").alias("y"))
-        .distinct()
-    )
-    return compact_tile_cover(t7, levels=2)
-
-
-def _q_cooccur(spark, sf_dir):
-    """Windowed co-occurrence counts over the heavy vocabulary
-    (text/freq.py:cooccurrence_counts) — exact integer pair counts, the
-    PMI/GloVe association primitive; oracle zips unnest with
-    generate_subscripts (positions are used only as differences, so the
-    0- vs 1-base difference cancels)."""
-    from insights_spark.text.freq import cooccurrence_counts
-
-    return cooccurrence_counts(
-        _t(spark, sf_dir, "documents"), window=3, min_count=50)
-
-
-def _q_source_drift(spark, sf_dir):
-    """Per-source vocabulary drift as exact χ² contributions
-    (text/freq.py:source_drift_chi2): (source × heavy-term) grid with
-    obs=0 cells included, num/den as DECIMAL(38,0) — rational arithmetic
-    instead of KL's libm-dependent logarithm."""
-    from insights_spark.text.freq import source_drift_chi2
-
-    return source_drift_chi2(_t(spark, sf_dir, "documents"), min_count=50)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _q_flagship_tile_density(spark, SF_DEFAULT)
+    build = next(q.build for q in REGISTRY if q.name == "flagship_tile_density")
+    return build(spark, SF_DEFAULT)
 
 
-def _cold(fn: Callable[[SparkSession, str], DataFrame]):
+def _cold(fn: Builder) -> Builder:
     """Bench-isolation guard (r6): drop the session's SQL cache before
     building a registered query.
 
@@ -3537,7 +69,6 @@ def _cold(fn: Callable[[SparkSession, str], DataFrame]):
     cache at build time guarantees every invocation computes from the
     parquet inputs; intra-query persists still work (they are registered
     after the clear, during this invocation's own build/execution)."""
-    import functools
 
     @functools.wraps(fn)
     def _wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3547,3766 +78,11 @@ def _cold(fn: Callable[[SparkSession, str], DataFrame]):
     return _wrapped
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-    # entries. Cumulatively across CORRECTNESS_r01-r04 every registered
-    # query EXCEPT eleven has a driver-green row (VERDICT r4 "What's
-    # missing" #1) — those eleven lead this round, followed by queries NEW
-    # in round 5 (sections a+b = 47 entries, all inside the 50-window), so
-    # that by r05 the cumulative driver coverage is 111/111 plus every
-    # round-5 addition; the window's last 3 slots re-green (c) entries.
-    reg = {
-        # (a) registered late in r4, never through the driver's own gate
-        "zonal_stats": _q_zonal_stats,
-        "knn_join": _q_knn_join,
-        "tile_diff": _q_tile_diff,
-        "cluster_savings": _q_cluster_savings,
-        "token_lorenz": _q_token_lorenz,
-        "top_terms_per_source": _q_top_terms_per_source,
-        "doc_geotag": _q_doc_geotag,
-        "fuzzy_join": _q_fuzzy_join,
-        "quantize": _q_quantize,
-        "trending_cells": _q_trending_cells,
-        "frontier_cells": _q_frontier_cells,
-        # (b) new in round 5 (newest first — session-5 additions lead)
-        "kcore": _q_kcore,
-        "hybrid_search": _q_hybrid_search,
-        "regional_revenue": _q_regional_revenue,
-        "normalize_text": _q_normalize_text,
-        "theil_sen": _q_theil_sen,
-        "mann_kendall": _q_mann_kendall,
-        "sorted_neighborhood": _q_sorted_neighborhood,
-        "hits": _q_hits,
-        "od_flows": _q_od_flows,
-        "communities": _q_communities,
-        "cusum": _q_cusum,
-        "concurrency": _q_concurrency,
-        "kmeans": _q_kmeans,
-        "prefix_jaccard": _q_prefix_jaccard,
-        "sssp": _q_sssp,
-        "semivariogram": _q_semivariogram,
-        "idw_fill": _q_idw_fill,
-        "getis_ord": _q_getis_ord,
-        "lm_perplexity": _q_lm_perplexity,
-        "host_stats": _q_host_stats,
-        "shard_assign": _q_shard_assign,
-        "hot_changesets_inc": _q_hot_changesets_inc,
-        "pagerank": _q_pagerank,
-        "moran_i": _q_moran_i,
-        "quad_compact": _q_quad_compact,
-        "source_drift": _q_source_drift,
-        "cooccur": _q_cooccur,
-        "table_merge_read": _q_table_merge_read,
-        "table_time_travel": _q_table_time_travel,
-        "pps_sample": _q_pps_sample,
-        "gapfill_weeks": _q_gapfill_weeks,
-        "spatial_layout_scan": _q_spatial_layout_scan,
-        "bfs_hops": _q_bfs_hops,
-        "anomaly_weeks": _q_anomaly_weeks,
-        "ann_int8": _q_ann_int8,
-        "phash_pairs": _q_phash_pairs,
-        "scd2_intervals": _q_scd2,
-        "funnel_steps": _q_funnel,
-        "ripley_k": _q_ripley_k,
-        "nn_distance_hist": _q_nn_distance_hist,
-        "region_shape": _q_region_shape,
-        "kn_continuation": _q_kn_continuation,
-        "freq_of_freqs": _q_freq_of_freqs,
-        "winsorized_stats": _q_winsorized_stats,
-        "covered_time": _q_covered_time,
-        "path_tree": _q_path_tree,
-        "column_profile": _q_column_profile,
-        "semantic_prune": _q_semantic_prune,
-        "cohort_retention": _q_cohort_retention,
-        "scd2_merge": _q_scd2_merge,
-        "sketch_rollup": _q_sketch_rollup,
-        "geofence_dwell": _q_geofence_dwell,
-        "cluster_safe_split": _q_cluster_safe_split,
-        "curriculum_order": _q_curriculum,
-        "equi_depth_hist": _q_equi_depth_hist,
-        "snapshot_diff": _q_snapshot_diff,
-        "check_constraints": _q_check_constraints,
-        "score_calibration": _q_score_calibration,
-        "lang_margin": _q_lang_margin,
-        "scd2_lookup": _q_scd2_lookup,
-        "triangles": _q_triangles,
-        "event_transitions": _q_event_transitions,
-        "rolling_active": _q_rolling_active,
-        "cube_rollup": _q_cube_rollup,
-        "pivot_counts": _q_pivot_counts,
-        "event_gaps": _q_event_gaps,
-        "unpivot_counts": _q_unpivot_counts,
-        # (c) driver-green in earlier rounds (re-greened as window filler)
-        "ann_ivf": _q_ann_ivf,
-        "audio_features": _q_audio_features,
-        "conditional_battery_salted": _q_conditional_battery_salted,
-        "country_insights_tm": _q_country_insights_tm,
-        "first_last_used": _q_first_last_used,
-        "geohash_cells": _q_geohash_cells,
-        "multimodal_features": _q_multimodal,
-        "way_meters": _q_way_meters,
-        "campaign_rollup": _q_campaign_rollup,
-        "country_insights": _q_country_insights,
-        "explode_map": _q_explode_map,
-        "hex_cells": _q_hex_cells,
-        "hex_cover": _q_hex_cover,
-        "hot_changesets": _q_hot_changesets,
-        "knn_cell_local": _q_knn_cell_local,
-        "mapathon_report": _q_mapathon_report,
-        "mapathon_user_report": _q_mapathon_user_report,
-        "minhash_lsh_pairs": _q_minhash_lsh,
-        "propagate_relations": _q_propagate_relations,
-        "propagate_ways": _q_propagate_ways,
-        "s2_cells": _q_s2_cells,
-        "simhash_pairs": _q_simhash_pairs,
-        "tasks_per_user": _q_tasks_per_user,
-        "within_distance": _q_within_distance,
-        "cos_near_dups_lsh": _q_cos_near_dups_lsh,
-        "source_cap_stream_twin": _q_source_cap_stream_twin,
-        "decontam": _q_decontam,
-        "frame_schedule": _q_frame_schedule,
-        "rep_filters": _q_rep_filters,
-        "boilerplate": _q_boilerplate,
-        "pii_scrub": _q_pii_scrub,
-        "budget_select": _q_budget_select,
-        "classifier_score": _q_classifier_score,
-        "dedup_clusters": _q_dedup_clusters,
-        "corpus_shuffle": _q_corpus_shuffle,
-        "minhash_vs_index": _q_minhash_vs_index,
-        "hex_smooth": _q_hex_smooth,
-        "containment": _q_containment,
-        "bm25": _q_bm25,
-        "cell_clusters": _q_cell_clusters,
-        "url_dedup": _q_url_dedup,
-        "passage_dedup": _q_passage_dedup,
-        "heavy_hitters": _q_heavy_hitters,
-        "novelty": _q_novelty,
-        "st_join": _q_st_join,
-        "directional_hull": _q_directional_hull,
-        "move_rose": _q_move_rose,
-        "simplify_tracks": _q_simplify_tracks,
-        "user_tracks": _q_user_tracks,
-        "home_cells": _q_home_cells,
-        "mix_sources": _q_mix_sources,
-        "sliding_windows": _q_sliding_windows,
-        "tile_pyramid_inc": _q_tile_pyramid_inc,
-        # (d) banked driver-green rows in CORRECTNESS_r03
-        "flagship_tile_density": _q_flagship_tile_density,
-        "conditional_battery": _q_conditional_battery,
-        "semi_join": _q_semi_join,
-        "anti_join": _q_anti_join,
-        "latest_event": _q_latest_event,
-        "latest_event_asof": _q_latest_event_asof,
-        "scalar_pick": _q_scalar_pick,
-        "tokenize": _q_tokenize,
-        "pattern_filter": _q_pattern_filter,
-        "json_props": _q_json_props,
-        "month_rollup": _q_month_rollup,
-        "friday_weeks": _q_friday_weeks,
-        "editors_concat": _q_editors_concat,
-        "knn": _q_knn,
-        "pip_countries": _q_pip_countries,
-        "pip_via_cells": _q_pip_via_cells,
-        "tile_pyramid": _q_tile_pyramid,
-        "tile_vectorize": _q_tile_vectorize,
-        "tile_regions": _q_tile_regions,
-        "tile_regions_star": _q_tile_regions_star,
-        "grid_cells": _q_grid_cells,
-        "envelope": _q_envelope,
-        "exact_dedup": _q_exact_dedup,
-        "token_stats": _q_token_stats,
-        "quality": _q_quality,
-        "lang_id": _q_lang_id,
-        "cdc_chunks": _q_cdc_chunks,
-        "cdc_containment": _q_cdc_containment,
-        "fingerprint": _q_fingerprint,
-        "minhash": _q_minhash,
-        "ngram_jaccard": _q_ngram_jaccard,
-        "ann_topk": _q_ann_topk,
-        "cos_near_dups": _q_cos_near_dups,
-        "clean_corpus": _q_clean_corpus,
-        "prepare_corpus": _q_prepare_corpus,
-        "pack_sequences": _q_pack_sequences,
-        "term_freq": _q_term_freq,
-        "lang_quality_median": _q_lang_quality_median,
-        "union_distinct": _q_union_distinct,
-        "sessionize": _q_sessionize,
-        "asof_join": _q_asof_join,
-        "interval_join": _q_interval_join,
-        "rolling_activity": _q_rolling_activity,
-        "semi_join_salted": _q_semi_join_salted,
-        "train_split": _q_train_split,
-        "inverted_index": _q_inverted_index,
-        "approx_distinct": _q_approx_distinct,
-        "source_cap": _q_source_cap,
-        "stratified_sample": _q_stratified_sample,
-        "approx_quantile": _q_approx_quantile,
-        "topk": _q_topk,
-        "bbox_area": _q_bbox_area,
-    }
-    return {name: _cold(fn) for name, fn in reg.items()}
-
-
-# ---------------------------------------------------------------------------
-# oracles
-# ---------------------------------------------------------------------------
-
-_EV_PTS = f"SELECT event_id, event_type, {_POINTS_SQL.format(k='event_id')} FROM events"
-_CUST_PTS = f"SELECT c_custkey, {_POINTS_SQL.format(k='c_custkey')} FROM customer"
-
-_TILE_XY = """
-    greatest(0, least(CAST(floor((lon + 180.0) / 360.0 * {n}.0) AS INT), {nm1})) AS x,
-    greatest(0, least(CAST(floor((1.0 - ln(tan(radians(greatest(-85.05112878,
-        least(lat, 85.05112878)))) + 1.0 / cos(radians(greatest(-85.05112878,
-        least(lat, 85.05112878))))) / pi()) / 2.0 * {n}.0) AS INT), {nm1})) AS y
-"""
-
-_POLY_HASH = (
-    "list_reduce(list_prepend(7::BIGINT, list_transform(string_split({s}, ''), "
-    "c -> ascii(c)::BIGINT)), (a, b) -> (a * 31 + b) % 1000000007)"
-)
-
-_TOKENS = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '')"
-)
-
-
-def _hex_cells_chain_sql(res: int, src: str | None = None,
-                         carry: str = "event_id") -> str:
-    """CTE chain ``pts → … → hexed`` replicating geo.cells' axial hex
-    encode at ``res`` — the bit-exact SQL twin of
-    ``cells.hex_udf(res, use_h3=False)``. ``src`` is the pts SELECT
-    (defaults to the derived event points), ``carry`` the key column(s)
-    threaded through to ``hexed(carry…, cell)``. Constants come from the
-    kernel itself via repr round-trip."""
-    from insights_spark.geo import cells as _cells
-
-    c1 = repr(_cells._SQRT3 / 3.0)
-    c2 = repr(2.0 / 3.0)
-    size = repr(_cells.hex_edge_deg(res))
-    return f"""pts AS ({src or _EV_PTS}),
-        hx AS (SELECT {carry},
-                      ({c1} * lon - lat / 3.0) / {size} AS qf,
-                      ({c2} * lat) / {size} AS rf
-               FROM pts),
-        cr AS (SELECT {carry}, qf, rf,
-                      floor(qf + 0.5) AS rx0,
-                      floor(-qf - rf + 0.5) AS ry0,
-                      floor(rf + 0.5) AS rz0
-               FROM hx),
-        fx AS (SELECT {carry}, rx0, ry0, rz0,
-                      abs(rx0 - qf) AS dx,
-                      abs(ry0 - (-qf - rf)) AS dy,
-                      abs(rz0 - rf) AS dz
-               FROM cr),
-        qr AS (SELECT {carry},
-                      CAST(CASE WHEN dx > dy AND dx > dz THEN -ry0 - rz0
-                           ELSE rx0 END AS BIGINT) AS q,
-                      CAST(CASE WHEN NOT (dx > dy AND dx > dz) AND dz > dy
-                           THEN -rx0 - ry0 ELSE rz0 END AS BIGINT) AS r
-               FROM fx),
-        hexed AS (SELECT {carry},
-                         {res} * 72057594037927936
-                       + (q + 67108864) * 268435456
-                       + (r + 67108864) AS cell
-                  FROM qr)"""
-
-
-def _hex_cnts_sql(res: int) -> str:
-    """``pts → … → cnts``: the hex encode chain plus the per-cell count
-    (shared by the hex_smooth and cell_clusters oracles)."""
-    return f"""{_hex_cells_chain_sql(res)},
-        cnts AS (SELECT cell, CAST(count(*) AS BIGINT) AS n
-                 FROM hexed GROUP BY 1)"""
-
-def _kmeans_sql(k: int = 8, iters: int = 3, scale: int = 1024,
-                d: int = 64) -> str:
-    """Unrolled integer Lloyd k-means: the same floor-quantize /
-    argmin-(dist, cid) / floor-mean-adjusted-numerator recurrence as
-    text/simsearch.py:kmeans_lloyd_int. The power-of-two scale makes the
-    quantization exact in both engines; ``(s - ((s % m + m) % m)) // m``
-    hits an exact multiple so DuckDB's truncating ``//`` equals Spark's
-    truncating ``div`` equals floor, negative sums included."""
-    dist = (f"CAST(list_aggregate(list_transform(range(1, {d + 1}), "
-            f"i -> (q.q[i] - c.cv[i]) * (q.q[i] - c.cv[i])), 'sum') "
-            f"AS BIGINT)")
-    parts = [f"""
-        q AS (SELECT vec_id AS id,
-                     list_transform(embedding, x ->
-                       CAST(floor(CAST(x AS DOUBLE) * {scale}.0) AS BIGINT))
-                       AS q
-              FROM embeddings),
-        c0 AS (SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT)
-                      AS cid, q AS cv
-               FROM q ORDER BY id LIMIT {k})"""]
-    for t in range(iters):
-        parts.append(f"""
-        d{t} AS (SELECT q.id, q.q, c.cid, {dist} AS dist
-                 FROM q CROSS JOIN c{t} c),
-        a{t} AS (SELECT id, q, cid, dist FROM (
-                   SELECT *, row_number() OVER (PARTITION BY id
-                            ORDER BY dist, cid) AS rn FROM d{t})
-                 WHERE rn = 1)""")
-        if t < iters - 1:
-            parts.append(f"""
-        u{t} AS (SELECT cid, pos, (s - ((s % m + m) % m)) // m AS c FROM (
-                   SELECT cid, u.i AS pos, CAST(sum(q[u.i]) AS BIGINT) AS s,
-                          CAST(count(*) AS BIGINT) AS m
-                   FROM a{t} CROSS JOIN
-                        (SELECT unnest(range(1, {d + 1})) AS i) u
-                   GROUP BY 1, 2)),
-        c{t + 1} AS (SELECT c{t}.cid, coalesce(n.cv, c{t}.cv) AS cv
-                     FROM c{t} LEFT JOIN
-                          (SELECT cid, list(c ORDER BY pos) AS cv
-                           FROM u{t} GROUP BY cid) n USING (cid))""")
-    last = iters - 1
-    return f"""
-        WITH {','.join(parts)}
-        SELECT r.cluster, r.n, r.inertia, c.cv AS centroid
-        FROM (SELECT cid AS cluster, CAST(count(*) AS BIGINT) AS n,
-                     CAST(sum(dist) AS BIGINT) AS inertia
-              FROM a{last} GROUP BY 1) r
-        JOIN c{last} c ON c.cid = r.cluster
-    """
-
-
-def _dp_sql(eps_milli: int = 20000, depth: int = 4) -> str:
-    """Unrolled depth-capped Douglas-Peucker: the same argmax-and-split
-    recurrence as geo.track.simplify_tracks, one SQL stage per level
-    (kmeans-unroll discipline). Integer millidegree coordinates come
-    straight from the key hash (no float round-trip); cross-products are
-    HUGEINT so the squared deviation (~1e23) never overflows; the
-    argmax tie-break (score DESC, idx ASC) and the strict > gate match
-    the kernel exactly. Ordering is (epoch-SECONDS, event_id) — the same
-    second-truncated key the Spark side sorts on."""
-    e2 = int(eps_milli) * int(eps_milli)
-    parts = [f"""
-        pts AS (SELECT user_id AS u, ts, event_id,
-                       mod(event_id * 7919, 360000) - 180000 AS x,
-                       mod(event_id * 104729, 170000) - 85000 AS y,
-                       {_POINTS_SQL.format(k='event_id')}
-                FROM events),
-        ord0 AS (SELECT u,
-                        row_number() OVER (
-                            PARTITION BY u
-                            ORDER BY epoch_us(ts) // 1000000, event_id
-                        ) - 1 AS idx,
-                        x, y, lon, lat
-                 FROM pts),
-        ends AS (SELECT u, max(idx) AS last FROM ord0 GROUP BY u),
-        seg0 AS (SELECT u, 0 AS i, last AS j FROM ends WHERE last >= 2)"""]
-    for lv in range(1, depth + 1):
-        parts.append(f"""
-        cand{lv} AS (
-            SELECT s.u, s.i, s.j, p.idx,
-                   CASE WHEN b.x = a.x AND b.y = a.y
-                        THEN CAST(p.x - a.x AS HUGEINT) * (p.x - a.x)
-                             + CAST(p.y - a.y AS HUGEINT) * (p.y - a.y)
-                        ELSE (CAST(b.x - a.x AS HUGEINT) * (p.y - a.y)
-                              - CAST(b.y - a.y AS HUGEINT) * (p.x - a.x))
-                             * (CAST(b.x - a.x AS HUGEINT) * (p.y - a.y)
-                                - CAST(b.y - a.y AS HUGEINT) * (p.x - a.x))
-                   END AS score,
-                   CASE WHEN b.x = a.x AND b.y = a.y
-                        THEN CAST({e2} AS HUGEINT)
-                        ELSE CAST({e2} AS HUGEINT)
-                             * (CAST(b.x - a.x AS HUGEINT) * (b.x - a.x)
-                                + CAST(b.y - a.y AS HUGEINT) * (b.y - a.y))
-                   END AS thr
-            FROM seg{lv - 1} s
-            JOIN ord0 p ON p.u = s.u AND p.idx > s.i AND p.idx < s.j
-            JOIN ord0 a ON a.u = s.u AND a.idx = s.i
-            JOIN ord0 b ON b.u = s.u AND b.idx = s.j),
-        split{lv} AS (
-            SELECT u, i, j, idx FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY u, i, j ORDER BY score DESC, idx ASC) AS rn
-                FROM cand{lv})
-            WHERE rn = 1 AND score > thr),
-        seg{lv} AS (SELECT u, i, idx AS j FROM split{lv}
-                    UNION ALL
-                    SELECT u, idx, j FROM split{lv})""")
-    kept = ["SELECT u, 0 AS idx FROM ends",
-            "SELECT u, last AS idx FROM ends"] + [
-        f"SELECT u, idx FROM split{lv}" for lv in range(1, depth + 1)]
-    return (
-        "WITH " + ",".join(parts)
-        + ", kept AS (" + " UNION ".join(kept) + ")"
-        + """
-        SELECT o.u AS user_id, CAST(o.idx AS INT) AS idx, o.lon, o.lat
-        FROM ord0 o JOIN kept k ON k.u = o.u AND k.idx = o.idx"""
-    )
-
-
-
-def _kcore_sql(k: int = 3, rounds: int = 6) -> str:
-    """Unrolled R-round k-core peel over the shared symmetrized 3-out doc
-    graph: d_t = degrees induced by alive_t, alive_{t+1} = {d_t >= k},
-    output = final d where >= k — same recurrence as
-    text/links.py:kcore_peel."""
-    parts = ["""
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        e0 AS (SELECT src, dst FROM (
-                 SELECT doc_id AS src,
-                        mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                 FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-               WHERE dst <> src),
-        e AS (SELECT src, dst FROM e0
-              UNION SELECT dst, src FROM e0),
-        a0 AS (SELECT DISTINCT src AS id FROM e)"""]
-    for t in range(rounds):
-        parts.append(f"""
-        d{t} AS (SELECT e.src AS id, CAST(count(*) AS BIGINT) AS core_deg
-                 FROM e JOIN a{t} x ON e.src = x.id
-                        JOIN a{t} y ON e.dst = y.id
-                 GROUP BY 1),
-        a{t + 1} AS (SELECT id FROM d{t} WHERE core_deg >= {k})""")
-    return f"""
-        WITH {','.join(parts)}
-        SELECT id AS doc_id, core_deg FROM d{rounds - 1}
-        WHERE core_deg >= {k}
-    """
-
-
-def _hits_sql(iters: int = 4, scale: int = 10**6) -> str:
-    """Unrolled integer HITS over the shared 3-out doc graph (multi-edges
-    preserved): same sum / L-inf div-normalize recurrence as
-    text/links.py:hits_fixed_point; all operands nonnegative so DuckDB's
-    truncating ``//`` equals Spark's ``div`` equals floor."""
-    parts = ["""
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        e AS (SELECT src, dst FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
-        nodes AS (SELECT DISTINCT id FROM (
-                    SELECT src AS id FROM e
-                    UNION ALL SELECT dst FROM e)),
-        h0 AS (SELECT id, CAST(1 AS BIGINT) AS h FROM nodes)"""]
-    for t in range(iters):
-        parts.append(f"""
-        ar{t} AS (SELECT e.dst AS id, CAST(sum(hh.h) AS BIGINT) AS raw
-                  FROM e JOIN h{t} hh ON e.src = hh.id GROUP BY 1),
-        am{t} AS (SELECT greatest(coalesce(max(raw), 0), 1) AS m
-                  FROM ar{t}),
-        a{t} AS (SELECT n.id,
-                        CAST((coalesce(ar.raw, 0) * {scale}) // am.m
-                             AS BIGINT) AS a
-                 FROM nodes n LEFT JOIN ar{t} ar ON ar.id = n.id
-                      CROSS JOIN am{t} am),
-        hr{t} AS (SELECT e.src AS id, CAST(sum(aa.a) AS BIGINT) AS raw
-                  FROM e JOIN a{t} aa ON e.dst = aa.id GROUP BY 1),
-        hm{t} AS (SELECT greatest(coalesce(max(raw), 0), 1) AS m
-                  FROM hr{t}),
-        h{t + 1} AS (SELECT n.id,
-                            CAST((coalesce(hr.raw, 0) * {scale}) // hm.m
-                                 AS BIGINT) AS h
-                     FROM nodes n LEFT JOIN hr{t} hr ON hr.id = n.id
-                          CROSS JOIN hm{t} hm)""")
-    last = iters - 1
-    return f"""
-        WITH {','.join(parts)}
-        SELECT n.id AS doc_id, h.h AS hub, a.a AS auth
-        FROM nodes n JOIN h{iters} h ON h.id = n.id
-             JOIN a{last} a ON a.id = n.id
-    """
-
-
-def _lpa_sql(iters: int = 4) -> str:
-    """Unrolled synchronous label propagation over the shared 3-out doc
-    graph (symmetrized, self-loops dropped): same (count DESC, label
-    ASC) struct-argmax recurrence as text/links.py:label_propagation."""
-    parts = ["""
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        e0 AS (SELECT src, dst FROM (
-                 SELECT doc_id AS src,
-                        mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                 FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-               WHERE dst <> src),
-        e AS (SELECT src, dst FROM e0
-              UNION
-              SELECT dst, src FROM e0),
-        l0 AS (SELECT DISTINCT src AS id, src AS label FROM e)"""]
-    for t in range(iters):
-        parts.append(f"""
-        c{t} AS (SELECT e.dst AS id, l.label,
-                        CAST(count(*) AS BIGINT) AS c
-                 FROM e JOIN l{t} l ON e.src = l.id
-                 GROUP BY 1, 2),
-        l{t + 1} AS (SELECT id,
-                            (min({{'negc': -c, 'l': label}})).l AS label
-                     FROM c{t} GROUP BY id)""")
-    return f"""
-        WITH {','.join(parts)}
-        SELECT id, label FROM l{iters}
-    """
-
-
-def _pagerank_sql(iters: int = 5) -> str:
-    """Unrolled fixed-point PageRank: the same integer recurrence as
-    text/links.py (score' = floor(3e12/(20n)) + Σ floor(score·17/(20·deg)))
-    over the same deterministic 3-out graph — `//` is DuckDB floor
-    division, exact for the all-positive operands; the per-step CAST back
-    to BIGINT matches Spark's long sums (DuckDB SUM(BIGINT) widens to
-    HUGEINT)."""
-    steps = []
-    for i in range(iters):
-        steps.append(f"""
-        c{i} AS (SELECT e.dst AS id,
-                        sum((s.score * 17) // (20 * deg.outdeg)) AS cs
-                 FROM e JOIN s{i} s ON e.src = s.id
-                        JOIN deg ON deg.src = e.src
-                 GROUP BY 1),
-        s{i + 1} AS (SELECT nodes.id,
-                            CAST((3000000000000 // (20 * nn.n))
-                                 + COALESCE(c{i}.cs, 0) AS BIGINT) AS score
-                     FROM nodes CROSS JOIN nn
-                     LEFT JOIN c{i} ON c{i}.id = nodes.id)""")
-    return f"""
-        WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        nodes AS (SELECT doc_id AS id FROM documents),
-        e AS (SELECT src, dst FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
-        deg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-                FROM e GROUP BY 1),
-        s0 AS (SELECT id, CAST(1000000000000 // nn.n AS BIGINT) AS score
-               FROM nodes, nn),
-        {','.join(steps)}
-        SELECT id AS doc_id, score AS score_fp FROM s{iters}
-    """
-
-
-# S2 Hilbert lookup table (public S2 spec): pos = IJ_TO_POS[orient][ij],
-# flattened to orient*4 + ij
-_S2_IJ2POS = (0, 1, 3, 2, 0, 3, 1, 2, 2, 3, 1, 0, 2, 1, 3, 0)
-
-
-def _s2_cells_sql(src: str, level: int = 12, rollup: bool = True) -> str:
-    """ANSI-SQL replica of geo.cells.s2_cell_id: face selection → quadratic
-    (u,v)→(s,t) projection → (i,j) → `level` unrolled Hilbert-curve steps →
-    uint64 cell id reinterpreted as two's-complement BIGINT. Every step is
-    plain integer/real arithmetic, so DuckDB reproduces the numpy kernel
-    bit-for-bit (trunc matches numpy's toward-zero int cast; values are
-    clamped before it matters). rollup=False returns per-row
-    (event_id, s2_l12) with the ids CTE MATERIALIZED — an outer equality
-    filter otherwise gets pushed/inlined through the unrolled CASE chain
-    and DuckDB's optimizer blows up exponentially (measured: 0.06 s
-    materialized vs >120 s inlined at sf0.01)."""
-    n = 1 << level
-    steps = []
-    prev = "s0"
-    for idx, k in enumerate(range(level - 1, -1, -1)):
-        ij = f"(((i >> {k}) & 1) * 2 + ((j >> {k}) & 1))"
-        p_case = (
-            "CASE orient * 4 + " + ij + " "
-            + " ".join(f"WHEN {c} THEN {_S2_IJ2POS[c]}" for c in range(16))
-            + " END"
-        )
-        cur = f"s{idx + 1}"
-        steps.append(
-            f"{cur} AS (SELECT event_id, i, j, face, pos * 4 + p AS pos, "
-            f"xor(orient, CASE p WHEN 0 THEN 1 WHEN 3 THEN 3 ELSE 0 END) AS orient "
-            f"FROM (SELECT *, {p_case} AS p FROM {prev}))"
-        )
-        prev = cur
-    shift = 2 * (30 - level)
-    return f"""
-        WITH pts AS ({src}),
-        xyz AS (SELECT event_id,
-                       cos(radians(lat)) * cos(radians(lon)) AS x,
-                       cos(radians(lat)) * sin(radians(lon)) AS y,
-                       sin(radians(lat)) AS z
-                FROM pts),
-        fc AS (SELECT event_id, x, y, z,
-                      CASE WHEN abs(x) >= abs(y) THEN
-                             CASE WHEN abs(x) >= abs(z) THEN 0 ELSE 2 END
-                           ELSE CASE WHEN abs(y) >= abs(z) THEN 1 ELSE 2 END
-                      END AS comp
-               FROM xyz),
-        fc2 AS (SELECT event_id, x, y, z, comp,
-                       comp + CASE WHEN (CASE comp WHEN 0 THEN x WHEN 1 THEN y
-                                         ELSE z END) >= 0
-                              THEN 0 ELSE 3 END AS face
-                FROM fc),
-        uv AS (SELECT event_id, face,
-                      CASE face WHEN 0 THEN y/x WHEN 1 THEN -x/y WHEN 2 THEN -x/z
-                                WHEN 3 THEN z/x WHEN 4 THEN z/y ELSE -y/z END AS u,
-                      CASE face WHEN 0 THEN z/x WHEN 1 THEN z/y WHEN 2 THEN -y/z
-                                WHEN 3 THEN y/x WHEN 4 THEN -x/y ELSE -x/z END AS v
-               FROM fc2),
-        st AS (SELECT event_id, face,
-                      CASE WHEN u >= 0 THEN 0.5 * sqrt(1 + 3*u)
-                           ELSE 1 - 0.5 * sqrt(1 - 3*u) END AS su,
-                      CASE WHEN v >= 0 THEN 0.5 * sqrt(1 + 3*v)
-                           ELSE 1 - 0.5 * sqrt(1 - 3*v) END AS sv
-               FROM uv),
-        s0 AS (SELECT event_id, face,
-                      greatest(0, least({n - 1}, CAST(trunc(su * {n}) AS BIGINT))) AS i,
-                      greatest(0, least({n - 1}, CAST(trunc(sv * {n}) AS BIGINT))) AS j,
-                      CAST(0 AS BIGINT) AS pos, face % 2 AS orient
-               FROM st),
-        {','.join(steps)},
-        ids AS {'' if rollup else 'MATERIALIZED '}(SELECT event_id,
-                       CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-                                 THEN h - 18446744073709551616::HUGEINT
-                            ELSE h END AS BIGINT) AS s2_l12
-                FROM (SELECT event_id,
-                             face::HUGEINT * {1 << 61}::HUGEINT
-                             + pos::HUGEINT * {1 << (shift + 1)}::HUGEINT
-                             + {1 << shift}::HUGEINT AS h
-                      FROM {prev}))
-        SELECT {{final}}
-    """.replace(
-        "{final}",
-        "s2_l12, CAST(count(*) AS BIGINT) AS n FROM ids GROUP BY 1"
-        if rollup else "event_id, s2_l12 FROM ids",
-    )
+def queries() -> dict[str, Builder]:
+    builds = {q.name: q.build for q in REGISTRY}
+    rest = [name for name in builds if name not in DRIVER_WINDOW]
+    return {name: _cold(builds[name]) for name in (*DRIVER_WINDOW, *rest)}
 
 
 def oracle_sql() -> dict[str, str]:
-    from insights_spark.geo import cells as _cells
-
-    # exact float constants from the hex kernel (repr round-trips doubles)
-    hx_c1 = repr(_cells._SQRT3 / 3.0)
-    hx_c2 = repr(2.0 / 3.0)
-    hx_size = repr(_cells.hex_edge_deg(6))
-
-    n6, n4 = 64, 16
-    tile6 = _TILE_XY.format(n=n6, nm1=n6 - 1)
-    tile5 = _TILE_XY.format(n=32, nm1=31)
-    # hex polyfill constants (res 2): center spacing h=1.5·s, w=√3·s —
-    # identical literals to geo.cells.hex_cover_bbox via repr round-trip
-    _hcov_s = _cells.hex_edge_deg(2)
-    hcov_h, hcov_w = repr(1.5 * _hcov_s), repr(_cells._SQRT3 * _hcov_s)
-    hcov_countries = ", ".join(
-        f"('{n}', {x0!r}, {y0!r}, {x1!r}, {y1!r})"
-        for n, _p, x0, y0, x1, y1 in _COUNTRIES
-    )
-    # inverse web-mercator lat of tile-fraction {yf}, sinh in exp-form —
-    # the exact expression geo/vectorize._merc_lat runs
-    inv_lat = (
-        "round(degrees(atan((exp(pi() * (1.0 - 2.0 * ({yf})))"
-        " - exp(-(pi() * (1.0 - 2.0 * ({yf}))))) / 2.0)), 9)"
-    )
-    tile5_raster = f"""
-        raster AS (SELECT 5 AS z, {tile5}, CAST(count(*) AS BIGINT) AS density
-                   FROM pts GROUP BY 1, 2, 3),
-        hot AS (SELECT * FROM raster
-                WHERE density >= (SELECT avg(density) FROM raster))
-    """
-    case_country = _country_case_sql()
-
-    stopwords_en = "('the','a','and','of','to','in','is','it','that','for')"
-    langs = {
-        "en": stopwords_en,
-        "de": "('der','die','das','und','ist','zu','den','nicht','von','mit')",
-        "fr": "('le','la','les','et','est','un','une','des','que','pour')",
-        "sw": "('na','ya','wa','kwa','ni','za','katika','hii','kuwa','la')",
-    }
-    lang_scores = ", ".join(
-        f"CASE WHEN len({_TOKENS}) > 0 THEN len(list_filter({_TOKENS}, "
-        f"t -> t IN {sw}))::DOUBLE / len({_TOKENS}) ELSE 0.0 END AS r_{lang}"
-        for lang, sw in langs.items()
-    )
-
-    norm_text = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
-    fp_expr = _POLY_HASH.format(s=norm_text)
-
-    mh = []
-    for k in range(4):
-        a = 2 * k + 1
-        b = 7919 * (k + 1)
-        mh.append(
-            f"coalesce(list_min(list_transform(list_distinct({_TOKENS}), "
-            f"t -> ({_POLY_HASH.format(s='t')} * {a} + {b}) % 1000000007)), "
-            f"1000000007) AS mh{k}"
-        )
-
-    # full MinHash-LSH near-dup oracle: 16-hash signature over word-3-gram
-    # poly hashes, 4 bands of 4, band-bucket join, exact-Jaccard verify —
-    # the same algebra as text.dedup.minhash_near_dups.
-    sig16 = ", ".join(
-        f"coalesce(list_min(list_transform(hs, h -> (h * {2 * k + 1} + {7919 * (k + 1)})"
-        f" % 1000000007)), 1000000007)"
-        for k in range(16)
-    )
-    lsh_bands = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, sig[{bi * 4 + 1}:{bi * 4 + 4}] AS key FROM sig"
-        for bi in range(4)
-    )
-
-    # portable simhash oracle: bit_k = majority vote of
-    # (poly(tok)*A_k + B_k) mod P < P//2 over the (non-distinct) token list;
-    # value assembled as two's-complement BIGINT (bit 63 contributes -2^63).
-    sh_bits = " + ".join(
-        (
-            f"CASE WHEN 2 * len(list_filter(hs, h -> "
-            f"(h * {(2654435761 * (k + 1)) % 1000000007} "
-            f"+ {(40503 * (k + 1) * 104729) % 1000000007})"
-            f" % 1000000007 < 500000003)) > n THEN "
-            + (str(1 << k) if k < 63 else "-9223372036854775808")
-            + " ELSE 0 END"
-        )
-        for k in range(64)
-    )
-    sh_uns = (
-        "CASE WHEN simhash < 0 THEN simhash::HUGEINT + 18446744073709551616 "
-        "ELSE simhash::HUGEINT END"
-    )
-    sh_bands = " UNION ALL ".join(
-        f"SELECT doc_id, simhash, {bi} AS band, "
-        f"(({sh_uns}) // {1 << (16 * bi)}) % 65536 AS key FROM sh"
-        for bi in range(4)
-    )
-
-    # shared by `knn` (brute force) and `knn_cell_local` (certified-exact
-    # cell-ring path): both engines produce the identical exact result
-    knn_sql = f"""
-        WITH pts AS ({_CUST_PTS})
-        SELECT id, neighbor_id, dist2, CAST(rank AS INT) AS rank FROM (
-          SELECT a.c_custkey AS id, b.c_custkey AS neighbor_id,
-                 (a.lon - b.lon) * (a.lon - b.lon)
-                 + (a.lat - b.lat) * (a.lat - b.lat) AS dist2,
-                 row_number() OVER (PARTITION BY a.c_custkey
-                                    ORDER BY (a.lon - b.lon) * (a.lon - b.lon)
-                                    + (a.lat - b.lat) * (a.lat - b.lat) ASC,
-                                    b.c_custkey ASC) AS rank
-          FROM pts a JOIN pts b ON a.c_custkey != b.c_custkey)
-        WHERE rank <= 3
-    """
-
-    cdc_sql = f"""
-            WITH d AS (SELECT doc_id, text AS s, length(text) AS L
-                       FROM documents
-                       WHERE text IS NOT NULL AND length(text) > 0),
-            bpos AS (SELECT doc_id,
-                            unnest(list_filter(range(8, L + 1),
-                                i -> list_reduce(list_prepend(7::BIGINT, list_transform(string_split(substr(s, i - 7, 8), ''), c -> ascii(c)::BIGINT)), (a, b) -> (a * 31 + b) % 1000000007) % 64 = 0)) AS b
-                     FROM d),
-            lastc AS (SELECT doc_id, max(b) AS lb FROM bpos GROUP BY doc_id),
-            cuts AS (SELECT doc_id, b FROM bpos
-                     UNION ALL
-                     SELECT d.doc_id, d.L AS b
-                     FROM d LEFT JOIN lastc USING (doc_id)
-                     WHERE coalesce(lastc.lb, 0) < d.L),
-            spans AS (SELECT doc_id, b,
-                             coalesce(lag(b) OVER (PARTITION BY doc_id
-                                                   ORDER BY b), 0) AS pb,
-                             row_number() OVER (PARTITION BY doc_id
-                                                ORDER BY b) - 1 AS cidx
-                      FROM cuts)
-            SELECT sp.doc_id, CAST(sp.cidx AS INT) AS chunk_idx,
-                   CAST(sp.pb + 1 AS BIGINT) AS start,
-                   CAST(sp.b - sp.pb AS BIGINT) AS length,
-                   CAST(list_reduce(list_prepend(7::BIGINT, list_transform(string_split(substr(d.s, pb + 1, b - pb), ''), c -> ascii(c)::BIGINT)), (a, b) -> (a * 31 + b) % 1000000007) AS BIGINT) AS chash
-            FROM spans sp JOIN d USING (doc_id)
-    """
-
-    out = {
-        "knn": knn_sql,
-        "knn_cell_local": knn_sql,
-        "hex_cover": f"""
-            WITH c AS (SELECT * FROM (VALUES {hcov_countries})
-                       t(country, lon0, lat0, lon1, lat1)),
-            rs AS (SELECT country, lon0, lon1, r FROM c,
-                   UNNEST(generate_series(
-                       CAST(ceil(lat0 / {hcov_h}) AS BIGINT),
-                       CAST(floor(lat1 / {hcov_h}) AS BIGINT))) AS u(r)),
-            qs AS (SELECT country, q, r FROM rs,
-                   UNNEST(generate_series(
-                       CAST(ceil(lon0 / {hcov_w} - r / 2.0) AS BIGINT),
-                       CAST(floor(lon1 / {hcov_w} - r / 2.0) AS BIGINT))) AS u(q))
-            SELECT country,
-                   2 * 72057594037927936 + (q + 67108864) * 268435456
-                   + (r + 67108864) AS cell
-            FROM qs
-        """,
-        "within_distance": f"""
-            WITH pts AS ({_EV_PTS})
-            SELECT a.event_id AS a, b.event_id AS b,
-                   (a.lon - b.lon) * (a.lon - b.lon)
-                   + (a.lat - b.lat) * (a.lat - b.lat) AS dist2
-            FROM pts a JOIN pts b ON a.event_id < b.event_id
-            WHERE (a.lon - b.lon) * (a.lon - b.lon)
-                  + (a.lat - b.lat) * (a.lat - b.lat) <= 9.0
-        """,
-        "nn_distance_hist": """
-            WITH pts AS (SELECT event_id,
-                                mod(event_id * 7919, 360000) - 180000 AS x,
-                                mod(event_id * 104729, 170000) - 85000 AS y
-                         FROM events),
-            nnd AS (SELECT a.event_id AS id,
-                           min((a.x - b.x) * (a.x - b.x)
-                               + (a.y - b.y) * (a.y - b.y)) AS d2
-                    FROM pts a JOIN pts b ON a.event_id <> b.event_id
-                    GROUP BY 1)
-            SELECT CAST(length(CAST(d2 AS VARCHAR)) AS INT) AS band,
-                   CAST(count(*) AS BIGINT) AS n_points,
-                   CAST(min(d2) AS BIGINT) AS min_d2,
-                   CAST(max(d2) AS BIGINT) AS max_d2
-            FROM nnd GROUP BY 1
-        """,
-        "ripley_k": f"""
-            WITH pts AS ({_EV_PTS}),
-            d AS (
-                SELECT (a.lon - b.lon) * (a.lon - b.lon)
-                       + (a.lat - b.lat) * (a.lat - b.lat) AS dist2
-                FROM pts a JOIN pts b ON a.event_id < b.event_id
-            ),
-            n AS (SELECT CAST(count(*) AS BIGINT) AS n_points FROM pts),
-            agg AS (
-                SELECT CAST(coalesce(sum((dist2 <= 1.0)::int), 0) AS BIGINT) AS p1,
-                       CAST(coalesce(sum((dist2 <= 4.0)::int), 0) AS BIGINT) AS p2,
-                       CAST(coalesce(sum((dist2 <= 9.0)::int), 0) AS BIGINT) AS p3
-                FROM d
-            )
-            SELECT CAST(1000 AS BIGINT) AS r_milli, n.n_points, agg.p1 AS pairs FROM agg, n
-            UNION ALL
-            SELECT CAST(2000 AS BIGINT), n.n_points, agg.p2 FROM agg, n
-            UNION ALL
-            SELECT CAST(3000 AS BIGINT), n.n_points, agg.p3 FROM agg, n
-        """,
-        "s2_cells": _s2_cells_sql(_EV_PTS),
-        "flagship_tile_density": f"""
-            WITH pts AS ({_EV_PTS})
-            SELECT {case_country} AS country, 6 AS z, {tile6}, CAST(count(*) AS BIGINT) AS density
-            FROM pts GROUP BY 1, 2, 3, 4
-        """,
-        "conditional_battery": """
-            SELECT l_orderkey,
-                   CAST(sum((l_quantity > 25)::int) AS BIGINT) AS qty_gt25,
-                   CAST(sum((l_discount > 0.05)::int) AS BIGINT) AS disc_gt5,
-                   CAST(sum((l_tax > 0.04 AND l_returnflag = 'R')::int) AS BIGINT) AS taxed_returns,
-                   CAST(sum((l_returnflag IN ('A','N'))::int) AS BIGINT) AS flag_an,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM lineitem GROUP BY l_orderkey
-        """,
-        "semi_join": """
-            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(l_linenumber) AS BIGINT) AS sum_line
-            FROM lineitem
-            WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-                                 WHERE o_orderstatus = 'O' AND o_totalprice > 1000)
-            GROUP BY l_returnflag
-        """,
-        "anti_join": """
-            SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n
-            FROM orders o
-            LEFT JOIN (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_quantity > 49) l
-              ON o.o_orderkey = l.l_orderkey
-            WHERE l.l_orderkey IS NULL
-            GROUP BY o_orderstatus
-        """,
-        "latest_event": """
-            SELECT user_id, event_id, event_type, value FROM (
-              SELECT *, row_number() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC) AS rn
-              FROM events) WHERE rn = 1
-        """,
-        "latest_event_asof": """
-            SELECT user_id, event_id, event_type FROM (
-              SELECT *, row_number() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC) AS rn
-              FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00') WHERE rn = 1
-        """,
-        "scalar_pick": """
-            SELECT c_nationkey, c_name FROM (
-              SELECT c_nationkey, c_name,
-                     row_number() OVER (PARTITION BY c_nationkey
-                                        ORDER BY c_custkey DESC) AS rn
-              FROM customer) WHERE rn = 1
-        """,
-        "tokenize": """
-            SELECT token, CAST(count(*) AS BIGINT) AS n FROM (
-              SELECT trim(unnest(string_split_regex(lower(text), '\\s+'))) AS token
-              FROM documents)
-            WHERE token LIKE 's%' GROUP BY token
-        """,
-        "pattern_filter": """
-            SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents
-            WHERE lower(text) LIKE '% merge %' OR lower(text) LIKE 'merge %'
-               OR lower(text) LIKE '% merge' OR lower(text) = 'merge'
-            GROUP BY lang
-        """,
-        "json_props": """
-            SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k
-            FROM events
-            WHERE CAST(json_extract_string(props, '$.k') AS INT) >= 50
-            GROUP BY event_type
-        """,
-        "month_rollup": """
-            SELECT date_trunc('month', ts)::TIMESTAMP AS month,
-                   date_trunc('quarter', ts)::TIMESTAMP AS quarter,
-                   event_type,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS users,
-                   max(value) AS max_value, min(value) AS min_value
-            FROM events GROUP BY 1, 2, 3
-        """,
-        "friday_weeks": """
-            WITH s AS (SELECT *, (ts - INTERVAL 12 HOURS)::DATE AS d FROM events),
-            w AS (SELECT *, d - CAST(mod(dayofweek(d) - 5 + 7, 7) AS INT) AS friday FROM s)
-            SELECT friday::TIMESTAMP + INTERVAL 12 HOURS AS week_start,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS users
-            FROM w GROUP BY 1
-        """,
-        "editors_concat": """
-            SELECT user_id,
-                   string_agg(DISTINCT event_type, ',' ORDER BY event_type) || ',' AS editors
-            FROM events GROUP BY user_id
-        """,
-        "pip_countries": f"""
-            WITH pts AS ({_CUST_PTS})
-            SELECT c_custkey, {case_country} AS country FROM pts
-        """,
-        "pip_via_cells": f"""
-            WITH pts AS ({_CUST_PTS})
-            SELECT c_custkey, {case_country} AS country FROM pts
-        """,
-        "tile_pyramid": f"""
-            WITH pts AS ({_EV_PTS}),
-            z6 AS (SELECT 6 AS z, {tile6}, CAST(count(*) AS BIGINT) AS density
-                   FROM pts GROUP BY 1, 2, 3)
-            SELECT z, x, y, density FROM z6
-            UNION ALL
-            SELECT 4 AS z, CAST(floor(x / 4) AS INT) AS x, CAST(floor(y / 4) AS INT) AS y,
-                   CAST(sum(density) AS BIGINT) AS density
-            FROM z6 GROUP BY 2, 3
-        """,
-        "tile_vectorize": f"""
-            WITH pts AS ({_EV_PTS}),
-            {tile5_raster}
-            SELECT z, x, y, density,
-                   round(x / 32.0 * 360.0 - 180.0, 9) AS west,
-                   {inv_lat.format(yf='(y + 1) / 32.0')} AS south,
-                   round((x + 1) / 32.0 * 360.0 - 180.0, 9) AS east,
-                   {inv_lat.format(yf='y / 32.0')} AS north
-            FROM hot
-        """,
-        "tile_regions": f"""
-            WITH RECURSIVE pts AS ({_EV_PTS}),
-            {tile5_raster},
-            ids AS (SELECT z, x, y, density,
-                           CAST(z AS BIGINT) * 4503599627370496
-                           + CAST(x AS BIGINT) * 67108864
-                           + CAST(y AS BIGINT) AS id
-                    FROM hot),
-            edges AS (SELECT a.id AS src, b.id AS dst
-                      FROM ids a JOIN ids b
-                      ON a.z = b.z AND abs(a.x - b.x) + abs(a.y - b.y) = 1),
-            reach(src, dst) AS (
-                SELECT id, id FROM ids
-                UNION
-                SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-            )
-            SELECT i.z, i.x, i.y, i.density, c.region_id
-            FROM ids i JOIN (SELECT src, MIN(dst) AS region_id
-                             FROM reach GROUP BY src) c ON i.id = c.src
-        """,
-        "grid_cells": f"""
-            WITH pts AS ({_EV_PTS})
-            SELECT CAST(floor((lon + 180.0) * 4) * 4294967296
-                        + floor((lat + 90.0) * 4) AS BIGINT) AS cell,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM pts GROUP BY 1
-        """,
-        "envelope": f"""
-            WITH pts AS ({_EV_PTS})
-            SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM pts
-            WHERE lon >= -10.0 AND lon <= 50.0 AND lat >= -5.0 AND lat <= 45.0
-            GROUP BY event_type
-        """,
-        "exact_dedup": """
-            SELECT CAST(min(doc_id) AS BIGINT) AS doc_id,
-                   CAST(count(*) AS BIGINT) AS dup_count
-            FROM (SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS norm
-                  FROM documents)
-            GROUP BY norm
-        """,
-        "token_stats": f"""
-            SELECT doc_id, CAST(length(text) AS INT) AS n_chars,
-                   CAST(len({_TOKENS}) AS INT) AS n_tokens,
-                   CAST(len(regexp_extract_all(lower(text),
-                        '[a-z]+|[0-9]+|[^a-z0-9\\s]+')) AS INT) AS n_bpe
-            FROM documents
-        """,
-        "quality": f"""
-            SELECT doc_id,
-                   CAST(len({_TOKENS}) AS INT) AS n_tokens,
-                   CASE WHEN len({_TOKENS}) > 0 THEN
-                     len(list_filter({_TOKENS}, t -> t IN {stopwords_en}))::DOUBLE
-                     / len({_TOKENS}) ELSE 0.0 END AS stopword_ratio,
-                   CASE WHEN len({_TOKENS}) > 0 THEN
-                     len(list_distinct({_TOKENS}))::DOUBLE / len({_TOKENS})
-                     ELSE 0.0 END AS uniq_token_ratio,
-                   CASE WHEN len({_TOKENS}) > 0 THEN
-                     length(regexp_replace(lower(text), '\\s+', '', 'g'))::DOUBLE
-                     / len({_TOKENS}) ELSE 0.0 END AS avg_token_len
-            FROM documents
-        """,
-        "lang_id": f"""
-            WITH scored AS (SELECT doc_id, {lang_scores} FROM documents)
-            SELECT doc_id,
-                   CASE WHEN greatest(r_en, r_de, r_fr, r_sw) <= 0 THEN NULL
-                        WHEN r_de >= r_en AND r_de >= r_fr AND r_de >= r_sw THEN 'de'
-                        WHEN r_en >= r_fr AND r_en >= r_sw THEN 'en'
-                        WHEN r_fr >= r_sw THEN 'fr'
-                        ELSE 'sw' END AS lang_pred
-            FROM scored
-        """,
-        "cdc_chunks": cdc_sql,
-        "cdc_containment": f"""
-            WITH chunks AS ({cdc_sql}),
-            ch AS (SELECT DISTINCT doc_id, chash, length FROM chunks),
-            keep AS (SELECT chash, length FROM ch
-                     GROUP BY 1, 2 HAVING count(*) <= 64),
-            k AS (SELECT ch.doc_id, ch.chash, ch.length
-                  FROM ch JOIN keep USING (chash, length)),
-            pairs AS (SELECT k1.doc_id AS a, k2.doc_id AS b,
-                             CAST(sum(k1.length) AS BIGINT) AS shared_bytes
-                      FROM k k1 JOIN k k2 USING (chash, length)
-                      WHERE k1.doc_id < k2.doc_id
-                      GROUP BY 1, 2),
-            dl AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len
-                   FROM documents
-                   WHERE text IS NOT NULL AND length(text) > 0)
-            SELECT p.a, p.b, p.shared_bytes,
-                   da.len AS a_len, db.len AS b_len
-            FROM pairs p
-            JOIN dl da ON da.doc_id = p.a
-            JOIN dl db ON db.doc_id = p.b
-            WHERE p.shared_bytes * 1000000 >= 200000 * least(da.len, db.len)
-        """,
-        "fingerprint": f"""
-            SELECT doc_id, {fp_expr} AS fp
-            FROM documents
-        """,
-        "minhash": f"""
-            SELECT doc_id, {', '.join(mh)} FROM documents
-        """,
-        "prefix_jaccard": f"""
-            WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-            gsets AS (
-              SELECT doc_id, list_distinct(list_transform(
-                       range(1, len(tok) - 1),
-                       i -> array_to_string(tok[i:i+2], ' '))) AS gs
-              FROM toks WHERE len(tok) >= 3),
-            grams AS (SELECT doc_id, unnest(gs) AS gram FROM gsets),
-            inter AS (SELECT g1.doc_id AS a, g2.doc_id AS b,
-                             CAST(count(*) AS BIGINT) AS i
-                      FROM grams g1 JOIN grams g2 USING (gram)
-                      WHERE g1.doc_id < g2.doc_id GROUP BY 1, 2),
-            sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets)
-            SELECT a, b, i AS inter,
-                   CAST(sa.sz + sb.sz - i AS BIGINT) AS uni,
-                   CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-            FROM inter JOIN sizes sa ON inter.a = sa.doc_id
-                       JOIN sizes sb ON inter.b = sb.doc_id
-            WHERE i * 2 >= (sa.sz + sb.sz - i) * 1
-        """,
-        "ngram_jaccard": f"""
-            WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-            grams0 AS (
-              SELECT doc_id, unnest(list_distinct(list_transform(
-                       range(1, len(tok) - 1),
-                       i -> array_to_string(tok[i:i+2], ' ')))) AS gram
-              FROM toks WHERE len(tok) >= 3),
-            keep AS (SELECT gram FROM grams0 GROUP BY gram HAVING count(*) <= 50),
-            grams AS (SELECT grams0.doc_id, grams0.gram
-                      FROM grams0 JOIN keep USING (gram)),
-            sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id),
-            inter AS (SELECT g1.doc_id AS a, g2.doc_id AS b, count(*) AS i
-                      FROM grams g1 JOIN grams g2 USING (gram)
-                      WHERE g1.doc_id < g2.doc_id GROUP BY 1, 2)
-            SELECT a, b, i::DOUBLE / (sa.sz + sb.sz - i) AS jaccard
-            FROM inter JOIN sizes sa ON inter.a = sa.doc_id
-                       JOIN sizes sb ON inter.b = sb.doc_id
-            WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.5
-        """,
-        "lang_quality_median": f"""
-            WITH scored AS (SELECT doc_id, {lang_scores} FROM documents),
-            langp AS (SELECT doc_id,
-                   CASE WHEN greatest(r_en, r_de, r_fr, r_sw) <= 0 THEN NULL
-                        WHEN r_de >= r_en AND r_de >= r_fr AND r_de >= r_sw THEN 'de'
-                        WHEN r_en >= r_fr AND r_en >= r_sw THEN 'en'
-                        WHEN r_fr >= r_sw THEN 'fr'
-                        ELSE 'sw' END AS lang_pred
-                   FROM scored),
-            t AS (SELECT l.lang_pred, len({_TOKENS}) AS n_tokens
-                  FROM documents JOIN langp l USING (doc_id))
-            SELECT lang_pred, CAST(count(*) AS BIGINT) AS docs,
-                   quantile_cont(n_tokens, 0.5) AS p50_tokens,
-                   quantile_cont(n_tokens, 0.9) AS p90_tokens
-            FROM t GROUP BY lang_pred
-        """,
-        "term_freq": f"""
-            WITH t AS (SELECT doc_id, unnest(list_distinct({_TOKENS})) AS term
-                       FROM documents),
-            c AS (SELECT term, CAST(count(*) AS BIGINT) AS docs
-                  FROM t GROUP BY term)
-            SELECT CAST(row_number() OVER (ORDER BY docs DESC, term ASC) AS INT)
-                     AS rank, term, docs
-            FROM c
-            QUALIFY rank <= 25
-        """,
-        "clean_corpus": f"""
-            WITH scored AS (SELECT doc_id, {lang_scores} FROM documents),
-            langp AS (SELECT doc_id,
-                   CASE WHEN greatest(r_en, r_de, r_fr, r_sw) <= 0 THEN NULL
-                        WHEN r_de >= r_en AND r_de >= r_fr AND r_de >= r_sw THEN 'de'
-                        WHEN r_en >= r_fr AND r_en >= r_sw THEN 'en'
-                        WHEN r_fr >= r_sw THEN 'fr'
-                        ELSE 'sw' END AS lang_pred
-                   FROM scored),
-            toks AS (SELECT doc_id, text, {_TOKENS} AS tok FROM documents),
-            gate AS (SELECT t.doc_id, t.text, t.tok,
-                            CAST(len(t.tok) AS INT) AS n_tokens, l.lang_pred
-                     FROM toks t JOIN langp l USING (doc_id)
-                     WHERE len(t.tok) >= 5
-                       AND (CASE WHEN len(t.tok) > 0 THEN
-                              len(list_distinct(t.tok))::DOUBLE / len(t.tok)
-                            ELSE 0.0 END) >= 0.2
-                       AND l.lang_pred IN ('en', 'de', 'fr')),
-            reps AS (SELECT min(doc_id) AS doc_id
-                     FROM (SELECT doc_id,
-                                  regexp_replace(lower(text), '\\s+', ' ', 'g') AS norm
-                           FROM gate)
-                     GROUP BY norm),
-            surv AS (SELECT g.* FROM gate g JOIN reps USING (doc_id)),
-            grams0 AS (
-              SELECT doc_id, unnest(list_distinct(list_transform(
-                       range(1, len(tok) - 1),
-                       i -> array_to_string(tok[i:i+2], ' ')))) AS gram
-              FROM surv WHERE len(tok) >= 3),
-            keep AS (SELECT gram FROM grams0 GROUP BY gram HAVING count(*) <= 50),
-            grams AS (SELECT grams0.doc_id, grams0.gram
-                      FROM grams0 JOIN keep USING (gram)),
-            sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id),
-            inter AS (SELECT g1.doc_id AS a, g2.doc_id AS b, count(*) AS i
-                      FROM grams g1 JOIN grams g2 USING (gram)
-                      WHERE g1.doc_id < g2.doc_id GROUP BY 1, 2),
-            dropped AS (SELECT DISTINCT inter.b AS doc_id
-                        FROM inter JOIN sizes sa ON inter.a = sa.doc_id
-                                   JOIN sizes sb ON inter.b = sb.doc_id
-                        WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.5)
-            SELECT doc_id, lang_pred, n_tokens FROM surv
-            WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-        """,
-        "hex_cells": f"""
-            WITH pts AS ({_EV_PTS}),
-            hx AS (SELECT event_id,
-                          ({hx_c1} * lon - lat / 3.0) / {hx_size} AS qf,
-                          ({hx_c2} * lat) / {hx_size} AS rf
-                   FROM pts),
-            cr AS (SELECT event_id, qf, rf,
-                          floor(qf + 0.5) AS rx0,
-                          floor(-qf - rf + 0.5) AS ry0,
-                          floor(rf + 0.5) AS rz0
-                   FROM hx),
-            fx AS (SELECT event_id, rx0, ry0, rz0,
-                          abs(rx0 - qf) AS dx,
-                          abs(ry0 - (-qf - rf)) AS dy,
-                          abs(rz0 - rf) AS dz
-                   FROM cr),
-            qr AS (SELECT CAST(CASE WHEN dx > dy AND dx > dz THEN -ry0 - rz0
-                               ELSE rx0 END AS BIGINT) AS q,
-                          CAST(CASE WHEN NOT (dx > dy AND dx > dz) AND dz > dy
-                               THEN -rx0 - ry0 ELSE rz0 END AS BIGINT) AS r
-                   FROM fx)
-            SELECT 6 * 72057594037927936
-                        + (q + 67108864) * 268435456
-                        + (r + 67108864) AS h3_r6,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM qr GROUP BY 1
-        """,
-        "simhash_pairs": f"""
-            WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-            gh AS (SELECT doc_id, len(tok) AS n,
-                          list_transform(tok, t -> {_POLY_HASH.format(s='t')}) AS hs
-                   FROM toks WHERE len(tok) > 0),
-            sh AS (SELECT doc_id, CAST({sh_bits} AS BIGINT) AS simhash FROM gh),
-            banded AS ({sh_bands}),
-            pairs AS (SELECT b1.doc_id AS a, b2.doc_id AS b,
-                             first(b1.simhash) AS sa, first(b2.simhash) AS sb
-                      FROM banded b1 JOIN banded b2 USING (band, key)
-                      WHERE b1.doc_id < b2.doc_id GROUP BY 1, 2)
-            SELECT a, b, CAST(bit_count(xor(sa, sb)) AS INT) AS hamming
-            FROM pairs WHERE bit_count(xor(sa, sb)) <= 10
-        """,
-        "minhash_lsh_pairs": f"""
-            WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-            grams AS (
-              SELECT doc_id,
-                     CASE WHEN len(tok) >= 3 THEN list_distinct(list_transform(
-                       range(1, len(tok) - 1), i -> array_to_string(tok[i:i+2], ' ')))
-                     ELSE [] END AS gs
-              FROM toks),
-            gh AS (SELECT doc_id, gs,
-                          list_transform(gs, g -> {_POLY_HASH.format(s='g')}) AS hs
-                   FROM grams),
-            sig AS (SELECT doc_id, gs, [{sig16}] AS sig FROM gh),
-            banded AS ({lsh_bands}),
-            cand AS (SELECT b1.doc_id AS a, b2.doc_id AS b
-                     FROM banded b1 JOIN banded b2 USING (band, key)
-                     WHERE b1.doc_id < b2.doc_id GROUP BY 1, 2),
-            v AS (SELECT cand.a, cand.b,
-                         len(list_intersect(sa.gs, sb.gs)) AS i,
-                         len(list_distinct(list_concat(sa.gs, sb.gs))) AS u
-                  FROM cand JOIN sig sa ON cand.a = sa.doc_id
-                            JOIN sig sb ON cand.b = sb.doc_id)
-            SELECT a, b,
-                   CASE WHEN u > 0 THEN i::DOUBLE / u ELSE 0.0 END AS jaccard
-            FROM v WHERE CASE WHEN u > 0 THEN i::DOUBLE / u ELSE 0.0 END >= 0.5
-        """,
-        "union_distinct": """
-            SELECT DISTINCT trim(token) AS token FROM (
-              SELECT unnest(string_split_regex(lower(text), '[\\s,;]')) AS token
-              FROM documents
-              UNION ALL
-              SELECT unnest(string_split_regex(lower(text), '[\\s;,.@]')) AS token
-              FROM documents)
-            WHERE trim(token) LIKE 't%'
-        """,
-        "topk": """
-            SELECT CAST(rank AS INT) AS rank, o_orderkey, o_totalprice FROM (
-              SELECT o_orderkey, o_totalprice,
-                     row_number() OVER (ORDER BY o_totalprice DESC,
-                                        o_orderkey ASC) AS rank
-              FROM orders) WHERE rank <= 10
-        """,
-        "bbox_area": """
-            WITH b AS (
-              SELECT o_orderkey,
-                     mod(o_orderkey * 7919, 340000) / 1000.0 - 170.0 AS min_lon,
-                     mod(o_orderkey * 104729, 160000) / 1000.0 - 80.0 AS min_lat
-              FROM orders),
-            bb AS (SELECT o_orderkey, min_lon, min_lat,
-                          min_lon + 0.5 AS max_lon, min_lat + 0.25 AS max_lat
-                   FROM b),
-            a AS (SELECT o_orderkey,
-                         abs((max_lon - min_lon)
-                             * cos(radians((greatest(-90.0, least(min_lat, 90.0))
-                                   + greatest(-90.0, least(max_lat, 90.0))) / 2.0))
-                             * 111.19492664455873
-                             * (greatest(-90.0, least(max_lat, 90.0))
-                                - greatest(-90.0, least(min_lat, 90.0)))
-                             * 111.19492664455873) AS area,
-                         (greatest(-90.0, least(min_lat, 90.0))
-                          + greatest(-90.0, least(max_lat, 90.0))) / 2.0 AS c_lat_raw
-                  FROM bb)
-            SELECT o_orderkey, round(area, 4) AS area_km2,
-                   round(c_lat_raw, 6) AS c_lat,
-                   area < 225.0 AS is_small
-            FROM a
-        """,
-        "explode_map": """
-            SELECT key, value, CAST(count(*) AS BIGINT) AS n FROM (
-              SELECT 'lang' AS key, lang AS value FROM documents
-              UNION ALL
-              SELECT 'source' AS key, source AS value FROM documents)
-            GROUP BY key, value
-        """,
-        "country_insights": """
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts,
-                     mod(l_partkey, 3) = 0 AS has_building,
-                     CASE WHEN mod(l_suppkey, 5) = 4 THEN NULL
-                          ELSE 'C' || mod(l_suppkey, 5)::VARCHAR END AS country
-              FROM lineitem),
-            latest AS (
-              SELECT * FROM (
-                SELECT *, row_number() OVER (PARTITION BY type, id
-                           ORDER BY version DESC) AS rn
-                FROM el WHERE ts < TIMESTAMP '1997-01-01') WHERE rn = 1)
-            SELECT country,
-                   CAST(count(DISTINCT id) AS BIGINT) AS building_count,
-                   TIMESTAMP '1997-01-01 00:00:00' AS by_month
-            FROM latest
-            WHERE has_building AND type IN ('way', 'relation')
-              AND country IS NOT NULL
-            GROUP BY country
-        """,
-        "propagate_ways": """
-            WITH nd AS (
-              SELECT c_custkey AS id,
-                CASE WHEN mod(c_custkey, 2) = 0
-                     THEN mod((c_custkey + 1000000) * 7919, 360000) / 1000.0 - 180.0
-                     ELSE mod(c_custkey * 7919, 360000) / 1000.0 - 180.0 END AS lon,
-                CASE WHEN mod(c_custkey, 2) = 0
-                     THEN mod((c_custkey + 1000000) * 104729, 170000) / 1000.0 - 85.0
-                     ELSE mod(c_custkey * 104729, 170000) / 1000.0 - 85.0 END AS lat,
-                CASE WHEN mod(c_custkey, 2) = 0
-                     THEN 'M' || mod(c_custkey, 5)::VARCHAR
-                     ELSE 'N' || mod(c_custkey, 5)::VARCHAR END AS country
-              FROM customer)
-            SELECT o_orderkey AS id,
-                   CASE WHEN mod(o_orderkey, 50) = 0 THEN NULL ELSE nd.lon END AS lon,
-                   CASE WHEN mod(o_orderkey, 50) = 0 THEN NULL ELSE nd.lat END AS lat,
-                   CASE WHEN mod(o_orderkey, 7) = 0 THEN 'OWN'
-                        WHEN mod(o_orderkey, 50) = 0 THEN NULL
-                        ELSE nd.country END AS country
-            FROM orders LEFT JOIN nd ON o_custkey = nd.id
-        """,
-        "campaign_rollup": """
-            WITH cs AS (
-              SELECT o_orderkey AS id, o_custkey AS user_id,
-                     o_orderdate AS created_at,
-                     'fix #camp' || mod(o_orderkey, 4)::VARCHAR ||
-                     CASE WHEN mod(o_orderkey, 3) = 0 THEN ' work' ELSE '' END
-                       AS comment
-              FROM orders),
-            reg AS (SELECT * FROM (VALUES (1, 'camp0'), (2, 'camp1'), (3, 'camp2'))
-                    t(hashtag_id, hashtag_name)),
-            m AS (SELECT hashtag_id, cs.id AS cs_id, user_id,
-                         date_trunc('month', created_at)::TIMESTAMP AS start_date
-                  FROM cs JOIN reg
-                    ON lower(comment) LIKE '%#' || hashtag_name || ' %'
-                    OR lower(comment) LIKE '%#' || hashtag_name),
-            st AS (SELECT o_orderkey AS changeset,
-                          mod(o_orderkey, 10) AS added_buildings,
-                          mod(o_orderkey, 7)::DOUBLE AS added_highway_meters,
-                          mod(o_orderkey, 5) AS added_amenity,
-                          mod(o_orderkey, 4) AS modified_amenity,
-                          mod(o_orderkey, 3) AS added_places,
-                          mod(o_orderkey, 2) AS modified_places
-                   FROM orders WHERE mod(o_orderkey, 11) != 0)
-            SELECT CAST(hashtag_id AS BIGINT) AS hashtag_id, 'm' AS type,
-                   start_date,
-                   start_date + INTERVAL 1 MONTH AS end_date,
-                   CAST(coalesce(sum(added_buildings), 0) AS BIGINT) AS total_new_buildings,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS total_uq_contributors,
-                   coalesce(sum(added_highway_meters), 0.0) AS total_new_road_meters,
-                   CAST(coalesce(sum(added_amenity), 0) AS BIGINT) AS total_new_amenity,
-                   CAST(coalesce(sum(modified_amenity), 0) AS BIGINT) AS total_modified_amenity,
-                   CAST(coalesce(sum(added_places), 0) AS BIGINT) AS total_new_places,
-                   CAST(coalesce(sum(modified_places), 0) AS BIGINT) AS total_modified_places
-            FROM m LEFT JOIN st ON m.cs_id = st.changeset
-            GROUP BY hashtag_id, start_date
-        """,
-        "mapathon_report": """
-            WITH ids AS (SELECT o_orderkey FROM orders
-                         WHERE o_orderstatus = 'F' AND o_totalprice > 150000),
-            el AS (SELECT l_orderkey * 10 + l_linenumber AS id,
-                          CASE WHEN mod(l_linenumber, 3) = 0 THEN 'create'
-                               WHEN mod(l_linenumber, 3) = 1 THEN 'modify'
-                               ELSE 'delete' END AS action,
-                          l_partkey
-                   FROM lineitem
-                   WHERE l_orderkey IN (SELECT o_orderkey FROM ids)),
-            kv AS (SELECT id, action, 'building' AS key FROM el
-                   WHERE mod(l_partkey, 3) = 0
-                   UNION ALL
-                   SELECT id, action, 'highway' AS key FROM el
-                   WHERE mod(l_partkey, 5) = 0)
-            SELECT key, action, CAST(count(DISTINCT id) AS BIGINT) AS features
-            FROM kv GROUP BY key, action
-        """,
-        "mapathon_user_report": """
-            WITH ids AS (SELECT o_orderkey FROM orders
-                         WHERE o_orderstatus = 'F' AND o_totalprice > 150000),
-            el AS (SELECT l_orderkey * 10 + l_linenumber AS id,
-                          mod(l_suppkey, 23) AS uid,
-                          CASE WHEN mod(l_linenumber, 3) = 0 THEN 'create'
-                               WHEN mod(l_linenumber, 3) = 1 THEN 'modify'
-                               ELSE 'delete' END AS action,
-                          l_partkey
-                   FROM lineitem
-                   WHERE l_orderkey IN (SELECT o_orderkey FROM ids)),
-            kv AS (SELECT id, uid, action, 'building' AS key FROM el
-                   WHERE mod(l_partkey, 3) = 0
-                   UNION ALL
-                   SELECT id, uid, action, 'highway' AS key FROM el
-                   WHERE mod(l_partkey, 5) = 0),
-            names AS (SELECT uid, user_name AS username FROM (
-                        SELECT mod(o_orderkey, 23) AS uid,
-                               'user_' || mod(o_orderkey, 23)::VARCHAR || '_'
-                                 || o_orderkey::VARCHAR AS user_name,
-                               row_number() OVER (PARTITION BY mod(o_orderkey, 23)
-                                                  ORDER BY o_orderkey DESC) AS rn
-                        FROM orders) WHERE rn = 1)
-            SELECT kv.uid, username, key, action,
-                   CAST(count(DISTINCT id) AS BIGINT) AS features
-            FROM kv LEFT JOIN names ON kv.uid = names.uid
-            GROUP BY 1, 2, 3, 4
-        """,
-        "propagate_relations": """
-            WITH nd AS (
-              SELECT c_custkey AS id,
-                     mod(c_custkey * 7919, 360000) / 1000.0 - 180.0 AS lon,
-                     mod(c_custkey * 104729, 170000) / 1000.0 - 85.0 AS lat,
-                     'N' || mod(c_custkey, 5)::VARCHAR AS country
-              FROM customer),
-            wy AS (
-              SELECT o_orderkey AS id, nd.lon, nd.lat,
-                     CASE WHEN mod(o_orderkey, 7) = 0 THEN 'OWN'
-                          ELSE nd.country END AS country
-              FROM orders LEFT JOIN nd ON o_custkey = nd.id)
-            SELECT p_partkey AS id,
-                   CASE WHEN mod(p_partkey, 3) = 0 THEN n2.lon
-                        WHEN mod(p_partkey, 3) = 1 THEN w2.lon
-                        ELSE NULL END AS lon,
-                   CASE WHEN mod(p_partkey, 3) = 0 THEN n2.lat
-                        WHEN mod(p_partkey, 3) = 1 THEN w2.lat
-                        ELSE NULL END AS lat,
-                   CASE WHEN mod(p_partkey, 11) = 0 THEN 'ROWN'
-                        WHEN mod(p_partkey, 3) = 0 THEN n2.country
-                        WHEN mod(p_partkey, 3) = 1 THEN w2.country
-                        ELSE NULL END AS country
-            FROM part
-            LEFT JOIN nd n2 ON mod(p_partkey, 100) = n2.id AND mod(p_partkey, 3) = 0
-            LEFT JOIN wy w2 ON mod(p_partkey, 200) = w2.id AND mod(p_partkey, 3) = 1
-        """,
-        "hot_changesets": f"""
-            WITH cs AS (
-              SELECT o_orderkey AS id,
-                     CASE WHEN mod(o_orderkey, 3) = 0 THEN '#hotosm-project fix'
-                          ELSE 'routine edit' END AS comment,
-                     mod(o_orderkey * 7919, 340000) / 1000.0 - 170.0 AS min_lon,
-                     mod(o_orderkey * 104729, 160000) / 1000.0 - 80.0 AS min_lat
-              FROM orders),
-            c AS (SELECT id, comment,
-                         (min_lon + (min_lon + 1.0)) / 2.0 AS lon,
-                         (min_lat + (min_lat + 0.25)) / 2.0 AS lat
-                  FROM cs)
-            SELECT id, {_country_case_sql()} AS country
-            FROM c WHERE lower(comment) LIKE '%hotosm%'
-        """,
-        # FULL recompute over the effective post-batch table: ids ≡0 mod 7
-        # take the v2 comment rule (hot iff even) and the 0.125°-shifted
-        # bbox; everything else keeps v1. The Spark side never recomputes
-        # the untouched rows — equality here IS the incremental-refresh
-        # theorem (delete-then-insert on touched ids == recompute).
-        "hot_changesets_inc": f"""
-            WITH cs AS (
-              SELECT o_orderkey AS id,
-                     CASE WHEN mod(o_orderkey, 7) = 0 THEN
-                            CASE WHEN mod(o_orderkey, 2) = 0
-                                 THEN '#hotosm-project fix'
-                                 ELSE 'routine edit' END
-                          ELSE
-                            CASE WHEN mod(o_orderkey, 3) = 0
-                                 THEN '#hotosm-project fix'
-                                 ELSE 'routine edit' END
-                     END AS comment,
-                     mod(o_orderkey * 7919, 340000) / 1000.0 - 170.0 AS min_lon,
-                     CASE WHEN mod(o_orderkey, 7) = 0
-                          THEN (mod(o_orderkey * 104729, 160000) / 1000.0 - 80.0) + 0.125
-                          ELSE mod(o_orderkey * 104729, 160000) / 1000.0 - 80.0
-                     END AS min_lat
-              FROM orders),
-            c AS (SELECT id, comment,
-                         (min_lon + (min_lon + 1.0)) / 2.0 AS lon,
-                         (min_lat + (min_lat + 0.25)) / 2.0 AS lat
-                  FROM cs)
-            SELECT id, {_country_case_sql()} AS country
-            FROM c WHERE lower(comment) LIKE '%hotosm%'
-        """,
-        # tablefmt catalog lane: the post-merge snapshot state as a plain
-        # relational expression — evens from the append, mod-3 rows carry
-        # the MERGE's +1000 (updates where even∩mod3, inserts where odd).
-        # Equality pins keep_last precedence AND (for table_time_travel)
-        # that as_of_ts=250 still resolves this state after snapshot 3
-        # overwrote the live table.
-        "table_merge_read": """
-            SELECT doc_id, source,
-                   CASE WHEN mod(doc_id, 3) = 0 THEN n_chars + 1000
-                        ELSE n_chars END AS n_chars
-            FROM documents
-            WHERE mod(doc_id, 2) = 0 OR mod(doc_id, 3) = 0
-        """,
-        "table_time_travel": """
-            SELECT doc_id, source,
-                   CASE WHEN mod(doc_id, 3) = 0 THEN n_chars + 1000
-                        ELSE n_chars END AS n_chars
-            FROM documents
-            WHERE mod(doc_id, 2) = 0 OR mod(doc_id, 3) = 0
-        """,
-        # systematic PPS sampling, replayed with the identical integer
-        # arithmetic on HUGEINT (DuckDB's native 128-bit — the oracle twin
-        # of Spark's DECIMAL(38,0) products); mod() on non-negative
-        # HUGEINTs == pmod, and the window carries an explicit ROWS frame
-        # so the prefix sum is the same total-order scan.
-        "pps_sample": """
-            WITH w AS (
-              SELECT doc_id, text, lang, source, n_chars,
-                     mod(mod(doc_id, 2147483648) * 2654435761 + 29,
-                         2147483648) AS h
-              FROM documents WHERE n_chars > 0),
-            c AS (
-              SELECT *,
-                     CAST(sum(n_chars) OVER (ORDER BY h, doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS HUGEINT) AS c,
-                     CAST(sum(n_chars) OVER () AS HUGEINT) AS W
-              FROM w)
-            SELECT doc_id, text, lang, source, n_chars FROM c
-            WHERE CAST(n_chars AS HUGEINT) * 97 >
-                  mod(c * 97, W) - mod((c - n_chars) * 97, W)
-        """,
-        "gapfill_weeks": """
-            WITH f AS (SELECT event_type, date_trunc('week', ts) AS w
-                       FROM events
-                       WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-            r AS (SELECT event_type, w AS bucket_start,
-                         CAST(count(*) AS BIGINT) AS n
-                  FROM f GROUP BY event_type, w),
-            s AS (SELECT k.event_type,
-                         unnest(generate_series(b.b0, b.b1,
-                                                INTERVAL 7 DAY))
-                             AS bucket_start
-                  FROM (SELECT DISTINCT event_type FROM f) k,
-                       (SELECT min(w) AS b0, max(w) AS b1 FROM f) b)
-            SELECT s.event_type, s.bucket_start,
-                   CAST(COALESCE(r.n, 0) AS BIGINT) AS n_events
-            FROM s LEFT JOIN r
-              ON s.event_type = r.event_type
-             AND s.bucket_start = r.bucket_start
-        """,
-        "anomaly_weeks": """
-            WITH ev AS (SELECT event_type, ts FROM events
-                        WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-            w0 AS (SELECT date_trunc('week', min(ts)) AS w FROM ev
-                   WHERE event_type = 'click'),
-            burst AS (SELECT e.event_type, e.ts
-                      FROM ev e, w0, generate_series(1, 9) g
-                      WHERE e.event_type = 'click'
-                        AND date_trunc('week', e.ts) = w0.w),
-            inp AS (SELECT * FROM ev UNION ALL SELECT * FROM burst),
-            f AS (SELECT event_type, date_trunc('week', ts) AS w FROM inp),
-            r AS (SELECT event_type, w AS bucket_start,
-                         CAST(count(*) AS BIGINT) AS n
-                  FROM f GROUP BY event_type, w),
-            s AS (SELECT k.event_type,
-                         unnest(generate_series(b.b0, b.b1,
-                                                INTERVAL 7 DAY))
-                             AS bucket_start
-                  FROM (SELECT DISTINCT event_type FROM f) k,
-                       (SELECT min(w) AS b0, max(w) AS b1 FROM f) b),
-            filled AS (SELECT s.event_type, s.bucket_start,
-                              CAST(COALESCE(r.n, 0) AS BIGINT) AS n_events
-                       FROM s LEFT JOIN r
-                         ON s.event_type = r.event_type
-                        AND s.bucket_start = r.bucket_start),
-            med AS (SELECT event_type,
-                           quantile_cont(n_events, 0.5) AS median_n
-                    FROM filled GROUP BY event_type)
-            SELECT filled.event_type, bucket_start, n_events, median_n,
-                   CAST(n_events AS DOUBLE) > 4.0 * median_n AS is_spike
-            FROM filled JOIN med ON filled.event_type = med.event_type
-        """,
-        # layout scan: exact level-4 membership via the unrolled Hilbert
-        # SQL — equality with the Spark side's level-14 BETWEEN range pins
-        # the S2 descendant-interval property across the clustered
-        # write/read roundtrip.
-        "spatial_layout_scan": (
-            f"SELECT event_id FROM ("
-            f"{_s2_cells_sql(_EV_PTS, level=3, rollup=False)}"
-            f") t WHERE s2_l12 = {_layout_qcell()}"
-        ),
-        "tasks_per_user": """
-            SELECT user_id, CAST(count(*) AS BIGINT) AS task_count
-            FROM (SELECT user_id, mod(event_id, 20) AS project_id,
-                         ts AS action_date, event_type AS action_text
-                  FROM events)
-            WHERE project_id IN (1, 2, 3)
-              AND action_date >= TIMESTAMP '2024-01-01 00:00:00'
-              AND action_date <= TIMESTAMP '2024-01-15 00:00:00'
-              AND action_text = 'click'
-            GROUP BY user_id
-        """,
-        "cos_near_dups": """
-            SELECT a, b, c AS cosine FROM (
-              SELECT a.vec_id AS a, b.vec_id AS b,
-                     list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                     / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                        * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-                       AS c
-              FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-            WHERE c >= 0.4
-        """,
-        "way_meters": """
-            SELECT o_orderkey AS way_id, CAST(1 AS BIGINT) AS way_version,
-                   CAST(1
-                        + (mod(o_custkey * 31, 100) <=
-                           (SELECT max(c_custkey) FROM customer))::int
-                        + (mod(o_custkey * 7, 100) <=
-                           (SELECT max(c_custkey) FROM customer))::int AS INT) AS n_pts,
-                   TRUE AS len_ok
-            FROM orders
-        """,
-        "cos_near_dups_lsh": """
-            WITH s AS (
-              SELECT vec_id, embedding FROM embeddings
-              WHERE mod(mod(vec_id, 1048576) * 1000003 + 99, 1048576)
-                    * (SELECT count(*) FROM embeddings) < 256 * 1048576),
-            tp AS (
-              SELECT DISTINCT least(s.vec_id, e.vec_id) AS a,
-                              greatest(s.vec_id, e.vec_id) AS b
-              FROM s JOIN embeddings e ON s.vec_id != e.vec_id
-              WHERE list_dot_product(s.embedding::DOUBLE[], e.embedding::DOUBLE[])
-                    / (sqrt(list_dot_product(s.embedding::DOUBLE[], s.embedding::DOUBLE[]))
-                       * sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])))
-                    >= 0.4)
-            SELECT CAST((SELECT count(*) FROM embeddings) AS BIGINT) AS n_vectors,
-                   CAST((SELECT count(*) FROM tp) AS BIGINT) AS n_true_pairs,
-                   TRUE AS recall_ok, TRUE AS sub_quadratic_ok
-        """,
-        "ann_ivf": """
-            SELECT CAST((SELECT count(*) FROM embeddings) AS BIGINT) AS n_vectors,
-                   CAST(5 * (SELECT count(*) FROM embeddings
-                             WHERE mod(vec_id * 1000003 + 42, 1048576)
-                                   * (SELECT count(*) FROM embeddings)
-                                   < 256 * 1048576) AS BIGINT) AS n_pairs,
-                   TRUE AS recall_ok
-        """,
-        "multimodal_features": """
-            WITH img AS (
-              SELECT doc_id AS media_id,
-                     rpad(regexp_replace(text, '[^ -~]', '', 'g'), 768, 'x') AS s
-              FROM documents WHERE mod(doc_id, 3) = 0 AND text IS NOT NULL),
-            e AS (SELECT media_id, s, unnest(range(8)) AS bin FROM img)
-            SELECT media_id, CAST(768 AS BIGINT) AS n_bytes, CAST(bin AS INT) AS bin,
-                   CAST(len(list_filter(string_split(s, ''),
-                        c -> ascii(c) // 32 = bin)) AS INT) AS n_in_bin,
-                   len(list_filter(string_split(s, ''),
-                        c -> ascii(c) // 32 = bin)) / 768.0 AS share
-            FROM e
-        """,
-        "geofence_dwell": f"""
-            WITH pts AS (
-              SELECT event_id, user_id, ts,
-                     {_POINTS_SQL.format(k="event_id")}
-              FROM events),
-            loc AS (
-              SELECT event_id, user_id, ts,
-                     {_country_case_sql()} AS country
-              FROM pts),
-            runs AS (
-              SELECT user_id, ts, event_id, country,
-                     CASE WHEN lag(country) OVER w IS DISTINCT FROM country
-                          THEN 1 ELSE 0 END AS nw
-              FROM loc
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            r2 AS (
-              SELECT *, sum(nw) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id
-                                      ROWS UNBOUNDED PRECEDING) AS run
-              FROM runs),
-            seg AS (
-              SELECT user_id, country, run,
-                     epoch_us(max(ts)) - epoch_us(min(ts)) AS dwell
-              FROM r2 WHERE country IS NOT NULL GROUP BY 1, 2, 3)
-            SELECT user_id, country, CAST(count(*) AS BIGINT) AS n_visits,
-                   CAST(sum(dwell) AS BIGINT) AS dwell_us
-            FROM seg GROUP BY 1, 2
-        """,
-        "cohort_retention": """
-            WITH su AS (
-              SELECT user_id AS u, date_trunc('week', min(ts)) AS cohort_week
-              FROM events WHERE event_type = 'signup' GROUP BY user_id),
-            act AS (
-              SELECT DISTINCT su.cohort_week, su.u,
-                     date_trunc('week', e.ts) AS aw
-              FROM events e JOIN su ON e.user_id = su.u
-              WHERE date_trunc('week', e.ts) >= su.cohort_week),
-            sizes AS (
-              SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_size
-              FROM su GROUP BY cohort_week),
-            ret AS (
-              SELECT cohort_week,
-                     CAST(date_diff('day', CAST(cohort_week AS DATE),
-                                    CAST(aw AS DATE)) / 7 AS INT)
-                       AS week_offset,
-                     CAST(count(DISTINCT u) AS BIGINT) AS active_users
-              FROM act GROUP BY 1, 2)
-            SELECT r.cohort_week, r.week_offset, r.active_users,
-                   s.cohort_size,
-                   CAST(r.active_users AS DOUBLE)
-                     / CAST(s.cohort_size AS DOUBLE) AS retention
-            FROM ret r JOIN sizes s ON r.cohort_week = s.cohort_week
-        """,
-        "semantic_prune": """
-            WITH RECURSIVE cent AS (
-              SELECT embedding AS cvec,
-                     CAST(row_number() OVER (
-                       ORDER BY mod(vec_id * 2654435761 + 42,
-                                    2 * (SELECT count(*) FROM embeddings) + 1),
-                                vec_id) AS INT) AS cent_id
-              FROM embeddings
-              QUALIFY cent_id <= 16),
-            scored AS (
-              SELECT a.vec_id, c.cent_id,
-                     list_dot_product(a.embedding::DOUBLE[], c.cvec::DOUBLE[])
-                     / (sqrt(list_dot_product(a.embedding::DOUBLE[],
-                                              a.embedding::DOUBLE[]))
-                        * sqrt(list_dot_product(c.cvec::DOUBLE[],
-                                                c.cvec::DOUBLE[]))) AS score
-              FROM embeddings a CROSS JOIN cent c),
-            asg AS (
-              SELECT vec_id, cent_id FROM (
-                SELECT vec_id, cent_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY score DESC, cent_id) AS rn
-                FROM scored) WHERE rn = 1),
-            prs AS (
-              SELECT x.vec_id AS a, y.vec_id AS b
-              FROM asg x JOIN asg y
-                ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
-              JOIN embeddings ea ON ea.vec_id = x.vec_id
-              JOIN embeddings eb ON eb.vec_id = y.vec_id
-              WHERE list_dot_product(ea.embedding::DOUBLE[],
-                                     eb.embedding::DOUBLE[])
-                    / (sqrt(list_dot_product(ea.embedding::DOUBLE[],
-                                             ea.embedding::DOUBLE[]))
-                       * sqrt(list_dot_product(eb.embedding::DOUBLE[],
-                                               eb.embedding::DOUBLE[])))
-                    >= 0.4),
-            nodes AS (SELECT vec_id AS id FROM embeddings),
-            edges AS (SELECT a AS src, b AS dst FROM prs
-                      UNION SELECT b, a FROM prs),
-            reach(src, dst) AS (
-              SELECT id, id FROM nodes
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-            roots AS (SELECT src, MIN(dst) AS cluster_id FROM reach GROUP BY src)
-            SELECT n.id AS vec_id, asg.cent_id, roots.cluster_id,
-                   CAST(roots.cluster_id = n.id AS INT) AS is_kept
-            FROM nodes n
-            JOIN asg ON asg.vec_id = n.id
-            JOIN roots ON roots.src = n.id
-        """,
-        "column_profile": """
-            SELECT 'o_orderkey' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-                   CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_distinct,
-                   NULL::VARCHAR AS min_str, NULL::VARCHAR AS max_str,
-                   CAST(min(o_orderkey) AS DOUBLE) AS min_num,
-                   CAST(max(o_orderkey) AS DOUBLE) AS max_num FROM orders
-            UNION ALL
-            SELECT 'o_custkey', CAST(count(*) AS BIGINT),
-                   CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(count(DISTINCT o_custkey) AS BIGINT),
-                   NULL, NULL, CAST(min(o_custkey) AS DOUBLE),
-                   CAST(max(o_custkey) AS DOUBLE) FROM orders
-            UNION ALL
-            SELECT 'o_orderstatus', CAST(count(*) AS BIGINT),
-                   CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(count(DISTINCT o_orderstatus) AS BIGINT),
-                   min(o_orderstatus), max(o_orderstatus), NULL::DOUBLE,
-                   NULL::DOUBLE FROM orders
-            UNION ALL
-            SELECT 'o_totalprice', CAST(count(*) AS BIGINT),
-                   CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(count(DISTINCT o_totalprice) AS BIGINT),
-                   NULL, NULL, CAST(min(o_totalprice) AS DOUBLE),
-                   CAST(max(o_totalprice) AS DOUBLE) FROM orders
-            UNION ALL
-            SELECT 'o_orderdate', CAST(count(*) AS BIGINT),
-                   CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(count(DISTINCT o_orderdate) AS BIGINT),
-                   CAST(min(o_orderdate) AS VARCHAR), CAST(max(o_orderdate) AS VARCHAR),
-                   NULL::DOUBLE, NULL::DOUBLE FROM orders
-            UNION ALL
-            SELECT 'o_orderpriority', CAST(count(*) AS BIGINT),
-                   CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                   CAST(count(DISTINCT o_orderpriority) AS BIGINT),
-                   min(o_orderpriority), max(o_orderpriority), NULL::DOUBLE,
-                   NULL::DOUBLE FROM orders
-        """,
-        "funnel_steps": """
-            WITH s1 AS (
-              SELECT user_id, min(ts) AS t FROM events
-              WHERE event_type = 'view' GROUP BY user_id),
-            s2 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s1 ON e.user_id = s1.user_id
-              WHERE e.event_type = 'click' AND e.ts > s1.t
-                AND e.ts <= s1.t + INTERVAL 72 HOUR
-              GROUP BY e.user_id),
-            s3 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s2 ON e.user_id = s2.user_id
-              WHERE e.event_type = 'purchase' AND e.ts > s2.t
-                AND e.ts <= s2.t + INTERVAL 72 HOUR
-              GROUP BY e.user_id),
-            u AS (
-              SELECT 1 AS step, 'view' AS event_type,
-                     CAST(count(*) AS BIGINT) AS users FROM s1
-              UNION ALL
-              SELECT 2, 'click', CAST(count(*) AS BIGINT) FROM s2
-              UNION ALL
-              SELECT 3, 'purchase', CAST(count(*) AS BIGINT) FROM s3)
-            SELECT step, event_type, users,
-                   CAST(users AS DOUBLE) / CAST(max(users) OVER () AS DOUBLE)
-                     AS conversion
-            FROM u
-        """,
-        "scd2_intervals": """
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts
-              FROM lineitem)
-            SELECT type, id, version,
-                   ts AS valid_from,
-                   lead(ts) OVER (PARTITION BY type, id ORDER BY version)
-                     AS valid_to,
-                   CASE WHEN lead(ts) OVER (PARTITION BY type, id
-                                            ORDER BY version) IS NULL
-                        THEN 1 ELSE 0 END AS is_current
-            FROM el
-        """,
-        "scd2_merge": """
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts
-              FROM lineitem)
-            SELECT type, id, version,
-                   ts AS valid_from,
-                   lead(ts) OVER (PARTITION BY type, id ORDER BY version)
-                     AS valid_to,
-                   CASE WHEN lead(ts) OVER (PARTITION BY type, id
-                                            ORDER BY version) IS NULL
-                        THEN 1 ELSE 0 END AS is_current
-            FROM el
-        """,
-        "phash_pairs": """
-            WITH img AS (
-              SELECT doc_id AS media_id,
-                     rpad(regexp_replace(text, '[^ -~]', '', 'g'), 768, 'x') AS s
-              FROM documents WHERE mod(doc_id, 3) = 0 AND text IS NOT NULL),
-            g AS (
-              SELECT media_id,
-                     list_transform(range(256),
-                       p -> ascii(s[3*p+1]) + ascii(s[3*p+2]) + ascii(s[3*p+3]))
-                       AS gray
-              FROM img),
-            h AS (
-              SELECT media_id,
-                     list_transform(range(64), b ->
-                       gray[(2*(b//8))*16 + 2*mod(b,8) + 1]
-                     + gray[(2*(b//8))*16 + 2*mod(b,8) + 2]
-                     + gray[(2*(b//8)+1)*16 + 2*mod(b,8) + 1]
-                     + gray[(2*(b//8)+1)*16 + 2*mod(b,8) + 2]) AS blocks,
-                     list_sum(gray) AS total
-              FROM g),
-            bits AS (
-              SELECT media_id,
-                     list_transform(range(64), b ->
-                       CASE WHEN blocks[b+1]*64 > total THEN 1 ELSE 0 END) AS bit
-              FROM h),
-            ah AS (
-              SELECT media_id,
-                     CAST(list_sum(list_transform(range(63),
-                            b -> bit[b+1] * (CAST(1 AS BIGINT) << b))) AS BIGINT)
-                     + CASE WHEN bit[64] = 1
-                            THEN CAST(-9223372036854775807 - 1 AS BIGINT)
-                            ELSE 0 END AS ahash
-              FROM bits)
-            SELECT a.media_id AS a, b.media_id AS b,
-                   CAST(bit_count(xor(a.ahash, b.ahash)) AS INT) AS hamming
-            FROM ah a JOIN ah b ON a.media_id < b.media_id
-            WHERE a.ahash != 0 AND b.ahash != 0
-              AND bit_count(xor(a.ahash, b.ahash)) <= 3
-        """,
-        "ann_topk": """
-            SELECT id, neighbor_id, score, CAST(rank AS INT) AS rank FROM (
-              SELECT a.vec_id AS id, b.vec_id AS neighbor_id,
-                     list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                     / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                        * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-                       AS score,
-                     row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                       list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                       / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                          * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-                       DESC, b.vec_id ASC) AS rank
-              FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id)
-            WHERE rank <= 5
-        """,
-        "country_insights_tm": """
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts,
-                     l_partkey AS changeset,
-                     mod(l_partkey, 3) = 0 AS has_building,
-                     CASE WHEN mod(l_suppkey, 5) = 4 THEN NULL
-                          ELSE 'C' || mod(l_suppkey, 5)::VARCHAR END AS country
-              FROM lineitem),
-            latest AS (
-              SELECT * FROM (
-                SELECT *, row_number() OVER (PARTITION BY type, id
-                           ORDER BY version DESC) AS rn
-                FROM el WHERE ts < TIMESTAMP '1997-01-01') WHERE rn = 1),
-            b AS (SELECT * FROM latest
-                  WHERE has_building AND type IN ('way', 'relation')
-                    AND country IS NOT NULL),
-            hot AS (SELECT p_partkey AS hid FROM part WHERE mod(p_partkey, 3) = 0)
-            SELECT country,
-                   CAST(count(DISTINCT id) AS BIGINT) AS building_count,
-                   CAST(count(DISTINCT CASE WHEN hid IS NOT NULL THEN id END)
-                        AS BIGINT) AS tm_building_count,
-                   TIMESTAMP '1997-01-01 00:00:00' AS by_month
-            FROM b LEFT JOIN hot ON b.changeset = hot.hid
-            GROUP BY country
-        """,
-        "first_last_used": """
-            WITH cs AS (
-              SELECT o_orderkey AS id, o_orderdate AS created_at,
-                     'fix #camp' || mod(o_orderkey, 4)::VARCHAR ||
-                     CASE WHEN mod(o_orderkey, 3) = 0 THEN ' work' ELSE '' END
-                       AS comment
-              FROM orders),
-            reg AS (SELECT * FROM (VALUES
-                      (1, 'camp0', NULL::DATE, NULL::DATE),
-                      (2, 'camp1', DATE '1990-01-01', DATE '1994-06-15'),
-                      (3, 'camp2', NULL::DATE, NULL::DATE))
-                    t(id, name, first_used, last_used)),
-            fresh AS (SELECT reg.id,
-                             CAST(min(created_at) AS DATE) AS nf,
-                             CAST(max(created_at) AS DATE) AS nl
-                      FROM cs JOIN reg
-                        ON lower(comment) LIKE '%#' || name || ' %'
-                        OR lower(comment) LIKE '%#' || name
-                      GROUP BY reg.id)
-            SELECT CAST(reg.id AS BIGINT) AS id, name,
-                   coalesce(reg.first_used, fresh.nf) AS first_used,
-                   greatest(reg.last_used, fresh.nl) AS last_used
-            FROM reg LEFT JOIN fresh ON reg.id = fresh.id
-        """,
-    }
-    from insights_spark.geo.cells import geohash_sql as _gh_sql
-
-    out["geohash_cells"] = f"""
-        WITH pts AS ({_EV_PTS})
-        SELECT {_gh_sql('lon', 'lat', 5)} AS gh,
-               CAST(count(*) AS BIGINT) AS n
-        FROM pts GROUP BY 1
-    """
-    out["sessionize"] = """
-        WITH l AS (
-          SELECT user_id, ts, event_id,
-                 lag(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts ASC, event_id ASC) AS prev_ts
-          FROM events),
-        f AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN prev_ts IS NULL
-                        OR ts - prev_ts > INTERVAL 21600 SECONDS
-                      THEN 1 ELSE 0 END AS is_new
-          FROM l),
-        s AS (
-          SELECT user_id, ts,
-                 sum(is_new) OVER (PARTITION BY user_id
-                                   ORDER BY ts ASC, event_id ASC
-                                   ROWS UNBOUNDED PRECEDING) AS session_idx
-          FROM f)
-        SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-               min(ts) AS session_start, max(ts) AS session_end,
-               CAST(count(*) AS BIGINT) AS n_events
-        FROM s GROUP BY user_id, session_idx
-    """
-    out["od_flows"] = f"""
-        WITH {_hex_cells_chain_sql(
-            0,
-            src="SELECT event_id, user_id, ts, "
-                + _POINTS_SQL.format(k='event_id') + " FROM events",
-            carry="event_id, user_id, ts",
-        )},
-        lagged AS (SELECT user_id, cell,
-                          lag(cell) OVER (PARTITION BY user_id
-                              ORDER BY ts ASC, event_id ASC) AS prev
-                   FROM hexed)
-        SELECT prev AS cell_from, cell AS cell_to,
-               CAST(count(*) AS BIGINT) AS n_moves,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM lagged
-        WHERE prev IS NOT NULL AND prev <> cell
-        GROUP BY 1, 2
-    """
-    out["regional_revenue"] = """
-        SELECT n_name,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                        * (100 - CAST(round(l_discount * 100) AS BIGINT)))
-                    AS BIGINT) AS revenue_e4,
-               CAST(count(*) AS BIGINT) AS n_items
-        FROM lineitem
-             JOIN orders   ON l_orderkey = o_orderkey
-             JOIN customer ON o_custkey = c_custkey
-             JOIN supplier ON l_suppkey = s_suppkey
-                          AND c_nationkey = s_nationkey
-             JOIN nation   ON s_nationkey = n_nationkey
-             JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate < TIMESTAMP '1997-01-01'
-        GROUP BY n_name
-    """
-    out["normalize_text"] = """
-        WITH aug AS (SELECT doc_id,
-                            coalesce(text, '') ||
-                            CASE CAST(doc_id % 5 AS INT)
-                              WHEN 0 THEN ' cafe' || chr(769)
-                                          || ' du   monde '
-                              WHEN 1 THEN chr(9) || 'tab' || chr(1)
-                              ELSE '' END AS text
-                     FROM documents),
-        n AS (SELECT doc_id, text,
-                     trim(regexp_replace(regexp_replace(
-                            nfc_normalize(text),
-                            '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]',
-                            '', 'g'),
-                          '[ \\t\\n\\r\\f\\v]+', ' ', 'g'),
-                          ' ' || chr(9) || chr(10) || chr(13)
-                              || chr(12) || chr(11)) AS norm_text
-              FROM aug)
-        SELECT doc_id, norm_text,
-               CAST(norm_text <> text AS INT) AS changed,
-               CAST(length(norm_text) AS BIGINT) AS n_chars
-        FROM n
-    """
-    out["theil_sen"] = f"""
-        WITH {_hex_cells_chain_sql(
-            0,
-            src="SELECT event_id, ts, "
-                + _POINTS_SQL.format(k='event_id') + " FROM events",
-            carry="event_id, ts",
-        )},
-        wk0 AS (SELECT cell, CAST(date_trunc('day', ts) AS TIMESTAMP)
-                         AS day,
-                       CAST(count(*) AS BIGINT) AS cnt,
-                       CAST(min(event_id) AS BIGINT) AS mid
-                FROM hexed GROUP BY 1, 2),
-        wk AS (SELECT cell,
-                      date_diff('day', TIMESTAMP '1970-01-01', day) AS t,
-                      cnt + CASE WHEN cell % 7 = 0 THEN mid // 1000
-                                 ELSE 0 END AS x
-               FROM wk0),
-        np AS (SELECT cell, CAST(count(*) AS BIGINT) AS npts
-               FROM wk GROUP BY 1),
-        pairs AS (SELECT a.cell,
-                         CAST(b.x - a.x AS BIGINT) AS num,
-                         CAST(b.t - a.t AS BIGINT) AS den
-                  FROM wk a JOIN wk b
-                    ON a.cell = b.cell AND a.t < b.t),
-        ranked AS (SELECT cell, num, den,
-                          CAST(row_number() OVER (PARTITION BY cell
-                               ORDER BY CAST(num AS DOUBLE) / den ASC,
-                                        num ASC, den ASC)
-                               AS BIGINT) AS rn,
-                          CAST(count(*) OVER (PARTITION BY cell)
-                               AS BIGINT) AS n_pairs
-                   FROM pairs)
-        SELECT r.cell, r.n_pairs, r.num AS med_num, r.den AS med_den,
-               CAST(r.num AS DOUBLE) / r.den AS slope_per_day
-        FROM ranked r JOIN np ON np.cell = r.cell
-        WHERE r.rn = (r.n_pairs + 1) // 2 AND np.npts >= 6
-    """
-    out["mann_kendall"] = f"""
-        WITH {_hex_cells_chain_sql(
-            0,
-            src="SELECT event_id, ts, "
-                + _POINTS_SQL.format(k='event_id') + " FROM events",
-            carry="event_id, ts",
-        )},
-        wk0 AS (SELECT cell, CAST(date_trunc('day', ts) AS TIMESTAMP)
-                         AS day,
-                       CAST(count(*) AS BIGINT) AS cnt,
-                       CAST(min(event_id) AS BIGINT) AS mid
-                FROM hexed GROUP BY 1, 2),
-        wk AS (SELECT cell, day,
-                      cnt + CASE WHEN cell % 7 = 0 THEN mid // 1000
-                                 ELSE 0 END AS n
-               FROM wk0),
-        s AS (SELECT a.cell,
-                     CAST(sum(CASE WHEN b.n > a.n THEN 1
-                                   WHEN b.n < a.n THEN -1
-                                   ELSE 0 END) AS BIGINT) AS s_stat
-              FROM wk a JOIN wk b
-                ON a.cell = b.cell AND a.day < b.day
-              GROUP BY 1),
-        np AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_points
-               FROM wk GROUP BY 1),
-        ties AS (SELECT cell,
-                        CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT)
-                          AS tie_corr
-                 FROM (SELECT cell, n, CAST(count(*) AS BIGINT) AS t
-                       FROM wk GROUP BY 1, 2)
-                 GROUP BY 1),
-        j AS (SELECT np.cell, n_points, coalesce(s.s_stat, 0) AS s_stat,
-                     n_points * (n_points - 1) * (2 * n_points + 5)
-                       - tie_corr AS var18
-              FROM np JOIN ties USING (cell)
-                   LEFT JOIN s USING (cell)
-              WHERE n_points >= 6)
-        SELECT cell, n_points, s_stat, CAST(var18 AS BIGINT) AS var18,
-               CAST(CASE WHEN s_stat > 0 THEN 1
-                         WHEN s_stat < 0 THEN -1 ELSE 0 END AS INT)
-                 AS trend,
-               CAST(CASE WHEN abs(s_stat) >= 1
-                          AND 18 * (abs(s_stat) - 1) * (abs(s_stat) - 1)
-                              * 625 > 2401 * var18
-                         THEN 1 ELSE 0 END AS INT) AS is_sig
-        FROM j
-    """
-    out["cusum"] = f"""
-        WITH {_hex_cells_chain_sql(
-            0,
-            src="SELECT event_id, ts, "
-                + _POINTS_SQL.format(k='event_id') + " FROM events",
-            carry="event_id, ts",
-        )},
-        wk AS (SELECT cell, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                      CAST(count(*) AS BIGINT) AS n
-               FROM hexed GROUP BY 1, 2),
-        st AS (SELECT cell, day, n,
-                      CAST(row_number() OVER (PARTITION BY cell
-                           ORDER BY day) AS BIGINT) AS t,
-                      CAST(sum(n) OVER (PARTITION BY cell ORDER BY day
-                           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pre,
-                      CAST(sum(n) OVER (PARTITION BY cell) AS BIGINT)
-                        AS total,
-                      CAST(count(*) OVER (PARTITION BY cell) AS BIGINT)
-                        AS len
-               FROM wk),
-        cand AS (SELECT cell,
-                        {{'negabs': -abs(len * pre - t * total),
-                          't_star': t, 'at_wk': day,
-                          's_star': len * pre - t * total,
-                          'total': total, 'n_points': len}} AS c
-                 FROM st WHERE len >= 6)
-        SELECT cell, (pick).t_star AS t_star, (pick).at_wk AS at,
-               (pick).s_star AS s_star, (pick).total AS total,
-               (pick).n_points AS n_points
-        FROM (SELECT cell, min(c) AS pick FROM cand GROUP BY cell)
-    """
-    out["concurrency"] = """
-        WITH l AS (
-          SELECT user_id, ts, event_id,
-                 lag(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts ASC, event_id ASC) AS prev_ts
-          FROM events),
-        f AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN prev_ts IS NULL
-                        OR ts - prev_ts > INTERVAL 21600 SECONDS
-                      THEN 1 ELSE 0 END AS is_new
-          FROM l),
-        s AS (
-          SELECT user_id, ts,
-                 sum(is_new) OVER (PARTITION BY user_id
-                                   ORDER BY ts ASC, event_id ASC
-                                   ROWS UNBOUNDED PRECEDING) AS session_idx
-          FROM f),
-        sess AS (SELECT user_id, session_idx,
-                        min(ts) AS session_start, max(ts) AS session_end
-                 FROM s GROUP BY user_id, session_idx),
-        b AS (SELECT session_start AS t, 1 AS ds, 0 AS de FROM sess
-              UNION ALL
-              SELECT session_end, 0, 1 FROM sess),
-        g AS (SELECT t, CAST(sum(ds) AS BIGINT) AS n_starts,
-                     CAST(sum(de) AS BIGINT) AS n_ends
-              FROM b GROUP BY 1),
-        c AS (SELECT t, n_starts, n_ends,
-                     sum(n_starts) OVER (ORDER BY t ASC
-                                         ROWS UNBOUNDED PRECEDING) AS cs,
-                     sum(n_ends) OVER (ORDER BY t ASC
-                                       ROWS UNBOUNDED PRECEDING) AS ce
-              FROM g)
-        SELECT t, n_starts, n_ends,
-               CAST(cs - (ce - n_ends) AS BIGINT) AS concurrent,
-               CAST(cs - ce AS BIGINT) AS concurrent_after
-        FROM c
-    """
-    out["rep_filters"] = f"""
-        WITH d AS (SELECT doc_id, {_TOKENS} AS toks,
-                          length(regexp_replace(lower(text), '\\s+', '', 'g'))
-                            AS tok_chars
-                   FROM documents WHERE text IS NOT NULL),
-        tok AS (SELECT doc_id, t AS tok, count(*) AS c
-                FROM d, unnest(toks) u(t) GROUP BY doc_id, t),
-        ta AS (SELECT doc_id, sum(c) AS n_toks,
-                      sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_toks,
-                      sum(CASE WHEN c > 1 THEN c * length(tok) ELSE 0 END)
-                        AS dup_tok_chars
-               FROM tok GROUP BY doc_id),
-        g AS (SELECT doc_id, toks[i] || ' ' || toks[i+1] AS gram
-              FROM d, unnest(range(1, len(toks))) t(i)),
-        gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY doc_id, gram),
-        ga AS (SELECT doc_id,
-                      sum(CASE WHEN c > 1 THEN c * (length(gram) - 1)
-                          ELSE 0 END) AS dup_gram_chars
-               FROM gc GROUP BY doc_id),
-        gt AS (SELECT doc_id, c, gram,
-                      row_number() OVER (PARTITION BY doc_id
-                                         ORDER BY c DESC, gram ASC) AS rn
-               FROM gc)
-        SELECT d.doc_id,
-               CAST(coalesce(ta.n_toks, 0) AS BIGINT) AS n_tokens,
-               CASE WHEN coalesce(ta.n_toks, 0) > 0
-                    THEN ta.dup_toks / ta.n_toks ELSE 0.0 END AS dup_token_frac,
-               CASE WHEN d.tok_chars > 0
-                    THEN coalesce(ta.dup_tok_chars, 0) / d.tok_chars
-                    ELSE 0.0 END AS dup_token_char_frac,
-               CASE WHEN d.tok_chars > 0 AND tg.gram IS NOT NULL
-                    THEN tg.c * (length(tg.gram) - 1) / d.tok_chars
-                    ELSE 0.0 END AS top_2gram_char_frac,
-               CASE WHEN d.tok_chars > 0
-                    THEN coalesce(ga.dup_gram_chars, 0) / d.tok_chars
-                    ELSE 0.0 END AS dup_2gram_char_frac
-        FROM d
-        LEFT JOIN ta USING (doc_id)
-        LEFT JOIN ga USING (doc_id)
-        LEFT JOIN (SELECT doc_id, c, gram FROM gt WHERE rn = 1) tg USING (doc_id)
-    """
-    out["boilerplate"] = f"""
-        WITH d AS (SELECT doc_id, {_TOKENS} AS toks FROM documents
-                   WHERE text IS NOT NULL AND len({_TOKENS}) > 0),
-        seg AS (SELECT doc_id,
-                       array_to_string(toks[(j-1)*10+1:j*10], ' ') AS line
-                FROM d, unnest(range(1, CAST(ceil(len(toks) / 10.0) AS BIGINT)
-                                        + 1)) t(j)),
-        dfc AS (SELECT line, count(DISTINCT doc_id) AS dfd FROM seg
-                GROUP BY line),
-        fl AS (SELECT s.doc_id, s.line, (dfc.dfd >= 2) AS isb
-               FROM seg s JOIN dfc USING (line))
-        SELECT doc_id,
-               CAST(count(*) AS BIGINT) AS n_segs,
-               CAST(sum(CASE WHEN isb THEN 1 ELSE 0 END) AS BIGINT)
-                 AS boiler_segs,
-               sum(CASE WHEN isb THEN 1 ELSE 0 END) / count(*) AS boiler_frac,
-               CAST(sum(CASE WHEN isb THEN 0
-                        ELSE len(string_split(line, ' ')) END) AS BIGINT)
-                 AS kept_tokens
-        FROM fl GROUP BY doc_id
-    """
-    from insights_spark.text.pii import EMAIL_RE, IPV4_RE, PHONE_RE
-
-    out["pii_scrub"] = f"""
-        WITH aug AS (
-          SELECT doc_id,
-                 CASE doc_id % 13
-                   WHEN 0 THEN text || ' contact user' ||
-                               CAST(doc_id AS VARCHAR) || '@example.com now'
-                   WHEN 1 THEN text || ' call (555) 010-' ||
-                               lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                   WHEN 2 THEN text || ' from 10.0.' ||
-                               CAST(doc_id % 256 AS VARCHAR) || '.' ||
-                               CAST(doc_id % 256 AS VARCHAR) || ' logged'
-                   ELSE text END AS text
-          FROM documents)
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(text, '{EMAIL_RE}')) AS INT)
-                 AS n_emails,
-               CAST(len(regexp_extract_all(text, '{PHONE_RE}')) AS INT)
-                 AS n_phones,
-               CAST(len(regexp_extract_all(text, '{IPV4_RE}')) AS INT)
-                 AS n_ips,
-               regexp_replace(regexp_replace(regexp_replace(text,
-                 '{EMAIL_RE}', '<EMAIL>', 'g'),
-                 '{PHONE_RE}', '<PHONE>', 'g'),
-                 '{IPV4_RE}', '<IP>', 'g') AS redacted
-        FROM aug
-    """
-    out["budget_select"] = f"""
-        WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents
-                   WHERE text IS NOT NULL),
-        d AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-                     len(list_distinct(toks))::DOUBLE / len(toks) AS uniq
-              FROM t WHERE len(toks) > 0),
-        c AS (SELECT doc_id, n_tokens,
-                     sum(n_tokens) OVER (ORDER BY uniq DESC, doc_id)
-                       AS cum_tokens
-              FROM d)
-        SELECT doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-        FROM c WHERE cum_tokens <= 8000
-    """
-    out["classifier_score"] = f"""
-        WITH d AS (SELECT doc_id, {_TOKENS} AS toks FROM documents
-                   WHERE text IS NOT NULL),
-        tr AS (SELECT doc_id, t AS tok FROM d, unnest(toks) u(t)),
-        vocab AS (SELECT DISTINCT tok FROM tr),
-        w AS (SELECT tok,
-                     CAST(({_POLY_HASH.format(s='tok')}) % 97 - 48 AS BIGINT)
-                       AS w
-              FROM vocab),
-        s AS (SELECT doc_id, sum(w.w) AS sw, count(*) AS n
-              FROM tr JOIN w USING (tok) GROUP BY doc_id)
-        SELECT doc_id,
-               CAST(n AS BIGINT) AS n_tokens,
-               sw / (97.0 * n) AS score,
-               sw > 0 AS keep
-        FROM s
-    """
-    # CC oracle composes the minhash-pair SQL verbatim as a CTE, so the
-    # pair set under test is bit-identical to the minhash_lsh_pairs oracle
-    out["dedup_clusters"] = f"""
-        WITH RECURSIVE prs AS ({out["minhash_lsh_pairs"]}),
-        nodes AS (SELECT doc_id AS id FROM documents),
-        edges AS (SELECT a AS src, b AS dst FROM prs
-                  UNION SELECT b AS src, a AS dst FROM prs),
-        reach(src, dst) AS (
-            SELECT id, id FROM nodes
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        )
-        SELECT n.id AS doc_id, c.cluster_id,
-               n.id = c.cluster_id AS is_canonical
-        FROM nodes n
-        JOIN (SELECT src, MIN(dst) AS cluster_id FROM reach GROUP BY src) c
-          ON n.id = c.src
-    """
-    _mvi_band = (
-        "SELECT doc_id, {b} AS band, sig[{lo}:{hi}] AS key, sig "
-        "FROM live WHERE doc_id % 3 {op} 0"
-    )
-    _mvi_batch = " UNION ALL ".join(
-        _mvi_band.format(b=b, lo=b * 4 + 1, hi=b * 4 + 4, op="=")
-        for b in range(4)
-    )
-    _mvi_index = " UNION ALL ".join(
-        _mvi_band.format(b=b, lo=b * 4 + 1, hi=b * 4 + 4, op="!=")
-        for b in range(4)
-    )
-    out["minhash_vs_index"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        grams AS (
-          SELECT doc_id,
-                 CASE WHEN len(tok) >= 3 THEN list_distinct(list_transform(
-                   range(1, len(tok) - 1), i -> array_to_string(tok[i:i+2], ' ')))
-                 ELSE [] END AS gs
-          FROM toks),
-        gh AS (SELECT doc_id, list_transform(gs, g -> {_POLY_HASH.format(s='g')})
-                 AS hs
-               FROM grams),
-        sig AS (SELECT doc_id, [{sig16}] AS sig FROM gh),
-        live AS (SELECT doc_id, sig FROM sig WHERE sig[1] != 1000000007),
-        ba AS ({_mvi_batch}),
-        bx AS ({_mvi_index}),
-        cand AS (SELECT ba.doc_id AS a, bx.doc_id AS b,
-                        any_value(ba.sig) AS sa, any_value(bx.sig) AS sb
-                 FROM ba JOIN bx USING (band, key) GROUP BY 1, 2)
-        SELECT a, b,
-               len(list_filter(range(1, 17), i -> sa[i] = sb[i])) / 16.0
-                 AS est_jaccard
-        FROM cand
-        WHERE len(list_filter(range(1, 17), i -> sa[i] = sb[i])) / 16.0 >= 0.5
-    """
-    out["bm25"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents
-                      WHERE text IS NOT NULL),
-        dl AS (SELECT doc_id, CAST(len(tok) AS BIGINT) AS dl FROM toks),
-        stats AS (SELECT CAST(sum(dl) AS BIGINT) / count(*) AS avgdl,
-                         CAST(count(*) AS BIGINT) AS n_docs FROM dl),
-        dterms AS (SELECT doc_id, unnest(list_distinct(tok)) AS term FROM toks),
-        alldf AS (SELECT term, count(*) AS df FROM dterms GROUP BY 1),
-        qterms AS (SELECT term FROM alldf WHERE df <= 50
-                   ORDER BY df DESC, term ASC LIMIT 8),
-        tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-               FROM (SELECT doc_id, unnest(tok) AS term FROM toks)
-               JOIN qterms USING (term) GROUP BY 1, 2),
-        dfs AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        w AS (SELECT t.doc_id,
-                     ((n_docs - d.df + 0.5::DOUBLE) / (d.df + 0.5::DOUBLE))
-                     * ((t.tf * (1.2::DOUBLE + 1.0::DOUBLE)) /
-                        (t.tf + 1.2::DOUBLE * (1.0::DOUBLE - 0.75::DOUBLE
-                           + 0.75::DOUBLE * (dl.dl / stats.avgdl)))) AS w
-              FROM tf t JOIN dfs d USING (term)
-                   JOIN dl ON t.doc_id = dl.doc_id, stats)
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-               list_reduce(list_prepend(0.0::DOUBLE, list_sort(list(w))),
-                           (a, c) -> a + c) AS score
-        FROM w GROUP BY doc_id
-    """
-    out["hybrid_search"] = f"""
-        WITH bm AS ({out["bm25"]}),
-        q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        cos AS (SELECT vec_id AS doc_id,
-                       list_dot_product(embedding::DOUBLE[], q.qv::DOUBLE[])
-                       / (sqrt(list_dot_product(embedding::DOUBLE[],
-                                                embedding::DOUBLE[]))
-                          * sqrt(list_dot_product(q.qv::DOUBLE[],
-                                                  q.qv::DOUBLE[])))
-                         AS score
-                FROM embeddings, q),
-        ra AS (SELECT doc_id,
-                      CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-                           AS BIGINT) AS rank_a
-               FROM bm),
-        rb AS (SELECT doc_id,
-                      CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-                           AS BIGINT) AS rank_b
-               FROM cos)
-        SELECT coalesce(ra.doc_id, rb.doc_id) AS doc_id, rank_a, rank_b,
-               CAST(coalesce(1000000000 // (60 + rank_a), 0)
-                    + coalesce(1000000000 // (60 + rank_b), 0) AS BIGINT)
-                 AS rrf
-        FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id
-    """
-    out["containment"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        grams0 AS (
-          SELECT doc_id, unnest(list_distinct(list_transform(
-                   range(1, len(tok) - 1),
-                   i -> array_to_string(tok[i:i+2], ' ')))) AS gram
-          FROM toks WHERE len(tok) >= 3),
-        keep AS (SELECT gram FROM grams0 GROUP BY gram HAVING count(*) <= 50),
-        grams AS (SELECT grams0.doc_id, grams0.gram
-                  FROM grams0 JOIN keep USING (gram)),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id),
-        inter AS (SELECT g1.doc_id AS a, g2.doc_id AS b, count(*) AS i
-                  FROM grams g1 JOIN grams g2 USING (gram)
-                  WHERE g1.doc_id != g2.doc_id GROUP BY 1, 2)
-        SELECT a, b, i::DOUBLE / sa.sz AS containment
-        FROM inter JOIN sizes sa ON inter.a = sa.doc_id
-        WHERE i::DOUBLE / sa.sz >= 0.6
-    """
-    out["hex_smooth"] = f"""
-        WITH {_hex_cnts_sql(1)},
-        contrib AS (SELECT cell + off AS t, n
-                    FROM cnts, unnest([0::BIGINT, 268435456, -268435456,
-                                       1, -1, 268435455, -268435455])
-                         AS u(off)),
-        ring AS (SELECT t, CAST(sum(n) AS BIGINT) AS ring_sum,
-                        CAST(count(*) AS BIGINT) AS ring_cells
-                 FROM contrib GROUP BY t)
-        SELECT c.cell, c.n, r.ring_sum, r.ring_cells,
-               r.ring_sum / 7.0 AS smoothed,
-               c.n * (r.ring_cells - 1) >= 2 * (r.ring_sum - c.n) AS is_hot
-        FROM cnts c JOIN ring r ON c.cell = r.t
-    """
-    out["url_dedup"] = r"""
-        WITH u AS (
-          SELECT doc_id, CAST(doc_id // 3 AS VARCHAR) AS page, doc_id % 3 AS v,
-                 make_timestamp((1609459200 + doc_id * 60) * 1000000) AS warc_ts
-          FROM documents),
-        raw AS (
-          SELECT doc_id, warc_ts,
-                 CASE v
-                   WHEN 0 THEN 'https://www.example.com/articles/' || page
-                               || '?id=' || page
-                   WHEN 1 THEN 'HTTPS://www.Example.COM:443/articles/' || page
-                               || '/?utm_source=feed&id=' || page || '#frag'
-                   ELSE 'https://www.example.com/articles/' || page
-                        || '?utm_campaign=x&id=' || page
-                 END AS url
-          FROM u),
-        parts AS (
-          SELECT doc_id, warc_ts, url,
-                 lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1))
-                   AS scheme,
-                 lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1)) AS hostport,
-                 regexp_replace(regexp_extract(url,
-                   '^[^:]+://[^/?#]*([^?#]*)', 1), '/+$', '') AS path0,
-                 regexp_extract(url, '\?([^#]*)', 1) AS q
-          FROM raw),
-        canon AS (
-          SELECT doc_id, warc_ts, url,
-                 scheme || '://' ||
-                 CASE WHEN scheme = 'https'
-                      THEN regexp_replace(hostport, ':443$', '')
-                      WHEN scheme = 'http'
-                      THEN regexp_replace(hostport, ':80$', '')
-                      ELSE hostport END ||
-                 CASE WHEN path0 = '' THEN '/' ELSE path0 END ||
-                 CASE WHEN qq = '' THEN '' ELSE '?' || qq END AS canonical_url
-          FROM (SELECT *, array_to_string(list_sort(list_filter(
-                  string_split(q, '&'),
-                  p -> p != '' AND NOT regexp_matches(p,
-                    '^(utm_[^=]*|gclid|fbclid|ref)(=|$)'))), '&') AS qq
-                FROM parts))
-        SELECT canonical_url, (pick).id AS kept_id, (pick).ts AS last_ts,
-               n_variants, n_urls
-        FROM (SELECT canonical_url, max({'ts': warc_ts, 'id': doc_id}) AS pick,
-                     CAST(count(*) AS BIGINT) AS n_variants,
-                     CAST(count(DISTINCT url) AS BIGINT) AS n_urls
-              FROM canon GROUP BY 1)
-    """
-    out["passage_dedup"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        inst AS (SELECT doc_id, i AS idx,
-                        array_to_string(tok[i*10+1 : i*10+10], ' ') AS chunk,
-                        least(10, len(tok) - i*10) AS clen
-                 FROM toks, unnest(range(0, (len(tok) + 9) // 10)) AS u(i)
-                 WHERE len(tok) > 0),
-        firsts AS (SELECT chunk, min({{'d': doc_id, 'i': idx}}) AS f
-                   FROM inst GROUP BY 1),
-        fl AS (SELECT i.doc_id, i.clen,
-                      ((f).d = i.doc_id AND (f).i = i.idx) AS kept
-               FROM inst i JOIN firsts USING (chunk))
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-               CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-               CAST(sum(CASE WHEN kept THEN clen ELSE 0 END) AS BIGINT)
-                 AS tokens_kept,
-               CAST(sum(CASE WHEN kept THEN 0 ELSE clen END) AS BIGINT)
-                 AS tokens_removed
-        FROM fl GROUP BY doc_id
-    """
-    out["heavy_hitters"] = f"""
-        WITH t AS (SELECT unnest({_TOKENS}) AS term FROM documents
-                   WHERE text IS NOT NULL)
-        SELECT term, CAST(count(*) AS BIGINT) AS n
-        FROM t GROUP BY 1
-        HAVING count(*) * 32 > (SELECT count(*) FROM t)
-    """
-    out["novelty"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        grams AS (
-          SELECT doc_id, unnest(list_distinct(list_transform(
-                   range(1, len(tok) - 1),
-                   i -> array_to_string(tok[i:i+2], ' ')))) AS gram
-          FROM toks WHERE len(tok) >= 3),
-        dfs AS (SELECT gram, count(*) AS df FROM grams GROUP BY 1)
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-               CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_novel,
-               CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                 / CAST(count(*) AS BIGINT) AS novelty
-        FROM grams JOIN dfs USING (gram)
-        GROUP BY doc_id
-    """
-    out["st_join"] = f"""
-        WITH pts AS (SELECT event_id, ts,
-                            {_POINTS_SQL.format(k='event_id')}
-                     FROM events)
-        SELECT a.event_id AS a, b.event_id AS b,
-               (a.lon - b.lon) * (a.lon - b.lon)
-               + (a.lat - b.lat) * (a.lat - b.lat) AS dist2,
-               abs(epoch_us(a.ts) // 1000000
-                   - epoch_us(b.ts) // 1000000) AS dt_s
-        FROM pts a JOIN pts b ON a.event_id < b.event_id
-        WHERE (a.lon - b.lon) * (a.lon - b.lon)
-              + (a.lat - b.lat) * (a.lat - b.lat) <= 9.0
-          AND abs(epoch_us(a.ts) // 1000000
-                  - epoch_us(b.ts) // 1000000) <= 250000
-    """
-    out["directional_hull"] = f"""
-        WITH pts AS (SELECT user_id, event_id,
-                            mod(event_id * 7919, 360000) - 180000 AS x,
-                            mod(event_id * 104729, 170000) - 85000 AS y,
-                            {_POINTS_SQL.format(k='event_id')}
-                     FROM events),
-        dirs(dir_idx, dx, dy) AS (VALUES
-            (0, 1, 0), (1, 1, 1), (2, 0, 1), (3, -1, 1),
-            (4, -1, 0), (5, -1, -1), (6, 0, -1), (7, 1, -1)),
-        scored AS (SELECT user_id, dir_idx, event_id, lon, lat,
-                          dx * x + dy * y AS dot
-                   FROM pts, dirs)
-        SELECT user_id, CAST(dir_idx AS INT) AS dir_idx, event_id, lon, lat
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY user_id, dir_idx
-                  ORDER BY dot DESC, event_id ASC) AS rn
-              FROM scored)
-        WHERE rn = 1
-    """
-    out["simplify_tracks"] = _dp_sql(20000, 4)
-    out["move_rose"] = f"""
-        WITH pts AS (SELECT user_id, ts, event_id,
-                            mod(event_id * 7919, 360000) - 180000 AS x,
-                            mod(event_id * 104729, 170000) - 85000 AS y
-                     FROM events),
-        l AS (SELECT user_id, x, y,
-                     lag(x) OVER w AS px, lag(y) OVER w AS py
-              FROM pts
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        m AS (SELECT x - px AS dx, y - py AS dy
-              FROM l WHERE px IS NOT NULL),
-        s AS (SELECT dx, dy,
-                     CASE WHEN dx = 0 AND dy = 0 THEN -1
-                          WHEN dy >= 0 AND dx > 0 AND dx > dy THEN 0
-                          WHEN dy > 0 AND dx > 0 AND dx <= dy THEN 1
-                          WHEN dy > 0 AND dx <= 0 AND -dx < dy THEN 2
-                          WHEN dy > 0 AND dx < 0 AND -dx >= dy THEN 3
-                          WHEN dy = 0 AND dx < 0 THEN 4
-                          WHEN dy < 0 AND dx < 0 AND -dx > -dy THEN 4
-                          WHEN dy < 0 AND dx < 0 AND -dx <= -dy THEN 5
-                          WHEN dy < 0 AND dx >= 0 AND dx < -dy THEN 6
-                          ELSE 7 END AS sector
-              FROM m)
-        SELECT CAST(sector AS INT) AS sector,
-               CAST(count(*) AS BIGINT) AS n_moves,
-               CAST(sum(dx * dx + dy * dy) AS BIGINT) AS sum_d2
-        FROM s GROUP BY 1
-    """
-    out["user_tracks"] = f"""
-        WITH pts AS (SELECT event_id, user_id, ts,
-                            {_POINTS_SQL.format(k='event_id')}
-                     FROM events),
-        l AS (SELECT user_id, epoch_us(ts) // 1000000 AS ep, event_id,
-                     lon, lat,
-                     lag(lon) OVER w AS plon, lag(lat) OVER w AS plat
-              FROM pts
-              WINDOW w AS (PARTITION BY user_id
-                           ORDER BY epoch_us(ts) // 1000000, event_id)),
-        legs AS (SELECT user_id, ep, event_id, lon, lat,
-                        CASE WHEN plon IS NULL THEN NULL
-                             ELSE sqrt((lon - plon) * (lon - plon)
-                                       + (lat - plat) * (lat - plat))
-                        END AS leg
-                 FROM l)
-        SELECT user_id, n_points, duration_s, path_len_deg,
-               sqrt(((lst).lon - (fst).lon) * ((lst).lon - (fst).lon)
-                    + ((lst).lat - (fst).lat) * ((lst).lat - (fst).lat))
-                 AS net_disp_deg,
-               max_leg_deg
-        FROM (SELECT user_id,
-                     CAST(count(*) AS BIGINT) AS n_points,
-                     max(ep) - min(ep) AS duration_s,
-                     list_reduce(list_prepend(0.0::DOUBLE,
-                       list_sort(list(leg) FILTER (leg IS NOT NULL))),
-                       (a, x) -> a + x) AS path_len_deg,
-                     max(leg) AS max_leg_deg,
-                     min({{'ep': ep, 'id': event_id,
-                           'lon': lon, 'lat': lat}}) AS fst,
-                     max({{'ep': ep, 'id': event_id,
-                           'lon': lon, 'lat': lat}}) AS lst
-              FROM legs GROUP BY user_id)
-    """
-    out["home_cells"] = f"""
-        WITH {_hex_cells_chain_sql(
-            1,
-            src="SELECT event_id, user_id, "
-                + _POINTS_SQL.format(k='event_id') + " FROM events",
-            carry="event_id, user_id",
-        )},
-        per AS (SELECT user_id, cell, CAST(count(*) AS BIGINT) AS n
-                FROM hexed GROUP BY 1, 2)
-        SELECT user_id, -((pick).negc) AS home_cell, (pick).n AS visits,
-               visits_total, n_cells
-        FROM (SELECT user_id,
-                     max({{'n': n, 'negc': -cell}}) AS pick,
-                     CAST(sum(n) AS BIGINT) AS visits_total,
-                     CAST(count(*) AS BIGINT) AS n_cells
-              FROM per GROUP BY user_id)
-    """
-    out["mix_sources"] = """
-        WITH q AS (SELECT * FROM (VALUES ('src0', 34::BIGINT),
-                                         ('src1', 17::BIGINT),
-                                         ('src2', 8::BIGINT))
-                   AS t(source, quota)),
-        r AS (SELECT doc_id, d.source, quota,
-                     CAST(row_number() OVER (
-                       PARTITION BY d.source
-                       ORDER BY (doc_id % 2147483648 * 2654435761 + 17)
-                                % 2147483648 ASC, doc_id ASC)
-                     AS INT) AS mix_rank
-              FROM documents d JOIN q ON d.source = q.source)
-        SELECT doc_id, source, mix_rank, quota
-        FROM r WHERE mix_rank <= quota
-    """
-    out["sliding_windows"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents)
-        SELECT doc_id, i AS win_idx, i * 8 AS tok_start,
-               least(16, len(tok) - i * 8) AS win_tokens,
-               array_to_string(tok[i*8+1 : i*8+16], ' ') AS win_text
-        FROM toks, unnest(range(0, (len(tok) - 1) // 8 + 1)) AS u(i)
-        WHERE len(tok) > 0
-    """
-    # incremental merge == full recompute: the full-pyramid SQL IS the oracle
-    out["tile_pyramid_inc"] = out["tile_pyramid"]
-    out["trending_cells"] = f"""
-        WITH {_hex_cells_chain_sql(
-            1,
-            src="SELECT event_id, ts, "
-                + _POINTS_SQL.format(k='event_id') + " FROM events",
-            carry="event_id, ts",
-        )},
-        per AS (SELECT cell,
-                       least(20, greatest(0,
-                         (1706745600 - epoch_us(ts) // 1000000) // 259200))
-                         AS bkt,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM hexed GROUP BY 1, 2)
-        SELECT cell, CAST(sum(n) AS BIGINT) AS n_events,
-               sum(n * pow(0.5, bkt)) AS score
-        FROM per GROUP BY cell
-    """
-    out["fuzzy_join"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        t0 AS (SELECT doc_id, array_to_string(tok[1:4], ' ') AS base
-               FROM toks),
-        titles AS (SELECT doc_id,
-                          CASE WHEN doc_id % 5 = 0 AND len(base) >= 2
-                               THEN base[1:1] || 'x' || base[3:]
-                               ELSE base END AS title
-                   FROM t0)
-        SELECT a.doc_id AS a, b.doc_id AS b,
-               CAST(levenshtein(a.title, b.title) AS INT) AS dist
-        FROM titles a JOIN titles b ON a.doc_id < b.doc_id
-        WHERE levenshtein(a.title, b.title) <= 1
-    """
-    out["sorted_neighborhood"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        t0 AS (SELECT doc_id, array_to_string(tok[1:4], ' ') AS base
-               FROM toks),
-        titles AS (SELECT doc_id,
-                          CASE WHEN doc_id % 5 = 0 AND len(base) >= 2
-                               THEN base[1:1] || 'x' || base[3:]
-                               ELSE base END AS title
-                   FROM t0),
-        r AS (SELECT doc_id, title,
-                     CAST(row_number() OVER (ORDER BY title, doc_id)
-                          AS BIGINT) AS rank
-              FROM titles)
-        SELECT a.doc_id AS a, b.doc_id AS b,
-               CAST(b.rank - a.rank AS BIGINT) AS dist,
-               CAST(levenshtein(a.title, b.title) AS BIGINT) AS lev
-        FROM r a JOIN r b
-          ON b.rank > a.rank AND b.rank <= a.rank + 4
-    """
-
-    _OFF6 = "[268435456::BIGINT, -268435456, 1, -1, 268435455, -268435455]"
-    out["frontier_cells"] = f"""
-        WITH {_hex_cnts_sql(1)},
-        fan AS (SELECT cell, n, cell + off AS nb
-                FROM cnts, unnest({_OFF6}) AS u(off))
-        SELECT f.cell, f.n, CAST(count(*) AS BIGINT) AS empty_neighbors
-        FROM fan f LEFT JOIN cnts o ON o.cell = f.nb
-        WHERE o.cell IS NULL
-        GROUP BY 1, 2
-    """
-    from insights_spark.geo.smooth import RING1 as _R1, RING2 as _R2
-
-    _offw = ", ".join(
-        [f"({dq * (1 << 28) + dr}::BIGINT, 2::BIGINT)"
-         for (dq, dr) in _R1 if (dq, dr) != (0, 0)]
-        + [f"({dq * (1 << 28) + dr}::BIGINT, 1::BIGINT)"
-           for (dq, dr) in _R2]
-    )
-    out["idw_fill"] = f"""
-        WITH {_hex_cnts_sql(1)},
-        offs AS (SELECT * FROM (VALUES {_offw}) AS t(off, w)),
-        fan AS (SELECT c.cell + o.off AS t, o.w AS w, c.n
-                FROM cnts c, offs o),
-        agg AS (SELECT t,
-                       CAST(sum(CASE WHEN w = 2 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS ring1_nbrs,
-                       CAST(sum(CASE WHEN w = 1 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS ring2_nbrs,
-                       CAST(sum(w * n) AS BIGINT) AS w_num,
-                       CAST(sum(w) AS BIGINT) AS w_den
-                FROM fan GROUP BY 1)
-        SELECT a.t AS cell, ring1_nbrs, ring2_nbrs, w_num, w_den,
-               CAST(w_num AS DOUBLE) / w_den AS est
-        FROM agg a LEFT JOIN cnts o ON o.cell = a.t
-        WHERE o.cell IS NULL AND ring1_nbrs >= 3
-    """
-    from insights_spark.geo.smooth import _ring_offsets as _ro
-
-    _vario = ", ".join(
-        f"({dq * (1 << 28) + dr}::BIGINT, {h}::BIGINT)"
-        for h in (1, 2, 3)
-        for (dq, dr) in _ro(h)
-        if dq * (1 << 28) + dr > 0
-    )
-    out["semivariogram"] = f"""
-        WITH {_hex_cnts_sql(1)},
-        offs AS (SELECT * FROM (VALUES {_vario}) AS t(off, h)),
-        pairs AS (SELECT o.h, a.n AS xi, b.n AS xj
-                  FROM cnts a JOIN offs o ON true
-                       JOIN cnts b ON b.cell = a.cell + o.off)
-        SELECT h, CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(sum((xi - xj) * (xi - xj)) AS BIGINT) AS sse,
-               CAST(sum((xi - xj) * (xi - xj)) AS DOUBLE)
-                   / (2 * count(*)) AS gamma
-        FROM pairs GROUP BY 1
-    """
-    from insights_spark import synth as _synth
-
-    _gaz_vals = ", ".join(
-        f"('{b['name_en'].lower()}', '{b['name_en']}')"
-        for b in _synth.gen_boundaries()
-    )
-    out["doc_geotag"] = f"""
-        WITH aug AS (SELECT doc_id,
-                            coalesce(text, '') ||
-                            CASE CAST(doc_id % 4 AS INT)
-                              WHEN 0 THEN ' kenya'
-                              WHEN 1 THEN ' fiji'
-                              WHEN 2 THEN ' somalia fiji'
-                              ELSE '' END AS text
-                     FROM documents),
-        toks AS (SELECT doc_id, {_TOKENS} AS tok FROM aug),
-        gaz AS (SELECT * FROM (VALUES {_gaz_vals}) AS t(tok, country)),
-        m AS (SELECT doc_id, country
-              FROM (SELECT doc_id, unnest(tok) AS tk FROM toks)
-              JOIN gaz ON tk = gaz.tok)
-        SELECT doc_id, min(country) AS country,
-               CAST(count(*) AS BIGINT) AS n_mentions
-        FROM m GROUP BY doc_id
-    """
-    out["cluster_savings"] = f"""
-        WITH RECURSIVE prs AS ({out["minhash_lsh_pairs"]}),
-        nodes AS (SELECT doc_id AS id FROM documents),
-        edges AS (SELECT a AS src, b AS dst FROM prs
-                  UNION SELECT b AS src, a AS dst FROM prs),
-        reach(src, dst) AS (
-            SELECT id, id FROM nodes
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ),
-        lab AS (SELECT src AS doc_id, MIN(dst) AS cluster_id
-                FROM reach GROUP BY src),
-        j AS (SELECT l.doc_id, l.cluster_id, d.source, d.n_chars
-              FROM lab l JOIN documents d ON l.doc_id = d.doc_id)
-        SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-               CAST(sum(n_chars) AS BIGINT) AS total_chars,
-               CAST(sum(CASE WHEN doc_id = cluster_id THEN n_chars
-                             ELSE 0 END) AS BIGINT) AS kept_chars,
-               CAST(sum(n_chars) AS BIGINT)
-               - CAST(sum(CASE WHEN doc_id = cluster_id THEN n_chars
-                               ELSE 0 END) AS BIGINT) AS saved_chars
-        FROM j GROUP BY cluster_id
-    """
-    out["tile_diff"] = f"""
-        WITH pts AS (SELECT event_id, ts,
-                            {_POINTS_SQL.format(k='event_id')} FROM events),
-        t AS (SELECT 6 AS z, {tile6},
-                     CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00'
-                          THEN -1 ELSE 1 END AS w
-              FROM pts)
-        SELECT z, x, y,
-               CAST(sum(CASE WHEN w < 0 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_old,
-               CAST(sum(CASE WHEN w > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_new,
-               CAST(sum(w) AS BIGINT) AS delta
-        FROM t GROUP BY 1, 2, 3
-        HAVING sum(w) != 0
-    """
-    out["zonal_stats"] = f"""
-        WITH pts AS ({_EV_PTS}),
-        zoned AS (SELECT event_id, lon, lat,
-                         {_country_case_sql()} AS zone
-                  FROM pts),
-        t AS (SELECT zone, {tile6}
-              FROM zoned WHERE zone IS NOT NULL),
-        per AS (SELECT zone, x, y, CAST(count(*) AS BIGINT) AS density
-                FROM t GROUP BY 1, 2, 3)
-        SELECT zone, CAST(count(*) AS BIGINT) AS n_tiles,
-               CAST(sum(density) AS BIGINT) AS n_points,
-               max(density) AS max_density,
-               CAST(sum(density) AS BIGINT) / CAST(count(*) AS BIGINT)
-                 AS mean_density
-        FROM per GROUP BY zone
-    """
-    out["knn_join"] = f"""
-        WITH q AS ({_CUST_PTS}),
-        c AS (SELECT event_id, {_POINTS_SQL.format(k='event_id')} FROM events),
-        d AS (SELECT q.c_custkey AS id, c.event_id AS neighbor_id,
-                     (q.lon - c.lon) * (q.lon - c.lon)
-                     + (q.lat - c.lat) * (q.lat - c.lat) AS dist2
-              FROM q, c),
-        r AS (SELECT id, neighbor_id, dist2,
-                     row_number() OVER (PARTITION BY id
-                       ORDER BY dist2 ASC, neighbor_id ASC) AS rank
-              FROM d)
-        SELECT id, neighbor_id, dist2, CAST(rank AS INT) AS rank
-        FROM r WHERE rank <= 3
-    """
-    out["top_terms_per_source"] = f"""
-        WITH counts AS (
-          SELECT source, term, CAST(count(*) AS BIGINT) AS n
-          FROM (SELECT source, unnest({_TOKENS}) AS term FROM documents)
-          GROUP BY 1, 2)
-        SELECT source, term, n,
-               CAST(rank AS INT) AS rank
-        FROM (SELECT *, row_number() OVER (
-                 PARTITION BY source ORDER BY n DESC, term ASC) AS rank
-              FROM counts)
-        WHERE rank <= 5
-    """
-    out["kn_continuation"] = f"""
-        WITH toks AS (
-          SELECT {_TOKENS} AS ts FROM documents WHERE text IS NOT NULL),
-        uni AS (
-          SELECT w AS token, CAST(count(*) AS BIGINT) AS freq
-          FROM (SELECT unnest(ts) AS w FROM toks) GROUP BY 1),
-        big AS (
-          SELECT ts[i] AS w1, ts[i + 1] AS w2
-          FROM toks, unnest(generate_series(1, len(ts) - 1)) AS u(i)
-          WHERE len(ts) >= 2),
-        pairs AS (SELECT w1, w2 FROM big GROUP BY 1, 2),
-        lft AS (SELECT w2 AS token, CAST(count(*) AS BIGINT) AS n_left
-                FROM pairs GROUP BY 1),
-        rgt AS (SELECT w1 AS token, CAST(count(*) AS BIGINT) AS n_right
-                FROM pairs GROUP BY 1)
-        SELECT uni.token, uni.freq,
-               CAST(coalesce(lft.n_left, 0) AS BIGINT) AS n_left,
-               CAST(coalesce(rgt.n_right, 0) AS BIGINT) AS n_right
-        FROM uni LEFT JOIN lft USING (token) LEFT JOIN rgt USING (token)
-    """
-    out["path_tree"] = """
-        WITH d AS (SELECT doc_id,
-                          'h' || (doc_id % 5) || '.test' AS host,
-                          doc_id % 3 AS nd,
-                          'd' || ((doc_id // 5) % 4) AS s1,
-                          'e' || ((doc_id // 20) % 3) AS s2
-                   FROM documents),
-        nodes AS (SELECT host, u.nd_depth AS depth, u.nd_prefix AS prefix
-                  FROM (
-                    SELECT host,
-                           [{'nd_depth': 0, 'nd_prefix': '/'}]
-                           || CASE WHEN nd >= 1 THEN
-                                [{'nd_depth': 1, 'nd_prefix': '/' || s1}]
-                              ELSE [] END
-                           || CASE WHEN nd = 2 THEN
-                                [{'nd_depth': 2,
-                                  'nd_prefix': '/' || s1 || '/' || s2}]
-                              ELSE [] END
-                           || [{'nd_depth': CAST(nd + 1 AS INT),
-                                'nd_prefix': CASE nd
-                                  WHEN 0 THEN '/p' || doc_id
-                                  WHEN 1 THEN '/' || s1 || '/p' || doc_id
-                                  ELSE '/' || s1 || '/' || s2 || '/p' || doc_id
-                                END}] AS l
-                    FROM d) t, unnest(t.l) AS n(u))
-        SELECT host, CAST(depth AS INT) AS depth, prefix,
-               CAST(count(*) AS BIGINT) AS n_pages
-        FROM nodes GROUP BY 1, 2, 3
-    """
-    out["covered_time"] = """
-        WITH e AS (SELECT user_id,
-                          epoch_us(ts) // 1000000 AS ep,
-                          event_id
-                   FROM events),
-        l AS (SELECT user_id, ep,
-                     lead(ep) OVER (PARTITION BY user_id
-                                    ORDER BY ep, event_id) AS nep
-              FROM e)
-        SELECT user_id,
-               CAST(count(*) AS BIGINT) AS n_events,
-               CAST(sum(CASE WHEN nep IS NULL THEN 600
-                             ELSE least(nep - ep, 600) END) AS BIGINT)
-                 AS covered_s
-        FROM l GROUP BY 1
-    """
-    out["winsorized_stats"] = """
-        WITH v AS (SELECT event_type AS grp,
-                          CAST(round(value * 100) AS BIGINT) AS vv
-                   FROM events WHERE value IS NOT NULL),
-        r AS (SELECT grp, vv,
-                     row_number() OVER (PARTITION BY grp ORDER BY vv) AS rn,
-                     count(*) OVER (PARTITION BY grp) AS n
-              FROM v),
-        b AS (SELECT grp, min(vv) AS lo_cents, max(vv) AS hi_cents
-              FROM r
-              WHERE rn = greatest(1, CAST(ceil(n * 5 / 100.0) AS BIGINT))
-                 OR rn = greatest(1, CAST(ceil(n * 95 / 100.0) AS BIGINT))
-              GROUP BY grp)
-        SELECT r.grp AS event_type,
-               CAST(max(r.n) AS BIGINT) AS n,
-               CAST(min(b.lo_cents) AS BIGINT) AS lo_cents,
-               CAST(min(b.hi_cents) AS BIGINT) AS hi_cents,
-               CAST(sum(greatest(b.lo_cents, least(b.hi_cents, r.vv)))
-                    AS BIGINT) AS wins_sum_cents
-        FROM r JOIN b USING (grp)
-        GROUP BY 1
-    """
-    out["freq_of_freqs"] = f"""
-        WITH uni AS (
-          SELECT w AS token, CAST(count(*) AS BIGINT) AS freq
-          FROM (SELECT unnest({_TOKENS}) AS w FROM documents
-                WHERE text IS NOT NULL) GROUP BY 1)
-        SELECT freq, CAST(count(*) AS BIGINT) AS n_types
-        FROM uni GROUP BY 1
-    """
-    out["token_lorenz"] = f"""
-        WITH t AS (SELECT doc_id, CAST(len({_TOKENS}) AS BIGINT) AS ntok
-                   FROM documents),
-        f AS (SELECT * FROM t WHERE ntok > 0),
-        r AS (SELECT doc_id, ntok,
-                     CAST(sum(ntok) OVER w AS BIGINT) AS tokens_cum,
-                     row_number() OVER w AS rank
-              FROM f WINDOW w AS (ORDER BY ntok DESC, doc_id ASC)),
-        tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(ntok) AS BIGINT) AS tok FROM f)
-        SELECT CAST((rank - 1) * 10 // n + 1 AS INT) AS bucket,
-               CAST(max(rank) AS BIGINT) AS docs_cum,
-               max(tokens_cum) AS tokens_cum,
-               CAST(max(tokens_cum) AS DOUBLE) / CAST(max(tok) AS DOUBLE)
-                 AS token_share
-        FROM r, tot GROUP BY 1
-    """
-    out["quantize"] = """
-        WITH x AS (SELECT vec_id,
-                          list_transform(embedding,
-                                         v -> CAST(v AS DOUBLE)) AS xs,
-                          CAST(len(embedding) AS INT) AS dim
-                   FROM embeddings WHERE len(embedding) > 0),
-        mm AS (SELECT vec_id, xs, dim,
-                      list_aggregate(xs, 'min') AS lo,
-                      list_aggregate(xs, 'max') - list_aggregate(xs, 'min')
-                        AS span
-               FROM x)
-        SELECT vec_id, lo, span / 255.0 AS scale,
-               list_transform(xs, v -> least(255, greatest(0,
-                 CASE WHEN span = 0.0 THEN 0
-                      ELSE CAST(floor((v - lo) * 255.0 / span) AS INT)
-                 END))) AS codes,
-               dim
-        FROM mm
-    """
-    # int8 ANN: the quantize oracle composed verbatim as the code store,
-    # scored with list_dot_product (exact ≤ 2^53: dot ≤ 255²·dim) —
-    # BIGINT on both engines, ties broken by vec_id so top-k is total.
-    out["ann_int8"] = f"""
-        WITH z AS ({out["quantize"]}),
-        q AS (SELECT vec_id AS query_id,
-                     list_transform(codes, v -> CAST(v AS DOUBLE)) AS qc
-              FROM z WHERE vec_id < 4),
-        scored AS (
-            SELECT q.query_id, z.vec_id,
-                   CAST(list_dot_product(
-                       q.qc,
-                       list_transform(z.codes, v -> CAST(v AS DOUBLE))
-                   ) AS BIGINT) AS dot
-            FROM q, z WHERE z.vec_id <> q.query_id),
-        rk AS (SELECT *, row_number() OVER (
-                   PARTITION BY query_id ORDER BY dot DESC, vec_id) AS r
-               FROM scored)
-        SELECT query_id, vec_id, dot FROM rk WHERE r <= 5
-    """
-    out["cell_clusters"] = f"""
-        WITH RECURSIVE {_hex_cnts_sql(1)},
-        core AS (SELECT cell, n FROM cnts WHERE n >= 8),
-        fan AS (SELECT cell AS src, cell + off AS dst
-                FROM core, unnest({_OFF6}) AS u(off)),
-        edges AS (SELECT fan.src, fan.dst
-                  FROM fan JOIN core c2 ON c2.cell = fan.dst),
-        reach(src, dst) AS (
-            SELECT cell, cell FROM core
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ),
-        lab AS (SELECT src AS cell, MIN(dst) AS cluster_id
-                FROM reach GROUP BY src),
-        borderfan AS (SELECT cell, n, cell + off AS nb
-                      FROM cnts, unnest({_OFF6}) AS u(off)
-                      WHERE n < 8)
-        SELECT core.cell, core.n, 'core' AS role, lab.cluster_id
-        FROM core JOIN lab USING (cell)
-        UNION ALL
-        SELECT b.cell, b.n, 'border' AS role, MIN(l.cluster_id) AS cluster_id
-        FROM borderfan b JOIN lab l ON l.cell = b.nb
-        GROUP BY b.cell, b.n
-    """
-    out["region_shape"] = f"""
-        WITH RECURSIVE {_hex_cnts_sql(2)},
-        fan AS (SELECT cell AS src, cell + off AS dst
-                FROM cnts, unnest({_OFF6}) AS u(off)),
-        edges AS (SELECT fan.src, fan.dst
-                  FROM fan JOIN cnts c2 ON c2.cell = fan.dst),
-        reach(src, dst) AS (
-            SELECT cell, cell FROM cnts
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ),
-        lab AS (SELECT src AS cell, MIN(dst) AS region_id
-                FROM reach GROUP BY src),
-        deg AS (SELECT src AS cell, count(*) AS d FROM edges GROUP BY src)
-        SELECT lab.region_id,
-               CAST(count(*) AS BIGINT) AS area_cells,
-               CAST(sum(6 - coalesce(deg.d, 0)) AS BIGINT) AS perimeter_edges,
-               CAST(sum(cnts.n) AS BIGINT) AS total_n
-        FROM cnts JOIN lab USING (cell) LEFT JOIN deg USING (cell)
-        GROUP BY lab.region_id
-    """
-    out["corpus_shuffle"] = """
-        SELECT doc_id,
-               CAST(row_number() OVER (ORDER BY
-                   ((doc_id % 2147483648) * 2654435761 + 17) % 1000000007,
-                   doc_id) - 1 AS BIGINT) AS shuffle_rank
-        FROM documents
-    """
-    out["frame_schedule"] = """
-        WITH v AS (
-          SELECT doc_id AS media_id,
-                 3000 + (doc_id % 7) * 500 AS duration_ms
-          FROM documents WHERE doc_id % 3 = 2)
-        SELECT media_id,
-               CAST(gs AS INT) AS frame_idx,
-               CAST(gs * 1000 AS BIGINT) AS ts_ms
-        FROM v, unnest(generate_series(0,
-                 greatest(CAST(floor(duration_ms / 1000.0) AS BIGINT) - 1, 0)))
-               AS t(gs)
-    """
-    out["audio_features"] = """
-        WITH aud AS (
-          SELECT doc_id AS media_id,
-                 rpad(regexp_replace(text, '[^ -~]', '', 'g'), 768, 'x') AS s
-          FROM documents WHERE mod(doc_id, 3) = 1 AND text IS NOT NULL),
-        v AS (SELECT media_id,
-                     list_transform(string_split(s, ''), c -> ascii(c) - 64)
-                       AS vs
-              FROM aud)
-        SELECT media_id, CAST(768 AS BIGINT) AS n_samples,
-               CAST(list_max(list_transform(vs, x -> abs(x))) AS BIGINT) AS peak,
-               CAST(list_sum(list_transform(vs, x -> x * x)) AS BIGINT)
-                 AS energy,
-               CAST(len(list_filter(range(1, len(vs)),
-                                    i -> vs[i] * vs[i+1] < 0)) AS BIGINT)
-                 AS zero_cross
-        FROM v
-    """
-    out["pack_sequences"] = f"""
-        WITH t AS (SELECT doc_id, CAST(len({_TOKENS}) AS BIGINT) AS n
-                   FROM documents WHERE len({_TOKENS}) > 0),
-        c AS (SELECT doc_id, n,
-                     CAST(sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-                          - n AS BIGINT) AS strt
-              FROM t),
-        s AS (SELECT doc_id, n, strt,
-                     unnest(generate_series(CAST(strt // 512 AS BIGINT),
-                                            CAST((strt + n - 1) // 512 AS BIGINT)))
-                       AS seq_id
-              FROM c)
-        SELECT doc_id, CAST(seq_id AS BIGINT) AS seq_id,
-               CAST(greatest(seq_id * 512, strt) - strt AS BIGINT) AS tok_start,
-               CAST(least((seq_id + 1) * 512, strt + n)
-                    - greatest(seq_id * 512, strt) AS BIGINT) AS n_toks
-        FROM s
-    """
-    out["interval_join"] = """
-        WITH iv AS (
-          SELECT event_id, ts AS start_ts,
-                 ts + to_minutes(mod(event_id, 7) + 1) AS end_ts
-          FROM events)
-        SELECT l.event_id AS a, r.event_id AS b
-        FROM iv l JOIN iv r
-          ON mod(l.event_id, 2) = 0 AND mod(r.event_id, 2) = 1
-         AND l.start_ts <= r.end_ts AND r.start_ts <= l.end_ts
-    """
-    out["asof_join"] = """
-        WITH snaps AS (
-          SELECT user_id, ts, max(event_id) AS snap_id
-          FROM events WHERE mod(event_id, 10) = 0
-          GROUP BY user_id, ts)
-        SELECT e.event_id, e.user_id, e.ts, s.snap_id
-        FROM events e
-        ASOF LEFT JOIN snaps s
-          ON e.user_id = s.user_id AND s.ts <= e.ts
-    """
-    out["rolling_activity"] = """
-        SELECT user_id, event_id, ts,
-               CAST(count(*) OVER (
-                 PARTITION BY user_id ORDER BY epoch(ts)
-                 RANGE BETWEEN 21600.0 PRECEDING AND CURRENT ROW
-               ) AS BIGINT) AS n_trailing
-        FROM events
-    """
-    out["train_split"] = """
-        SELECT doc_id,
-               CASE WHEN mod(doc_id * 1000003 + 7, 1000) < 100
-                    THEN 'test' ELSE 'train' END AS split
-        FROM documents
-    """
-    out["unpivot_counts"] = """
-        WITH u AS (SELECT DISTINCT user_id FROM events),
-        t AS (SELECT * FROM (VALUES ('click'), ('view'), ('purchase'),
-                                    ('signup'), ('error')) v(et)),
-        c AS (SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-              FROM events GROUP BY 1, 2)
-        SELECT u.user_id, t.et AS event_type,
-               CAST(coalesce(c.n, 0) AS BIGINT) AS n
-        FROM u CROSS JOIN t
-        LEFT JOIN c ON c.user_id = u.user_id AND c.event_type = t.et
-    """
-    out["event_gaps"] = """
-        WITH g AS (
-          SELECT event_type,
-                 (epoch_us(ts) - epoch_us(lag(ts) OVER (
-                    PARTITION BY user_id, event_type
-                    ORDER BY ts, event_id)))::DOUBLE / 1000000.0 AS gap_s
-          FROM events)
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n_gaps,
-               quantile_cont(gap_s, 0.5) AS p50_gap_s,
-               quantile_cont(gap_s, 0.9) AS p90_gap_s
-        FROM g WHERE gap_s IS NOT NULL GROUP BY event_type
-    """
-    out["cube_rollup"] = f"""
-        WITH pts AS (
-          SELECT event_id, {_POINTS_SQL.format(k="event_id")} FROM events),
-        loc AS (
-          SELECT {_country_case_sql()} AS country,
-                 greatest(0, least(CAST(floor((lon + 180.0) / 360.0 * 16.0)
-                                        AS INT), 15)) AS x
-          FROM pts)
-        SELECT country, CAST(x AS BIGINT) AS x,
-               CAST(GROUPING(country, x) AS INT) AS gid,
-               CAST(count(*) AS BIGINT) AS density
-        FROM loc GROUP BY ROLLUP (country, x)
-    """
-    out["pivot_counts"] = """
-        SELECT user_id,
-               CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_click,
-               CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_view,
-               CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_purchase,
-               CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_signup,
-               CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_error
-        FROM events GROUP BY user_id
-    """
-    out["event_transitions"] = """
-        WITH p AS (
-          SELECT event_type AS cur,
-                 lead(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS nxt
-          FROM events),
-        g AS (
-          SELECT cur, nxt, CAST(count(*) AS BIGINT) AS n
-          FROM p WHERE nxt IS NOT NULL GROUP BY cur, nxt)
-        SELECT cur, nxt, n,
-               CAST(n AS DOUBLE)
-                 / CAST(sum(n) OVER (PARTITION BY cur) AS DOUBLE) AS p
-        FROM g
-    """
-    out["triangles"] = """
-        WITH n AS (SELECT count(*) AS n FROM documents),
-        raw AS (
-          SELECT doc_id AS src,
-                 mod(doc_id * 7919 + 104729 * k, (SELECT n FROM n)) AS dst
-          FROM documents, unnest([1, 2, 3]) AS t(k)),
-        ue AS (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM raw WHERE src != dst),
-        tri AS (
-          SELECT e1.a, e1.b, e2.b AS c
-          FROM ue e1
-          JOIN ue e2 ON e1.a = e2.a AND e1.b < e2.b
-          JOIN ue e3 ON e3.a = e1.b AND e3.b = e2.b),
-        corners AS (
-          SELECT a AS id FROM tri
-          UNION ALL SELECT b FROM tri
-          UNION ALL SELECT c FROM tri)
-        SELECT id, CAST(count(*) AS BIGINT) AS n_triangles
-        FROM corners GROUP BY id
-    """
-    out["scd2_lookup"] = """
-        WITH el AS (
-          SELECT l_orderkey AS id,
-                 l_linenumber::BIGINT * 1000000000000
-                   + l_partkey * 1000000 + l_suppkey AS version,
-                 CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                      WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                      ELSE 'way' END AS type,
-                 l_shipdate AS ts
-          FROM lineitem),
-        seq AS (
-          SELECT *, row_number() OVER (PARTITION BY type, id
-                                       ORDER BY ts, version) AS sq
-          FROM el),
-        scd AS (
-          SELECT type, id, version, ts AS valid_from,
-                 lead(ts) OVER (PARTITION BY type, id ORDER BY sq)
-                   AS valid_to
-          FROM seq),
-        f AS (
-          SELECT CASE WHEN mod(o_orderkey, 4) = 0 THEN 'node'
-                      WHEN mod(o_orderkey, 4) = 1 THEN 'relation'
-                      ELSE 'way' END AS type,
-                 o_orderkey AS id, o_orderdate AS ts
-          FROM orders)
-        SELECT f.type, f.id, f.ts, s.version AS asof_version
-        FROM f LEFT JOIN scd s
-          ON f.type = s.type AND f.id = s.id
-         AND f.ts >= s.valid_from
-         AND (s.valid_to IS NULL OR f.ts < s.valid_to)
-    """
-    out["lang_margin"] = f"""
-        WITH scored AS (SELECT doc_id, {lang_scores} FROM documents),
-        u AS (
-          SELECT doc_id, 'de' AS lang, r_de AS r FROM scored
-          UNION ALL SELECT doc_id, 'en', r_en FROM scored
-          UNION ALL SELECT doc_id, 'fr', r_fr FROM scored
-          UNION ALL SELECT doc_id, 'sw', r_sw FROM scored),
-        rk AS (
-          SELECT doc_id, lang, r,
-                 row_number() OVER (PARTITION BY doc_id
-                                    ORDER BY r DESC, lang ASC) AS rn
-          FROM u)
-        SELECT a.doc_id,
-               CASE WHEN a.r > 0 THEN a.lang END AS lang_pred,
-               CASE WHEN b.r > 0 THEN b.lang END AS lang_second,
-               a.r - b.r AS margin,
-               CAST(a.r > 0 AND b.r > 0 AND (a.r - b.r) < 0.1 AS INT)
-                 AS is_mixed
-        FROM rk a JOIN rk b
-          ON a.doc_id = b.doc_id AND a.rn = 1 AND b.rn = 2
-    """
-    out["score_calibration"] = f"""
-        WITH q AS (
-          SELECT doc_id, source,
-                 CASE WHEN len({_TOKENS}) > 0 THEN
-                   len(list_distinct({_TOKENS}))::DOUBLE / len({_TOKENS})
-                   ELSE 0.0 END AS uniq_token_ratio
-          FROM documents)
-        SELECT source, doc_id, uniq_token_ratio,
-               cume_dist() OVER (PARTITION BY source
-                                 ORDER BY uniq_token_ratio, doc_id)
-                 AS pct_rank
-        FROM q
-    """
-    out["check_constraints"] = """
-        SELECT 'not_null' AS rule, 'o_orderkey' AS col,
-               CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS violations,
-               CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) = 0
-                    AS INT) AS passed
-        FROM orders
-        UNION ALL
-        SELECT 'unique', 'o_orderkey',
-               CAST(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT),
-               CAST(count(o_orderkey) = count(DISTINCT o_orderkey) AS INT)
-        FROM orders
-        UNION ALL
-        SELECT 'range', 'o_totalprice',
-               CAST(sum(CASE WHEN o_totalprice IS NOT NULL
-                              AND (o_totalprice < 0.0 OR o_totalprice > 1e9)
-                             THEN 1 ELSE 0 END) AS BIGINT),
-               CAST(sum(CASE WHEN o_totalprice IS NOT NULL
-                              AND (o_totalprice < 0.0 OR o_totalprice > 1e9)
-                             THEN 1 ELSE 0 END) = 0 AS INT)
-        FROM orders
-        UNION ALL
-        SELECT 'range', 'o_custkey',
-               CAST(sum(CASE WHEN o_custkey IS NOT NULL
-                              AND (o_custkey < 0 OR o_custkey > 10)
-                             THEN 1 ELSE 0 END) AS BIGINT),
-               CAST(sum(CASE WHEN o_custkey IS NOT NULL
-                              AND (o_custkey < 0 OR o_custkey > 10)
-                             THEN 1 ELSE 0 END) = 0 AS INT)
-        FROM orders
-        UNION ALL
-        SELECT 'accepted', 'o_orderstatus',
-               CAST(sum(CASE WHEN o_orderstatus IS NOT NULL
-                              AND o_orderstatus NOT IN ('O', 'F', 'P')
-                             THEN 1 ELSE 0 END) AS BIGINT),
-               CAST(sum(CASE WHEN o_orderstatus IS NOT NULL
-                              AND o_orderstatus NOT IN ('O', 'F', 'P')
-                             THEN 1 ELSE 0 END) = 0 AS INT)
-        FROM orders
-        UNION ALL
-        SELECT 'ref', 'l_orderkey',
-               CAST((SELECT count(*) FROM lineitem l
-                     WHERE l.l_orderkey IS NOT NULL
-                       AND NOT EXISTS (SELECT 1 FROM orders o
-                                       WHERE o.o_orderkey = l.l_orderkey))
-                    AS BIGINT),
-               CAST((SELECT count(*) FROM lineitem l
-                     WHERE l.l_orderkey IS NOT NULL
-                       AND NOT EXISTS (SELECT 1 FROM orders o
-                                       WHERE o.o_orderkey = l.l_orderkey))
-                    = 0 AS INT)
-    """
-    out["snapshot_diff"] = """
-        WITH s100 AS (
-          SELECT doc_id, n_chars FROM documents WHERE mod(doc_id, 2) = 0),
-        s200 AS (
-          SELECT doc_id,
-                 CASE WHEN mod(doc_id, 3) = 0 THEN n_chars + 1000
-                      ELSE n_chars END AS n_chars
-          FROM documents
-          WHERE mod(doc_id, 2) = 0 OR mod(doc_id, 3) = 0)
-        SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-               CASE WHEN a.doc_id IS NULL THEN 'insert'
-                    WHEN b.doc_id IS NULL THEN 'delete'
-                    WHEN a.n_chars IS DISTINCT FROM b.n_chars THEN 'update'
-                    END AS change,
-               a.n_chars AS old_n_chars, b.n_chars AS new_n_chars
-        FROM s100 a FULL OUTER JOIN s200 b ON a.doc_id = b.doc_id
-        WHERE CASE WHEN a.doc_id IS NULL THEN 'insert'
-                   WHEN b.doc_id IS NULL THEN 'delete'
-                   WHEN a.n_chars IS DISTINCT FROM b.n_chars THEN 'update'
-                   END IS NOT NULL
-    """
-    _hist_bucket = "1 + " + " + ".join(
-        f"(o_totalprice > bs[{k}])::INT" for k in range(1, 8)
-    )
-    out["equi_depth_hist"] = f"""
-        WITH b AS (
-          SELECT quantile_cont(o_totalprice,
-                   [{", ".join(str(k / 8) for k in range(1, 8))}]) AS bs,
-                 CAST(min(o_totalprice) AS DOUBLE) AS glo,
-                 CAST(max(o_totalprice) AS DOUBLE) AS ghi
-          FROM orders WHERE o_totalprice IS NOT NULL),
-        c AS (
-          SELECT CAST({_hist_bucket} AS INT) AS bucket
-          FROM orders, b WHERE o_totalprice IS NOT NULL),
-        g AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n
-              FROM c GROUP BY bucket)
-        SELECT g.bucket,
-               CAST(CASE WHEN g.bucket = 1 THEN b.glo
-                         ELSE b.bs[g.bucket - 1] END AS DOUBLE) AS lo,
-               CAST(CASE WHEN g.bucket = 8 THEN b.ghi
-                         ELSE b.bs[g.bucket] END AS DOUBLE) AS hi,
-               g.n
-        FROM g, b
-    """
-    out["curriculum_order"] = f"""
-        WITH q AS (
-          SELECT doc_id,
-                 CASE WHEN len({_TOKENS}) > 0 THEN
-                   len(list_distinct({_TOKENS}))::DOUBLE / len({_TOKENS})
-                   ELSE 0.0 END AS uniq
-          FROM documents),
-        b AS (
-          SELECT doc_id,
-                 CAST(least(9, CAST(floor(uniq * 10) AS INT)) AS INT) AS band,
-                 mod(mod(doc_id, 2147483648) * 2654435761 + 17,
-                     1000000007) AS hk
-          FROM q)
-        SELECT doc_id, band,
-               CAST(row_number() OVER (ORDER BY band DESC, hk ASC,
-                                       doc_id ASC) - 1 AS BIGINT)
-                 AS curriculum_rank
-        FROM b
-    """
-    # composed verbatim on the dedup_clusters reachability (ann_int8
-    # precedent): same clusters, split stamped on the CLUSTER id
-    out["cluster_safe_split"] = (
-        "SELECT doc_id, cluster_id, "
-        "CASE WHEN mod(mod(cluster_id, 1000) * 1000003 + 7, 1000) < 100 "
-        "THEN 'test' ELSE 'train' END AS split FROM ("
-        + out["dedup_clusters"]
-        + ")"
-    )
-    out["inverted_index"] = f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS tok FROM documents),
-        t AS (SELECT doc_id,
-                     unnest(list_distinct(list_transform(
-                       range(1, len(tok)), i -> tok[i] || ' ' || tok[i+1]
-                     ))) AS term
-              FROM toks WHERE len(tok) >= 2),
-        g AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
-                     array_to_string(list_sort(list(doc_id)), ',') AS posting_csv
-              FROM t GROUP BY term)
-        SELECT term, df, posting_csv FROM g WHERE df BETWEEN 2 AND 50
-    """
-    out["source_cap"] = """
-        SELECT doc_id, source FROM (
-          SELECT doc_id, source,
-                 row_number() OVER (
-                   PARTITION BY source
-                   ORDER BY mod(doc_id * 2654435761 + 17, 2147483648) ASC,
-                            doc_id ASC) AS rk
-          FROM documents) WHERE rk <= 10
-    """
-    _pg = _POLY_HASH.format(s="array_to_string(list_slice(t, {a}, {b}), ' ')")
-    out["decontam"] = f"""
-        WITH tok AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(lower(text), '\\s+'),
-                             x -> x != '') AS t
-          FROM documents WHERE text IS NOT NULL),
-        bench AS (
-          SELECT DISTINCT {_pg.format(a='4', b='16')} AS gh
-          FROM tok WHERE mod(doc_id, 97) = 0 AND len(t) >= 16),
-        dg AS (
-          SELECT DISTINCT doc_id, {_pg.format(a='i + 1', b='i + 13')} AS gh
-          FROM (SELECT doc_id, t, unnest(range(len(t) - 12)) AS i
-                FROM tok WHERE len(t) >= 13))
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bench_grams
-        FROM dg JOIN bench USING (gh) GROUP BY doc_id
-    """
-    out["source_cap_stream_twin"] = """
-        SELECT doc_id, source FROM (
-          SELECT doc_id, source,
-                 row_number() OVER (
-                   PARTITION BY source ORDER BY doc_id ASC) AS rk
-          FROM documents) WHERE rk <= 10
-    """
-    out["stratified_sample"] = """
-        SELECT doc_id, lang FROM (
-          SELECT doc_id, lang,
-                 row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY mod(doc_id * 2654435761 + 29, 2147483648) ASC,
-                            doc_id ASC) AS rk
-          FROM documents) WHERE rk <= 20
-    """
-    out["approx_quantile"] = """
-        SELECT lang, quantile_cont(n_chars, 0.5) AS exact_q,
-               TRUE AS within_bounds
-        FROM documents GROUP BY lang
-    """
-    out["approx_distinct"] = """
-        SELECT l_returnflag,
-               CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_exact,
-               TRUE AS within_bounds
-        FROM lineitem GROUP BY l_returnflag
-    """
-    # the full preparation pipeline composes the clean_corpus oracle with
-    # the cap/split arithmetic (nested WITH in a FROM subquery)
-    out["prepare_corpus"] = f"""
-        WITH base AS (SELECT * FROM ({out['clean_corpus']})),
-        src AS (SELECT base.*, d.source
-                FROM base JOIN documents d USING (doc_id)),
-        capped AS (SELECT * FROM (
-            SELECT src.*, row_number() OVER (
-                PARTITION BY source
-                ORDER BY mod(doc_id * 2654435761 + 17, 2147483648) ASC,
-                         doc_id ASC) AS rk
-            FROM src) WHERE rk <= 15),
-        sp AS (SELECT *, CASE WHEN mod(doc_id * 1000003 + 7, 1000) < 100
-                              THEN 'test' ELSE 'train' END AS split
-               FROM capped)
-        SELECT split, lang_pred, CAST(count(*) AS BIGINT) AS docs,
-               CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-        FROM sp GROUP BY split, lang_pred
-    """
-    # the salted battery and salted semi-join are pure physical rewrites —
-    # same oracles as their unsalted twins
-    # Moran's I: hex encode chain + 6-direction BIGINT neighbor join +
-    # exact deviation algebra (HUGEINT products → DECIMAL(38,0)); offsets
-    # are dq·2^28 + dr for the axial ring-1 set.
-    out["moran_i"] = f"""
-        WITH {_hex_cnts_sql(1)},
-        tot AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
-                       CAST(sum(n) AS BIGINT) AS s_tot FROM cnts),
-        base AS (SELECT cell, n_cells * n - s_tot AS dev FROM cnts, tot),
-        fan AS (SELECT dev, cell + d AS nb FROM base,
-                (SELECT unnest([268435456, -268435456, 1, -1,
-                                268435455, -268435455]) AS d)),
-        pr AS (SELECT CAST(count(*) AS BIGINT) AS w_pairs,
-                      CAST(COALESCE(sum(f.dev::HUGEINT * b.dev::HUGEINT), 0)
-                           AS DECIMAL(38,0)) AS num
-               FROM fan f JOIN base b ON f.nb = b.cell),
-        dn AS (SELECT CAST(COALESCE(sum(dev::HUGEINT * dev::HUGEINT), 0)
-                           AS DECIMAL(38,0)) AS den FROM base)
-        SELECT t.n_cells, pr.w_pairs, pr.num, dn.den FROM tot t, pr, dn
-    """
-    # Shard layout: the oracle's prefix sum is a window function (fine at
-    # oracle scale; the engine side uses the two-phase distributed scan).
-    out["shard_assign"] = """
-        WITH c AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS b,
-                          sum(CAST(n_chars AS BIGINT)) OVER (
-                              ORDER BY doc_id
-                              ROWS UNBOUNDED PRECEDING) AS cum
-                   FROM documents WHERE n_chars > 0)
-        SELECT (cum - b) // 4096 AS shard_id,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(b) AS BIGINT) AS shard_bytes,
-               min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        FROM c GROUP BY 1
-    """
-    # Host rollup: ground truth derived from the PLANTED structure (host
-    # and page id straight from doc_id), independent of the canonicalizer
-    # Spark exercises on the messy 10th-doc variants.
-    out["host_stats"] = """
-        WITH u AS (SELECT doc_id, n_chars, doc_id % 5 AS h,
-                          doc_id // (5 * (doc_id % 5 + 1)) AS page
-                   FROM documents),
-        c AS (SELECT 'www.site' || h || '.example' AS host,
-                     'https://www.site' || h || '.example/p/' || page AS canon,
-                     n_chars
-              FROM u)
-        SELECT host, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(count(DISTINCT canon) AS BIGINT) AS n_pages,
-               CAST(sum(n_chars) AS BIGINT) AS total_bytes,
-               ((count(*) - count(DISTINCT canon)) * 1000) // count(*)
-                   AS dup_per_mille,
-               CAST(count(*) >= 50 AND
-                    ((count(*) - count(DISTINCT canon)) * 1000) // count(*)
-                        <= 600 AS INT) AS keep
-        FROM c GROUP BY 1
-    """
-    # Bigram-LM surprisal: the token chain is the shared _TOKENS split;
-    # bigrams via LATERAL generate_series (1-based list index i, i+1 =
-    # Spark's 0-based t[i-1], t[i]); the floor-log2 quantization is
-    # length(bin(q))-1 in BOTH engines — no libm log anywhere.
-    out["lm_perplexity"] = f"""
-        WITH d AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-        g AS (SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-              FROM d, LATERAL unnest(generate_series(1, len(t) - 1)) AS u(i)
-              WHERE len(t) >= 2),
-        tr AS (SELECT * FROM g WHERE doc_id % 4 = 0),
-        big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-                FROM tr GROUP BY 1, 2),
-        uni AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM tr GROUP BY 1),
-        voc AS (SELECT CAST(count(DISTINCT w2) AS BIGINT) AS v FROM tr),
-        sc AS (SELECT g.doc_id,
-                      ((COALESCE(u.c1, 0) + voc.v) * {1 << 20})
-                          // (COALESCE(b.c12, 0) + 1) AS q
-               FROM g LEFT JOIN big b USING (w1, w2)
-                      LEFT JOIN uni u USING (w1), voc),
-        pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                      CAST(sum(length(bin(q)) - 1) AS BIGINT) AS bits_sum
-               FROM sc GROUP BY 1)
-        SELECT doc_id, n_bigrams, bits_sum,
-               (bits_sum * 1000) // n_bigrams AS bits_per_bigram_milli,
-               CAST((bits_sum * 1000) // n_bigrams < 24450 AS INT) AS keep
-        FROM pd
-    """
-    # Getis-Ord G_i*: the hex chain carries the exact integer weight
-    # w = floor(value) (floor-then-cast is exact in both engines; a bare
-    # double->BIGINT cast would truncate in Spark but ROUND in DuckDB);
-    # ring fan-out replays RING1 incl. self; the z>1.96 test is the same
-    # integer cross-multiplication, HUGEINT products vs Spark DECIMAL(38,0).
-    _go_src = ("SELECT event_id, CAST(floor(value) AS BIGINT) AS w, "
-               + _POINTS_SQL.format(k="event_id") + " FROM events")
-    _go_num = "(n_cells * ring_wx - ring_w * s_tot)"
-    out["getis_ord"] = f"""
-        WITH {_hex_cells_chain_sql(1, src=_go_src, carry="event_id, w")},
-        cnts AS (SELECT cell, CAST(sum(w) AS BIGINT) AS n
-                 FROM hexed GROUP BY 1),
-        tot AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
-                       CAST(sum(n) AS BIGINT) AS s_tot,
-                       CAST(sum(n * n) AS BIGINT) AS q_tot FROM cnts),
-        fan AS (SELECT n AS xj, cell + d AS target FROM cnts,
-                (SELECT unnest([0, 268435456, -268435456, 1, -1,
-                                268435455, -268435455]) AS d)),
-        ring AS (SELECT target AS cell, CAST(count(*) AS BIGINT) AS ring_w,
-                        CAST(sum(xj) AS BIGINT) AS ring_wx
-                 FROM fan GROUP BY 1),
-        j AS (SELECT c.cell, c.n AS x, r.ring_w, r.ring_wx,
-                     t.n_cells, t.s_tot, t.q_tot
-              FROM cnts c JOIN ring r USING (cell), tot t)
-        SELECT cell, x, ring_w, ring_wx,
-               CAST({_go_num} AS BIGINT) AS gi_num,
-               CAST(({_go_num} > 0) AND
-                    (625::HUGEINT * (n_cells - 1)
-                         * {_go_num}::HUGEINT * {_go_num}::HUGEINT
-                     > 2401::HUGEINT
-                         * (n_cells * q_tot - s_tot * s_tot)::HUGEINT
-                         * (n_cells * ring_w - ring_w * ring_w)::HUGEINT)
-                    AS INT) AS is_hot
-        FROM j
-    """
-    out["pagerank"] = _pagerank_sql(5)
-    # BFS: UNION (not ALL) dedups (id, dist) pairs, so the recursion
-    # terminates on cycles; min(dist) = first-visit level = Spark's BFS.
-    out["bfs_hops"] = """
-        WITH RECURSIVE nn AS (SELECT CAST(count(*) AS BIGINT) AS n
-                              FROM documents),
-        e AS (SELECT src, dst FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
-        walk(id, dist) AS (
-            SELECT doc_id, 0 FROM documents WHERE mod(doc_id, 97) = 0
-            UNION
-            SELECT e.dst, w.dist + 1
-            FROM walk w JOIN e ON e.src = w.id WHERE w.dist < 3
-        )
-        SELECT id AS doc_id, CAST(min(dist) AS INT) AS dist
-        FROM walk GROUP BY id
-    """
-    out["sssp"] = """
-        WITH RECURSIVE nn AS (SELECT CAST(count(*) AS BIGINT) AS n
-                              FROM documents),
-        e AS (SELECT src, dst, 1 + mod(src + dst, 9) AS w FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
-        walk(id, d, steps) AS (
-            SELECT doc_id, CAST(0 AS BIGINT), 0
-            FROM documents WHERE mod(doc_id, 97) = 0
-            UNION ALL
-            SELECT e.dst, w.d + e.w, w.steps + 1
-            FROM walk w JOIN e ON e.src = w.id WHERE w.steps < 4
-        )
-        SELECT id AS doc_id, CAST(min(d) AS BIGINT) AS dist
-        FROM walk GROUP BY id
-    """
-    out["kcore"] = _kcore_sql(k=5, rounds=6)
-    out["hits"] = _hits_sql(iters=4, scale=10**6)
-    out["communities"] = (
-        _lpa_sql(iters=4)
-        .replace("SELECT id, label", "SELECT id AS doc_id, label")
-    )
-    out["kmeans"] = _kmeans_sql(k=8, iters=3, scale=1024, d=64)
-    # quad compaction: both levels unrolled; z7 xy from the shared
-    # slippy-map mapping, x/y widened to BIGINT to match Spark's `div`.
-    out["quad_compact"] = f"""
-        WITH pts AS ({_EV_PTS}),
-        t7raw AS (SELECT DISTINCT {_TILE_XY.format(n=128, nm1=127)} FROM pts),
-        t7 AS (SELECT CAST(7 AS INTEGER) AS z, CAST(x AS BIGINT) AS x,
-                      CAST(y AS BIGINT) AS y FROM t7raw),
-        p6 AS (SELECT CAST(6 AS INTEGER) AS z, x // 2 AS x, y // 2 AS y
-               FROM t7 GROUP BY 2, 3 HAVING count(*) = 4),
-        k7 AS (SELECT t.z, t.x, t.y FROM t7 t
-               LEFT JOIN p6 ON p6.x = t.x // 2 AND p6.y = t.y // 2
-               WHERE p6.x IS NULL),
-        p5 AS (SELECT CAST(5 AS INTEGER) AS z, x // 2 AS x, y // 2 AS y
-               FROM p6 GROUP BY 2, 3 HAVING count(*) = 4),
-        k6 AS (SELECT t.z, t.x, t.y FROM p6 t
-               LEFT JOIN p5 ON p5.x = t.x // 2 AND p5.y = t.y // 2
-               WHERE p5.x IS NULL)
-        SELECT z, x, y FROM k7
-        UNION ALL SELECT z, x, y FROM k6
-        UNION ALL SELECT z, x, y FROM p5
-    """
-    out["source_drift"] = f"""
-        WITH toks AS (SELECT source, unnest({_TOKENS}) AS term
-                      FROM documents),
-        st AS (SELECT source, term, CAST(count(*) AS BIGINT) AS c_st
-               FROM toks GROUP BY 1, 2),
-        t AS (SELECT term, CAST(count(*) AS BIGINT) AS c_t
-              FROM toks GROUP BY 1 HAVING count(*) >= 50),
-        s AS (SELECT source, CAST(count(*) AS BIGINT) AS c_s
-              FROM toks GROUP BY 1),
-        tot AS (SELECT CAST(count(*) AS BIGINT) AS c FROM toks),
-        cells AS (SELECT g.source, g.term, g.c_s, g.c_t, g.c,
-                         COALESCE(st.c_st, 0) AS c_st
-                  FROM (SELECT s.source, t.term, s.c_s, t.c_t, tot.c
-                        FROM s, t, tot) g
-                  LEFT JOIN st ON st.source = g.source AND st.term = g.term)
-        SELECT source, term,
-               CAST((c::HUGEINT * c_st - c_s::HUGEINT * c_t)
-                    * (c::HUGEINT * c_st - c_s::HUGEINT * c_t)
-                    AS DECIMAL(38,0)) AS chi2_num,
-               CAST(c::HUGEINT * c_s * c_t AS DECIMAL(38,0)) AS chi2_den
-        FROM cells
-    """
-    out["cooccur"] = f"""
-        WITH toks AS (SELECT doc_id, unnest(t) AS term,
-                             generate_subscripts(t, 1) AS pos
-                      FROM (SELECT doc_id, {_TOKENS} AS t FROM documents)),
-        heavy AS (SELECT term FROM toks GROUP BY 1 HAVING count(*) >= 50),
-        p AS (SELECT doc_id, term, pos FROM toks JOIN heavy USING (term))
-        SELECT least(a.term, b.term) AS term_a,
-               greatest(a.term, b.term) AS term_b,
-               CAST(count(*) AS BIGINT) AS n
-        FROM p a JOIN p b ON a.doc_id = b.doc_id
-                         AND b.pos > a.pos AND b.pos <= a.pos + 3
-        GROUP BY 1, 2
-    """
-    out["conditional_battery_salted"] = out["conditional_battery"]
-    out["semi_join_salted"] = out["semi_join"]
-    # star contraction must label exactly like min-label propagation
-    out["tile_regions_star"] = out["tile_regions"]
-    return out
+    return {q.name: q.oracle for q in REGISTRY if q.oracle is not None}

@@ -39,154 +39,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from insights_spark.queries import REGISTRY  # noqa: E402
 from insights_spark.session import get_spark  # noqa: E402
 
-# Headline = the SCALE-path variants (cell-local kNN, IVF ANN, LSH near-dup);
-# the exact O(n²) baselines (knn, ann_topk) exist for the correctness gate
-# at sf0.01 and would dominate wall time at sf0.1 without telling us
-# anything about the 100 TB plan shape.
-HEADLINE = [
-    "flagship_tile_density",
-    "conditional_battery",
-    "semi_join",
-    "latest_event",
-    "month_rollup",
-    "friday_weeks",
-    "pip_countries",
-    "knn_cell_local",
-    "within_distance",
-    "tile_pyramid",
-    "tile_vectorize",
-    "s2_cells",
-    "exact_dedup",
-    "quality",
-    "lang_id",
-    "minhash",
-    "minhash_lsh_pairs",
-    "ngram_jaccard",
-    "clean_corpus",
-    "ann_ivf",
-    # round-3 additions: sessionization, phrase postings, 4th cell family,
-    # crawl-balance cap, embedding near-dups (exact baseline, now parallel)
-    "sessionize",
-    "inverted_index",
-    "geohash_cells",
-    "source_cap",
-    "cos_near_dups",
-    "prepare_corpus",
-    "asof_join",
-    "pack_sequences",
-    # round-4 additions: benchmark decontamination, Gopher repetition gates,
-    # CCNet-style boilerplate, metadata-only frame schedule
-    "decontam",
-    "rep_filters",
-    "boilerplate",
-    "frame_schedule",
-    "pii_scrub",
-    "budget_select",
-    "classifier_score",
-    "dedup_clusters",
-    "corpus_shuffle",
-    "minhash_vs_index",
-    "hex_smooth",
-    "containment",
-    "bm25",
-    "cell_clusters",
-    "url_dedup",
-    "passage_dedup",
-    "heavy_hitters",
-    "novelty",
-    "st_join",
-    "user_tracks",
-    "home_cells",
-    "mix_sources",
-    "sliding_windows",
-    "tile_pyramid_inc",
-    "trending_cells",
-    "fuzzy_join",
-    "frontier_cells",
-    "quantize",
-    "doc_geotag",
-    "top_terms_per_source",
-    "token_lorenz",
-    "knn_join",
-    "zonal_stats",
-    "tile_diff",
-    "cluster_savings",
-    # round-5 additions
-    "hot_changesets_inc",
-    "pagerank",
-    "moran_i",
-    "quad_compact",
-    "source_drift",
-    "cooccur",
-    "pps_sample",
-    "gapfill_weeks",
-    "table_merge_read",
-    "bfs_hops",
-    "spatial_layout_scan",
-    "anomaly_weeks",
-    "ann_int8",
-    "phash_pairs",
-    "scd2_intervals",
-    "funnel_steps",
-    "column_profile",
-    "semantic_prune",
-    "cohort_retention",
-    "scd2_merge",
-    "sketch_rollup",
-    "geofence_dwell",
-    "cluster_safe_split",
-    "curriculum_order",
-    "equi_depth_hist",
-    "snapshot_diff",
-    "check_constraints",
-    "score_calibration",
-    "lang_margin",
-    "scd2_lookup",
-    "triangles",
-    "event_transitions",
-    "rolling_active",
-    "cube_rollup",
-    "pivot_counts",
-    "event_gaps",
-    "unpivot_counts",
-    # round-5 session-5 additions
-    "kcore",
-    "hybrid_search",
-    "regional_revenue",
-    "normalize_text",
-    "theil_sen",
-    "mann_kendall",
-    "sorted_neighborhood",
-    "hits",
-    "od_flows",
-    "communities",
-    "cusum",
-    "concurrency",
-    "kmeans",
-    "prefix_jaccard",
-    "sssp",
-    "semivariogram",
-    "idw_fill",
-    "getis_ord",
-    "lm_perplexity",
-    "host_stats",
-    "shard_assign",
-    "ripley_k",
-    "region_shape",
-    "kn_continuation",
-    "simplify_tracks",
-    "directional_hull",
-    "cdc_chunks",
-    "freq_of_freqs",
-    "move_rose",
-    "nn_distance_hist",
-    "winsorized_stats",
-    "covered_time",
-    "path_tree",
-    "cdc_containment",
-]
+# Headline = the queries registered with headline=True, in registry order:
+# the SCALE-path variants (cell-local kNN, IVF ANN, LSH near-dup), not the
+# exact O(n²) baselines (knn, ann_topk) that exist for the correctness gate
+# at sf0.01 and would dominate wall time at sf0.1.
+HEADLINE = [q.name for q in REGISTRY if q.headline]
 
 
 def force(df) -> None:
@@ -255,43 +115,9 @@ def main() -> None:
 
     # ---- sf1 scale step (single pass, budget-guarded) ----
     sf1_queries: dict[str, float] = {}
-    sf1_excluded = {
-        "within_distance": "result pair set grows ~quadratically in point "
-        "density at fixed radius — the OUTPUT is 100× at 10× data; a bench "
-        "row would time the answer's size, not the plan",
-        "cos_near_dups": "documented O(n²) exact baseline; the scale route "
-        "is cos_near_dups_lsh",
-        "cos_near_dups_lsh": "gate geometry (6×6-bit bands) is "
-        "recall-calibrated on structureless RANDOM vectors, where candidate "
-        "volume is ∝0.13·n² by construction; production scales bits/band "
-        "with log n — timed here as cos_near_dups_lsh_g10 (10-bit bands)",
-        "ripley_k": "aggregated output is 3 rows but the enumerated "
-        "candidate volume inside the certified join is ∝ density² at fixed "
-        "radii (the K statistic's own definition: ~100× pairs at 10× data); "
-        "production shrinks the radius set with density, which the "
-        "radii_deg parameter exposes",
-        "st_join": "same quadratic-output shape as within_distance: pair "
-        "count grows with point density² at fixed (radius, τ); the row "
-        "would time the answer's size, not the plan",
-        "phash_pairs": "synthetic docs share a small template space, so a "
-        "~constant FRACTION of image pairs sits within hamming ≤ 3 "
-        "(sf0.01→sf0.1 measured 2.5k→230k pairs, ~92× at 10× data): the "
-        "OUTPUT is quadratic in this fixture by construction and an sf1 "
-        "row would time the answer's size, not the banded-join plan",
-        "prefix_jaccard": "the 10×-copy sf1 derivation inflates EVERY "
-        "gram's df ~10× (hottest prefix gram 10→94 docs), so prefix "
-        "candidate volume grows ~quadratically by fixture construction "
-        "(measured 430k→52.9M candidate pairs at 10× data) while the "
-        "OUTPUT stays linear (256→328 pairs) — the rarest-first prefix "
-        "lemma assumes rare grams STAY rare as the corpus grows, which "
-        "real corpora satisfy and a key-offset copy fixture cannot; the "
-        "probabilistic scale route at fixture-breaking densities is "
-        "minhash_lsh_pairs",
-        "semantic_prune": "the registered query pins num_centroids=16 for "
-        "oracle parity, so per-bucket candidate volume is ∝(n/16)² — "
-        "quadratic at 10× data; production (SemDeDup) scales k ∝ √n to "
-        "keep buckets ~√n, which the operator parameter exposes",
-    }
+    # queries whose OUTPUT (or candidate volume) is super-linear by
+    # construction; each reason is declared with the query's sf1_skip
+    sf1_excluded = {q.name: q.sf1_skip for q in REGISTRY if q.sf1_skip}
     sf1_truncated: list[str] = []
     sf1_passes: dict[str, int] = {}
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
@@ -308,9 +134,8 @@ def main() -> None:
             os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1"))
         sf1_budget = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET", "300"))
         sf1_t0 = time.perf_counter()
-        # newest-first: budget truncation then starves the queries with the
-        # LONGEST sf1 evidence history (ratios already recorded in BENCH.md),
-        # not the plans that have never been scale-stepped
+        # reverse registry order: under budget truncation the queries at the
+        # head of the registry are the ones left out
         todo = [n for n in reversed(HEADLINE) if n not in sf1_excluded]
         todo.append("cos_near_dups_lsh_g10")
 

@@ -398,10 +398,10 @@ def knn_cell_local(
     (ring-bounded recall, cheapest possible).
 
     Intermediates are persisted for the duration of the returned plan
-    (shared subtrees would re-run the cell encode + join per branch);
-    blocks are reclaimed by Spark's ContextCleaner when the DataFrame goes
-    out of scope, or immediately via spark.catalog.clearCache() in a
-    long-lived session.
+    (shared subtrees would re-run the cell encode + join per branch).
+    The CacheManager holds them until ``unpersist()`` or
+    ``spark.catalog.clearCache()``: the ContextCleaner does not reclaim
+    persisted DataFrames.
     """
     from pyspark.sql.window import Window
 

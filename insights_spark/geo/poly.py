@@ -71,14 +71,3 @@ def boundary_row_from_poly(path: str, text: str, priority: bool = False) -> dict
         "polygons": parse_poly(text),
         "priority": priority,
     }
-
-
-def load_poly_files(paths: list[str]) -> list[dict]:
-    """Parse many .poly files → boundary rows, upsert-last-wins on name_en
-    (the reference's ON CONFLICT DO UPDATE, osmh.py:105)."""
-    by_name: dict[str, dict] = {}
-    for p in paths:
-        with open(p, encoding="utf-8") as f:
-            row = boundary_row_from_poly(p, f.read())
-        by_name[row["name_en"]] = row
-    return list(by_name.values())

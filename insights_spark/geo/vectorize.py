@@ -12,8 +12,8 @@ turns tile rasters back into vector form —
 * :func:`quad_wkt` — WKT polygon text for export (not oracle-compared:
   float→string formatting differs across engines).
 * :func:`tile_regions` — merged hot-tile REGIONS: connected components
-  over 4-adjacency, Pregel-style min-label propagation. The oracle is a
-  DuckDB recursive-CTE transitive closure over the same adjacency.
+  over 4-adjacency via :func:`star_cc_labels`. The oracle is a DuckDB
+  recursive-CTE transitive closure over the same adjacency.
 
 No reference counterpart (the reference leaves rendering to
 Postgres/Leaflet dashboards, e.g. underpass-ui queries in
@@ -21,16 +21,13 @@ advanced-queries.md); formulas are the public OSM slippy-map spec.
 
 Scale posture: a tile raster is bounded by 4^z keys regardless of input
 size (z12 ⇒ ≤16.7M rows worldwide), so everything here operates on a table
-that is tiny relative to the fact table that produced it. Each label
-propagation sweep is ONE hash-shuffle join keyed on the 64-bit tile id,
-and the sweep count equals the hot-region diameter in tiles — small for
-real edit-density blobs. For adversarial snake-shaped regions,
-``tile_regions(..., algorithm="star")`` switches to alternating
-large-star/small-star (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14 — O(log² n) rounds guaranteed regardless
-of diameter, edge-list-sized state per round); the default min-label +
-pointer-jumping loop stays because density blobs converge in a few
-sweeps and its plan is the simplest to read in the Spark UI.
+that is tiny relative to the fact table that produced it. Components use
+alternating large-star/small-star contraction (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14): O(log² n)
+rounds whatever the region shape, adversarial snakes included, and each
+round's state is the shrinking edge list. Each round is ONE groupBy + ONE join
+keyed on the 64-bit tile id; small edge lists skip the rounds for one
+bounded collect and a driver union-find.
 """
 
 from __future__ import annotations
@@ -125,16 +122,16 @@ def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
     the component's minimum node id. Isolated nodes are the caller's
     coalesce.
 
-    Why it exists next to the min-label+jump loop: propagation needs
-    O(log diameter) sweeps WITH pointer jumping but each sweep carries the
-    full label table through two joins; star contraction is guaranteed
+    Why star contraction: min-label propagation needs O(log diameter)
+    sweeps even WITH pointer jumping, and each sweep carries the full
+    label table through two joins; star contraction is guaranteed
     O(log² n) rounds on ANY topology (adversarial snakes included) and each
     round's state is just the shrinking edge list. Round = large-star
     (hang every node's larger neighbors under its minimum) then small-star
     (re-hang the smaller neighbors), each ONE groupBy + ONE join on the
-    node id — the same shuffle key layout as the simple sweep, so skew
-    handling (AQE) applies identically. At fixpoint every component is a
-    star rooted at its minimum, so the label read-off is one-hop.
+    node id, so AQE skew handling applies to every round. At fixpoint
+    every component is a star rooted at its minimum, so the label read-off
+    is one-hop.
 
     Sweep-cost engineering (measured on tiny bounded graphs, where
     per-stage scheduling latency dominates; identical plans at scale):
@@ -256,36 +253,19 @@ def tile_regions(
     tiles: DataFrame,
     min_density: float = 1,
     max_sweeps: int = 30,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """Merged hot-tile regions: 4-adjacency connected components.
 
     Output: (z, x, y, density, region_id) where region_id is the MINIMUM
     tile id in the component (deterministic, order-free — safe to
-    oracle-hash). ``algorithm="star"`` routes the same hot/edge build
-    through :func:`star_cc_labels` (guaranteed O(log² n) rounds on
-    adversarial topologies); both algorithms produce identical labels.
+    oracle-hash). The hot tiles and their adjacency edges are built here;
+    the components come from :func:`star_cc_labels` (O(log² n) rounds on
+    any topology, driver union-find when the edge list is small).
+    Isolated hot tiles appear in no edge and are their own region.
 
-    Algorithm: min-label propagation + pointer jumping. Labels start as
-    each tile's own id; each sweep takes the min over self + 4-neighbors,
-    then compresses label(id) ← label(label(id)) — the pointer-doubling
-    step that turns O(component diameter) sweeps into O(log diameter)
-    (a 1024-tile snake converges in ~10 sweeps, not ~1024; log2 of the
-    worldwide z12 tile count is 24 < the default cap). Fixpoint when no
-    label changes. The per-sweep ``count()`` is iteration CONTROL on the
-    bounded tile table, not a data collect.
-
-    Each sweep ends in ``localCheckpoint(eager=True)``: the sweep's plan
-    references the previous label table TWICE (union + messages), so
-    without lineage truncation the logical plan doubles per sweep and
-    Catalyst analysis goes exponential — the standard iterative-DataFrame
-    hazard (same pattern GraphX solves with periodic checkpoints). On a
-    real cluster prefer ``spark.sparkContext.setCheckpointDir`` +
-    ``checkpoint()`` for executor-loss resilience; localCheckpoint keeps
-    the sandbox run self-contained. The ``hot``/``edges`` persists and the
-    superseded per-sweep checkpoint blocks are reclaimed by the
-    ContextCleaner once unreferenced (same posture as the other library
-    operators — the caller's consuming action owns the lifetime).
+    The ``hot``/``edges`` persists stay in the CacheManager until the
+    caller runs ``unpersist()`` or ``spark.catalog.clearCache()``: the
+    ContextCleaner does not reclaim persisted DataFrames.
     """
     if max_sweeps < 1:
         raise ValueError("max_sweeps must be >= 1")
@@ -295,8 +275,8 @@ def tile_regions(
         .persist()
     )
 
-    # Directed 4-adjacency edges (each unordered pair appears both ways,
-    # which is exactly what undirected propagation needs).
+    # Directed 4-adjacency edges (each unordered pair appears both ways;
+    # star_cc_labels normalizes the orientation).
     nbr = hot.select(
         "id",
         "z",
@@ -318,62 +298,11 @@ def tile_regions(
     )
     edges.count()
 
-    if algorithm == "star":
-        star_labels, _ = star_cc_labels(edges, max_sweeps)
-        # isolated hot tiles appear in no edge: they are their own region
-        return (
-            hot.join(star_labels, "id", "left")
-            .select(
-                "z", "x", "y", "density",
-                F.coalesce("label", "id").alias("region_id"),
-            )
+    labels, _ = star_cc_labels(edges, max_sweeps)
+    return (
+        hot.join(labels, "id", "left")
+        .select(
+            "z", "x", "y", "density",
+            F.coalesce("label", "id").alias("region_id"),
         )
-    if algorithm != "jump":
-        raise ValueError(f"unknown algorithm {algorithm!r} (use 'jump' or 'star')")
-
-    labels = hot.select("id", F.col("id").alias("label")).localCheckpoint()
-    # fixpoint certificate: min-propagation labels are NON-INCREASING per
-    # id, so Σ label strictly decreases on any change — comparing the sum
-    # (exact decimal; bigint ids would overflow a long sum at z≥12 scale)
-    # replaces a per-sweep join+count with a 1-row aggregate.
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-    for _ in range(max_sweeps):
-        msgs = edges.join(
-            labels.select(F.col("id").alias("nbr_id"), "label"), "nbr_id"
-        ).select("id", "label")
-        prop = labels.unionByName(msgs).groupBy("id").agg(
-            F.min("label").alias("label")
-        )
-        # pointer jumping: every label IS some hot tile's id, so jumping
-        # through its current label halves chain depth each sweep
-        jump = prop.select(
-            F.col("id").alias("_jid"), F.col("label").alias("_jlabel")
-        )
-        new = (
-            prop.join(jump, prop["label"] == jump["_jid"], "left")
-            .select(
-                "id",
-                F.coalesce("_jlabel", "label").alias("label"),
-            )
-            .localCheckpoint()
-        )
-        new_sum = new.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-        changed = int(new_sum != prev_sum)
-        prev_sum = new_sum
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # silent partial merges are worse than a loud failure: labels that
-        # haven't reached fixpoint mean two adjacent tiles can still carry
-        # different region ids (ADVICE r2). With pointer jumping this needs
-        # a component of diameter > 2^max_sweeps — raise the cap, don't trust
-        # the output.
-        raise RuntimeError(
-            f"tile_regions did not converge within max_sweeps={max_sweeps} "
-            f"({changed} labels still changing); raise max_sweeps"
-        )
-
-    return hot.join(labels, "id").select(
-        "z", "x", "y", "density", F.col("label").alias("region_id")
     )

@@ -128,16 +128,3 @@ def mapathon_user_report(
     return per_user.join(F.broadcast(names), "uid", "left").select(
         "uid", "username", "key", "action", "features"
     )
-
-
-def mapathon_contributors(
-    changesets: DataFrame, elements: DataFrame, changeset_ids: DataFrame
-) -> DataFrame:
-    """advanced-queries.md:35-47 — distinct contributor count over the
-    mapathon's elements."""
-    scoped = elements.join(
-        F.broadcast(changeset_ids.select(F.col("id").alias("changeset"))),
-        "changeset",
-        "left_semi",
-    )
-    return scoped.agg(F.countDistinct("uid").alias("contributors"))

@@ -32,12 +32,6 @@ def tag_get(tags: Column, key: str) -> Column:
     return F.element_at(tags, F.lit(key))
 
 
-def explode_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
-    """P8 — ``each(tags)``: one row per (key,value) pair
-    (reference advanced-queries.md:17,36,54,79)."""
-    return df.select("*", F.explode(F.col(tags_col)).alias("key", "value"))
-
-
 def tokenize(col: Column, delims: str) -> Column:
     """P9 core — regexp split → trim → keep '#'-prefixed tokens
     (reference changesetmd.py:72-81)."""

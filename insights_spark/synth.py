@@ -292,22 +292,6 @@ def gen_boundaries() -> list[dict]:
     ]
 
 
-def gen_hashtags() -> list[dict]:
-    rows = []
-    for i, name in enumerate(h.lstrip("#") for h in HASHTAG_POOL):
-        rows.append(
-            {
-                "id": i + 1,
-                "name": name,
-                "created_at": BASE_TS,
-                "is_tm_project": name.startswith("hotosm-project"),
-                "first_used": None,
-                "last_used": None,
-            }
-        )
-    return rows
-
-
 def pages_df(spark, n_pages: int = 60, seed: int = 42):
     from .schemas import PAGES
 
@@ -380,9 +364,3 @@ def pages_df_dist(spark, n_pages: int, seed: int = 42, partitions: int | None = 
         spark.range(0, n_pages, numPartitions=parts)
         .mapInPandas(gen, PAGES)
     )
-
-
-def boundaries_df(spark):
-    from .schemas import BOUNDARIES
-
-    return spark.createDataFrame(gen_boundaries(), BOUNDARIES)

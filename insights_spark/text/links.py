@@ -188,8 +188,9 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         # whose different key forces a recompute of the whole
         # symmetrize+degree+orient subtree without the pin. At scale that
         # recompute is two extra scans + three extra shuffles; locally
-        # interleaved A/B measured 2.35 -> 1.69 s. House style: reclamation
-        # belongs to the ContextCleaner once the query's references drop.
+        # interleaved A/B measured 2.35 -> 1.69 s. The CacheManager holds
+        # the pin until unpersist() or clearCache(); the ContextCleaner
+        # does not reclaim persisted DataFrames.
         .persist()
     )
     w = (

@@ -341,7 +341,7 @@ def test_vectorize_and_wkt(spark):
 
 
 def test_tile_regions_matches_union_find(spark):
-    """Distributed min-label propagation == python union-find on a fixture
+    """tile_regions (star contraction) == python union-find on a fixture
     with an L-shaped blob, a 1xN snake (worst-case diameter), a singleton,
     and two blobs touching only diagonally (must NOT merge: 4-adjacency)."""
     from insights_spark.geo import vectorize
@@ -516,16 +516,21 @@ def test_tile_regions_multi_z_isolation(spark):
 
 def test_tile_regions_nonconvergence_raises(spark):
     """A sweep cap too small for the component diameter must raise, not
-    return silently partial region ids (ADVICE r2)."""
+    return silently partial region ids (ADVICE r2); a cap below one sweep
+    is rejected up front."""
     import pytest
 
     from insights_spark.geo import vectorize
 
+    ids = list(range(1, 9))
+    snake_edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id long, nbr_id long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        vectorize.star_cc_labels(snake_edges, max_sweeps=1, collect_cap=0)
     snake = spark.createDataFrame(
         [(8, 20, y, 7) for y in range(5, 13)], "z int, x int, y int, density long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        vectorize.tile_regions(snake, min_density=1, max_sweeps=1).collect()
     with pytest.raises(ValueError):
         vectorize.tile_regions(snake, min_density=1, max_sweeps=0)
 
@@ -566,28 +571,6 @@ def test_real_h3_parity_gate():
     for k in (1, 2, 3):
         assert len(cells.hex_ring_ids(ax_cell, k)) == 1 + 3 * k * (k + 1)
         assert len(h3.grid_disk(h3_cell, k)) == 1 + 3 * k * (k + 1)
-
-
-def test_tile_regions_star_equals_jump(spark):
-    """algorithm='star' (large-star/small-star contraction) must label
-    exactly like the default propagation loop on blobs, snakes, singletons,
-    and diagonal non-merges."""
-    from insights_spark.geo import vectorize
-
-    coords = (
-        [(10, 10), (10, 11), (10, 12), (11, 12)]
-        + [(20, y) for y in range(5, 13)]
-        + [(0, 0)]
-        + [(30, 30), (31, 31)]
-    )
-    df = spark.createDataFrame(
-        [(8, x, y, 7) for x, y in coords], "z int, x int, y int, density long"
-    )
-    jump = {(r["x"], r["y"]): r["region_id"]
-            for r in vectorize.tile_regions(df, 1, algorithm="jump").collect()}
-    star = {(r["x"], r["y"]): r["region_id"]
-            for r in vectorize.tile_regions(df, 1, algorithm="star").collect()}
-    assert star == jump and len(star) == len(coords)
 
 
 def test_star_cc_sweep_count_on_snake(spark):

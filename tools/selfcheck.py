@@ -52,7 +52,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark("selfcheck", master="local[8]")
+    spark = get_spark("selfcheck")
     con = duckdb.connect()
     for t in entrymod.TABLES:
         p = f"{sf_dir}/{t}.parquet"
