@@ -2,8 +2,11 @@
 
 NOT part of the driver contract — bench.py is the frozen measurement
 harness; this file exists so optimization work can time ONE query at a
-time with the noop sink, label jobs, and save .explain("formatted") for
-the plans/r06/ evidence files.
+time with the noop sink, label jobs, and save .explain("formatted")
+plans. The session follows get_spark's core rule (local[$SPARK_GRAFT_CPUS]
+or local[*]) with max(cores, 8) shuffle partitions. Plans go to
+$PLAN_DIR (default /tmp/insights_plans), outside the repo, so a run never
+overwrites the committed plans/r06/ evidence.
 
 Usage:
     python bench_extra.py q1 q2 ...            # time + plan for named queries
@@ -37,16 +40,12 @@ def main() -> None:
     reps = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
     suffix = os.environ.get("PLAN_SUFFIX", "before")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    plan_dir = os.environ.get(
-        "PLAN_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "plans", "r06"),
-    )
+    plan_dir = os.environ.get("PLAN_DIR", "/tmp/insights_plans")
     os.makedirs(plan_dir, exist_ok=True)
 
-    spark = get_spark("insights-bench-extra", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 8))
+    spark = get_spark("insights-bench-extra")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(spark.sparkContext.defaultParallelism, 8)))
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 

@@ -17,6 +17,69 @@ from insights_spark.queries._fixtures import (
 )
 
 
+def _elements(spark, sf_dir):
+    """Synthetic element history over lineitem, one row per version:
+    (id, version, type, timestamp, changeset, tags, country). Used by the
+    country-insights and SCD2 queries.
+
+    ``version`` must be unique per (type, id): the latest-version pick
+    and the SCD2 interval order rely on it. (l_orderkey, l_linenumber)
+    is not unique in the synthetic data, so partkey and suppkey are
+    folded in. That still collides when two rows differ only in
+    l_shipdate (sf0.001 has such a pair), so the ship day, counted from
+    1995-01-01, fills the lowest four digits."""
+    li = _t(spark, sf_dir, "lineitem")
+    k = F.col("l_orderkey")
+    return li.select(
+        k.alias("id"),
+        (
+            (
+                F.col("l_linenumber").cast("long") * F.lit(1000000000000)
+                + F.col("l_partkey") * F.lit(1000000)
+                + F.col("l_suppkey")
+            ) * F.lit(10000)
+            + F.datediff(F.col("l_shipdate"), F.lit("1995-01-01"))
+        ).alias("version"),
+        F.when(F.pmod(k, F.lit(4)) == 0, F.lit("node"))
+        .when(F.pmod(k, F.lit(4)) == 1, F.lit("relation"))
+        .otherwise(F.lit("way"))
+        .alias("type"),
+        F.col("l_shipdate").alias("timestamp"),
+        F.col("l_partkey").alias("changeset"),
+        F.when(
+            F.pmod(F.col("l_partkey"), F.lit(3)) == 0,
+            F.create_map(F.lit("building"), F.lit("yes")),
+        )
+        .otherwise(F.create_map().cast("map<string,string>"))
+        .alias("tags"),
+        F.when(F.pmod(F.col("l_suppkey"), F.lit(5)) == 4, F.lit(None).cast("string"))
+        .otherwise(
+            F.concat(F.lit("C"), F.pmod(F.col("l_suppkey"), F.lit(5)).cast("string"))
+        )
+        .alias("country"),
+    )
+
+
+# _elements on the oracle side: CTE el, with ts for timestamp and
+# has_building for the building tag
+_ELEMENTS_SQL = """
+            el AS (
+              SELECT l_orderkey AS id,
+                     (l_linenumber::BIGINT * 1000000000000
+                       + l_partkey * 1000000 + l_suppkey) * 10000
+                       + (CAST(l_shipdate AS DATE) - DATE '1995-01-01')
+                       AS version,
+                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
+                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
+                          ELSE 'way' END AS type,
+                     l_shipdate AS ts,
+                     l_partkey AS changeset,
+                     mod(l_partkey, 3) = 0 AS has_building,
+                     CASE WHEN mod(l_suppkey, 5) = 4 THEN NULL
+                          ELSE 'C' || mod(l_suppkey, 5)::VARCHAR END AS country
+              FROM lineitem)"""
+
+
 _CONDITIONAL_BATTERY_SQL = """
             SELECT l_orderkey,
                    CAST(sum((l_quantity > 25)::int) AS BIGINT) AS qty_gt25,
@@ -668,19 +731,8 @@ def _q_explode_map(spark, sf_dir):
     )
 
 
-@query("country_insights", oracle="""
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts,
-                     mod(l_partkey, 3) = 0 AS has_building,
-                     CASE WHEN mod(l_suppkey, 5) = 4 THEN NULL
-                          ELSE 'C' || mod(l_suppkey, 5)::VARCHAR END AS country
-              FROM lineitem),
+@query("country_insights", oracle=f"""
+            WITH {_ELEMENTS_SQL},
             latest AS (
               SELECT * FROM (
                 SELECT *, row_number() OVER (PARTITION BY type, id
@@ -700,67 +752,8 @@ def _q_country_insights(spark, sf_dir):
     country predicates, count distinct ids (ops.country.building_counts_asof)."""
     from insights_spark.ops.country import building_counts_asof
 
-    li = _t(spark, sf_dir, "lineitem")
-    k = F.col("l_orderkey")
-    els = li.select(
-        k.alias("id"),
-        # (l_orderkey, l_linenumber) is NOT unique in the synthetic data —
-        # fold partkey/suppkey in so the latest-version pick is deterministic
-        (
-            F.col("l_linenumber").cast("long") * F.lit(1000000000000)
-            + F.col("l_partkey") * F.lit(1000000)
-            + F.col("l_suppkey")
-        ).alias("version"),
-        F.when(F.pmod(k, F.lit(4)) == 0, F.lit("node"))
-        .when(F.pmod(k, F.lit(4)) == 1, F.lit("relation"))
-        .otherwise(F.lit("way"))
-        .alias("type"),
-        F.col("l_shipdate").alias("timestamp"),
-        F.when(
-            F.pmod(F.col("l_partkey"), F.lit(3)) == 0,
-            F.create_map(F.lit("building"), F.lit("yes")),
-        )
-        .otherwise(F.create_map().cast("map<string,string>"))
-        .alias("tags"),
-        F.when(F.pmod(F.col("l_suppkey"), F.lit(5)) == 4, F.lit(None).cast("string"))
-        .otherwise(
-            F.concat(F.lit("C"), F.pmod(F.col("l_suppkey"), F.lit(5)).cast("string"))
-        )
-        .alias("country"),
-    )
-    return building_counts_asof(els, "1997-01-01 00:00:00")
-
-
-def _build_elements_with_changeset(spark, sf_dir):
-    """The country_insights element fixture + a changeset column (l_partkey)
-    so the Tasking-Manager semi-join has something to key on."""
-    li = _t(spark, sf_dir, "lineitem")
-    k = F.col("l_orderkey")
-    return li.select(
-        k.alias("id"),
-        (
-            F.col("l_linenumber").cast("long") * F.lit(1000000000000)
-            + F.col("l_partkey") * F.lit(1000000)
-            + F.col("l_suppkey")
-        ).alias("version"),
-        F.when(F.pmod(k, F.lit(4)) == 0, F.lit("node"))
-        .when(F.pmod(k, F.lit(4)) == 1, F.lit("relation"))
-        .otherwise(F.lit("way"))
-        .alias("type"),
-        F.col("l_shipdate").alias("timestamp"),
-        F.col("l_partkey").alias("changeset"),
-        F.when(
-            F.pmod(F.col("l_partkey"), F.lit(3)) == 0,
-            F.create_map(F.lit("building"), F.lit("yes")),
-        )
-        .otherwise(F.create_map().cast("map<string,string>"))
-        .alias("tags"),
-        F.when(F.pmod(F.col("l_suppkey"), F.lit(5)) == 4, F.lit(None).cast("string"))
-        .otherwise(
-            F.concat(F.lit("C"), F.pmod(F.col("l_suppkey"), F.lit(5)).cast("string"))
-        )
-        .alias("country"),
-    )
+    return building_counts_asof(_elements(spark, sf_dir),
+                                "1997-01-01 00:00:00")
 
 
 @query("unpivot_counts", headline=True, oracle="""
@@ -887,16 +880,8 @@ def _q_event_transitions(spark, sf_dir):
     return event_transitions(_t(spark, sf_dir, "events"))
 
 
-@query("scd2_lookup", headline=True, oracle="""
-        WITH el AS (
-          SELECT l_orderkey AS id,
-                 l_linenumber::BIGINT * 1000000000000
-                   + l_partkey * 1000000 + l_suppkey AS version,
-                 CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                      WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                      ELSE 'way' END AS type,
-                 l_shipdate AS ts
-          FROM lineitem),
+@query("scd2_lookup", headline=True, oracle=f"""
+        WITH {_ELEMENTS_SQL},
         seq AS (
           SELECT *, row_number() OVER (PARTITION BY type, id
                                        ORDER BY ts, version) AS sq
@@ -933,7 +918,7 @@ def _q_scd2_lookup(spark, sf_dir):
     15k probes) — that ordering contract is the lookup's precondition."""
     from insights_spark.ops.latest import scd2_intervals, scd2_lookup
 
-    els = _build_elements_with_changeset(spark, sf_dir)
+    els = _elements(spark, sf_dir)
     w = Window.partitionBy("type", "id").orderBy("timestamp", "version")
     seq = els.withColumn("seq", F.row_number().over(w))
     dim = scd2_intervals(seq, version_col="seq").select(
@@ -1137,16 +1122,8 @@ def _q_sketch_rollup(spark, sf_dir):
     )
 
 
-@query("scd2_merge", headline=True, oracle="""
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts
-              FROM lineitem)
+@query("scd2_merge", headline=True, oracle=f"""
+            WITH {_ELEMENTS_SQL}
             SELECT type, id, version,
                    ts AS valid_from,
                    lead(ts) OVER (PARTITION BY type, id ORDER BY version)
@@ -1167,7 +1144,7 @@ def _q_scd2_merge(spark, sf_dir):
     not just append-at-the-end."""
     from insights_spark.ops.latest import scd2_intervals, scd2_merge
 
-    els = _build_elements_with_changeset(spark, sf_dir)
+    els = _elements(spark, sf_dir)
     cols = ("type", "id", "version", "valid_from", "valid_to", "is_current")
     # NOT persisted (r6 cold-cache A/B): scd2_merge reads the dimension on
     # both its anti-join and semi-join branches, but materializing the
@@ -1318,16 +1295,8 @@ def _q_funnel(spark, sf_dir):
     return funnel_steps(ev, ("view", "click", "purchase"), max_gap_hours=72)
 
 
-@query("scd2_intervals", headline=True, oracle="""
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts
-              FROM lineitem)
+@query("scd2_intervals", headline=True, oracle=f"""
+            WITH {_ELEMENTS_SQL}
             SELECT type, id, version,
                    ts AS valid_from,
                    lead(ts) OVER (PARTITION BY type, id ORDER BY version)
@@ -1346,7 +1315,7 @@ def _q_scd2(spark, sf_dir):
     per input version)."""
     from insights_spark.ops.latest import scd2_intervals
 
-    els = _build_elements_with_changeset(spark, sf_dir)
+    els = _elements(spark, sf_dir)
     return scd2_intervals(els).select(
         "type", "id", "version",
         F.col("valid_from").alias("valid_from"),
@@ -1355,20 +1324,8 @@ def _q_scd2(spark, sf_dir):
     )
 
 
-@query("country_insights_tm", oracle="""
-            WITH el AS (
-              SELECT l_orderkey AS id,
-                     l_linenumber::BIGINT * 1000000000000
-                       + l_partkey * 1000000 + l_suppkey AS version,
-                     CASE WHEN mod(l_orderkey, 4) = 0 THEN 'node'
-                          WHEN mod(l_orderkey, 4) = 1 THEN 'relation'
-                          ELSE 'way' END AS type,
-                     l_shipdate AS ts,
-                     l_partkey AS changeset,
-                     mod(l_partkey, 3) = 0 AS has_building,
-                     CASE WHEN mod(l_suppkey, 5) = 4 THEN NULL
-                          ELSE 'C' || mod(l_suppkey, 5)::VARCHAR END AS country
-              FROM lineitem),
+@query("country_insights_tm", oracle=f"""
+            WITH {_ELEMENTS_SQL},
             latest AS (
               SELECT * FROM (
                 SELECT *, row_number() OVER (PARTITION BY type, id
@@ -1395,7 +1352,7 @@ def _q_country_insights_tm(spark, sf_dir):
     (every third key), mirroring the hot_changesets materialized view."""
     from insights_spark.ops.country import building_counts_asof
 
-    els = _build_elements_with_changeset(spark, sf_dir)
+    els = _elements(spark, sf_dir)
     hot = (
         _t(spark, sf_dir, "part")
         .filter(F.pmod(F.col("p_partkey"), F.lit(3)) == 0)

@@ -74,18 +74,43 @@ def _kmeans_sql(k: int = 8, iters: int = 3, scale: int = 1024,
     """
 
 
-def _kcore_sql(k: int = 3, rounds: int = 6) -> str:
-    """Unrolled R-round k-core peel over the shared symmetrized 3-out doc
-    graph: d_t = degrees induced by alive_t, alive_{t+1} = {d_t >= k},
-    output = final d where >= k — same recurrence as
-    text/links.py:kcore_peel."""
-    parts = ["""
+def _doc_graph(docs):
+    """The 3-out doc link graph (src, dst) every graph query reads: three
+    deterministic out-links per doc, dst = (doc_id·7919 + 104729·k) mod n
+    for k = 1, 2, 3, self-links dropped, multi-edges kept. Takes the
+    documents table so a query that also needs its nodes or seeds reads
+    it once: a second read measured ~7% slower on pagerank at sf0.1."""
+    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return (
+        docs.select("doc_id")
+        .crossJoin(F.broadcast(n_df))
+        .select(
+            F.col("doc_id").alias("src"),
+            F.explode(F.array(*[
+                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
+                for k in (1, 2, 3)
+            ])).alias("dst"),
+        )
+        .filter(F.col("dst") != F.col("src"))
+    )
+
+
+# _doc_graph on the oracle side: CTEs nn (the doc count) and e0 (the edges)
+_DOC_GRAPH_SQL = """
         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         e0 AS (SELECT src, dst FROM (
                  SELECT doc_id AS src,
                         mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
                  FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-               WHERE dst <> src),
+               WHERE dst <> src)"""
+
+
+def _kcore_sql(k: int = 3, rounds: int = 6) -> str:
+    """Unrolled R-round k-core peel over the shared symmetrized 3-out doc
+    graph: d_t = degrees induced by alive_t, alive_{t+1} = {d_t >= k},
+    output = final d where >= k — same recurrence as
+    text/links.py:kcore_peel."""
+    parts = [_DOC_GRAPH_SQL + """,
         e AS (SELECT src, dst FROM e0
               UNION SELECT dst, src FROM e0),
         a0 AS (SELECT DISTINCT src AS id FROM e)"""]
@@ -108,13 +133,8 @@ def _hits_sql(iters: int = 4, scale: int = 10**6) -> str:
     preserved): same sum / L-inf div-normalize recurrence as
     text/links.py:hits_fixed_point; all operands nonnegative so DuckDB's
     truncating ``//`` equals Spark's ``div`` equals floor."""
-    parts = ["""
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        e AS (SELECT src, dst FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
+    parts = [_DOC_GRAPH_SQL + """,
+        e AS (SELECT src, dst FROM e0),
         nodes AS (SELECT DISTINCT id FROM (
                     SELECT src AS id FROM e
                     UNION ALL SELECT dst FROM e)),
@@ -152,13 +172,7 @@ def _lpa_sql(iters: int = 4) -> str:
     """Unrolled synchronous label propagation over the shared 3-out doc
     graph (symmetrized, self-loops dropped): same (count DESC, label
     ASC) struct-argmax recurrence as text/links.py:label_propagation."""
-    parts = ["""
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        e0 AS (SELECT src, dst FROM (
-                 SELECT doc_id AS src,
-                        mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                 FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-               WHERE dst <> src),
+    parts = [_DOC_GRAPH_SQL + """,
         e AS (SELECT src, dst FROM e0
               UNION
               SELECT dst, src FROM e0),
@@ -199,13 +213,9 @@ def _pagerank_sql(iters: int = 5) -> str:
                      FROM nodes CROSS JOIN nn
                      LEFT JOIN c{i} ON c{i}.id = nodes.id)""")
     return f"""
-        WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+        WITH {_DOC_GRAPH_SQL},
         nodes AS (SELECT doc_id AS id FROM documents),
-        e AS (SELECT src, dst FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
+        e AS (SELECT src, dst FROM e0),
         deg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
                 FROM e GROUP BY 1),
         s0 AS (SELECT id, CAST(1000000000000 // nn.n AS BIGINT) AS score
@@ -467,21 +477,8 @@ def _q_kcore(spark, sf_dir):
     bit-equal to the unrolled SQL."""
     from insights_spark.text.links import kcore_peel
 
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return kcore_peel(edges, k=5, rounds=6).select(
+    return kcore_peel(_doc_graph(_t(spark, sf_dir, "documents")),
+                      k=5, rounds=6).select(
         F.col("id").alias("doc_id"), "core_deg"
     )
 
@@ -579,21 +576,8 @@ def _q_hits(spark, sf_dir):
     single score cannot make; bit-equal to the unrolled SQL recurrence."""
     from insights_spark.text.links import hits_fixed_point
 
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return hits_fixed_point(edges, iters=4).select(
+    return hits_fixed_point(_doc_graph(_t(spark, sf_dir, "documents")),
+                            iters=4).select(
         F.col("id").alias("doc_id"), "hub", "auth"
     )
 
@@ -609,21 +593,8 @@ def _q_communities(spark, sf_dir):
     star-CC (one component here) cannot see."""
     from insights_spark.text.links import label_propagation
 
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return label_propagation(edges, iters=4).select(
+    return label_propagation(_doc_graph(_t(spark, sf_dir, "documents")),
+                             iters=4).select(
         F.col("id").alias("doc_id"), "label"
     )
 
@@ -2400,15 +2371,11 @@ def _q_minhash_vs_index(spark, sf_dir):
     return minhash_vs_index(batch, index, threshold=0.5)
 
 
-@query("triangles", headline=True, oracle="""
-        WITH n AS (SELECT count(*) AS n FROM documents),
-        raw AS (
-          SELECT doc_id AS src,
-                 mod(doc_id * 7919 + 104729 * k, (SELECT n FROM n)) AS dst
-          FROM documents, unnest([1, 2, 3]) AS t(k)),
+@query("triangles", headline=True, oracle=f"""
+        WITH {_DOC_GRAPH_SQL},
         ue AS (
           SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM raw WHERE src != dst),
+          FROM e0),
         tri AS (
           SELECT e1.a, e1.b, e2.b AS c
           FROM ue e1
@@ -2430,21 +2397,7 @@ def _q_triangles(spark, sf_dir):
     canonical a<b<c three-way self-join."""
     from insights_spark.text.links import triangle_counts
 
-    docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    return triangle_counts(edges)
+    return triangle_counts(_doc_graph(_t(spark, sf_dir, "documents")))
 
 
 @query("lang_margin", headline=True, oracle=f"""
@@ -2700,14 +2653,9 @@ def _q_ann_int8(spark, sf_dir):
 
 # BFS: UNION (not ALL) dedups (id, dist) pairs, so the recursion
 # terminates on cycles; min(dist) = first-visit level = Spark's BFS.
-@query("bfs_hops", headline=True, oracle="""
-        WITH RECURSIVE nn AS (SELECT CAST(count(*) AS BIGINT) AS n
-                              FROM documents),
-        e AS (SELECT src, dst FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
+@query("bfs_hops", headline=True, oracle=f"""
+        WITH RECURSIVE {_DOC_GRAPH_SQL},
+        e AS (SELECT src, dst FROM e0),
         walk(id, dist) AS (
             SELECT doc_id, 0 FROM documents WHERE mod(doc_id, 97) = 0
             UNION
@@ -2726,33 +2674,15 @@ def _q_bfs_hops(spark, sf_dir):
     from insights_spark.text.links import bfs_hop_distance
 
     docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
     sources = docs.select(F.col("doc_id").alias("id")).filter(
         F.pmod(F.col("id"), F.lit(97)) == 0)
-    return bfs_hop_distance(edges, sources, max_hops=3).select(
+    return bfs_hop_distance(_doc_graph(docs), sources, max_hops=3).select(
         F.col("id").alias("doc_id"), "dist")
 
 
-@query("sssp", headline=True, oracle="""
-        WITH RECURSIVE nn AS (SELECT CAST(count(*) AS BIGINT) AS n
-                              FROM documents),
-        e AS (SELECT src, dst, 1 + mod(src + dst, 9) AS w FROM (
-                SELECT doc_id AS src,
-                       mod(doc_id * 7919 + 104729 * k.k, nn.n) AS dst
-                FROM documents, nn, (SELECT unnest([1, 2, 3]) AS k) k)
-              WHERE dst <> src),
+@query("sssp", headline=True, oracle=f"""
+        WITH RECURSIVE {_DOC_GRAPH_SQL},
+        e AS (SELECT src, dst, 1 + mod(src + dst, 9) AS w FROM e0),
         walk(id, d, steps) AS (
             SELECT doc_id, CAST(0 AS BIGINT), 0
             FROM documents WHERE mod(doc_id, 97) = 0
@@ -2772,21 +2702,8 @@ def _q_sssp(spark, sf_dir):
     from insights_spark.text.links import sssp_weighted
 
     docs = _t(spark, sf_dir, "documents")
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-        .withColumn(
-            "w", F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(9))
-        )
+    edges = _doc_graph(docs).withColumn(
+        "w", F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(9))
     )
     sources = docs.select(F.col("doc_id").alias("id")).filter(
         F.pmod(F.col("id"), F.lit(97)) == 0)
@@ -2974,20 +2891,7 @@ def _q_pagerank(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     nodes = docs.select(F.col("doc_id").alias("id"))
-    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    edges = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("doc_id").alias("src"),
-            F.explode(F.array(*[
-                F.pmod(F.col("doc_id") * 7919 + 104729 * k, F.col("n"))
-                for k in (1, 2, 3)
-            ])).alias("dst"),
-        )
-        .filter(F.col("dst") != F.col("src"))
-    )
-    pr = pagerank_fixed_point(nodes, edges, iters=5)
+    pr = pagerank_fixed_point(nodes, _doc_graph(docs), iters=5)
     return pr.select(F.col("id").alias("doc_id"),
                      F.col("score").alias("score_fp"))
 

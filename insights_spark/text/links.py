@@ -1,39 +1,47 @@
-"""Web link-graph analytics: deterministic fixed-point PageRank.
+"""Web link-graph analytics: the engine's Pregel-shaped graph family.
 
-The web-corpus twin of the geo stack's star-contraction connected
-components (geo/vectorize.py): an ITERATIVE graph algorithm expressed as
-a bounded chain of joins + keyed aggregations, the Pregel shape Spark
-runs at web scale (PageRank is the canonical example in the public
-Spark/GraphX literature; the algorithm itself is Page & Brin 1998,
-public). The reference has no graph analytics — this extends the engine
-the way a crawl-scale training-data pipeline needs: ranking pages by link
-structure feeds both crawl prioritization and quality weighting of
-training documents.
+PageRank, HITS, label propagation, k-core peeling, triangle counting
+and bounded shortest paths over an (``src``, ``dst``) edge list — the
+web-corpus twin of the geo stack's star-contraction connected
+components (geo/vectorize.py). Every operator is an ITERATIVE graph
+algorithm written as a bounded chain of joins + keyed aggregations, the
+superstep shape Spark runs at web scale (the algorithms are the public
+Page & Brin 1998, Kleinberg 1999, Raghavan et al. 2007, Seidman 1983,
+Bellman–Ford 1958 and Cohen's MapReduce triangle scheme). Ranking pages
+by link structure feeds both crawl prioritization and quality weighting
+of training documents.
 
-Determinism contract (the whole point of this formulation): scores are
-FIXED-POINT int64 (``scale`` units = probability 1.0) and every update is
-integer arithmetic —
+Shared pieces: ``_undirected`` is the one undirected view (symmetrize,
+drop self-loops, dedup) that label propagation, k-core and triangles
+read; hop-distance BFS is unit-weight ``sssp_weighted``, not a loop of
+its own. The remaining loops stay hand-written because they differ in
+what they materialize each round — HITS checkpoints mid-round, SSSP
+checkpoints one relaxed table, PageRank pins only its edges — so a
+shared driver would still leave each caller choosing where to
+checkpoint.
+
+Determinism contract: every score or distance is integer arithmetic —
+PageRank's scores are FIXED-POINT int64 (``scale`` units = probability
+1.0),
 
     score'(v) = floor(scale·(1-d) / n)
               + Σ_{u→v} floor(score(u)·d_num / (d_den·outdeg(u)))
 
 with d = d_num/d_den (default 17/20 = 0.85). Integer sums are
-order-free, so the result is bit-identical across partitionings, retries,
-AND engines — the DuckDB oracle unrolls the same iterations in SQL and
-matches exactly, something float PageRank can never promise (float sums
+order-free, so results are bit-identical across partitionings, retries,
+AND engines — the DuckDB oracles unroll the same iterations in SQL and
+match exactly, something float PageRank can never promise (float sums
 reorder under shuffle). The floor drops ≤ 1 unit per edge per iteration
 (≤ n·fanout·iters·1e-12 total mass), a deterministic bias, not noise.
 
-Scale posture (100 TB / 10^12 edges): per iteration, ONE hash join of the
-edge table against the current score vector on src (both sides partition
-by the join key; the edge table is persisted once and its shuffle reused
-across iterations) and ONE aggregation keyed on dst — the classic
-2-shuffle Pregel superstep. No collect, no driver loop over rows;
-iterations are a fixed small count (rank converges geometrically, 5-20
-supersteps in practice). Skew from mega-in-degree hubs lands in the
-dst aggregation, which is a decomposable SUM — map-side partial
-aggregation absorbs it (the measured r4 result: salting LOSES to
-map-side combine on decomposable aggs).
+Scale posture (100 TB / 10^12 edges): per superstep ONE hash join of the
+edge table against the current state on src and ONE decomposable keyed
+aggregation — the classic 2-shuffle Pregel superstep. No collect, no
+driver loop over rows; round counts are fixed and small. Skew from
+mega-degree hubs lands in the keyed aggregation, which map-side partial
+aggregation absorbs (the measured r4 result: salting LOSES to map-side
+combine on decomposable aggs). State read by the next round is
+localCheckpointed so iterative plans do not accrete.
 """
 
 from __future__ import annotations
@@ -42,6 +50,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Undirected view of an edge list: both directions of every edge,
+    self-loops dropped, duplicates removed — (src, dst) columns."""
+    return (
+        edges.select("src", "dst")
+        .union(edges.select(F.col("dst").alias("src"),
+                            F.col("src").alias("dst")))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
 
 
 def pagerank_fixed_point(
@@ -97,47 +117,25 @@ def bfs_hop_distance(
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance from ANY source node.
 
-    The third member of the engine's graph family (star-CC components,
-    fixed-point PageRank, now reachability): "how far is every page from
-    the seed set" drives crawl-frontier scheduling and link-distance
-    quality features. Input: edges (``src``, ``dst``), sources (``id``).
-    Output: (id, dist) for every node reachable within ``max_hops``;
-    sources themselves at dist 0; unreachable nodes ABSENT (enrichment,
-    not a guess — the doc_geotag rule).
+    "How far is every page from the seed set" drives crawl-frontier
+    scheduling and link-distance quality features. Input: edges (``src``,
+    ``dst``), sources (``id``). Output: (id, dist int) for every node
+    reachable within ``max_hops``; sources themselves at dist 0;
+    unreachable nodes ABSENT (enrichment, not a guess — the doc_geotag
+    rule).
 
-    Superstep = the textbook frontier expansion (Pregel BFS, public):
-    frontier ⋈ edges (ONE hash join keyed on src) → distinct → anti-join
-    against the visited set. BFS assigns each node on its FIRST visit,
-    which IS the minimum distance — all-integer, order-free, engine-exact
-    (the DuckDB oracle is a recursive CTE with UNION dedup).
-
-    Scale posture: per level one join + one anti-join, both keyed
-    shuffles bounded by the wavefront (frontier × mean out-degree), never
-    all-pairs; the frontier is localCheckpointed each level — an
-    ITERATIVE plan otherwise accretes a union chain `max_hops` deep and
-    re-executes every prior level at each action (the pagerank persist
-    lesson, one step further because BFS's output feeds its own next
-    join). The per-level empty check is one bounded count — Pregel's
-    vote-to-halt, a driver scalar, not a collect of rows.
+    Hop distance IS unit-weight shortest path: after k Bellman–Ford
+    rounds with every edge weighing 1, dist(v) = the fewest edges on any
+    path of ≤ k edges = the BFS level. So this is ``sssp_weighted`` with
+    ``w = 1`` — the same frontier-pruned supersteps, vote-to-halt and
+    per-round checkpoints — with ``dist`` cast to int. All-integer,
+    order-free, engine-exact (the DuckDB oracle is a recursive CTE with
+    UNION dedup).
     """
-    visited = sources.select(
-        F.col("id"), F.lit(0).cast("int").alias("dist")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            edges.join(frontier, edges["src"] == frontier["id"])
-            .select(F.col("dst").alias("id"),
-                    F.lit(hop).cast("int").alias("dist"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    return sssp_weighted(
+        edges.select("src", "dst", F.lit(1).alias("w")), sources,
+        rounds=max_hops,
+    ).select("id", F.col("dist").cast("int").alias("dist"))
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -160,12 +158,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     the degree-ordered plan. Output: (id, n_triangles) for nodes in at
     least one triangle.
     """
-    ue = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .union(edges.select(F.col("dst"), F.col("src")))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    ue = _undirected(edges).where(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("a"), F.col("dst").alias("b"))
     deg = (
         ue.select(F.col("a").alias("id"))
         .union(ue.select(F.col("b")))
@@ -222,7 +216,7 @@ def sssp_weighted(
     rounds: int = 6,
 ) -> DataFrame:
     """Bounded-horizon weighted single-source shortest paths — the
-    weighted sibling of ``bfs_hop_distance`` (Bellman–Ford 1958 with
+    general form of ``bfs_hop_distance`` (Bellman–Ford 1958 with
     frontier pruning, the delta-stepping-lite Pregel shape, all public):
     minimum total integer edge weight from ANY seed node using at most
     ``rounds`` edges. Hop distance treats a slow 3-hop detour and a fast
@@ -239,41 +233,41 @@ def sssp_weighted(
 
     Scale posture (10^12 edges): per round ONE hash join of edges
     against the IMPROVED-last-round frontier only (not the full dist
-    table — settled regions stop generating traffic), a dst-keyed MIN
-    pre-combine (decomposable → map-side partials absorb hub skew, the
-    measured r4 rule), and one left-join relaxation against the current
-    dist table. Frontier and dist are localCheckpointed per round — the
-    iterative-plan-accretion lesson from BFS/pagerank. Vote-to-halt is
-    one bounded isEmpty scalar.
+    table — settled regions stop generating traffic), then ONE id-keyed
+    MIN over the current dist rows plus the new candidates, tagged
+    old/new so ties keep the old row: the winner is the relaxed
+    distance, and a winning candidate marks the node as improved. The
+    MIN is decomposable, so map-side partials absorb hub skew (the
+    measured r4 rule), and the relaxation needs no join against dist.
+    The result is localCheckpointed per round — an iterative plan
+    otherwise accretes a chain ``rounds`` deep and re-executes every
+    prior round at each action — and its improved rows are the next
+    frontier. Vote-to-halt is one bounded isEmpty scalar. The MIN also
+    collapses duplicate seed ids to one row.
     """
     dist = sources.select(
         F.col("id"), F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=True)
     frontier = dist
     for _ in range(rounds):
-        cand = (
-            edges.join(frontier, edges["src"] == frontier["id"])
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("w").cast("long")).alias("nd"),
-            )
+        reached = edges.join(frontier, edges["src"] == frontier["id"]).select(
+            F.col("dst").alias("id"),
+            (F.col("dist") + F.col("w").cast("long")).alias("dist"),
+            F.lit(1).alias("new"),
+        )
+        best = (
+            dist.select("id", "dist", F.lit(0).alias("new"))
+            .unionByName(reached)
             .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        improved = (
-            cand.join(dist, "id", "left")
-            .where(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-            .select("id", F.col("nd").alias("dist"))
+            .agg(F.min(F.struct("dist", "new")).alias("b"))
+            .select("id", F.col("b.dist").alias("dist"),
+                    F.col("b.new").alias("new"))
             .localCheckpoint(eager=True)
         )
-        if improved.isEmpty():
+        dist = best.select("id", "dist")
+        frontier = best.where(F.col("new") == 1).select("id", "dist")
+        if frontier.isEmpty():
             break
-        dist = (
-            dist.join(improved.select("id"), "id", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
     return dist
 
 
@@ -298,16 +292,11 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     (src-keyed), ONE decomposable (dst, label) count (map-side partials
     absorb hub skew), ONE min(struct) argmax groupBy — the 2-shuffle
     Pregel superstep, same as pagerank. Labels are localCheckpointed per
-    round (plan-accretion lesson); no collect anywhere.
+    round (plan-accretion lesson); no collect anywhere. The undirected
+    edge pin is released before returning: the result reads only the
+    last checkpoint.
     """
-    ue = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"),
-                            F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
+    ue = _undirected(edges).persist()
     labels = (
         ue.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id"))
@@ -327,6 +316,7 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
             .select(F.col("nid").alias("id"), F.col("p.l").alias("label"))
             .localCheckpoint(eager=True)
         )
+    ue.unpersist()
     return labels
 
 
@@ -352,11 +342,11 @@ def hits_fixed_point(
     have authority 0; no out-edges, hub 0.
 
     Scale posture (10^12 edges): each half-round is ONE hash join of the
-    edge table (persisted once) against the current score vector + ONE
-    decomposable keyed SUM (map-side partials absorb hub skew) + a
-    1-row max broadcast via crossJoin (the freq.py one-row-total idiom,
-    no driver round-trip). The 2-shuffle Pregel superstep, twice per
-    iteration.
+    edge table (persisted once, released before returning) against the
+    current score vector + ONE decomposable keyed SUM (map-side partials
+    absorb hub skew) + a 1-row max broadcast via crossJoin (the freq.py
+    one-row-total idiom, no driver round-trip). The 2-shuffle Pregel
+    superstep, twice per iteration.
     """
     e = edges.select("src", "dst").persist()
     nodes = (
@@ -365,6 +355,25 @@ def hits_fixed_point(
         .distinct()
         .persist()
     )
+
+    def half_round(score: DataFrame, by: str, to: str, name: str):
+        """Sum ``score`` along edges from e[by] into e[to], then
+        L∞-normalize to ``scale`` as column ``name``."""
+        sums = (
+            e.join(score, e[by] == score["id"])
+            .groupBy(F.col(to).alias("id"))
+            .agg(F.sum(score.columns[1]).cast("long").alias("raw"))
+        )
+        m = sums.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
+        # the per-half-round eager checkpoint is LOAD-BEARING (r6,
+        # measured): the L∞ max rides a broadcast scalar subquery whose
+        # subtree duplicates the un-materialized sums — dropping this
+        # checkpoint nests that doubling across half-rounds (4× the edge
+        # join per iteration, hits 1.9 s → 5.4 s at sf0.1)
+        return sums.crossJoin(F.broadcast(m)).select(
+            "id", F.expr(f"(raw * {scale}) div m").alias(name)
+        ).localCheckpoint(eager=True)
+
     # Sparse score vectors (r6, guide §2.4): a score table only needs rows
     # for nodes that CAN be nonzero — {indeg>0} for a, {outdeg>0} for h.
     # A zero-score row cannot move the L∞ max (scores are ≥ 0; the
@@ -374,31 +383,10 @@ def hits_fixed_point(
     # so the per-half-round `nodes ⋈ sums` full-coverage join (2 joins per
     # iteration, 8 for the default 4) is dropped with bit-identical output.
     h = nodes.withColumn("h", F.lit(1).cast("long"))
-    a = None
     for _ in range(iters):
-        a_sums = (
-            e.join(h, e["src"] == h["id"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("h").cast("long").alias("raw"))
-        )
-        amax = a_sums.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
-        # the per-half-round eager checkpoint is LOAD-BEARING (r6,
-        # measured): the L∞ max rides a broadcast scalar subquery whose
-        # subtree duplicates the un-materialized sums — dropping this
-        # checkpoint nests that doubling across half-rounds (4× the edge
-        # join per iteration, hits 1.9 s → 5.4 s at sf0.1)
-        a = a_sums.crossJoin(F.broadcast(amax)).select(
-            "id", F.expr(f"(raw * {scale}) div m").alias("a")
-        ).localCheckpoint(eager=True)
-        h_sums = (
-            e.join(a, e["dst"] == a["id"])
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("a").cast("long").alias("raw"))
-        )
-        hmax = h_sums.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
-        h = h_sums.crossJoin(F.broadcast(hmax)).select(
-            "id", F.expr(f"(raw * {scale}) div m").alias("h")
-        ).localCheckpoint(eager=True)
+        a = half_round(h, "src", "dst", "a")
+        h = half_round(a, "dst", "src", "h")
+    e.unpersist()
     return (
         nodes.join(h, "id", "left")
         .join(a, "id", "left")
@@ -429,36 +417,27 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     final induced degree. Undirected view, self-loops dropped.
 
     Scale posture (10^12 edges): per round TWO alive-set semi-joins on
-    the persisted symmetrized edge list + ONE decomposable src-keyed
-    count — no all-pairs, no collect; the alive set only shrinks, and
-    it is localCheckpointed per round (plan-accretion lesson).
+    the persisted undirected edge list + ONE decomposable src-keyed count
+    — no all-pairs, no collect. The loop state is the survivor table
+    (id, core_deg), localCheckpointed per round (plan-accretion lesson),
+    so the last round's table IS the output and the edge pin is released
+    before returning.
     """
-    ue = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"),
-                            F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+    ue = _undirected(edges).persist()
     alive = ue.select(F.col("src").alias("id")).distinct() \
         .localCheckpoint(eager=True)
-    deg = None
     for _ in range(rounds):
-        live = (
+        alive = (
             ue.join(alive.select(F.col("id").alias("src")), "src",
                     "left_semi")
             .join(alive.select(F.col("id").alias("dst")), "dst",
                   "left_semi")
-        )
-        deg = live.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("core_deg"))
-        alive = (
-            deg.where(F.col("core_deg") >= F.lit(k))
-            .select(F.col("src").alias("id"))
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
+            .where(F.col("core_deg") >= F.lit(k))
             .localCheckpoint(eager=True)
         )
-    return (
-        deg.where(F.col("core_deg") >= F.lit(k))
-        .select(F.col("src").alias("id"), "core_deg")
-    )
+    ue.unpersist()
+    return alive

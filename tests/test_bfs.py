@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from insights_spark.text.links import bfs_hop_distance
 
 
@@ -17,21 +19,31 @@ def _dists(df):
 
 def test_bfs_chain_and_hop_cap(spark):
     e = _edges(spark, [(0, 1), (1, 2), (2, 3)])
-    out = _dists(bfs_hop_distance(e, _src(spark, [0]), max_hops=2))
-    assert out == {0: 0, 1: 1, 2: 2}  # 3 is beyond the cap → absent
+    got = bfs_hop_distance(e, _src(spark, [0]), max_hops=2)
+    assert dict(got.dtypes)["dist"] == "int"
+    assert _dists(got) == {0: 0, 1: 1, 2: 2}  # 3 is beyond the cap → absent
+    # multi-edges count once: same levels, one row per node
+    multi = _edges(spark, [(0, 1), (0, 1), (1, 2), (1, 2), (1, 2), (2, 3)])
+    got = bfs_hop_distance(multi, _src(spark, [0]), max_hops=2)
+    assert got.count() == 3 and _dists(got) == {0: 0, 1: 1, 2: 2}
 
 
 def test_bfs_cycle_terminates(spark):
     e = _edges(spark, [(0, 1), (1, 2), (2, 0)])
     out = _dists(bfs_hop_distance(e, _src(spark, [0]), max_hops=10))
     assert out == {0: 0, 1: 1, 2: 2}
+    # source 1 is one hop from source 0 (and 0 from 2): both stay at 0
+    out = _dists(bfs_hop_distance(e, _src(spark, [0, 1]), max_hops=10))
+    assert out == {0: 0, 1: 0, 2: 1}
 
 
 def test_bfs_multi_source_takes_min(spark):
     e = _edges(spark, [(0, 1), (1, 2), (2, 3), (3, 4)])
-    out = _dists(bfs_hop_distance(e, _src(spark, [0, 3]), max_hops=4))
-    # 4 is 1 hop from source 3, not 4 hops from source 0
-    assert out == {0: 0, 3: 0, 1: 1, 4: 1, 2: 2}
+    got = bfs_hop_distance(e, _src(spark, [0, 3, 3]), max_hops=4)
+    # 4 is 1 hop from source 3, not 4 hops from source 0; the duplicate
+    # seed 3 yields one row
+    assert got.count() == 5
+    assert _dists(got) == {0: 0, 3: 0, 1: 1, 4: 1, 2: 2}
 
 
 def test_bfs_diamond_shortest_path_wins(spark):
@@ -260,3 +272,5 @@ def test_kcore_peel_brute_force(spark):
     assert set(final) == set(range(5))         # only the K5 clique
     assert all(d == 4 for d in final.values())
     assert brute(3, 6) == brute(3, 7)          # converged within 6 rounds
+    with pytest.raises(ValueError, match="rounds"):
+        kcore_peel(df, k=3, rounds=0)

@@ -51,3 +51,24 @@ def test_bench_metadata_names_registered_queries():
     assert len(bench.HEADLINE) == 134 and len(sf1_skip) == 8
     assert set(bench.HEADLINE) <= names and set(sf1_skip) <= names
     assert all(isinstance(q.sf1_skip, str) for q in REGISTRY if q.sf1_skip)
+
+
+@pytest.mark.parametrize("name", ["scd2_intervals", "scd2_merge"])
+def test_scd2_query_matches_oracle_at_sf0001(spark, name):
+    """sf0.001 holds two lineitem rows that differ only in l_shipdate;
+    the element version must still be unique per key, or the interval
+    order (and so valid_to/is_current) is left to the engine."""
+    from collections import Counter
+
+    import duckdb
+
+    sf = entry.SF_DEFAULT  # the sf0.001 tables
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS "
+                f"SELECT * FROM read_parquet('{sf}/lineitem.parquet')")
+    want = con.execute(entry.oracle_sql()[name])
+    cols = [d[0] for d in want.description]
+    got = entry.queries()[name](spark, sf)
+    assert got.columns == cols
+    assert Counter(tuple(r) for r in got.collect()) == \
+        Counter(want.fetchall())
