@@ -8,9 +8,13 @@ or local[*]) with max(cores, 8) shuffle partitions. Plans go to
 $PLAN_DIR (default /tmp/insights_plans), outside the repo, so a run never
 overwrites the committed plans/r06/ evidence.
 
+--plans-only writes NORMALISED plans: expression ids (#123), [plan_id=N]
+and pythonUDFn numbers are replaced, so plan files of two checkouts diff
+cleanly — the check for a refactor that should leave plans unchanged.
+
 Usage:
     python bench_extra.py q1 q2 ...            # time + plan for named queries
-    python bench_extra.py --plans-only q1 ...  # just dump plans (no timing)
+    python bench_extra.py --plans-only q1 ...  # just dump normalised plans
     SPARK_GRAFT_SF_DIR=/tmp/spark_graft_sf1 python bench_extra.py q1
     PLAN_SUFFIX=after python bench_extra.py q1 # write <q>_after.txt
 
@@ -20,6 +24,7 @@ Prints one line per query: name, per-rep seconds, min.
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
@@ -31,6 +36,20 @@ from insights_spark.session import get_spark  # noqa: E402
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+_RUN_IDS = (
+    (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
+    (re.compile(r"pythonUDF\d+"), "pythonUDF_"),
+)
+
+
+def normalised(plan: str) -> str:
+    """The plan with its per-run ids replaced by placeholders."""
+    for pat, repl in _RUN_IDS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -61,6 +80,8 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
+            if plans_only:
+                plan = normalised(plan)
             with open(os.path.join(plan_dir, f"{name}_{suffix}.txt"), "w") as fh:
                 fh.write(plan)
         if plans_only:

@@ -16,6 +16,14 @@ SQL can express it):
 - simhash     : 64-bit simhash via vectorized numpy pandas-UDF, near-dup =
                 hamming distance ≤ k on banded prefixes.
 
+Shared pieces, one of each: ``_band_explode`` (rows → (_id, *carry,
+band, key) from ``_sig_band_keys`` signature slices or ``_bit_band_keys``
+sketch bit fields; both reject bands that do not tile the sketch),
+``_band_self_join`` (distinct (a, b), a < b, per shared bucket — the
+MinHash and embedding LSH candidates), ``_minhash_coeffs`` + ``_minhash_np``
+(the MinHash kernel of both pandas UDFs) and ``_gram_overlap`` (gram pass,
+df-cap and shared-gram count of the Jaccard and containment pairs).
+
 Scale notes: all-pairs joins appear ONLY within an LSH bucket or an
 explicit small group; every join key (gram hash, band hash, simhash band)
 is a stable 64-bit int, salted-splittable if a bucket goes hot.
@@ -89,6 +97,113 @@ def poly_hash(col: Column, mod: int = MOD, base: int = BASE, seed: int = SEED) -
     )
 
 
+# ------------------------------------------------ shared near-dup pieces
+
+
+def _gram_overlap(
+    df: DataFrame,
+    n: int,
+    id_col: str,
+    text_col: str,
+    max_gram_df: int | None,
+    pair: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared-gram counts of the doc pairs that meet ``pair`` (a predicate
+    on ``a``/``b``): ``inter`` is (a, b, inter), ``sizes`` is (a, size_a),
+    both over the df-capped gram sets when ``max_gram_df`` is set.
+
+    One UDF pass, persisted: the gram arrays feed three consumers (both
+    self-join sides + sizes) and would otherwise re-run the gram kernel
+    per branch — locally a persist, at cluster scale a materialized grams
+    table. Sizes via F.size (no extra shuffle) in the uncapped path."""
+    ga = df.select(
+        F.col(id_col).alias("a"), word_ngrams_np(n)(F.col(text_col)).alias("_grams")
+    ).persist()
+    g = ga.select("a", F.explode("_grams").alias("gram"))
+    if max_gram_df is not None:
+        hot = (
+            g.groupBy("gram")
+            .agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") > max_gram_df)
+            .select("gram")
+        )
+        # anti-join against the (tiny) hot-gram set; persisted because the
+        # filtered grams feed both self-join sides and the size recount
+        g = g.join(hot, "gram", "left_anti").persist()
+        sizes = g.groupBy("a").agg(F.count(F.lit(1)).alias("size_a"))
+    else:
+        sizes = ga.select("a", F.size("_grams").alias("size_a"))
+    g2 = g.select(F.col("a").alias("b"), F.col("gram"))
+    inter = (
+        g.join(g2, "gram")
+        .filter(pair)
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("inter"))
+    )
+    return inter, sizes
+
+
+def _minhash_coeffs(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    """(A_k, B_k) of h_k(g) = (A_k * poly(g) + B_k) mod MOD."""
+    a = np.array([2 * k + 1 for k in range(num_hashes)], dtype=np.int64)
+    b = np.array([7919 * (k + 1) for k in range(num_hashes)], dtype=np.int64)
+    return a, b
+
+
+def _minhash_np(grams: list[str], a: np.ndarray, b: np.ndarray) -> list[int]:
+    """MinHash signature of one doc's grams; all-MOD sentinel if none."""
+    if not grams:
+        return [MOD] * len(a)
+    gh = poly_hash_np(grams)
+    return ((gh[:, None] * a[None, :] + b[None, :]) % MOD).min(axis=0).tolist()
+
+
+def _band_width(size: int, bands: int) -> int:
+    """Hashes or bits per band: the bands must tile the sketch exactly."""
+    if not 1 <= bands <= size or size % bands:
+        raise ValueError(f"bands={bands} must be >= 1 and divide the sketch size {size}")
+    return size // bands
+
+
+def _sig_band_keys(sig_col: str, num_hashes: int, bands: int) -> list[Column]:
+    """Band keys of an array signature: `bands` equal slices."""
+    r = _band_width(num_hashes, bands)
+    return [F.slice(sig_col, b * r + 1, r) for b in range(bands)]
+
+
+def _bit_band_keys(h_col: str, n_bits: int, bands: int) -> list[Column]:
+    """Band keys of an integer sketch: `bands` equal bit fields, read as
+    unsigned (a negative int64 bands as its 64-bit pattern)."""
+    w = _band_width(n_bits, bands)
+    # a long literal: the one-band mask of a 64-bit sketch is all ones, -1
+    mask = (1 << w) - 1 if w < 64 else -1
+    return [
+        F.shiftrightunsigned(F.col(h_col), b * w).bitwiseAND(F.lit(mask))
+        for b in range(bands)
+    ]
+
+
+def _band_explode(df: DataFrame, keys: list[Column], *carry: str) -> DataFrame:
+    """(_id, *carry, band, key) rows, one per band key of each `_id` row."""
+    bk = F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"), k.alias("key")) for b, k in enumerate(keys)
+    ])).alias("bk")
+    return df.select("_id", *carry, bk).select(
+        "_id", *carry, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+def _band_self_join(banded: DataFrame) -> DataFrame:
+    """Distinct (a, b) with a < b of the `_id`s sharing a (band, key) bucket."""
+    other = banded.select(F.col("_id").alias("_id2"), "band", "key")
+    return (
+        banded.join(other, ["band", "key"])
+        .filter(F.col("_id") < F.col("_id2"))
+        .select(F.col("_id").alias("a"), F.col("_id2").alias("b"))
+        .distinct()
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -111,35 +226,9 @@ def ngram_jaccard_pairs(
     grams; at scale either set the cap or run on LSH-candidate pairs only
     (see minhash_lsh_candidates).
     """
-    # one UDF pass, persisted: the gram arrays feed three consumers (both
-    # self-join sides + sizes) and would otherwise re-run the gram kernel
-    # per branch — locally a persist, at cluster scale a materialized
-    # grams table. sizes via F.size (no extra shuffle) in the uncapped path.
-    ga = df.select(
-        F.col(id_col).alias("a"), word_ngrams_np(n)(F.col(text_col)).alias("_grams")
-    ).persist()
-    g = ga.select("a", F.explode("_grams").alias("gram"))
-    if max_gram_df is not None:
-        hot = (
-            g.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_gram_df)
-            .select("gram")
-        )
-        # anti-join against the (tiny) hot-gram set; persisted because the
-        # filtered grams feed both self-join sides and the size recount
-        g = g.join(hot, "gram", "left_anti").persist()
-        sizes = g.groupBy("a").agg(F.count(F.lit(1)).alias("size_a"))
-    else:
-        sizes = ga.select("a", F.size("_grams").alias("size_a"))
-    g2 = g.select(F.col("a").alias("b"), F.col("gram"))
-    inter = (
-        g.join(g2, "gram")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
+    inter, sizes = _gram_overlap(df, n, id_col, text_col, max_gram_df,
+                                 F.col("a") < F.col("b"))
+    return (
         inter.join(sizes, "a")
         .join(sizes.select(F.col("a").alias("b"), F.col("size_a").alias("size_b")), "b")
         .withColumn(
@@ -149,7 +238,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-    return out
 
 
 def poly_hash_np(strings: list[str], mod: int = MOD, base: int = BASE,
@@ -193,21 +281,14 @@ def minhash_signature_np(num_hashes: int = 16, n: int = 3):
     (higher-order functions don't codegen). Returns array<long>."""
     from pyspark.sql.functions import pandas_udf
 
-    a = np.array([2 * k + 1 for k in range(num_hashes)], dtype=np.int64)
-    b = np.array([7919 * (k + 1) for k in range(num_hashes)], dtype=np.int64)
+    a, b = _minhash_coeffs(num_hashes)
 
     @pandas_udf("array<long>")
     def _sig(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            grams = _word_ngrams_py(t, n) if t is not None else []
-            if not grams:
-                out.append([MOD] * num_hashes)
-                continue
-            gh = poly_hash_np(grams)
-            hk = (gh[:, None] * a[None, :] + b[None, :]) % MOD
-            out.append(hk.min(axis=0).tolist())
-        return pd.Series(out)
+        return pd.Series([
+            _minhash_np(_word_ngrams_py(t, n) if t is not None else [], a, b)
+            for t in texts
+        ])
 
     return _sig
 
@@ -222,10 +303,10 @@ def minhash_signature(
     """
     grams = word_ngrams(text, n)
     gh = F.transform(grams, lambda g: poly_hash(g))
+    a_k, b_k = _minhash_coeffs(num_hashes)
     sigs = []
     for k in range(num_hashes):
-        a = 2 * k + 1
-        b = 7919 * (k + 1)
+        a, b = int(a_k[k]), int(b_k[k])
         hk = F.transform(gh, lambda h: (h * a + b) % F.lit(MOD))
         sigs.append(
             F.coalesce(F.array_min(hk), F.lit(MOD).cast("long")).alias(f"mh{k}")
@@ -243,11 +324,11 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """LSH candidate pairs: equal band-slices of the MinHash signature.
 
-    rows/band = num_hashes/bands; two docs are candidates iff some band's
-    slice matches exactly. Output: (a, b) distinct, a < b. Shuffle key is
+    rows/band = num_hashes/bands (bands must divide num_hashes, else
+    ValueError); two docs are candidates iff some band's slice matches
+    exactly. Output: (a, b) distinct, a < b. Shuffle key is
     (band_idx, band slice) — bounded buckets, no all-pairs.
     """
-    rows_per_band = num_hashes // bands
     sig = df.select(
         F.col(id_col).alias("_id"),
         minhash_signature_np(num_hashes, n)(F.col(text_col)).alias("_sig"),
@@ -256,27 +337,7 @@ def minhash_lsh_candidates(
     # such doc would match every other in every band (O(empty²) candidate
     # blowup) and then always fail verification — drop them up front
     sig = sig.filter(F.element_at("_sig", 1) != MOD)
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.slice("_sig", bi * rows_per_band + 1, rows_per_band).alias("key"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    other = banded.select(
-        F.col("_id").alias("_id2"), F.col("band"), F.col("key")
-    )
-    return (
-        banded.join(other, ["band", "key"])
-        .filter(F.col("_id") < F.col("_id2"))
-        .select(F.col("_id").alias("a"), F.col("_id2").alias("b"))
-        .distinct()
-    )
+    return _band_self_join(_band_explode(sig, _sig_band_keys("_sig", num_hashes, bands)))
 
 
 def minhash_near_dups(
@@ -299,22 +360,12 @@ def minhash_near_dups(
     """
     from pyspark.sql.functions import pandas_udf
 
-    a_k = np.array([2 * k + 1 for k in range(num_hashes)], dtype=np.int64)
-    b_k = np.array([7919 * (k + 1) for k in range(num_hashes)], dtype=np.int64)
+    a, b = _minhash_coeffs(num_hashes)
 
     @pandas_udf("struct<grams: array<string>, sig: array<long>>")
     def _gs(texts: pd.Series) -> pd.DataFrame:
-        grams_out, sig_out = [], []
-        for t in texts:
-            grams = _word_ngrams_py(t, n) if t is not None else []
-            grams_out.append(grams)
-            if not grams:
-                sig_out.append([MOD] * num_hashes)
-                continue
-            gh = poly_hash_np(grams)
-            hk = (gh[:, None] * a_k[None, :] + b_k[None, :]) % MOD
-            sig_out.append(hk.min(axis=0).tolist())
-        return pd.DataFrame({"grams": grams_out, "sig": sig_out})
+        grams = [_word_ngrams_py(t, n) if t is not None else [] for t in texts]
+        return pd.DataFrame({"grams": grams, "sig": [_minhash_np(g, a, b) for g in grams]})
 
     base = (
         df.select(F.col(id_col).alias("_id"), _gs(F.col(text_col)).alias("_gs"))
@@ -322,30 +373,13 @@ def minhash_near_dups(
         .persist()
     )
 
-    rows_per_band = num_hashes // bands
     # empty-gram docs all share the sentinel signature → they'd bucket with
     # each other in every band (quadratic candidates) and never verify;
     # exclude them from banding (the verify side keeps them — joins on
     # candidate ids only, so output is unchanged)
-    banded = base.filter(F.size("_grams") > 0).select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.slice("_sig", bi * rows_per_band + 1, rows_per_band).alias("key"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    cand = (
-        banded.join(banded.select(F.col("_id").alias("_id2"), "band", "key"),
-                    ["band", "key"])
-        .filter(F.col("_id") < F.col("_id2"))
-        .select(F.col("_id").alias("a"), F.col("_id2").alias("b"))
-        .distinct()
-    )
+    cand = _band_self_join(_band_explode(
+        base.filter(F.size("_grams") > 0), _sig_band_keys("_sig", num_hashes, bands)
+    ))
     g = base.select(F.col("_id").alias("_gid"), F.col("_grams"))
     j = (
         cand.join(g.withColumnRenamed("_gid", "a").withColumnRenamed("_grams", "ga"), "a")
@@ -455,23 +489,12 @@ def banded_hamming_pairs(
     `bands` (band, slice) keys, equi-join on the key, verify by exact
     popcount. Shared by simhash (text) and ahash (image) near-dup — the
     recall contract is the caller's: complete iff max_hamming ≤ bands-1.
+    bands must divide 64 (ValueError otherwise).
 
     `sh` must carry a unique `_id` plus the 64-bit hash column. Output:
     (a, b, hamming) with a < b, one row per verified pair."""
-    width = 64 // bands
     sh = sh.select("_id", F.col(hash_col).alias("_h"))
-    slices = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.shiftrightunsigned(F.col("_h"), bi * width)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("key"),
-        )
-        for bi in range(bands)
-    ]
-    banded = sh.select("_id", "_h", F.explode(F.array(*slices)).alias("bk")).select(
-        "_id", "_h", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
+    banded = _band_explode(sh, _bit_band_keys("_h", 64, bands), "_h")
     other = banded.select(
         F.col("_id").alias("_id2"), F.col("_h").alias("_h2"), "band", "key"
     )
@@ -559,8 +582,6 @@ def minhash_vs_index(
 
     Output: (a = batch id, b = index id, est_jaccard ≥ threshold).
     """
-    rpb = num_hashes // bands
-
     # r6 (guide §2.3 "shuffle keys, not payloads"): the band join now
     # carries ONLY (id, band, slice); the full signatures re-attach to the
     # deduped candidate pairs afterwards — the old plan shipped both
@@ -569,19 +590,10 @@ def minhash_vs_index(
     # frame, so callers should persist it (the entry does).
     def banded(df, idc, side):
         s = df.filter(F.element_at(sig_col, 1) != MOD).select(
-            F.col(idc).alias(side), F.col(sig_col).alias(f"_{side}sig")
+            F.col(idc).alias("_id"), F.col(sig_col).alias("_sig")
         )
-        slices = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.slice(f"_{side}sig", b * rpb + 1, rpb).alias("key"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return s.select(side, F.explode(slices).alias("_b")) \
-            .select(side, "_b.band", "_b.key")
+        return _band_explode(s, _sig_band_keys("_sig", num_hashes, bands)) \
+            .withColumnRenamed("_id", side)
 
     cand = (
         banded(batch_sigs, batch_id, "a")
@@ -631,37 +643,17 @@ def containment_pairs(
     with a ≠ b, containment ≥ threshold — DIRECTED, so a ⊂ b and b ⊂ a
     both emit when both clear the bar (mutual containment ≈ Jaccard ≈ 1).
 
-    Shape: identical to ngram_jaccard_pairs — one Arrow gram pass
-    (persisted: feeds both join sides + sizes), gram-keyed equi-join so
-    pairs sharing zero grams never materialize, ONE (a,b) rollup; the
-    only differences are the denominator (|a| alone) and keeping both
-    directions instead of a < b. ``max_gram_df`` is the same stop-gram
-    guard — containment is then over df-capped gram sets. Docs with no
-    grams (< n tokens) cannot appear on either side: a zero denominator
-    is undefined, not 100%-contained.
+    Shape: the same ``_gram_overlap`` pass as ngram_jaccard_pairs — one
+    Arrow gram pass (persisted: feeds both join sides + sizes), gram-keyed
+    equi-join so pairs sharing zero grams never materialize, ONE (a,b)
+    rollup; the only differences are the denominator (|a| alone) and
+    keeping both directions (a != b) instead of a < b. ``max_gram_df`` is
+    the same stop-gram guard — containment is then over df-capped gram
+    sets. Docs with no grams (< n tokens) cannot appear on either side: a
+    zero denominator is undefined, not 100%-contained.
     """
-    ga = df.select(
-        F.col(id_col).alias("a"), word_ngrams_np(n)(F.col(text_col)).alias("_grams")
-    ).persist()
-    g = ga.select("a", F.explode("_grams").alias("gram"))
-    if max_gram_df is not None:
-        hot = (
-            g.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_gram_df)
-            .select("gram")
-        )
-        g = g.join(hot, "gram", "left_anti").persist()
-        sizes = g.groupBy("a").agg(F.count(F.lit(1)).alias("size_a"))
-    else:
-        sizes = ga.select("a", F.size("_grams").alias("size_a"))
-    g2 = g.select(F.col("a").alias("b"), F.col("gram"))
-    inter = (
-        g.join(g2, "gram")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
+    inter, sizes = _gram_overlap(df, n, id_col, text_col, max_gram_df,
+                                 F.col("a") != F.col("b"))
     return (
         inter.join(sizes, "a")
         .withColumn("containment", F.col("inter") / F.col("size_a"))
@@ -812,7 +804,7 @@ def prefix_jaccard_pairs(
     """
     ga = df.select(
         F.col(id_col).alias("id"),
-        F.array_distinct(word_ngrams_np(n)(F.col(text_col))).alias("_g"),
+        word_ngrams_np(n)(F.col(text_col)).alias("_g"),
     ).where(F.size("_g") > 0).persist()
     g = ga.select("id", F.explode("_g").alias("gram"))
     dfreq = g.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("_df"))

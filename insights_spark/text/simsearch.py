@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .dedup import _band_explode, _band_self_join, _bit_band_keys
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential double fold — deterministic, oracle-reproducible."""
@@ -195,16 +197,14 @@ def embedding_lsh_candidates(
 
     Each vector gets an n_bits sign sketch (sign of the dot product with
     deterministic hyperplanes — one Arrow-batched matmul, no per-row
-    Python); sketches are split into `bands` slices and candidates are
-    pairs sharing a slice. P[bit match] = 1 − θ/π, so high-cosine pairs
-    collide in some band with high probability while the shuffle stays
-    keyed on (band, slice) buckets — never all-pairs. Verify candidates
-    with the exact cosine afterwards (same contract as MinHash-LSH →
-    Jaccard verify).
+    Python); sketches are split into `bands` slices (bands must divide
+    n_bits, else ValueError) and candidates are pairs sharing a slice.
+    P[bit match] = 1 − θ/π, so high-cosine pairs collide in some band with
+    high probability while the shuffle stays keyed on (band, slice)
+    buckets — never all-pairs. Verify candidates with the exact cosine
+    afterwards (same contract as MinHash-LSH → Jaccard verify).
     """
     from pyspark.sql.functions import pandas_udf
-
-    bits_per_band = n_bits // bands
 
     @pandas_udf("long")
     def sketch(vecs: pd.Series) -> pd.Series:
@@ -217,27 +217,7 @@ def embedding_lsh_candidates(
         return pd.Series((bits * weights).sum(axis=1).astype(np.int64))
 
     sk = vectors.select(F.col(id_col).alias("_id"), sketch(F.col(vec_col)).alias("_sk"))
-    mask = (1 << bits_per_band) - 1
-    banded = sk.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.shiftrightunsigned(F.col("_sk"), bi * bits_per_band)
-                    .bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    other = banded.select(F.col("_id").alias("_id2"), "band", "key")
-    return (
-        banded.join(other, ["band", "key"])
-        .filter(F.col("_id") < F.col("_id2"))
-        .select(F.col("_id").alias("a"), F.col("_id2").alias("b"))
-        .distinct()
-    )
+    return _band_self_join(_band_explode(sk, _bit_band_keys("_sk", n_bits, bands)))
 
 
 def embedding_near_dups_lsh(

@@ -242,6 +242,76 @@ def test_empty_doc_banding_filters(spark):
     assert {(r["a"], r["b"]) for r in cand} == {(1, 2)}
 
 
+def _sig_band_pairs(spark, sigs, num_hashes, bands):
+    df = spark.createDataFrame(list(sigs.items()), "_id long, _sig array<long>")
+    keys = dedup._sig_band_keys("_sig", num_hashes, bands)
+    return dedup._band_self_join(dedup._band_explode(df, keys)).collect()
+
+
+def test_band_join_emits_pair_once_across_shared_bands(spark):
+    """Two docs sharing 2 of 4 bands are one candidate row, not two."""
+    rows = _sig_band_pairs(
+        spark, {1: [1, 2, 3, 4, 5, 6, 7, 8], 2: [1, 2, 3, 4, 0, 0, 0, 0]}, 8, 4)
+    assert [(r["a"], r["b"]) for r in rows] == [(1, 2)]
+
+
+def test_band_join_keys_are_per_band(spark):
+    """Equal key values in DIFFERENT bands are different buckets."""
+    assert _sig_band_pairs(spark, {1: [5, 6, 7, 8], 2: [7, 8, 5, 6]}, 4, 2) == []
+
+
+def test_band_join_orders_pairs_without_self_pairs(spark):
+    """Identical signatures inserted out of id order: every pair once, a < b,
+    no (x, x) rows."""
+    same = [9, 9, 9, 9]
+    rows = _sig_band_pairs(spark, {3: same, 1: same, 2: same, 4: [0, 1, 2, 3]}, 4, 2)
+    assert sorted((r["a"], r["b"]) for r in rows) == [(1, 2), (1, 3), (2, 3)]
+
+
+def test_bit_band_keys_read_negative_sketch_unsigned(spark):
+    """Bit-band keys of a negative int64 equal the unsigned 64-bit reading
+    (h mod 2^64) >> (b·w) & mask."""
+    hs = [-1, -(1 << 63), -1234567890123456789, 1234567890123456789]
+    df = spark.createDataFrame(list(enumerate(hs)), "_id long, _h long")
+    got = {(r["_id"], r["band"]): r["key"] for r in dedup._band_explode(
+        df, dedup._bit_band_keys("_h", 64, 4)).collect()}
+    want = {(i, b): ((h % (1 << 64)) >> (b * 16)) & 0xFFFF
+            for i, h in enumerate(hs) for b in range(4)}
+    assert got == want
+
+
+def test_minhash_near_dups_at_zero_threshold_is_lsh_candidates(spark, docs):
+    """Verification at threshold 0 keeps every candidate: the fused pipeline
+    and the standalone candidate generator band identically."""
+    nd = {(r["a"], r["b"]) for r in dedup.minhash_near_dups(docs, threshold=0.0).collect()}
+    cand = {(r["a"], r["b"]) for r in dedup.minhash_lsh_candidates(docs).collect()}
+    assert nd == cand and (1, 2) in cand
+
+
+def test_band_geometry_must_tile_the_sketch(spark, docs):
+    """bands must be >= 1 and divide the sketch; leftover hashes or bits are
+    an error, not silently dropped."""
+    vecs = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    sigs = docs.select("doc_id", dedup.minhash_signature_np()(F.col("text")).alias("sig"))
+    bad = [
+        lambda: dedup.simhash_near_dups(docs, bands=3),
+        lambda: dedup.simhash_near_dups(docs, bands=0),
+        lambda: dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=3),
+        lambda: dedup.minhash_near_dups(docs, bands=0),
+        lambda: dedup.minhash_vs_index(sigs, sigs, bands=5),
+        lambda: simsearch.embedding_lsh_candidates(vecs, n_bits=32, bands=5),
+        lambda: dedup.banded_hamming_pairs(
+            spark.createDataFrame([(1, 5)], "_id long, h long"), "h", 3, 128),
+    ]
+    for build in bad:
+        with pytest.raises(ValueError, match="bands="):
+            build()
+    # one band spanning all 64 bits is valid geometry: the key is the hash
+    sh = spark.createDataFrame([(1, -1), (2, -1), (3, 5)], "_id long, h long")
+    assert [tuple(r) for r in dedup.banded_hamming_pairs(sh, "h", 0, 1).collect()] \
+        == [(1, 2, 0)]
+
+
 def test_centroid_sampling_matches_global_sort(spark):
     """Hash-threshold centroid selection must equal the naive full-table
     sort-limit selection (same ordering key) — the scale fix may not change
