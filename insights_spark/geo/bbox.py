@@ -1,4 +1,4 @@
-"""Changeset-bbox operators: centroid, equal-area size filter, cell covers.
+"""Changeset-bbox operators: centroid, equal-area size, envelope cover.
 
 Covers SURVEY §2.8 F10/F13/F14 and §2.3 J8/J9 plus the §1.2 physical-design
 columns (`h3_cells`/`s2_cells` covers for bbox rows):
@@ -15,14 +15,12 @@ columns (`h3_cells`/`s2_cells` covers for bbox rows):
 - hot_changesets_with_country: the hot_changeset materialized view's
   centroid-in-polygon enrichment (advanced-queries.md:249-252) using the
   same broadcast PIP kernel as element enrichment (J8 ≡ J6 on centroids).
-- bbox_cell_cover: hex cells intersecting the bbox (bounded count) — the
-  spatial-index column for bbox rows; joins against point cells prune
-  candidate pairs the way GIST did.
+- the hex cell cover of bbox rows (the spatial-index column) is the
+  column-form ``geo.cells.hex_cover_bbox``.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,14 +50,6 @@ def bbox_area_km2(min_lon: Column, min_lat: Column,
     w = (max_lon - min_lon) * F.cos(mid) * EARTH_KM_PER_DEG
     h = (lat1 - lat0) * EARTH_KM_PER_DEG
     return F.abs(w * h)
-
-
-def filter_mega_changesets(changesets: DataFrame,
-                           max_km2: float = MEGA_CHANGESET_KM2) -> DataFrame:
-    """Drop mega-changesets (F14) — the reference's sanity filter."""
-    area = bbox_area_km2(F.col("min_lon"), F.col("min_lat"),
-                         F.col("max_lon"), F.col("max_lat"))
-    return changesets.filter(F.col("min_lon").isNull() | (area < F.lit(max_km2)))
 
 
 def covered_by(min_lon: Column, min_lat: Column, max_lon: Column,
@@ -113,49 +103,3 @@ def hot_changesets_incremental(stored_mv: DataFrame, batch: DataFrame,
     fresh = hot_changesets_with_country(batch, boundary_rows).select(
         "id", "country")
     return kept.select("id", "country").unionByName(fresh)
-
-
-def bbox_cell_cover_udf(res: int = 8, max_cells: int = 64):
-    """pandas UDF: bbox corners → array of hex cell ids covering the bbox.
-
-    The cover is computed on the hex axial grid by scanning the cell range
-    of the corners; capped at `max_cells` (mega-changesets would otherwise
-    expand to millions of cells — the cap plus the F14 filter bound the
-    blow-up, and a NULL cover means "fall back to bbox predicates")."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .cells import hex_cell_id, hex_decode, hex_encode
-
-    @pandas_udf("array<long>")
-    def _cover(min_lon: pd.Series, min_lat: pd.Series,
-               max_lon: pd.Series, max_lat: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for x0, y0, x1, y1 in zip(min_lon, min_lat, max_lon, max_lat):
-            if pd.isna(x0) or pd.isna(y0) or pd.isna(x1) or pd.isna(y1):
-                out.append(None)
-                continue
-            y0c, y1c = max(-90.0, min(90.0, y0)), max(-90.0, min(90.0, y1))
-            corners = hex_cell_id(np.array([x0, x1, x0, x1]),
-                                  np.array([y0c, y0c, y1c, y1c]), res)
-            qs = []
-            rs = []
-            for c in corners:
-                _res, q, r = hex_decode(int(c))
-                qs.append(q)
-                rs.append(r)
-            cells_set = []
-            n = 0
-            for q in range(min(qs), max(qs) + 1):
-                for r in range(min(rs), max(rs) + 1):
-                    cells_set.append(hex_encode(res, q, r))
-                    n += 1
-                    if n > max_cells:
-                        break
-                if n > max_cells:
-                    break
-            out.append(None if n > max_cells else cells_set)
-        return pd.Series(out)
-
-    return _cover

@@ -34,9 +34,6 @@ except ImportError:
 # --- S2 ---------------------------------------------------------------
 # Hilbert-curve lookup tables from the public S2 geometry spec.
 _SWAP, _INVERT = 1, 2
-_POS_TO_IJ = np.array(
-    [[0, 1, 3, 2], [0, 2, 3, 1], [3, 2, 0, 1], [3, 1, 0, 2]], dtype=np.int64
-)
 _IJ_TO_POS = np.array(
     [[0, 1, 3, 2], [0, 3, 1, 2], [2, 3, 1, 0], [2, 1, 3, 0]], dtype=np.int64
 )
@@ -99,7 +96,10 @@ def s2_cell_id(lon: np.ndarray, lat: np.ndarray, level: int = 12) -> np.ndarray:
 
 
 def s2_parent(cell_id: np.ndarray) -> np.ndarray:
-    """Parent cell (one level up) of an S2 cell id — hierarchy helper."""
+    """Parent cell (one level up) of an S2 cell id — hierarchy helper.
+
+    Kept as the reference that test_properties.py and test_geo.py check
+    ``s2_cell_id`` against."""
     u = np.asarray(cell_id).view(np.uint64)
     lsb = u & (~u + np.uint64(1))
     plsb = lsb << np.uint64(2)
@@ -108,6 +108,8 @@ def s2_parent(cell_id: np.ndarray) -> np.ndarray:
 
 
 def s2_level(cell_id: int) -> int:
+    """Level of an S2 cell id, from its trailing bit. Kept as the reference
+    that test_properties.py checks ``s2_cell_id`` against."""
     u = np.uint64(cell_id)
     lsb = u & (~u + np.uint64(1))
     return _MAX_LEVEL - (int(lsb).bit_length() - 1) // 2
@@ -209,6 +211,9 @@ def hex_ring_col(cell_col, rings: int = 1):
 
 
 def hex_center(cell: int) -> tuple[float, float]:
+    """(lon, lat) of a hex cell's center. Kept as the reference that
+    test_properties.py and test_geo.py check ``hex_cell_id`` and
+    ``hex_cover_bbox`` against."""
     res, q, r = hex_decode(cell)
     size = hex_edge_deg(res)
     lat = r * size * 1.5

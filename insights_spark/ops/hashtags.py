@@ -23,8 +23,6 @@ from pyspark.sql import functions as F
 
 from .tags import tag_get
 
-SECONDS_PER_DAY = 86400
-
 
 def week_start(ts: Column) -> Column:
     """Latest Friday-noon ≤ ts (F6). Pure column math:
@@ -169,17 +167,6 @@ def update_first_last_used(
         F.coalesce("first_used", "_new_first").alias("first_used"),
         F.greatest("last_used", "_new_last").alias("last_used"),
     )
-
-
-def pending_periods(
-    stats_out: DataFrame, committed: DataFrame
-) -> DataFrame:
-    """X7 — the checkIfExists idempotence probe (hashtags.py:40-59), set-
-    based: anti-join freshly computed period rows against already-committed
-    (hashtag_id, type, start_date, end_date) keys; only the remainder is
-    written. Replaces one existence probe per (hashtag × period)."""
-    keys = ["hashtag_id", "type", "start_date", "end_date"]
-    return stats_out.join(committed.select(*keys), keys, "left_anti")
 
 
 def hot_changesets(changesets: DataFrame) -> DataFrame:

@@ -65,28 +65,3 @@ def hashtag_vocabulary(changesets: DataFrame) -> DataFrame:
         COMMENT_DELIMS,
     )
     return from_hashtags.union(from_comment).distinct()
-
-
-def hashtag_match(tags: Column, hashtag: str) -> Column:
-    """P4 — the reference's exact 4-pattern case-insensitive filter
-    (reference hashtags.py:69-70):
-
-        (tags->'comment')  ILIKE '%#h %'  OR
-        (tags->'hashtags') ILIKE '%#h;%'  OR
-        (tags->'comment')  ILIKE '%#h'    OR
-        (tags->'hashtags') ILIKE '%#h'
-
-    The trailing-anchor patterns give word-boundary-ish semantics: '#h'
-    mid-comment only matches with a following space; a strict-prefix
-    hashtag (e.g. #hotosm-project-1 vs #hotosm-project-11224) does NOT
-    match the longer one's usage.
-    """
-    h = hashtag.lower().lstrip("#")
-    comment = F.lower(tag_get(tags, "comment"))
-    hashtags = F.lower(tag_get(tags, "hashtags"))
-    return (
-        comment.like(f"%#{h} %")
-        | hashtags.like(f"%#{h};%")
-        | comment.like(f"%#{h}")
-        | hashtags.like(f"%#{h}")
-    )

@@ -1,6 +1,6 @@
-"""Per-user helper aggregates — the migrate.sql PL/pgSQL UDF pair (U1/U2).
+"""Per-user helper aggregate — the migrate.sql PL/pgSQL UDF U1.
 
-Both become set-based DataFrame aggregations; the dblink remote call in
+It becomes a set-based DataFrame aggregation; the dblink remote call in
 ``tasks_per_user`` (migrate.sql:1-26) is modeled as a join against a local
 `task_history` table (SURVEY §2.3 J10 — the cross-database hop is out of
 engine scope).
@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .tags import tag_get
 
 
 def tasks_per_user(
@@ -32,29 +30,4 @@ def tasks_per_user(
         )
         .groupBy("user_id")
         .agg(F.count("*").alias("task_count"))
-    )
-
-
-def editors_per_user(changesets: DataFrame, start, end) -> DataFrame:
-    """U2 — (user_id, editors): distinct `created_by` values concatenated
-    with a TRAILING comma, matching the reference's cursor loop
-    ``v_editors := v_editors || editor || ','`` (migrate.sql:43).
-
-    The reference's cursor order is unspecified (SELECT DISTINCT without
-    ORDER BY); the engine pins ascending editor-name order — documented
-    deterministic divergence (SURVEY §7).
-    """
-    return (
-        changesets.filter(
-            (F.col("created_at") >= F.lit(start))
-            & (F.col("created_at") <= F.lit(end))
-            & tag_get(F.col("tags"), "created_by").isNotNull()
-        )
-        .groupBy("user_id")
-        .agg(
-            F.concat(
-                F.concat_ws(",", F.array_sort(F.collect_set(tag_get(F.col("tags"), "created_by")))),
-                F.lit(","),
-            ).alias("editors")
-        )
     )

@@ -1928,9 +1928,9 @@ def _q_frame_schedule(spark, sf_dir):
     """Multimodal video path: the frame-sampling SCHEDULE (which frames to
     decode, at what timestamps) computed from metadata alone — the plan
     never touches payload bytes, so Parquet column pruning keeps the scan
-    payload-free (the decode itself is the honest NotImplementedError
-    without a codec; text/multimodal.py:212). Completes the multimodal
-    triple: image histogram, audio waveform stats, video frame schedule.
+    payload-free (no video codec is wired, so no frame is decoded).
+    Completes the multimodal triple: image histogram, audio waveform
+    stats, video frame schedule.
     Reference parity: the insights pipeline treats raster/media payloads
     as opaque blobs and schedules work from metadata (SURVEY §2.11)."""
     from insights_spark.text.multimodal import frame_sample, media_from_docs

@@ -100,37 +100,3 @@ def spatial_scan(
     return spark.read.parquet(path).filter(
         (F.col(KEY_COL) >= lo) & (F.col(KEY_COL) <= hi)
     )
-
-
-def write_bucketed(
-    df, table: str, bucket_col: str, num_buckets: int,
-    sort_col: str | None = None, mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Persist a table bucketed (hash-partitioned ON DISK) by its join
-    key. Spark's bucketing metadata lives in the session catalog, so two
-    tables bucketed the same way join with ZERO Exchange — the shuffle is
-    paid once at write time and amortized over every subsequent join/agg
-    on that key. This is the co-located-join layout the 100 TB fact/fact
-    joins need (a per-query shuffle of the big table is the single most
-    expensive operator there); the spatial analogue is cluster_spatial
-    above (range-clustered files for pruning vs hash buckets for joins).
-    Uses the native (non-Hive) catalog path — saveAsTable, not insertInto.
-    """
-    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    if path is not None:  # external table: data outside the warehouse dir
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
-def bucketed_join(spark, left_table: str, right_table: str, on: str):
-    """Join two same-bucketed catalog tables on the bucket key. With
-    matching bucket counts Spark plans a SortMergeJoin whose BOTH sides
-    read bucketed file groups directly — `.explain` shows no Exchange
-    (the pytest pins this), so the join cost is a partition-local sort +
-    merge regardless of table size."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, on)

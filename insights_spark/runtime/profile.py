@@ -17,10 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
-PROFILE_COLS = ("col_name", "n_rows", "n_null", "n_distinct",
-                "min_str", "max_str", "min_num", "max_num")
-
-
 def column_profile(
     df: DataFrame, columns: list[str] | None = None, approx: bool = False
 ) -> DataFrame:

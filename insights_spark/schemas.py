@@ -12,7 +12,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
-    DateType,
     DoubleType,
     IntegerType,
     LongType,
@@ -90,79 +89,6 @@ ELEMENT_HISTORY = StructType(
         StructField("version", LongType(), True),
         StructField("action", StringType(), True),
         StructField("country", StringType(), True),
-    ]
-)
-
-# reference: queries.py:84-94 (boundaries); polygon as ring coordinate
-# arrays (lon-lat order) rather than PostGIS geometry — the broadcast PIP
-# kernel consumes numpy arrays, WKB only at the edge.
-BOUNDARIES = StructType(
-    [
-        StructField("name_en", StringType(), False),
-        StructField("admin_level", IntegerType(), True),
-        StructField("tags", TAGS, True),
-        # list of polygons; each polygon = list of rings; ring = list of [lon, lat]
-        StructField(
-            "polygons",
-            ArrayType(ArrayType(ArrayType(ArrayType(DoubleType())))),
-            True,
-        ),
-        StructField("priority", BooleanType(), True),
-    ]
-)
-
-# reference: queries.py:96-108 (hashtag registry)
-HASHTAG = StructType(
-    [
-        StructField("id", IntegerType(), False),
-        StructField("name", StringType(), False),
-        StructField("created_at", TimestampNTZType(), True),
-        StructField("is_tm_project", BooleanType(), True),
-        StructField("first_used", DateType(), True),
-        StructField("last_used", DateType(), True),
-    ]
-)
-
-# reference: queries.py:109-123 (hashtag_stats)
-HASHTAG_STATS = StructType(
-    [
-        StructField("hashtag_id", IntegerType(), False),
-        StructField("type", StringType(), False),  # w | m | q | y
-        StructField("start_date", TimestampNTZType(), False),
-        StructField("end_date", TimestampNTZType(), False),
-        StructField("total_new_buildings", LongType(), True),
-        StructField("total_uq_contributors", LongType(), True),
-        StructField("total_new_road_meters", DoubleType(), True),
-        StructField("total_new_amenity", LongType(), True),
-        StructField("total_new_places", LongType(), True),
-    ]
-)
-
-# reference: queries.py:124-139 (all_changesets_stats)
-CHANGESET_STATS = StructType(
-    [
-        StructField("changeset", LongType(), False),
-        StructField("added_buildings", LongType(), True),
-        StructField("modified_buildings", LongType(), True),
-        StructField("added_amenity", LongType(), True),
-        StructField("modified_amenity", LongType(), True),
-        StructField("added_highway", LongType(), True),
-        StructField("modified_highway", LongType(), True),
-        StructField("added_places", LongType(), True),
-        StructField("modified_places", LongType(), True),
-        StructField("added_highway_meters", DoubleType(), True),
-        StructField("modified_highway_meters", DoubleType(), True),
-    ]
-)
-
-# migrate.sql:10-18 stand-in for the dblink Tasking Manager DB
-TASK_HISTORY = StructType(
-    [
-        StructField("task_id", LongType(), True),
-        StructField("project_id", LongType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("action_text", StringType(), True),
-        StructField("action_date", TimestampNTZType(), True),
     ]
 )
 

@@ -1,15 +1,15 @@
-"""JSONL / CSV document sources with skip-and-count malformed-record
+"""JSONL document source with skip-and-count malformed-record
 handling — the web-scale ingestion posture (never crash on one bad line
 in a 100 TB crawl; never silently drop it either).
 
-Both readers take an EXPLICIT schema (schema inference at 10^12 rows
+The reader takes an EXPLICIT schema (schema inference at 10^12 rows
 means a second full scan and nondeterministic types — always pass the
 contract) plus Spark's PERMISSIVE mode with a captured corrupt-record
 column. ``read_documents_jsonl`` returns (df, corrupt) where ``corrupt``
 is the quarantine frame (raw line + file) the lineage log records —
 the same accounting discipline as runtime/lineage.LineageLog.
 
-Scale: the JSON/CSV parsers are JVM-native and splittable per line;
+Scale: the JSON parser is JVM-native and splittable per line;
 maxPartitionBytes from session.py applies unchanged. NULL-payload and
 truncated lines land in quarantine, not exceptions (probed in tests with
 planted garbage, per the malformed-input discipline).
@@ -57,33 +57,6 @@ def read_documents_jsonl(
         # equivalent single-pass shape is writing BOTH sides at once with
         # df.write.partitionBy(is_corrupt) instead of a persist.
         .persist()
-    )
-    clean = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt", "_file")
-    quarantine = raw.filter(F.col("_corrupt").isNotNull()).select(
-        F.col("_corrupt").alias("raw"),
-        F.col("_file").alias("file"),
-    )
-    return clean, quarantine
-
-
-def read_documents_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = DOCUMENTS_SCHEMA,
-    header: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantine) from CSV with the same contract + posture."""
-    full = T.StructType(
-        schema.fields + [T.StructField("_corrupt", T.StringType())]
-    )
-    raw = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .option("header", str(header).lower())
-        .csv(path)
-        .withColumn("_file", F.input_file_name())
-        .persist()  # same corrupt-column contract as the JSONL reader
     )
     clean = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt", "_file")
     quarantine = raw.filter(F.col("_corrupt").isNotNull()).select(

@@ -17,6 +17,8 @@ osmh.py:554-613). Structured Streaming gives the same semantics natively:
 `edit_density_stream` shows the stateful path: sliding windowed counts of
 edits per tile with a watermark — the streaming twin of the batch tile
 rollup.
+Only tests reach this module: no registered query, job or bench runs a
+stream. It stays as the paper's minutely-replication twin (SURVEY §2.9).
 """
 
 from __future__ import annotations

@@ -23,6 +23,9 @@ the data write; the replay check scans manifest summaries
 ``SnapshotTable.compact()`` on a maintenance cadence — a streaming
 table accretes one dir per epoch, the exact small-files shape
 compaction exists for.
+Only tests reach this module: no registered query, job or bench runs a
+stream. It stays as the sink of the minutely-replication twin in
+``streaming/ingest.py`` (SURVEY §2.9).
 """
 
 from __future__ import annotations

@@ -26,7 +26,6 @@ from . import ref_parser
 
 BASE_TS = datetime(2021, 8, 5, 0, 0, 0)
 
-TAG_KEYS = ["comment", "hashtags", "created_by", "source", "building", "locale"]
 EDITORS = ["JOSM/1.5", "iD 2.20.2", "Potlatch 2", "StreetComplete 34.0", "RapiD 1.1"]
 HASHTAG_POOL = [
     "#hotosm-project-11224",

@@ -159,7 +159,8 @@ def audio_features(media: DataFrame) -> DataFrame:
 
 def media_from_docs(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    """Deterministic media table derived from a documents table.
+    """Deterministic media table (the ``MEDIA`` columns) derived from a
+    documents table.
 
     Every third doc becomes an image whose payload is the doc's text,
     stripped to printable ASCII and right-padded/truncated to exactly 768
@@ -177,7 +178,7 @@ def media_from_docs(docs: DataFrame, id_col: str = "doc_id",
         F.col(id_col).cast("long").alias("media_id"),
         kind.alias("kind"),
         # image AND audio rows carry the deterministic payload (video stays
-        # payload-free — its decode is the honest NotImplementedError)
+        # payload-free: no stage decodes video frames)
         F.when(kind != "video", F.encode(ascii_text, "UTF-8")).alias("payload"),
         F.when(kind == "image", F.lit("image/png"))
         .when(kind == "audio", F.lit("audio/ogg"))
@@ -275,8 +276,8 @@ def phash_near_dups(
 def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling: emits (media_id, frame_idx, ts_ms) rows.
 
-    Decode is NotImplemented without a codec; the frame *schedule* (which
-    frames to pull, from metadata alone) is real column math — the scan
+    No frame is decoded (no video codec is wired); the frame *schedule*
+    (which frames to pull, from metadata alone) is real column math — the scan
     never touches payload bytes, so Parquet column pruning keeps this
     stage payload-free."""
     v = media.filter(F.col("kind") == "video").select("media_id", "duration_ms")
@@ -289,29 +290,3 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     ).select(
         "media_id", "frame_idx", (F.col("frame_idx") * every_ms).alias("ts_ms")
     )
-
-
-def decode_video_frames(media: DataFrame):  # pragma: no cover
-    """Real frame decode requires ffmpeg bindings — unavailable here."""
-    raise NotImplementedError(
-        "video decode needs ffmpeg/pyav; install and wire into frame_sample"
-    )
-
-
-def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic media fixture (binary payloads from a seeded RNG)."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        kind = ["image", "audio", "video"][i % 3]
-        payload = bytes(rng.integers(0, 256, size=64 + (i % 5) * 32, dtype=np.uint8))
-        rows.append(
-            (
-                i, kind, payload,
-                {"image": "image/png", "audio": "audio/ogg", "video": "video/mp4"}[kind],
-                16 if kind == "image" else None,
-                16 if kind == "image" else None,
-                3000 + 500 * (i % 7) if kind != "image" else None,
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA)

@@ -434,7 +434,7 @@ def cosine_topk_bucketed(
         StructField("score", DoubleType()), StructField("rank", IntegerType()),
     ])
 
-    def solve(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def solve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         q = pdf[pdf["id"].notna()]
         m = pdf[pdf["mid"].notna()]
         if q.empty or m.empty:

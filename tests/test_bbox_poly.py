@@ -1,5 +1,5 @@
-"""Tests: .poly parsing (S6), bbox centroid/area/covers (F13/F14/J9),
-hot_changeset centroid PIP (J8/X6), bbox cell covers."""
+"""Tests: boundary rows with holes in the PIP kernel, bbox area/covers
+(F13/F14/J9), hot_changeset centroid PIP (J8/X6)."""
 
 from __future__ import annotations
 
@@ -8,46 +8,22 @@ from datetime import datetime
 import numpy as np
 from pyspark.sql import functions as F
 
-from insights_spark.geo import bbox, pip, poly
+from insights_spark.geo import bbox, pip
 
-POLY_TEXT = """kenya
-1
-   33.9  -4.7
-   37.0  -4.7
-   37.0  4.6
-   33.9  4.6
-END
-2
-   40.0  -2.0
-   41.0  -2.0
-   41.0  -1.0
-   40.0  -1.0
-END
-!3
-   40.4  -1.8
-   40.6  -1.8
-   40.6  -1.6
-   40.4  -1.6
-END
-END
-"""
-
-
-def test_parse_poly_multipolygon_with_hole():
-    polys = poly.parse_poly(POLY_TEXT)
-    assert len(polys) == 2
-    assert len(polys[0]) == 1  # outer only
-    assert len(polys[1]) == 2  # outer + hole
-    # rings closed
-    for p in polys:
-        for ring in p:
-            assert ring[0] == ring[-1]
-    assert poly.country_name_from_path("/x/geofabrik/kenya.poly") == "Kenya"
+# Kenya as two polygons (lon, lat rings, closed): a mainland outer ring,
+# and an island whose second ring is a hole
+KENYA = {
+    "name_en": "Kenya",
+    "polygons": [
+        [[[33.9, -4.7], [37.0, -4.7], [37.0, 4.6], [33.9, 4.6], [33.9, -4.7]]],
+        [[[40.0, -2.0], [41.0, -2.0], [41.0, -1.0], [40.0, -1.0], [40.0, -2.0]],
+         [[40.4, -1.8], [40.6, -1.8], [40.6, -1.6], [40.4, -1.6], [40.4, -1.8]]],
+    ],
+}
 
 
 def test_poly_rows_work_in_pip_kernel():
-    row = poly.boundary_row_from_poly("kenya.poly", POLY_TEXT)
-    idx = pip.PolygonIndex([row])
+    idx = pip.PolygonIndex([KENYA])
     got = idx.locate(np.array([35.0, 40.5, 40.2, 0.0]),
                      np.array([0.0, -1.7, -1.5, 50.0]))
     # 35,0 in main polygon; 40.5,-1.7 inside the HOLE → None; 40.2,-1.5 in
@@ -58,21 +34,22 @@ def test_poly_rows_work_in_pip_kernel():
 def test_bbox_area_and_mega_filter(spark):
     df = spark.createDataFrame(
         [
-            (1, 36.80, -1.30, 36.93, -1.17),          # ~200 km² — keep
-            (2, -30.0, -20.0, 30.0, 20.0),            # mega — drop
+            (1, 36.80, -1.30, 36.93, -1.17),          # ~200 km²
+            (2, -30.0, -20.0, 30.0, 20.0),            # mega
             (3, 10.0, -95.0, 10.5, -94.5),            # out-of-range lat — clamped
-            (4, None, None, None, None),              # null bbox — keep
+            (4, None, None, None, None),              # null bbox
         ],
         "id long, min_lon double, min_lat double, max_lon double, max_lat double",
     )
-    kept = sorted(r["id"] for r in bbox.filter_mega_changesets(df).collect())
-    assert 2 not in kept and 1 in kept and 4 in kept
     area = {r["id"]: r["a"] for r in df.select(
         "id", bbox.bbox_area_km2(F.col("min_lon"), F.col("min_lat"),
                                  F.col("max_lon"), F.col("max_lat")).alias("a")
     ).collect()}
     assert 180 < area[1] < 230
     assert area[2] > 1e7
+    assert area[1] < bbox.MEGA_CHANGESET_KM2 < area[2]  # the F14 cut
+    assert area[3] == 0.0  # both latitudes clamp to -90: a zero-height box
+    assert area[4] is None
 
 
 def test_covered_by(spark):
@@ -144,23 +121,3 @@ def test_hot_changesets_incremental_matches_full(spark):
     assert inc == full
     assert {i for i, _ in inc} == {1, 2, 4}  # 3 deleted, 2 inserted
     assert dict(inc)[1] is None  # moved off Kenya (update took effect)
-
-
-def test_bbox_cell_cover(spark):
-    df = spark.createDataFrame(
-        [(1, 36.80, -1.30, 36.82, -1.28), (2, -30.0, -20.0, 30.0, 20.0),
-         (3, None, None, None, None)],
-        "id long, min_lon double, min_lat double, max_lon double, max_lat double",
-    )
-    cover = bbox.bbox_cell_cover_udf(8)
-    got = {r["id"]: r["c"] for r in df.select("id", cover(
-        F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat")
-    ).alias("c")).collect()}
-    assert got[1] is not None and len(got[1]) >= 4
-    assert got[2] is None  # mega bbox exceeds the cap → NULL fallback
-    assert got[3] is None
-    # the cover contains the centroid's cell
-    from insights_spark.geo.cells import hex_cell_id
-
-    c = int(hex_cell_id(np.array([36.81]), np.array([-1.29]), 8)[0])
-    assert c in got[1]

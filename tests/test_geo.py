@@ -1321,50 +1321,6 @@ def test_compact_tile_cover_hand_cases(spark):
     assert got == {(0, 0, 0), (1, 3, 1), (2, 4, 0), (2, 5, 0), (2, 4, 1)}
 
 
-def test_dp_simplify_properties(spark):
-    """Douglas–Peucker invariants: endpoints preserved, output ⊆ input
-    (order kept), idempotent, every dropped vertex within tol of the
-    simplified chain, collinear chains collapse to the endpoints, and
-    short/NULL inputs pass through."""
-    from insights_spark.geo.simplify import _dp_mask, dp_simplify_udf
-
-    line = [{"lon": float(x), "lat": 0.0} for x in range(10)]       # collinear
-    zig = [{"lon": 0.0, "lat": 0.0}, {"lon": 1.0, "lat": 2.0},
-           {"lon": 2.0, "lat": 0.0}, {"lon": 3.0, "lat": 2.0},
-           {"lon": 4.0, "lat": 0.0}]
-    wiggle = [{"lon": 0.0, "lat": 0.0}, {"lon": 1.0, "lat": 0.004},
-              {"lon": 2.0, "lat": -0.003}, {"lon": 3.0, "lat": 0.0}]
-    df = spark.createDataFrame(
-        [(1, line), (2, zig), (3, wiggle), (4, None), (5, line[:2])],
-        "way_id long, pts array<struct<lon:double,lat:double>>")
-    simp = dp_simplify_udf(0.01)
-    got = {r["way_id"]: r["s"] for r in
-           df.select("way_id", simp("pts").alias("s")).collect()}
-
-    assert [(p["lon"], p["lat"]) for p in got[1]] == [(0.0, 0.0), (9.0, 0.0)]
-    assert len(got[2]) == 5                      # big zigzag: nothing dropped
-    assert len(got[3]) == 2                      # sub-tol wiggles removed
-    assert got[4] is None and len(got[5]) == 2   # passthroughs
-
-    # idempotence + subset + deviation bound, numpy-level (brute force)
-    rng = np.random.RandomState(7)
-    xs = np.cumsum(rng.rand(60))
-    ys = rng.rand(60) * 0.5
-    tol = 0.1
-    m1 = _dp_mask(xs, ys, tol)
-    kx, ky = xs[m1], ys[m1]
-    m2 = _dp_mask(kx, ky, tol)
-    assert m2.all()  # idempotent: nothing else to drop
-    # every original vertex within tol of its bracketing simplified segment
-    kept_idx = np.flatnonzero(m1)
-    for a, b in zip(kept_idx[:-1], kept_idx[1:]):
-        dx, dy = xs[b] - xs[a], ys[b] - ys[a]
-        seg2 = dx * dx + dy * dy
-        for i in range(a + 1, b):
-            cross = (xs[i] - xs[a]) * dy - (ys[i] - ys[a]) * dx
-            assert cross * cross <= seg2 * tol * tol + 1e-12
-
-
 def test_getis_ord_hand_and_brute_force(spark):
     """G_i* integer columns and the exact z>1.96 flag vs a python brute
     force (fractions-exact, independent code path) over a lattice with a

@@ -119,35 +119,6 @@ def test_null_coordinates_survive_layout(spark, tmp_path):
     assert back.filter(F.col(KEY_COL).isNull()).count() == 1
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key join with ZERO shuffle
-    exchanges: SortMergeJoin over Bucketed: true scans, and results match
-    the plain join. The write-side shuffle is paid once, not per query."""
-    from insights_spark.runtime.layout import bucketed_join, write_bucketed
-
-    a = spark.range(0, 5000).selectExpr("id AS k", "id * 2 AS va")
-    b = spark.range(0, 5000).selectExpr("id % 2500 AS k", "id * 3 AS vb")
-    write_bucketed(a, "tba", "k", 8, sort_col="k", path=str(tmp_path / "a"))
-    write_bucketed(b, "tbb", "k", 8, sort_col="k", path=str(tmp_path / "b"))
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = bucketed_join(spark, "tba", "tbb", "k")
-            assert j.count() == 5000  # every b row matches exactly one a
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert plan.count("Exchange hashpartitioning") == 0
-            assert "SortMergeJoin" in plan and "Bucketed: true" in plan
-            got = dict((r["k"], r["va"]) for r in j.collect())
-            want = dict((r["k"], r["va"]) for r in a.join(b, "k").collect())
-            assert got == want
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS tba")
-        spark.sql("DROP TABLE IF EXISTS tbb")
-
-
 def test_runtime_bloom_filter_join_pruning(spark, tmp_path):
     """Spark's runtime bloom-filter join pruning: with a selective filter
     on the dim side of a fact⋈dim join, the optimizer injects

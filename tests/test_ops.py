@@ -53,9 +53,8 @@ def test_hashtag_match_word_boundary(spark):
         ],
         "id long, tags map<string,string>",
     )
-    got = sorted(
-        r["id"] for r in df.filter(tags.hashtag_match(F.col("tags"), "hotosm-project-1")).collect()
-    )
+    match = hashtags.hashtag_match_col(F.col("tags"), F.lit("hotosm-project-1"))
+    got = sorted(r["id"] for r in df.filter(match).collect())
     # id=2 must NOT match (strict-prefix trap, hashtags.py:69-70 semantics)
     assert got == [1, 3, 4, 5]
 
@@ -346,18 +345,6 @@ def test_update_first_last_used_batched_equals_full(spark):
     assert full[2] == (date(2021, 10, 2), date(2021, 10, 2))
 
 
-def test_pending_periods_idempotence_probe(spark):
-    fresh = spark.createDataFrame(
-        [(1, "w", T, datetime(2021, 8, 12), 5), (1, "w", datetime(2021, 8, 12),
-                                                 datetime(2021, 8, 19), 7)],
-        "hashtag_id int, type string, start_date timestamp_ntz,"
-        "end_date timestamp_ntz, total_new_buildings long",
-    )
-    committed = fresh.limit(1)
-    rest = hashtags.pending_periods(fresh, committed).collect()
-    assert len(rest) == 1 and rest[0]["total_new_buildings"] == 7
-
-
 def test_country_insights_multi_month(spark):
     e = _mk_elements(spark)
     p = propagate.propagate_locations(e)
@@ -392,21 +379,6 @@ def test_propagate_locations(spark):
 
 # ------------------------------------------------------------------ users
 
-def test_editors_per_user(spark):
-    cs = spark.createDataFrame(
-        [
-            (1, 7, T, {"created_by": "JOSM/1.5"}),
-            (2, 7, T, {"created_by": "iD 2.20.2"}),
-            (3, 7, T, {"created_by": "JOSM/1.5"}),
-            (4, 8, T, {}),
-        ],
-        "id long, user_id long, created_at timestamp_ntz, tags map<string,string>",
-    )
-    got = {r["user_id"]: r["editors"]
-           for r in users.editors_per_user(cs, datetime(2021, 1, 1), datetime(2022, 1, 1)).collect()}
-    assert got == {7: "JOSM/1.5,iD 2.20.2,"}  # sorted, deduped, trailing comma
-
-
 def test_tasks_per_user(spark):
     th = spark.createDataFrame(
         [(1, 11, 7, "MAPPED", T), (2, 11, 7, "MAPPED", T), (3, 12, 7, "MAPPED", T),
@@ -417,110 +389,6 @@ def test_tasks_per_user(spark):
            for r in users.tasks_per_user(th, [11], datetime(2021, 1, 1),
                                          datetime(2022, 1, 1), "MAPPED").collect()}
     assert got == {7: 2}
-
-
-def test_sql_api_matches_dataframe_ops(spark, pages):
-    """The Spark-SQL surface (reference dialect, advanced-queries.md
-    translations) returns exactly what the oracle-checked DataFrame ops
-    return on the same extracted warehouse."""
-    from insights_spark import extract, sql_api
-    from insights_spark.ops.country import mapathon_tag_action_report
-
-    cs = extract.extract_changesets(pages)
-    el = extract.extract_elements(pages)
-    sql_api.register_warehouse_views(spark, cs, el)
-
-    start, end = "2021-08-01 00:00:00", "2021-09-30 00:00:00"
-    pats = ["hotosm-project-11224", "missingmaps"]
-    like = (
-        F.col("tags")["comment"].like(f"%{pats[0]}%")
-        | F.col("tags")["hashtags"].like(f"%{pats[0]}%")
-        | F.col("tags")["comment"].like(f"%{pats[1]}%")
-        | F.col("tags")["hashtags"].like(f"%{pats[1]}%")
-    )
-    ids = cs.filter(
-        F.col("created_at").between(start, end) & like
-    ).select("id")
-
-    want = {(r["key"], r["action"]): r["features"]
-            for r in mapathon_tag_action_report(el, ids).collect()}
-    got = {(r["key"], r["action"]): r["features"]
-           for r in spark.sql(
-               sql_api.mapathon_features_sql(start, end, pats)).collect()}
-    assert got == want and len(got) > 0
-
-    want_n = (
-        el.join(F.broadcast(ids.withColumnRenamed("id", "changeset")),
-                "changeset", "left_semi")
-        .agg(F.countDistinct("uid")).collect()[0][0]
-    )
-    got_n = spark.sql(
-        sql_api.mapathon_contributors_sql(start, end, pats)
-    ).collect()[0]["total_contributors"]
-    assert got_n == want_n > 0
-
-    # a pattern containing a quote must neither break the SQL nor match —
-    # the escaping path (ADVICE r2: injection via unescaped ')
-    assert spark.sql(
-        sql_api.mapathon_contributors_sql(start, end, ["o'brien's-proj"])
-    ).collect()[0]["total_contributors"] == 0
-
-
-def test_sql_api_user_report_matches_dataframe(spark, pages):
-    """advanced-queries.md:48-66 SQL twin == ops.country.mapathon_user_report
-    (same deterministic username rule: max_by(user_name, changeset id))."""
-    from insights_spark import extract, sql_api
-    from insights_spark.ops.country import mapathon_user_report
-
-    cs = extract.extract_changesets(pages)
-    el = extract.extract_elements(pages)
-    sql_api.register_warehouse_views(spark, cs, el)
-
-    start, end = "2021-08-01 00:00:00", "2021-09-30 00:00:00"
-    pats = ["hotosm-project-11224", "missingmaps"]
-    like = (
-        F.col("tags")["comment"].like(f"%{pats[0]}%")
-        | F.col("tags")["hashtags"].like(f"%{pats[0]}%")
-        | F.col("tags")["comment"].like(f"%{pats[1]}%")
-        | F.col("tags")["hashtags"].like(f"%{pats[1]}%")
-    )
-    ids = cs.filter(F.col("created_at").between(start, end) & like).select("id")
-    want = {(r["uid"], r["username"], r["key"], r["action"]): r["features"]
-            for r in mapathon_user_report(el, cs, ids).collect()}
-    got = {(r["uid"], r["username"], r["key"], r["action"]): r["features"]
-           for r in spark.sql(
-               sql_api.mapathon_user_report_sql(start, end, pats)).collect()}
-    assert got == want and len(got) > 0
-
-
-def test_sql_api_country_insights_matches_dataframe(spark, pages):
-    """advanced-queries.md:126-155 SQL twin == building_counts_asof, both
-    plain and with the hot_changeset TM semi-join column."""
-    from insights_spark import extract, sql_api
-    from insights_spark.ops.country import building_counts_asof
-
-    cs = extract.extract_changesets(pages)
-    el = extract.extract_elements(pages).withColumn(
-        "country",
-        F.when(F.pmod(F.col("id"), F.lit(5)) == 4, F.lit(None).cast("string"))
-        .otherwise(F.concat(F.lit("C"), F.pmod(F.col("id"), F.lit(5)).cast("string"))),
-    )
-    hot = cs.filter(F.pmod(F.col("id"), F.lit(2)) == 0).select("id")
-    sql_api.register_warehouse_views(spark, cs, el, hot_changesets=hot)
-
-    cutoff = "2021-09-01 00:00:00"
-    want = {r["country"]: r["building_count"]
-            for r in building_counts_asof(el, cutoff).collect()}
-    got = {r["country"]: r["building_count"]
-           for r in spark.sql(sql_api.country_insights_sql(cutoff)).collect()}
-    assert got == want and len(got) > 0
-
-    want_tm = {r["country"]: (r["building_count"], r["tm_building_count"])
-               for r in building_counts_asof(el, cutoff, hot).collect()}
-    got_tm = {r["country"]: (r["building_count"], r["tm_building_count"])
-              for r in spark.sql(
-                  sql_api.country_insights_sql(cutoff, with_tm=True)).collect()}
-    assert got_tm == want_tm and len(got_tm) > 0
 
 
 def test_salted_join_skewed_matches_plain(spark):

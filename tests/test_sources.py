@@ -1,4 +1,4 @@
-"""JSONL/CSV source posture tests: explicit schema, skip-and-count
+"""JSONL source posture tests: explicit schema, skip-and-count
 quarantine of malformed lines, parity with the parquet fixture."""
 
 from __future__ import annotations
@@ -6,10 +6,7 @@ from __future__ import annotations
 import json
 import os
 
-from insights_spark.sources.jsonl import (
-    read_documents_csv,
-    read_documents_jsonl,
-)
+from insights_spark.sources.jsonl import read_documents_jsonl
 
 
 def test_jsonl_roundtrip_and_quarantine(spark, tmp_path):
@@ -33,18 +30,6 @@ def test_jsonl_roundtrip_and_quarantine(spark, tmp_path):
     q = quarantine.collect()
     assert len(q) == 3                     # every bad line counted
     assert all(r["raw"] and r["file"].endswith("docs.jsonl") for r in q)
-
-
-def test_csv_roundtrip_and_quarantine(spark, tmp_path):
-    p = tmp_path / "docs.csv"
-    with open(p, "w") as fh:
-        fh.write("doc_id,text,lang,source,n_chars\n")
-        fh.write('1,"a b c",en,s0,5\n')
-        fh.write('oops,"bad id",en,s1,0\n')              # type error
-    clean, quarantine = read_documents_csv(spark, str(p))
-    rows = clean.collect()
-    assert len(rows) == 1 and rows[0]["doc_id"] == 1
-    assert quarantine.count() == 1
 
 
 def test_jsonl_matches_parquet_fixture(spark, tmp_path):
