@@ -10,8 +10,6 @@ columns (`h3_cells`/`s2_cells` covers for bbox rows):
   about out-of-range latitudes (README.md:78). Engine: cosine-corrected
   equirectangular area — exact enough for a threshold filter — with lat
   clamped to ±90 first, as the reference's warning demands.
-- covered_by: ST_CoveredBy(bbox, envelope) as pure corner comparisons
-  (README.md:120-124).
 - hot_changesets_with_country: the hot_changeset materialized view's
   centroid-in-polygon enrichment (advanced-queries.md:249-252) using the
   same broadcast PIP kernel as element enrichment (J8 ≡ J6 on centroids).
@@ -50,16 +48,6 @@ def bbox_area_km2(min_lon: Column, min_lat: Column,
     w = (max_lon - min_lon) * F.cos(mid) * EARTH_KM_PER_DEG
     h = (lat1 - lat0) * EARTH_KM_PER_DEG
     return F.abs(w * h)
-
-
-def covered_by(min_lon: Column, min_lat: Column, max_lon: Column,
-               max_lat: Column, env: tuple[float, float, float, float]) -> Column:
-    """J9 — bbox fully within an envelope (xmin, ymin, xmax, ymax)."""
-    x0, y0, x1, y1 = env
-    return (
-        (min_lon >= F.lit(x0)) & (max_lon <= F.lit(x1))
-        & (min_lat >= F.lit(y0)) & (max_lat <= F.lit(y1))
-    )
 
 
 def with_centroid(changesets: DataFrame) -> DataFrame:

@@ -9,8 +9,6 @@ turns tile rasters back into vector form —
   reproducible in ANSI SQL: ``sinh`` is written in exp-form because the
   DuckDB oracle lacks ``sinh``; bounds rounded to 9 decimals on BOTH sides
   so the comparison is libm-ulp-proof).
-* :func:`quad_wkt` — WKT polygon text for export (not oracle-compared:
-  float→string formatting differs across engines).
 * :func:`tile_regions` — merged hot-tile REGIONS: connected components
   over 4-adjacency via :func:`star_cc_labels`. The oracle is a DuckDB
   recursive-CTE transitive closure over the same adjacency.
@@ -80,25 +78,6 @@ def vectorize_tiles(tiles: DataFrame, min_density: float = 1) -> DataFrame:
     hot = tiles.filter(F.col("density") >= F.lit(min_density))
     return with_tile_bounds(hot).select(
         "z", "x", "y", "density", "west", "south", "east", "north"
-    )
-
-
-def quad_wkt(bounds: DataFrame) -> DataFrame:
-    """WKT POLYGON text per tile quad (closed ring, counter-clockwise).
-
-    Export-only convenience; float→string formatting is engine-specific so
-    this column is pytest-verified (parse floats back), never
-    oracle-hashed.
-    """
-    w, s, e, n = (F.col(c).cast("string") for c in ("west", "south", "east", "north"))
-    sp, cm = F.lit(" "), F.lit(", ")
-    return bounds.withColumn(
-        "wkt",
-        F.concat(
-            F.lit("POLYGON(("),
-            w, sp, s, cm, e, sp, s, cm, e, sp, n, cm, w, sp, n, cm, w, sp, s,
-            F.lit("))"),
-        ),
     )
 
 

@@ -197,7 +197,7 @@ def run(
         )
         # tmp-and-swap per touched bucket: merged READS the live postings,
         # so overwriting them in the same job would truncate its own input
-        # (the self-overwrite hazard merge_sum_parquet guards against too)
+        # (the self-overwrite hazard ParquetSinks._publish guards against too)
         import shutil
         import uuid
 

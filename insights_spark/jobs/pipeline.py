@@ -53,18 +53,9 @@ def run(
     boundary_rows: list[dict] | None = None,
     resume: bool = False,
     zooms: tuple[int, ...] = (12, 8, 6),
-    table_format: str = "parquet",
 ) -> dict[str, str]:
-    """Run the full pipeline; returns {table_name: path}.
-
-    table_format='parquet' (default): directory-parquet sinks
-    (runtime.sinks module functions). table_format='snapshot': the same
-    warehouse over runtime.tablefmt snapshot tables — every batch is an
-    atomic commit, each table keeps per-batch time-travel history, and
-    the element sink drops the parquet backend's defensive
-    localCheckpoint (snapshot isolation covers the read-your-own-write
-    hazard). Outputs are logically identical across formats (pytest-
-    pinned); read snapshot outputs via SnapshotTable(...).read()."""
+    """Run the full pipeline; returns {table_name: path}. Every table is
+    a directory-parquet table written through runtime.sinks.ParquetSinks."""
     ckpt = CheckpointStore(spark, os.path.join(out_dir, "_checkpoints"))
     lin = LineageLog(spark, os.path.join(out_dir, "_lineage"))
     boundary_rows = boundary_rows or synth.gen_boundaries()
@@ -86,16 +77,9 @@ def run(
     out: dict[str, str] = {}
 
     # 1. extract ----------------------------------------------------------
-    from ..runtime.sinks import ParquetSinks, SnapshotSinks
+    from ..runtime.sinks import ParquetSinks
 
-    if table_format == "snapshot":
-        # commit clock = the batch sequence (explicit-now rule): time
-        # travel by ts resolves "the warehouse as of batch N"
-        sink_ops = SnapshotSinks(spark, ts=sequence)
-    elif table_format == "parquet":
-        sink_ops = ParquetSinks(spark)
-    else:
-        raise ValueError(f"unknown table_format: {table_format!r}")
+    sink_ops = ParquetSinks(spark)
 
     # one parse pass for both changeset outputs (persisted bundle)
     bundles = extract.extract_changeset_bundles(batch).persist()
@@ -201,8 +185,6 @@ def main() -> None:  # pragma: no cover — exercised via spark-submit
     p.add_argument("--out", required=True)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--n-pages", type=int, default=120, help="synth size if no --pages")
-    p.add_argument("--table-format", default="parquet",
-                   choices=("parquet", "snapshot"))
     args = p.parse_args()
 
     from ..session import get_spark
@@ -211,8 +193,7 @@ def main() -> None:  # pragma: no cover — exercised via spark-submit
     pages = (
         spark.read.parquet(args.pages) if args.pages else synth.pages_df(spark, args.n_pages)
     )
-    tables = run(spark, pages, args.out, resume=args.resume,
-                 table_format=args.table_format)
+    tables = run(spark, pages, args.out, resume=args.resume)
     for name, path in tables.items():
         print(f"{name}\t{path}")
     spark.stop()

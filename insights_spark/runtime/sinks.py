@@ -1,16 +1,17 @@
 """Idempotent sink semantics — the reference's upsert triad, table-ified.
 
-Reference sinks (SURVEY §2.1 S10-S12):
+Reference sinks (SURVEY §2.1 S10-S12), each one MERGE rule (`merge_rows`):
 - S10 ``ON CONFLICT DO NOTHING`` on (id,version,type)   → merge keep_first
 - S11 ``ON CONFLICT ... DO UPDATE SET ...``              → merge keep_last
 - S12 delete-then-insert replay (changesets)             → merge keep_last
 
 On Iceberg these are one ``MERGE INTO`` each; this sandbox has no catalog,
-so the parquet fallback models MERGE as read-existing → key-dedup → atomic
-directory swap. The rewrite is O(table) here; the docstring contract is the
-MERGE semantics, and the pipeline's write pattern (natural keys + dedup
-preference) ports to Iceberg unchanged. Replay safety (ST3): re-applying
-any batch, or an OLDER batch, converges to the same table.
+so `ParquetSinks` models MERGE as read-existing → `merge_rows` → atomic
+directory swap, and `runtime.tablefmt.SnapshotTable.merge` commits the
+same `merge_rows` output as a snapshot. The rewrite is O(table) here; the
+docstring contract is the MERGE semantics, and the pipeline's write
+pattern (natural keys + dedup preference) ports to Iceberg unchanged.
+Replay safety (ST3): re-applying any batch converges to the same table.
 """
 
 from __future__ import annotations
@@ -24,232 +25,126 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def merge_parquet(
-    new_df: DataFrame,
-    path: str,
-    keys: list[str],
-    mode: str = "keep_last",
-    order_col: str | None = None,
-) -> None:
-    """MERGE new_df into the parquet table at `path` on `keys`.
+def merge_rows(old: DataFrame | None, new: DataFrame, keys: list[str],
+               mode: str = "keep_last") -> DataFrame:
+    """The MERGE precedence rule: one row per key of old ∪ new.
 
     mode='keep_first': existing rows win (ON CONFLICT DO NOTHING, S10).
     mode='keep_last' : new rows win (DO UPDATE / delete-then-insert, S11/S12).
-    `order_col` (optional): instead of old/new precedence, keep the max
-    order_col row per key — makes the merge commutative across batch replay
-    order (ST5: safe to apply older diffs, README.md:59).
-    """
-    spark = new_df.sparkSession
-    exists = os.path.isdir(path) and any(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
-    )
-    if not exists:
-        new_df.write.mode("overwrite").parquet(path)
-        return
-
-    old = spark.read.parquet(path)
-    # fast path: when no batch key collides with an existing row, MERGE
-    # degenerates to INSERT — dedup the batch internally and append, never
-    # touching existing files (Iceberg's MERGE does exactly this when the
-    # ON clause matches nothing). The probe scans only the key columns
-    # (column pruning) and stops at the first hit (limit 1).
-    if order_col is None:
-        batch = new_df.dropDuplicates(keys)
-    else:
-        w_b = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-        batch = (
-            new_df.withColumn("_rn", F.row_number().over(w_b))
-            .filter(F.col("_rn") == 1).drop("_rn")
-        )
-    conflicts = (
-        old.select(*keys).join(batch.select(*keys), keys, "left_semi").limit(1).count()
-    )
-    if conflicts == 0:
-        batch.write.mode("append").parquet(path)
-        return
-
-    tagged = old.withColumn("_gen", F.lit(0)).unionByName(
-        new_df.withColumn("_gen", F.lit(1))
-    )
-    if order_col is not None:
-        w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc("_gen"))
-    elif mode == "keep_first":
-        w = Window.partitionBy(*keys).orderBy(F.asc("_gen"))
-    else:
-        w = Window.partitionBy(*keys).orderBy(F.desc("_gen"))
-    merged = (
+    `old=None` is the empty table, so a first write still keeps one row
+    per key. Rows are tagged `_gen` 0 (old) / 1 (new) and `row_number`
+    over the key picks the winning generation."""
+    tagged = new.withColumn("_gen", F.lit(1))
+    if old is not None:
+        tagged = old.withColumn("_gen", F.lit(0)).unionByName(tagged)
+    gen = F.asc("_gen") if mode == "keep_first" else F.desc("_gen")
+    w = Window.partitionBy(*keys).orderBy(gen)
+    return (
         tagged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_gen")
     )
 
-    # atomic publish: write beside, swap directories (Iceberg gets this from
-    # snapshot commits; plain parquet needs the tmp-and-rename dance)
-    tmp = f"{path}__merge_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, backup)
-    os.rename(tmp, path)
-    shutil.rmtree(backup, ignore_errors=True)
-
-
-def append_dedup(new_df: DataFrame, path: str, keys: list[str],
-                 partition_by: list[str] | None = None,
-                 cluster_by: list[str] | None = None,
-                 sort_by: list[str] | None = None) -> DataFrame:
-    """Cheap S10 for append-mostly tables: drop batch rows whose keys are
-    already present, then append (no table rewrite). Exactly the
-    reference's ON CONFLICT DO NOTHING cost profile.
-
-    Returns the actually-appended rows (persisted): downstream incremental
-    stages (stats repair, tile merge) consume exactly this delta, so the
-    pipeline's per-batch work stays O(batch) instead of O(history). The
-    caller owns the unpersist once its consumers have run.
-
-    `cluster_by`/`sort_by` implement the physical layout (X3) HERE, after
-    the dedup shuffle: clustering before the call is futile (dropDuplicates
-    re-shuffles), and repartitioning on a low-cardinality column alone
-    (e.g. `type`: 3 values) collapses the write to 3 tasks — cluster on the
-    full composite so all shuffle partitions stay busy."""
-    spark = new_df.sparkSession
-    exists = os.path.isdir(path) and any(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
-    )
-    batch = new_df.dropDuplicates(keys)
-    if exists:
-        existing = spark.read.parquet(path).select(*keys)
-        batch = batch.join(existing, keys, "left_anti")
-    if cluster_by:
-        batch = batch.repartition(*[F.col(c) for c in cluster_by])
-    if sort_by:
-        batch = batch.sortWithinPartitions(*sort_by)
-    # localCheckpoint, NOT persist: the batch's plan reads `path` (the
-    # anti-join), and writing to a path invalidates+recomputes every cached
-    # plan that reads it (CacheManager.recacheByPath) — a persisted batch
-    # would silently re-execute its anti-join against the just-appended
-    # table and come back EMPTY. Checkpointing truncates the lineage first,
-    # pinning the pre-write contents. (On Iceberg the committed snapshot id
-    # gives the same read-your-own-write isolation for free.)
-    batch = batch.localCheckpoint(eager=True)
-    w = batch.write.mode("append")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    return batch
-
 
 class ParquetSinks:
-    """The default warehouse backend: the module's directory-parquet sinks
-    behind the 4-verb interface jobs program against (merge / merge_sum /
-    append_dedup / read). `SnapshotSinks` is the drop-in snapshot-table
-    twin — `jobs.pipeline.run(table_format=...)` picks one."""
+    """The warehouse backend: directory-parquet tables behind the 4 verbs
+    jobs program against (merge / merge_sum / append_dedup / read)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
-    def merge(self, df: DataFrame, path: str, keys: list[str],
-              mode: str = "keep_last") -> None:
-        merge_parquet(df, path, keys, mode=mode)
-
-    def merge_sum(self, df: DataFrame, path: str, keys: list[str],
-                  sum_cols: list[str]) -> None:
-        merge_sum_parquet(df, path, keys, sum_cols)
-
-    def append_dedup(self, df: DataFrame, path: str, keys: list[str],
-                     partition_by: list[str] | None = None,
-                     cluster_by: list[str] | None = None,
-                     sort_by: list[str] | None = None) -> DataFrame:
-        return append_dedup(df, path, keys, partition_by=partition_by,
-                            cluster_by=cluster_by, sort_by=sort_by)
-
-    def read(self, path: str) -> DataFrame:
+    def _existing(self, path: str) -> DataFrame | None:
+        """The table at `path`, or None while it holds no parquet file."""
+        if not any(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs):
+            return None
         return self.spark.read.parquet(path)
 
-
-class SnapshotSinks:
-    """Snapshot-table sink set (runtime.tablefmt): the same 4 verbs over
-    Iceberg-style tables — atomic manifest commits, time travel per batch,
-    and snapshot isolation that makes the parquet backend's defensive
-    `localCheckpoint` UNNECESSARY in append_dedup: the batch's anti-join
-    reads the immutable PARENT snapshot's files, which the append commit
-    never touches — exactly the read-your-own-write isolation the
-    merge_parquet docstring promised a real table format would give.
-
-    Layout note: `partition_by` is ignored (a snapshot commit is one
-    immutable dir; hive-style subdirs across snapshots would complicate
-    the manifest for no pruning gain here) — the partition column stays a
-    regular column and `sort_by` clustering still applies, so parquet
-    min/max pages serve the same predicates (X3)."""
-
-    def __init__(self, spark: SparkSession, ts: int | None = None):
-        self.spark = spark
-        self.ts = ts  # caller-supplied commit clock (explicit-now rule)
-
-    def _t(self, path: str):
-        from insights_spark.runtime.tablefmt import SnapshotTable
-
-        return SnapshotTable(self.spark, path)
+    @staticmethod
+    def _publish(df: DataFrame, path: str) -> None:
+        """Atomic publish: write beside, swap directories (Iceberg gets this
+        from snapshot commits; plain parquet needs the tmp-and-rename dance)."""
+        tmp = f"{path}__merge_{uuid.uuid4().hex[:8]}"
+        df.write.mode("overwrite").parquet(tmp)
+        backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
+        if os.path.exists(path):
+            os.rename(path, backup)
+        os.rename(tmp, path)
+        shutil.rmtree(backup, ignore_errors=True)
 
     def merge(self, df: DataFrame, path: str, keys: list[str],
               mode: str = "keep_last") -> None:
-        self._t(path).merge(df, keys, mode=mode, ts=self.ts)
+        """MERGE df into the parquet table at `path` on `keys` (`merge_rows`)."""
+        old = self._existing(path)
+        if old is not None:
+            # fast path: when no batch key collides with an existing row,
+            # MERGE degenerates to INSERT — dedup the batch internally and
+            # append, never touching existing files (Iceberg's MERGE does
+            # exactly this when the ON clause matches nothing). The probe
+            # scans only the key columns and stops at the first hit.
+            batch = df.dropDuplicates(keys)
+            conflicts = (
+                old.select(*keys).join(batch.select(*keys), keys, "left_semi")
+                .limit(1).count()
+            )
+            if conflicts == 0:
+                batch.write.mode("append").parquet(path)
+                return
+        self._publish(merge_rows(old, df, keys, mode), path)
 
     def merge_sum(self, df: DataFrame, path: str, keys: list[str],
                   sum_cols: list[str]) -> None:
-        t = self._t(path)
-        if t.current_snapshot_id() is None:
-            t.append(df, ts=self.ts)
-            return
-        merged = (
-            t.read().unionByName(df)
-            .groupBy(*keys)
-            .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        )
-        t.overwrite(merged, ts=self.ts)
+        """Additive MERGE for rollup tables (tile pyramid, counters): rows
+        with the same key have their measures SUMMED — the incremental form
+        of an additive aggregate, so a batch contributes O(batch)
+        aggregation work instead of recomputing the rollup over all
+        history."""
+        old = self._existing(path)
+        rows = df if old is None else old.unionByName(df)
+        self._publish(
+            rows.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols]), path)
 
     def append_dedup(self, df: DataFrame, path: str, keys: list[str],
                      partition_by: list[str] | None = None,
                      cluster_by: list[str] | None = None,
                      sort_by: list[str] | None = None) -> DataFrame:
-        t = self._t(path)
+        """Cheap S10 for append-mostly tables: drop batch rows whose keys
+        are already present, then append (no table rewrite). Exactly the
+        reference's ON CONFLICT DO NOTHING cost profile.
+
+        Returns the actually-appended rows (persisted): downstream
+        incremental stages (stats repair, tile merge) consume exactly this
+        delta, so the pipeline's per-batch work stays O(batch) instead of
+        O(history). The caller owns the unpersist once its consumers have
+        run.
+
+        `cluster_by`/`sort_by` implement the physical layout (X3) HERE,
+        after the dedup shuffle: clustering before the call is futile
+        (dropDuplicates re-shuffles), and repartitioning on a
+        low-cardinality column alone (e.g. `type`: 3 values) collapses the
+        write to 3 tasks — cluster on the full composite so all shuffle
+        partitions stay busy."""
         batch = df.dropDuplicates(keys)
-        if t.current_snapshot_id() is not None:
-            batch = batch.join(t.read().select(*keys), keys, "left_anti")
+        old = self._existing(path)
+        if old is not None:
+            batch = batch.join(old.select(*keys), keys, "left_anti")
         if cluster_by:
             batch = batch.repartition(*[F.col(c) for c in cluster_by])
-        # persist for COST only (3 downstream consumers) — correctness
-        # does not need a lineage cut here, unlike the parquet twin
-        batch = batch.persist()
-        t.append(batch, ts=self.ts, sort_by=sort_by)
+        if sort_by:
+            batch = batch.sortWithinPartitions(*sort_by)
+        # localCheckpoint, NOT persist: the batch's plan reads `path` (the
+        # anti-join), and writing to a path invalidates+recomputes every
+        # cached plan that reads it (CacheManager.recacheByPath) — a
+        # persisted batch would silently re-execute its anti-join against
+        # the just-appended table and come back EMPTY. Checkpointing
+        # truncates the lineage first, pinning the pre-write contents. (On
+        # Iceberg the committed snapshot id gives the same
+        # read-your-own-write isolation for free.)
+        batch = batch.localCheckpoint(eager=True)
+        w = batch.write.mode("append")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
         return batch
 
     def read(self, path: str) -> DataFrame:
-        return self._t(path).read()
-
-
-def merge_sum_parquet(new_df: DataFrame, path: str, keys: list[str],
-                      sum_cols: list[str]) -> None:
-    """Additive MERGE for rollup tables (tile pyramid, counters): existing
-    and batch rows with the same key have their measures SUMMED — the
-    incremental form of an additive aggregate, so a batch contributes
-    O(batch) aggregation work instead of recomputing the rollup over all
-    history. Same atomic tmp-and-swap publish as merge_parquet."""
-    spark = new_df.sparkSession
-    exists = os.path.isdir(path) and any(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
-    )
-    if not exists:
-        new_df.write.mode("overwrite").parquet(path)
-        return
-    old = spark.read.parquet(path)
-    merged = (
-        old.unionByName(new_df)
-        .groupBy(*keys)
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-    )
-    tmp = f"{path}__merge_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, backup)
-    os.rename(tmp, path)
-    shutil.rmtree(backup, ignore_errors=True)
+        return self.spark.read.parquet(path)

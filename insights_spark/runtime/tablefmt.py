@@ -46,8 +46,9 @@ format, matching the repo-wide explicit-now discipline.
 Reference parity: the reference loads into Postgres and gets atomic
 visibility from SQL transactions (insights: db loader commits per
 batch); this module is the table-format equivalent for a file-based
-warehouse. SURVEY §2.1 S10-S12 map onto ``merge``; ST1/ST2 (checkpoint,
-lock) onto the snapshot id + exclusive-create commit.
+warehouse. SURVEY §2.1 S10-S12 map onto ``merge`` (the one MERGE rule,
+``runtime.sinks.merge_rows``); ST1/ST2 (checkpoint, lock) onto the
+snapshot id + exclusive-create commit.
 """
 
 from __future__ import annotations
@@ -59,7 +60,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .sinks import merge_rows
 
 
 class CommitConflict(Exception):
@@ -201,37 +203,18 @@ class SnapshotTable:
         return self._retrying(build, "replace", ts)
 
     def merge(self, df: DataFrame, keys: list[str], mode: str = "keep_last",
-              order_col: str | None = None, ts: int | None = None) -> int:
-        """MERGE INTO on `keys` (sinks.merge_parquet semantics, S10-S12),
+              ts: int | None = None) -> int:
+        """MERGE INTO on `keys` (`runtime.sinks.merge_rows`, S10-S12),
         committed as a replace snapshot. Unlike the directory swap, a
         reader pinned to the parent snapshot keeps its files.
 
         mode='keep_first' = ON CONFLICT DO NOTHING; 'keep_last' = DO
-        UPDATE; order_col = commutative max-order merge (ST3)."""
+        UPDATE."""
 
         def build(parent):
-            if parent is None:
-                if order_col is None:
-                    merged = df.dropDuplicates(keys)
-                else:
-                    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-                    merged = (df.withColumn("_rn", F.row_number().over(w))
-                              .filter(F.col("_rn") == 1).drop("_rn"))
-                rel, rows = self._write_data(merged, 1)
-                return [rel], {"merged_rows": rows}
-            old = self.read(snapshot_id=parent)
-            tagged = old.withColumn("_gen", F.lit(0)).unionByName(
-                df.withColumn("_gen", F.lit(1)))
-            if order_col is not None:
-                w = Window.partitionBy(*keys).orderBy(
-                    F.desc(order_col), F.desc("_gen"))
-            elif mode == "keep_first":
-                w = Window.partitionBy(*keys).orderBy(F.asc("_gen"))
-            else:
-                w = Window.partitionBy(*keys).orderBy(F.desc("_gen"))
-            merged = (tagged.withColumn("_rn", F.row_number().over(w))
-                      .filter(F.col("_rn") == 1).drop("_rn", "_gen"))
-            rel, rows = self._write_data(merged, parent + 1)
+            old = None if parent is None else self.read(snapshot_id=parent)
+            rel, rows = self._write_data(merge_rows(old, df, keys, mode),
+                                         (parent or 0) + 1)
             return [rel], {"merged_rows": rows}
 
         return self._retrying(build, "merge", ts)
@@ -242,7 +225,7 @@ class SnapshotTable:
         """The table at a snapshot (default: current). `as_of_ts` resolves
         the newest snapshot with commit ts ≤ as_of_ts (time travel by the
         caller-supplied clock). Empty table → raises (no schema to
-        fabricate — explicit-contract discipline, sources/jsonl.py)."""
+        fabricate — explicit-contract discipline)."""
         if as_of_ts is not None:
             eligible = [s["snapshot_id"] for s in self.history()
                         if s["ts"] is not None and s["ts"] <= as_of_ts]

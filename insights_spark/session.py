@@ -13,6 +13,12 @@ preemption, worker sys-time > user-time). The fix is the same knob a real
 cluster uses for CPU-heavy Python stages: cap task concurrency with
 ``spark.task.cpus=2`` (local[32] + task.cpus=2 == local[16] throughput,
 measured identical), rather than shrinking executors.
+
+Host sizing: the driver gets a quarter of this host's RAM within [1, 8] GB
+(``$SPARK_GRAFT_DRIVER_MEM`` overrides), leaving room for the Python
+workers; and the workers get the package's parent directory on their
+``PYTHONPATH``, so they unpickle engine objects (a broadcast
+``PolygonIndex``) whatever the driver's cwd is.
 """
 
 from __future__ import annotations
@@ -21,13 +27,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver_memory() -> str:
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(8192, total_mb // 4))}m"
 
 
 def get_spark(
     app_name: str = "insights-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -37,10 +48,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS)
-        )
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -55,7 +62,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver IS the executor — size it like one
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
+        .config("spark.executorEnv.PYTHONPATH", PKG_PARENT)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # runtime bloom-filter join pruning: on a shuffle join with a

@@ -11,7 +11,7 @@ Scale posture: the gates are pure column predicates (pushdown-able,
 codegen'd); exact dedup is one hash shuffle on the normalized text; the
 near-dup pass runs only over gate+dedup SURVIVORS with the hot-gram
 document-frequency cap — at corpus scale swap that stage for
-``minhash_lsh_candidates``/``embedding_lsh_candidates`` verify-after
+``minhash_near_dups``/``embedding_lsh_candidates`` verify-after
 (same contract, sub-quadratic). The whole chain is a single lazy plan —
 one action cleans the corpus.
 """

@@ -224,7 +224,7 @@ def ngram_jaccard_pairs(
     (a single gram shared by 10^6 docs would otherwise materialize 10^12
     join pairs). With None (default) the similarity is exact over all
     grams; at scale either set the cap or run on LSH-candidate pairs only
-    (see minhash_lsh_candidates).
+    (see minhash_near_dups).
     """
     inter, sizes = _gram_overlap(df, n, id_col, text_col, max_gram_df,
                                  F.col("a") < F.col("b"))
@@ -312,32 +312,6 @@ def minhash_signature(
             F.coalesce(F.array_min(hk), F.lit(MOD).cast("long")).alias(f"mh{k}")
         )
     return F.array(*sigs)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """LSH candidate pairs: equal band-slices of the MinHash signature.
-
-    rows/band = num_hashes/bands (bands must divide num_hashes, else
-    ValueError); two docs are candidates iff some band's slice matches
-    exactly. Output: (a, b) distinct, a < b. Shuffle key is
-    (band_idx, band slice) — bounded buckets, no all-pairs.
-    """
-    sig = df.select(
-        F.col(id_col).alias("_id"),
-        minhash_signature_np(num_hashes, n)(F.col(text_col)).alias("_sig"),
-    )
-    # docs with no n-grams share the all-sentinel signature [MOD]*k: every
-    # such doc would match every other in every band (O(empty²) candidate
-    # blowup) and then always fail verification — drop them up front
-    sig = sig.filter(F.element_at("_sig", 1) != MOD)
-    return _band_self_join(_band_explode(sig, _sig_band_keys("_sig", num_hashes, bands)))
 
 
 def minhash_near_dups(

@@ -1,5 +1,5 @@
-"""Tests: boundary rows with holes in the PIP kernel, bbox area/covers
-(F13/F14/J9), hot_changeset centroid PIP (J8/X6)."""
+"""Tests: boundary rows with holes in the PIP kernel, bbox area
+(F13/F14), hot_changeset centroid PIP (J8/X6)."""
 
 from __future__ import annotations
 
@@ -50,17 +50,6 @@ def test_bbox_area_and_mega_filter(spark):
     assert area[1] < bbox.MEGA_CHANGESET_KM2 < area[2]  # the F14 cut
     assert area[3] == 0.0  # both latitudes clamp to -90: a zero-height box
     assert area[4] is None
-
-
-def test_covered_by(spark):
-    df = spark.createDataFrame(
-        [(1, 0.0, 0.0, 1.0, 1.0), (2, -5.0, 0.0, 1.0, 1.0)],
-        "id long, min_lon double, min_lat double, max_lon double, max_lat double",
-    )
-    got = {r["id"]: r["c"] for r in df.select("id", bbox.covered_by(
-        F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"),
-        (-1.0, -1.0, 2.0, 2.0)).alias("c")).collect()}
-    assert got == {1: True, 2: False}
 
 
 def test_hot_changesets_with_country(spark):

@@ -320,24 +320,18 @@ def test_tile_bounds_roundtrip(spark):
             assert (t["x"], t["y"]) == (t["ex"], t["ey"]), (z, t)
 
 
-def test_vectorize_and_wkt(spark):
+def test_vectorize_tiles_bounds(spark):
     from insights_spark.geo import vectorize
 
     df = spark.createDataFrame(
         [(2, 1, 1, 10), (2, 3, 0, 1)], "z int, x int, y int, density long"
     )
-    out = vectorize.quad_wkt(
-        vectorize.vectorize_tiles(df, min_density=5)
-    ).collect()
+    out = vectorize.vectorize_tiles(df, min_density=5).collect()
     assert len(out) == 1
     r = out[0]
     # z2 tile (1,1): west=-90, east=0; y=1 → north=66.51..., south=0
     assert r["west"] == -90.0 and r["east"] == 0.0
     assert abs(r["north"] - 66.513260443) < 1e-8 and r["south"] == 0.0
-    body = r["wkt"].removeprefix("POLYGON((").removesuffix("))")
-    pts = [tuple(float(v) for v in p.split(" ")) for p in body.split(", ")]
-    assert pts[0] == pts[-1] == (r["west"], r["south"])
-    assert (r["east"], r["north"]) in pts and len(pts) == 5
 
 
 def test_tile_regions_matches_union_find(spark):

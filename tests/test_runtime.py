@@ -3,6 +3,10 @@ lineage row counts, salted aggregation equivalence, full pipeline run."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,6 +148,31 @@ def test_top_keys(spark):
     )
     hot = [r["k"] for r in top_keys(df, ["k"], 50).collect()]
     assert hot == [1]
+
+
+def test_workers_import_package_from_any_cwd(tmp_path):
+    """get_spark puts the package on the Python workers' path: a driver
+    started outside the repo with PYTHONPATH unset still collects a UDF
+    result whose workers unpickle a broadcast PolygonIndex. (A count()
+    would prune the UDF and pass without it.)"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from insights_spark import synth
+from insights_spark.geo import pip
+from insights_spark.session import get_spark
+spark = get_spark("cwd-probe", master="local[1]", shuffle_partitions=1)
+pts = spark.createDataFrame([(0.5, 0.5), (170.0, -80.0)], "lon double, lat double")
+print("ROWS", len(pip.assign_country(pts, synth.gen_boundaries()).collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS 2" in out.stdout
 
 
 def test_pipeline_end_to_end_and_resume(spark, tmp_path):

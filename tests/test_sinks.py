@@ -1,8 +1,8 @@
-"""MERGE-semantics sink tests (S10-S12, ST3/ST5 replay safety)."""
+"""MERGE-semantics sink tests (S10-S12, ST3 replay safety)."""
 
 from __future__ import annotations
 
-from insights_spark.runtime import sinks
+from insights_spark.runtime.sinks import ParquetSinks
 
 
 def _read(spark, path):
@@ -11,40 +11,42 @@ def _read(spark, path):
 
 def test_merge_keep_last_is_do_update(spark, tmp_path):
     p = str(tmp_path / "t1")
+    sinks = ParquetSinks(spark)
     df1 = spark.createDataFrame([(1, "a", 10), (2, "b", 10)], "k long, v string, seq long")
-    sinks.merge_parquet(df1, p, ["k"])
+    sinks.merge(df1, p, ["k"])
     df2 = spark.createDataFrame([(2, "B", 20), (3, "c", 20)], "k long, v string, seq long")
-    sinks.merge_parquet(df2, p, ["k"], mode="keep_last")
+    sinks.merge(df2, p, ["k"], mode="keep_last")
     assert _read(spark, p) == {(1,): ("a", 10), (2,): ("B", 20), (3,): ("c", 20)}
 
 
 def test_merge_keep_first_is_do_nothing(spark, tmp_path):
     p = str(tmp_path / "t2")
-    sinks.merge_parquet(
+    sinks = ParquetSinks(spark)
+    sinks.merge(
         spark.createDataFrame([(1, "a", 10)], "k long, v string, seq long"), p, ["k"])
-    sinks.merge_parquet(
+    sinks.merge(
         spark.createDataFrame([(1, "REPLAY", 5), (2, "b", 5)], "k long, v string, seq long"),
         p, ["k"], mode="keep_first")
     assert _read(spark, p) == {(1,): ("a", 10), (2,): ("b", 5)}
 
 
-def test_merge_order_col_makes_replay_commutative(spark, tmp_path):
-    """ST5/README.md:59: applying an OLDER diff after a newer one converges."""
-    p = str(tmp_path / "t3")
-    newer = spark.createDataFrame([(1, "new", 20)], "k long, v string, seq long")
-    older = spark.createDataFrame([(1, "old", 10), (2, "x", 10)], "k long, v string, seq long")
-    sinks.merge_parquet(newer, p, ["k"], order_col="seq")
-    sinks.merge_parquet(older, p, ["k"], order_col="seq")
-    assert _read(spark, p) == {(1,): ("new", 20), (2,): ("x", 10)}
-    # same batches in the opposite order → identical table
-    p2 = str(tmp_path / "t3b")
-    sinks.merge_parquet(older, p2, ["k"], order_col="seq")
-    sinks.merge_parquet(newer, p2, ["k"], order_col="seq")
-    assert _read(spark, p2) == _read(spark, p)
+def test_first_write_into_missing_table_keeps_one_row_per_key(spark, tmp_path):
+    """A missing table is the empty table: the first merge keeps one row
+    per key and the first merge_sum sums the batch's duplicate keys."""
+    sinks = ParquetSinks(spark)
+    p = str(tmp_path / "t5")
+    sinks.merge(spark.createDataFrame([(1, "a", 1), (1, "b", 2)],
+                                      "k long, v string, seq long"), p, ["k"])
+    assert spark.read.parquet(p).count() == 1
+    ps = str(tmp_path / "t6")
+    sinks.merge_sum(spark.createDataFrame([(1, 2), (1, 3)], "k long, n long"),
+                    ps, ["k"], ["n"])
+    assert sorted(tuple(r) for r in spark.read.parquet(ps).collect()) == [(1, 5)]
 
 
 def test_append_dedup(spark, tmp_path):
     p = str(tmp_path / "t4")
+    sinks = ParquetSinks(spark)
     sinks.append_dedup(
         spark.createDataFrame([(1, "a", 1), (1, "a2", 1)], "k long, v string, seq long"),
         p, ["k"])

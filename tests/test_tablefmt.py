@@ -58,21 +58,6 @@ def test_merge_semantics_and_snapshot_isolation(spark, tmp_path):
         (1, "old"), (2, "new"), (3, "new"), (4, "ins")]
 
 
-def test_merge_order_col_commutes(spark, tmp_path):
-    def build(order):
-        path = str(tmp_path / f"t_{order}")
-        t = SnapshotTable(spark, path)
-        df_a = spark.createDataFrame([(1, 2, "v2")], "id long, ver long, v string")
-        df_b = spark.createDataFrame([(1, 5, "v5")], "id long, ver long, v string")
-        first, second = (df_a, df_b) if order == "ab" else (df_b, df_a)
-        t.merge(first, keys=["id"], order_col="ver")
-        t.merge(second, keys=["id"], order_col="ver")
-        return _sorted(t.read().select("id", "ver", "v"))
-
-    # replay-safe: applying the OLDER batch after the newer converges (ST3)
-    assert build("ab") == build("ba") == [(1, 5, "v5")]
-
-
 def _plant_other_writer(t):
     """Hand-commit snap-2 as a racing writer (same dirs as snap-1)."""
     import json

@@ -244,8 +244,6 @@ def test_empty_doc_banding_filters(spark):
     sh = dedup.simhash_near_dups(df, max_hamming=10).collect()
     assert all(r["a"] not in range(10, 16) and r["b"] not in range(10, 16)
                for r in sh)
-    cand = dedup.minhash_lsh_candidates(df).collect()
-    assert {(r["a"], r["b"]) for r in cand} == {(1, 2)}
 
 
 def _sig_band_pairs(spark, sigs, num_hashes, bands):
@@ -288,9 +286,12 @@ def test_bit_band_keys_read_negative_sketch_unsigned(spark):
 
 def test_minhash_near_dups_at_zero_threshold_is_lsh_candidates(spark, docs):
     """Verification at threshold 0 keeps every candidate: the fused pipeline
-    and the standalone candidate generator band identically."""
+    bands exactly like the band join over the standalone signatures."""
     nd = {(r["a"], r["b"]) for r in dedup.minhash_near_dups(docs, threshold=0.0).collect()}
-    cand = {(r["a"], r["b"]) for r in dedup.minhash_lsh_candidates(docs).collect()}
+    sigs = {r["doc_id"]: r["sig"] for r in docs.select(
+        "doc_id", dedup.minhash_signature_np()(F.col("text")).alias("sig")).collect()
+        if r["sig"][0] != dedup.MOD}
+    cand = {(r["a"], r["b"]) for r in _sig_band_pairs(spark, sigs, 16, 4)}
     assert nd == cand and (1, 2) in cand
 
 
@@ -302,7 +303,7 @@ def test_band_geometry_must_tile_the_sketch(spark, docs):
     bad = [
         lambda: dedup.simhash_near_dups(docs, bands=3),
         lambda: dedup.simhash_near_dups(docs, bands=0),
-        lambda: dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=3),
+        lambda: dedup.minhash_near_dups(docs, num_hashes=16, bands=3),
         lambda: dedup.minhash_near_dups(docs, bands=0),
         lambda: dedup.minhash_vs_index(sigs, sigs, bands=5),
         lambda: simsearch.embedding_lsh_candidates(vecs, n_bits=32, bands=5),
