@@ -8,8 +8,8 @@ or local[*]) with max(cores, 8) shuffle partitions. Plans go to
 $PLAN_DIR (default /tmp/insights_plans), outside the repo, so a run never
 overwrites the committed plans/r06/ evidence.
 
---plans-only writes NORMALISED plans: expression ids (#123), [plan_id=N]
-and pythonUDFn numbers are replaced, so plan files of two checkouts diff
+--plans-only writes NORMALISED plans: expression ids (#123), [plan_id=N],
+pythonUDFn and RDD[N] numbers are replaced, so plan files of two checkouts diff
 cleanly — the check for a refactor that should leave plans unchanged.
 
 Usage:
@@ -18,7 +18,9 @@ Usage:
     SPARK_GRAFT_SF_DIR=/tmp/spark_graft_sf1 python bench_extra.py q1
     PLAN_SUFFIX=after python bench_extra.py q1 # write <q>_after.txt
 
-Prints one line per query: name, per-rep seconds, min.
+Prints one line per query: name, per-rep seconds, min. Exits non-zero
+after the loop when a name is not a registered query, so a misspelled
+name cannot silently drop out of a plan diff.
 """
 
 from __future__ import annotations
@@ -42,6 +44,9 @@ _RUN_IDS = (
     (re.compile(r"#\d+"), "#_"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
     (re.compile(r"pythonUDF\d+"), "pythonUDF_"),
+    # RDD ids count every RDD the process made before, so they shift with
+    # the jobs earlier queries ran
+    (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
 )
 
 
@@ -72,8 +77,9 @@ def main() -> None:
     force(qs["semi_join"](spark, sf_dir))
     force(qs["pip_countries"](spark, sf_dir))
 
+    unknown = [name for name in args if name not in qs]
     for name in args:
-        if name not in qs:
+        if name in unknown:
             print(f"{name}: UNKNOWN")
             continue
         if not no_plans:
@@ -96,6 +102,8 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         print(f"{name}: {times} min={min(times)}")
     spark.stop()
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
 
 
 if __name__ == "__main__":

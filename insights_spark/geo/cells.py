@@ -183,31 +183,41 @@ def hex_ring_ids(cell: int, rings: int = 1) -> list[int]:
     return out
 
 
-def hex_ring_offsets(rings: int = 1) -> list[int]:
-    """Packed-id DELTAS of the k-ring neighborhood (same cells, same order
-    as ``hex_ring_ids``): the packed axial id is linear in (q, r) —
-    hex_encode(res, q+dq, r+dr) = cell + (dq << 28) + dr — so the ring fan
-    is pure int64 addition. This is what lets the ring explode run as a
-    JVM codegen expression (explode over cell + literal offsets) instead
-    of a per-row Python UDF."""
-    out = []
+def _hex_disk(rings: int):
+    """(hex distance, packed-id delta) over the k-ring, in hex_ring_ids
+    order: the packed axial id is linear in (q, r) —
+    hex_encode(res, q+dq, r+dr) = cell + (dq << 28) + dr."""
     for dq in range(-rings, rings + 1):
         for dr in range(max(-rings, -dq - rings), min(rings, -dq + rings) + 1):
-            out.append((dq << 28) + dr)
-    return out
+            yield (abs(dq) + abs(dr) + abs(dq + dr)) // 2, (dq << 28) + dr
+
+
+def hex_ring_offsets(rings: int = 1) -> list[int]:
+    """Packed-id DELTAS of the k-ring neighborhood (same cells, same order
+    as ``hex_ring_ids``), so the ring fan is pure int64 addition. This is
+    what lets the ring explode run as a JVM codegen expression (explode
+    over cell + literal offsets) instead of a per-row Python UDF."""
+    return [o for _, o in _hex_disk(rings)]
+
+
+def hex_ring(h: int) -> list[int]:
+    """Packed-id deltas of the cells at hex distance EXACTLY ``h`` (6·h of
+    them; ``[0]`` at h=0). The set is closed under negation, so ``o > 0``
+    keeps one of each opposite pair."""
+    return [o for d, o in _hex_disk(h) if d == h]
+
+
+def hex_fan(cell: Column, offsets: list[int]) -> Column:
+    """Array column of ``cell`` shifted by each packed-id delta."""
+    return F.array(*[cell + F.lit(o).cast("long") for o in offsets])
 
 
 def hex_ring_col(cell_col, rings: int = 1):
     """Column of the k-ring cell ids of ``cell_col`` (NULL-safe: NULL cell
     → NULL array, which explode() drops — same rows as the old UDF's []).
     Value-identical to hex_ring_ids applied per row."""
-    arr = F.array(*[
-        (F.col(cell_col) if isinstance(cell_col, str) else cell_col)
-        + F.lit(o).cast("long")
-        for o in hex_ring_offsets(rings)
-    ])
     c = F.col(cell_col) if isinstance(cell_col, str) else cell_col
-    return F.when(c.isNotNull(), arr)
+    return F.when(c.isNotNull(), hex_fan(c, hex_ring_offsets(rings)))
 
 
 def hex_center(cell: int) -> tuple[float, float]:
@@ -219,6 +229,16 @@ def hex_center(cell: int) -> tuple[float, float]:
     lat = r * size * 1.5
     lon = (q + r / 2.0) * size * _SQRT3
     return lon, lat
+
+
+def hex_center_col(cell: Column, res: int) -> tuple[Column, Column]:
+    """Column form of ``hex_center`` for cells of resolution ``res``:
+    (lon, lat) of the cell's center."""
+    s = hex_edge_deg(res)
+    mask = (1 << 28) - 1
+    q = F.shiftrightunsigned(cell, 28).bitwiseAND(F.lit(mask)) - F.lit(_HEX_OFF)
+    r = cell.bitwiseAND(F.lit(mask)) - F.lit(_HEX_OFF)
+    return F.lit(_SQRT3 * s) * (q + r / F.lit(2.0)), F.lit(1.5 * s) * r
 
 
 # --- Spark-facing wrappers ---------------------------------------------

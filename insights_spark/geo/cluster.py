@@ -19,10 +19,10 @@ OCCUPIED-CELL rollup instead:
 - noise cells (neither) are simply absent from the output.
 
 Neighbor ids are pure BIGINT arithmetic on the packed axial cell id
-(``cell + dq·2^28 + dr``, see geo/cells.py:170 and geo/smooth.py), so the
-whole pass — adjacency, components, border attachment — is replicated
-verbatim by the ANSI-SQL oracle (recursive-CTE reachability). No UDF, no
-geometry library.
+(``cell`` plus each ``cells.hex_ring(1)`` delta), so the whole pass —
+adjacency, components, border attachment — is replicated verbatim by the
+ANSI-SQL oracle (recursive-CTE reachability). No UDF, no geometry
+library.
 
 Scale posture (100 TB): the point→cell rollup is the only pass over the
 event table; everything after runs on the occupied-cell table, which is
@@ -39,17 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import cells
 from .vectorize import star_cc_labels
-
-#: the six ring-1 axial neighbor offsets on the packed (res,q,r) id
-NBR_OFFSETS = [
-    (1 << 28),
-    -(1 << 28),
-    1,
-    -1,
-    (1 << 28) - 1,
-    -((1 << 28) - 1),
-]
 
 
 def cell_dbscan(
@@ -75,7 +66,7 @@ def cell_dbscan(
         F.col(cnt_col).cast("long").alias("n"),
     ).persist()
     core = cnts.filter(F.col("n") >= F.lit(minpts))
-    nbrs = F.array(*[F.col("cell") + F.lit(o).cast("long") for o in NBR_OFFSETS])
+    nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = core.select(
         F.col("cell").alias("id"), F.explode(nbrs).alias("nbr_id")
     )
@@ -140,7 +131,7 @@ def region_shape(
         F.col(cell_col).cast("long").alias("cell"),
         F.col(cnt_col).cast("long").alias("n"),
     ).persist()
-    nbrs = F.array(*[F.col("cell") + F.lit(o).cast("long") for o in NBR_OFFSETS])
+    nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = cnts.select(F.col("cell").alias("id"), F.explode(nbrs).alias("nbr_id"))
     edges = fan.join(cnts.select(F.col("cell").alias("nbr_id")), "nbr_id").persist()
     # occupied-neighbor degree per cell (0 for isolated cells, via left join)

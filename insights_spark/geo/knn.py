@@ -1,19 +1,25 @@
 """k-nearest-neighbor over point sets (changeset centroids).
 
-North-rule operator (SURVEY §2.11). Two physical strategies:
+North-rule operator (SURVEY §2.11). Distance = squared planar lon/lat
+distance, ties broken by neighbor id — fully deterministic, identical
+arithmetic in ANSI SQL.
 
-- ``knn_exact``: brute-force top-k — the correctness baseline and the
-  DuckDB-oracle-matchable path. Implemented as a broadcast nested-loop
-  join (small neighbor set broadcast to the fact side) + window top-k.
-  Distance = squared planar lon/lat distance, ties broken by neighbor id —
-  fully deterministic, identical arithmetic in ANSI SQL.
+- ``knn_exact``: brute-force top-k — the correctness baseline that tests
+  compare against. A broadcast nested-loop join (neighbor set broadcast
+  to the fact side) + window top-k.
 
-- ``knn_cell_local``: the 100 TB path — points are hex-cell keyed, each
-  cell + its k-ring neighborhood is joined cell-locally (pure JVM after
-  the cell encode). One shuffle on cell id; no O(n²) blow-up. With
-  ``exact=True`` results are CERTIFIED equal to brute force: queries whose
-  k-th candidate distance exceeds the ring-coverage guarantee fall back to
-  an exact pass over just those queries (small side broadcast).
+- ``knn_cell_local`` (self-join) and ``knn_join`` (two tables) share ONE
+  certified body, ``_certified_topk`` — the partition-or-broadcast choice
+  made once: points are hex-cell keyed and each cell + its k-ring is
+  joined cell-locally (pure JVM after the cell encode, one shuffle on the
+  cell id, no O(n²) blow-up). A query whose k-th candidate lies strictly
+  inside the ring-coverage radius is CERTIFIED; the uncertified tail runs
+  a brute-force pass with that small query side broadcast. The output
+  equals ``knn_exact``.
+
+- ``within_distance`` / ``ripley_k`` (and ``stjoin.st_within``) pick the
+  resolution whose ring coverage certifies the radius up front, through
+  the one guard ``certified_res``.
 """
 
 from __future__ import annotations
@@ -26,13 +32,29 @@ from pyspark.sql.window import Window
 from . import cells
 
 
+def dist2(lon: str = "lon", lat: str = "lat"):
+    """Squared planar degree distance from (lon, lat) to the candidate
+    columns (_nlon, _nlat) — the one distance every kNN and range join
+    here ranks and filters on."""
+    return (F.col(lon) - F.col("_nlon")) ** 2 + (F.col(lat) - F.col("_nlat")) ** 2
+
+
+def _xy(df: DataFrame, id_col: str, lon_col: str = "lon",
+        lat_col: str = "lat") -> DataFrame:
+    """(id: long, lon: double, lat: double) of a point table."""
+    return df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(lon_col).cast("double").alias("lon"),
+        F.col(lat_col).cast("double").alias("lat"),
+    )
+
+
 def knn_exact(
     points: DataFrame,
     k: int,
     id_col: str = "id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    neighbors: DataFrame | None = None,
 ) -> DataFrame:
     """Exact kNN: for each point, its k nearest neighbors (excluding self).
 
@@ -40,7 +62,7 @@ def knn_exact(
     the neighbor set fits in executor memory; for self-kNN over a huge set
     use ``knn_cell_local``.
     """
-    nb = (neighbors or points).select(
+    nb = points.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(lon_col).alias("_nlon"),
         F.col(lat_col).alias("_nlat"),
@@ -50,27 +72,27 @@ def knn_exact(
         F.col(lat_col).alias("_qlat"),
     )
     joined = q.join(F.broadcast(nb), F.col("id") != F.col("neighbor_id"))
-    d2 = (F.col("_qlon") - F.col("_nlon")) ** 2 + (F.col("_qlat") - F.col("_nlat")) ** 2
     w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
     return (
-        joined.withColumn("dist2", d2)
+        joined.withColumn("dist2", dist2("_qlon", "_qlat"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("id", "neighbor_id", "dist2", "rank")
     )
 
 
-def _cell_pairs(queries, candidates, res: int, rings: int,
-                exclude_self: bool = True):
+def _cell_pairs(queries, candidates, res: int, rings: int):
     """(id, neighbor_id, dist2) pairs within `rings` hex rings at `res`.
-    ``exclude_self=False`` for TWO-TABLE joins, where equal ids are
-    distinct entities (a customer and an event sharing key 5)."""
+    Only the self-join (``candidates is queries``) drops id == neighbor_id:
+    across two tables equal ids are distinct entities (a customer and an
+    event sharing key 5)."""
     # use_h3=False: hex_ring_ids/cert_radius_deg assume the axial bit layout;
     # real H3 ids would break the ring join and the coverage certificate.
     q = queries.withColumn(
         "cell", cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
     )
-    if candidates is queries:
+    self_join = candidates is queries
+    if self_join:
         # self-kNN: encode once, persist — the query and candidate branches
         # would otherwise each run the cell UDF over every point
         q = q.persist()
@@ -103,10 +125,9 @@ def _cell_pairs(queries, candidates, res: int, rings: int,
         .repartition(n_part, "cell")
         .join(cand.repartition(n_part, "cell"), "cell")
     )
-    if exclude_self:
+    if self_join:
         joined = joined.filter(F.col("id") != F.col("neighbor_id"))
-    d2 = (F.col("lon") - F.col("_nlon")) ** 2 + (F.col("lat") - F.col("_nlat")) ** 2
-    return joined.withColumn("dist2", d2).select("id", "neighbor_id", "dist2")
+    return joined.withColumn("dist2", dist2()).select("id", "neighbor_id", "dist2")
 
 
 def _cell_pairs_half(pts, res: int, rings: int):
@@ -129,7 +150,7 @@ def _cell_pairs_half(pts, res: int, rings: int):
     ).persist()
     q = enc.select("cell", "id", "lon", "lat")
     pos = [o for o in cells.hex_ring_offsets(rings) if o > 0]
-    fan = F.array(*[F.col("cell") + F.lit(o).cast("long") for o in pos])
+    fan = cells.hex_fan(F.col("cell"), pos)
     cand = enc.select(
         F.explode(F.when(F.col("cell").isNotNull(), fan)).alias("cell"),
         F.col("id").alias("neighbor_id"),
@@ -152,11 +173,9 @@ def _cell_pairs_half(pts, res: int, rings: int):
         ).repartition(n_part, "cell"),
         "cell",
     ).filter(F.col("id") < F.col("neighbor_id"))
-    d2 = (F.col("lon") - F.col("_nlon")) ** 2 \
-        + (F.col("lat") - F.col("_nlat")) ** 2
     return (
         cross.unionByName(same)
-        .withColumn("dist2", d2)
+        .withColumn("dist2", dist2())
         .select(
             F.least("id", "neighbor_id").alias("a"),
             F.greatest("id", "neighbor_id").alias("b"),
@@ -189,20 +208,7 @@ def within_distance(
     only. Hot cells skew exactly like ``knn_cell_local`` — AQE skew-join
     handles moderate cases; salt the cell key for pathological ones.
     """
-    if cert_radius_deg(0, rings) < radius_deg:
-        raise ValueError(
-            f"radius {radius_deg}° exceeds coverage of rings={rings} even at "
-            f"res=0 ({cert_radius_deg(0, rings)}°); raise rings"
-        )
-    if res is None:
-        res = 0
-        while res < 15 and cert_radius_deg(res + 1, rings) >= radius_deg:
-            res += 1
-    elif cert_radius_deg(res, rings) < radius_deg:
-        raise ValueError(
-            f"cert_radius_deg({res}, {rings}) = {cert_radius_deg(res, rings)} "
-            f"< radius {radius_deg}: candidate set would be incomplete"
-        )
+    res = certified_res(radius_deg, rings, res)
     pts = points.select(F.col(id_col).alias("id"), "lon", "lat")
     # half-fan: each unordered pair joined once (see _cell_pairs_half)
     return _cell_pairs_half(pts, res, rings).filter(
@@ -222,6 +228,29 @@ def cert_radius_deg(res: int, rings: int) -> float:
     """
     s = cells.hex_edge_deg(res)
     return s * (1.5 * rings - 0.5)
+
+
+def certified_res(radius_deg: float, rings: int, res: int | None) -> int:
+    """The resolution of a ring search that certifies ``radius_deg``:
+    ``res`` itself, or when None the FINEST resolution (≤ 15) with
+    ``cert_radius_deg(res, rings) ≥ radius_deg`` — finest ⇒ smallest
+    buckets ⇒ cheapest shuffle. Raises ValueError when the radius exceeds
+    the res-0 coverage of ``rings`` or the given ``res`` is too fine."""
+    if cert_radius_deg(0, rings) < radius_deg:
+        raise ValueError(
+            f"radius {radius_deg}° exceeds coverage of rings={rings} even at "
+            f"res=0 ({cert_radius_deg(0, rings)}°); raise rings"
+        )
+    if res is None:
+        res = 0
+        while res < 15 and cert_radius_deg(res + 1, rings) >= radius_deg:
+            res += 1
+    elif cert_radius_deg(res, rings) < radius_deg:
+        raise ValueError(
+            f"cert_radius_deg({res}, {rings}) = {cert_radius_deg(res, rings)} "
+            f"< radius {radius_deg}: candidate set would be incomplete"
+        )
+    return res
 
 
 def ripley_k(
@@ -255,20 +284,7 @@ def ripley_k(
     if not radii_deg:
         raise ValueError("radii_deg must be non-empty")
     rmax = max(radii_deg)
-    if cert_radius_deg(0, rings) < rmax:
-        raise ValueError(
-            f"max radius {rmax}° exceeds coverage of rings={rings} even at "
-            f"res=0 ({cert_radius_deg(0, rings)}°); raise rings"
-        )
-    if res is None:
-        res = 0
-        while res < 15 and cert_radius_deg(res + 1, rings) >= rmax:
-            res += 1
-    elif cert_radius_deg(res, rings) < rmax:
-        raise ValueError(
-            f"cert_radius_deg({res}, {rings}) = {cert_radius_deg(res, rings)} "
-            f"< max radius {rmax}: candidate set would be incomplete"
-        )
+    res = certified_res(rmax, rings, res)
     pts = points.select(F.col(id_col).alias("id"), "lon", "lat")
     # half-fan: each unordered pair joined once (see _cell_pairs_half)
     pairs = _cell_pairs_half(pts, res, rings).filter(
@@ -367,138 +383,36 @@ def auto_cell_res(
     return max_res
 
 
-def knn_cell_local(
-    points: DataFrame,
-    k: int,
-    id_col: str = "id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = 6,
-    rings: int = 1,
-    exact: bool = True,
-) -> DataFrame:
-    """Cell-local kNN: hex-bin points, replicate candidates into their
-    k-ring, equi-join queries to candidates on cell id, window top-k.
+def _certified_topk(q, c, k: int, res: int | None, rings: int) -> DataFrame:
+    """Certified-exact top-k candidates of ``c`` for every query of ``q``
+    (both (id, lon, lat)); ``q is c`` is the self-join, which excludes
+    id == neighbor_id. Output: (id, neighbor_id, dist2, rank).
 
-    Pure JVM after the cell/ring encoding (one Arrow-batch pass) — no
-    per-group Python, so sparse cells cost nothing and dense cells are a
-    plain shuffle key AQE can split. Pair count = Σ_cell q_c × cand_c
-    (ring-bounded), never all-pairs.
-
-    ``exact=True`` (default) makes the result PROVABLY equal to
-    ``knn_exact``: a first-pass query is *certified* iff it found ≥ k
-    candidates and its k-th distance is strictly inside
-    ``cert_radius_deg(res, rings)`` — then every true neighbor is already
-    in its candidate set (see cert_radius_deg). Uncertified queries
-    (sparse regions, ring-edge ties) re-run as a brute-force pass with the
-    SMALL query side broadcast against all candidates. Dense regions pay
+    A first-pass query is *certified* iff it found ≥ k candidates and its
+    k-th distance is strictly inside ``cert_radius_deg(res, rings)`` —
+    then every true neighbor is already in its candidate set (see
+    cert_radius_deg). Uncertified queries (sparse regions, ring-edge ties)
+    re-run as a brute-force pass with the SMALL query side broadcast
+    against all candidates — the reverse of knn_exact. Dense regions pay
     one cell-keyed shuffle; the fallback carries only the sparse tail, so
-    at scale its broadcast stays bounded when (res, rings) are chosen for
-    the corpus density. With ``exact=False`` only the first pass runs
-    (ring-bounded recall, cheapest possible).
+    its broadcast stays bounded when (res, rings) match the candidate
+    density. ``res=None`` picks it from that density (auto_cell_res):
+    certified results are res-INVARIANT, so the pick only shapes the
+    plan, never the answer.
 
-    Intermediates are persisted for the duration of the returned plan
-    (shared subtrees would re-run the cell encode + join per branch).
-    The CacheManager holds them until ``unpersist()`` or
+    The top-k pass feeds both the certification probe and the certified
+    output, so it is persisted for the duration of the returned plan. The
+    CacheManager holds it until ``unpersist()`` or
     ``spark.catalog.clearCache()``: the ContextCleaner does not reclaim
     persisted DataFrames.
     """
-    from pyspark.sql.window import Window
-
-    pts = points.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(lon_col).cast("double").alias("lon"),
-        F.col(lat_col).cast("double").alias("lat"),
-    )
-    if res is None:
-        # density-matched resolution (`res=None`): certified-exact results
-        # are res-INVARIANT, so the pick only shapes the plan, never the
-        # answer — see auto_cell_res for the scale argument
-        res = auto_cell_res(pts, k=k)
-    pairs = _cell_pairs(pts, pts, res, rings)
-    w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
-    first = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "dist2", F.col("rank").cast("int").alias("rank"))
-    )
-    if not exact:
-        return first
-
-    # certification: top-k feeds the status probe AND the certified output
-    first = first.persist()
-    cert2 = F.lit(cert_radius_deg(res, rings) ** 2)
-    ok_ids = (
-        first.groupBy("id")
-        .agg(F.count(F.lit(1)).alias("_n"), F.max("dist2").alias("_dk2"))
-        .filter((F.col("_n") >= k) & (F.col("_dk2") < cert2))
-        .select("id")
-    )
-    certified = first.join(ok_ids, "id", "left_semi")
-
-    # fallback: brute force for the uncertified tail — broadcast the SMALL
-    # query side, stream the full candidate set (the reverse of knn_exact)
-    shortq = pts.join(ok_ids, "id", "left_anti").select(
-        F.col("id"), F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat")
-    )
-    nb = pts.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("lon").alias("_nlon"), F.col("lat").alias("_nlat"),
-    )
-    d2 = (F.col("_qlon") - F.col("_nlon")) ** 2 + (F.col("_qlat") - F.col("_nlat")) ** 2
-    fb = (
-        nb.join(F.broadcast(shortq), F.col("id") != F.col("neighbor_id"))
-        .withColumn("dist2", d2)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "dist2", "rank")
-    )
-    return certified.unionByName(fb)
-
-
-def knn_join(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int,
-    q_id: str = "id",
-    c_id: str = "id",
-    res: int | None = None,
-    rings: int = 1,
-) -> DataFrame:
-    """TWO-TABLE certified-exact kNN join — for every query point, its k
-    nearest CANDIDATE points ("which events happened nearest each
-    customer"): the generalization of the self-join ``knn_cell_local``,
-    sharing its cell/ring machinery, certification rule and brute-force
-    fallback. Unlike the self-join, equal ids across the two tables are
-    distinct entities (no self-exclusion), and the resolution auto-pick
-    tracks the CANDIDATE density — buckets must bound candidate
-    population, the query side only keys the lookup.
-
-    Certification is per query, identical logic to knn_cell_local: found
-    ≥ k candidates AND k-th distance strictly inside
-    cert_radius_deg(res, rings) ⇒ the ring-bounded candidate set provably
-    contains every true neighbor. The uncertified tail (sparse regions)
-    re-runs as a broadcast brute force — bounded when (res, rings) match
-    the candidate density. Output: (id, neighbor_id, dist2, rank).
-    """
-    from pyspark.sql.window import Window
-
-    q = queries.select(
-        F.col(q_id).cast("long").alias("id"),
-        F.col("lon").cast("double"),
-        F.col("lat").cast("double"),
-    )
-    c = candidates.select(
-        F.col(c_id).cast("long").alias("id"),
-        F.col("lon").cast("double"),
-        F.col("lat").cast("double"),
-    )
+    self_join = q is c
     if res is None:
         res = auto_cell_res(c, k=k)
-    pairs = _cell_pairs(q, c, res, rings, exclude_self=False)
     w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
     first = (
-        pairs.withColumn("rank", F.row_number().over(w))
+        _cell_pairs(q, c, res, rings)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("id", "neighbor_id", "dist2",
                 F.col("rank").cast("int").alias("rank"))
@@ -519,16 +433,62 @@ def knn_join(
         F.col("id").alias("neighbor_id"),
         F.col("lon").alias("_nlon"), F.col("lat").alias("_nlat"),
     )
-    d2 = (F.col("_qlon") - F.col("_nlon")) ** 2 \
-        + (F.col("_qlat") - F.col("_nlat")) ** 2
+    tail = (
+        nb.join(F.broadcast(shortq), F.col("id") != F.col("neighbor_id"))
+        if self_join else nb.crossJoin(F.broadcast(shortq))
+    )
     fb = (
-        nb.crossJoin(F.broadcast(shortq))
-        .withColumn("dist2", d2)
+        tail.withColumn("dist2", dist2("_qlon", "_qlat"))
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
         .select("id", "neighbor_id", "dist2", "rank")
     )
     return certified.unionByName(fb)
+
+
+def knn_cell_local(
+    points: DataFrame,
+    k: int,
+    id_col: str = "id",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res: int | None = 6,
+    rings: int = 1,
+) -> DataFrame:
+    """Cell-local self-kNN: hex-bin points, replicate candidates into their
+    k-ring, equi-join queries to candidates on cell id, window top-k —
+    certified equal to ``knn_exact`` (see _certified_topk).
+
+    Pure JVM after the cell/ring encoding (one Arrow-batch pass) — no
+    per-group Python, so sparse cells cost nothing and dense cells are a
+    plain shuffle key AQE can split. Pair count = Σ_cell q_c × cand_c
+    (ring-bounded), never all-pairs. ``res=None`` matches the resolution
+    to the point density (auto_cell_res).
+    """
+    pts = _xy(points, id_col, lon_col, lat_col)
+    return _certified_topk(pts, pts, k, res, rings)
+
+
+def knn_join(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int,
+    q_id: str = "id",
+    c_id: str = "id",
+    res: int | None = None,
+    rings: int = 1,
+) -> DataFrame:
+    """TWO-TABLE certified-exact kNN join — for every query point, its k
+    nearest CANDIDATE points ("which events happened nearest each
+    customer"): the generalization of the self-join ``knn_cell_local``
+    through the same certified body (_certified_topk). Equal ids across
+    the two tables are distinct entities (no self-exclusion), and the
+    resolution auto-pick tracks the CANDIDATE density — buckets must bound
+    candidate population, the query side only keys the lookup. Output:
+    (id, neighbor_id, dist2, rank).
+    """
+    return _certified_topk(_xy(queries, q_id), _xy(candidates, c_id), k,
+                           res, rings)
 
 
 def nn_cell_res(
@@ -601,7 +561,7 @@ def nn_distance_hist(
     associative, map-side combined, NO per-query window sort anywhere.
     A query is CERTIFIED when its candidate minimum lies strictly inside
     ``cert_radius_deg(res, rings)`` (then no point outside the rings can
-    be nearer); the uncertified tail re-runs two resolutions coarser
+    be nearer); the uncertified tail re-runs one resolution coarser
     (7× the cell area) until res 0, and only the res-0 remnant — points
     whose nearest neighbor is beyond 2.5·edge₀, i.e. continental-scale
     isolates — pays a broadcast min against the full set. Each level's
@@ -640,18 +600,12 @@ def nn_distance_hist(
         import numpy as np
 
         mask = (lon.notna() & lat.notna()).to_numpy()
-        lons, lats = lon.to_numpy(), lat.to_numpy()
-        cols = [cells.hex_cell_id(lons[mask], lats[mask], lv, use_h3=False)
-                for lv in levels]
-        out = []
-        j = 0
-        for i in range(len(lons)):
-            if mask[i]:
-                out.append([int(c[j]) for c in cols])
-                j += 1
-            else:
-                out.append(None)
-        return pd.Series(out)
+        lons, lats = lon.to_numpy()[mask], lat.to_numpy()[mask]
+        ids = np.zeros((len(mask), len(levels)), dtype=np.int64)
+        ids[mask] = np.column_stack(
+            [cells.hex_cell_id(lons, lats, lv, use_h3=False) for lv in levels]
+        )
+        return pd.Series(ids.tolist()).where(mask, None)
 
     cand = pts.withColumn("_cells", all_cells("lon", "lat")).persist()
 
@@ -674,9 +628,7 @@ def nn_distance_hist(
         joined = ring_fan.join(cand_lv, "cell").filter(
             F.col("id") != F.col("neighbor_id")
         )
-        d2c = (F.col("lon") - F.col("_nlon")) ** 2 \
-            + (F.col("lat") - F.col("_nlat")) ** 2
-        best = joined.withColumn("dist2", d2c).groupBy("id").agg(
+        best = joined.withColumn("dist2", dist2()).groupBy("id").agg(
             F.min(F.struct("dist2", "neighbor_id")).alias("b")
         )
         r2 = cert_radius_deg(lv, rings) ** 2
@@ -688,17 +640,15 @@ def nn_distance_hist(
             .localCheckpoint()
         if remaining.isEmpty():
             break
-    if not remaining.isEmpty():
+    else:
         # continental-scale isolates only: broadcast the tiny remnant
         nb = pts.select(F.col("id").alias("neighbor_id"),
                         F.col("lon").alias("_nlon"),
                         F.col("lat").alias("_nlat"))
-        d2 = (F.col("lon") - F.col("_nlon")) ** 2 \
-            + (F.col("lat") - F.col("_nlat")) ** 2
         rem = (
             F.broadcast(remaining)
             .join(nb, F.col("id") != F.col("neighbor_id"))
-            .withColumn("dist2", d2)
+            .withColumn("dist2", dist2())
             .groupBy("id")
             .agg(F.min(F.struct("dist2", "neighbor_id")).alias("b"))
             .select("id", F.col("b.neighbor_id").alias("neighbor_id"))

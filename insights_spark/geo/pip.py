@@ -207,8 +207,8 @@ def assign_country_cells(
     from . import cells
 
     spark = df.sparkSession
-    s = cells.hex_edge_deg(res)
-    pad = s * 1.001  # strictly ≥ circumradius: conservative on both sides
+    # strictly ≥ circumradius: conservative on both sides
+    pad = cells.hex_edge_deg(res) * 1.001
     bx = spark.createDataFrame(
         boxes,
         "country string, priority boolean, lon0 double, lat0 double, "
@@ -223,13 +223,7 @@ def assign_country_cells(
     cover = cells.hex_cover_bbox(
         bx, res, lon0="clon0", lat0="clat0", lon1="clon1", lat1="clat1"
     )
-    mask = (1 << 28) - 1
-    q = F.shiftrightunsigned(F.col("cell"), 28).bitwiseAND(F.lit(mask)) - F.lit(
-        cells._HEX_OFF
-    )
-    r = F.col("cell").bitwiseAND(F.lit(mask)) - F.lit(cells._HEX_OFF)
-    clat = F.lit(1.5 * s) * r
-    clon = F.lit(cells._SQRT3 * s) * (q + r / F.lit(2.0))
+    clon, clat = cells.hex_center_col(F.col("cell"), res)
     cover = cover.withColumn(
         "_interior",
         (clon >= F.col("lon0") + F.lit(pad))
@@ -240,8 +234,8 @@ def assign_country_cells(
              "_interior")
 
     pts = df.withColumn(
-        # use_h3=False: the cover (hex_cover_bbox) and the interior decode
-        # above are axial-formula-specific — a real H3 id would never match.
+        # use_h3=False: the cover (hex_cover_bbox) and the center decode
+        # (hex_center_col) are axial-formula-specific — a real H3 id would never match.
         "_cell", cells.hex_udf(res, use_h3=False)(F.col(lon_col), F.col(lat_col))
     )
     cand = pts.join(F.broadcast(cover), pts["_cell"] == cover["cell"])

@@ -10,12 +10,11 @@ neighborhood" primitive behind edit-density heatmaps and anomaly maps
 activity", galaxy-api project_stats; the focal/neighbor formulation is
 the raster generalization Spark can run at planet scale).
 
-Why this is cheap and exact: the axial cell id packs (res, q, r) as
-``(res << 56) | ((q + 2^26) << 28) | (r + 2^26)`` (geo/cells.py:170), so
-the six ring-1 neighbors are ``cell + dq*2^28 + dr`` for the axial offset
-set {(1,0),(-1,0),(0,1),(0,-1),(1,-1),(-1,1)} — pure BIGINT arithmetic,
-codegen'd JVM-side, replicated verbatim by the ANSI-SQL oracle. No UDF,
-no geometry library.
+Why this is cheap and exact: the packed axial cell id is linear in its
+(q, r) coordinates, so a cell's ring-h neighbors are ``cell`` plus each
+packed delta of ``cells.hex_ring(h)`` — pure BIGINT arithmetic, codegen'd
+JVM-side, replicated verbatim by the ANSI-SQL oracle. No UDF, no geometry
+library.
 
 Scale posture (100 TB): the input is already the per-cell rollup —
 bounded by the number of OCCUPIED cells, orders of magnitude smaller than
@@ -33,8 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: ring-1 axial offsets — the cell itself plus its six hex neighbors
-RING1 = [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1), (1, -1), (-1, 1)]
+from . import cells
 
 
 def hex_focal_smooth(
@@ -74,12 +72,7 @@ def hex_focal_smooth(
         F.col(cell_col).cast("long").alias("_c"),
         F.col(cnt_col).cast("long").alias("_n"),
     )
-    targets = F.array(
-        *[
-            F.col("_c") + F.lit(dq * (1 << 28) + dr).cast("long")
-            for (dq, dr) in RING1
-        ]
-    )
+    targets = cells.hex_fan(F.col("_c"), cells.hex_ring_offsets(1))
     contrib = src.select(
         F.explode(targets).alias("_t"), F.col("_n").alias("_contrib")
     )
@@ -128,8 +121,6 @@ def decayed_cell_scores(
     Scale: one (cell, bucket) rollup then one cell rollup — both
     decomposable with map-side combine; output bounded by occupied cells.
     """
-    from . import cells as _c
-
     age = F.lit(int(now_epoch_s)) - F.col(ts_col).cast("timestamp").cast("long")
     # exact integer floor-division (subtract the pmod remainder first):
     # float division + floor can misround within an ulp of a bucket edge
@@ -143,7 +134,7 @@ def decayed_cell_scores(
     )
     per = (
         points.groupBy(
-            _c.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")).alias(
+            cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")).alias(
                 "cell"
             ),
             bucket.alias("_b"),
@@ -178,13 +169,7 @@ def frontier_cells(
         F.col(cell_col).cast("long").alias("cell"),
         F.col(cnt_col).cast("long").alias("n"),
     )
-    nbrs = F.array(
-        *[
-            F.col("cell") + F.lit(dq * (1 << 28) + dr).cast("long")
-            for (dq, dr) in RING1
-            if (dq, dr) != (0, 0)
-        ]
-    )
+    nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = occ.select("cell", "n", F.explode(nbrs).alias("_nb"))
     empty = fan.join(
         occ.select(F.col("cell").alias("_nb")), "_nb", "left_anti"
@@ -237,13 +222,7 @@ def moran_i_exact(
         "cell",
         (F.col("n_cells") * F.col("n") - F.col("s_tot")).alias("dev"),
     )
-    nbrs = F.array(
-        *[
-            F.col("cell") + F.lit(dq * (1 << 28) + dr).cast("long")
-            for (dq, dr) in RING1
-            if (dq, dr) != (0, 0)
-        ]
-    )
+    nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = base.select("dev", F.explode(nbrs).alias("_nb"))
     pairs = fan.join(
         base.select(F.col("cell").alias("_nb"), F.col("dev").alias("dev_b")),
@@ -324,12 +303,7 @@ def getis_ord_exact(
         F.sum("x").cast("long").alias("s_tot"),
         F.sum(F.col("x") * F.col("x")).cast("long").alias("q_tot"),
     )
-    targets = F.array(
-        *[
-            F.col("cell") + F.lit(dq * (1 << 28) + dr).cast("long")
-            for (dq, dr) in RING1
-        ]
-    )
+    targets = cells.hex_fan(F.col("cell"), cells.hex_ring_offsets(1))
     contrib = occ.select(F.explode(targets).alias("_t"), F.col("x").alias("_xj"))
     ring = contrib.groupBy("_t").agg(
         F.count(F.lit(1)).cast("long").alias("ring_w"),
@@ -362,13 +336,6 @@ def getis_ord_exact(
         gi_num.cast("long").alias("gi_num"),
         ((gi_num > 0) & (lhs > rhs)).cast("int").alias("is_hot"),
     )
-
-
-#: ring-2 axial offsets — the 12 cells at hex distance exactly 2
-RING2 = [
-    (-2, 0), (-2, 1), (-2, 2), (-1, -1), (-1, 2), (0, -2),
-    (0, 2), (1, -2), (1, 1), (2, -2), (2, -1), (2, 0),
-]
 
 
 def idw_fill(
@@ -414,13 +381,11 @@ def idw_fill(
     fan = F.array(
         *[
             F.struct(
-                (F.col("cell") + F.lit(dq * (1 << 28) + dr).cast("long")
-                 ).alias("t"),
-                F.lit(2 if (dq, dr) in RING1 else 1).alias("w"),
+                (F.col("cell") + F.lit(o).cast("long")).alias("t"),
+                F.lit(3 - h).alias("w"),
             )
-            for (dq, dr) in (
-                [o for o in RING1 if o != (0, 0)] + RING2
-            )
+            for h in (1, 2)
+            for o in cells.hex_ring(h)
         ]
     )
     contrib = occ.select(F.explode(fan).alias("f"), "x").select(
@@ -447,16 +412,6 @@ def idw_fill(
     )
 
 
-def _ring_offsets(h: int) -> list:
-    """All axial offsets at hex distance exactly ``h`` (6·h of them)."""
-    return [
-        (dq, dr)
-        for dq in range(-h, h + 1)
-        for dr in range(-h, h + 1)
-        if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 == h
-    ]
-
-
 def semivariogram_exact(
     cell_counts: DataFrame,
     cell_col: str = "cell",
@@ -476,9 +431,9 @@ def semivariogram_exact(
     focal-smoothing radius and the hex resolution upstream.
 
     Each unordered pair is counted ONCE: the ring-h offset set is closed
-    under negation, so the kernel fans only the POSITIVE-packed half
-    (packed offset dq·2²⁸ + dr > 0 — 3h of the 6h offsets) and joins
-    back to occupied cells. Output per lag: (h, n_pairs, sse —
+    under negation, so the kernel fans only the positive half of
+    ``cells.hex_ring(h)`` (3h of the 6h packed deltas) and joins back to
+    occupied cells. Output per lag: (h, n_pairs, sse —
     Σ(x_i−x_j)² as exact BIGINT, gamma = sse/(2·n_pairs) — ONE IEEE
     division of exact integers, reproduced bit-for-bit by the oracle).
     Lags with zero pairs are absent.
@@ -496,13 +451,12 @@ def semivariogram_exact(
     fan = F.array(
         *[
             F.struct(
-                (F.col("cell") + F.lit(dq * (1 << 28) + dr).cast("long")
-                 ).alias("t"),
+                (F.col("cell") + F.lit(o).cast("long")).alias("t"),
                 F.lit(h).alias("h"),
             )
             for h in range(1, max_h + 1)
-            for (dq, dr) in _ring_offsets(h)
-            if dq * (1 << 28) + dr > 0
+            for o in cells.hex_ring(h)
+            if o > 0
         ]
     )
     pairs = (

@@ -10,7 +10,7 @@ holds months of edits (spatial bucket too big), a busy hour spans the
 globe (temporal bucket too big). The shuffle key here is the COMPOSITE
 (hex cell, time chunk): candidates are replicated to their ring-``rings``
 neighbor cells (the within_distance certificate guarantees spatial
-completeness — geo/knn.py:cert_radius_deg) × their chunk ± 1 (with
+completeness — geo/knn.py:certified_res) × their chunk ± 1 (with
 chunk = ⌊epoch/τ⌋, any pair with |Δt| ≤ τ shares-or-straddles a chunk
 boundary, so query-chunk ∈ {cand-chunk−1, …+1} — the classic interval
 trick). Queries are NOT replicated — each query point lives in exactly
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import cells
-from .knn import cert_radius_deg
+from .knn import certified_res, dist2
 
 
 def st_within(
@@ -49,21 +49,9 @@ def st_within(
     with planar degree distance ≤ ``radius_deg`` AND |Δts| ≤
     ``tau_seconds``. ``res`` defaults to the finest resolution whose
     ring-``rings`` coverage certifies the radius (smallest complete
-    buckets), exactly as within_distance picks it."""
-    if res is None:
-        if cert_radius_deg(0, rings) < radius_deg:
-            raise ValueError(
-                f"radius {radius_deg}° exceeds rings={rings} coverage at res=0"
-            )
-        res = 0
-        while res < 15 and cert_radius_deg(res + 1, rings) >= radius_deg:
-            res += 1
-    elif cert_radius_deg(res, rings) < radius_deg:
-        raise ValueError(
-            f"cert_radius_deg({res}, {rings}) < radius {radius_deg}: "
-            "candidate set would be incomplete"
-        )
-
+    buckets), through the same ``certified_res`` guard as
+    within_distance."""
+    res = certified_res(radius_deg, rings, res)
     tau = int(tau_seconds)
     base = points.select(
         F.col(id_col).alias("id"),
@@ -103,8 +91,7 @@ def st_within(
         F.explode(
             F.when(
                 F.col("home_cell").isNotNull(),
-                F.array(*[F.col("home_cell") + F.lit(o).cast("long")
-                          for o in pos]),
+                cells.hex_fan(F.col("home_cell"), pos),
             )
         ).alias("cell"),
         F.col("_chunk").alias("_c0"),
@@ -124,7 +111,6 @@ def st_within(
         (F.col("_chunk") + 1).alias("_chunk"),
         *nside,
     )
-    d2 = (F.col("lon") - F.col("_nlon")) ** 2 + (F.col("lat") - F.col("_nlat")) ** 2
     dt = F.abs(F.col("_ep") - F.col("_nep"))
     crossed = q.join(
         cand_cross.unionByName(cand_samecell), ["cell", "_chunk"]
@@ -135,7 +121,7 @@ def st_within(
     ).filter(F.col("id") < F.col("neighbor_id"))
     return (
         crossed.unionByName(same)
-        .withColumn("dist2", d2)
+        .withColumn("dist2", dist2())
         .withColumn("dt_s", dt)
         .filter(
             (F.col("dist2") <= F.lit(radius_deg * radius_deg))

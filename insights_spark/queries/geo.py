@@ -9,8 +9,6 @@ from pyspark.sql import functions as F
 
 from insights_spark.geo import cells as _cells
 from insights_spark.geo.cells import geohash_sql as _gh_sql
-from insights_spark.geo.smooth import RING1 as _R1, RING2 as _R2
-from insights_spark.geo.smooth import _ring_offsets as _ro
 from insights_spark.queries import query
 from insights_spark.queries._fixtures import (
     _boundary_rows,
@@ -1119,10 +1117,7 @@ def _q_frontier_cells(spark, sf_dir):
 
 
 _offw = ", ".join(
-    [f"({dq * (1 << 28) + dr}::BIGINT, 2::BIGINT)"
-     for (dq, dr) in _R1 if (dq, dr) != (0, 0)]
-    + [f"({dq * (1 << 28) + dr}::BIGINT, 1::BIGINT)"
-       for (dq, dr) in _R2]
+    f"({o}::BIGINT, {3 - h}::BIGINT)" for h in (1, 2) for o in _cells.hex_ring(h)
 )
 
 
@@ -1161,10 +1156,10 @@ def _q_idw_fill(spark, sf_dir):
 
 
 _vario = ", ".join(
-    f"({dq * (1 << 28) + dr}::BIGINT, {h}::BIGINT)"
+    f"({o}::BIGINT, {h}::BIGINT)"
     for h in (1, 2, 3)
-    for (dq, dr) in _ro(h)
-    if dq * (1 << 28) + dr > 0
+    for o in _cells.hex_ring(h)
+    if o > 0
 )
 
 
@@ -1776,8 +1771,9 @@ def _q_moran_i(spark, sf_dir):
 # Getis-Ord G_i*: the hex chain carries the exact integer weight
 # w = floor(value) (floor-then-cast is exact in both engines; a bare
 # double->BIGINT cast would truncate in Spark but ROUND in DuckDB);
-# ring fan-out replays RING1 incl. self; the z>1.96 test is the same
-# integer cross-multiplication, HUGEINT products vs Spark DECIMAL(38,0).
+# ring fan-out replays cells.hex_ring_offsets(1), ring 1 incl. self; the
+# z>1.96 test is the same integer cross-multiplication, HUGEINT products
+# vs Spark DECIMAL(38,0).
 _go_src = ("SELECT event_id, CAST(floor(value) AS BIGINT) AS w, "
            + _POINTS_SQL.format(k="event_id") + " FROM events")
 

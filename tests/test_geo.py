@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from insights_spark import synth
-from insights_spark.geo import cells, knn, length, pip, tiles
+from insights_spark.geo import cells, knn, length, pip, stjoin, tiles
 
 
 # ---------------------------------------------------------------- PIP
@@ -215,17 +215,18 @@ def test_nn_cell_res_tracks_full_density(spark):
 
 
 def test_knn_certified_exact_covers_sparse_points(spark):
-    """Two far-apart clusters + one isolated point: the isolated point finds
-    nothing in the ring-bounded pass (exact=False), but certified-exact mode
-    recovers the full brute-force answer — for EVERY point, not just dense
-    ones — via the broadcast fallback over uncertified queries."""
+    """Two far-apart clusters + one isolated point: the isolated point's
+    nearest neighbor lies beyond the ring coverage, so the ring-bounded
+    pass cannot certify it, yet the certified output recovers the full
+    brute-force answer — for EVERY point, not just dense ones — via the
+    broadcast fallback over uncertified queries."""
     pts = [(0, 0.0, 0.0)]  # isolated
     pts += [(i, 35.0 + i * 0.001, 10.0) for i in range(1, 6)]
     pts += [(i, -40.0 + i * 0.001, -30.0) for i in range(6, 11)]
+    nearest = min(math.hypot(x, y) for _, x, y in pts[1:])
+    assert nearest > knn.cert_radius_deg(6, 1)  # outside ring coverage
     df = spark.createDataFrame([(int(a), float(b), float(c)) for a, b, c in pts],
                                "id long, lon double, lat double")
-    fine = knn.knn_cell_local(df, k=2, res=6, rings=1, exact=False)
-    assert fine.filter(F.col("id") == 0).count() == 0  # isolated finds nothing
     cert = knn.knn_cell_local(df, k=2, res=6, rings=1)
     exact = {(r["id"], r["rank"]): r["neighbor_id"]
              for r in knn.knn_exact(df, k=2).collect()}
@@ -251,6 +252,53 @@ def test_knn_cert_radius_geometry():
         plat = qlat + np.sin(ang) * rad * 0.999
         pcells = cells.hex_cell_id(plon, plat, res)
         assert all(int(c) in ring for c in pcells), (qlon, qlat, s)
+
+
+@pytest.mark.parametrize("call", [
+    lambda df, r, **kw: knn.within_distance(df, r, **kw),
+    lambda df, r, **kw: knn.ripley_k(df, [r], **kw),
+    lambda df, r, **kw: stjoin.st_within(df, r, 3600, **kw),
+], ids=["within_distance", "ripley_k", "st_within"])
+def test_certified_res_guard(spark, monkeypatch, call):
+    """All three radius joins go through knn.certified_res: a too-fine res
+    and a radius beyond res-0 coverage raise, and the auto pick is the
+    finest res whose ring coverage still certifies the radius."""
+    picked, real = [], knn.certified_res
+
+    def spy(radius_deg, rings, res):
+        picked.append(real(radius_deg, rings, res))
+        return picked[-1]
+
+    monkeypatch.setattr(knn, "certified_res", spy)
+    monkeypatch.setattr(stjoin, "certified_res", spy)
+    df = spark.createDataFrame(
+        [(0, 1.0, 2.0, 0)], "id long, lon double, lat double, ts long"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with pytest.raises(ValueError):
+        call(df, 1.0, rings=1, res=8)      # cert radius too small at res 8
+    with pytest.raises(ValueError):
+        call(df, 1e6, rings=1)             # beyond res-0 coverage
+    for r in (0.05, 1.0, 3.0, 9.0):
+        picked.clear()
+        call(df, r, rings=1)
+        (res,) = picked
+        assert knn.cert_radius_deg(res, 1) >= r > knn.cert_radius_deg(res + 1, 1)
+
+
+def test_hex_ring_partitions_the_disk():
+    """hex_ring(h) holds the 6·h packed deltas at hex distance exactly h
+    ([0] at h=0): rings are disjoint, closed under negation, and their
+    union over h ≤ k is the k-ring of hex_ring_offsets."""
+    assert cells.hex_ring(0) == [0]
+    for k in (1, 2, 3):
+        rings = [cells.hex_ring(h) for h in range(k + 1)]
+        for h, ring in enumerate(rings[1:], start=1):
+            assert len(ring) == 6 * h
+        for ring in rings:
+            assert {-o for o in ring} == set(ring)
+        union = set().union(*rings)
+        assert len(union) == sum(len(ring) for ring in rings)  # disjoint
+        assert union == set(cells.hex_ring_offsets(k))
 
 
 def test_knn_deterministic_ties(spark):
