@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType
 
+from ..session import local_df
+
 _EPS = 1e-12
 
 
@@ -209,7 +211,8 @@ def assign_country_cells(
     spark = df.sparkSession
     # strictly ≥ circumradius: conservative on both sides
     pad = cells.hex_edge_deg(res) * 1.001
-    bx = spark.createDataFrame(
+    bx = local_df(
+        spark,
         boxes,
         "country string, priority boolean, lon0 double, lat0 double, "
         "lon1 double, lat1 double",

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 _PI = 3.141592653589793
 
 # id = (z << 52) | (x << 26) | y — unique for z ≤ 20 (x, y < 2^26), pure
@@ -126,7 +128,7 @@ def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
 
     Size gate (r6, guide §1.2): the normalized edge count is already a
     loop precondition, so when it is ≤ ``collect_cap`` the components are
-    solved by ONE bounded collect + driver union-find + createDataFrame —
+    solved by ONE bounded collect + driver union-find + ``local_df`` —
     the broadcast-join size rule applied to components (a ≤300k-row edge
     list is ~5 MB; nine distributed sweeps on it are pure scheduling
     latency, measured ~4.5 s at sf0.1 for the res-2 lattice whose size is
@@ -170,9 +172,7 @@ def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
                 else:
                     parent[ru] = rv
         rows = [(int(x), int(find(x))) for x in parent]
-        labels = edges.sparkSession.createDataFrame(
-            rows, "id long, label long"
-        )
+        labels = local_df(edges.sparkSession, rows, "id long, label long")
         return labels, 0
     sweeps = 0
     for _ in range(max_sweeps):

@@ -20,6 +20,7 @@ from insights_spark.queries._fixtures import (
     _s2_cells_sql,
     _t,
 )
+from insights_spark.session import local_df
 
 
 _CUST_PTS = f"SELECT c_custkey, {_POINTS_SQL.format(k='c_custkey')} FROM customer"
@@ -66,10 +67,7 @@ def _hex_cells_chain_sql(res: int, src: str | None = None,
                       CAST(CASE WHEN NOT (dx > dy AND dx > dz) AND dz > dy
                            THEN -rx0 - ry0 ELSE rz0 END AS BIGINT) AS r
                FROM fx),
-        hexed AS (SELECT {carry},
-                         {res} * 72057594037927936
-                       + (q + 67108864) * 268435456
-                       + (r + 67108864) AS cell
+        hexed AS (SELECT {carry}, {_cells.hex_encode_sql(res)} AS cell
                   FROM qr)"""
 
 
@@ -177,7 +175,13 @@ knn_sql = f"""
         WHERE rank <= 3
     """
 
-_OFF6 = "[268435456::BIGINT, -268435456, 1, -1, 268435455, -268435455]"
+def _offsets_sql(offsets: list[int]) -> str:
+    """DuckDB BIGINT list literal of packed-id deltas."""
+    return f"[{', '.join(map(str, offsets))}]::BIGINT[]"
+
+
+_OFF6 = _offsets_sql(_cells.hex_ring(1))  # the 6 ring-1 neighbours
+_OFF7 = _offsets_sql(_cells.hex_ring_offsets(1))  # the cell and its ring 1
 
 
 @query("flagship_tile_density", headline=True, oracle=f"""
@@ -707,9 +711,7 @@ hx_size = repr(_cells.hex_edge_deg(6))
                           CAST(CASE WHEN NOT (dx > dy AND dx > dz) AND dz > dy
                                THEN -rx0 - ry0 ELSE rz0 END AS BIGINT) AS r
                    FROM fx)
-            SELECT 6 * 72057594037927936
-                        + (q + 67108864) * 268435456
-                        + (r + 67108864) AS h3_r6,
+            SELECT {_cells.hex_encode_sql(6)} AS h3_r6,
                    CAST(count(*) AS BIGINT) AS n
             FROM qr GROUP BY 1
         """)
@@ -728,9 +730,7 @@ def _q_hex_cells(spark, sf_dir):
 @query("hex_smooth", headline=True, oracle=f"""
         WITH {_hex_cnts_sql(1)},
         contrib AS (SELECT cell + off AS t, n
-                    FROM cnts, unnest([0::BIGINT, 268435456, -268435456,
-                                       1, -1, 268435455, -268435455])
-                         AS u(off)),
+                    FROM cnts, unnest({_OFF7}) AS u(off)),
         ring AS (SELECT t, CAST(sum(n) AS BIGINT) AS ring_sum,
                         CAST(count(*) AS BIGINT) AS ring_cells
                  FROM contrib GROUP BY t)
@@ -1341,9 +1341,7 @@ hcov_countries = ", ".join(
                    UNNEST(generate_series(
                        CAST(ceil(lon0 / {hcov_w} - r / 2.0) AS BIGINT),
                        CAST(floor(lon1 / {hcov_w} - r / 2.0) AS BIGINT))) AS u(q))
-            SELECT country,
-                   2 * 72057594037927936 + (q + 67108864) * 268435456
-                   + (r + 67108864) AS cell
+            SELECT country, {_cells.hex_encode_sql(2)} AS cell
             FROM qs
         """)
 def _q_hex_cover(spark, sf_dir):
@@ -1353,7 +1351,8 @@ def _q_hex_cover(spark, sf_dir):
     over the identical axial-center ranges."""
     from insights_spark.geo import cells
 
-    boxes = spark.createDataFrame(
+    boxes = local_df(
+        spark,
         [(n, x0, y0, x1, y1) for n, _p, x0, y0, x1, y1 in _COUNTRIES],
         "country string, lon0 double, lat0 double, lon1 double, lat1 double",
     )
@@ -1741,8 +1740,7 @@ def _q_way_meters(spark, sf_dir):
                        CAST(sum(n) AS BIGINT) AS s_tot FROM cnts),
         base AS (SELECT cell, n_cells * n - s_tot AS dev FROM cnts, tot),
         fan AS (SELECT dev, cell + d AS nb FROM base,
-                (SELECT unnest([268435456, -268435456, 1, -1,
-                                268435455, -268435455]) AS d)),
+                (SELECT unnest({_OFF6}) AS d)),
         pr AS (SELECT CAST(count(*) AS BIGINT) AS w_pairs,
                       CAST(COALESCE(sum(f.dev::HUGEINT * b.dev::HUGEINT), 0)
                            AS DECIMAL(38,0)) AS num
@@ -1788,8 +1786,7 @@ _go_num = "(n_cells * ring_wx - ring_w * s_tot)"
                        CAST(sum(n) AS BIGINT) AS s_tot,
                        CAST(sum(n * n) AS BIGINT) AS q_tot FROM cnts),
         fan AS (SELECT n AS xj, cell + d AS target FROM cnts,
-                (SELECT unnest([0, 268435456, -268435456, 1, -1,
-                                268435455, -268435455]) AS d)),
+                (SELECT unnest({_OFF7}) AS d)),
         ring AS (SELECT target AS cell, CAST(count(*) AS BIGINT) AS ring_w,
                         CAST(sum(xj) AS BIGINT) AS ring_wx
                  FROM fan GROUP BY 1),

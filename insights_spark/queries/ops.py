@@ -15,6 +15,7 @@ from insights_spark.queries._fixtures import (
     _s2_cells_sql,
     _t,
 )
+from insights_spark.session import local_df
 
 
 def _elements(spark, sf_dir):
@@ -1412,7 +1413,8 @@ def _q_first_last_used(spark, sf_dir):
             ),
         ).alias("tags"),
     )
-    reg = spark.createDataFrame(
+    reg = local_df(
+        spark,
         [
             (1, "camp0", None, None),
             # pre-existing watermark: first_used must stay 1990-01-01, and
@@ -1584,8 +1586,8 @@ def _q_campaign_rollup(spark, sf_dir):
             ),
         ).alias("tags"),
     )
-    reg = spark.createDataFrame(
-        [(1, "camp0"), (2, "camp1"), (3, "camp2")], "id long, name string"
+    reg = local_df(
+        spark, [(1, "camp0"), (2, "camp1"), (3, "camp2")], "id long, name string"
     )
     stats = o.filter(F.pmod(ok, F.lit(11)) != 0).select(
         ok.alias("changeset"),

@@ -10,6 +10,7 @@ from pyspark.sql.window import Window
 from insights_spark import synth as _synth
 from insights_spark.queries import query
 from insights_spark.queries._fixtures import _t
+from insights_spark.session import local_df
 from insights_spark.text.pii import EMAIL_RE, IPV4_RE, PHONE_RE
 
 
@@ -998,7 +999,8 @@ def _q_doc_geotag(spark, sf_dir):
         "doc_id",
         F.concat(F.coalesce(F.col("text"), F.lit("")), mention).alias("text"),
     )
-    gaz = spark.createDataFrame(
+    gaz = local_df(
+        spark,
         [(b["name_en"].lower(), b["name_en"]) for b in synth.gen_boundaries()],
         "tok string, country string",
     )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import CHECKPOINTS
+from ..session import local_df
 
 
 class CheckpointStore:
@@ -42,7 +43,7 @@ class CheckpointStore:
 
     def read_all(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], CHECKPOINTS)
+            return local_df(self.spark, [], CHECKPOINTS)
         return self.spark.read.schema(CHECKPOINTS).parquet(self.path)
 
     def last_sequence(self, pipeline: str, stage: str) -> int | None:
@@ -55,7 +56,11 @@ class CheckpointStore:
         return row["seq"]
 
     def commit(self, pipeline: str, stage: str, sequence: int, run_id: str | None = None) -> None:
-        """Append one committed-sequence row (atomic at file granularity)."""
+        """Append one committed-sequence row (atomic at file granularity).
+
+        The row is built on the JVM (`session.local_df`): it never crosses
+        into a Python worker, so the commit is one JVM write job.
+        """
         row = [
             (
                 pipeline,
@@ -65,7 +70,7 @@ class CheckpointStore:
                 run_id or uuid.uuid4().hex[:12],
             )
         ]
-        self.spark.createDataFrame(row, CHECKPOINTS).coalesce(1).write.mode(
+        local_df(self.spark, row, CHECKPOINTS).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
 

@@ -8,22 +8,26 @@ row per (run_id, stage, partition_id) with rows_in/rows_out so that
 - resumable runs can be audited against checkpoints.
 
 Implementation: `observe()`-style accumulation is per-query not
-per-partition, so we use a mapPartitions-shaped pass: `count_partition`
-tags every row with its partition id (pure column expr —
-spark_partition_id), and `capture` aggregates to one row per partition.
-This costs one extra narrow aggregation per observed stage, nothing else —
-the observed DataFrame itself is passed through unchanged.
+per-partition, so `partition_counts` tags every row with its partition id
+(pure column expr — spark_partition_id) and aggregates to one row per
+partition. The observed DataFrames are read, never changed.
+
+Cost of one `record`: a partition-count aggregation of the out side (and
+of the in side when given), a full-outer join of the two on partition id
+(a shuffle), and a one-file parquet append — about 2.5 Spark jobs per
+record under AQE. The sentinel row is built on the JVM
+(`session.local_df`), so a record runs no Python task.
 """
 
 from __future__ import annotations
 
 import uuid
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import LINEAGE
+from ..session import local_df
 
 
 def new_run_id() -> str:
@@ -50,14 +54,14 @@ class LineageLog:
         """Write per-partition row counts for a stage (in optional).
 
         Fully distributed — the counts DataFrame is written directly, never
-        collected to the driver, so 10⁵-partition stages cost the executors
-        one narrow aggregation and the driver nothing. The in-side is
-        full-outer joined so a partition whose rows were ALL dropped still
-        appears (rows_in>0, rows_out=0) — that row IS the extraction-drop
-        signal. A (-1, 0, 0) sentinel row is always appended so `read()`
-        proves the stage ran even when it produced zero partitions; it
-        carries zero counts (sums unaffected) and per-partition readers
-        (`skew_report`) exclude it.
+        collected to the driver, so a 10⁵-partition stage costs the driver
+        no memory (the per-record job cost is in the module docstring). The
+        in-side is full-outer joined so a partition whose rows were ALL
+        dropped still appears (rows_in>0, rows_out=0) — that row IS the
+        extraction-drop signal. A (-1, 0, 0) sentinel row is always appended
+        so `read()` proves the stage ran even when it produced zero
+        partitions; it carries zero counts (sums unaffected) and
+        per-partition readers (`skew_report`) exclude it.
         """
         out_c = partition_counts(df_out).withColumnRenamed("rows", "rows_out")
         if df_in is not None:
@@ -79,8 +83,8 @@ class LineageLog:
             F.col("rows_out").cast("long"),
             F.lit(sequence).cast("long").alias("sequence"),
         )
-        sentinel = self.spark.createDataFrame(
-            [(self.run_id, stage, -1, 0, 0, sequence)], LINEAGE
+        sentinel = local_df(
+            self.spark, [(self.run_id, stage, -1, 0, 0, sequence)], LINEAGE
         )
         counts.unionByName(sentinel).coalesce(1).write.mode("append").parquet(
             self.path

@@ -25,7 +25,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -96,3 +97,31 @@ def get_spark(
         for k, v in extra_conf.items():
             b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over rows the driver already holds, built on the JVM.
+
+    ``spark.createDataFrame(list)`` ships the rows through a Python worker:
+    a PythonRDD stage whose worker starts 0.2-0.5 s after the job does,
+    even for one row. Here they go to the JVM as one Arrow stream and come
+    back as a ``LocalRelation`` (plan: ``LocalTableScan``), so no Python
+    task runs, empty input included; above
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB of Arrow
+    data) the JVM parallelizes the batches itself. The explicit Arrow types
+    keep ``TimestampNTZ`` naive and a long above 2^53 exact next to a null.
+
+    ``rows``: tuples in ``schema`` order. ``schema``: a ``StructType`` or a
+    DDL string. The one place in the package that calls ``createDataFrame``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -293,8 +293,10 @@ def gen_boundaries() -> list[dict]:
 
 def pages_df(spark, n_pages: int = 60, seed: int = 42):
     from .schemas import PAGES
+    from .session import local_df
 
-    return spark.createDataFrame(gen_pages(n_pages, seed), PAGES)
+    rows = [tuple(p[f] for f in PAGES.names) for p in gen_pages(n_pages, seed)]
+    return local_df(spark, rows, PAGES)
 
 
 # ---------------------------------------------------------------------------

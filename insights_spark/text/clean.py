@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .dedup import exact_dedup, ngram_jaccard_pairs
 from .quality import lang_id, quality_scores
 
@@ -358,7 +359,7 @@ def mix_sources(
     sw = sum(weights.values())
     quotas = [(s, int(total * w / sw)) for s, w in sorted(weights.items())]
     spark = docs.sparkSession
-    qdf = spark.createDataFrame(quotas, f"{source_col} string, quota long")
+    qdf = local_df(spark, quotas, f"{source_col} string, quota long")
     h = F.pmod(F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + 17,
                F.lit(1 << 31))
     w = Window.partitionBy(source_col).orderBy(h.asc(), F.col(id_col).asc())

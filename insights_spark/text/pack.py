@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_df
 from .quality import token_count, tokens
 
 
@@ -91,7 +92,7 @@ def global_cumsum_multi(
     off_schema = "_pid int, " + ", ".join(
         f"_offset{i} long" for i in range(len(value_cols))
     )
-    off_df = spark.createDataFrame(offsets, off_schema)
+    off_df = local_df(spark, offsets, off_schema)
     out = local.join(F.broadcast(off_df), "_pid")
     drop = ["_pid"]
     for i, oc in enumerate(out_cols):

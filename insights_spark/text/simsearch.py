@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_df
 from .dedup import _band_explode, _band_self_join, _bit_band_keys
 
 
@@ -132,7 +133,7 @@ def embedding_near_dups(
     rows = vectors.select(id_col, vec_col).collect()
     spark = vectors.sparkSession
     if not rows:
-        return spark.createDataFrame([], "a long, b long, cosine double")
+        return local_df(spark, [], "a long, b long, cosine double")
     Y = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
     yids = np.array([r[0] for r in rows], dtype=np.int64)
     yn = _fold_norm_np(Y)
@@ -336,7 +337,7 @@ def cosine_topk_sample(
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
         schema = "id long, neighbor_id long, score double, rank int"
-        return vectors.sparkSession.createDataFrame([], schema)
+        return local_df(vectors.sparkSession, [], schema)
     Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
@@ -691,10 +692,7 @@ def kmeans_lloyd_int(
         cents = [(cid, got.get(cid, cv)) for cid, cv in cents]
 
     spark = emb.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents],
-        "cluster long, centroid array<bigint>",
-    )
+    cent_df = local_df(spark, cents, "cluster long, centroid array<bigint>")
     roll = assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("dist").cast("long").alias("inertia"),

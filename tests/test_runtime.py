@@ -1,20 +1,25 @@
 """Runtime tests: checkpoint/resume idempotence (SURVEY §5 item 5),
-lineage row counts, salted aggregation equivalence, full pipeline run."""
+lineage row counts, salted aggregation equivalence, full pipeline run,
+driver-held rows built on the JVM."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 from insights_spark import synth
 from insights_spark.jobs import pipeline
 from insights_spark.runtime.checkpoint import CheckpointStore, incremental_filter
 from insights_spark.runtime.lineage import LineageLog
 from insights_spark.runtime.skew import salted_agg, top_keys, with_salt
+from insights_spark.schemas import CHECKPOINTS, LINEAGE
+from insights_spark.session import local_df
 
 
 def test_checkpoint_roundtrip(spark, tmp_path):
@@ -26,6 +31,38 @@ def test_checkpoint_roundtrip(spark, tmp_path):
     assert ck.last_sequence("p", "s") == 200
     assert ck.last_sequence("p", "other") == 999
     assert ck.last_sequence("p", "missing") is None
+
+
+# rows -> schema: each case createDataFrame(list) handles that a naive
+# Arrow or pandas route gets wrong
+_LOCAL_DF_CASES = {
+    "timestamp_ntz": (
+        [("p", "s", 3, datetime(2024, 1, 2, 3, 4, 5, 678901), "r")], CHECKPOINTS
+    ),
+    "ddl_schema": ([("a", 1, True), ("b", None, None)], "k string, n long, f boolean"),
+    "long_above_2_53_next_to_null": (
+        [(2**53 + 1, "x"), (None, None), (-(2**62) - 3, "z")], "n long, s string"
+    ),
+    "array_and_binary": (
+        [(1, [1, 2**60], b"\x00\xff"), (2, [], None), (3, None, b"")],
+        "k long, v array<bigint>, h binary",
+    ),
+    "lineage_sentinel": ([("run", "stage", -1, 0, 0, None)], LINEAGE),
+    "empty_struct": ([], CHECKPOINTS),
+    "empty_ddl": ([], "a long, b string"),
+}
+
+
+@pytest.mark.parametrize("case", list(_LOCAL_DF_CASES))
+def test_local_df_matches_create_dataframe_without_python(spark, case):
+    rows, schema = _LOCAL_DF_CASES[case]
+    got = local_df(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert "PythonRDD" not in got._jdf.queryExecution().toRdd().toDebugString()
+    if schema is CHECKPOINTS:
+        assert isinstance(got.schema["committed_at"].dataType, TimestampNTZType)
 
 
 def test_incremental_filter(spark):
