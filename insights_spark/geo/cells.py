@@ -173,11 +173,11 @@ def hex_encode(res: int, q: int, r: int) -> int:
     return (res << 56) | ((q + _HEX_OFF) << 28) | (r + _HEX_OFF)
 
 
-def hex_encode_sql(res: int, q: str = "q", r: str = "r") -> str:
-    """SQL twin of ``hex_encode`` over BIGINT expressions ``q`` and ``r``
+def hex_encode_sql(res: int) -> str:
+    """SQL twin of ``hex_encode`` over BIGINT columns ``q`` and ``r``
     (the DuckDB oracles' encode)."""
-    return (f"{res} * {1 << 56} + ({q} + {_HEX_OFF}) * {1 << 28}"
-            f" + ({r} + {_HEX_OFF})")
+    return (f"{res} * {1 << 56} + (q + {_HEX_OFF}) * {1 << 28}"
+            f" + (r + {_HEX_OFF})")
 
 
 def hex_ring_ids(cell: int, rings: int = 1) -> list[int]:

@@ -111,6 +111,13 @@ def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
     data) the JVM parallelizes the batches itself. The explicit Arrow types
     keep ``TimestampNTZ`` naive and a long above 2^53 exact next to a null.
 
+    Two differences from ``createDataFrame(list)``: the Arrow path does not
+    verify values against the schema, so only a ``None`` in a top-level
+    non-nullable field is rejected here (nested nullability and type
+    mismatches such as an int in a double column are not checked); and a
+    naive ``datetime`` in a ``TimestampType`` column is read as UTC, not in
+    the host's local time zone.
+
     ``rows``: tuples in ``schema`` order. ``schema``: a ``StructType`` or a
     DDL string. The one place in the package that calls ``createDataFrame``.
     """
@@ -121,6 +128,9 @@ def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
         schema = DataType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
+    for c, f in zip(cols, schema.fields):
+        if not f.nullable and any(v is None for v in c):
+            raise ValueError(f"field {f.name}: not nullable, but got None")
     table = pa.Table.from_arrays(
         [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
     )

@@ -65,6 +65,14 @@ def test_local_df_matches_create_dataframe_without_python(spark, case):
         assert isinstance(got.schema["committed_at"].dataType, TimestampNTZType)
 
 
+def test_local_df_rejects_none_in_non_nullable_field(spark):
+    rows = [("p", "s", None, datetime(2024, 1, 2), "r")]  # sequence: NOT NULL
+    with pytest.raises(ValueError, match="sequence"):
+        spark.createDataFrame(rows, CHECKPOINTS)
+    with pytest.raises(ValueError, match="sequence"):
+        local_df(spark, rows, CHECKPOINTS)
+
+
 def test_incremental_filter(spark):
     df = spark.range(10).withColumnRenamed("id", "seq")
     assert incremental_filter(df, "seq", None).count() == 10
