@@ -147,8 +147,7 @@ def main() -> None:
                 emb = spark.read.parquet(f"{sf1_dir}/embeddings.parquet")
                 # persist candidates exactly like the registered query does
                 cnd = embedding_lsh_candidates(emb, n_bits=60, bands=6).persist()
-                force(embedding_near_dups_lsh(emb, threshold=0.4,
-                                              n_bits=60, bands=6,
+                force(embedding_near_dups_lsh(emb, n_bits=60, bands=6,
                                               candidates=cnd))
                 cnd.unpersist()
             else:

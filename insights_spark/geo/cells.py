@@ -293,20 +293,19 @@ def hex_udf(res: int = 8, use_h3: bool = True):
     return _enc
 
 
-def with_cells(df, lon_col: str = "lon", lat_col: str = "lat",
-               s2_level_: int = 12, hex_res: int = 8):
+def with_cells(df):
     """Attach `s2_l12` and `h3_r8` columns (engine-standard names)."""
     return df.withColumn(
-        "s2_l12", s2_udf(s2_level_)(F.col(lon_col), F.col(lat_col))
-    ).withColumn("h3_r8", hex_udf(hex_res)(F.col(lon_col), F.col(lat_col)))
+        "s2_l12", s2_udf(12)(F.col("lon"), F.col("lat"))
+    ).withColumn("h3_r8", hex_udf(8)(F.col("lon"), F.col("lat")))
 
 
-def grid_cell_col(lon: Column, lat: Column, cells_per_degree: int = 4) -> Column:
+def grid_cell_col(lon: Column, lat: Column) -> Column:
     """Pure-column rectangular cell id — SQL-oracle-reproducible.
 
     id = floor((lon+180)*k) * 2^32 + floor((lat+90)*k)
     """
-    k = F.lit(cells_per_degree)
+    k = F.lit(4)
     return (
         F.floor((lon + F.lit(180.0)) * k) * F.lit(4294967296)
         + F.floor((lat + F.lit(90.0)) * k)

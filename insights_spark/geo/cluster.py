@@ -43,16 +43,11 @@ from . import cells
 from .vectorize import star_cc_labels
 
 
-def cell_dbscan(
-    cell_counts: DataFrame,
-    minpts: int,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-) -> DataFrame:
+def cell_dbscan(cell_counts: DataFrame, minpts: int) -> DataFrame:
     """DBSCAN over a per-cell count table → (cell, n, role, cluster_id).
 
-    Input: one row per occupied cell — (cell_col: BIGINT packed axial id,
-    cnt_col: count). Output: one row per core or border cell; noise cells
+    Input: one row per occupied cell — (cell: BIGINT packed axial id,
+    n: count). Output: one row per core or border cell; noise cells
     are dropped. ``cluster_id`` is the MINIMUM core-cell id of the
     component (stable across partitioning and engine), ``role`` is
     'core' | 'border'. An isolated core cell is its own singleton cluster;
@@ -62,8 +57,8 @@ def cell_dbscan(
     # persist the rollup, not just the core slice: the border branch
     # re-reads it, and without the pin the full point→cell pass runs twice
     cnts = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("n"),
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("n"),
     ).persist()
     core = cnts.filter(F.col("n") >= F.lit(minpts))
     nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
@@ -102,11 +97,7 @@ def cell_dbscan(
     return core_lab.unionByName(border)
 
 
-def region_shape(
-    cell_counts: DataFrame,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-) -> DataFrame:
+def region_shape(cell_counts: DataFrame) -> DataFrame:
     """Per-region shape metrics over the occupied-cell rollup — the
     measurement stage of the raster→vector family (``tile_regions`` /
     ``cell_dbscan`` find regions; this one characterizes them):
@@ -128,8 +119,8 @@ def region_shape(
     point→cell rollup is bounded by OCCUPIED CELLS, not points.
     """
     cnts = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("n"),
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("n"),
     ).persist()
     nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = cnts.select(F.col("cell").alias("id"), F.explode(nbrs).alias("nbr_id"))

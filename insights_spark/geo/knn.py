@@ -39,23 +39,16 @@ def dist2(lon: str = "lon", lat: str = "lat"):
     return (F.col(lon) - F.col("_nlon")) ** 2 + (F.col(lat) - F.col("_nlat")) ** 2
 
 
-def _xy(df: DataFrame, id_col: str, lon_col: str = "lon",
-        lat_col: str = "lat") -> DataFrame:
+def _xy(df: DataFrame, id_col: str) -> DataFrame:
     """(id: long, lon: double, lat: double) of a point table."""
     return df.select(
         F.col(id_col).cast("long").alias("id"),
-        F.col(lon_col).cast("double").alias("lon"),
-        F.col(lat_col).cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+        F.col("lat").cast("double").alias("lat"),
     )
 
 
-def knn_exact(
-    points: DataFrame,
-    k: int,
-    id_col: str = "id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
+def knn_exact(points: DataFrame, k: int, id_col: str = "id") -> DataFrame:
     """Exact kNN: for each point, its k nearest neighbors (excluding self).
 
     Output: (id, neighbor_id, dist2, rank). Broadcast hash join — valid when
@@ -64,12 +57,12 @@ def knn_exact(
     """
     nb = points.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(lon_col).alias("_nlon"),
-        F.col(lat_col).alias("_nlat"),
+        F.col("lon").alias("_nlon"),
+        F.col("lat").alias("_nlat"),
     )
     q = points.select(
-        F.col(id_col).alias("id"), F.col(lon_col).alias("_qlon"),
-        F.col(lat_col).alias("_qlat"),
+        F.col(id_col).alias("id"), F.col("lon").alias("_qlon"),
+        F.col("lat").alias("_qlat"),
     )
     joined = q.join(F.broadcast(nb), F.col("id") != F.col("neighbor_id"))
     w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
@@ -320,8 +313,8 @@ def ripley_k(
     )
 
 
-def _density_counts(points, lon_col, lat_col, min_res, max_res):
-    """(n, occupied-cell count per candidate res) over the FULL dataset in
+def _density_counts(points):
+    """(n, occupied-cell count per candidate res 0..6) over the FULL dataset in
     ONE map-side-combined aggregate pass.
 
     Sampling is the wrong tool here (r5 judge finding): occupied-cell
@@ -338,27 +331,19 @@ def _density_counts(points, lon_col, lat_col, min_res, max_res):
         F.count(F.lit(1)).alias("_n"),
         *[
             F.approx_count_distinct(
-                cells.hex_udf(r, use_h3=False)(F.col(lon_col), F.col(lat_col))
+                cells.hex_udf(r, use_h3=False)(F.col("lon"), F.col("lat"))
             ).alias(f"c{r}")
-            for r in range(min_res, max_res + 1)
+            for r in range(7)
         ],
     ).first()
     return row["_n"], row
 
 
-def auto_cell_res(
-    points: DataFrame,
-    k: int = 3,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    target_per_cell: float | None = None,
-    min_res: int = 0,
-    max_res: int = 6,
-) -> int:
+def auto_cell_res(points: DataFrame, k: int = 3) -> int:
     """Measure, don't guess — the `top_keys` discipline applied to space:
     the smallest hex resolution whose mean occupied-cell density is ≤
-    `target_per_cell` (default 4·k: enough candidates per cell to certify
-    most queries at rings=2), measured on the FULL dataset.
+    4·k (enough candidates per cell to certify most queries at rings=2),
+    measured on the FULL dataset.
 
     Why it matters at scale: the ring join's pair volume is Σ_cell
     q_c·cand_c ∝ n·density. A FIXED res makes density — and therefore
@@ -372,15 +357,14 @@ def auto_cell_res(
     candidate res) — see _density_counts for why the r5 capped-sample
     estimate was replaced.
     """
-    target = target_per_cell if target_per_cell is not None else 4.0 * k
-    n, counts = _density_counts(points, lon_col, lat_col, min_res, max_res)
+    n, counts = _density_counts(points)
     if n == 0:
-        return min_res
-    for r in range(min_res, max_res + 1):
+        return 0
+    for r in range(7):
         occupied = counts[f"c{r}"]
-        if occupied and n / occupied <= target:
+        if occupied and n / occupied <= 4.0 * k:
             return r
-    return max_res
+    return 6
 
 
 def _certified_topk(q, c, k: int, res: int | None, rings: int) -> DataFrame:
@@ -450,8 +434,6 @@ def knn_cell_local(
     points: DataFrame,
     k: int,
     id_col: str = "id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     res: int | None = 6,
     rings: int = 1,
 ) -> DataFrame:
@@ -465,7 +447,7 @@ def knn_cell_local(
     (ring-bounded), never all-pairs. ``res=None`` matches the resolution
     to the point density (auto_cell_res).
     """
-    pts = _xy(points, id_col, lon_col, lat_col)
+    pts = _xy(points, id_col)
     return _certified_topk(pts, pts, k, res, rings)
 
 
@@ -475,7 +457,6 @@ def knn_join(
     k: int,
     q_id: str = "id",
     c_id: str = "id",
-    res: int | None = None,
     rings: int = 1,
 ) -> DataFrame:
     """TWO-TABLE certified-exact kNN join — for every query point, its k
@@ -488,19 +469,12 @@ def knn_join(
     (id, neighbor_id, dist2, rank).
     """
     return _certified_topk(_xy(queries, q_id), _xy(candidates, c_id), k,
-                           res, rings)
+                           None, rings)
 
 
-def nn_cell_res(
-    points: DataFrame,
-    floor: float = 1.25,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    min_res: int = 0,
-    max_res: int = 6,
-) -> int:
+def nn_cell_res(points: DataFrame) -> int:
     """Resolution pick for NEAREST-NEIGHBOR searches: the FINEST res whose
-    mean occupied-cell density is ≥ ``floor`` — the dual of
+    mean occupied-cell density is ≥ 1.25 — the dual of
     ``auto_cell_res``'s ceiling criterion, and the one NN needs.
 
     Why the ceiling rule is wrong here: ``auto_cell_res`` returns the
@@ -510,11 +484,11 @@ def nn_cell_res(
     broadcast NLJ (measured at sf1: 1M points → 1M singleton cells, 262k
     ring-2 pairs for 1M queries, a disk-filling 10¹²-pair fallback). A
     density FLOOR instead guarantees the expected ring-2 neighborhood
-    holds ≥ 19·floor points, so the k=1 certificate holds for the bulk
+    holds ≥ 19·1.25 points, so the k=1 certificate holds for the bulk
     and the escalation loop carries a genuine tail, not the whole input.
-    The default 1.25 sits just above singleton density: the aperture-7
+    The floor 1.25 sits just above singleton density: the aperture-7
     quantization means the returned level's density lands in
-    [floor, 7·floor), and pair volume per level is n·19·density — at a
+    [1.25, 8.75), and pair volume per level is n·19·density — at a
     floor of 2 the sf1 lattice landed on density ~14 (266M pairs, 278 s
     in one level); at 1.25 it lands one level finer (~1.4-2/cell, ~27M
     pairs) and lets the geometric escalation absorb the tail instead.
@@ -527,26 +501,20 @@ def nn_cell_res(
     escalation stayed exact but paid ~quadratic pair work, judge-measured
     17.3× wall at 10× data; see _density_counts).
     """
-    n, counts = _density_counts(points, lon_col, lat_col, min_res, max_res)
+    n, counts = _density_counts(points)
     if n == 0:
-        return min_res
-    best = min_res
-    for r in range(min_res, max_res + 1):
+        return 0
+    best = 0
+    for r in range(7):
         occupied = counts[f"c{r}"]
-        if occupied and n / occupied >= floor:
+        if occupied and n / occupied >= 1.25:
             best = r
         else:
             break
     return best
 
 
-def nn_distance_hist(
-    points: DataFrame,
-    id_col: str = "id",
-    scale: int = 1000,
-    res: int | None = None,
-    rings: int = 2,
-) -> DataFrame:
+def nn_distance_hist(points: DataFrame, res: int | None = None) -> DataFrame:
     """Nearest-neighbor distance histogram — the Clark-Evans / G-function
     side of point-pattern analysis (Clark & Evans 1954, public), the
     LOCAL companion to ``ripley_k``'s global pair curve: the distribution
@@ -560,7 +528,7 @@ def nn_distance_hist(
     bucketed join feeds ONE ``min(struct(dist2, neighbor))`` rollup —
     associative, map-side combined, NO per-query window sort anywhere.
     A query is CERTIFIED when its candidate minimum lies strictly inside
-    ``cert_radius_deg(res, rings)`` (then no point outside the rings can
+    ``cert_radius_deg(res, 2)`` (then no point outside the 2 rings can
     be nearer); the uncertified tail re-runs one resolution coarser
     (7× the cell area) until res 0, and only the res-0 remnant — points
     whose nearest neighbor is beyond 2.5·edge₀, i.e. continental-scale
@@ -573,7 +541,7 @@ def nn_distance_hist(
     The starting resolution is ``nn_cell_res``'s density-FLOOR pick
     (see its docstring for why ``auto_cell_res``'s ceiling criterion is
     wrong for NN). Exactness: distances are RECOMPUTED in integer
-    1/``scale``-degree arithmetic on the argmin pair and banded by
+    1/1000-degree arithmetic on the argmin pair and banded by
     DECIMAL DIGIT COUNT (floor(log10)+1 with no libm — string length,
     bit-identical in any SQL engine). Output: (band, n_points, min_d2,
     max_d2) — exact integers; the Clark-Evans R division stays with the
@@ -581,7 +549,7 @@ def nn_distance_hist(
     """
     if res is None:
         res = nn_cell_res(points)
-    pts = points.select(F.col(id_col).alias("id"), "lon", "lat")
+    pts = points.select("id", "lon", "lat")
     # one-resolution steps: each level multiplies cell area (and ring
     # density) by 7 while the certification radius grows 2.65x -- the
     # geometric balance where every level costs ~remaining x 19 x density
@@ -616,7 +584,7 @@ def nn_distance_hist(
         ring_fan = remaining.select(
             F.col("id"), F.col("lon"), F.col("lat"),
             F.explode(
-                cells.hex_ring_col(F.element_at("_cells", i + 1), rings)
+                cells.hex_ring_col(F.element_at("_cells", i + 1), 2)
             ).alias("cell"),
         )
         cand_lv = cand.select(
@@ -631,7 +599,7 @@ def nn_distance_hist(
         best = joined.withColumn("dist2", dist2()).groupBy("id").agg(
             F.min(F.struct("dist2", "neighbor_id")).alias("b")
         )
-        r2 = cert_radius_deg(lv, rings) ** 2
+        r2 = cert_radius_deg(lv, 2) ** 2
         cert = best.where(F.col("b.dist2") < F.lit(r2)).select(
             "id", F.col("b.neighbor_id").alias("neighbor_id")
         ).localCheckpoint()
@@ -659,8 +627,8 @@ def nn_distance_hist(
         nn = nn.unionByName(p)
     pm = pts.select(
         F.col("id").alias("_mid"),
-        F.round(F.col("lon") * scale).cast("long").alias("_mx"),
-        F.round(F.col("lat") * scale).cast("long").alias("_my"),
+        F.round(F.col("lon") * 1000).cast("long").alias("_mx"),
+        F.round(F.col("lat") * 1000).cast("long").alias("_my"),
     )
     d2i = (
         (F.col("_ax") - F.col("_bx")) * (F.col("_ax") - F.col("_bx"))

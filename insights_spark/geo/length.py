@@ -30,7 +30,7 @@ _WGS84_F = 1.0 / 298.257223563
 _WGS84_B = _WGS84_A * (1.0 - _WGS84_F)
 
 
-def vincenty_m(lon1, lat1, lon2, lat2, iters: int = 50, tol: float = 1e-12):
+def vincenty_m(lon1, lat1, lon2, lat2):
     """Vectorized Vincenty inverse distance (meters) on WGS84."""
     lon1, lat1, lon2, lat2 = (np.asarray(a, dtype=np.float64) for a in (lon1, lat1, lon2, lat2))
     L = np.radians(lon2 - lon1)
@@ -46,7 +46,7 @@ def vincenty_m(lon1, lat1, lon2, lat2, iters: int = 50, tol: float = 1e-12):
     sigma = np.zeros_like(L)
     cosSqAlpha = np.ones_like(L)
     cos2SigmaM = np.zeros_like(L)
-    for _ in range(iters):
+    for _ in range(50):
         sinLam, cosLam = np.sin(lam), np.cos(lam)
         sinSigma = np.sqrt(
             (cosU2 * sinLam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * cosLam) ** 2
@@ -66,7 +66,7 @@ def vincenty_m(lon1, lat1, lon2, lat2, iters: int = 50, tol: float = 1e-12):
             sigma
             + C * sinSigma * (cos2SigmaM + C * cosSigma * (-1 + 2 * cos2SigmaM ** 2))
         )
-        converged = np.abs(lam - lamPrev) < tol
+        converged = np.abs(lam - lamPrev) < 1e-12
         if converged.all():
             break
 
@@ -136,11 +136,7 @@ def linestring_length_udf():
     return _len
 
 
-def construct_way_geometry(
-    ways: DataFrame,
-    nodes: DataFrame,
-    as_of_way_ts: bool = True,
-) -> DataFrame:
+def construct_way_geometry(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """Rebuild way linestrings from node history (engine-owned U3 spec).
 
     ways:  element_history rows with type='way' (id, version, timestamp, nds)
@@ -148,7 +144,7 @@ def construct_way_geometry(
 
     For each (way id, version): explode nds with position → join node
     versions → keep the latest node version with node.timestamp <= way
-    .timestamp (as-of; all versions if as_of_way_ts=False) → collect
+    .timestamp (as-of) → collect
     vertices in nds order. Ways whose nodes are unresolved keep NULL
     vertices filtered out; <2 resolved vertices → empty geometry (length 0).
 
@@ -170,8 +166,7 @@ def construct_way_geometry(
     ).filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
 
     j = w.join(n, "node_id", "left")
-    if as_of_way_ts:
-        j = j.filter(F.col("node_ts").isNull() | (F.col("node_ts") <= F.col("way_ts")))
+    j = j.filter(F.col("node_ts").isNull() | (F.col("node_ts") <= F.col("way_ts")))
     pick = Window.partitionBy("way_id", "way_version", "pos").orderBy(
         F.desc_nulls_last("node_version")
     )

@@ -148,7 +148,6 @@ def assign_country(
     boundary_rows: list[dict],
     lon_col: str = "lon",
     lat_col: str = "lat",
-    out_col: str = "country",
 ) -> DataFrame:
     """Attach the covering boundary name to every row (None when outside).
 
@@ -172,18 +171,10 @@ def assign_country(
         la = pd.to_numeric(lat, errors="coerce").to_numpy(np.float64, na_value=np.nan)
         return pd.Series(index.locate(lo, la), index=lon.index, dtype=object)
 
-    return df.withColumn(out_col, _locate(F.col(lon_col), F.col(lat_col)))
+    return df.withColumn("country", _locate(F.col(lon_col), F.col(lat_col)))
 
 
-def assign_country_cells(
-    df: DataFrame,
-    boxes: list[tuple],
-    id_col: str,
-    res: int = 2,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    out_col: str = "country",
-) -> DataFrame:
+def assign_country_cells(df: DataFrame, boxes: list[tuple], id_col: str) -> DataFrame:
     """Bbox-country assignment as a CELL EQUI-JOIN — the bucketed
     alternative physical strategy to ``assign_country``'s broadcast
     R-tree, same answer (the driver oracle is shared with the CASE path).
@@ -210,7 +201,7 @@ def assign_country_cells(
 
     spark = df.sparkSession
     # strictly ≥ circumradius: conservative on both sides
-    pad = cells.hex_edge_deg(res) * 1.001
+    pad = cells.hex_edge_deg(2) * 1.001
     bx = local_df(
         spark,
         boxes,
@@ -224,9 +215,9 @@ def assign_country_cells(
         (F.col("lat1") + F.lit(pad)).alias("clat1"),
     )
     cover = cells.hex_cover_bbox(
-        bx, res, lon0="clon0", lat0="clat0", lon1="clon1", lat1="clat1"
+        bx, 2, lon0="clon0", lat0="clat0", lon1="clon1", lat1="clat1"
     )
-    clon, clat = cells.hex_center_col(F.col("cell"), res)
+    clon, clat = cells.hex_center_col(F.col("cell"), 2)
     cover = cover.withColumn(
         "_interior",
         (clon >= F.col("lon0") + F.lit(pad))
@@ -239,14 +230,14 @@ def assign_country_cells(
     pts = df.withColumn(
         # use_h3=False: the cover (hex_cover_bbox) and the center decode
         # (hex_center_col) are axial-formula-specific — a real H3 id would never match.
-        "_cell", cells.hex_udf(res, use_h3=False)(F.col(lon_col), F.col(lat_col))
+        "_cell", cells.hex_udf(2, use_h3=False)(F.col("lon"), F.col("lat"))
     )
     cand = pts.join(F.broadcast(cover), pts["_cell"] == cover["cell"])
     hit = F.col("_interior") | (
-        (F.col(lon_col) >= F.col("lon0"))
-        & (F.col(lon_col) <= F.col("lon1"))
-        & (F.col(lat_col) >= F.col("lat0"))
-        & (F.col(lat_col) <= F.col("lat1"))
+        (F.col("lon") >= F.col("lon0"))
+        & (F.col("lon") <= F.col("lon1"))
+        & (F.col("lat") >= F.col("lat0"))
+        & (F.col("lat") <= F.col("lat1"))
     )
     winners = (
         cand.filter(hit)
@@ -259,6 +250,6 @@ def assign_country_cells(
                 )
             ).alias("_w")
         )
-        .select(id_col, F.col("_w.c").alias(out_col))
+        .select(id_col, F.col("_w.c").alias("country"))
     )
     return df.join(winners, id_col, "left")

@@ -35,17 +35,11 @@ from pyspark.sql import functions as F
 from . import cells
 
 
-def hex_focal_smooth(
-    cell_counts: DataFrame,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-    hot_num: int = 2,
-    hot_den: int = 1,
-) -> DataFrame:
+def hex_focal_smooth(cell_counts: DataFrame) -> DataFrame:
     """Ring-1 focal sum, smoothed density, and hotspot flag per occupied cell.
 
-    Input: one row per occupied hex cell — (cell_col: BIGINT packed axial
-    id, cnt_col: BIGINT count). Output per input cell:
+    Input: one row per occupied hex cell — (cell: BIGINT packed axial
+    id, n: BIGINT count). Output per input cell:
 
     - ``n``          the cell's own count (passthrough)
     - ``ring_sum``   Σ counts over the cell + its 6 axial neighbors
@@ -54,10 +48,10 @@ def hex_focal_smooth(
     - ``smoothed``   ring_sum / 7.0 — the focal mean over the full ring
                      footprint (ONE IEEE division of two exact integers,
                      so the oracle reproduces it bit-for-bit)
-    - ``is_hot``     the cell holds at least hot_num/hot_den× the mean
+    - ``is_hot``     the cell holds at least 2× the mean
                      count of its occupied NEIGHBORS (self excluded —
                      Getis-Ord G_i* style contrast): ``n·(ring_cells-1)
-                     ·hot_den ≥ hot_num·(ring_sum-n)``, an INTEGER
+                     ·1 ≥ 2·(ring_sum-n)``, an INTEGER
                      cross-product so the flag is float-free. An isolated
                      cell (no occupied neighbors, 0 ≥ 0) is hot by
                      definition: a lone spike in empty space is the
@@ -69,8 +63,8 @@ def hex_focal_smooth(
     sources" — one explode, one shuffle.
     """
     src = cell_counts.select(
-        F.col(cell_col).cast("long").alias("_c"),
-        F.col(cnt_col).cast("long").alias("_n"),
+        F.col("cell").cast("long").alias("_c"),
+        F.col("n").cast("long").alias("_n"),
     )
     targets = cells.hex_fan(F.col("_c"), cells.hex_ring_offsets(1))
     contrib = src.select(
@@ -83,14 +77,14 @@ def hex_focal_smooth(
     return (
         src.join(ring, src["_c"] == ring["_t"])
         .select(
-            F.col("_c").alias(cell_col),
+            F.col("_c").alias("cell"),
             F.col("_n").alias("n"),
             F.col("ring_sum"),
             F.col("ring_cells"),
             (F.col("ring_sum") / F.lit(7.0)).alias("smoothed"),
             (
-                F.col("_n") * (F.col("ring_cells") - 1) * F.lit(hot_den)
-                >= F.lit(hot_num) * (F.col("ring_sum") - F.col("_n"))
+                F.col("_n") * (F.col("ring_cells") - 1) * F.lit(1)
+                >= F.lit(2) * (F.col("ring_sum") - F.col("_n"))
             ).alias("is_hot"),
         )
     )
@@ -101,7 +95,6 @@ def decayed_cell_scores(
     res: int,
     halflife_s: int,
     now_epoch_s: int,
-    ts_col: str = "ts",
     max_buckets: int = 20,
 ) -> DataFrame:
     """Exponentially time-decayed activity per hex cell — the "trending
@@ -121,7 +114,7 @@ def decayed_cell_scores(
     Scale: one (cell, bucket) rollup then one cell rollup — both
     decomposable with map-side combine; output bounded by occupied cells.
     """
-    age = F.lit(int(now_epoch_s)) - F.col(ts_col).cast("timestamp").cast("long")
+    age = F.lit(int(now_epoch_s)) - F.col("ts").cast("timestamp").cast("long")
     # exact integer floor-division (subtract the pmod remainder first):
     # float division + floor can misround within an ulp of a bucket edge
     h = F.lit(int(halflife_s)).cast("long")
@@ -147,11 +140,7 @@ def decayed_cell_scores(
     )
 
 
-def frontier_cells(
-    cell_counts: DataFrame,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-) -> DataFrame:
+def frontier_cells(cell_counts: DataFrame) -> DataFrame:
     """Mapping-frontier detection — occupied cells with ≥ 1 EMPTY ring-1
     neighbor: the "edge of the mapped world" primitive behind
     where-to-map-next prioritization (directing mappers at gaps is the
@@ -166,8 +155,8 @@ def frontier_cells(
     the focal/cluster siblings and replicated exactly by the oracle.
     """
     occ = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("n"),
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("n"),
     )
     nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = occ.select("cell", "n", F.explode(nbrs).alias("_nb"))
@@ -179,11 +168,7 @@ def frontier_cells(
     )
 
 
-def moran_i_exact(
-    cell_counts: DataFrame,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-) -> DataFrame:
+def moran_i_exact(cell_counts: DataFrame) -> DataFrame:
     """Global Moran's I spatial autocorrelation over the hex-cell rollup —
     "are edit counts spatially clustered?" — in EXACT integer arithmetic
     (Moran 1950, public; the lattice-adjacency formulation is standard in
@@ -211,8 +196,8 @@ def moran_i_exact(
     unordered adjacency twice), matching the symmetric Σ_ij definition.
     """
     occ = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("n"),
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("n"),
     )
     tot = occ.agg(
         F.count(F.lit(1)).cast("long").alias("n_cells"),
@@ -250,13 +235,7 @@ def moran_i_exact(
     )
 
 
-def getis_ord_exact(
-    cell_counts: DataFrame,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-    z_num: int = 49,
-    z_den: int = 25,
-) -> DataFrame:
+def getis_ord_exact(cell_counts: DataFrame) -> DataFrame:
     """Per-cell Getis–Ord G_i* hotspot statistic over the hex-cell rollup
     in EXACT integer arithmetic (Getis & Ord 1992 / Ord & Getis 1995,
     public; the "star" variant where the cell weights itself, w_ii = 1).
@@ -276,11 +255,11 @@ def getis_ord_exact(
         (cell, x, ring_w = W_i, ring_wx = Σ_j w_ij x_j,
          gi_num = n·ring_wx − W_i·S)
 
-    and the flag ``is_hot`` ⟺ z_i > z_num/z_den (default 49/25 = 1.96,
-    the two-sided 5% Gaussian point) evaluated EXACTLY:
+    and the flag ``is_hot`` ⟺ z_i > 49/25 = 1.96 (the two-sided 5%
+    Gaussian point) evaluated EXACTLY:
 
         gi_num > 0  AND
-        z_den²·(n−1)·gi_num² > z_num²·(n·Q − S²)·(n·W_i − W_i²)
+        25²·(n−1)·gi_num² > 49²·(n·Q − S²)·(n·W_i − W_i²)
 
     — every factor an integer both engines derive identically; the two
     big products ride DECIMAL(38,0) (gi_num can reach ~10⁹ at sf1 scale;
@@ -295,8 +274,8 @@ def getis_ord_exact(
     oracle replays every step in ANSI SQL.
     """
     occ = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("x"),
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("x"),
     )
     tot = occ.agg(
         F.count(F.lit(1)).cast("long").alias("n_cells"),
@@ -322,11 +301,11 @@ def getis_ord_exact(
              - F.col("ring_w") * F.col("ring_w"))
     lhs = (
         gi_num.cast("decimal(19,0)") * gi_num.cast("decimal(19,0)")
-        * ((F.col("n_cells") - 1) * F.lit(z_den * z_den)).cast("decimal(19,0)")
+        * ((F.col("n_cells") - 1) * F.lit(25 * 25)).cast("decimal(19,0)")
     )
     rhs = (
         var_g.cast("decimal(19,0)") * var_l.cast("decimal(19,0)")
-        * F.lit(z_num * z_num).cast("decimal(19,0)")
+        * F.lit(49 * 49).cast("decimal(19,0)")
     )
     return j.select(
         "cell",
@@ -338,12 +317,7 @@ def getis_ord_exact(
     )
 
 
-def idw_fill(
-    cell_counts: DataFrame,
-    cell_col: str = "cell",
-    cnt_col: str = "n",
-    min_ring1: int = 3,
-) -> DataFrame:
+def idw_fill(cell_counts: DataFrame, min_ring1: int = 3) -> DataFrame:
     """Inverse-distance-weighted gap-fill — estimate a value at every
     EMPTY hex cell from its occupied ring-1/ring-2 neighbors (Shepard
     1968 IDW, public; the raster "fill the holes in the surface"
@@ -373,8 +347,8 @@ def idw_fill(
     |q|,|r| < 2^26 − 2 (the encoder bounds ±2^26 − 1; ring-2 adds ±2).
     """
     occ = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("x"),
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("x"),
     )
     # fan each occupied source to its 18 ring positions, tagged with the
     # IDW weight (×2 integer scaling): ring-1 → 2, ring-2 → 1
@@ -414,7 +388,6 @@ def idw_fill(
 
 def semivariogram_exact(
     cell_counts: DataFrame,
-    cell_col: str = "cell",
     cnt_col: str = "n",
     max_h: int = 3,
 ) -> DataFrame:
@@ -445,7 +418,7 @@ def semivariogram_exact(
     cells, never quadratic.
     """
     occ = cell_counts.select(
-        F.col(cell_col).cast("long").alias("cell"),
+        F.col("cell").cast("long").alias("cell"),
         F.col(cnt_col).cast("long").alias("x"),
     )
     fan = F.array(

@@ -40,39 +40,26 @@ def tile_y(lat: Column, z: int) -> Column:
     return F.greatest(F.lit(0), F.least(y, F.lit(2 ** z - 1))).cast("int")
 
 
-def with_tile(df: DataFrame, z: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+def with_tile(df: DataFrame, z: int) -> DataFrame:
     return (
         df.withColumn("z", F.lit(z))
-        .withColumn("x", tile_x(F.col(lon_col), z))
-        .withColumn("y", tile_y(F.col(lat_col), z))
+        .withColumn("x", tile_x(F.col("lon"), z))
+        .withColumn("y", tile_y(F.col("lat"), z))
     )
 
 
-def density_rollup(
-    df: DataFrame,
-    z: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Edit-density per tile: groupBy(z,x,y) count (or weighted sum).
+def density_rollup(df: DataFrame, z: int) -> DataFrame:
+    """Edit-density per tile: groupBy(z,x,y) count.
 
     One shuffle on (x, y); at scale the tile key space is dense and uniform
     at z ≥ 6, so no salting is needed — skew lives in the *cell* domain
     (hot H3 cells), which the stats stage salts instead.
     """
-    t = with_tile(df.filter(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()), z,
-                  lon_col, lat_col)
-    agg = (
-        F.sum(weight_col).alias("density")
-        if weight_col
-        else F.count(F.lit(1)).alias("density")
-    )
-    return t.groupBy("z", "x", "y").agg(agg)
+    t = with_tile(df.filter(F.col("lon").isNotNull() & F.col("lat").isNotNull()), z)
+    return t.groupBy("z", "x", "y").agg(F.count(F.lit(1)).alias("density"))
 
 
-def tile_pyramid(df: DataFrame, zooms: list[int], lon_col: str = "lon",
-                 lat_col: str = "lat", persist: bool = True) -> DataFrame:
+def tile_pyramid(df: DataFrame, zooms: list[int]) -> DataFrame:
     """Multi-zoom pyramid: per-z rollups unioned; base computed once.
 
     The base-z rollup is aggregated first, then coarser zooms derive from it
@@ -80,7 +67,7 @@ def tile_pyramid(df: DataFrame, zooms: list[int], lon_col: str = "lon",
     one instead of rescanning the fact table (log-depth rollup, the Spark
     answer to the reference's per-period loop pattern, hashtags.py:162-349).
 
-    `persist` pins the base rollup (MEMORY_AND_DISK): without it Spark's
+    The base rollup is pinned (MEMORY_AND_DISK): without it Spark's
     union recomputes the fact scan once per level — AQE exchange reuse does
     NOT kick in here because each level's subtree canonicalizes differently.
     The base rollup is tiny (≤4^base_z tile rows), so persisting is safe at
@@ -89,8 +76,8 @@ def tile_pyramid(df: DataFrame, zooms: list[int], lon_col: str = "lon",
     """
     zooms = sorted(set(zooms), reverse=True)
     base_z = zooms[0]
-    base = density_rollup(df, base_z, lon_col, lat_col)
-    if persist and len(zooms) > 1:
+    base = density_rollup(df, base_z)
+    if len(zooms) > 1:
         from pyspark import StorageLevel
 
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
@@ -114,8 +101,9 @@ def tile_pyramid(df: DataFrame, zooms: list[int], lon_col: str = "lon",
 
 
 def tile_pyramid_merge(
-    stored: DataFrame, delta_points: DataFrame, zooms: list[int],
-    lon_col: str = "lon", lat_col: str = "lat",
+    stored: DataFrame,
+    delta_points: DataFrame,
+    zooms: list[int],
 ) -> DataFrame:
     """Incremental pyramid maintenance — the geo twin of the corpus job's
     dedup-vs-index incrementality (jobs/corpus.py): a stored pyramid plus
@@ -132,7 +120,7 @@ def tile_pyramid_merge(
     This is the operator a nightly ingest actually runs — history stays
     in the sink, deltas stream through.
     """
-    delta = tile_pyramid(delta_points, zooms, lon_col, lat_col)
+    delta = tile_pyramid(delta_points, zooms)
     return (
         stored.unionByName(delta)
         .groupBy("z", "x", "y")
@@ -144,8 +132,6 @@ def zonal_tile_stats(
     zoned_points: DataFrame,
     z: int,
     zone_col: str = "zone",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
 ) -> DataFrame:
     """Zonal statistics — THE classic raster × vector product: per zone
     (country/region/task polygon), summary statistics of the z-level
@@ -166,11 +152,11 @@ def zonal_tile_stats(
     """
     pts = zoned_points.filter(
         F.col(zone_col).isNotNull()
-        & F.col(lon_col).isNotNull()
-        & F.col(lat_col).isNotNull()
+        & F.col("lon").isNotNull()
+        & F.col("lat").isNotNull()
     )
     per_tile = (
-        with_tile(pts, z, lon_col, lat_col)
+        with_tile(pts, z)
         .groupBy(F.col(zone_col).alias("zone"), "x", "y")
         .agg(F.count(F.lit(1)).alias("density"))
     )
@@ -182,13 +168,7 @@ def zonal_tile_stats(
     )
 
 
-def tile_diff(
-    old_points: DataFrame,
-    new_points: DataFrame,
-    z: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
+def tile_diff(old_points: DataFrame, new_points: DataFrame, z: int) -> DataFrame:
     """Per-tile change detection between two snapshots — "what changed
     this month": tiles whose density differs between the old and new
     point sets, with both counts and the signed delta (the temporal diff
@@ -203,13 +183,13 @@ def tile_diff(
     """
     o = with_tile(
         old_points.filter(
-            F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
-        ), z, lon_col, lat_col
+            F.col("lon").isNotNull() & F.col("lat").isNotNull()
+        ), z
     ).select("z", "x", "y", F.lit(-1).cast("long").alias("_w"))
     n = with_tile(
         new_points.filter(
-            F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
-        ), z, lon_col, lat_col
+            F.col("lon").isNotNull() & F.col("lat").isNotNull()
+        ), z
     ).select("z", "x", "y", F.lit(1).cast("long").alias("_w"))
     return (
         o.unionByName(n)
@@ -223,16 +203,16 @@ def tile_diff(
     )
 
 
-def compact_tile_cover(tiles: DataFrame, levels: int = 2) -> DataFrame:
+def compact_tile_cover(tiles: DataFrame) -> DataFrame:
     """Quadtree compaction of a z/x/y tile set: any parent whose FOUR
-    children are all present is substituted for them, applied ``levels``
-    times bottom-up — the minimal-cover primitive behind tile-pruned
+    children are all present is substituted for them, applied twice
+    bottom-up — the minimal-cover primitive behind tile-pruned
     spatial filters and raster catalog manifests (the z/x/y scheme is the
     public slippy-map spec; compaction mirrors H3's compact_cells /
     S2's CellUnion.Normalize, both public APIs re-expressed relationally).
 
     Input: distinct (z, x, y) rows, single z level. Output: the compacted
-    cover across z .. z-levels — every input tile is represented exactly
+    cover across z .. z-2 — every input tile is represented exactly
     once, by itself or by exactly one ancestor.
 
     Scale posture: per level, ONE groupBy on the parent key over the
@@ -243,7 +223,7 @@ def compact_tile_cover(tiles: DataFrame, levels: int = 2) -> DataFrame:
     """
     cur = tiles.select("z", "x", "y")
     kept = None
-    for _ in range(levels):
+    for _ in range(2):
         withp = (
             cur.withColumn("pz", F.col("z") - 1)
             .withColumn("px", F.expr("x div 2"))

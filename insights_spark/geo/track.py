@@ -32,19 +32,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def user_tracks(
-    points: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "id",
-) -> DataFrame:
+def user_tracks(points: DataFrame, id_col: str = "id") -> DataFrame:
     """(user_id, n_points, duration_s, path_len_deg, net_disp_deg,
     max_leg_deg) per user. Single-point tracks: duration 0, path 0.0,
     net 0.0, max_leg NULL."""
     pts = points.select(
-        F.col(user_col).alias("user_id"),
+        F.col("user_id"),
         # NTZ → TIMESTAMP → long (session TZ is UTC: instant preserved)
-        F.col(ts_col).cast("timestamp").cast("long").alias("_ep"),
+        F.col("ts").cast("timestamp").cast("long").alias("_ep"),
         F.col(id_col).alias("_id"),
         "lon",
         "lat",
@@ -82,11 +77,7 @@ def user_tracks(
     )
 
 
-def home_cells(
-    points: DataFrame,
-    res: int = 1,
-    user_col: str = "user_id",
-) -> DataFrame:
+def home_cells(points: DataFrame) -> DataFrame:
     """Per-user "home cell" — the most-visited hex cell (ties broken to
     the SMALLEST cell id, so the answer is deterministic): the classic
     home-location inference primitive behind "local mapper vs remote
@@ -104,8 +95,8 @@ def home_cells(
 
     per = (
         points.select(
-            F.col(user_col).alias("user_id"),
-            _c.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")).alias(
+            F.col("user_id"),
+            _c.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias(
                 "cell"
             ),
         )
@@ -130,13 +121,7 @@ def home_cells(
     )
 
 
-def od_flows(
-    points: DataFrame,
-    res: int = 0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "id",
-) -> DataFrame:
+def od_flows(points: DataFrame, id_col: str = "id") -> DataFrame:
     """Origin–destination flow matrix between hex cells — the
     spatial-interaction rollup behind movement/commuting matrices
     (classic OD-matrix analysis, public): for every user's
@@ -162,10 +147,10 @@ def od_flows(
     from .cells import hex_udf
 
     pts = points.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("_ts"),
+        F.col("user_id"),
+        F.col("ts").alias("_ts"),
         F.col(id_col).alias("_id"),
-        hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
+        hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
         .alias("cell"),
     )
     w = W.partitionBy("user_id").orderBy(F.asc("_ts"), F.asc("_id"))
@@ -186,9 +171,6 @@ def simplify_tracks(
     points: DataFrame,
     eps_milli: int,
     max_depth: int = 4,
-    scale: int = 1000,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     id_col: str = "id",
 ) -> DataFrame:
     """Depth-capped Douglas–Peucker polyline simplification per track
@@ -205,7 +187,7 @@ def simplify_tracks(
     the same discipline as the unrolled-Lloyd kmeans oracle. At the
     default 4 the cap binds only on tracks needing > 15 kept vertices.
 
-    Exactness: coordinates are quantized to integer 1/``scale`` degrees
+    Exactness: coordinates are quantized to integer 1/1000 degrees
     (lossless on the synthetic milli-degree lattice) and every DP decision
     is arbitrary-precision integer arithmetic in the Arrow kernel —
     cross(A,B,P)² > eps²·|AB|² (point-to-POINT distance when the chord is
@@ -224,8 +206,8 @@ def simplify_tracks(
     if eps_milli < 0:
         raise ValueError("eps_milli must be >= 0")
     pts = points.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).cast("timestamp").cast("long").alias("_ep"),
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("ts").cast("timestamp").cast("long").alias("_ep"),
         F.col(id_col).cast("long").alias("_id"),
         "lon",
         "lat",
@@ -244,8 +226,8 @@ def simplify_tracks(
         # ≥ 0; np.argmax keeps the FIRST max = the old smallest-k tie
         # rule), and only the one threshold compare per segment — whose
         # squares can exceed 2^63 — runs in arbitrary-precision Python int.
-        xs = np.rint(pdf["lon"].to_numpy(np.float64) * scale).astype(np.int64)
-        ys = np.rint(pdf["lat"].to_numpy(np.float64) * scale).astype(np.int64)
+        xs = np.rint(pdf["lon"].to_numpy(np.float64) * 1000).astype(np.int64)
+        ys = np.rint(pdf["lat"].to_numpy(np.float64) * 1000).astype(np.int64)
         n = len(pdf)
         keep = {0, n - 1}
         stack = [(0, n - 1, 0)]
@@ -294,12 +276,7 @@ def simplify_tracks(
 HULL_DIRS = [(1, 0), (1, 1), (0, 1), (-1, 1), (-1, 0), (-1, -1), (0, -1), (1, -1)]
 
 
-def directional_hull(
-    points: DataFrame,
-    key_col: str = "user_id",
-    id_col: str = "id",
-    scale: int = 1000,
-) -> DataFrame:
+def directional_hull(points: DataFrame, id_col: str = "id") -> DataFrame:
     """K-directional extreme points per group — the Bentley-Faust-Preparata
     (CACM 1982, public) convex-hull approximation, the framing that makes
     "hull per key" DECOMPOSABLE: the exact hull needs all points of a group
@@ -310,18 +287,18 @@ def directional_hull(
     direction); the approximation only omits vertices extreme solely in
     un-sampled directions (BFP bound: area error ≤ O(1/K²)).
 
-    Output: (key, dir_idx, id, lon, lat) — per group and direction, the
-    point maximizing ``dot(dir, (x, y))`` on 1/``scale``-degree integer
+    Output: (user_id, dir_idx, id, lon, lat) — per user and direction, the
+    point maximizing ``dot(dir, (x, y))`` on 1/1000-degree integer
     coordinates; ties break to the smallest ``id`` (struct-max on
     (dot, −id): exact, deterministic, engine-independent).
     """
     pts = points.select(
-        F.col(key_col).alias("key"),
+        F.col("user_id").alias("key"),
         F.col(id_col).cast("long").alias("_id"),
         "lon",
         "lat",
-        F.round(F.col("lon") * scale).cast("long").alias("_x"),
-        F.round(F.col("lat") * scale).cast("long").alias("_y"),
+        F.round(F.col("lon") * 1000).cast("long").alias("_x"),
+        F.round(F.col("lat") * 1000).cast("long").alias("_y"),
     )
     dirs = F.array(*[
         F.struct(
@@ -348,7 +325,7 @@ def directional_hull(
             ).alias("b")
         )
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "dir_idx",
             (-F.col("b.neg_id")).alias(id_col),
             F.col("b.lon").alias("lon"),
@@ -358,18 +335,12 @@ def directional_hull(
     return best
 
 
-def move_rose(
-    points: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "id",
-    scale: int = 1000,
-) -> DataFrame:
+def move_rose(points: DataFrame, id_col: str = "id") -> DataFrame:
     """Directional rose of movement — the octant histogram behind every
     wind-rose / movement-bearing plot (classic directional statistics),
     WITHOUT atan2: octant boundaries are exactly the rays E/NE/N/…
     (multiples of 45°), so membership is pure integer sign and
-    |dx| vs |dy| comparisons on 1/``scale``-degree deltas — the same
+    |dx| vs |dy| comparisons on 1/1000-degree deltas — the same
     CASE tree evaluates bit-identically in any SQL engine, no libm.
 
     For each user's chronologically consecutive point pairs ((ts, id)
@@ -384,11 +355,11 @@ def move_rose(
     everything; skew bounded by the busiest single user.
     """
     pts = points.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("_ts"),
+        F.col("user_id"),
+        F.col("ts").alias("_ts"),
         F.col(id_col).alias("_id"),
-        F.round(F.col("lon") * scale).cast("long").alias("_x"),
-        F.round(F.col("lat") * scale).cast("long").alias("_y"),
+        F.round(F.col("lon") * 1000).cast("long").alias("_x"),
+        F.round(F.col("lat") * 1000).cast("long").alias("_y"),
     )
     w = Window.partitionBy("user_id").orderBy(F.asc("_ts"), F.asc("_id"))
     m = (

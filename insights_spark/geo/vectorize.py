@@ -53,13 +53,11 @@ def _merc_lat(yfrac: Column) -> Column:
     return F.degrees(F.atan((F.exp(t) - F.exp(-t)) / F.lit(2.0)))
 
 
-def with_tile_bounds(
-    tiles: DataFrame, z_col: str = "z", x_col: str = "x", y_col: str = "y"
-) -> DataFrame:
+def with_tile_bounds(tiles: DataFrame) -> DataFrame:
     """Add west/south/east/north lon-lat bounds for each z/x/y tile."""
-    n = F.pow(F.lit(2.0), F.col(z_col).cast("double"))
-    x = F.col(x_col).cast("double")
-    y = F.col(y_col).cast("double")
+    n = F.pow(F.lit(2.0), F.col("z").cast("double"))
+    x = F.col("x").cast("double")
+    y = F.col("y").cast("double")
     return (
         tiles.withColumn("west", F.round(x / n * F.lit(360.0) - F.lit(180.0), 9))
         .withColumn(
@@ -83,11 +81,11 @@ def vectorize_tiles(tiles: DataFrame, min_density: float = 1) -> DataFrame:
     )
 
 
-def tile_id(z_col: str = "z", x_col: str = "x", y_col: str = "y") -> Column:
+def tile_id() -> Column:
     return (
-        F.col(z_col).cast("bigint") * F.lit(_Z_SHIFT)
-        + F.col(x_col).cast("bigint") * F.lit(_X_SHIFT)
-        + F.col(y_col).cast("bigint")
+        F.col("z").cast("bigint") * F.lit(_Z_SHIFT)
+        + F.col("x").cast("bigint") * F.lit(_X_SHIFT)
+        + F.col("y").cast("bigint")
     )
 
 

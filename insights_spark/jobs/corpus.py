@@ -79,10 +79,10 @@ def _crashpoint(name: str) -> None:
         raise RuntimeError(f"injected crash: {name}")
 
 
-def _stamp(docs: DataFrame, min_tokens: int, langs: tuple[str, ...]) -> DataFrame:
+def _stamp(docs: DataFrame) -> DataFrame:
     scored = lang_id(quality_scores(docs))
     gated = scored.filter(
-        (F.col("n_tokens") >= min_tokens) & F.col("lang_pred").isin(*langs)
+        (F.col("n_tokens") >= 5) & F.col("lang_pred").isin("en", "de", "fr")
     )
     return train_test_split(gated).withColumn(
         "_norm_hash", F.xxhash64(normalized(F.col("text")))
@@ -94,8 +94,6 @@ def run(
     docs: DataFrame,
     out_dir: str,
     resume: bool = False,
-    min_tokens: int = 5,
-    langs: tuple[str, ...] = ("en", "de", "fr"),
 ) -> dict[str, str]:
     """Run the corpus pipeline; returns {table_name: path}."""
     ckpt = CheckpointStore(spark, os.path.join(out_dir, "_checkpoints"))
@@ -116,7 +114,7 @@ def run(
     bid = "full" if last is None else f"b{last}"
 
     # 1. stamp (map-only)
-    stamped = _stamp(batch, min_tokens, langs).persist()
+    stamped = _stamp(batch).persist()
 
     # 2. dedup: in-batch representative, then anti-join the admitted index
     in_batch = stamped.withColumn(

@@ -15,7 +15,7 @@ committed sequence):
                  batch-touched ∪ missed changesets, then MERGE
   5. tiles       z/x/y edit-density pyramid — INCREMENTAL: aggregate the
                  appended delta, merge-SUM into the existing pyramid
-  6. vocabulary  distinct hashtag set — INCREMENTAL: merge-insert new tags
+  6. vocabulary  distinct hashtag set — INCREMENTAL: append only new tags
 
 Sequence = max(warc_ts) of the processed batch (epoch seconds). A re-run
 with --resume processes only pages with warc_ts after the checkpoint and
@@ -52,7 +52,6 @@ def run(
     out_dir: str,
     boundary_rows: list[dict] | None = None,
     resume: bool = False,
-    zooms: tuple[int, ...] = (12, 8, 6),
 ) -> dict[str, str]:
     """Run the full pipeline; returns {table_name: path}. Every table is
     a directory-parquet table written through runtime.sinks.ParquetSinks."""
@@ -86,8 +85,7 @@ def run(
     changesets = bundles.select(F.explode("changesets").alias("c")).select("c.*")
     comments = bundles.select(F.explode("comments").alias("m")).select("m.*")
     # S12 delete-then-insert semantics: replayed changesets take the NEW row
-    sink_ops.merge(changesets, os.path.join(out_dir, "changesets"),
-                   keys=["id"], mode="keep_last")
+    sink_ops.merge(changesets, os.path.join(out_dir, "changesets"), keys=["id"])
     out["changesets"] = os.path.join(out_dir, "changesets")
     sink_ops.append_dedup(
         comments, os.path.join(out_dir, "changeset_comments"),
@@ -129,18 +127,14 @@ def run(
     el = sink_ops.read(el_path)
     stats_path = os.path.join(out_dir, "all_changesets_stats")
     touched = appended.select("changeset").distinct()
-    try:
-        existing_stats = sink_ops.read(stats_path)
-        has_stats = True
-    except Exception:
-        has_stats = False
-    if has_stats:
+    existing_stats = sink_ops.read(stats_path)
+    if existing_stats is not None:
         touched = touched.unionByName(
             stats_ops.missed_changesets(el, existing_stats)
         ).distinct()
     el_touched = el.join(touched, "changeset", "left_semi").persist()
     st = stats_ops.changeset_stats_with_meters(el_touched).persist()
-    sink_ops.merge(st, stats_path, keys=["changeset"], mode="keep_last")
+    sink_ops.merge(st, stats_path, keys=["changeset"])
     out["all_changesets_stats"] = stats_path
     # lineage records the stage's actual increment: rows_in = touched
     # element-history rows, rows_out = recomputed stats rows (both persisted
@@ -152,7 +146,7 @@ def run(
     # returned exactly the rows that are NEW in element_history — aggregate
     # only those and merge-SUM into the existing pyramid.
     pyramid = tiles.tile_pyramid(
-        appended.filter(F.col("lat").isNotNull()), list(zooms)
+        appended.filter(F.col("lat").isNotNull()), [12, 8, 6]
     )
     tiles_path = os.path.join(out_dir, "tile_density")
     sink_ops.merge_sum(pyramid, tiles_path, keys=["z", "x", "y"],
@@ -161,15 +155,14 @@ def run(
     lin.record("tiles", None, sink_ops.read(tiles_path), sequence)
 
     # 6. hashtag vocabulary ----------------------------------------------------
-    # INCREMENTAL: vocabulary is a distinct set — merge (keep_first on the
-    # full row) appends only hashtags not seen before; no conflicts means
-    # no rewrite at all.
+    # INCREMENTAL: vocabulary is a distinct set — S10 on the full row
+    # appends only hashtags not seen before, never rewriting the table.
     vocab = tags_ops.hashtag_vocabulary(changesets)
     vocab_path = os.path.join(out_dir, "all_osm_hashtags")
-    sink_ops.merge(vocab, vocab_path, keys=list(vocab.columns),
-                   mode="keep_first")
+    new_tags = sink_ops.append_dedup(vocab, vocab_path, keys=list(vocab.columns))
     out["all_osm_hashtags"] = vocab_path
 
+    new_tags.unpersist()
     el_touched.unpersist()
     st.unpersist()
     appended.unpersist()

@@ -51,11 +51,7 @@ def building_counts_asof(
     return out.withColumn("by_month", F.lit(by_month).cast("timestamp_ntz"))
 
 
-def country_insights(
-    elements: DataFrame,
-    months: list,
-    hot_changeset_ids: DataFrame | None = None,
-) -> DataFrame:
+def country_insights(elements: DataFrame, months: list) -> DataFrame:
     """The full country_insights table: one row per (country, by_month).
 
     The reference runs one correlated UPDATE per country per year
@@ -70,7 +66,7 @@ def country_insights(
         raise ValueError("country_insights requires at least one month-end")
     out = None
     for m in months:
-        snap = building_counts_asof(elements, m, hot_changeset_ids)
+        snap = building_counts_asof(elements, m)
         out = snap if out is None else out.unionByName(snap)
     return out
 

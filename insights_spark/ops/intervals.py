@@ -124,11 +124,7 @@ def interval_join(
     )
 
 
-def concurrency_sweep(
-    intervals: DataFrame,
-    start_col: str = "session_start",
-    end_col: str = "session_end",
-) -> DataFrame:
+def concurrency_sweep(intervals: DataFrame) -> DataFrame:
     """Sweep-line concurrency over CLOSED intervals [start, end] — the
     "how many sessions were active at once" primitive behind peak-load
     sizing and capacity planning (the classic event-boundary sweep,
@@ -161,12 +157,12 @@ def concurrency_sweep(
     from insights_spark.text.pack import global_cumsum_multi
 
     b = intervals.select(
-        F.col(start_col).alias("t"),
+        F.col("session_start").alias("t"),
         F.lit(1).cast("long").alias("_s"),
         F.lit(0).cast("long").alias("_e"),
     ).unionByName(
         intervals.select(
-            F.col(end_col).alias("t"),
+            F.col("session_end").alias("t"),
             F.lit(0).cast("long").alias("_s"),
             F.lit(1).cast("long").alias("_e"),
         )

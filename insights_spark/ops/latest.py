@@ -66,12 +66,7 @@ def scalar_pick(
     )
 
 
-def scd2_intervals(
-    df: DataFrame,
-    keys: tuple[str, ...] = ("type", "id"),
-    version_col: str = "version",
-    ts_col: str = "timestamp",
-) -> DataFrame:
+def scd2_intervals(df: DataFrame, version_col: str = "version") -> DataFrame:
     """SCD Type-2 history build: per-version validity intervals.
 
     The reference keeps element history as one row per version and answers
@@ -90,23 +85,17 @@ def scd2_intervals(
     latest_version's deterministic pick); ties would make lead()
     nondeterministic.
     """
-    w = Window.partitionBy(*keys).orderBy(version_col)
+    w = Window.partitionBy("type", "id").orderBy(version_col)
     return (
-        df.withColumn("valid_from", F.col(ts_col))
-        .withColumn("valid_to", F.lead(ts_col).over(w))
+        df.withColumn("valid_from", F.col("timestamp"))
+        .withColumn("valid_to", F.lead("timestamp").over(w))
         .withColumn(
             "is_current", F.when(F.col("valid_to").isNull(), 1).otherwise(0)
         )
     )
 
 
-def scd2_merge(
-    scd2: DataFrame,
-    batch: DataFrame,
-    keys: tuple[str, ...] = ("type", "id"),
-    version_col: str = "version",
-    ts_col: str = "timestamp",
-) -> DataFrame:
+def scd2_merge(scd2: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental SCD2 maintenance: apply a batch of NEW versions to a
     stored SCD2 table without re-reading raw history.
 
@@ -126,20 +115,20 @@ def scd2_merge(
     one anti-join on the key (broadcast when the batch key set is small)
     plus the window over touched histories only.
 
-    Output schema = canonical SCD2: (keys..., version, valid_from,
-    valid_to, is_current).
+    Keys are (type, id). Output schema = canonical SCD2: (type, id,
+    version, valid_from, valid_to, is_current).
     """
-    cols = [*keys, version_col, "valid_from", "valid_to", "is_current"]
-    tk = batch.select(*keys).distinct()
-    untouched = scd2.join(tk, list(keys), "left_anti").select(*cols)
-    old_versions = scd2.join(tk, list(keys), "left_semi").select(
-        *keys, version_col, F.col("valid_from").alias(ts_col)
+    cols = ["type", "id", "version", "valid_from", "valid_to", "is_current"]
+    tk = batch.select("type", "id").distinct()
+    untouched = scd2.join(tk, ["type", "id"], "left_anti").select(*cols)
+    old_versions = scd2.join(tk, ["type", "id"], "left_semi").select(
+        "type", "id", "version", F.col("valid_from").alias("timestamp")
     )
     hist = (
-        old_versions.unionByName(batch.select(*keys, version_col, ts_col))
-        .dropDuplicates([*keys, version_col])
+        old_versions.unionByName(batch.select("type", "id", "version", "timestamp"))
+        .dropDuplicates(["type", "id", "version"])
     )
-    rebuilt = scd2_intervals(hist, keys, version_col, ts_col).select(*cols)
+    rebuilt = scd2_intervals(hist).select(*cols)
     return untouched.unionByName(rebuilt)
 
 
@@ -147,7 +136,6 @@ def scd2_lookup(
     facts: DataFrame,
     scd2: DataFrame,
     keys: tuple[str, ...],
-    fact_ts: str = "ts",
     attrs: tuple[str, ...] = (),
 ) -> DataFrame:
     """Enrich facts with the dimension state AS OF each fact's event time
@@ -173,8 +161,8 @@ def scd2_lookup(
     cond = F.lit(True)
     for k in keys:
         cond = cond & (F.col(k) == F.col(f"_dk_{k}"))
-    cond = cond & (F.col(fact_ts) >= F.col("_vf")) & (
-        F.col("_vt").isNull() | (F.col(fact_ts) < F.col("_vt"))
+    cond = cond & (F.col("ts") >= F.col("_vf")) & (
+        F.col("_vt").isNull() | (F.col("ts") < F.col("_vt"))
     )
     return facts.join(dim, cond, "left").drop(
         *[f"_dk_{k}" for k in keys], "_vf", "_vt"
@@ -185,13 +173,11 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_cols: list[str] | None = None,
     right_order: str | None = None,
 ) -> DataFrame:
     """Generic two-table AS-OF join: every left row gets the LATEST right
-    row with ``right_ts <= left_ts`` for the same key (NULLs if none) —
+    row with ``right.ts <= left.ts`` for the same key (NULLs if none) —
     the telemetry/market-data join Spark has no built-in for.
 
     Physical strategy (the scalable one): UNION the two streams with a
@@ -211,13 +197,13 @@ def asof_join(
     if right_cols is not None and not right_cols:
         raise ValueError("asof_join: right_cols, when passed, must be non-empty")
     rcols = (list(right_cols) if right_cols is not None
-             else [c for c in right.columns if c not in (on, right_ts)])
+             else [c for c in right.columns if c not in (on, "ts")])
     if not rcols:
         # right carries nothing beyond (key, ts): surface the matched right
         # timestamp itself so the join still returns something useful, under
         # a name that cannot collide with a left column
-        right = right.withColumn(f"_asof_{right_ts}", F.col(right_ts))
-        rcols = [f"_asof_{right_ts}"]
+        right = right.withColumn("_asof_ts", F.col("ts"))
+        rcols = ["_asof_ts"]
     # default equal-ts tiebreak: first right attribute — never an
     # IndexError now (and the column-order dependence is documented above)
     ordc = right_order or rcols[0]
@@ -227,7 +213,7 @@ def asof_join(
     # legitimate NULL attribute
     r = right.select(
         F.col(on).alias("_k"),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.col(ordc).alias("_rord"),
         F.struct(*[F.col(c) for c in rcols]).alias("_rrow"),
@@ -235,7 +221,7 @@ def asof_join(
     lcols = left.columns
     l = left.select(
         F.col(on).alias("_k"),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.lit(None).cast(r.schema["_rord"].dataType).alias("_rord"),
         F.lit(None).cast(r.schema["_rrow"].dataType).alias("_rrow"),

@@ -31,13 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: float = 30.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: float = 30.0) -> DataFrame:
     """One row per (user, session): session_idx (1-based, chronological),
     session_start, session_end, n_events.
 
@@ -48,28 +42,28 @@ def sessionize(
     integer microseconds on both engines — no epoch floats, no timezone
     interpretation of TIMESTAMP_NTZ.
     """
-    w = Window.partitionBy(user_col).orderBy(F.asc(ts_col), F.asc(id_col))
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap_us = int(round(float(gap_minutes) * 60.0 * 1_000_000))
-    prev_ts = F.lag(ts_col).over(w)
+    prev_ts = F.lag("ts").over(w)
     is_new = (
         prev_ts.isNull()
         | (
-            (F.col(ts_col) - prev_ts)
+            (F.col("ts") - prev_ts)
             > F.expr(f"INTERVAL {gap_us} MICROSECONDS")
         )
     ).cast("int")
     sess = (
-        events.select(user_col, ts_col, id_col)
+        events.select("user_id", "ts", "event_id")
         .withColumn("_new", is_new)
         .withColumn("session_idx", F.sum("_new").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ))
     )
     return (
-        sess.groupBy(F.col(user_col).alias("user_id"), "session_idx")
+        sess.groupBy(F.col("user_id"), "session_idx")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
     )
@@ -78,9 +72,6 @@ def sessionize(
 def rolling_user_activity(
     events: DataFrame,
     window_seconds: float = 3600.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Trailing-window activity per event: for every event, how many
     events the SAME user produced in the preceding `window_seconds`
@@ -94,18 +85,20 @@ def rolling_user_activity(
     IEEE value DuckDB's epoch() computes), because Spark range frames
     need a numeric sort key. One user-keyed shuffle, like sessionize.
     """
-    sec = F.col(ts_col).cast("timestamp").cast("double")
+    sec = F.col("ts").cast("timestamp").cast("double")
     # pyspark rangeBetween takes integer bounds (cast to the double order
     # key at plan time); fractional window lengths would need an expr frame
     w = (
-        Window.partitionBy(user_col)
+        Window.partitionBy("user_id")
         .orderBy(sec)
         .rangeBetween(-int(window_seconds), 0)
     )
     return events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(id_col).alias("event_id"),
-        F.col(ts_col).alias("ts"),
+        # the alias projects a copy of the window's partition key; without
+        # it the window's input projection (and so the plan) changes
+        F.col("user_id").alias("user_id"),
+        "event_id",
+        "ts",
         F.count(F.lit(1)).over(w).cast("bigint").alias("n_trailing"),
     )
 
@@ -114,9 +107,6 @@ def funnel_steps(
     events: DataFrame,
     steps: tuple[str, ...],
     max_gap_hours: float | None = None,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered conversion funnel: one row per step with how many users
     reached it, greedy earliest-completion matching.
@@ -147,14 +137,14 @@ def funnel_steps(
         )
 
     cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_t"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("_t"))
     )
     outs = [summary(cur, 1, steps[0])]
     for idx, name in enumerate(steps[1:], start=2):
-        nxt = events.filter(F.col(type_col) == name).select(
-            user_col, F.col(ts_col).alias("_ts")
+        nxt = events.filter(F.col("event_type") == name).select(
+            "user_id", F.col("ts").alias("_ts")
         )
         cond = F.col("_ts") > F.col("_t")
         if max_gap_hours is not None:
@@ -163,9 +153,9 @@ def funnel_steps(
                 F.col("_ts") <= F.col("_t") + F.expr(f"INTERVAL {gap_us} MICROSECONDS")
             )
         cur = (
-            nxt.join(cur.select(user_col, "_t"), user_col)
+            nxt.join(cur.select("user_id", "_t"), "user_id")
             .filter(cond)
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("_ts").alias("_t"))
         )
         outs.append(summary(cur, idx, name))
@@ -180,13 +170,7 @@ def funnel_steps(
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    signup_type: str = "signup",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: users grouped by first-signup week; for
     each cohort and week offset k, how many were active (ANY event) in
     cohort_week + k, and what fraction of the cohort that is.
@@ -206,21 +190,21 @@ def cohort_retention(
     cohort_size, retention double).
     """
     su = (
-        events.filter(F.col(type_col) == signup_type)
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_signup_ts"))
+        events.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("_signup_ts"))
         .select(
-            F.col(user_col).alias("_u"),
+            F.col("user_id").alias("_u"),
             F.date_trunc("week", F.col("_signup_ts")).alias("cohort_week"),
         )
     )
     act = (
-        events.select(F.col(user_col).alias("_u"), F.col(ts_col))
+        events.select(F.col("user_id").alias("_u"), F.col("ts"))
         .join(su, "_u")
         .select(
             "cohort_week",
             "_u",
-            F.date_trunc("week", F.col(ts_col)).alias("_aw"),
+            F.date_trunc("week", F.col("ts")).alias("_aw"),
         )
         .filter(F.col("_aw") >= F.col("cohort_week"))
         .distinct()
@@ -249,13 +233,7 @@ def cohort_retention(
     )
 
 
-def dwell_segments(
-    df: DataFrame,
-    region_col: str = "region",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def dwell_segments(df: DataFrame, region_col: str = "region") -> DataFrame:
     """Geofence dwell rollup: per (user, region), how many separate VISITS
     (maximal runs of consecutive same-region events in the user's
     timeline) and the total observed dwell time inside.
@@ -272,13 +250,13 @@ def dwell_segments(
 
     Output: (user_id, region, n_visits, dwell_us).
     """
-    w = Window.partitionBy(user_col).orderBy(F.asc(ts_col), F.asc(id_col))
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     prev = F.lag(region_col).over(w)
     changed = (
         prev.isNull() & F.col(region_col).isNotNull()
     ) | ~(prev.eqNullSafe(F.col(region_col)))
     runs = (
-        df.select(user_col, ts_col, id_col, region_col)
+        df.select("user_id", "ts", "event_id", region_col)
         .withColumn("_new", changed.cast("int"))
         .withColumn(
             "_run",
@@ -289,14 +267,14 @@ def dwell_segments(
     )
     return (
         runs.filter(F.col(region_col).isNotNull())
-        .groupBy(F.col(user_col).alias("user_id"), region_col, "_run")
+        .groupBy(F.col("user_id"), region_col, "_run")
         .agg(
             # NTZ→LTZ cast is value-identity under the engine's pinned UTC
             # session timezone (session.py:56; rolling_user_activity
             # precedent) — unix_micros only accepts LTZ
             (
-                F.unix_micros(F.max(ts_col).cast("timestamp"))
-                - F.unix_micros(F.min(ts_col).cast("timestamp"))
+                F.unix_micros(F.max("ts").cast("timestamp"))
+                - F.unix_micros(F.min("ts").cast("timestamp"))
             ).alias("_dwell_us")
         )
         .groupBy("user_id", region_col)
@@ -307,13 +285,7 @@ def dwell_segments(
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition counts over per-user event streams:
     for each (current type → next type) pair, how often it occurs and
     its probability among the current type's outgoing transitions — the
@@ -327,12 +299,12 @@ def event_transitions(
 
     Output: (cur, nxt, n, p).
     """
-    w = Window.partitionBy(user_col).orderBy(F.asc(ts_col), F.asc(id_col))
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     pairs = (
-        events.select(user_col, ts_col, id_col, type_col)
-        .withColumn("_nxt", F.lead(type_col).over(w))
+        events.select("user_id", "ts", "event_id", "event_type")
+        .withColumn("_nxt", F.lead("event_type").over(w))
         .filter(F.col("_nxt").isNotNull())
-        .groupBy(F.col(type_col).alias("cur"), F.col("_nxt").alias("nxt"))
+        .groupBy(F.col("event_type").alias("cur"), F.col("_nxt").alias("nxt"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
     tot = Window.partitionBy("cur")
@@ -343,13 +315,7 @@ def event_transitions(
     )
 
 
-def event_gap_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def event_gap_stats(events: DataFrame) -> DataFrame:
     """Activity-cadence profile: per event type, the median and p90 of
     the gap (seconds) since the SAME user's previous event of that type
     — the inter-arrival distribution behind session-timeout tuning and
@@ -365,36 +331,30 @@ def event_gap_stats(
 
     Output: (event_type, n_gaps, p50_gap_s, p90_gap_s).
     """
-    w = Window.partitionBy(user_col, type_col).orderBy(
-        F.asc(ts_col), F.asc(id_col)
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        F.asc("ts"), F.asc("event_id")
     )
-    prev = F.lag(ts_col).over(w)
+    prev = F.lag("ts").over(w)
     gaps = (
-        events.select(user_col, ts_col, id_col, type_col)
+        events.select("user_id", "ts", "event_id", "event_type")
         .withColumn(
             "_gap_s",
             (
-                F.unix_micros(F.col(ts_col).cast("timestamp"))
+                F.unix_micros(F.col("ts").cast("timestamp"))
                 - F.unix_micros(prev.cast("timestamp"))
             ).cast("double")
             / F.lit(1000000.0),
         )
         .filter(F.col("_gap_s").isNotNull())
     )
-    return gaps.groupBy(type_col).agg(
+    return gaps.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_gaps"),
         F.expr("percentile(_gap_s, 0.5)").alias("p50_gap_s"),
         F.expr("percentile(_gap_s, 0.9)").alias("p90_gap_s"),
     )
 
 
-def covered_time(
-    events: DataFrame,
-    window_s: int = 600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def covered_time(events: DataFrame, window_s: int = 600) -> DataFrame:
     """Interval-UNION length per user — "how many seconds was the user
     actually active?" when each event opens a ``window_s``-second activity
     interval: overlapping intervals must count once (the classic
@@ -416,9 +376,9 @@ def covered_time(
     if window_s < 1:
         raise ValueError("window_s must be >= 1")
     pts = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).cast("timestamp").cast("long").alias("_ep"),
-        F.col(id_col).alias("_id"),
+        F.col("user_id"),
+        F.col("ts").cast("timestamp").cast("long").alias("_ep"),
+        F.col("event_id").alias("_id"),
     )
     w = Window.partitionBy("user_id").orderBy("_ep", "_id")
     nxt = F.lead("_ep").over(w)

@@ -78,9 +78,7 @@ def changeset_stats(elements: DataFrame, salt_buckets: int = 0) -> DataFrame:
     return counts
 
 
-def changeset_stats_with_meters(
-    elements: DataFrame, salt_buckets: int = 0
-) -> DataFrame:
+def changeset_stats_with_meters(elements: DataFrame) -> DataFrame:
     """Full battery incl. added/modified_highway_meters (A2).
 
     The geodesic CASE-sum over ``construct_geometry`` becomes: reconstruct
@@ -89,7 +87,7 @@ def changeset_stats_with_meters(
     The reference recomputed the geometry per chunk per run; here the
     length table is a reusable intermediate.
     """
-    counts = changeset_stats(elements, salt_buckets)
+    counts = changeset_stats(elements)
 
     hw = elements.filter(
         (F.col("action") != "delete")
@@ -138,15 +136,13 @@ def approx_distinct_gate(
     df: DataFrame,
     col: str,
     group_cols: list[str] | None = None,
-    rsd: float = 0.01,
-    tolerance: float = 0.05,
 ) -> DataFrame:
     """A3 at scale — HyperLogLog++ count-distinct with a built-in exactness
     gate, the ann_ivf pattern applied to cardinality: the sketch answer is
     approximate BY DESIGN (so no cross-engine value can be pinned), so the
     query emits the EXACT count plus a boolean `within_bounds` asserting
-    the sketch landed inside `tolerance` (5× the requested rsd by default
-    — HLL++ error is well inside 3σ there). The oracle reproduces the
+    the sketch landed inside 5% (5× the requested 1% rsd — HLL++ error
+    is well inside 3σ there). The oracle reproduces the
     exact count and TRUE; a broken sketch (or a silent change in Spark's
     HLL parameters) flips the boolean and fails the hash.
 
@@ -160,13 +156,13 @@ def approx_distinct_gate(
     gb = list(group_cols or [])
     out = df.groupBy(*gb).agg(
         F.countDistinct(col).alias("n_exact"),
-        F.approx_count_distinct(col, rsd=rsd).alias("_n_approx"),
+        F.approx_count_distinct(col, rsd=0.01).alias("_n_approx"),
     )
     err = F.abs(F.col("_n_approx") - F.col("n_exact")) / F.col("n_exact")
     return out.select(
         *gb,
         F.col("n_exact").cast("bigint").alias("n_exact"),
-        (err <= F.lit(tolerance)).alias("within_bounds"),
+        (err <= F.lit(0.05)).alias("within_bounds"),
     )
 
 
@@ -174,16 +170,13 @@ def approx_quantile_gate(
     df: DataFrame,
     col: str,
     group_cols: list[str] | None = None,
-    q: float = 0.5,
-    accuracy: int = 10000,
-    tolerance: float = 0.05,
 ) -> DataFrame:
     """Quantile SKETCH with a built-in exactness certificate — the
     approx_distinct_gate pattern for percentiles: emits the EXACT
     interpolated percentile (bit-matchable against DuckDB quantile_cont,
     proven in the lang_quality_median oracle) plus `within_bounds` =
     relative gap between `percentile_approx` (KLL-style rank sketch,
-    mergeable, bounded memory) and the exact value ≤ tolerance.
+    mergeable, bounded memory) and the exact median ≤ 5%.
 
     At 100 TB the exact percentile is a full sort per group; the sketch is
     the production path (fixed memory, partial-aggregable map-side, and
@@ -192,8 +185,8 @@ def approx_quantile_gate(
     """
     gb = list(group_cols or [])
     out = df.groupBy(*gb).agg(
-        F.expr(f"percentile({col}, {q!r})").alias("exact_q"),
-        F.expr(f"percentile_approx({col}, {q!r}, {accuracy})").alias("_approx_q"),
+        F.expr(f"percentile({col}, 0.5)").alias("exact_q"),
+        F.expr(f"percentile_approx({col}, 0.5, 10000)").alias("_approx_q"),
     )
     denom = F.greatest(F.abs(F.col("exact_q")), F.lit(1e-12))
     return out.select(
@@ -201,7 +194,7 @@ def approx_quantile_gate(
         F.col("exact_q").cast("double").alias("exact_q"),
         (
             (F.abs(F.col("_approx_q") - F.col("exact_q")) / denom)
-            <= F.lit(tolerance)
+            <= F.lit(0.05)
         ).alias("within_bounds"),
     )
 
@@ -212,7 +205,6 @@ def winsorized_stats(
     value_col: str,
     p_lo: int = 5,
     p_hi: int = 95,
-    cents: int = 100,
 ) -> DataFrame:
     """Winsorized robust statistics per group in EXACT integer arithmetic
     (winsorization per Tukey/Dixon, public) — the outlier-resistant
@@ -223,7 +215,7 @@ def winsorized_stats(
 
     (type-1/lower quantile; the value at a rank is well-defined under
     ties regardless of tie order). Values are quantized to integer
-    1/``cents`` units (lossless on 2-decimal money-style columns), the
+    1/100 units (lossless on 2-decimal money-style columns), the
     winsorized sum clamps each value into [p_lo, p_hi] before an exact
     BIGINT sum — no float accumulation anywhere; the winsorized MEAN is
     the consumer's one division.
@@ -242,7 +234,7 @@ def winsorized_stats(
     v = (
         df.select(
             F.col(group_col).alias("grp"),
-            F.round(F.col(value_col) * cents).cast("long").alias("_v"),
+            F.round(F.col(value_col) * 100).cast("long").alias("_v"),
         )
         .where(F.col("_v").isNotNull())
     )

@@ -38,62 +38,51 @@ from pyspark.sql import functions as F
 _STEP = {"week": "interval 7 days", "day": "interval 1 day"}
 
 
-def gapfill_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    bucket: str = "week",
-) -> DataFrame:
+def gapfill_counts(df: DataFrame, bucket: str = "week") -> DataFrame:
     """Per-(key, bucket) row counts with zero-filled gaps.
 
-    Output: (key_col, bucket_start timestamp, n_events bigint) — one row
+    Output: (event_type, bucket_start timestamp, n_events bigint) — one row
     for EVERY (observed key, bucket) pair between the global min and max
     occupied bucket, zeros where the key was silent. Rows with NULL ts
     or NULL key are excluded (they have no place on the spine).
     """
     if bucket not in _STEP:
         raise ValueError(f"bucket must be one of {sorted(_STEP)}")
-    facts = df.filter(F.col(ts_col).isNotNull() & F.col(key_col).isNotNull())
-    bk = F.date_trunc(bucket, F.col(ts_col))
+    facts = df.filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
+    bk = F.date_trunc(bucket, F.col("ts"))
 
     rollup = facts.groupBy(
-        F.col(key_col), bk.alias("bucket_start")
+        F.col("event_type"), bk.alias("bucket_start")
     ).agg(F.count(F.lit(1)).alias("n_events"))
 
     bounds = facts.agg(
-        F.date_trunc(bucket, F.min(ts_col)).alias("_b0"),
-        F.date_trunc(bucket, F.max(ts_col)).alias("_b1"),
+        F.date_trunc(bucket, F.min("ts")).alias("_b0"),
+        F.date_trunc(bucket, F.max("ts")).alias("_b1"),
     )
     spine = (
-        facts.select(key_col).distinct()
+        facts.select("event_type").distinct()
         .crossJoin(F.broadcast(bounds))  # one-row bounds, broadcast NLJ
         .select(
-            key_col,
+            "event_type",
             F.explode(
                 F.sequence(F.col("_b0"), F.col("_b1"), F.expr(_STEP[bucket]))
             ).alias("bucket_start"),
         )
     )
     return (
-        spine.join(rollup, [key_col, "bucket_start"], "left")
+        spine.join(rollup, ["event_type", "bucket_start"], "left")
         .select(
-            key_col,
+            "event_type",
             "bucket_start",
             F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias("n_events"),
         )
     )
 
 
-def anomaly_buckets(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    bucket: str = "week",
-    factor: int = 4,
-) -> DataFrame:
+def anomaly_buckets(df: DataFrame) -> DataFrame:
     """Volume-spike detection over the gap-filled series: flag every
-    (key, bucket) whose count exceeds ``factor`` × the key's median
-    bucket count — the alert a monitoring consumer actually pages on.
+    (event_type, week) whose count exceeds 4 × the type's median
+    weekly count — the alert a monitoring consumer actually pages on.
 
     Runs on ``gapfill_counts`` output BY CONSTRUCTION: computing the
     median over occupied buckets only would inflate it for bursty keys
@@ -110,18 +99,18 @@ def anomaly_buckets(
     median agg per key, one broadcast join back onto the spine. The
     percentile state is bounded by buckets-per-key, not facts.
     """
-    filled = gapfill_counts(df, ts_col=ts_col, key_col=key_col, bucket=bucket)
-    med = filled.groupBy(key_col).agg(
+    filled = gapfill_counts(df)
+    med = filled.groupBy("event_type").agg(
         F.expr("percentile(n_events, 0.5)").alias("median_n"))
     return (
-        filled.join(F.broadcast(med), key_col)
+        filled.join(F.broadcast(med), "event_type")
         .select(
-            key_col,
+            "event_type",
             "bucket_start",
             "n_events",
             "median_n",
             (F.col("n_events").cast("double")
-             > F.lit(float(factor)) * F.col("median_n")).alias("is_spike"),
+             > F.lit(4.0) * F.col("median_n")).alias("is_spike"),
         )
     )
 
@@ -130,10 +119,9 @@ def build_distinct_sketches(
     df: DataFrame,
     keys: tuple[str, ...],
     value_col: str,
-    lg_config_k: int = 12,
 ) -> DataFrame:
     """Per-key HyperLogLog++ sketches for distinct counting — the
-    RE-AGGREGATABLE rollup primitive: store one ~2^lg_config_k-register
+    RE-AGGREGATABLE rollup primitive: store one ~2^12-register
     sketch per fine-grained key (cell × week, source × day, ...) and any
     coarser distinct count comes from merging sketches, never from
     re-scanning raw data. That is the pattern that makes "monthly unique
@@ -146,14 +134,13 @@ def build_distinct_sketches(
     so they are partitioning- and order-independent (pytest-pinned).
     """
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_config_k)).alias("sketch")
+        F.hll_sketch_agg(value_col, F.lit(12)).alias("sketch")
     )
 
 
 def merge_distinct_sketches(
     sketches: DataFrame,
     rollup_keys: tuple[str, ...],
-    sketch_col: str = "sketch",
 ) -> DataFrame:
     """Merge stored sketches to a coarser grain: (rollup_keys...,
     est_distinct). Union of HLL sketches is register-wise max — lossless
@@ -161,7 +148,7 @@ def merge_distinct_sketches(
     raw data, exactly), so rollups never compound error."""
     return (
         sketches.groupBy(*rollup_keys)
-        .agg(F.hll_union_agg(sketch_col).alias("_m"))
+        .agg(F.hll_union_agg("sketch").alias("_m"))
         .select(
             *rollup_keys,
             F.hll_sketch_estimate("_m").cast("bigint").alias("est_distinct"),
@@ -169,12 +156,7 @@ def merge_distinct_sketches(
     )
 
 
-def rolling_active_sketches(
-    events: DataFrame,
-    window_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def rolling_active_sketches(events: DataFrame, window_days: int = 7) -> DataFrame:
     """DAU + trailing-window active users per day from HLL sketches —
     the DAU/WAU/MAU board without ever re-scanning raw events: the fact
     table is touched ONCE (one day-keyed sketch build); every trailing
@@ -193,7 +175,7 @@ def rolling_active_sketches(
     data (trailing windows anchored on observed days only).
     """
     by_day = events.select(
-        F.col(ts_col).cast("date").alias("day"), F.col(user_col).alias("u")
+        F.col("ts").cast("date").alias("day"), F.col("user_id").alias("u")
     )
     sk = by_day.groupBy("day").agg(
         F.hll_sketch_agg("u").alias("sketch")
@@ -218,7 +200,6 @@ def cusum_changepoint(
     counts: DataFrame,
     key_cols: list,
     order_col: str = "week",
-    val_col: str = "n",
     min_points: int = 8,
 ) -> DataFrame:
     """Per-key CUSUM changepoint estimate over an ordered count series,
@@ -256,7 +237,7 @@ def cusum_changepoint(
     keys = [F.col(k) for k in key_cols]
     w = Window.partitionBy(*keys).orderBy(F.asc(order_col))
     wall = Window.partitionBy(*keys)
-    x = F.col(val_col).cast("long")
+    x = F.col("n").cast("long")
     base = (
         counts.withColumn("_t", F.row_number().over(w).cast("long"))
         .withColumn("_prefix", F.sum(x).over(
@@ -287,15 +268,7 @@ def cusum_changepoint(
     )
 
 
-def mann_kendall(
-    counts: DataFrame,
-    key_cols: list,
-    order_col: str = "day",
-    val_col: str = "n",
-    min_points: int = 8,
-    z_num: int = 49,
-    z_den: int = 25,
-) -> DataFrame:
+def mann_kendall(counts: DataFrame, key_cols: list, min_points: int = 8) -> DataFrame:
     """Per-key Mann–Kendall monotonic trend test in EXACT integer
     arithmetic (Mann 1945 / Kendall 1975, public; the standard trend
     detector for environmental and spatio-temporal series). CUSUM asks
@@ -311,9 +284,9 @@ def mann_kendall(
         18·Var(S) = n(n−1)(2n+5) − Σ_ties t(t−1)(2t+5)
 
     and the continuity-corrected z-test |S| ≥ 1, z = (|S|−1)/√Var >
-    z_num/z_den squared into the integer gate
+    49/25 = 1.96 squared into the integer gate
 
-        18·(|S|−1)²·z_den² > z_num²·var18.
+        18·(|S|−1)²·25² > 49²·var18.
 
     Output per key with ≥ ``min_points`` observations: (key…, n_points,
     s_stat, var18, trend ∈ {−1,0,1}, is_sig ∈ {0,1}). No sqrt, no
@@ -325,11 +298,10 @@ def mann_kendall(
     ~10²–10³), never by the fact table; tie groups are one (key, value)
     rollup. Three keyed shuffles total, all decomposable.
     """
-    keys = [F.col(k) for k in key_cols]
     base = counts.select(
         *key_cols,
-        F.col(order_col).alias("_o"),
-        F.col(val_col).cast("long").alias("_x"),
+        F.col("day").alias("_o"),
+        F.col("n").cast("long").alias("_x"),
     )
     a = base.select(*key_cols, F.col("_o").alias("_oa"),
                     F.col("_x").alias("_xa"))
@@ -360,8 +332,8 @@ def mann_kendall(
     absm1 = F.abs(F.col("s_stat")) - 1
     sig = (
         (F.abs(F.col("s_stat")) >= 1)
-        & (F.lit(18) * absm1 * absm1 * F.lit(z_den * z_den)
-           > F.lit(z_num * z_num) * var18)
+        & (F.lit(18) * absm1 * absm1 * F.lit(25 * 25)
+           > F.lit(49 * 49) * var18)
     )
     return j.select(
         *key_cols,
@@ -373,20 +345,14 @@ def mann_kendall(
     )
 
 
-def theil_sen_slope(
-    counts: DataFrame,
-    key_cols: list,
-    order_col: str = "day",
-    val_col: str = "n",
-    min_points: int = 6,
-) -> DataFrame:
+def theil_sen_slope(counts: DataFrame, key_cols: list) -> DataFrame:
     """Per-key Theil–Sen slope — the robust trend MAGNITUDE companion to
     ``mann_kendall`` (Theil 1950 / Sen 1968, public; MK answers "is
     there a trend", Sen answers "how steep"): the median of all pairwise
     slopes (x_j − x_i)/(t_j − t_i), insensitive to up to ~29% outliers
     where least squares is wrecked by one.
 
-    Exactness contract: t is epoch DAYS of ``order_col`` (integer), so
+    Exactness contract: t is epoch DAYS of ``day`` (integer), so
     every pairwise slope is the exact rational num/den (den > 0). The
     median is the LOWER median of the N = T(T−1)/2 fractions under the
     order (num/den AS DOUBLE, num, den) — the double quotient is
@@ -405,9 +371,9 @@ def theil_sen_slope(
 
     base = counts.select(
         *key_cols,
-        F.datediff(F.col(order_col), F.lit("1970-01-01").cast("date"))
+        F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
         .cast("long").alias("_t"),
-        F.col(val_col).cast("long").alias("_x"),
+        F.col("n").cast("long").alias("_x"),
     )
     a = base.select(*key_cols, F.col("_t").alias("_ta"),
                     F.col("_x").alias("_xa"))
@@ -439,7 +405,7 @@ def theil_sen_slope(
     med = ranked.where(F.col("_rn") == F.expr("(_np + 1) div 2"))
     return (
         med.join(n_df, key_cols)
-        .where(F.col("_npts") >= F.lit(min_points))
+        .where(F.col("_npts") >= F.lit(6))
         .select(
             *key_cols,
             F.col("_np").alias("n_pairs"),

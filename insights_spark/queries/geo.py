@@ -365,7 +365,7 @@ def _q_grid_cells(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     return (
-        pts.withColumn("cell", grid_cell_col(F.col("lon"), F.col("lat"), 4))
+        pts.withColumn("cell", grid_cell_col(F.col("lon"), F.col("lat")))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -452,7 +452,7 @@ def _q_theil_sen(spark, sf_dir):
             F.expr("_mid div 1000"),
         ).otherwise(F.lit(0))).cast("long").alias("n"),
     )
-    return theil_sen_slope(wk, ["cell"], "day", "n", min_points=6)
+    return theil_sen_slope(wk, ["cell"])
 
 
 @query("mann_kendall", headline=True, oracle=f"""
@@ -532,7 +532,7 @@ def _q_mann_kendall(spark, sf_dir):
             F.expr("_mid div 1000"),
         ).otherwise(F.lit(0))).cast("long").alias("n"),
     )
-    return mann_kendall(wk, ["cell"], "day", "n", min_points=6)
+    return mann_kendall(wk, ["cell"], min_points=6)
 
 
 @query("od_flows", headline=True, oracle=f"""
@@ -562,7 +562,7 @@ def _q_od_flows(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     pts = _points(ev, "event_id")
-    return od_flows(pts, res=0, id_col="event_id")
+    return od_flows(pts, id_col="event_id")
 
 
 @query("cusum", headline=True, oracle=f"""
@@ -612,7 +612,7 @@ def _q_cusum(spark, sf_dir):
         .alias("cell"),
         F.date_trunc("day", F.col("ts")).alias("day"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    return cusum_changepoint(wk, ["cell"], "day", "n", min_points=6)
+    return cusum_changepoint(wk, ["cell"], "day", min_points=6)
 
 
 @query("bbox_area", oracle="""
@@ -754,7 +754,7 @@ def _q_hex_smooth(spark, sf_dir):
     counts = pts.groupBy(
         cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
-    return hex_focal_smooth(counts, cell_col="cell", cnt_col="n")
+    return hex_focal_smooth(counts)
 
 
 @query("cell_clusters", headline=True, oracle=f"""
@@ -1038,7 +1038,7 @@ def _q_home_cells(spark, sf_dir):
     pts = _points(
         _t(spark, sf_dir, "events").select("event_id", "user_id"), "event_id"
     )
-    return home_cells(pts, res=1)
+    return home_cells(pts)
 
 
 # incremental merge == full recompute: the full-pyramid SQL IS the oracle
@@ -1861,4 +1861,4 @@ def _q_quad_compact(spark, sf_dir):
                 F.col("y").cast("long").alias("y"))
         .distinct()
     )
-    return compact_tile_cover(t7, levels=2)
+    return compact_tile_cover(t7)

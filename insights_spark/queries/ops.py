@@ -594,8 +594,7 @@ def _q_asof_join(spark, sf_dir):
         ("user_id", "ts"), "snap_id", "snap_id",
     )
     return asof_join(
-        ev, snaps, on="user_id", left_ts="ts", right_ts="ts",
-        right_cols=["snap_id"],
+        ev, snaps, on="user_id", right_cols=["snap_id"],
     )
 
 
@@ -689,7 +688,7 @@ def _q_approx_quantile(spark, sf_dir):
     from insights_spark.ops.stats import approx_quantile_gate
 
     return approx_quantile_gate(
-        _t(spark, sf_dir, "documents"), "n_chars", ["lang"], q=0.5
+        _t(spark, sf_dir, "documents"), "n_chars", ["lang"]
     )
 
 
@@ -1087,7 +1086,7 @@ def _q_equi_depth_hist(spark, sf_dir):
     groupBy). approx=True is the t-digest scale path, same shape."""
     from insights_spark.runtime.profile import equi_depth_histogram
 
-    return equi_depth_histogram(_t(spark, sf_dir, "orders"), "o_totalprice", 8)
+    return equi_depth_histogram(_t(spark, sf_dir, "orders"), "o_totalprice")
 
 
 @query("sketch_rollup", headline=True, oracle=None)
@@ -1825,11 +1824,11 @@ def _q_propagate_relations(spark, sf_dir):
 def _snapshot_table_fixture(spark, sf_dir, tag):
     """Build a SnapshotTable (runtime/tablefmt.py) from `documents` with a
     3-commit history — the catalog-lane fixture shared by the tablefmt
-    queries. Commits: (1) append evens ts=100, (2) MERGE keep_last of the
-    mod-3 docs with n_chars+1000 ts=200 (updates evens∩mod3, inserts odd
-    mod3 — keep_first would give a DIFFERENT answer, so the oracle pins the
-    precedence rule), (3) overwrite with a 1-row tombstone ts=300 (so
-    time-travel reads must survive a logically-destroyed table)."""
+    queries. Commits: (1) append evens ts=100, (2) MERGE of the mod-3 docs
+    with n_chars+1000 ts=200 (new rows win: updates evens∩mod3, inserts
+    odd mod3, so the oracle pins the precedence rule), (3) overwrite with
+    a 1-row tombstone ts=300 (so time-travel reads must survive a
+    logically-destroyed table)."""
     import hashlib
     import shutil
 
@@ -1844,7 +1843,7 @@ def _snapshot_table_fixture(spark, sf_dir, tag):
     t.merge(
         docs.filter(F.col("doc_id") % 3 == 0)
         .withColumn("n_chars", F.col("n_chars") + F.lit(1000)),
-        keys=["doc_id"], mode="keep_last", ts=200,
+        keys=["doc_id"], ts=200,
     )
     t.overwrite(
         docs.filter(F.col("doc_id") == 0).limit(1), ts=300
@@ -1972,7 +1971,7 @@ def _q_anomaly_weeks(spark, sf_dir):
         .withColumn("_k", F.explode(F.sequence(F.lit(1), F.lit(9))))
         .select("event_type", "ts")
     )
-    return anomaly_buckets(ev.unionByName(burst), factor=4)
+    return anomaly_buckets(ev.unionByName(burst))
 
 
 def _layout_qcell(level: int = 3) -> int:

@@ -702,7 +702,7 @@ def _q_bm25(spark, sf_dir):
     from insights_spark.text.rank import bm25_scores, query_terms_by_df
 
     docs = _t(spark, sf_dir, "documents")
-    return bm25_scores(docs, query_terms_by_df(docs, n_terms=8, max_df=50))
+    return bm25_scores(docs, query_terms_by_df(docs))
 
 
 @query("hybrid_search", headline=True, oracle=f"""
@@ -744,7 +744,7 @@ def _q_hybrid_search(spark, sf_dir):
     from insights_spark.text.simsearch import dot, norm
 
     docs = _t(spark, sf_dir, "documents")
-    bm = bm25_scores(docs, query_terms_by_df(docs, n_terms=8, max_df=50))
+    bm = bm25_scores(docs, query_terms_by_df(docs))
     emb = _t(spark, sf_dir, "embeddings")
     qv = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv")
@@ -953,7 +953,7 @@ def _q_novelty(spark, sf_dir):
     shuffle, division is one IEEE op on exact integers."""
     from insights_spark.text.freq import novelty_scores
 
-    return novelty_scores(_t(spark, sf_dir, "documents"), n=3)
+    return novelty_scores(_t(spark, sf_dir, "documents"))
 
 
 _gaz_vals = ", ".join(
@@ -1193,7 +1193,7 @@ def _q_cos_near_dups_lsh(spark, sf_dir):
     par = spark.sparkContext.defaultParallelism
     cand = embedding_lsh_candidates(emb, n_bits=36, bands=6).persist()
     pairs = embedding_near_dups_lsh(
-        emb, threshold=0.4, n_bits=36, bands=6, candidates=cand
+        emb, n_bits=36, bands=6, candidates=cand
     ).persist()
 
     m_mod = 1 << 20
@@ -1669,7 +1669,7 @@ def _q_fuzzy_join(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", title.alias("title")
     )
-    return fuzzy_pairs(d, id_col="doc_id", str_col="title")
+    return fuzzy_pairs(d)
 
 
 _QUANTIZE_SQL = """
@@ -1938,7 +1938,7 @@ def _q_frame_schedule(spark, sf_dir):
     from insights_spark.text.multimodal import frame_sample, media_from_docs
 
     media = media_from_docs(_t(spark, sf_dir, "documents"))
-    return frame_sample(media, every_ms=1000).select(
+    return frame_sample(media).select(
         F.col("media_id").cast("long").alias("media_id"),
         F.col("frame_idx").cast("int").alias("frame_idx"),
         F.col("ts_ms").cast("long").alias("ts_ms"),
@@ -2006,7 +2006,7 @@ def _q_phash_pairs(spark, sf_dir):
     from insights_spark.text.multimodal import media_from_docs, phash_near_dups
 
     media = media_from_docs(_t(spark, sf_dir, "documents"))
-    return phash_near_dups(media, max_hamming=3, bands=4, use_codec=False)
+    return phash_near_dups(media, use_codec=False)
 
 
 @query("rep_filters", headline=True, oracle=f"""
@@ -2060,7 +2060,7 @@ def _q_rep_filters(spark, sf_dir):
     from insights_spark.text.quality import repetition_scores
 
     return repetition_scores(
-        _t(spark, sf_dir, "documents"), gram_n=2
+        _t(spark, sf_dir, "documents")
     ).select(
         "doc_id",
         "n_tokens",
@@ -2370,7 +2370,7 @@ def _q_minhash_vs_index(spark, sf_dir):
     )
     batch = sigs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
     index = sigs.filter(F.pmod(F.col("doc_id"), F.lit(3)) != 0)
-    return minhash_vs_index(batch, index, threshold=0.5)
+    return minhash_vs_index(batch, index)
 
 
 @query("triangles", headline=True, oracle=f"""
@@ -2893,7 +2893,7 @@ def _q_pagerank(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     nodes = docs.select(F.col("doc_id").alias("id"))
-    pr = pagerank_fixed_point(nodes, _doc_graph(docs), iters=5)
+    pr = pagerank_fixed_point(nodes, _doc_graph(docs))
     return pr.select(F.col("id").alias("doc_id"),
                      F.col("score").alias("score_fp"))
 

@@ -20,7 +20,6 @@ a year — compact periodically or keep in Iceberg where metadata handles it.
 
 from __future__ import annotations
 
-import os
 import uuid
 from datetime import datetime, timezone
 
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import CHECKPOINTS
 from ..session import local_df
+from .sinks import has_parquet
 
 
 class CheckpointStore:
@@ -36,13 +36,8 @@ class CheckpointStore:
         self.spark = spark
         self.path = path
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for root, _d, fs in os.walk(self.path) for f in fs
-        )
-
     def read_all(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet(self.path):
             return local_df(self.spark, [], CHECKPOINTS)
         return self.spark.read.schema(CHECKPOINTS).parquet(self.path)
 

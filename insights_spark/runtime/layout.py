@@ -48,8 +48,6 @@ KEY_COL = "s2_key"
 def cluster_spatial(
     df: DataFrame,
     out_path: str,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     level: int = 14,
     partitions: int | None = None,
 ) -> None:
@@ -63,7 +61,7 @@ def cluster_spatial(
     """
     spark = df.sparkSession
     n = partitions or spark.sparkContext.defaultParallelism
-    key = s2_udf(level)(F.col(lon_col), F.col(lat_col)).alias(KEY_COL)
+    key = s2_udf(level)(F.col("lon"), F.col("lat")).alias(KEY_COL)
     tagged = df.select("*", key)
     (
         tagged.repartitionByRange(n, F.col(KEY_COL))

@@ -44,10 +44,10 @@ def partition_counts(df: DataFrame) -> DataFrame:
 
 
 class LineageLog:
-    def __init__(self, spark: SparkSession, path: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.run_id = run_id or new_run_id()
+        self.run_id = new_run_id()
 
     def record(self, stage: str, df_in: DataFrame | None, df_out: DataFrame,
                sequence: int | None = None) -> None:

@@ -17,10 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
-def column_profile(
-    df: DataFrame, columns: list[str] | None = None, approx: bool = False
-) -> DataFrame:
-    """Profile columns: (col_name, n_rows, n_null, n_distinct, min_str,
+def column_profile(df: DataFrame, approx: bool = False) -> DataFrame:
+    """Profile every column: (col_name, n_rows, n_null, n_distinct, min_str,
     max_str, min_num, max_num).
 
     Numeric columns report min/max as DOUBLE (min_num/max_num; exact value
@@ -29,7 +27,7 @@ def column_profile(
     everywhere). NULLs are excluded from distinct counts (SQL semantics on
     both engines).
     """
-    cols = columns or [f.name for f in df.schema.fields]
+    cols = [f.name for f in df.schema.fields]
     by_name = {f.name: f.dataType for f in df.schema.fields}
     aggs = [F.count(F.lit(1)).cast("bigint").alias("_n")]
     for c in cols:
@@ -70,14 +68,12 @@ def column_profile(
     return one.select(F.explode(F.array(*per_col)).alias("p")).select("p.*")
 
 
-def equi_depth_histogram(
-    df: DataFrame, col: str, buckets: int = 8, approx: bool = False
-) -> DataFrame:
+def equi_depth_histogram(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     """Equal-population histogram of a numeric column — the optimizer-
     style column statistic (equi-depth beats equi-width under skew: every
     bucket carries ~n/k rows, so selectivity estimates stay honest).
 
-    Boundaries are the exact interpolated percentiles at k/buckets
+    Eight buckets; boundaries are the exact interpolated percentiles at k/8
     (Spark `percentile` == DuckDB quantile_cont — the
     lang_quality_median parity precedent); pass approx=True to swap in
     approx_percentile (t-digest) for the 100 TB single-pass path, same
@@ -90,7 +86,7 @@ def equi_depth_histogram(
     boundary values (global min/max at the edges); empty buckets
     (possible under heavy value duplication) are omitted.
     """
-    fracs = ", ".join(str(k / buckets) for k in range(1, buckets))
+    fracs = ", ".join(str(k / 8) for k in range(1, 8))
     fn = "approx_percentile" if approx else "percentile"
     bounds = df.filter(F.col(col).isNotNull()).agg(
         F.expr(f"{fn}({col}, array({fracs}))").alias("_bs"),
@@ -99,7 +95,7 @@ def equi_depth_histogram(
     )
     v = F.col(col).cast("double")
     bucket = F.lit(1)
-    for k in range(1, buckets):
+    for k in range(1, 8):
         bucket = bucket + (v > F.element_at("_bs", k)).cast("int")
     counts = (
         df.filter(F.col(col).isNotNull())
@@ -111,7 +107,7 @@ def equi_depth_histogram(
     lo = F.when(F.col("bucket") == 1, F.col("_lo")).otherwise(
         F.element_at("_bs", F.col("bucket") - 1)
     )
-    hi = F.when(F.col("bucket") == buckets, F.col("_hi")).otherwise(
+    hi = F.when(F.col("bucket") == 8, F.col("_hi")).otherwise(
         F.element_at("_bs", F.col("bucket"))
     )
     return (

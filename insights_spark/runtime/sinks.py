@@ -1,9 +1,9 @@
 """Idempotent sink semantics — the reference's upsert triad, table-ified.
 
-Reference sinks (SURVEY §2.1 S10-S12), each one MERGE rule (`merge_rows`):
-- S10 ``ON CONFLICT DO NOTHING`` on (id,version,type)   → merge keep_first
-- S11 ``ON CONFLICT ... DO UPDATE SET ...``              → merge keep_last
-- S12 delete-then-insert replay (changesets)             → merge keep_last
+Reference sinks (SURVEY §2.1 S10-S12):
+- S10 ``ON CONFLICT DO NOTHING`` on (id,version,type)   → append_dedup
+- S11 ``ON CONFLICT ... DO UPDATE SET ...``              → merge (`merge_rows`)
+- S12 delete-then-insert replay (changesets)             → merge (`merge_rows`)
 
 On Iceberg these are one ``MERGE INTO`` each; this sandbox has no catalog,
 so `ParquetSinks` models MERGE as read-existing → `merge_rows` → atomic
@@ -25,20 +25,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def merge_rows(old: DataFrame | None, new: DataFrame, keys: list[str],
-               mode: str = "keep_last") -> DataFrame:
-    """The MERGE precedence rule: one row per key of old ∪ new.
+def has_parquet(path: str) -> bool:
+    """Whether the directory at `path` holds a parquet file (a table)."""
+    return any(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs)
 
-    mode='keep_first': existing rows win (ON CONFLICT DO NOTHING, S10).
-    mode='keep_last' : new rows win (DO UPDATE / delete-then-insert, S11/S12).
-    `old=None` is the empty table, so a first write still keeps one row
-    per key. Rows are tagged `_gen` 0 (old) / 1 (new) and `row_number`
-    over the key picks the winning generation."""
+
+def merge_rows(old: DataFrame | None, new: DataFrame, keys: list[str]) -> DataFrame:
+    """The MERGE precedence rule: one row per key of old ∪ new, new rows
+    win (DO UPDATE / delete-then-insert, S11/S12). `old=None` is the
+    empty table, so a first write still keeps one row per key. Rows are
+    tagged `_gen` 0 (old) / 1 (new) and `row_number` over the key picks
+    the newest generation."""
     tagged = new.withColumn("_gen", F.lit(1))
     if old is not None:
         tagged = old.withColumn("_gen", F.lit(0)).unionByName(tagged)
-    gen = F.asc("_gen") if mode == "keep_first" else F.desc("_gen")
-    w = Window.partitionBy(*keys).orderBy(gen)
+    w = Window.partitionBy(*keys).orderBy(F.desc("_gen"))
     return (
         tagged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -53,12 +54,6 @@ class ParquetSinks:
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
-    def _existing(self, path: str) -> DataFrame | None:
-        """The table at `path`, or None while it holds no parquet file."""
-        if not any(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs):
-            return None
-        return self.spark.read.parquet(path)
-
     @staticmethod
     def _publish(df: DataFrame, path: str) -> None:
         """Atomic publish: write beside, swap directories (Iceberg gets this
@@ -71,10 +66,9 @@ class ParquetSinks:
         os.rename(tmp, path)
         shutil.rmtree(backup, ignore_errors=True)
 
-    def merge(self, df: DataFrame, path: str, keys: list[str],
-              mode: str = "keep_last") -> None:
+    def merge(self, df: DataFrame, path: str, keys: list[str]) -> None:
         """MERGE df into the parquet table at `path` on `keys` (`merge_rows`)."""
-        old = self._existing(path)
+        old = self.read(path)
         if old is not None:
             # fast path: when no batch key collides with an existing row,
             # MERGE degenerates to INSERT — dedup the batch internally and
@@ -89,7 +83,7 @@ class ParquetSinks:
             if conflicts == 0:
                 batch.write.mode("append").parquet(path)
                 return
-        self._publish(merge_rows(old, df, keys, mode), path)
+        self._publish(merge_rows(old, df, keys), path)
 
     def merge_sum(self, df: DataFrame, path: str, keys: list[str],
                   sum_cols: list[str]) -> None:
@@ -98,7 +92,7 @@ class ParquetSinks:
         of an additive aggregate, so a batch contributes O(batch)
         aggregation work instead of recomputing the rollup over all
         history."""
-        old = self._existing(path)
+        old = self.read(path)
         rows = df if old is None else old.unionByName(df)
         self._publish(
             rows.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols]), path)
@@ -124,7 +118,7 @@ class ParquetSinks:
         write to 3 tasks — cluster on the full composite so all shuffle
         partitions stay busy."""
         batch = df.dropDuplicates(keys)
-        old = self._existing(path)
+        old = self.read(path)
         if old is not None:
             batch = batch.join(old.select(*keys), keys, "left_anti")
         if cluster_by:
@@ -146,5 +140,6 @@ class ParquetSinks:
         w.parquet(path)
         return batch
 
-    def read(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+    def read(self, path: str) -> DataFrame | None:
+        """The table at `path`, or None while it holds no parquet file."""
+        return self.spark.read.parquet(path) if has_parquet(path) else None

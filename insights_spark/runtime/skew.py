@@ -19,8 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, cols: list[str], buckets: int, salt_col: str = "_salt") -> DataFrame:
-    return df.withColumn(salt_col, F.pmod(F.hash(*cols), F.lit(buckets)))
+def with_salt(df: DataFrame, cols: list[str], buckets: int) -> DataFrame:
+    return df.withColumn("_salt", F.pmod(F.hash(*cols), F.lit(buckets)))
 
 
 def salted_agg(

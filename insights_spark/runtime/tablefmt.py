@@ -141,45 +141,38 @@ class SnapshotTable:
             fh.write(body)
         return sid
 
-    def _write_data(self, df: DataFrame, sid_hint: int,
-                    sort_by: list[str] | None = None) -> tuple[str, int]:
-        """Write one immutable data dir; returns (relpath, rows).
-        `sort_by` clusters rows within write tasks (parquet min/max pages
-        then serve those predicates — the X3 physical-layout hook)."""
+    def _write_data(self, df: DataFrame, sid_hint: int) -> tuple[str, int]:
+        """Write one immutable data dir; returns (relpath, rows)."""
         rel = f"c{sid_hint}-{uuid.uuid4().hex[:8]}"
         full = os.path.join(self._data, rel)
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
         df.write.mode("overwrite").parquet(full)
         rows = self.spark.read.parquet(full).count()
         return rel, rows
 
-    def _retrying(self, build_dirs, operation: str, ts: int | None,
-                  max_retries: int = 5) -> int:
+    def _retrying(self, build_dirs, operation: str, ts: int | None) -> int:
         """Optimistic-retry loop shared by append/overwrite/merge.
 
         `build_dirs(parent)` returns (dirs, summary); on CommitConflict the
         builder runs again against the NEW current snapshot — appends just
         re-list, merges genuinely re-merge (their read set changed)."""
-        for _ in range(max_retries):
+        for _ in range(5):
             parent = self.current_snapshot_id()
             dirs, summary = build_dirs(parent)
             try:
                 return self._commit(dirs, operation, summary, ts, parent)
             except CommitConflict:
                 continue
-        raise CommitConflict(f"lost {max_retries} commit races on {self.path}")
+        raise CommitConflict(f"lost 5 commit races on {self.path}")
 
     # ---- write operations -----------------------------------------
     def append(self, df: DataFrame, ts: int | None = None,
-               sort_by: list[str] | None = None,
                extra_summary: dict | None = None) -> int:
         """Commit df as new rows (Iceberg `append`): new dirs only, the
         parent's dirs carried forward untouched. `extra_summary` lands in
         the manifest's summary — the hook streaming sinks use to stamp
         their epoch id for exactly-once replay detection."""
         parent0 = self.current_snapshot_id()
-        rel, rows = self._write_data(df, (parent0 or 0) + 1, sort_by=sort_by)
+        rel, rows = self._write_data(df, (parent0 or 0) + 1)
 
         def build(parent):
             base = [] if parent is None else self._load(parent)["dirs"]
@@ -202,18 +195,14 @@ class SnapshotTable:
 
         return self._retrying(build, "replace", ts)
 
-    def merge(self, df: DataFrame, keys: list[str], mode: str = "keep_last",
-              ts: int | None = None) -> int:
-        """MERGE INTO on `keys` (`runtime.sinks.merge_rows`, S10-S12),
-        committed as a replace snapshot. Unlike the directory swap, a
-        reader pinned to the parent snapshot keeps its files.
-
-        mode='keep_first' = ON CONFLICT DO NOTHING; 'keep_last' = DO
-        UPDATE."""
+    def merge(self, df: DataFrame, keys: list[str], ts: int | None = None) -> int:
+        """MERGE INTO on `keys` (`runtime.sinks.merge_rows`: new rows win,
+        S11/S12), committed as a replace snapshot. Unlike the directory
+        swap, a reader pinned to the parent snapshot keeps its files."""
 
         def build(parent):
             old = None if parent is None else self.read(snapshot_id=parent)
-            rel, rows = self._write_data(merge_rows(old, df, keys, mode),
+            rel, rows = self._write_data(merge_rows(old, df, keys),
                                          (parent or 0) + 1)
             return [rel], {"merged_rows": rows}
 
@@ -259,21 +248,17 @@ class SnapshotTable:
         n = target_partitions or self.spark.sparkContext.defaultParallelism
         return self.overwrite(cur.coalesce(n), ts=ts)
 
-    def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Drop all but the newest `keep_last` manifests and delete data
-        dirs no kept manifest references — the only deletion path.
-        Returns the removed dirs (lineage accounting)."""
+    def expire_snapshots(self) -> list[str]:
+        """Drop all but the newest manifest and delete data dirs it does
+        not reference — the only deletion path. Returns the removed dirs
+        (lineage accounting)."""
         cur = self.current_snapshot_id()
         if cur is None:
             return []
-        keep = set(range(max(1, cur - keep_last + 1), cur + 1))
-        live: set[str] = set()
-        for sid in keep:
-            live.update(self._load(sid)["dirs"])
+        live = set(self._load(cur)["dirs"])
         removed = []
-        for sid in range(1, cur + 1):
-            if sid not in keep:
-                os.remove(self._snap_path(sid))
+        for sid in range(1, cur):
+            os.remove(self._snap_path(sid))
         for d in os.listdir(self._data):
             if d not in live:
                 shutil.rmtree(os.path.join(self._data, d))

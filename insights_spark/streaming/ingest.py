@@ -30,22 +30,16 @@ from ..schemas import PAGES
 from ..geo import tiles
 
 
-def read_pages_stream(spark: SparkSession, pages_dir: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
+def read_pages_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
     """File-source stream over a pages parquet directory (ordered batches)."""
     return (
         spark.readStream.schema(PAGES)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 8)
         .parquet(pages_dir)
     )
 
 
-def stream_extract_elements(
-    pages_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    boundary_rows: list[dict] | None = None,
-):
+def stream_extract_elements(pages_stream: DataFrame, out_dir: str, checkpoint_dir: str):
     """Stream pages → enriched element rows, idempotent parquet sink.
 
     foreachBatch dedups on (id, version, type) within the batch and appends;
@@ -55,7 +49,7 @@ def stream_extract_elements(
     """
     from .. import extract, synth
 
-    rows_b = boundary_rows or synth.gen_boundaries()
+    rows_b = synth.gen_boundaries()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         enriched = extract.extract_elements_enriched(batch_df, rows_b)
@@ -75,11 +69,10 @@ def stream_extract_elements(
 
 def edit_density_stream(
     elements_stream: DataFrame,
-    z: int = 6,
     window: str = "10 minutes",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Stateful windowed edit density per tile with late-data watermark.
+    """Stateful windowed edit density per z=6 tile with a 30-minute
+    late-data watermark.
 
     Input: a stream of element rows carrying `timestamp`, `lat`, `lon`.
     Output: (window, z, x, y, edits) — append-mode compatible once the
@@ -88,30 +81,26 @@ def edit_density_stream(
     """
     pts = (
         elements_stream.filter(F.col("lat").isNotNull())
-        .withColumn("x", tiles.tile_x(F.col("lon"), z))
-        .withColumn("y", tiles.tile_y(F.col("lat"), z))
+        .withColumn("x", tiles.tile_x(F.col("lon"), 6))
+        .withColumn("y", tiles.tile_y(F.col("lat"), 6))
         # watermarks require TIMESTAMP (ltz); session tz is UTC so the cast
         # from the engine's TIMESTAMP_NTZ columns is value-preserving
         .withColumn("_event_ts", F.col("timestamp").cast("timestamp"))
     )
     return (
-        pts.withWatermark("_event_ts", watermark)
+        pts.withWatermark("_event_ts", "30 minutes")
         .groupBy(F.window("_event_ts", window).alias("window"), "x", "y")
         .agg(F.count(F.lit(1)).alias("edits"))
-        .select("window", F.lit(z).alias("z"), "x", "y", "edits")
+        .select("window", F.lit(6).alias("z"), "x", "y", "edits")
     )
 
 
-def stream_dedup_pages(
-    pages_stream: DataFrame,
-    key: str = "url",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: first occurrence per key within the watermark
-    horizon — the streaming twin of ``text.dedup.exact_dedup`` for a
+def stream_dedup_pages(pages_stream: DataFrame) -> DataFrame:
+    """Streaming exact dedup: first occurrence per url within a 1-hour
+    watermark horizon — the streaming twin of ``text.dedup.exact_dedup`` for a
     continuously-arriving crawl.
 
-    ``dropDuplicatesWithinWatermark`` keys state on `key` and expires it
+    ``dropDuplicatesWithinWatermark`` keys state on `url` and expires it
     once the event-time watermark passes, so state stays bounded by the
     key arrival rate × horizon — the crawl-scale answer to an unbounded
     distinct. Replayed/duplicate fetches inside the horizon are dropped;
@@ -120,51 +109,40 @@ def stream_dedup_pages(
     """
     return (
         pages_stream.withColumn("_event_ts", F.col("warc_ts").cast("timestamp"))
-        .withWatermark("_event_ts", watermark)
-        .dropDuplicatesWithinWatermark([key])
+        .withWatermark("_event_ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["url"])
         .drop("_event_ts")
     )
 
 
-def session_stream(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def session_stream(events_stream: DataFrame) -> DataFrame:
     """Streaming sessionization — the stateful twin of
     ``ops.sessions.sessionize``: Spark's native ``session_window`` merges
     events of one user into dynamic-length sessions that CLOSE when no
-    event arrives within `gap`; the watermark finalizes (and expires the
-    state of) sessions once event time passes session_end + watermark, so
-    state is bounded by the number of OPEN sessions per key — never the
+    event arrives within 30 minutes; the 2-hour watermark finalizes (and
+    expires the state of) sessions once event time passes session_end +
+    2h, so state is bounded by the number of OPEN sessions per key — never the
     history (ST4 posture).
 
     Output: (session (start,end struct), user_id, n_events). Semantics
-    note vs the batch operator: session_window's end = last event + gap
+    note vs the batch operator: session_window's end = last event + 30 min
     (the half-open close boundary), where batch `sessionize` reports
     min/max event ts; the session MEMBERSHIP (which events group together,
     strict-gap rule) is identical — the equivalence test pins membership
     counts, not the boundary convention.
     """
-    ev = events_stream.withColumn("_event_ts", F.col(ts_col).cast("timestamp"))
+    ev = events_stream.withColumn("_event_ts", F.col("ts").cast("timestamp"))
     return (
-        ev.withWatermark("_event_ts", watermark)
+        ev.withWatermark("_event_ts", "2 hours")
         .groupBy(
-            F.session_window(F.col("_event_ts"), gap).alias("session"),
-            F.col(user_col).alias("user_id"),
+            F.session_window(F.col("_event_ts"), "30 minutes").alias("session"),
+            F.col("user_id"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )
 
 
-def stream_source_cap(
-    docs_stream: DataFrame,
-    max_per_source: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def stream_source_cap(docs_stream: DataFrame, max_per_source: int) -> DataFrame:
     """Streaming per-domain cap — a CUSTOM stateful operator
     (``applyInPandasWithState``): admit at most `max_per_source` docs per
     source across the WHOLE stream. No built-in expresses this —
@@ -173,7 +151,7 @@ def stream_source_cap(
     explicit: loaded per micro-batch per key, incremented by the rows
     admitted, persisted by the state store.
 
-    Within a micro-batch rows are admitted in ascending `id_col` order
+    Within a micro-batch rows are admitted in ascending `doc_id` order
     (deterministic given the batch); across batches admission follows
     arrival order — the honest streaming semantics of a crawl-frontier
     cap (the batch `text.clean.per_source_cap` is the content-stable
@@ -184,7 +162,7 @@ def stream_source_cap(
     """
     import pandas as pd
 
-    out_schema = f"{source_col} string, {id_col} long"
+    out_schema = "source string, doc_id long"
     state_schema = "n long"
 
     def cap_fn(key, pdfs, state):
@@ -202,16 +180,16 @@ def stream_source_cap(
             state.update((n,))
             return
         rows = pd.concat(chunks, ignore_index=True)
-        take = rows.sort_values(id_col).head(max_per_source - n)
+        take = rows.sort_values("doc_id").head(max_per_source - n)
         state.update((n + len(take),))
         if len(take):
-            out = take[[id_col]].copy()
-            out.insert(0, source_col, key[0])
+            out = take[["doc_id"]].copy()
+            out.insert(0, "source", key[0])
             yield out
 
     return (
-        docs_stream.select(source_col, id_col)
-        .groupBy(source_col)
+        docs_stream.select("source", "doc_id")
+        .groupBy("source")
         .applyInPandasWithState(
             cap_fn, out_schema, state_schema, "append", "NoTimeout"
         )
@@ -222,8 +200,6 @@ def stream_interval_join(
     left_stream: DataFrame,
     right_stream: DataFrame,
     max_span_seconds: int,
-    watermark: str = "1 hour",
-    chunk_seconds: int | None = None,
     left_cols: tuple[str, str, str] = ("id", "start_ts", "end_ts"),
     right_cols: tuple[str, str, str] = ("id", "start_ts", "end_ts"),
 ) -> DataFrame:
@@ -236,7 +212,7 @@ def stream_interval_join(
 
     * stream-stream joins REQUIRE an equality predicate — supplied by the
       SAME chunk bucketing as the batch operator (explode into
-      ``chunk_seconds`` buckets, join on chunk id), with the batch
+      ``max_span_seconds`` buckets, join on chunk id), with the batch
       operator's canonical-chunk rule (emit only from the chunk holding
       max(a_start, b_start)) giving exactly-once output with no
       streaming-side dedup state;
@@ -245,13 +221,12 @@ def stream_interval_join(
       max_span_seconds`` (violating rows are dropped here, loudly; the
       batch operator has no such bound), which makes overlap imply
       ``b_start ∈ [a_start - S, a_start + S]``. State per side is then
-      bounded by rows within watermark + S of the stream clock.
+      bounded by rows within the 1-hour watermark + S of the stream clock.
 
     Output: (a, b, a_start, b_start) — the batch operator's columns;
     membership parity on contract-compliant data is pytest-pinned.
     """
-    s = int(max_span_seconds)
-    chunk = int(chunk_seconds or max_span_seconds)
+    s = chunk = int(max_span_seconds)
     span = F.expr(f"INTERVAL {s} SECONDS")
 
     def shape(df, cols, side):
@@ -267,7 +242,7 @@ def stream_interval_join(
             .filter(
                 (F.col(en) >= F.col(st)) & (F.col(en) <= F.col(st) + span)
             )
-            .withWatermark(st, watermark)
+            .withWatermark(st, "1 hour")
         )
         c0 = F.floor(F.col(st).cast("long") / chunk)
         c1 = F.floor(F.col(en).cast("long") / chunk)
@@ -299,23 +274,18 @@ def stream_interval_join(
     )
 
 
-def stream_cell_counts(
-    events_stream: DataFrame,
-    res: int = 1,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
+def stream_cell_counts(events_stream: DataFrame) -> DataFrame:
     """Streaming per-cell activity rollup — the geo twin of the batch
     hex-cell count (the input shape of hex_smooth / cell_clusters /
     frontier_cells), maintained continuously as events arrive.
 
     State argument (why a running aggregate is scale-safe HERE when an
     unbounded distinct is not): the state is one counter per OCCUPIED
-    hex cell, and the cell grid is finite — ≤ ~3k cells at res 1,
-    ≤ 4^z-bounded at any res — so state is bounded by the GRID, not the
-    stream length. That is the same boundedness that makes the batch
-    rollup safe, carried over verbatim; no watermark is needed because
-    nothing ever needs to expire. Equivalence with the batch rollup is
+    hex cell, and the cell grid is finite — ≤ ~3k cells at res 1 — so
+    state is bounded by the GRID, not the stream length. That is the
+    same boundedness that makes the batch rollup safe, carried over
+    verbatim; no watermark is needed because nothing ever needs to
+    expire. Equivalence with the batch rollup is
     pinned in tests (same counts per cell once the bounded fixture
     drains).
     """
@@ -323,11 +293,11 @@ def stream_cell_counts(
 
     return (
         events_stream.filter(
-            F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
+            F.col("lon").isNotNull() & F.col("lat").isNotNull()
         )
         .groupBy(
-            cells.hex_udf(res, use_h3=False)(
-                F.col(lon_col), F.col(lat_col)
+            cells.hex_udf(1, use_h3=False)(
+                F.col("lon"), F.col("lat")
             ).alias("cell")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -338,9 +308,6 @@ def stream_funnel(
     events_stream: DataFrame,
     steps: tuple[str, ...],
     max_gap_hours: float | None = None,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Streaming conversion funnel — the stateful twin of
     ``ops.sessions.funnel_steps``: per user, advance a step cursor as
@@ -361,7 +328,7 @@ def stream_funnel(
     import pandas as pd
 
     out_schema = (
-        f"{user_col} long, step int, {type_col} string, reached_ts timestamp"
+        "user_id long, step int, event_type string, reached_ts timestamp"
     )
     state_schema = "step long, last_us long"
     gap_us = (
@@ -376,9 +343,9 @@ def stream_funnel(
         if not chunks:
             state.update((step, last_us))
             return
-        rows = pd.concat(chunks, ignore_index=True).sort_values(ts_col)
+        rows = pd.concat(chunks, ignore_index=True).sort_values("ts")
         out = []
-        for ts, et in zip(rows[ts_col], rows[type_col]):
+        for ts, et in zip(rows["ts"], rows["event_type"]):
             if step >= len(steps):
                 break
             t_us = int(pd.Timestamp(ts).value // 1000)
@@ -395,25 +362,19 @@ def stream_funnel(
         state.update((int(step), int(last_us)))
         if out:
             yield pd.DataFrame(
-                out, columns=[user_col, "step", type_col, "reached_ts"]
+                out, columns=["user_id", "step", "event_type", "reached_ts"]
             )
 
     return (
-        events_stream.select(user_col, ts_col, type_col)
-        .groupBy(user_col)
+        events_stream.select("user_id", "ts", "event_type")
+        .groupBy("user_id")
         .applyInPandasWithState(
             funnel_fn, out_schema, state_schema, "append", "NoTimeout"
         )
     )
 
 
-def stream_od_flows(
-    points_stream: DataFrame,
-    res: int = 0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def stream_od_flows(points_stream: DataFrame) -> DataFrame:
     """Streaming origin–destination moves — the stateful twin of
     ``geo.track.od_flows``: per-user LAST-POSITION state carried across
     micro-batches by ``applyInPandasWithState``. No built-in stateful
@@ -434,10 +395,10 @@ def stream_od_flows(
     from insights_spark.geo.cells import hex_udf
 
     pts = points_stream.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
+        F.col("user_id"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
+        hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
         .alias("cell"),
     )
     out_schema = "user_id long, cell_from long, cell_to long"

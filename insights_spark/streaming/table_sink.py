@@ -72,7 +72,6 @@ def stream_to_snapshot_table(
     stream_df: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    keys: list[str] | None = None,
     trigger_once: bool = False,
 ):
     """Start a streaming query writing `stream_df` into the snapshot
@@ -81,7 +80,7 @@ def stream_to_snapshot_table(
     writer = (
         stream_df.writeStream
         .foreachBatch(
-            lambda df, eid: commit_epoch(table_path, df, eid, keys=keys))
+            lambda df, eid: commit_epoch(table_path, df, eid))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
@@ -90,14 +89,7 @@ def stream_to_snapshot_table(
     return writer.start()
 
 
-def commit_scd2_epoch(
-    table_path: str,
-    batch_df: DataFrame,
-    epoch_id: int,
-    keys: tuple[str, ...] = ("type", "id"),
-    version_col: str = "version",
-    ts_col: str = "timestamp",
-) -> bool:
+def commit_scd2_epoch(table_path: str, batch_df: DataFrame, epoch_id: int) -> bool:
     """Idempotently apply one micro-batch of VERSION rows to a stored
     SCD2 dimension — streaming dimension maintenance.
 
@@ -115,16 +107,14 @@ def commit_scd2_epoch(
     t = SnapshotTable(batch_df.sparkSession, table_path)
     if epoch_id in committed_epochs(t):
         return False
-    batch = batch_df.select(*keys, version_col, ts_col).dropDuplicates(
-        [*keys, version_col]
+    batch = batch_df.select("type", "id", "version", "timestamp").dropDuplicates(
+        ["type", "id", "version"]
     )
-    cols = [*keys, version_col, "valid_from", "valid_to", "is_current"]
+    cols = ["type", "id", "version", "valid_from", "valid_to", "is_current"]
     if t.current_snapshot_id() is None:
-        merged = scd2_intervals(batch, keys, version_col, ts_col).select(*cols)
+        merged = scd2_intervals(batch).select(*cols)
     else:
-        merged = scd2_merge(
-            t.read().select(*cols), batch, keys, version_col, ts_col
-        )
+        merged = scd2_merge(t.read().select(*cols), batch)
     t.overwrite(merged, extra_summary={"epoch": int(epoch_id)})
     return True
 
@@ -133,9 +123,6 @@ def stream_scd2_to_table(
     version_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    keys: tuple[str, ...] = ("type", "id"),
-    version_col: str = "version",
-    ts_col: str = "timestamp",
     trigger_once: bool = False,
 ):
     """Start a streaming query maintaining an SCD2 dimension from a live
@@ -144,10 +131,7 @@ def stream_scd2_to_table(
     writer = (
         version_stream.writeStream
         .foreachBatch(
-            lambda df, eid: commit_scd2_epoch(
-                table_path, df, eid, keys, version_col, ts_col
-            )
-        )
+            lambda df, eid: commit_scd2_epoch(table_path, df, eid))
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_once:

@@ -212,13 +212,13 @@ def _element_xml(rng: random.Random, base_id: int, seq: int, wrap: bool,
 # pages table
 # ---------------------------------------------------------------------------
 
-def gen_pages(n_pages: int = 60, seed: int = 42) -> list[dict]:
+def gen_pages(n_pages: int = 60) -> list[dict]:
     """Generate pages rows: url, warc_ts, html(binary), text(golden), lang."""
     rows = []
     next_cs = 100
     next_el = 10_000
     for seq in range(n_pages):
-        rng = random.Random(seed * 1_000_003 + seq)
+        rng = random.Random(42 * 1_000_003 + seq)
         r = seq % 3
         if r == 0:
             kind = "changeset-dump"
@@ -291,11 +291,11 @@ def gen_boundaries() -> list[dict]:
     ]
 
 
-def pages_df(spark, n_pages: int = 60, seed: int = 42):
+def pages_df(spark, n_pages: int = 60):
     from .schemas import PAGES
     from .session import local_df
 
-    rows = [tuple(p[f] for f in PAGES.names) for p in gen_pages(n_pages, seed)]
+    rows = [tuple(p[f] for f in PAGES.names) for p in gen_pages(n_pages)]
     return local_df(spark, rows, PAGES)
 
 
@@ -346,7 +346,7 @@ def gen_page_dist(seq: int, seed: int = 42) -> dict:
     }
 
 
-def pages_df_dist(spark, n_pages: int, seed: int = 42, partitions: int | None = None):
+def pages_df_dist(spark, n_pages: int, partitions: int | None = None):
     """Distributed deterministic pages table: generation itself runs on
     executors (mapInPandas over a range), so fixture size scales with the
     cluster instead of the driver."""
@@ -358,7 +358,7 @@ def pages_df_dist(spark, n_pages: int, seed: int = 42, partitions: int | None = 
 
     def gen(batches):
         for pdf in batches:
-            rows = [gen_page_dist(int(s), seed) for s in pdf["id"]]
+            rows = [gen_page_dist(int(s)) for s in pdf["id"]]
             yield pd.DataFrame(rows, columns=[f.name for f in PAGES.fields])
 
     return (

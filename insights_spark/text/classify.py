@@ -28,21 +28,15 @@ from pyspark.sql import functions as F
 from .quality import doc_fingerprint, tokens
 
 
-def token_weight(tok: Column, spread: int = 97) -> Column:
-    """Deterministic integer weight in [-spread//2, spread//2] from the
+def token_weight(tok: Column) -> Column:
+    """Deterministic integer weight in [-48, 48] from the
     portable poly-hash of the token — the self-contained stand-in for a
     trained model's exported weight (the fixture ships no .bin; the
     lookup/rollup plumbing is what's under test)."""
-    return (doc_fingerprint(tok) % spread - spread // 2).cast("long")
+    return (doc_fingerprint(tok) % 97 - 48).cast("long")
 
 
-def classifier_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    spread: int = 97,
-    weights: DataFrame | None = None,
-) -> DataFrame:
+def classifier_score(docs: DataFrame, weights: DataFrame | None = None) -> DataFrame:
     """Score every document with the linear model; emit
     (id, n_tokens, score, keep).
 
@@ -53,22 +47,22 @@ def classifier_score(
     Docs with no tokens carry no evidence and are not scored.
     """
     tok_rows = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
+        docs.filter(F.col("text").isNotNull())
+        .select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
     )
     if weights is None:
         weights = (
             tok_rows.select("tok").distinct()
-            .withColumn("w", token_weight(F.col("tok"), spread))
+            .withColumn("w", token_weight(F.col("tok")))
         )
     agg = (
         tok_rows.join(F.broadcast(weights), "tok")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("w").alias("_sw"), F.count("*").alias("_n"))
     )
     return agg.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_n").cast("long").alias("n_tokens"),
-        (F.col("_sw") / (F.lit(float(spread)) * F.col("_n"))).alias("score"),
+        (F.col("_sw") / (F.lit(97.0) * F.col("_n"))).alias("score"),
         (F.col("_sw") > 0).alias("keep"),
     )

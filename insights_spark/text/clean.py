@@ -27,53 +27,33 @@ from .dedup import exact_dedup, ngram_jaccard_pairs
 from .quality import lang_id, quality_scores
 
 
-def clean_corpus(
-    docs: DataFrame,
-    min_tokens: int = 5,
-    min_uniq_ratio: float = 0.2,
-    langs: tuple[str, ...] = ("en", "de", "fr"),
-    jaccard_threshold: float = 0.5,
-    max_gram_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def clean_corpus(docs: DataFrame) -> DataFrame:
     """Kept documents after the full cleaning chain:
     (doc_id, lang_pred, n_tokens)."""
-    scored = lang_id(quality_scores(docs, text_col=text_col), text_col=text_col)
+    scored = lang_id(quality_scores(docs))
     # persisted (r6, interleaved A/B ~8%): the gate feeds both the
     # exact-dedup branch and the survivor semi-join — without the pin the
     # quality+lang scoring chain runs twice
     gated = scored.filter(
-        (F.col("n_tokens") >= F.lit(min_tokens))
-        & (F.col("uniq_token_ratio") >= F.lit(min_uniq_ratio))
-        & F.col("lang_pred").isin(*langs)
+        (F.col("n_tokens") >= F.lit(5))
+        & (F.col("uniq_token_ratio") >= F.lit(0.2))
+        & F.col("lang_pred").isin("en", "de", "fr")
     ).persist()
-    reps = exact_dedup(gated, id_col=id_col, text_col=text_col).select(id_col)
+    reps = exact_dedup(gated).select("doc_id")
     # NOT persisted (r6 cold-cache A/B): surv feeds the gram pass and the
     # final anti-join, but both re-derive cheaply from the cached gate —
     # materializing surv's full-text rows costs more than the semi-join
     # recompute (cold min-of-4 interleaved: gate-only 4.09 s vs
     # gate+surv 4.77 s vs none 5.50 s)
-    surv = gated.join(reps, id_col, "left_semi")
-    near = ngram_jaccard_pairs(
-        surv,
-        threshold=jaccard_threshold,
-        max_gram_df=max_gram_df,
-        id_col=id_col,
-        text_col=text_col,
-    )
-    dropped = near.select(F.col("b").alias(id_col)).distinct()
-    return surv.join(dropped, id_col, "left_anti").select(
-        id_col, "lang_pred", "n_tokens"
+    surv = gated.join(reps, "doc_id", "left_semi")
+    near = ngram_jaccard_pairs(surv, max_gram_df=50)
+    dropped = near.select(F.col("b").alias("doc_id")).distinct()
+    return surv.join(dropped, "doc_id", "left_anti").select(
+        "doc_id", "lang_pred", "n_tokens"
     )
 
 
-def train_test_split(
-    docs: DataFrame,
-    test_permille: int = 100,
-    id_col: str = "doc_id",
-    seed: int = 7,
-) -> DataFrame:
+def train_test_split(docs: DataFrame, test_permille: int = 100) -> DataFrame:
     """Deterministic content-stable train/test split: adds a `split` column
     ('train'/'test') keyed on a multiplicative hash of the document id —
     NOT on row position or RNG, so the assignment survives repartitioning,
@@ -84,7 +64,7 @@ def train_test_split(
     `test_permille`/1000 of the id space goes to test. Pure column
     arithmetic (one codegen'd expression, no shuffle, no UDF), and exactly
     reproducible in ANSI SQL — the driver oracle replays the identical
-    `mod(id*1000003+seed, 1000)` bucket on DuckDB.
+    `mod(id*1000003+7, 1000)` bucket on DuckDB.
 
     At 100 TB: this is a map-only stamp; downstream writers partition by
     `split` so the two corpora land in separate file sets with zero extra
@@ -94,7 +74,7 @@ def train_test_split(
     # (mod m), so values are identical, but the product can no longer
     # overflow int64 at 10^10-doc id scale (where Spark would wrap silently
     # and ANSI engines would error — the hashes would diverge cross-engine)
-    bucket = F.pmod(F.pmod(F.col(id_col), F.lit(1000)) * 1000003 + seed,
+    bucket = F.pmod(F.pmod(F.col("doc_id"), F.lit(1000)) * 1000003 + 7,
                     F.lit(1000))
     return docs.withColumn(
         "split",
@@ -102,13 +82,7 @@ def train_test_split(
     )
 
 
-def cluster_safe_split(
-    clusters: DataFrame,
-    test_permille: int = 100,
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
-    seed: int = 7,
-) -> DataFrame:
+def cluster_safe_split(clusters: DataFrame) -> DataFrame:
     """Leakage-free train/test split: bucket by the near-dup CLUSTER id,
     not the doc id, so a document and every near-duplicate of it land in
     the SAME split — the eval set can never contain a near-copy of a
@@ -125,20 +99,15 @@ def cluster_safe_split(
     Output: (doc_id, cluster_id, split).
     """
     bucket = F.pmod(
-        F.pmod(F.col(cluster_col), F.lit(1000)) * 1000003 + seed, F.lit(1000)
+        F.pmod(F.col("cluster_id"), F.lit(1000)) * 1000003 + 7, F.lit(1000)
     )
-    return clusters.select(id_col, cluster_col).withColumn(
+    return clusters.select("doc_id", "cluster_id").withColumn(
         "split",
-        F.when(bucket < test_permille, F.lit("test")).otherwise(F.lit("train")),
+        F.when(bucket < 100, F.lit("test")).otherwise(F.lit("train")),
     )
 
 
-def per_source_cap(
-    docs: DataFrame,
-    max_per_source: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def per_source_cap(docs: DataFrame, max_per_source: int) -> DataFrame:
     """Per-domain document cap — the C4-style crawl-balance rule: keep at
     most `max_per_source` docs per source/domain so no single host dominates
     the corpus. The kept set is DETERMINISTIC and content-stable: ranked by
@@ -155,9 +124,9 @@ def per_source_cap(
 
     # (id mod 2³¹)·k ≡ id·k (mod 2³¹): same values, but the product stays
     # ≤ (2³¹−1)·2654435761 < 2⁶³ — no silent int64 wrap at 10^10-doc ids
-    h = F.pmod(F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + 17,
+    h = F.pmod(F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
                F.lit(1 << 31))
-    w = Window.partitionBy(source_col).orderBy(h.asc(), F.col(id_col).asc())
+    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         docs.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= max_per_source)
@@ -165,12 +134,7 @@ def per_source_cap(
     )
 
 
-def per_source_cap_arrival(
-    docs: DataFrame,
-    max_per_source: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def per_source_cap_arrival(docs: DataFrame, max_per_source: int) -> DataFrame:
     """Per-domain cap with ASCENDING-ID admission — the batch twin of
     ``streaming.ingest.stream_source_cap``: a whole corpus presented as one
     micro-batch admits exactly the lowest `max_per_source` ids per source,
@@ -183,7 +147,7 @@ def per_source_cap_arrival(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(source_col).orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("source").orderBy(F.col("doc_id").asc())
     return (
         docs.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= max_per_source)
@@ -191,12 +155,7 @@ def per_source_cap_arrival(
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    per_stratum: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def stratified_sample(docs: DataFrame, per_stratum: int) -> DataFrame:
     """Balanced per-stratum sample: exactly min(per_stratum, stratum size)
     docs from each stratum (language, source, quality bucket …), picked by
     deterministic hash rank — the training-mix balancing step (e.g. equal
@@ -208,9 +167,9 @@ def stratified_sample(
     """
     from pyspark.sql.window import Window
 
-    h = F.pmod(F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + 29,
+    h = F.pmod(F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 29,
                F.lit(1 << 31))  # overflow-safe, value-identical (see cap)
-    w = Window.partitionBy(stratum_col).orderBy(h.asc(), F.col(id_col).asc())
+    w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         docs.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= per_stratum)
@@ -218,15 +177,10 @@ def stratified_sample(
     )
 
 
-def budget_select(
-    docs: DataFrame,
-    token_budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def budget_select(docs: DataFrame, token_budget: int) -> DataFrame:
     """Token-budget corpus selection: take documents in quality order
     (descending unique-token ratio, the repetition-penalizing proxy every
-    web pipeline has some flavor of; ``id_col`` tiebreak) until the
+    web pipeline has some flavor of; ``doc_id`` tiebreak) until the
     cumulative token count reaches ``token_budget`` — the "best N tokens"
     draw a training run makes from an over-sized corpus.
 
@@ -243,33 +197,27 @@ def budget_select(
     from .pack import global_cumsum
     from .quality import tokens
 
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     n_tok = F.size(tok)
     d = (
-        docs.filter(F.col(text_col).isNotNull())
+        docs.filter(F.col("text").isNotNull())
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             n_tok.cast("long").alias("n_tokens"),
             (F.size(F.array_distinct(tok)) / n_tok).alias("_uniq"),
         )
         .filter(F.col("n_tokens") > 0)
     )
     cum = global_cumsum(
-        d, "n_tokens", [F.desc("_uniq"), F.asc(id_col)], out_col="cum_tokens"
+        d, "n_tokens", [F.desc("_uniq"), F.asc("doc_id")], out_col="cum_tokens"
     )
     return (
         cum.filter(F.col("cum_tokens") <= int(token_budget))
-        .select(id_col, "n_tokens", F.col("cum_tokens").cast("long").alias("cum_tokens"))
+        .select("doc_id", "n_tokens", F.col("cum_tokens").cast("long").alias("cum_tokens"))
     )
 
 
-def boilerplate_flags(
-    docs: DataFrame,
-    seg_tokens: int = 10,
-    min_df: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boilerplate_flags(docs: DataFrame, seg_tokens: int = 10) -> DataFrame:
     """CCNet-style boilerplate detection: cross-document duplicate
     segments (nav bars, cookie banners, footers) flagged by document
     frequency. The fixture text has no newlines, so "lines" are
@@ -277,7 +225,7 @@ def boilerplate_flags(
     same primitive, content-defined instead of layout-defined.
 
     Shape: segment → one content-keyed aggregation (distinct-doc count
-    per segment) → the small ``df >= min_df`` boilerplate dictionary
+    per segment) → the small ``df >= 2`` boilerplate dictionary
     joined back (AQE broadcasts it when it fits — the dictionary is the
     frequent-ITEM set, orders of magnitude smaller than the corpus) →
     one doc-keyed rollup. Shuffle volume is O(corpus tokens), keyed by
@@ -293,35 +241,35 @@ def boilerplate_flags(
     from .quality import tokens
 
     s = seg_tokens
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     base = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), toks.alias("toks"))
+        docs.filter(F.col("text").isNotNull())
+        .select(F.col("doc_id"), toks.alias("toks"))
         .filter(F.size("toks") > 0)
     )
     segs = F.transform(
         F.sequence(F.lit(1), F.ceil(F.size("toks") / F.lit(float(s))).cast("int")),
         lambda j: F.concat_ws(" ", F.slice(F.col("toks"), (j - 1) * s + 1, s)),
     )
-    seg_rows = base.select(id_col, F.explode(segs).alias("line"))
+    seg_rows = base.select("doc_id", F.explode(segs).alias("line"))
     boiler = (
         seg_rows.groupBy("line")
-        .agg(F.countDistinct(id_col).alias("df"))
-        .filter(F.col("df") >= min_df)
+        .agg(F.countDistinct("doc_id").alias("df"))
+        .filter(F.col("df") >= 2)
         .select("line", F.lit(True).alias("_isb"))
     )
     flagged = seg_rows.join(boiler, "line", "left")
     isb = F.coalesce(F.col("_isb"), F.lit(False))
     seg_toks = F.size(F.split(F.col("line"), " "))
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.count("*").alias("n_segs"),
             F.sum(isb.cast("int")).alias("boiler_segs"),
             F.sum(F.when(~isb, seg_toks).otherwise(F.lit(0))).alias("kept_tokens"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("n_segs").cast("long").alias("n_segs"),
             F.col("boiler_segs").cast("long").alias("boiler_segs"),
             (F.col("boiler_segs") / F.col("n_segs")).alias("boiler_frac"),
@@ -330,13 +278,7 @@ def boilerplate_flags(
     )
 
 
-def mix_sources(
-    docs: DataFrame,
-    weights: dict[str, float],
-    total: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def mix_sources(docs: DataFrame, weights: dict[str, float], total: int) -> DataFrame:
     """Corpus mixing to target proportions — the sampling-weights knob
     every LLM training run has (Pile/LLaMA-style "x% web, y% code, z%
     wiki"): keep ⌊total·w_s/Σw⌋ documents of each source, chosen by the
@@ -359,24 +301,20 @@ def mix_sources(
     sw = sum(weights.values())
     quotas = [(s, int(total * w / sw)) for s, w in sorted(weights.items())]
     spark = docs.sparkSession
-    qdf = local_df(spark, quotas, f"{source_col} string, quota long")
-    h = F.pmod(F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + 17,
+    qdf = local_df(spark, quotas, "source string, quota long")
+    h = F.pmod(F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
                F.lit(1 << 31))
-    w = Window.partitionBy(source_col).orderBy(h.asc(), F.col(id_col).asc())
+    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
-        docs.select(id_col, source_col)
-        .join(F.broadcast(qdf), source_col)  # prunes BEFORE the window shuffle
+        docs.select("doc_id", "source")
+        .join(F.broadcast(qdf), "source")  # prunes BEFORE the window shuffle
         .withColumn("mix_rank", F.row_number().over(w))
         .filter(F.col("mix_rank") <= F.col("quota"))
-        .select(id_col, source_col, "mix_rank", "quota")
+        .select("doc_id", "source", "mix_rank", "quota")
     )
 
 
-def normalize_text_nfc(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def normalize_text_nfc(df: DataFrame) -> DataFrame:
     """Unicode + whitespace normalization — the first map of every
     crawl-text pipeline (CCNet/C4 both normalize before anything else,
     public): NFC-compose combining sequences (é as one codepoint, not
@@ -418,11 +356,11 @@ def normalize_text_nfc(
         return s.map(f)
 
     return df.select(
-        F.col(id_col),
-        F.col(text_col).alias("_orig"),
-        _norm(F.col(text_col)).alias("norm_text"),
+        F.col("doc_id"),
+        F.col("text").alias("_orig"),
+        _norm(F.col("text")).alias("norm_text"),
     ).select(
-        id_col,
+        "doc_id",
         "norm_text",
         (F.col("norm_text") != F.col("_orig")).cast("int")
         .alias("changed"),

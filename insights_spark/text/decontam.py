@@ -66,25 +66,18 @@ def _distinct_gram_hashes_udf(n: int):
     return _gh
 
 
-def contaminated_docs(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-) -> DataFrame:
+def contaminated_docs(docs: DataFrame, benchmark: DataFrame, n: int = 13) -> DataFrame:
     """(doc_id, n_bench_grams) for every doc sharing ≥1 n-gram with the
     benchmark; n_bench_grams = how many DISTINCT benchmark gram hashes the
     doc contains."""
     gh = _distinct_gram_hashes_udf(n)
     bench_grams = (
-        benchmark.select(F.explode(gh(F.col(bench_text_col))).alias("_gh"))
+        benchmark.select(F.explode(gh(F.col("text"))).alias("_gh"))
         .distinct()
     )
     doc_grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(gh(F.col(text_col))).alias("_gh"),
+        F.col("doc_id"),
+        F.explode(gh(F.col("text"))).alias("_gh"),
     )
     return (
         doc_grams.join(F.broadcast(bench_grams), "_gh")

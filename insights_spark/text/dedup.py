@@ -47,24 +47,24 @@ def normalized(text: Column) -> Column:
     return F.regexp_replace(F.lower(text), r"\s+", " ")
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative per identical normalized text."""
     return (
-        df.withColumn("_norm", normalized(F.col(text_col)))
+        df.withColumn("_norm", normalized(F.col("text")))
         .groupBy("_norm")
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("dup_count"))
         .drop("_norm")
     )
 
 
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (space-joined) of the normalized text."""
+def word_ngrams(text: Column) -> Column:
+    """Distinct word 3-grams (space-joined) of the normalized text."""
     tok = tokens(text)
     # guard: Spark sequence(1, 0) DESCENDS → slice(…, 0) error on short docs
-    idx = F.sequence(F.lit(1), F.size(tok) - (n - 1))
+    idx = F.sequence(F.lit(1), F.size(tok) - 2)
     grams = F.when(
-        F.size(tok) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tok, i, n))),
+        F.size(tok) >= 3,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tok, i, 3))),
     ).otherwise(F.array().cast("array<string>"))
     return F.array_distinct(grams)
 
@@ -84,7 +84,7 @@ def word_ngrams_np(n: int = 3):
     return _grams
 
 
-def poly_hash(col: Column, mod: int = MOD, base: int = BASE, seed: int = SEED) -> Column:
+def poly_hash(col: Column) -> Column:
     """Portable polynomial string hash (fold over characters, JVM-side).
 
     Deliberately NOT F.hash/xxhash64: those are Spark-private functions the
@@ -92,8 +92,8 @@ def poly_hash(col: Column, mod: int = MOD, base: int = BASE, seed: int = SEED) -
     engine can run."""
     chars = F.filter(F.split(col, ""), lambda c: c != "")
     return F.aggregate(
-        chars, F.lit(seed).cast("long"),
-        lambda acc, c: (acc * base + F.ascii(c)) % F.lit(mod),
+        chars, F.lit(SEED).cast("long"),
+        lambda acc, c: (acc * BASE + F.ascii(c)) % F.lit(MOD),
     )
 
 
@@ -101,14 +101,9 @@ def poly_hash(col: Column, mod: int = MOD, base: int = BASE, seed: int = SEED) -
 
 
 def _gram_overlap(
-    df: DataFrame,
-    n: int,
-    id_col: str,
-    text_col: str,
-    max_gram_df: int | None,
-    pair: Column,
+    df: DataFrame, max_gram_df: int | None, pair: Column,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared-gram counts of the doc pairs that meet ``pair`` (a predicate
+    """Shared word-3-gram counts of the doc pairs that meet ``pair`` (a predicate
     on ``a``/``b``): ``inter`` is (a, b, inter), ``sizes`` is (a, size_a),
     both over the df-capped gram sets when ``max_gram_df`` is set.
 
@@ -117,7 +112,7 @@ def _gram_overlap(
     per branch — locally a persist, at cluster scale a materialized grams
     table. Sizes via F.size (no extra shuffle) in the uncapped path."""
     ga = df.select(
-        F.col(id_col).alias("a"), word_ngrams_np(n)(F.col(text_col)).alias("_grams")
+        F.col("doc_id").alias("a"), word_ngrams_np(3)(F.col("text")).alias("_grams")
     ).persist()
     g = ga.select("a", F.explode("_grams").alias("gram"))
     if max_gram_df is not None:
@@ -207,12 +202,9 @@ def _band_self_join(banded: DataFrame) -> DataFrame:
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_gram_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 gram.
+    """Exact word-3-gram Jaccard similarity for all pairs sharing ≥1 gram.
 
     (a, b, jaccard) with a < b, jaccard ≥ threshold. Shuffle key = gram;
     pairs never materialize unless they share a gram.
@@ -226,8 +218,7 @@ def ngram_jaccard_pairs(
     grams; at scale either set the cap or run on LSH-candidate pairs only
     (see minhash_near_dups).
     """
-    inter, sizes = _gram_overlap(df, n, id_col, text_col, max_gram_df,
-                                 F.col("a") < F.col("b"))
+    inter, sizes = _gram_overlap(df, max_gram_df, F.col("a") < F.col("b"))
     return (
         inter.join(sizes, "a")
         .join(sizes.select(F.col("a").alias("b"), F.col("size_a").alias("size_b")), "b")
@@ -240,12 +231,11 @@ def ngram_jaccard_pairs(
     )
 
 
-def poly_hash_np(strings: list[str], mod: int = MOD, base: int = BASE,
-                 seed: int = SEED) -> np.ndarray:
+def poly_hash_np(strings: list[str]) -> np.ndarray:
     """Vectorized portable polynomial hash — bit-identical to poly_hash().
 
     Strings become a padded codepoint matrix; the fold runs one vectorized
-    step per character column. int64-safe: h < mod ≈ 2^30, h*31 + code
+    step per character column. int64-safe: h < MOD ≈ 2^30, h*31 + code
     ≪ 2^63."""
     if not strings:
         return np.zeros(0, dtype=np.int64)
@@ -253,14 +243,14 @@ def poly_hash_np(strings: list[str], mod: int = MOD, base: int = BASE,
     lengths = np.array([len(s) for s in strings], dtype=np.int64)
     maxlen = max(arr.dtype.itemsize // 4, 1)
     codes = arr.view(np.uint32).reshape(len(arr), -1).astype(np.int64)
-    h = np.full(len(arr), seed, dtype=np.int64)
+    h = np.full(len(arr), SEED, dtype=np.int64)
     # mask by true length, not by code>0: strings may contain NUL, which is
     # indistinguishable from numpy's fixed-width padding otherwise
     for j in range(min(maxlen, codes.shape[1])):
         live = lengths > j
         if not live.any():
             break
-        h = np.where(live, (h * base + codes[:, j]) % mod, h)
+        h = np.where(live, (h * BASE + codes[:, j]) % MOD, h)
     return h
 
 
@@ -293,15 +283,13 @@ def minhash_signature_np(num_hashes: int = 16, n: int = 3):
     return _sig
 
 
-def minhash_signature(
-    text: Column, num_hashes: int = 16, n: int = 3
-) -> Column:
+def minhash_signature(text: Column, num_hashes: int = 16) -> Column:
     """MinHash signature: array of num_hashes min-values over gram hashes.
 
     h_k(g) = (A_k * poly(g) + B_k) mod MOD with fixed odd A_k, B_k.
     Empty-gram docs get MOD (sentinel > any hash).
     """
-    grams = word_ngrams(text, n)
+    grams = word_ngrams(text)
     gh = F.transform(grams, lambda g: poly_hash(g))
     a_k, b_k = _minhash_coeffs(num_hashes)
     sigs = []
@@ -317,11 +305,7 @@ def minhash_signature(
 def minhash_near_dups(
     df: DataFrame,
     threshold: float = 0.5,
-    num_hashes: int = 16,
     bands: int = 4,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
 
@@ -334,15 +318,15 @@ def minhash_near_dups(
     """
     from pyspark.sql.functions import pandas_udf
 
-    a, b = _minhash_coeffs(num_hashes)
+    a, b = _minhash_coeffs(16)
 
     @pandas_udf("struct<grams: array<string>, sig: array<long>>")
     def _gs(texts: pd.Series) -> pd.DataFrame:
-        grams = [_word_ngrams_py(t, n) if t is not None else [] for t in texts]
+        grams = [_word_ngrams_py(t, 3) if t is not None else [] for t in texts]
         return pd.DataFrame({"grams": grams, "sig": [_minhash_np(g, a, b) for g in grams]})
 
     base = (
-        df.select(F.col(id_col).alias("_id"), _gs(F.col(text_col)).alias("_gs"))
+        df.select(F.col("doc_id").alias("_id"), _gs(F.col("text")).alias("_gs"))
         .select("_id", F.col("_gs.grams").alias("_grams"), F.col("_gs.sig").alias("_sig"))
         .persist()
     )
@@ -352,7 +336,7 @@ def minhash_near_dups(
     # exclude them from banding (the verify side keeps them — joins on
     # candidate ids only, so output is unchanged)
     cand = _band_self_join(_band_explode(
-        base.filter(F.size("_grams") > 0), _sig_band_keys("_sig", num_hashes, bands)
+        base.filter(F.size("_grams") > 0), _sig_band_keys("_sig", 16, bands)
     ))
     g = base.select(F.col("_id").alias("_gid"), F.col("_grams"))
     j = (
@@ -407,7 +391,7 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
+def with_simhash(df: DataFrame) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -415,16 +399,10 @@ def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash"
     def _sh(texts: pd.Series) -> pd.Series:
         return _simhash_batch(texts)
 
-    return df.withColumn(out_col, _sh(F.col(text_col)))
+    return df.withColumn("simhash", _sh(F.col("text")))
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = 4,
-) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_hamming: int = 3, bands: int = 4) -> DataFrame:
     """Near-dups by simhash hamming distance ≤ max_hamming.
 
     Banding (pigeonhole): distance ≤ bands-1 implies one of `bands` 16-bit
@@ -450,9 +428,9 @@ def simhash_near_dups(
     from .quality import token_count
 
     src = df.filter(
-        F.col(text_col).isNotNull() & (token_count(F.col(text_col)) > 0)
+        F.col("text").isNotNull() & (token_count(F.col("text")) > 0)
     )
-    sh = with_simhash(src, text_col).select(F.col(id_col).alias("_id"), "simhash")
+    sh = with_simhash(src).select(F.col("doc_id").alias("_id"), "simhash")
     return banded_hamming_pairs(sh, "simhash", max_hamming, bands)
 
 
@@ -491,9 +469,6 @@ def near_dup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "a",
-    b_col: str = "b",
-    max_sweeps: int = 30,
 ) -> DataFrame:
     """Near-dup pairs → duplicate CLUSTERS → canonical survivors: the step
     a real dedup pipeline runs after any pair generator (MinHash-LSH,
@@ -514,8 +489,8 @@ def near_dup_clusters(
     """
     from ..geo.vectorize import star_cc_labels
 
-    edges = pairs.select(F.col(a_col).alias("id"), F.col(b_col).alias("nbr_id"))
-    labels, _ = star_cc_labels(edges, max_sweeps)
+    edges = pairs.select(F.col("a").alias("id"), F.col("b").alias("nbr_id"))
+    labels, _ = star_cc_labels(edges, 30)
     base = docs.select(F.col(id_col))
     joined = base.join(labels.withColumnRenamed("id", id_col), id_col, "left")
     cl = F.coalesce(F.col("label"), F.col(id_col))
@@ -529,18 +504,13 @@ def near_dup_clusters(
 def minhash_vs_index(
     batch_sigs: DataFrame,
     index_sigs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
     bands: int = 4,
-    batch_id: str = "doc_id",
-    index_id: str = "doc_id",
-    sig_col: str = "sig",
 ) -> DataFrame:
     """Incremental near-dedup: NEW documents against an EXISTING corpus's
     stored MinHash signature index — the cross-corpus step the corpus job
     runs per ingest batch (its exact-hash anti-join catches verbatim
     copies; this catches near-copies) without ever re-reading indexed
-    TEXT: the index side is num_hashes longs per doc (~128 B), so the
+    TEXT: the index side is 16 longs per doc (~128 B), so the
     verify is signature-estimated Jaccard (equal-position fraction — the
     unbiased MinHash estimator), the standard at-scale compromise when
     the corpus text is cold storage.
@@ -549,12 +519,12 @@ def minhash_vs_index(
     equi-join (shuffle bounded by touched buckets — a batch touches
     O(batch × bands) buckets, never the whole index); candidate pairs
     dedup by (a, b); estimator is exact integer arithmetic (count of
-    equal positions / num_hashes, one division) so the oracle reproduces
+    equal positions / 16, one division) so the oracle reproduces
     it bit-for-bit. All-sentinel (gram-less) docs drop up front — they
     would bucket-collide with every other empty doc and verify at 1.0
     despite sharing no content.
 
-    Output: (a = batch id, b = index id, est_jaccard ≥ threshold).
+    Output: (a = batch id, b = index id, est_jaccard ≥ 0.5).
     """
     # r6 (guide §2.3 "shuffle keys, not payloads"): the band join now
     # carries ONLY (id, band, slice); the full signatures re-attach to the
@@ -563,27 +533,27 @@ def minhash_vs_index(
     # shuffle. Both sides still explode from the same upstream signature
     # frame, so callers should persist it (the entry does).
     def banded(df, idc, side):
-        s = df.filter(F.element_at(sig_col, 1) != MOD).select(
-            F.col(idc).alias("_id"), F.col(sig_col).alias("_sig")
+        s = df.filter(F.element_at("sig", 1) != MOD).select(
+            F.col(idc).alias("_id"), F.col("sig").alias("_sig")
         )
-        return _band_explode(s, _sig_band_keys("_sig", num_hashes, bands)) \
+        return _band_explode(s, _sig_band_keys("_sig", 16, bands)) \
             .withColumnRenamed("_id", side)
 
     cand = (
-        banded(batch_sigs, batch_id, "a")
-        .join(banded(index_sigs, index_id, "b"), ["band", "key"])
+        banded(batch_sigs, "doc_id", "a")
+        .join(banded(index_sigs, "doc_id", "b"), ["band", "key"])
         .select("a", "b")
         .distinct()
     )
     att = (
         cand.join(
-            batch_sigs.select(F.col(batch_id).alias("a"),
-                              F.col(sig_col).alias("_asig")),
+            batch_sigs.select(F.col("doc_id").alias("a"),
+                              F.col("sig").alias("_asig")),
             "a",
         )
         .join(
-            index_sigs.select(F.col(index_id).alias("b"),
-                              F.col(sig_col).alias("_bsig")),
+            index_sigs.select(F.col("doc_id").alias("b"),
+                              F.col("sig").alias("_bsig")),
             "b",
         )
     )
@@ -593,8 +563,8 @@ def minhash_vs_index(
         lambda acc, v: acc + v,
     )
     return (
-        att.withColumn("est_jaccard", eq / F.lit(float(num_hashes)))
-        .filter(F.col("est_jaccard") >= threshold)
+        att.withColumn("est_jaccard", eq / F.lit(16.0))
+        .filter(F.col("est_jaccard") >= 0.5)
         .select("a", "b", "est_jaccard")
     )
 
@@ -602,12 +572,9 @@ def minhash_vs_index(
 def containment_pairs(
     df: DataFrame,
     threshold: float = 0.8,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_gram_df: int | None = None,
 ) -> DataFrame:
-    """Directed n-gram containment: C(a→b) = |grams(a) ∩ grams(b)| / |grams(a)|.
+    """Directed word-3-gram containment: C(a→b) = |grams(a) ∩ grams(b)| / |grams(a)|.
 
     The quote-inclusion detector Jaccard structurally misses: a short doc
     pasted verbatim inside a much longer one has containment ≈ 1.0 while
@@ -626,8 +593,7 @@ def containment_pairs(
     sets. Docs with no grams (< n tokens) cannot appear on either side: a
     zero denominator is undefined, not 100%-contained.
     """
-    inter, sizes = _gram_overlap(df, n, id_col, text_col, max_gram_df,
-                                 F.col("a") != F.col("b"))
+    inter, sizes = _gram_overlap(df, max_gram_df, F.col("a") != F.col("b"))
     return (
         inter.join(sizes, "a")
         .withColumn("containment", F.col("inter") / F.col("size_a"))
@@ -636,12 +602,7 @@ def containment_pairs(
     )
 
 
-def passage_dedup(
-    df: DataFrame,
-    chunk_tokens: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def passage_dedup(df: DataFrame, chunk_tokens: int = 10) -> DataFrame:
     """Sub-document exact dedup — the C4/RefinedWeb "repeated passage"
     rule the whole-document detectors structurally miss: a boilerplate
     block or syndicated paragraph pasted into otherwise-distinct pages
@@ -666,7 +627,7 @@ def passage_dedup(
     """
     C = chunk_tokens
     toks = df.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tok")
+        F.col("doc_id"), tokens(F.col("text")).alias("_tok")
     ).filter(F.size("_tok") > 0)
     n_chunks = (F.size("_tok") + F.lit(C - 1)).cast("long") / F.lit(C)
     chunks = F.transform(
@@ -706,11 +667,7 @@ def passage_dedup(
     )
 
 
-def cluster_savings(
-    docs: DataFrame,
-    clusters: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cluster_savings(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Dedup accounting per near-dup cluster — the number every dedup run
     reports upward: how much does keeping one canonical doc per cluster
     actually save? Input ``clusters`` is near_dup_clusters' output
@@ -723,8 +680,8 @@ def cluster_savings(
     all integers exact.
     """
     j = clusters.select(
-        F.col(id_col).alias("doc_id"), "cluster_id"
-    ).join(docs.select(id_col, "source", "n_chars"), id_col)
+        F.col("doc_id"), "cluster_id"
+    ).join(docs.select("doc_id", "source", "n_chars"), "doc_id")
     return j.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("source").alias("n_sources"),
@@ -741,8 +698,6 @@ def prefix_jaccard_pairs(
     t_num: int = 1,
     t_den: int = 2,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """EXACT Jaccard similarity join via prefix filtering — the scalable
     exact counterpart to MinHash-LSH (Chaudhuri et al. ICDE'06 /
@@ -777,8 +732,8 @@ def prefix_jaccard_pairs(
     surviving candidate — never all-pairs.
     """
     ga = df.select(
-        F.col(id_col).alias("id"),
-        word_ngrams_np(n)(F.col(text_col)).alias("_g"),
+        F.col("doc_id").alias("id"),
+        word_ngrams_np(n)(F.col("text")).alias("_g"),
     ).where(F.size("_g") > 0).persist()
     g = ga.select("id", F.explode("_g").alias("gram"))
     dfreq = g.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("_df"))
@@ -834,23 +789,17 @@ def prefix_jaccard_pairs(
     )
 
 
-def cdc_chunks(
-    df: DataFrame,
-    window: int = 8,
-    mod_sel: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunks(df: DataFrame, window: int = 8) -> DataFrame:
     """Content-defined chunking — the rsync/LBFS rolling-hash boundary
     scheme (Muthitacharoen et al. SOSP'01, public) that underlies
     binary-level corpus dedup: a chunk boundary falls AFTER character i
     whenever the polynomial hash of the trailing ``window`` chars is
-    ≡ 0 (mod ``mod_sel``), so boundaries are anchored to CONTENT, not
+    ≡ 0 (mod 64), so boundaries are anchored to CONTENT, not
     offsets — an insertion early in a document shifts every fixed-size
     chunk but leaves all CDC chunks after the next anchor identical,
     which is what makes chunk-hash dedup robust to edits (the property
     fixed-stride ``passage_dedup`` lacks; expected chunk length ≈
-    ``mod_sel`` chars). This is the STATELESS variant — every anchor
+    64 chars). This is the STATELESS variant — every anchor
     cuts, no min/max clamp — so the chunking is a pure per-position
     predicate, reproducible in ANSI SQL.
 
@@ -868,8 +817,8 @@ def cdc_chunks(
     """
     from pyspark.sql.functions import pandas_udf
 
-    if window < 1 or mod_sel < 1:
-        raise ValueError("window and mod_sel must be >= 1")
+    if window < 1:
+        raise ValueError("window must be >= 1")
     bw = pow(BASE, window - 1, MOD)  # base^(w-1) for the rolling eviction
     # the seed contributes the CONSTANT 7·base^w to every window hash, so
     # the rolling state tracks the seedless char polynomial and the
@@ -891,11 +840,11 @@ def cdc_chunks(
                 p = 0
                 for j in range(window):
                     p = (p * BASE + codes[j]) % MOD
-                if (sw + p) % MOD % mod_sel == 0:
+                if (sw + p) % MOD % 64 == 0:
                     cuts.append(window)
                 for i in range(window, n):
                     p = ((p - codes[i - window] * bw) * BASE + codes[i]) % MOD
-                    if (sw + p) % MOD % mod_sel == 0:
+                    if (sw + p) % MOD % 64 == 0:
                         cuts.append(i + 1)
             if not cuts or cuts[-1] < n:
                 cuts.append(n)
@@ -910,7 +859,7 @@ def cdc_chunks(
         return pd.Series(out)
 
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
+        df.select(F.col("doc_id"), F.col("text").alias("_t"))
         .where(F.col("_t").isNotNull() & (F.length("_t") > 0))
         .select("doc_id", F.explode(_chunks(F.col("_t"))).alias("c"))
         .select(
@@ -923,15 +872,7 @@ def cdc_chunks(
     )
 
 
-def cdc_containment(
-    df: DataFrame,
-    min_shared_ppm: int = 200_000,
-    max_chunk_df: int = 64,
-    window: int = 8,
-    mod_sel: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_containment(df: DataFrame) -> DataFrame:
     """Chunk-level containment — the APPLICATION query of ``cdc_chunks``
     and the binary-level sibling of the gram-based ``containment_pairs``:
     two documents that share content-defined chunks share literal byte
@@ -940,26 +881,25 @@ def cdc_containment(
     any tokenizer.
 
     Candidates come ONLY from the chunk-hash equi-join on (chash, length)
-    — never all-pairs — with a ``max_chunk_df`` document-frequency cap on
+    — never all-pairs — with a 64-document frequency cap on
     chunks (boilerplate chunks shared by everything are dropped from
     CANDIDATE GENERATION exactly like hot grams in the minhash df-cap;
     the measured quantity is then shared RARE bytes, which is the
     dedup-relevant signal). Shared bytes count each DISTINCT (chash,
-    length) once per pair. Gate: shared·10⁶ ≥ ``min_shared_ppm`` ·
+    length) once per pair. Gate: shared·10⁶ ≥ 200000 ·
     min(len_a, len_b) in exact integers.
 
     Output: (a, b, shared_bytes, a_len, b_len) with a < b.
     """
     ch = (
-        cdc_chunks(df, window=window, mod_sel=mod_sel,
-                   id_col=id_col, text_col=text_col)
+        cdc_chunks(df)
         .select("doc_id", "length", "chash")
         .distinct()
     )
     keep = (
         ch.groupBy("chash", "length")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") <= F.lit(max_chunk_df))
+        .where(F.col("_df") <= F.lit(64))
         .select("chash", "length")
     )
     ch = ch.join(keep, ["chash", "length"]).persist()
@@ -972,8 +912,8 @@ def cdc_containment(
         .agg(F.sum("length").cast("long").alias("shared_bytes"))
     )
     dl = df.select(
-        F.col(id_col).alias("_d"),
-        F.length(text_col).cast("long").alias("_len"),
+        F.col("doc_id").alias("_d"),
+        F.length("text").cast("long").alias("_len"),
     ).where(F.col("_len") > 0)
     return (
         pairs.join(dl.select(F.col("_d").alias("a"),
@@ -982,7 +922,7 @@ def cdc_containment(
                         F.col("_len").alias("b_len")), "b")
         .where(
             F.col("shared_bytes") * F.lit(1_000_000)
-            >= F.lit(min_shared_ppm) * F.least("a_len", "b_len")
+            >= F.lit(200_000) * F.least("a_len", "b_len")
         )
         .select("a", "b", "shared_bytes", "a_len", "b_len")
     )

@@ -68,11 +68,7 @@ def _mg_update(counters: dict, toks: list, k: int) -> None:
                 del counters[key]
 
 
-def heavy_hitters(
-    docs: DataFrame,
-    k: int = 32,
-    text_col: str = "text",
-) -> DataFrame:
+def heavy_hitters(docs: DataFrame, k: int = 32) -> DataFrame:
     """All terms with exact global count · k > total tokens, as
     (term, n) with n EXACT — Misra–Gries bounds the candidate set, an
     exact recount of only those candidates produces the answer (see
@@ -81,7 +77,7 @@ def heavy_hitters(
     def mg_partition(batches):
         counters: dict = {}
         for pdf in batches:
-            for txt in pdf[text_col]:
+            for txt in pdf["text"]:
                 if txt is None:
                     continue
                 toks = [t for t in _WS.split(str(txt).lower()) if t]
@@ -89,11 +85,11 @@ def heavy_hitters(
         yield pd.DataFrame({"term": list(counters)})
 
     cand = (
-        docs.select(text_col)
+        docs.select("text")
         .mapInPandas(mg_partition, "term string")
         .distinct()
     )
-    exploded = docs.select(F.explode(tokens(F.col(text_col))).alias("term"))
+    exploded = docs.select(F.explode(tokens(F.col("text"))).alias("term"))
     total = exploded.agg(F.count(F.lit(1)).alias("_N"))
     return (
         exploded.join(F.broadcast(cand), "term")
@@ -105,21 +101,16 @@ def heavy_hitters(
     )
 
 
-def novelty_scores(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, n_grams, n_novel, novelty) per document with ≥ 1 n-gram:
-    novelty = fraction of the doc's DISTINCT n-grams whose corpus document
+def novelty_scores(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_grams, n_novel, novelty) per document with ≥ 1 word
+    3-gram: novelty = fraction of the doc's DISTINCT 3-grams whose corpus document
     frequency is exactly 1 (one IEEE division of two exact integers, so
-    the oracle reproduces it bit-for-bit). Docs shorter than n tokens
+    the oracle reproduces it bit-for-bit). Docs shorter than 3 tokens
     have no grams — novelty is undefined there and the rows are absent,
     mirroring containment_pairs' zero-denominator rule."""
     grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_ngrams_np(n)(F.col(text_col))).alias("gram"),
+        F.col("doc_id"),
+        F.explode(word_ngrams_np(3)(F.col("text"))).alias("gram"),
     )
     df_counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
     return (
@@ -133,12 +124,7 @@ def novelty_scores(
     )
 
 
-def top_terms_per_source(
-    docs: DataFrame,
-    k: int = 5,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def top_terms_per_source(docs: DataFrame, k: int = 5) -> DataFrame:
     """k most frequent terms PER SOURCE (ties broken by term asc) — the
     per-group top-k shape every per-domain profiling report needs, as
     distinct from the global top-k (``term_freq``'s
@@ -152,8 +138,8 @@ def top_terms_per_source(
 
     counts = (
         docs.select(
-            F.col(source_col).alias("source"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
+            F.col("source"),
+            F.explode(tokens(F.col("text"))).alias("term"),
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -168,12 +154,7 @@ def top_terms_per_source(
     )
 
 
-def token_share_curve(
-    docs: DataFrame,
-    buckets: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_share_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
     """Corpus concentration (Lorenz curve): rank documents by token count
     DESCENDING (ties by id asc) and report the cumulative token share at
     each rank decile — "the top 10% of docs hold X% of the tokens", the
@@ -189,8 +170,8 @@ def token_share_curve(
 
     t = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            token_count(F.col(text_col)).cast("long").alias("ntok"),
+            F.col("doc_id"),
+            token_count(F.col("text")).cast("long").alias("ntok"),
         )
         .filter(F.col("ntok") > 0)
         .withColumn("_one", F.lit(1).cast("long"))
@@ -221,12 +202,7 @@ def token_share_curve(
     )
 
 
-def source_drift_chi2(
-    docs: DataFrame,
-    min_count: int = 50,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_drift_chi2(docs: DataFrame, min_count: int = 50) -> DataFrame:
     """χ² drift of each source's term distribution against the corpus —
     "which domains use which vocabulary unusually often/rarely", the
     per-source distribution-shift monitor a crawl pipeline runs per
@@ -255,8 +231,8 @@ def source_drift_chi2(
     absorbs hot terms (measured r4: salting loses to map-side combine).
     """
     toks = docs.select(
-        F.col(source_col).alias("source"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("source"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     st = toks.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("long").alias("c_st"))
@@ -286,8 +262,6 @@ def cooccurrence_counts(
     docs: DataFrame,
     window: int = 5,
     min_count: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Windowed term co-occurrence counts over the heavy vocabulary — the
     integer core of PMI / GloVe / SGNS-style association statistics
@@ -305,8 +279,8 @@ def cooccurrence_counts(
     heavy-vocabulary square, not the corpus.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "term"),
+        F.col("doc_id"),
+        F.posexplode(tokens(F.col("text"))).alias("pos", "term"),
     )
     heavy = (
         toks.groupBy("term")
@@ -326,10 +300,7 @@ def cooccurrence_counts(
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
 
 
-def kn_continuation(
-    docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def kn_continuation(docs: DataFrame) -> DataFrame:
     """Kneser-Ney continuation statistics per token (Kneser & Ney 1995,
     public) — the table an LM-smoothing pipeline derives from a corpus:
 
@@ -351,8 +322,8 @@ def kn_continuation(
     pair table — no countDistinct shuffle anywhere; plus the unigram
     rollup. Three shuffles total, all on token keys, vocabulary-bounded.
     """
-    tok = docs.filter(F.col(text_col).isNotNull()).select(
-        tokens(F.col(text_col)).alias("ts")
+    tok = docs.filter(F.col("text").isNotNull()).select(
+        tokens(F.col("text")).alias("ts")
     )
     uni = tok.select(F.explode("ts").alias("token")).groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("freq")
@@ -390,10 +361,7 @@ def kn_continuation(
     )
 
 
-def freq_of_freqs(
-    docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def freq_of_freqs(docs: DataFrame) -> DataFrame:
     """Good-Turing frequency-of-frequencies table (Good 1953, public) —
     the other half of the smoothing toolchain next to
     ``kn_continuation``: N_r = how many distinct token TYPES occur
@@ -408,8 +376,8 @@ def freq_of_freqs(
     second on a tiny key space.
     """
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.filter(F.col("text").isNotNull())
+        .select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
         .groupBy("freq")

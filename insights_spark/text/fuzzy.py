@@ -42,18 +42,14 @@ def deletion_variants(s: Column) -> Column:
     )
 
 
-def fuzzy_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    str_col: str = "title",
-) -> DataFrame:
+def fuzzy_pairs(df: DataFrame) -> DataFrame:
     """Unordered pairs (a, b, dist) with levenshtein(str_a, str_b) ≤ 1
     and a < b. NULL/empty strings produce no variants beyond themselves
     and join only with their exact equals."""
     v = df.select(
-        F.col(id_col).alias("a"),
-        F.col(str_col).alias("_sa"),
-        F.explode(deletion_variants(F.col(str_col))).alias("_var"),
+        F.col("doc_id").alias("a"),
+        F.col("title").alias("_sa"),
+        F.explode(deletion_variants(F.col("title"))).alias("_var"),
     )
     w = v.select(
         F.col("a").alias("b"),
@@ -74,7 +70,6 @@ def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,
     window: int = 4,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sorted-neighborhood dedup blocking (Hernández & Stolfo SIGMOD'95,
     public) — the third blocking family next to MinHash-LSH
@@ -104,7 +99,7 @@ def sorted_neighborhood_pairs(
     from .pack import global_cumsum
 
     keyed = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.col(key_col).alias("key"),
         F.lit(1).cast("long").alias("_one"),
     )

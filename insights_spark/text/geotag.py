@@ -23,18 +23,13 @@ from pyspark.sql import functions as F
 from .quality import tokens
 
 
-def geotag_documents(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def geotag_documents(docs: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """(doc_id, country, n_mentions) for every doc with ≥ 1 gazetteer
     hit. ``gazetteer``: (tok: lowercase place token, country: canonical
     name) — assumed small, broadcast."""
     tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("tok"),
     )
     return (
         tok.join(F.broadcast(gazetteer), "tok")

@@ -38,8 +38,6 @@ def inverted_index(
     docs: DataFrame,
     min_df: int = 2,
     max_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     ngram: int = 1,
 ) -> DataFrame:
     """(term, df, posting_csv) for terms with min_df ≤ df ≤ max_df.
@@ -50,7 +48,7 @@ def inverted_index(
     index a benchmark-contamination check queries ("which training docs
     contain this multi-word benchmark string?"); higher n analogous.
     """
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     if ngram == 1:
         term_arr = tok
     else:
@@ -65,7 +63,7 @@ def inverted_index(
             )
     postings = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.explode(F.array_distinct(term_arr)).alias("term"),
         )
         .groupBy("term")

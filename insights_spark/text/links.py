@@ -64,18 +64,11 @@ def _undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_fixed_point(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iters: int = 5,
-    scale: int = SCALE,
-    d_num: int = 17,
-    d_den: int = 20,
-) -> DataFrame:
+def pagerank_fixed_point(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Fixed-point PageRank over (nodes: ``id``; edges: ``src``, ``dst``).
 
-    Returns (id, score) after ``iters`` supersteps, score in ``scale``
-    fixed-point units. Dangling nodes (no out-edges) leak their mass —
+    Returns (id, score) after 5 supersteps with damping 17/20, score in
+    ``SCALE`` fixed-point units. Dangling nodes (no out-edges) leak their mass —
     the standard simplification; deterministic either way. Multi-edges
     count multiply (both the out-degree and the contribution), matching
     the SQL mirror.
@@ -83,18 +76,18 @@ def pagerank_fixed_point(
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg"))
     # persisted: re-read by every superstep's join — without the pin the
-    # edge derivation + degree shuffle would re-execute `iters` times
+    # edge derivation + degree shuffle would re-execute once per superstep
     e = edges.join(deg, "src").persist()
     n_df = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    base = F.expr(f"{scale * (d_den - d_num)} div ({d_den} * n)")
+    base = F.expr(f"{SCALE * 3} div (20 * n)")
     cur = nodes.crossJoin(F.broadcast(n_df)).select(
-        "id", F.expr(f"{scale} div n").alias("score"))
-    for _ in range(iters):
+        "id", F.expr(f"{SCALE} div n").alias("score"))
+    for _ in range(5):
         contrib = (
             e.join(cur, e["src"] == cur["id"])
             .select(
                 F.col("dst").alias("id"),
-                F.expr(f"(score * {d_num}) div ({d_den} * outdeg)").alias("c"),
+                F.expr("(score * 17) div (20 * outdeg)").alias("c"),
             )
         )
         sums = contrib.groupBy("id").agg(F.sum("c").alias("csum"))

@@ -46,13 +46,12 @@ from .quality import tokens
 SCALE_BITS = 20
 
 
-def _bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, w1, w2) — consecutive token pairs; docs with < 2 tokens
     contribute nothing. The size-≥2 filter runs BEFORE sequence(): Spark's
     sequence(1, 0) counts DOWN, which would fabricate a reversed pair."""
     return (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    tokens(F.col(text_col)).alias("_t"))
+        docs.select("doc_id", tokens(F.col("text")).alias("_t"))
         .filter(F.size("_t") >= 2)
         .select(
             "doc_id",
@@ -71,8 +70,6 @@ def bigram_lm_scores(
     docs: DataFrame,
     train_pred,
     keep_below_milli: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_count: int = 1,
 ) -> DataFrame:
     """Score every document's fluency under a bigram LM trained on the
@@ -85,8 +82,8 @@ def bigram_lm_scores(
     ``min_count`` prunes model bigrams with c12 < min_count (KenLM-style
     prune): pruned/unseen pairs back off to c12 = 0 (pure Laplace mass).
     """
-    grams = _bigrams(docs, id_col, text_col)
-    train = _bigrams(docs.filter(train_pred), id_col, text_col)
+    grams = _bigrams(docs)
+    train = _bigrams(docs.filter(train_pred))
 
     big = (
         train.groupBy("w1", "w2")

@@ -76,13 +76,11 @@ def _decode_image(payload: bytes, use_codec: bool | None = None) -> np.ndarray:
     return arr.reshape(16, 16, 3)
 
 
-def image_features(
-    media: DataFrame, feat_dim: int = 8, use_codec: bool | None = None
-) -> DataFrame:
+def image_features(media: DataFrame, use_codec: bool | None = None) -> DataFrame:
     """Decode + feature-extract images: channel-value histogram.
 
     Output per image: exact integer bin counts (`hist`, bins of width
-    256/feat_dim) plus the normalized float feature vector (`feature` =
+    32, 8 bins) plus the normalized float feature vector (`feature` =
     hist / n_pixels — the realistic embedding-ish column).
 
     Plan shape: filter kind='image' (pushed to scan) → mapInPandas; each
@@ -90,7 +88,6 @@ def image_features(
     size (spark.sql.execution.arrow.maxRecordsPerBatch), not file count.
     """
     src = media.filter(F.col("kind") == "image").select("media_id", "payload")
-    shift = 8 - (feat_dim - 1).bit_length()  # 8 bins → >>5
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -101,7 +98,7 @@ def image_features(
                     continue
                 b = bytes(payload)
                 img = _decode_image(b, use_codec)
-                hist = np.bincount(img.reshape(-1) >> shift, minlength=feat_dim)
+                hist = np.bincount(img.reshape(-1) >> 5, minlength=8)
                 feat = (hist / max(img.size, 1)).astype(np.float32)
                 rows.append((int(mid), len(b), hist.astype(np.int32).tolist(),
                              feat.tolist()))
@@ -157,8 +154,7 @@ def audio_features(media: DataFrame) -> DataFrame:
     return src.mapInPandas(gen, AUDIO_FEATURES)
 
 
-def media_from_docs(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def media_from_docs(docs: DataFrame) -> DataFrame:
     """Deterministic media table (the ``MEDIA`` columns) derived from a
     documents table.
 
@@ -169,13 +165,13 @@ def media_from_docs(docs: DataFrame, id_col: str = "doc_id",
     SQL. The other docs become audio/video rows (payload-free stages)."""
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int"),
+        (F.pmod(F.col("doc_id"), F.lit(3)) + 1).cast("int"),
     )
     ascii_text = F.rpad(
-        F.regexp_replace(F.col(text_col), "[^ -~]", ""), _FAKE_PIXELS, "x"
+        F.regexp_replace(F.col("text"), "[^ -~]", ""), _FAKE_PIXELS, "x"
     )
     return docs.select(
-        F.col(id_col).cast("long").alias("media_id"),
+        F.col("doc_id").cast("long").alias("media_id"),
         kind.alias("kind"),
         # image AND audio rows carry the deterministic payload (video stays
         # payload-free: no stage decodes video frames)
@@ -186,7 +182,7 @@ def media_from_docs(docs: DataFrame, id_col: str = "doc_id",
         F.when(kind == "image", F.lit(16)).cast("int").alias("width"),
         F.when(kind == "image", F.lit(16)).cast("int").alias("height"),
         F.when(kind != "image",
-               (F.lit(3000) + F.pmod(F.col(id_col), F.lit(7)) * 500)
+               (F.lit(3000) + F.pmod(F.col("doc_id"), F.lit(7)) * 500)
                ).cast("int").alias("duration_ms"),
     )
 
@@ -241,18 +237,13 @@ def image_ahash(media: DataFrame, use_codec: bool | None = None) -> DataFrame:
     return src.mapInPandas(gen, AHASH)
 
 
-def phash_near_dups(
-    media: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    use_codec: bool | None = None,
-) -> DataFrame:
+def phash_near_dups(media: DataFrame, use_codec: bool | None = None) -> DataFrame:
     """Image near-dup pairs by perceptual-hash Hamming distance.
 
     aHash (image_ahash) → the SAME banded self-join as simhash text
     near-dup (dedup.banded_hamming_pairs): pigeonhole-complete for
-    distance ≤ bands-1, exact popcount verify, never all-pairs. With the
-    defaults (4 bands of 16 bits, max_hamming 3) the output is provably
+    distance ≤ 3, exact popcount verify, never all-pairs. With 4 bands
+    of 16 bits and max_hamming 3 the output is provably
     the full set of qualifying pairs, so an O(n²) SQL oracle reproduces
     it exactly at test scale.
 
@@ -270,10 +261,10 @@ def phash_near_dups(
         .filter(F.col("ahash").isNotNull() & (F.col("ahash") != 0))
         .select(F.col("media_id").alias("_id"), "ahash")
     )
-    return banded_hamming_pairs(sh, "ahash", max_hamming, bands)
+    return banded_hamming_pairs(sh, "ahash", 3, 4)
 
 
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def frame_sample(media: DataFrame) -> DataFrame:
     """Video frame sampling: emits (media_id, frame_idx, ts_ms) rows.
 
     No frame is decoded (no video codec is wired); the frame *schedule*
@@ -284,9 +275,9 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return v.select(
         "media_id",
         F.posexplode(
-            F.sequence(F.lit(0), F.greatest((F.col("duration_ms") / every_ms).cast("int") - 1,
+            F.sequence(F.lit(0), F.greatest((F.col("duration_ms") / 1000).cast("int") - 1,
                                             F.lit(0)))
         ).alias("frame_idx", "_step"),
     ).select(
-        "media_id", "frame_idx", (F.col("frame_idx") * every_ms).alias("ts_ms")
+        "media_id", "frame_idx", (F.col("frame_idx") * 1000).alias("ts_ms")
     )

@@ -43,7 +43,6 @@ def global_cumsum_multi(
     value_cols: list,
     order_exprs: list,
     out_cols: list,
-    partitions: int | None = None,
 ) -> DataFrame:
     """GLOBAL inclusive cumulative sums of several ``value_cols`` in ONE
     ``order_exprs`` scan — the textbook two-phase distributed prefix sum
@@ -60,7 +59,7 @@ def global_cumsum_multi(
     ``out_cols`` (BIGINT for integral inputs).
     """
     spark = df.sparkSession
-    n_part = partitions or spark.sparkContext.defaultParallelism
+    n_part = spark.sparkContext.defaultParallelism
     part = df.repartitionByRange(n_part, *order_exprs).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -106,35 +105,28 @@ def global_cumsum(
     value_col: str,
     order_exprs: list,
     out_col: str = "_cum_global",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Single-column wrapper over ``global_cumsum_multi`` (see there)."""
     return global_cumsum_multi(
-        df, [value_col], order_exprs, [out_col], partitions=partitions
+        df, [value_col], order_exprs, [out_col]
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    partitions: int | None = None,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     """(doc_id, seq_id, tok_start, n_toks) packing assignments.
 
     `tok_start` is DOC-LOCAL (offset of the chunk inside the document's
     own token list); `seq_id` is the global 0-based training-sequence
-    index. Docs pack in ascending `id_col` order; empty docs are skipped.
+    index. Docs pack in ascending `doc_id` order; empty docs are skipped.
     A document longer than `seq_len` spans several sequences (one row per
     sequence it touches).
     """
     t = (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    token_count(F.col(text_col)).cast("long").alias("n_toks"))
+        docs.select(F.col("doc_id"),
+                    token_count(F.col("text")).cast("long").alias("n_toks"))
         .filter(F.col("n_toks") > 0)
     )
-    cum = global_cumsum(t, "n_toks", [F.asc("doc_id")], partitions=partitions)
+    cum = global_cumsum(t, "n_toks", [F.asc("doc_id")])
 
     L = int(seq_len)
     placed = (
@@ -156,12 +148,7 @@ def pack_sequences(
     )
 
 
-def corpus_shuffle(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    seed: int = 17,
-    partitions: int | None = None,
-) -> DataFrame:
+def corpus_shuffle(docs: DataFrame) -> DataFrame:
     """Deterministic global training-order shuffle: every doc gets a
     reproducible pseudo-random position (`shuffle_rank`, 0-based) — the
     order a sequential writer emits pretraining examples in. Keyed on the
@@ -178,28 +165,20 @@ def corpus_shuffle(
     # wrap-before-multiply keeps the product in int64 at 10^10-doc ids
     # (identical values mod 1e9+7; see train_test_split for the argument)
     h = F.pmod(
-        F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + seed,
+        F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
         F.lit(1_000_000_007),
     )
-    d = docs.select(F.col(id_col)).withColumn("_hk", h).withColumn(
+    d = docs.select(F.col("doc_id")).withColumn("_hk", h).withColumn(
         "_one", F.lit(1).cast("long")
     )
     ranked = global_cumsum(
-        d, "_one", [F.asc("_hk"), F.asc(id_col)], out_col="_rank1",
-        partitions=partitions,
-    )
+        d, "_one", [F.asc("_hk"), F.asc("doc_id")], out_col="_rank1")
     return ranked.select(
-        id_col, (F.col("_rank1") - 1).cast("long").alias("shuffle_rank")
+        "doc_id", (F.col("_rank1") - 1).cast("long").alias("shuffle_rank")
     )
 
 
-def sliding_windows(
-    docs: DataFrame,
-    window: int = 64,
-    stride: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def sliding_windows(docs: DataFrame, window: int = 64, stride: int = 32) -> DataFrame:
     """Overlapping context windows — the chunking step in front of every
     embedding/retrieval indexer (and the stride-overlap variant of
     pack_sequences' disjoint packing): window starts at 0, stride,
@@ -216,7 +195,7 @@ def sliding_windows(
     """
     S, W = int(stride), int(window)
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tok")
+        F.col("doc_id"), tokens(F.col("text")).alias("_tok")
     ).filter(F.size("_tok") > 0)
     n_win = F.floor((F.size("_tok") - 1) / F.lit(S)).cast("long") + 1
     wins = F.transform(
@@ -241,19 +220,12 @@ def sliding_windows(
     )
 
 
-def curriculum_order(
-    docs: DataFrame,
-    bands: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 17,
-    partitions: int | None = None,
-) -> DataFrame:
+def curriculum_order(docs: DataFrame) -> DataFrame:
     """Curriculum training order: quality-banded, highest band first,
     deterministic hash shuffle WITHIN each band — the standard curriculum
     schedule (clean data early) without sacrificing within-band mixing.
 
-    Band = floor(uniq_token_ratio · bands) clamped to bands-1 — a VALUE
+    Band = floor(uniq_token_ratio · 10) clamped to 9 — a VALUE
     band, not a rank band (ntile would need a global sort of ranks;
     value banding is map-only and content-stable across appends). The
     global position rides the same two-phase distributed prefix scan as
@@ -265,15 +237,15 @@ def curriculum_order(
     """
     from .quality import quality_scores
 
-    q = quality_scores(docs, text_col=text_col).select(
-        id_col, "uniq_token_ratio"
+    q = quality_scores(docs).select(
+        "doc_id", "uniq_token_ratio"
     )
     band = F.least(
-        F.lit(bands - 1),
-        F.floor(F.col("uniq_token_ratio") * bands).cast("int"),
+        F.lit(9),
+        F.floor(F.col("uniq_token_ratio") * 10).cast("int"),
     ).cast("int")
     h = F.pmod(
-        F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + seed,
+        F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
         F.lit(1_000_000_007),
     )
     d = (
@@ -282,29 +254,22 @@ def curriculum_order(
         .withColumn("_one", F.lit(1).cast("long"))
     )
     ranked = global_cumsum(
-        d, "_one", [F.desc("band"), F.asc("_hk"), F.asc(id_col)],
-        out_col="_r", partitions=partitions,
-    )
+        d, "_one", [F.desc("band"), F.asc("_hk"), F.asc("doc_id")],
+        out_col="_r")
     return ranked.select(
-        id_col, "band",
+        "doc_id", "band",
         (F.col("_r") - 1).cast("long").alias("curriculum_rank"),
     )
 
 
-def shard_layout(
-    docs: DataFrame,
-    target_bytes: int,
-    id_col: str = "doc_id",
-    bytes_col: str = "n_chars",
-    partitions: int | None = None,
-) -> DataFrame:
+def shard_layout(docs: DataFrame, target_bytes: int) -> DataFrame:
     """Deterministic equal-byte output sharding — the step that turns a
     filtered corpus into the ~fixed-size training shards every public
     data release ships (C4/Pile/RedPajama all publish N-MB shard files):
-    docs are laid out in ascending ``id_col`` order and cut into shards of
+    docs are laid out in ascending ``doc_id`` order and cut into shards of
     ~``target_bytes`` by offset — doc d lands in shard
     floor(start_offset(d) / target_bytes), where start_offset is the
-    exclusive prefix sum of ``bytes_col``. A document never splits; shard
+    exclusive prefix sum of ``n_chars``. A document never splits; shard
     sizes deviate from target by at most one document.
 
     Output: one row per shard — (shard_id, n_docs, shard_bytes,
@@ -319,10 +284,10 @@ def shard_layout(
     `repartitionByRange(shard_id)` into equal output files.
     """
     t = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(bytes_col).cast("long").alias("_b"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_chars").cast("long").alias("_b"),
     ).filter(F.col("_b") > 0)
-    cum = global_cumsum(t, "_b", [F.asc("doc_id")], partitions=partitions)
+    cum = global_cumsum(t, "_b", [F.asc("doc_id")])
     assigned = cum.select(
         "doc_id",
         "_b",

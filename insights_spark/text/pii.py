@@ -31,11 +31,7 @@ PHONE_TOKEN = "<PHONE>"
 IP_TOKEN = "<IP>"
 
 
-def pii_scrub(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Per-doc PII counts + redacted text.
 
     Counts are measured on the ORIGINAL text; redaction applies email →
@@ -45,12 +41,12 @@ def pii_scrub(
     redacted). NULL text rows pass through with NULL counts/redaction —
     upstream gates own null policy, a scrubber must not drop rows.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     redacted = F.regexp_replace(t, EMAIL_RE, EMAIL_TOKEN)
     redacted = F.regexp_replace(redacted, PHONE_RE, PHONE_TOKEN)
     redacted = F.regexp_replace(redacted, IPV4_RE, IP_TOKEN)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(t, F.lit(EMAIL_RE)).cast("int").alias("n_emails"),
         F.regexp_count(t, F.lit(PHONE_RE)).cast("int").alias("n_phones"),
         F.regexp_count(t, F.lit(IPV4_RE)).cast("int").alias("n_ips"),

@@ -38,14 +38,14 @@ def bpe_ish_count(text: Column) -> Column:
     return F.regexp_count(F.lower(text), F.lit(BPE_ISH))
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Attach standard quality columns:
 
     n_chars, n_tokens, avg_token_len, punct_ratio, stopword_ratio,
     uniq_token_ratio — the usual web-text quality gates (length bounds,
     symbol load, stopword density, repetition).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     # tokenize ONCE into a materialized column (r6, guide §4.1): higher-
     # order functions are interpreted and escape common-subexpression
     # elimination, so the inline `tokens(t)` re-split the text per metric
@@ -81,7 +81,7 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-density language id (deterministic argmax, ties by language
     code ascending). A heuristic, not a model — the Spark shape (pure
     column scoring, no UDF) is the point."""
@@ -101,18 +101,13 @@ def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -
         )
     best = F.sort_array(F.array(*scores))[0]
     return (
-        df.withColumn("__lid_tok", tokens(F.col(text_col)))
-        .withColumn(out_col, F.when(best["neg"] < 0, best["lang"]))
+        df.withColumn("__lid_tok", tokens(F.col("text")))
+        .withColumn("lang_pred", F.when(best["neg"] < 0, best["lang"]))
         .drop("__lid_tok")
     )
 
 
-def repetition_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    gram_n: int = 2,
-) -> DataFrame:
+def repetition_scores(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality gates (Rae et al. 2021 §A1.1):
     per-document duplicate-token fraction, duplicate-token character
     fraction, top-n-gram character fraction, and duplicate-n-gram
@@ -129,18 +124,18 @@ def repetition_scores(
     Output: (id, n_tokens, dup_token_frac, dup_token_char_frac,
     top_gram_char_frac, dup_gram_char_frac); fractions are 0.0 for empty
     or gram-less docs. Ties for the top gram break lexicographically."""
-    t = F.col(text_col)
+    t = F.col("text")
     base = df.filter(t.isNotNull()).select(
-        F.col(id_col),
+        F.col("doc_id"),
         tokens(t).alias("toks"),
         F.length(F.regexp_replace(F.lower(t), r"\s+", "")).alias("tok_chars"),
     )
 
     tok_agg = (
-        base.select(id_col, F.explode("toks").alias("tok"))
-        .groupBy(id_col, "tok")
+        base.select("doc_id", F.explode("toks").alias("tok"))
+        .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_toks"),
             F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(F.lit(0)))
@@ -151,7 +146,7 @@ def repetition_scores(
         )
     )
 
-    n = gram_n
+    n = 2
     grams = F.when(
         F.size("toks") >= n,
         F.transform(
@@ -160,10 +155,10 @@ def repetition_scores(
         ),
     ).otherwise(F.array().cast("array<string>"))
     gram_agg = (
-        base.select(id_col, F.explode(grams).alias("gram"))
-        .groupBy(id_col, "gram")
+        base.select("doc_id", F.explode(grams).alias("gram"))
+        .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             # struct min = (count desc, gram asc) — deterministic top pick
             F.min(F.struct((-F.col("c")).alias("nc"), F.col("gram"))).alias("top"),
@@ -178,11 +173,11 @@ def repetition_scores(
     tc = F.col("tok_chars")
     top_chars = (-F.col("top.nc")) * (F.length(F.col("top.gram")) - (n - 1))
     return (
-        base.select(id_col, "tok_chars")
-        .join(tok_agg, id_col, "left")
-        .join(gram_agg, id_col, "left")
+        base.select("doc_id", "tok_chars")
+        .join(tok_agg, "doc_id", "left")
+        .join(gram_agg, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_toks"), F.lit(0)).cast("long").alias("n_tokens"),
             F.when(F.col("n_toks") > 0, F.col("dup_toks") / F.col("n_toks"))
             .otherwise(F.lit(0.0)).alias("dup_token_frac"),
@@ -196,8 +191,7 @@ def repetition_scores(
     )
 
 
-def doc_fingerprint(text: Column, mod: int = 1_000_000_007, base: int = 31,
-                    seed: int = 7) -> Column:
+def doc_fingerprint(text: Column) -> Column:
     """Polynomial rolling hash of the normalized text — the document
     fingerprint primitive. Pure fold over characters (JVM-side aggregate);
     identical arithmetic is expressible in the DuckDB oracle, so the
@@ -206,17 +200,12 @@ def doc_fingerprint(text: Column, mod: int = 1_000_000_007, base: int = 31,
     chars = F.split(norm, "")
     return F.aggregate(
         F.filter(chars, lambda c: c != ""),
-        F.lit(seed).cast("long"),
-        lambda acc, c: (acc * base + F.ascii(c)) % F.lit(mod),
+        F.lit(7).cast("long"),
+        lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(1_000_000_007),
     )
 
 
-def score_percentile_rank(
-    df: DataFrame,
-    score_col: str,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def score_percentile_rank(df: DataFrame, score_col: str) -> DataFrame:
     """Per-group percentile-rank calibration of a quality score — the
     step before thresholding a classifier across heterogeneous sources
     (FineWeb-style): raw score scales differ per source, so the keep/drop
@@ -235,20 +224,20 @@ def score_percentile_rank(
     """
     from .pack import global_cumsum
 
-    d = df.select(group_col, id_col, score_col).withColumn(
+    d = df.select("source", "doc_id", score_col).withColumn(
         "_one", F.lit(1).cast("long")
     )
     ranked = global_cumsum(
-        d, "_one", [F.asc(group_col), F.asc(score_col), F.asc(id_col)],
+        d, "_one", [F.asc("source"), F.asc(score_col), F.asc("doc_id")],
         out_col="_gr",
     )
-    totals = ranked.groupBy(group_col).agg(
+    totals = ranked.groupBy("source").agg(
         F.max("_gr").alias("_hi"), F.count(F.lit(1)).alias("_n")
     )
     return (
-        ranked.join(F.broadcast(totals), group_col)
+        ranked.join(F.broadcast(totals), "source")
         .select(
-            group_col, id_col, score_col,
+            "source", "doc_id", score_col,
             (
                 (F.col("_gr") - (F.col("_hi") - F.col("_n"))).cast("double")
                 / F.col("_n").cast("double")
@@ -257,7 +246,7 @@ def score_percentile_rank(
     )
 
 
-def lang_margin(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_margin(df: DataFrame) -> DataFrame:
     """Language-id confidence: top-1 vs top-2 stopword-density margin and
     a mixed-language flag. Code-switched or boilerplate-heavy pages score
     two languages nearly equally — those are the docs a per-language
@@ -270,7 +259,7 @@ def lang_margin(df: DataFrame, text_col: str = "text") -> DataFrame:
     margin (top1 − top2 density, 0.0 when nothing matches), is_mixed
     (int: both scores positive and margin < 0.1).
     """
-    tok = tokens(F.col(text_col))
+    tok = tokens(F.col("text"))
     n_tok = F.size(tok)
     scores = []
     for lang in sorted(STOPWORDS):

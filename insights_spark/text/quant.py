@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def quantize_embeddings(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """(vec_id, lo, scale, codes array<int>, dim) per non-empty vector.
 
     r6 (guide §4.1/§4.2): the transform/array_min/array_max column
@@ -69,9 +65,9 @@ def quantize_embeddings(
             {"lo": los, "scale": scales, "codes": codes_out, "dim": dims}
         )
 
-    q = _quant(F.col(vec_col))
-    return emb.filter(F.size(vec_col) > 0).select(
-        F.col(id_col).alias("vec_id"),
+    q = _quant(F.col("embedding"))
+    return emb.filter(F.size("embedding") > 0).select(
+        F.col("vec_id"),
         q["lo"].alias("lo"),
         q["scale"].alias("scale"),
         q["codes"].alias("codes"),

@@ -47,51 +47,37 @@ from pyspark.sql import functions as F
 from .quality import tokens
 
 
-def query_terms_by_df(
-    docs: DataFrame,
-    n_terms: int = 8,
-    max_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Deterministic self-contained query: the n_terms highest-df terms
-    with df ≤ max_df (ties broken by term asc) — "the heaviest non-stop
+def query_terms_by_df(docs: DataFrame) -> DataFrame:
+    """Deterministic self-contained query: the 8 highest-df terms
+    with df ≤ 50 (ties broken by term asc) — "the heaviest non-stop
     terms", a reproducible stand-in for a user query in tests/benchmarks.
     Compiles to TakeOrderedAndProject (no single-partition sort)."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
+            F.col("doc_id"),
+            F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
         )
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= max_df)
+        .filter(F.col("_df") <= 50)
         .orderBy(F.col("_df").desc(), F.col("term"))
-        .limit(n_terms)
+        .limit(8)
         .select("term")
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    term_col: str = "term",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: DataFrame) -> DataFrame:
     """(doc_id, n_terms, score) for every doc matching ≥1 query term.
 
-    query_terms: a DataFrame with one string column ``term_col`` (assumed
+    query_terms: a DataFrame with one string column ``term`` (assumed
     small — it is broadcast). df_t counts documents WITHIN ``docs`` that
     contain t; avgdl/N cover all of ``docs`` (standard BM25 corpus stats).
     """
     # NULL text would flow through F.size as -1 and silently corrupt
     # avgdl; NULL-text docs have no terms, so excluding them from the
     # corpus stats is the only consistent reading (oracle mirrors).
-    tok = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tok")
+    tok = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"), tokens(F.col("text")).alias("_tok")
     )
     dl = tok.select("doc_id", F.size("_tok").cast("long").alias("dl"))
     stats = dl.agg(
@@ -99,7 +85,7 @@ def bm25_scores(
     ).select(
         (F.col("_sum") / F.col("n_docs")).alias("avgdl"), "n_docs"
     )
-    q = F.broadcast(query_terms.select(F.col(term_col).alias("term")).distinct())
+    q = F.broadcast(query_terms.select(F.col("term")).distinct())
     tf = (
         tok.select("doc_id", F.explode("_tok").alias("term"))
         .join(q, "term")  # broadcast BEFORE the rollup shuffle
@@ -118,11 +104,11 @@ def bm25_scores(
                 / (F.col("df") + F.lit(0.5))
             )
             * (
-                (F.col("tf") * F.lit(k1 + 1.0))
+                (F.col("tf") * F.lit(1.2 + 1.0))
                 / (
                     F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl") / F.col("avgdl")))
+                    + F.lit(1.2)
+                    * (F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
                 )
             ),
         )
@@ -140,14 +126,7 @@ def bm25_scores(
     )
 
 
-def rrf_fuse(
-    a: DataFrame,
-    b: DataFrame,
-    k: int = 60,
-    scale: int = 10**9,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
+def rrf_fuse(a: DataFrame, b: DataFrame, k: int = 60, scale: int = 10**9) -> DataFrame:
     """Reciprocal-rank fusion of two rankers (Cormack, Clarke &
     Büttcher SIGIR'09, public) — the standard hybrid-search combiner
     (BM25 lexical + embedding semantic): score-scale-free, it fuses on
@@ -170,8 +149,8 @@ def rrf_fuse(
 
     def ranked(df: DataFrame, out: str) -> DataFrame:
         r = df.select(
-            F.col(id_col).alias("id"),
-            F.col(score_col).alias("_s"),
+            F.col("doc_id").alias("id"),
+            F.col("score").alias("_s"),
             F.lit(1).cast("long").alias("_one"),
         )
         return global_cumsum(
@@ -190,7 +169,7 @@ def rrf_fuse(
         F.expr(f"{scale} div ({k} + rank_b)"),
     ).otherwise(F.lit(0))
     return j.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "rank_a",
         "rank_b",
         (ca + cb).cast("long").alias("rrf"),

@@ -46,13 +46,8 @@ from insights_spark.text.pack import global_cumsum
 _DEC = "decimal(38,0)"
 
 
-def pps_sample(
-    docs: DataFrame,
-    n: int,
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Select ~`n` docs with probability proportional to `weight_col`.
+def pps_sample(docs: DataFrame, n: int) -> DataFrame:
+    """Select ~`n` docs with probability proportional to `n_chars`.
 
     Exactly `n` grid points are consumed; an item heavy enough to cover
     several grid points (w_i ≥ 2·W/n) is still returned once (sampling
@@ -60,26 +55,26 @@ def pps_sample(
     heavy-tailed corpora — the standard systematic-PPS behaviour, and
     the honest one (duplicating a training doc is never wanted).
 
-    Rows with `weight_col` ≤ 0 are excluded (zero-length docs carry no
+    Rows with `n_chars` ≤ 0 are excluded (zero-length docs carry no
     sampling mass). Output: the input columns of the selected docs,
     unchanged. Deterministic and partitioning-invariant: the order key
     is a content-stable id hash with the id itself as tiebreak.
     """
-    pos = docs.filter(F.col(weight_col) > 0)
+    pos = docs.filter(F.col("n_chars") > 0)
     # (id mod 2³¹)·k ≡ id·k (mod 2³¹): identical hash values, product
     # can't wrap int64 at 10^10-doc ids (the train_test_split guard)
     h = F.pmod(
-        F.pmod(F.col(id_col), F.lit(1 << 31)) * 2654435761 + 29,
+        F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 29,
         F.lit(1 << 31),
     )
     tagged = pos.withColumn("_h", h)
     cum = global_cumsum(
-        tagged, weight_col, [F.col("_h"), F.col(id_col)], "_c"
+        tagged, "n_chars", [F.col("_h"), F.col("doc_id")], "_c"
     )
     total = cum.agg(F.max("_c").cast(_DEC).alias("_W"))
     a = F.col("_c").cast(_DEC) * F.lit(n)
-    b = (F.col("_c") - F.col(weight_col)).cast(_DEC) * F.lit(n)
-    keep = (F.col(weight_col).cast(_DEC) * F.lit(n)) > (
+    b = (F.col("_c") - F.col("n_chars")).cast(_DEC) * F.lit(n)
+    keep = (F.col("n_chars").cast(_DEC) * F.lit(n)) > (
         F.pmod(a, F.col("_W")) - F.pmod(b, F.col("_W"))
     )
     out_cols = docs.columns

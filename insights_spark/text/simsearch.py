@@ -64,8 +64,6 @@ def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame | None = None,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k of every query against the vector set.
 
@@ -84,11 +82,11 @@ def cosine_topk(
     """
     par = vectors.sparkSession.sparkContext.defaultParallelism
     vs = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_v")
     ).withColumn("_vn", norm(F.col("_v")))
     qs = (
         (queries or vectors)
-        .select(F.col(id_col).alias("id"), F.col(vec_col).alias("_q"))
+        .select(F.col("vec_id").alias("id"), F.col("embedding").alias("_q"))
         .repartition(par)
         .withColumn("_qn", norm(F.col("_q")))
     )
@@ -103,12 +101,7 @@ def cosine_topk(
     )
 
 
-def embedding_near_dups(
-    vectors: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_dups(vectors: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Exact embedding-cosine near-dup pairs: (a, b, cosine) with a < b and
     cosine ≥ threshold — the embedding analogue of ngram_jaccard_pairs.
 
@@ -130,7 +123,7 @@ def embedding_near_dups(
     from collections.abc import Iterator
 
     par = vectors.sparkSession.sparkContext.defaultParallelism
-    rows = vectors.select(id_col, vec_col).collect()
+    rows = vectors.select("vec_id", "embedding").collect()
     spark = vectors.sparkSession
     if not rows:
         return local_df(spark, [], "a long, b long, cosine double")
@@ -151,8 +144,8 @@ def embedding_near_dups(
             if pdf.empty:
                 continue
             X = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            xids = pdf[id_col].to_numpy(np.int64)
+                          for v in pdf["embedding"]])
+            xids = pdf["vec_id"].to_numpy(np.int64)
             nx = _fold_norm_np(X)
             for s in range(0, Ym.shape[0], CH):
                 Yc = Ym[s:s + CH]
@@ -171,7 +164,7 @@ def embedding_near_dups(
                     })
 
     return (
-        vectors.select(F.col(id_col), F.col(vec_col))
+        vectors.select(F.col("vec_id"), F.col("embedding"))
         .repartition(par)
         .mapInPandas(gen, "a long, b long, cosine double")
     )
@@ -190,9 +183,6 @@ def embedding_lsh_candidates(
     vectors: DataFrame,
     n_bits: int = 32,
     bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
 ) -> DataFrame:
     """Random-hyperplane LSH candidate pairs for cosine similarity.
 
@@ -212,28 +202,24 @@ def embedding_lsh_candidates(
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        P = _rh_planes(X.shape[1], n_bits, seed)
+        P = _rh_planes(X.shape[1], n_bits, 7)
         bits = (X @ P.T) >= 0
         weights = (1 << np.arange(n_bits, dtype=np.int64))
         return pd.Series((bits * weights).sum(axis=1).astype(np.int64))
 
-    sk = vectors.select(F.col(id_col).alias("_id"), sketch(F.col(vec_col)).alias("_sk"))
+    sk = vectors.select(F.col("vec_id").alias("_id"), sketch(F.col("embedding")).alias("_sk"))
     return _band_self_join(_band_explode(sk, _bit_band_keys("_sk", n_bits, bands)))
 
 
 def embedding_near_dups_lsh(
     vectors: DataFrame,
-    threshold: float = 0.4,
     n_bits: int = 32,
     bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via the SCALE route: RH-LSH candidate
     generation → exact cosine verify on candidates only. Output (a, b,
-    cosine) with a < b and cosine ≥ threshold — the same contract as
+    cosine) with a < b and cosine ≥ 0.4 — the same contract as
     ``embedding_near_dups`` restricted to LSH-recalled pairs (precision is
     exact by construction; recall is the banded collision probability
     1 − (1 − p^r)^bands, p = 1 − θ/π).
@@ -251,11 +237,9 @@ def embedding_near_dups_lsh(
     from pyspark.sql.functions import pandas_udf
 
     cand = candidates if candidates is not None else embedding_lsh_candidates(
-        vectors, n_bits=n_bits, bands=bands,
-        id_col=id_col, vec_col=vec_col, seed=seed,
-    )
-    va = vectors.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-    vb = vectors.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
+        vectors, n_bits=n_bits, bands=bands)
+    va = vectors.select(F.col("vec_id").alias("a"), F.col("embedding").alias("_va"))
+    vb = vectors.select(F.col("vec_id").alias("b"), F.col("embedding").alias("_vb"))
 
     @pandas_udf("double")
     def cos_pair(xa: pd.Series, xb: pd.Series) -> pd.Series:
@@ -270,7 +254,7 @@ def embedding_near_dups_lsh(
     return (
         cand.join(va, "a").join(vb, "b")
         .withColumn("cosine", cos_pair(F.col("_va"), F.col("_vb")))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.4)
         .select("a", "b", "cosine")
     )
 
@@ -279,8 +263,6 @@ def sample_centroids(
     vectors: DataFrame,
     n_total: int,
     num_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> np.ndarray:
     """The `num_centroids` vectors with the SMALLEST deterministic hash,
@@ -295,11 +277,11 @@ def sample_centroids(
     IVF index build's reservoir step.
     """
     M = n_total * 2 + 1
-    hash_col = F.pmod(F.col(id_col) * 2654435761 + seed, F.lit(M))
+    hash_col = F.pmod(F.col("vec_id") * 2654435761 + seed, F.lit(M))
     t = max(1, (M * num_centroids * 4) // max(n_total, 1))
     while True:
-        sliver = vectors.select(id_col, vec_col).filter(hash_col < t)
-        rows = sliver.orderBy(hash_col, F.col(id_col)).limit(num_centroids).collect()
+        sliver = vectors.select("vec_id", "embedding").filter(hash_col < t)
+        rows = sliver.orderBy(hash_col, F.col("vec_id")).limit(num_centroids).collect()
         if len(rows) >= min(num_centroids, n_total) or t >= M:
             break
         t *= 4
@@ -307,13 +289,7 @@ def sample_centroids(
     return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
 
-def cosine_topk_sample(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk_sample(vectors: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k for a SMALL query set against the full vector
     table — the recall-gate / eval-probe shape (sample × n), as one
     numpy-matmul SCAN instead of an interpreted per-pair fold.
@@ -334,7 +310,7 @@ def cosine_topk_sample(
     """
     from collections.abc import Iterator
 
-    qrows = queries.select(id_col, vec_col).collect()
+    qrows = queries.select("vec_id", "embedding").collect()
     if not qrows:
         schema = "id long, neighbor_id long, score double, rank int"
         return local_df(vectors.sparkSession, [], schema)
@@ -349,9 +325,9 @@ def cosine_topk_sample(
             if pdf.empty:
                 continue
             X = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
+                          for v in pdf["embedding"]])
             X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            mid = pdf[id_col].to_numpy(np.int64)
+            mid = pdf["vec_id"].to_numpy(np.int64)
             S = Qm @ X.T                      # (q × batch)
             S[qid[:, None] == mid[None, :]] = -np.inf   # exclude self
             kk = min(k, S.shape[1])
@@ -364,7 +340,7 @@ def cosine_topk_sample(
                     rows.append((int(qid[r]), int(mid[j]), float(S[r, j])))
             yield pd.DataFrame(rows, columns=["id", "neighbor_id", "score"])
 
-    part = vectors.select(id_col, vec_col).mapInPandas(
+    part = vectors.select("vec_id", "embedding").mapInPandas(
         gen, "id long, neighbor_id long, score double"
     )
     w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("neighbor_id"))
@@ -379,9 +355,6 @@ def cosine_topk_bucketed(
     k: int = 5,
     num_centroids: int | None = None,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """IVF-style approximate self-top-k.
 
@@ -399,7 +372,7 @@ def cosine_topk_bucketed(
     if num_centroids is None:
         num_centroids = max(1, int(np.sqrt(n_total)))
 
-    C = sample_centroids(vectors, n_total, num_centroids, id_col, vec_col, seed)
+    C = sample_centroids(vectors, n_total, num_centroids)
     bc = vectors.sparkSession.sparkContext.broadcast(C)
 
     from pyspark.sql.functions import pandas_udf
@@ -421,8 +394,8 @@ def cosine_topk_bucketed(
     # would otherwise run twice over every vector). At cluster scale this is
     # the materialized IVF assignment table an index build writes once.
     tagged = vectors.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        nearest_buckets(F.col(vec_col)).alias("probes"),
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
+        nearest_buckets(F.col("embedding")).alias("probes"),
     ).persist()
     # members: bucket = nearest centroid (probes[0]); queries probe all nprobe
     members = tagged.select(
@@ -486,9 +459,6 @@ def semantic_prune(
     vectors: DataFrame,
     num_centroids: int = 16,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup-style semantic pruning: partition the embedding space into
     IVF buckets (hash-sampled centroids, same selection as
@@ -515,14 +485,13 @@ def semantic_prune(
     """
     from .dedup import near_dup_clusters
 
-    spark = vectors.sparkSession
     n_total = vectors.count()
     M = n_total * 2 + 1
-    hash_col = F.pmod(F.col(id_col) * 2654435761 + seed, F.lit(M))
+    hash_col = F.pmod(F.col("vec_id") * 2654435761 + 42, F.lit(M))
     t = max(1, (M * num_centroids * 4) // max(n_total, 1))
     while True:
-        sliver = vectors.select(id_col, vec_col).filter(hash_col < t)
-        rows = sliver.orderBy(hash_col, F.col(id_col)).limit(num_centroids).collect()
+        sliver = vectors.select("vec_id", "embedding").filter(hash_col < t)
+        rows = sliver.orderBy(hash_col, F.col("vec_id")).limit(num_centroids).collect()
         if len(rows) >= min(num_centroids, n_total) or t >= M:
             break
         t *= 4
@@ -559,7 +528,7 @@ def semantic_prune(
             _fold_dot_np(X, Y) / (_fold_norm_np(X) * _fold_norm_np(Y))
         )
 
-    a = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
+    a = vectors.select(F.col("vec_id"), F.col("embedding").alias("emb"))
     asg = a.select(
         "vec_id", best_cent(F.col("emb")).alias("cent_id"), "emb"
     )
@@ -572,11 +541,11 @@ def semantic_prune(
         .filter(F.col("cosine") >= threshold)
         .select("a", "b")
     )
-    labeled = near_dup_clusters(vectors, pairs, id_col=id_col)
+    labeled = near_dup_clusters(vectors, pairs, id_col="vec_id")
     return labeled.join(
-        asg.select(F.col("vec_id").alias(id_col), "cent_id"), id_col
+        asg.select(F.col("vec_id"), "cent_id"), "vec_id"
     ).select(
-        id_col,
+        "vec_id",
         "cent_id",
         "cluster_id",
         F.col("is_canonical").cast("int").alias("is_kept"),
@@ -588,8 +557,6 @@ def kmeans_lloyd_int(
     k: int = 8,
     iters: int = 3,
     scale: int = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd's k-means over an embedding column in EXACT integer
     arithmetic (Lloyd 1957/1982, public) — the clustering primitive
@@ -623,9 +590,9 @@ def kmeans_lloyd_int(
     is persisted once and reused by all iterations.
     """
     q = emb.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.expr(
-            f"transform({vec_col}, x -> "
+            "transform(embedding, x -> "
             f"CAST(floor(CAST(x AS DOUBLE) * {scale}.0) AS BIGINT))"
         ).alias("q"),
     ).persist()

@@ -66,22 +66,17 @@ def canonical_url(url: Column) -> Column:
     )
 
 
-def url_dedup(
-    df: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """One row per canonical URL: (canonical_url, kept_id, last_ts,
     n_variants, n_urls). ``kept_id`` is the row with the max (ts, id) —
     the latest fetch, ties broken by the larger id — mirroring the
     latest-version upsert the reference's sink applies per element id.
     ``n_urls`` counts DISTINCT raw spellings collapsed into the key."""
     canon = df.select(
-        canonical_url(F.col(url_col)).alias("canonical_url"),
-        F.col(url_col).alias("_url"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
+        canonical_url(F.col("url")).alias("canonical_url"),
+        F.col("url").alias("_url"),
+        F.col("warc_ts").alias("_ts"),
+        F.col("doc_id").alias("_id"),
     )
     return canon.groupBy("canonical_url").agg(
         F.max(F.struct(F.col("_ts"), F.col("_id"))).alias("_pick"),
@@ -104,7 +99,6 @@ def host_of(canonical: Column) -> Column:
 
 def host_stats(
     pages: DataFrame,
-    url_col: str = "url",
     bytes_col: str | None = None,
     min_docs: int = 1,
     max_dup_per_mille: int = 1000,
@@ -128,7 +122,7 @@ def host_stats(
     natural unit of crawl skew, and a mega-host lands in the FIRST phase
     keyed (host, canon), which spreads it). No UDF, no collect.
     """
-    canon = canonical_url(F.col(url_col))
+    canon = canonical_url(F.col("url"))
     rows = pages.select(
         host_of(canon).alias("host"),
         canon.alias("_canon"),
@@ -155,10 +149,7 @@ def host_stats(
     )
 
 
-def path_tree(
-    df: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def path_tree(df: DataFrame) -> DataFrame:
     """URL path-hierarchy rollup — the "directory tree sizes" query of a
     crawl frontier: every page counts toward EVERY ancestor prefix of its
     path, so each (host, prefix) row reads off the number of pages in
@@ -175,16 +166,16 @@ def path_tree(
     present, host lowercased up to the first '/', query/fragment cut
     before path segmentation, empty segments dropped.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     rest = F.when(
-        u.contains("://"), F.expr(f"substring_index({url_col}, '://', -1)")
+        u.contains("://"), F.expr("substring_index(url, '://', -1)")
     ).otherwise(u)
     host = F.lower(F.substring_index(rest, "/", 1))
     path = F.when(
         rest.contains("/"),
-        F.expr(f"substring(substring_index({url_col}, '://', -1), "
-               f"length(substring_index(substring_index({url_col}, '://', -1),"
-               f" '/', 1)) + 1)"),
+        F.expr("substring(substring_index(url, '://', -1), "
+               "length(substring_index(substring_index(url, '://', -1),"
+               " '/', 1)) + 1)"),
     ).otherwise(F.lit(""))
     clean = F.substring_index(F.substring_index(path, "?", 1), "#", 1)
     segs = F.filter(F.split(clean, "/"), lambda s: s != "")

@@ -695,7 +695,7 @@ def test_hex_focal_smooth_brute_force(spark):
     )
     got = {
         r["cell"]: r
-        for r in hex_focal_smooth(df, cell_col="cell", cnt_col="n").collect()
+        for r in hex_focal_smooth(df).collect()
     }
     assert set(got) == set(occupied)
     for c, n in occupied.items():
@@ -1107,7 +1107,7 @@ def test_home_cells_argmax_and_ties(spark):
     }
     ca, cb = cell_of[A], cell_of[B]
     assert ca != cb
-    got = {r["user_id"]: r for r in home_cells(df, res=1).collect()}
+    got = {r["user_id"]: r for r in home_cells(df).collect()}
     u1 = got[1]
     assert (u1["home_cell"], u1["visits"], u1["visits_total"], u1["n_cells"]) \
         == (ca, 3, 4, 2)
@@ -1359,7 +1359,7 @@ def test_compact_tile_cover_hand_cases(spark):
     lone4 = [(2, 6, 2), (2, 7, 2), (2, 6, 3), (2, 7, 3)]          # → (1,3,1)
     df = spark.createDataFrame(full_block + sibs3 + lone4, "z int, x long, y long")
     got = {(r["z"], r["x"], r["y"])
-           for r in tiles.compact_tile_cover(df, levels=2).collect()}
+           for r in tiles.compact_tile_cover(df).collect()}
     assert got == {(0, 0, 0), (1, 3, 1), (2, 4, 0), (2, 5, 0), (2, 4, 1)}
 
 
@@ -1583,7 +1583,7 @@ def test_od_flows_brute_force(spark):
     )
     got = {
         (r["cell_from"], r["cell_to"]): (r["n_moves"], r["n_users"])
-        for r in od_flows(df, res=0, id_col="id").collect()
+        for r in od_flows(df, id_col="id").collect()
     }
     assert got == {
         (ca, cb): (2, 2),          # users 1 and 2
@@ -1592,4 +1592,4 @@ def test_od_flows_brute_force(spark):
     }
     empty = spark.createDataFrame(
         [], "user_id long, ts timestamp, id long, lon double, lat double")
-    assert od_flows(empty, res=0, id_col="id").count() == 0
+    assert od_flows(empty, id_col="id").count() == 0

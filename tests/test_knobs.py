@@ -1,0 +1,150 @@
+"""No unused settings: every optional parameter of a function or method under
+insights_spark/ (outside queries/) must get a value other than its default
+from some call in the repository, tests included. A call matches by the
+callee's name (a plain name, an attribute, or a class name for __init__); it
+sets a parameter when it passes a different literal, any non-literal
+expression, or a *args/**kwargs that may cover it. A parameter nobody sets is
+a constant: write the default into the body and delete the parameter. ALLOW
+maps "<path under insights_spark/>:<function>.<param>" to why it stays.
+
+The next step is the parameters only tests set (knobs() with tests=False
+lists them): each either gets a library caller or goes."""
+
+from __future__ import annotations
+
+import ast
+from collections import defaultdict
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "insights_spark"
+_UNSET = object()
+
+# "<path>:<function>.<param>" -> why it stays
+ALLOW = {
+    "jobs/pipeline.py:run.boundary_rows": "deployment input: the boundary "
+                                          "polygons a real run loads; "
+                                          "synth.gen_boundaries() stands in",
+}
+
+
+def _literal(node: ast.AST):
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return _UNSET
+
+
+class _Defs(ast.NodeVisitor):
+    """Every def under a module, keyed by the name a call would use."""
+
+    def __init__(self, rel: str):
+        self.rel, self.stack, self.out = rel, [], []
+
+    def visit_ClassDef(self, node):
+        self.stack.append(node)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    def visit_FunctionDef(self, node):
+        owner = self.stack[-1] if self.stack else None
+        method = isinstance(owner, ast.ClassDef)
+        static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                     for d in node.decorator_list)
+        a = node.args
+        pos = a.posonlyargs + a.args
+        names = [p.arg for p in pos]
+        skip = 1 if method and not static else 0
+        qual = ".".join([getattr(n, "name", "") for n in self.stack] + [node.name])
+        opts = {}
+        for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults):
+            opts[p.arg] = d
+        for p, d in zip(a.kwonlyargs, a.kw_defaults):
+            if d is not None:
+                opts[p.arg] = d
+        if opts:
+            call = owner.name if method and node.name == "__init__" else node.name
+            self.out.append(dict(rel=self.rel, qual=qual, call=call,
+                                 pos=names[skip:], opts=opts))
+        self.stack.append(node)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+
+def _calls(tree: ast.AST):
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name:
+                yield name, n
+
+
+def _files() -> dict[Path, ast.AST]:
+    return {p: ast.parse(p.read_text()) for p in ROOT.rglob("*.py")
+            if not any(part.startswith(".") for part in p.relative_to(ROOT).parts)}
+
+
+def _defs(files: dict[Path, ast.AST]) -> list[dict]:
+    out = []
+    for path, tree in files.items():
+        rel = path.relative_to(ROOT).as_posix().removeprefix("insights_spark/")
+        if path.is_relative_to(PKG) and not rel.startswith("queries/"):
+            v = _Defs(rel)
+            v.visit(tree)
+            out += v.out
+    return out
+
+
+def _keys(defs: list[dict]) -> list[str]:
+    return [f"{d['rel']}:{d['qual']}.{p}" for d in defs for p in d["opts"]]
+
+
+def optional_params() -> list[str]:
+    """'<path>:<function>.<param>' for every optional parameter the scan covers."""
+    return _keys(_defs(_files()))
+
+
+def knobs(tests: bool = True) -> list[str]:
+    """The optional parameters no call sets; with tests=False, calls under
+    tests/ do not count."""
+    files = _files()
+    defs = _defs(files)
+    by_call = defaultdict(list)
+    for d in defs:
+        by_call[d["call"]].append(d)
+    set_ = set()
+    for path, tree in files.items():
+        if not tests and "tests" in path.relative_to(ROOT).parts:
+            continue
+        for name, call in _calls(tree):
+            for d in by_call.get(name, ()):
+                given = {}  # param -> passed node, or _UNSET when *args/**kwargs
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        given.update(dict.fromkeys(d["pos"][i:], _UNSET))
+                        break
+                    if i < len(d["pos"]):
+                        given[d["pos"][i]] = arg
+                for kw in call.keywords:
+                    if kw.arg is None:
+                        given.update(dict.fromkeys(d["opts"], _UNSET))
+                    else:
+                        given[kw.arg] = kw.value
+                for p, val in given.items():
+                    if p not in d["opts"]:
+                        continue
+                    lit = val if val is _UNSET else _literal(val)
+                    if lit is _UNSET or lit != _literal(d["opts"][p]):
+                        set_.add(f"{d['rel']}:{d['qual']}.{p}")
+    return sorted(set(_keys(defs)) - set_)
+
+
+def test_every_optional_parameter_is_set_by_some_call():
+    unset = knobs()
+    bad = [k for k in unset if k not in ALLOW]
+    assert not bad, f"optional parameters no call sets (inline the default): {bad}"
+    stale = set(ALLOW) - set(unset)
+    assert not stale, f"stale ALLOW entries: {stale}"

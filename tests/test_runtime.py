@@ -443,16 +443,16 @@ def test_equi_depth_histogram(spark):
     df = spark.createDataFrame(
         [(float(k * k),) for k in range(1000)] + [(None,)], "v double"
     )
-    out = sorted(equi_depth_histogram(df, "v", 8).collect(),
+    out = sorted(equi_depth_histogram(df, "v").collect(),
                  key=lambda r: r["bucket"])
     assert sum(r["n"] for r in out) == 1000  # NULL excluded, rest covered
     assert all(115 <= r["n"] <= 135 for r in out)  # ~125 each, equi-depth
     for a, b in zip(out, out[1:]):
         assert a["hi"] == b["lo"]  # boundaries tile
     assert out[0]["lo"] == 0.0 and out[-1]["hi"] == 999.0 ** 2
-    ap = equi_depth_histogram(df, "v", 8, approx=True).collect()
+    ap = equi_depth_histogram(df, "v", approx=True).collect()
     assert sum(r["n"] for r in ap) == 1000
-    assert {f.name for f in equi_depth_histogram(df, "v", 8, approx=True).schema} \
+    assert {f.name for f in equi_depth_histogram(df, "v", approx=True).schema} \
         == {"bucket", "lo", "hi", "n"}
 
 

@@ -143,7 +143,7 @@ def test_anomaly_buckets_hand_pinned(spark):
     )
     out = {
         (r["event_type"], r["bucket_start"], r["n_events"], r["is_spike"])
-        for r in anomaly_buckets(_ev(spark, rows), factor=4).collect()
+        for r in anomaly_buckets(_ev(spark, rows)).collect()
     }
     w1, w2, w3 = t(2024, 1, 1), t(2024, 1, 8), t(2024, 1, 15)
     assert out == {
@@ -157,7 +157,7 @@ def test_anomaly_buckets_uniform_series_never_flags(spark):
 
     t = dt.datetime
     rows = [("x", t(2024, 1, 1 + 7 * w, h)) for w in range(4) for h in range(3)]
-    out = anomaly_buckets(_ev(spark, rows), factor=4).collect()
+    out = anomaly_buckets(_ev(spark, rows)).collect()
     assert len(out) == 4 and not any(r["is_spike"] for r in out)
 
 
@@ -413,7 +413,7 @@ def test_mann_kendall_brute_force(spark):
     got = {
         r["cell"]: (r["n_points"], r["s_stat"], r["var18"], r["trend"],
                     r["is_sig"])
-        for r in mann_kendall(df, ["cell"], "day", "n").collect()
+        for r in mann_kendall(df, ["cell"]).collect()
     }
     want = {k: brute(xs) for k, xs in series.items() if len(xs) >= 8}
     assert got == want
@@ -464,7 +464,7 @@ def test_theil_sen_brute_force(spark):
     got = {
         r["cell"]: (r["n_pairs"], r["med_num"], r["med_den"],
                     r["slope_per_day"])
-        for r in theil_sen_slope(df, ["cell"], "day", "n").collect()
+        for r in theil_sen_slope(df, ["cell"]).collect()
     }
     want = {k: brute(xs) for k, xs in series.items() if len(xs) >= 6}
     assert got == want

@@ -15,19 +15,8 @@ def test_merge_keep_last_is_do_update(spark, tmp_path):
     df1 = spark.createDataFrame([(1, "a", 10), (2, "b", 10)], "k long, v string, seq long")
     sinks.merge(df1, p, ["k"])
     df2 = spark.createDataFrame([(2, "B", 20), (3, "c", 20)], "k long, v string, seq long")
-    sinks.merge(df2, p, ["k"], mode="keep_last")
+    sinks.merge(df2, p, ["k"])
     assert _read(spark, p) == {(1,): ("a", 10), (2,): ("B", 20), (3,): ("c", 20)}
-
-
-def test_merge_keep_first_is_do_nothing(spark, tmp_path):
-    p = str(tmp_path / "t2")
-    sinks = ParquetSinks(spark)
-    sinks.merge(
-        spark.createDataFrame([(1, "a", 10)], "k long, v string, seq long"), p, ["k"])
-    sinks.merge(
-        spark.createDataFrame([(1, "REPLAY", 5), (2, "b", 5)], "k long, v string, seq long"),
-        p, ["k"], mode="keep_first")
-    assert _read(spark, p) == {(1,): ("a", 10), (2,): ("b", 5)}
 
 
 def test_first_write_into_missing_table_keeps_one_row_per_key(spark, tmp_path):

@@ -75,7 +75,7 @@ def test_edit_density_stream_windows(spark, tmp_path):
     batch_el.write.parquet(el_dir)
     el_stream = spark.readStream.schema(batch_el.schema).parquet(el_dir)
 
-    dens = ingest.edit_density_stream(el_stream, z=6, window="60 minutes")
+    dens = ingest.edit_density_stream(el_stream, window="60 minutes")
     q = (
         dens.writeStream.format("memory")
         .queryName("dens_test")
@@ -141,7 +141,7 @@ def test_session_stream_matches_batch_membership(spark, tmp_path):
 
     stream = spark.readStream.schema(ev.schema).parquet(ev_dir)
     q = (
-        ingest.session_stream(stream, gap="30 minutes")
+        ingest.session_stream(stream)
         .writeStream.format("memory")
         .queryName("sess_test")
         .outputMode("complete")
@@ -328,7 +328,7 @@ def test_stream_cell_counts_matches_batch(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        ingest.stream_cell_counts(stream, res=1)
+        ingest.stream_cell_counts(stream)
         .writeStream.format("memory")
         .queryName("cellcounts")
         .outputMode("complete")
@@ -438,7 +438,7 @@ def test_stream_od_flows_matches_batch(spark, tmp_path):
     pts = m._points(ev, "event_id")
     batch = {
         (r["cell_from"], r["cell_to"]): (r["n_moves"], r["n_users"])
-        for r in od_flows(pts, res=0, id_col="event_id").collect()
+        for r in od_flows(pts, id_col="event_id").collect()
     }
     assert batch, "fixture must contain moves"
 
@@ -457,7 +457,7 @@ def test_stream_od_flows_matches_batch(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        ingest.stream_od_flows(stream, res=0)
+        ingest.stream_od_flows(stream)
         .writeStream.format("memory")
         .queryName("odmoves")
         .outputMode("append")

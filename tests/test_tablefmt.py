@@ -45,17 +45,11 @@ def test_merge_semantics_and_snapshot_isolation(spark, tmp_path):
     t.append(_df(spark, [(1, "old"), (2, "old")]), ts=1)
     # pin a reader to snapshot 1 BEFORE the merge rewrites the table
     pinned = t.read(snapshot_id=1)
-    t.merge(_df(spark, [(2, "new"), (3, "new")]), keys=["id"],
-            mode="keep_last", ts=2)
+    t.merge(_df(spark, [(2, "new"), (3, "new")]), keys=["id"], ts=2)
     assert _sorted(t.read()) == [(1, "old"), (2, "new"), (3, "new")]
     # snapshot isolation: the pinned plan still executes — its files exist
     # (the directory-swap fallback in sinks.py cannot make this promise)
     assert _sorted(pinned) == [(1, "old"), (2, "old")]
-    # keep_first: existing rows win
-    t.merge(_df(spark, [(3, "clobber"), (4, "ins")]), keys=["id"],
-            mode="keep_first", ts=3)
-    assert _sorted(t.read()) == [
-        (1, "old"), (2, "new"), (3, "new"), (4, "ins")]
 
 
 def _plant_other_writer(t):
@@ -106,7 +100,7 @@ def test_expire_snapshots(spark, tmp_path):
     t.merge(_df(spark, [(1, "b")]), keys=["id"], ts=2)  # replace snapshot
     before = set(os.listdir(t._data))
     assert len(before) >= 2
-    removed = t.expire_snapshots(keep_last=1)
+    removed = t.expire_snapshots()
     assert removed  # snapshot-1's dir was unreachable from snapshot 2
     assert _sorted(t.read()) == [(1, "b")]
     with pytest.raises(FileNotFoundError):
@@ -136,7 +130,7 @@ def test_compact_small_files(spark, tmp_path):
     assert _sorted(pinned) == expect
     assert [s["operation"] for s in t.history()][-1] == "replace"
     # reclaim: only expire deletes the old dirs; compacted table survives
-    removed = t.expire_snapshots(keep_last=1)
+    removed = t.expire_snapshots()
     assert len(removed) == 5
     assert _sorted(t.read()) == expect
 

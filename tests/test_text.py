@@ -68,7 +68,7 @@ def test_minhash_signature_properties(spark, docs):
 def test_minhash_np_matches_column_fold(spark, docs):
     """The numpy fast path must be bit-identical to the portable column fold."""
     col_sig = {r["doc_id"]: r["s"] for r in docs.select(
-        "doc_id", dedup.minhash_signature(F.col("text"), 8, 3).alias("s")).collect()}
+        "doc_id", dedup.minhash_signature(F.col("text"), 8).alias("s")).collect()}
     np_sig = {r["doc_id"]: r["s"] for r in docs.select(
         "doc_id", dedup.minhash_signature_np(8, 3)(F.col("text")).alias("s")).collect()}
     assert col_sig == np_sig
@@ -303,7 +303,7 @@ def test_band_geometry_must_tile_the_sketch(spark, docs):
     bad = [
         lambda: dedup.simhash_near_dups(docs, bands=3),
         lambda: dedup.simhash_near_dups(docs, bands=0),
-        lambda: dedup.minhash_near_dups(docs, num_hashes=16, bands=3),
+        lambda: dedup.minhash_near_dups(docs, bands=3),
         lambda: dedup.minhash_near_dups(docs, bands=0),
         lambda: dedup.minhash_vs_index(sigs, sigs, bands=5),
         lambda: simsearch.embedding_lsh_candidates(vecs, n_bits=32, bands=5),
@@ -374,7 +374,7 @@ def test_multimodal_plumbing(spark):
         assert abs(sum(r["feature"]) - 1.0) < 1e-5  # histogram normalized
         assert sum(r["hist"]) == 768  # fake decode: 16x16x3 payload bytes
         assert all(c >= 0 for c in r["hist"])
-    frames = multimodal.frame_sample(media, every_ms=1000)
+    frames = multimodal.frame_sample(media)
     rows = frames.collect()
     assert all(r["ts_ms"] == r["frame_idx"] * 1000 for r in rows)
 
@@ -407,7 +407,7 @@ def test_phash_near_dups(spark):
 
     got = {(r["a"], r["b"]): r["hamming"]
            for r in multimodal.phash_near_dups(
-               media, max_hamming=3, use_codec=False).collect()}
+               media, use_codec=False).collect()}
     want = {}
     ids = [i for i, h in hashes.items() if h != 0]
     for i, a in enumerate(ids):
@@ -470,7 +470,7 @@ def test_clean_corpus_chain(spark, docs):
     unknown-language docs are filtered by the default lang set."""
     from insights_spark.text.clean import clean_corpus
 
-    kept = {r["doc_id"]: r for r in clean_corpus(docs, min_tokens=5).collect()}
+    kept = {r["doc_id"]: r for r in clean_corpus(docs).collect()}
     assert 7 not in kept                      # empty doc gated
     assert 1 in kept and 2 not in kept        # exact dup → min id kept
     assert 6 not in kept                      # ws/case dup of 1
@@ -566,20 +566,20 @@ def test_per_source_cap_and_stratified_sample(spark):
         F.concat(F.lit("s"), F.pmod("id", F.lit(4)).cast("string")).alias("source"),
         F.concat(F.lit("L"), F.pmod("id", F.lit(6)).cast("string")).alias("lang"),
     )
-    kept = per_source_cap(d, 7, "source")
+    kept = per_source_cap(d, 7)
     per_src = {r["source"]: r["n"] for r in
                kept.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert per_src == {f"s{i}": 7 for i in range(4)}
     again = {tuple(sorted(r["doc_id"] for r in per_source_cap(
-        d.repartition(13), 7, "source").collect()))}
+        d.repartition(13), 7).collect()))}
     assert {tuple(sorted(r["doc_id"] for r in kept.collect()))} == again
 
     # stratum smaller than k → whole stratum kept
-    samp = stratified_sample(d, 60, "lang")
+    samp = stratified_sample(d, 60)
     per_lang = {r["lang"]: r["n"] for r in
                 samp.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert per_lang == {f"L{i}": 50 for i in range(6)}
-    samp2 = stratified_sample(d, 10, "lang")
+    samp2 = stratified_sample(d, 10)
     assert samp2.count() == 60
 
 
@@ -589,7 +589,7 @@ def test_approx_quantile_gate(spark):
     df = spark.range(0, 4000).select(
         (F.col("id") % 3).alias("g"), (F.col("id") % 101).cast("double").alias("v")
     )
-    rows = approx_quantile_gate(df, "v", ["g"], q=0.5).collect()
+    rows = approx_quantile_gate(df, "v", ["g"]).collect()
     assert len(rows) == 3
     for r in rows:
         assert r["within_bounds"], r
@@ -666,7 +666,7 @@ def test_repetition_scores_hand_computed(spark):
         [(1, "a b a b a c"), (2, "x y z"), (3, ""), (4, None)],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in repetition_scores(df, gram_n=2).collect()}
+    rows = {r["doc_id"]: r for r in repetition_scores(df).collect()}
     assert set(rows) == {1, 2, 3}  # NULL text dropped, empty text kept
     r = rows[1]
     assert r["n_tokens"] == 6
@@ -700,7 +700,7 @@ def test_boilerplate_flags_hand_computed(spark):
         "doc_id long, text string",
     )
     rows = {r["doc_id"]: r for r in
-            boilerplate_flags(df, seg_tokens=2, min_df=2).collect()}
+            boilerplate_flags(df, seg_tokens=2).collect()}
     assert set(rows) == {1, 2, 3}
     assert rows[1]["n_segs"] == 3
     assert rows[1]["boiler_segs"] == 1
@@ -722,7 +722,7 @@ def test_frame_schedule_metadata_only(spark):
     )
     rows = sorted(
         (r["media_id"], r["frame_idx"], r["ts_ms"])
-        for r in frame_sample(media, every_ms=1000).collect()
+        for r in frame_sample(media).collect()
     )
     assert rows == [(1, 0, 0), (1, 1, 1000), (1, 2, 2000), (2, 0, 0)]
 
@@ -860,7 +860,7 @@ def test_minhash_vs_index_hand_checked(spark):
         "doc_id", minhash_signature_np()(F.col("text")).alias("sig"))
     batch = sigs.filter(F.col("doc_id") < 10)
     index = sigs.filter(F.col("doc_id") >= 10)
-    rows = minhash_vs_index(batch, index, threshold=0.5).collect()
+    rows = minhash_vs_index(batch, index).collect()
     assert [(r["a"], r["b"], r["est_jaccard"]) for r in rows] == [(1, 10, 1.0)]
 
 
@@ -1163,7 +1163,7 @@ def test_novelty_hand_cases(spark):
     got = {
         r["doc_id"]: (r["n_grams"], r["n_novel"], r["novelty"])
         for r in novelty_scores(
-            spark.createDataFrame(rows, "doc_id long, text string"), n=3
+            spark.createDataFrame(rows, "doc_id long, text string")
         ).collect()
     }
     assert got == {
@@ -1474,19 +1474,18 @@ def test_pagerank_fixed_point_hand_cases(spark):
     nodes = spark.createDataFrame([(0,), (1,), (2,)], "id long")
     cyc = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
     r = {x["id"]: x["score"] for x in
-         pagerank_fixed_point(nodes, cyc, iters=5).collect()}
+         pagerank_fixed_point(nodes, cyc).collect()}
     assert len(set(r.values())) == 1  # symmetric
     assert abs(sum(r.values()) - 10**12) < 100  # mass conserved mod floors
 
     star = spark.createDataFrame(
         [(1, 0), (2, 0), (0, 1), (0, 2)], "src long, dst long")
     s = {x["id"]: x["score"] for x in
-         pagerank_fixed_point(nodes, star, iters=5).collect()}
+         pagerank_fixed_point(nodes, star).collect()}
     assert s[0] > s[1] == s[2]
 
     rep = {x["id"]: x["score"] for x in
-           pagerank_fixed_point(nodes.repartition(7), star.repartition(5),
-                                iters=5).collect()}
+           pagerank_fixed_point(nodes.repartition(7), star.repartition(5)).collect()}
     assert rep == s  # bit-identical under repartitioning
 
 
@@ -1498,7 +1497,7 @@ def test_source_drift_chi2_hand_case(spark):
     docs = spark.createDataFrame(
         [(0, "aa aa aa bb", "s1"), (1, "aa", "s2")],
         "doc_id long, text string, source string")
-    rows = source_drift_chi2(docs, min_count=1, source_col="source").collect()
+    rows = source_drift_chi2(docs, min_count=1).collect()
     got = {(r["source"], r["term"]): (int(r["chi2_num"]), int(r["chi2_den"]))
            for r in rows}
     # c=5, c_s1=4, c_s2=1, c_aa=4, c_bb=1
