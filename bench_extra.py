@@ -9,7 +9,8 @@ $PLAN_DIR (default /tmp/insights_plans), outside the repo, so a run never
 overwrites the committed plans/r06/ evidence.
 
 --plans-only writes NORMALISED plans: expression ids (#123), [plan_id=N],
-pythonUDFn and RDD[N] numbers are replaced, so plan files of two checkouts diff
+pythonUDFn and RDD[N] numbers and the uuid suffix of snapshot-table data
+dirs (/c2-a442fb60) are replaced, so plan files of two checkouts diff
 cleanly — the check for a refactor that should leave plans unchanged.
 
 Usage:
@@ -47,6 +48,8 @@ _RUN_IDS = (
     # RDD ids count every RDD the process made before, so they shift with
     # the jobs earlier queries ran
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    # SnapshotTable data dirs are c<snapshot>-<uuid hex[:8]>, new each run
+    (re.compile(r"(/c\d+-)[0-9a-f]{8}\b"), r"\1_"),
 )
 
 

@@ -8,16 +8,12 @@ driver loop, insights.py:1-40); this is engine-native. Everything here
 shares ONE cost envelope: windows and joins keyed on the user partition,
 no global shuffle, skew bounded by the busiest single user:
 
-Batch path (:func:`sessionize`): classic gaps-and-islands —
+Sessionization (:func:`sessionize`): classic gaps-and-islands —
 ``lag(ts) OVER (PARTITION BY user ORDER BY ts)`` → new-session flag when
 the gap exceeds the timeout → running SUM of flags = session index →
 one groupBy((user, session_idx)). Two window passes + one aggregation,
 ALL partitioned by user_id: no global shuffle, no driver state, skew
 bounded by the busiest single user (AQE splits beyond that).
-
-Streaming path: use ``F.session_window(ts_col, gap)`` in a watermarked
-``groupBy`` (see streaming/ingest.py) — Spark's native session windows
-hold only open-session state per key.
 
 Exactly SQL-expressible (lag/sum windows), so the driver oracle pins the
 full semantics including tie handling: ties on ts order by the event id

@@ -1884,7 +1884,7 @@ def _q_table_time_travel(spark, sf_dir):
     """Snapshot time travel (runtime/tablefmt.py:SnapshotTable.read):
     as_of_ts=250 resolves the post-merge state even though snapshot 3
     OVERWROTE the table — history survives replace commits because commits
-    only add files; expire_snapshots is the sole deletion path."""
+    only add files and the format never deletes one."""
     t = _snapshot_table_fixture(spark, sf_dir, "tt")
     assert t.current_snapshot_id() == 3  # the overwrite is live
     return t.read(as_of_ts=250).select("doc_id", "source", "n_chars")

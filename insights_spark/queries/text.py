@@ -1515,12 +1515,10 @@ def _q_source_cap(spark, sf_dir):
           FROM documents) WHERE rk <= 10
     """)
 def _q_source_cap_stream_twin(spark, sf_dir):
-    """Batch twin of the streaming per-source cap (r3 verdict #5): the
-    streaming admission counter, for a corpus presented as one micro-batch,
-    admits exactly the lowest 10 doc ids per source; this query reproduces
-    that membership as one keyed window. Streaming == batch equivalence is
-    pinned in tests/test_streaming.py; this row makes the semantics
-    oracle-anchored and driver-visible."""
+    """Arrival-order per-source cap (text/clean.py:per_source_cap_arrival,
+    r3 verdict #5): the lowest 10 doc ids per source, as one keyed window —
+    what an admission counter admits when the corpus arrives as one batch.
+    This row makes the semantics oracle-anchored and driver-visible."""
     from insights_spark.text.clean import per_source_cap_arrival
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")

@@ -60,8 +60,8 @@ class LineageLog:
         dropped still appears (rows_in>0, rows_out=0) — that row IS the
         extraction-drop signal. A (-1, 0, 0) sentinel row is always appended
         so `read()` proves the stage ran even when it produced zero
-        partitions; it carries zero counts (sums unaffected) and
-        per-partition readers (`skew_report`) exclude it.
+        partitions; it carries zero counts (sums unaffected), and
+        per-partition readers exclude it by `partition_id >= 0`.
         """
         out_c = partition_counts(df_out).withColumnRenamed("rows", "rows_out")
         if df_in is not None:
@@ -92,14 +92,3 @@ class LineageLog:
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(LINEAGE).parquet(self.path)
-
-    def skew_report(self, stage: str) -> DataFrame:
-        """Partition row-count spread for one stage — max/median ratio."""
-        lin = self.read().filter(
-            (F.col("stage") == stage) & (F.col("partition_id") >= 0)
-        )
-        return lin.agg(
-            F.max("rows_out").alias("max_rows"),
-            F.expr("percentile_approx(rows_out, 0.5)").alias("p50_rows"),
-            F.count(F.lit(1)).alias("partitions"),
-        )

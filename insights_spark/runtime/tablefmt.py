@@ -26,10 +26,7 @@ reimplemented here from the published spec, no Iceberg code):
   ``read()`` resolves the current one,
 - ``merge`` rewrites into fresh dirs and commits a *replace* snapshot —
   readers pinned to older snapshots keep working because their files
-  still exist,
-- ``expire_snapshots`` is the ONLY deletion path and only removes data
-  dirs unreachable from the kept manifests (Iceberg's
-  ``expireSnapshots``).
+  still exist. The format never deletes: history grows with the commits.
 
 Scale posture: manifests carry directory paths + row counts, never row
 data — a manifest is O(commits-per-snapshot) small; the read path hands
@@ -55,7 +52,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -165,33 +161,26 @@ class SnapshotTable:
         raise CommitConflict(f"lost 5 commit races on {self.path}")
 
     # ---- write operations -----------------------------------------
-    def append(self, df: DataFrame, ts: int | None = None,
-               extra_summary: dict | None = None) -> int:
+    def append(self, df: DataFrame, ts: int | None = None) -> int:
         """Commit df as new rows (Iceberg `append`): new dirs only, the
-        parent's dirs carried forward untouched. `extra_summary` lands in
-        the manifest's summary — the hook streaming sinks use to stamp
-        their epoch id for exactly-once replay detection."""
+        parent's dirs carried forward untouched."""
         parent0 = self.current_snapshot_id()
         rel, rows = self._write_data(df, (parent0 or 0) + 1)
 
         def build(parent):
             base = [] if parent is None else self._load(parent)["dirs"]
-            return base + [rel], {"added_rows": rows, **(extra_summary or {})}
+            return base + [rel], {"added_rows": rows}
 
         return self._retrying(build, "append", ts)
 
-    def overwrite(self, df: DataFrame, ts: int | None = None,
-                  extra_summary: dict | None = None) -> int:
+    def overwrite(self, df: DataFrame, ts: int | None = None) -> int:
         """Commit df as the whole table (Iceberg `replace`): the new
-        snapshot lists only the new dir; history keeps the old ones.
-        `extra_summary` = the same epoch-stamp hook append has (a
-        replace-shaped streaming sink — e.g. SCD2 maintenance — needs it
-        for exactly-once replay detection)."""
+        snapshot lists only the new dir; history keeps the old ones."""
         parent0 = self.current_snapshot_id()
         rel, rows = self._write_data(df, (parent0 or 0) + 1)
 
         def build(parent):
-            return [rel], {"replaced_rows": rows, **(extra_summary or {})}
+            return [rel], {"replaced_rows": rows}
 
         return self._retrying(build, "replace", ts)
 
@@ -230,52 +219,16 @@ class SnapshotTable:
             raise ValueError(f"snapshot {sid} is empty")
         return self.spark.read.parquet(*dirs)
 
-    # ---- maintenance ----------------------------------------------
-    def compact(self, ts: int | None = None,
-                target_partitions: int | None = None) -> int:
-        """Rewrite the CURRENT snapshot's dirs into one coalesced dir and
-        commit it as a replace snapshot — Iceberg's rewrite_data_files
-        (public API). The small-files problem is the table-format failure
-        mode at scale: a nightly-append table accretes one dir of tiny
-        files per batch, and scan planning degrades with file COUNT, not
-        bytes. Compaction is read + coalesce + one replace commit;
-        history (and any pinned reader) is untouched — old dirs are only
-        reclaimed by expire_snapshots."""
-        parent = self.current_snapshot_id()
-        if parent is None:
-            raise ValueError(f"table {self.path} has no snapshots")
-        cur = self.read(snapshot_id=parent)
-        n = target_partitions or self.spark.sparkContext.defaultParallelism
-        return self.overwrite(cur.coalesce(n), ts=ts)
-
-    def expire_snapshots(self) -> list[str]:
-        """Drop all but the newest manifest and delete data dirs it does
-        not reference — the only deletion path. Returns the removed dirs
-        (lineage accounting)."""
-        cur = self.current_snapshot_id()
-        if cur is None:
-            return []
-        live = set(self._load(cur)["dirs"])
-        removed = []
-        for sid in range(1, cur):
-            os.remove(self._snap_path(sid))
-        for d in os.listdir(self._data):
-            if d not in live:
-                shutil.rmtree(os.path.join(self._data, d))
-                removed.append(d)
-        return sorted(removed)
-
 
 def snapshot_diff(
     table: "SnapshotTable",
     keys: list[str],
-    from_snapshot: int | None = None,
-    to_snapshot: int | None = None,
     from_ts: int | None = None,
     to_ts: int | None = None,
     compare_cols: list[str] | None = None,
 ) -> DataFrame:
-    """CDC between two snapshots of the same table: one row per key whose
+    """CDC between two snapshots of the same table, each the newest one
+    committed at or before `from_ts` / `to_ts`: one row per key whose
     state changed, labeled insert / delete / update — the change feed a
     downstream consumer (search index, cache, mirror) applies instead of
     re-reading the whole table.
@@ -289,8 +242,8 @@ def snapshot_diff(
 
     Output: (keys..., change, old_<col>..., new_<col>...).
     """
-    a = table.read(snapshot_id=from_snapshot, as_of_ts=from_ts)
-    b = table.read(snapshot_id=to_snapshot, as_of_ts=to_ts)
+    a = table.read(as_of_ts=from_ts)
+    b = table.read(as_of_ts=to_ts)
     cols = compare_cols or [c for c in b.columns if c not in keys]
     a2 = a.select(*keys, F.struct(*cols).alias("_old"))
     b2 = b.select(*keys, F.struct(*cols).alias("_new"))

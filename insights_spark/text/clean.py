@@ -135,15 +135,13 @@ def per_source_cap(docs: DataFrame, max_per_source: int) -> DataFrame:
 
 
 def per_source_cap_arrival(docs: DataFrame, max_per_source: int) -> DataFrame:
-    """Per-domain cap with ASCENDING-ID admission — the batch twin of
-    ``streaming.ingest.stream_source_cap``: a whole corpus presented as one
-    micro-batch admits exactly the lowest `max_per_source` ids per source,
-    and this operator reproduces that membership as one keyed window
-    (equivalence pinned in tests/test_streaming.py, and driver-visible as
-    the `source_cap_stream_twin` oracle query). Use the hash-ranked
-    `per_source_cap` when membership must be content-stable under
-    re-ingestion order; use this one when batch must replay exactly what
-    the streaming admission decided.
+    """Per-domain cap with ASCENDING-ID admission: keeps exactly the
+    lowest `max_per_source` doc ids per source, as one keyed window — the
+    membership an arrival-order admission counter reaches when the whole
+    corpus arrives at once (driver-visible as the `source_cap_stream_twin`
+    oracle query). Use the hash-ranked `per_source_cap` when membership
+    must be content-stable under re-ingestion order; use this one when
+    the earliest ids must win.
     """
     from pyspark.sql.window import Window
 

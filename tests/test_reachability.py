@@ -1,10 +1,11 @@
 """No dead library code: every top-level def, class and constant under
-insights_spark/ (outside queries/) must be referenced in some non-test .py
-file outside its own definition. A reference is an AST name, attribute,
-imported name or a word inside a string constant, so the targets
-perfbench/spans.py PATCHES names as strings pass without an entry here.
-Docstrings and comments do not count. A name that only tests reach fails,
-unless ALLOW says why it stays."""
+insights_spark/ (outside queries/), and every non-dunder method of a
+top-level class, must be referenced in some non-test .py file outside its
+own definition. A reference is an AST name, attribute, imported name or a
+word inside a string constant, so the targets perfbench/spans.py PATCHES
+names as strings pass without an entry here. Docstrings and comments do
+not count. A name that only tests reach fails, unless ALLOW says why it
+stays."""
 
 from __future__ import annotations
 
@@ -17,7 +18,8 @@ ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "insights_spark"
 WORD = re.compile(r"[A-Za-z_]\w*")
 
-# "<path under insights_spark/>" or "<path>:<name>" -> why it stays
+# "<path under insights_spark/>", "<path>:<name>" or "<path>:<Class>.<method>"
+# -> why it stays
 ALLOW = {
     "geo/cells.py:s2_parent": "tests check s2_cell_id against it",
     "geo/cells.py:s2_level": "tests check s2_cell_id against it",
@@ -33,8 +35,6 @@ ALLOW = {
                                        "the pandas UDF against",
     "text/multimodal.py:MEDIA": "the media-table schema media_from_docs emits; "
                                 "tests build media rows with it",
-    "streaming/ingest.py": "the paper's minutely-replication twin (SURVEY §2.9)",
-    "streaming/table_sink.py": "the sink of the minutely-replication twin",
 }
 
 
@@ -62,11 +62,19 @@ def _refs(node: ast.AST, docstrings: set[int]) -> Counter:
     return out
 
 
-def _defined(stmt: ast.stmt) -> list[str]:
-    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-        return [stmt.name]
+def _defined(stmt: ast.stmt) -> list[tuple[str, str, ast.AST]]:
+    """(key, name, definition) for each name a top-level statement binds,
+    and for a class each non-dunder method, keyed "<Class>.<method>"."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return [(stmt.name, stmt.name, stmt)]
+    if isinstance(stmt, ast.ClassDef):
+        return [(stmt.name, stmt.name, stmt)] + [
+            (f"{stmt.name}.{m.name}", m.name, m) for m in stmt.body
+            if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not m.name.startswith("__")]
     targets = getattr(stmt, "targets", [getattr(stmt, "target", None)])
-    return [n.id for t in targets if t is not None for n in ast.walk(t)
+    return [(n.id, n.id, stmt) for t in targets if t is not None
+            for n in ast.walk(t)
             if isinstance(n, ast.Name) and not n.id.startswith("__")]
 
 
@@ -82,14 +90,13 @@ def test_library_names_are_reached_outside_tests():
         if not path.is_relative_to(PKG) or rel.startswith("queries/"):
             continue
         for stmt in tree.body:
-            own = _refs(stmt, docs[path])
-            for name in _defined(stmt):
-                if refs[name] > own[name]:
+            for qual, name, node in _defined(stmt):
+                if refs[name] > _refs(node, docs[path])[name]:
                     continue
-                key = next((k for k in (f"{rel}:{name}", rel) if k in ALLOW), None)
+                key = next((k for k in (f"{rel}:{qual}", rel) if k in ALLOW), None)
                 if key:
                     allowed.add(key)
                 else:
-                    unreached.append(f"{rel}:{name}")
+                    unreached.append(f"{rel}:{qual}")
     assert not unreached, f"reached only by tests (delete, or add to ALLOW): {unreached}"
     assert allowed == set(ALLOW), f"stale ALLOW entries: {set(ALLOW) - allowed}"

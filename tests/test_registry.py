@@ -53,19 +53,23 @@ def test_bench_metadata_names_registered_queries():
     assert all(isinstance(q.sf1_skip, str) for q in REGISTRY if q.sf1_skip)
 
 
-@pytest.mark.parametrize("name", ["scd2_intervals", "scd2_merge"])
-def test_scd2_query_matches_oracle_at_sf0001(spark, name):
-    """sf0.001 holds two lineitem rows that differ only in l_shipdate;
-    the element version must still be unique per key, or the interval
-    order (and so valid_to/is_current) is left to the engine."""
+@pytest.mark.parametrize("name", ["scd2_intervals", "scd2_merge",
+                                  "source_cap_stream_twin"])
+def test_query_matches_oracle_at_sf0001(spark, name):
+    """Registered queries whose sf0.001 edge cases need a pytest of their
+    own. scd2_*: sf0.001 holds two lineitem rows that differ only in
+    l_shipdate; the element version must still be unique per key, or the
+    interval order (and so valid_to/is_current) is left to the engine.
+    source_cap_stream_twin: the only test of per_source_cap_arrival."""
     from collections import Counter
 
     import duckdb
 
     sf = entry.SF_DEFAULT  # the sf0.001 tables
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW lineitem AS "
-                f"SELECT * FROM read_parquet('{sf}/lineitem.parquet')")
+    for table in ("documents", "lineitem"):
+        con.execute(f"CREATE VIEW {table} AS "
+                    f"SELECT * FROM read_parquet('{sf}/{table}.parquet')")
     want = con.execute(entry.oracle_sql()[name])
     cols = [d[0] for d in want.description]
     got = entry.queries()[name](spark, sf)

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from insights_spark.runtime.tablefmt import CommitConflict, SnapshotTable
@@ -94,45 +92,10 @@ def test_commit_conflict_exhausted_raises(spark, tmp_path, monkeypatch):
         t.append(_df(spark, [(2, "b")]), ts=2)
 
 
-def test_expire_snapshots(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.append(_df(spark, [(1, "a")]), ts=1)
-    t.merge(_df(spark, [(1, "b")]), keys=["id"], ts=2)  # replace snapshot
-    before = set(os.listdir(t._data))
-    assert len(before) >= 2
-    removed = t.expire_snapshots()
-    assert removed  # snapshot-1's dir was unreachable from snapshot 2
-    assert _sorted(t.read()) == [(1, "b")]
-    with pytest.raises(FileNotFoundError):
-        t.read(snapshot_id=1)
-
-
 def test_empty_table_read_raises(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError):
         t.read()
-    with pytest.raises(ValueError):
-        t.compact()
-
-
-def test_compact_small_files(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    for i in range(5):  # the nightly-append small-files shape
-        t.append(_df(spark, [(i, f"v{i}")]), ts=i)
-    pre = t.current_snapshot_id()
-    assert len(t._load(pre)["dirs"]) == 5
-    pinned = t.read(snapshot_id=pre)
-    sid = t.compact(ts=99, target_partitions=1)
-    # one dir now, same rows, history intact, pinned reader unharmed
-    assert len(t._load(sid)["dirs"]) == 1
-    expect = [(i, f"v{i}") for i in range(5)]
-    assert _sorted(t.read()) == expect
-    assert _sorted(pinned) == expect
-    assert [s["operation"] for s in t.history()][-1] == "replace"
-    # reclaim: only expire deletes the old dirs; compacted table survives
-    removed = t.expire_snapshots()
-    assert len(removed) == 5
-    assert _sorted(t.read()) == expect
 
 
 def test_snapshot_diff(spark, tmp_path):
@@ -142,17 +105,16 @@ def test_snapshot_diff(spark, tmp_path):
     from insights_spark.runtime.tablefmt import SnapshotTable, snapshot_diff
 
     t = SnapshotTable(spark, str(tmp_path / "cdc"))
-    s1 = t.append(spark.createDataFrame(
+    t.append(spark.createDataFrame(
         [(1, 10), (2, None), (3, 30)], "k long, v long"), ts=100)
-    s2 = t.overwrite(spark.createDataFrame(
+    t.overwrite(spark.createDataFrame(
         [(1, 10), (2, 20), (4, 40)], "k long, v long"), ts=200)
     got = {r["k"]: (r["change"], r["old_v"], r["new_v"])
-           for r in snapshot_diff(t, ["k"], from_snapshot=s1,
-                                  to_snapshot=s2).collect()}
+           for r in snapshot_diff(t, ["k"], from_ts=100,
+                                  to_ts=200).collect()}
     assert got == {
         2: ("update", None, 20),   # NULL→value is an update, not noise
         3: ("delete", 30, None),
         4: ("insert", None, 40),
     }  # k=1 unchanged → absent
-    assert snapshot_diff(t, ["k"], from_snapshot=s2,
-                         to_snapshot=s2).count() == 0
+    assert snapshot_diff(t, ["k"], from_ts=200, to_ts=200).count() == 0
