@@ -180,7 +180,7 @@ def hex_encode_sql(res: int) -> str:
             f" + (r + {_HEX_OFF})")
 
 
-def hex_ring_ids(cell: int, rings: int = 1) -> list[int]:
+def hex_ring_ids(cell: int, rings: int) -> list[int]:
     """The cell plus its k-ring neighbors (axial coordinates)."""
     res, q, r = hex_decode(cell)
     out = []

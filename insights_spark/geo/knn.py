@@ -180,9 +180,7 @@ def _cell_pairs_half(pts, res: int, rings: int):
 def within_distance(
     points: DataFrame,
     radius_deg: float,
-    id_col: str = "id",
     rings: int = 1,
-    res: int | None = None,
 ) -> DataFrame:
     """EXACT distance-within self-join: unordered pairs (a, b, dist2) with
     planar degree distance ≤ ``radius_deg`` — the range-join sibling of
@@ -193,16 +191,16 @@ def within_distance(
     ``cert_radius_deg(res, rings) ≥ radius_deg`` every true pair is
     guaranteed to share a (query-cell, ring-replicated-candidate) bucket,
     so the bucketed join + dist2 filter IS the exact answer — no fallback
-    pass, no all-pairs join. ``res`` defaults to the FINEST resolution
-    satisfying the bound (finest ⇒ smallest buckets ⇒ cheapest shuffle).
+    pass, no all-pairs join. The resolution is the FINEST one satisfying
+    the bound (finest ⇒ smallest buckets ⇒ cheapest shuffle).
 
     Scale: one shuffle keyed on the hex cell; replication factor is the
     ring size (7 cells at rings=1, 19 at rings=2) on the candidate side
     only. Hot cells skew exactly like ``knn_cell_local`` — AQE skew-join
     handles moderate cases; salt the cell key for pathological ones.
     """
-    res = certified_res(radius_deg, rings, res)
-    pts = points.select(F.col(id_col).alias("id"), "lon", "lat")
+    res = certified_res(radius_deg, rings)
+    pts = points.select("id", "lon", "lat")
     # half-fan: each unordered pair joined once (see _cell_pairs_half)
     return _cell_pairs_half(pts, res, rings).filter(
         F.col("dist2") <= F.lit(radius_deg * radius_deg)
@@ -223,36 +221,23 @@ def cert_radius_deg(res: int, rings: int) -> float:
     return s * (1.5 * rings - 0.5)
 
 
-def certified_res(radius_deg: float, rings: int, res: int | None) -> int:
-    """The resolution of a ring search that certifies ``radius_deg``:
-    ``res`` itself, or when None the FINEST resolution (≤ 15) with
-    ``cert_radius_deg(res, rings) ≥ radius_deg`` — finest ⇒ smallest
-    buckets ⇒ cheapest shuffle. Raises ValueError when the radius exceeds
-    the res-0 coverage of ``rings`` or the given ``res`` is too fine."""
+def certified_res(radius_deg: float, rings: int) -> int:
+    """The resolution of a ring search that certifies ``radius_deg``: the
+    FINEST resolution (≤ 15) with ``cert_radius_deg(res, rings) ≥
+    radius_deg`` — finest ⇒ smallest buckets ⇒ cheapest shuffle. Raises
+    ValueError when the radius exceeds the res-0 coverage of ``rings``."""
     if cert_radius_deg(0, rings) < radius_deg:
         raise ValueError(
             f"radius {radius_deg}° exceeds coverage of rings={rings} even at "
             f"res=0 ({cert_radius_deg(0, rings)}°); raise rings"
         )
-    if res is None:
-        res = 0
-        while res < 15 and cert_radius_deg(res + 1, rings) >= radius_deg:
-            res += 1
-    elif cert_radius_deg(res, rings) < radius_deg:
-        raise ValueError(
-            f"cert_radius_deg({res}, {rings}) = {cert_radius_deg(res, rings)} "
-            f"< radius {radius_deg}: candidate set would be incomplete"
-        )
+    res = 0
+    while res < 15 and cert_radius_deg(res + 1, rings) >= radius_deg:
+        res += 1
     return res
 
 
-def ripley_k(
-    points: DataFrame,
-    radii_deg: list[float],
-    id_col: str = "id",
-    rings: int = 2,
-    res: int | None = None,
-) -> DataFrame:
+def ripley_k(points: DataFrame, radii_deg: list[float]) -> DataFrame:
     """Ripley's K point-pattern statistic (Ripley 1976/1977, public) in
     EXACT integer counts — the third leg of the spatial-stats trio next to
     ``moran_i_exact`` (global clustering) and ``getis_ord_exact`` (local
@@ -268,19 +253,20 @@ def ripley_k(
     partitionings and engines, same discipline as ``moran_i_exact``.
 
     Physical plan: ONE certified cell+ring bucketed self-join at the
-    LARGEST radius (``within_distance`` machinery — cert_radius(res,rings)
-    ≥ max(r) guarantees candidate completeness, never all-pairs), then a
-    single conditional aggregation produces every radius band from the
-    same pair set. Cost is independent of ``len(radii_deg)``. Radii are
-    keyed as integer millidegrees to keep the output schema float-free.
+    LARGEST radius (``within_distance`` machinery at 2 rings —
+    cert_radius(res, 2) ≥ max(r) guarantees candidate completeness,
+    never all-pairs), then a single conditional aggregation produces
+    every radius band from the same pair set. Cost is independent of
+    ``len(radii_deg)``. Radii are keyed as integer millidegrees to keep
+    the output schema float-free.
     """
     if not radii_deg:
         raise ValueError("radii_deg must be non-empty")
     rmax = max(radii_deg)
-    res = certified_res(rmax, rings, res)
-    pts = points.select(F.col(id_col).alias("id"), "lon", "lat")
+    res = certified_res(rmax, 2)
+    pts = points.select("id", "lon", "lat")
     # half-fan: each unordered pair joined once (see _cell_pairs_half)
-    pairs = _cell_pairs_half(pts, res, rings).filter(
+    pairs = _cell_pairs_half(pts, res, 2).filter(
         F.col("dist2") <= F.lit(rmax * rmax)
     )
     # cumulative band counts in one pass; coalesce(0) covers the
@@ -514,7 +500,7 @@ def nn_cell_res(points: DataFrame) -> int:
     return best
 
 
-def nn_distance_hist(points: DataFrame, res: int | None = None) -> DataFrame:
+def nn_distance_hist(points: DataFrame) -> DataFrame:
     """Nearest-neighbor distance histogram — the Clark-Evans / G-function
     side of point-pattern analysis (Clark & Evans 1954, public), the
     LOCAL companion to ``ripley_k``'s global pair curve: the distribution
@@ -547,8 +533,7 @@ def nn_distance_hist(points: DataFrame, res: int | None = None) -> DataFrame:
     max_d2) — exact integers; the Clark-Evans R division stays with the
     consumer.
     """
-    if res is None:
-        res = nn_cell_res(points)
+    res = nn_cell_res(points)
     pts = points.select("id", "lon", "lat")
     # one-resolution steps: each level multiplies cell area (and ring
     # density) by 7 while the certification radius grows 2.65x -- the

@@ -95,21 +95,20 @@ def decayed_cell_scores(
     res: int,
     halflife_s: int,
     now_epoch_s: int,
-    max_buckets: int = 20,
 ) -> DataFrame:
     """Exponentially time-decayed activity per hex cell — the "trending
     now" score (recent edits count full, each halflife halves the
-    weight): score = Σ_events 2^−min(age/halflife, max_buckets).
+    weight): score = Σ_events 2^−min(age/halflife, 20).
 
     Exactness by construction: ages quantize to INTEGER halflife buckets,
     so every weight is a power of two (an exact double), every event
-    count is an integer ≤ 2^(53−max_buckets), and every partial sum is a
-    multiple of 2^−max_buckets below 2^33 — representable exactly in a
+    count is an integer ≤ 2^33, and every partial sum is a
+    multiple of 2^−20 below 2^33 — representable exactly in a
     double, so the sum is order-free and the SQL oracle reproduces it
     bit-for-bit WITHOUT the sorted-fold crutch. ``now_epoch_s`` is an
     explicit parameter (a deterministic pipeline never reads the clock
     inside the plan); events newer than `now` clamp to bucket 0, older
-    than max_buckets halflives to the floor weight 2^−max_buckets.
+    than 20 halflives to the floor weight 2^−20.
 
     Scale: one (cell, bucket) rollup then one cell rollup — both
     decomposable with map-side combine; output bounded by occupied cells.
@@ -119,7 +118,7 @@ def decayed_cell_scores(
     # float division + floor can misround within an ulp of a bucket edge
     h = F.lit(int(halflife_s)).cast("long")
     bucket = F.least(
-        F.lit(int(max_buckets)).cast("long"),
+        F.lit(20).cast("long"),
         F.greatest(
             F.lit(0).cast("long"),
             ((age - F.pmod(age, h)) / h).cast("long"),
@@ -317,7 +316,7 @@ def getis_ord_exact(cell_counts: DataFrame) -> DataFrame:
     )
 
 
-def idw_fill(cell_counts: DataFrame, min_ring1: int = 3) -> DataFrame:
+def idw_fill(cell_counts: DataFrame) -> DataFrame:
     """Inverse-distance-weighted gap-fill — estimate a value at every
     EMPTY hex cell from its occupied ring-1/ring-2 neighbors (Shepard
     1968 IDW, public; the raster "fill the holes in the surface"
@@ -331,12 +330,11 @@ def idw_fill(cell_counts: DataFrame, min_ring1: int = 3) -> DataFrame:
     integer — est = (2·Σ₁x + Σ₂x) / (2·c₁ + c₂) — so the estimate is
     ONE IEEE division of two exactly-derived BIGINTs and the DuckDB
     oracle reproduces it bit-for-bit (same trick as hex_focal_smooth's
-    ``smoothed``). ``min_ring1`` gates output to true holes (≥ that many
-    occupied IMMEDIATE neighbors); the default 3 keeps interior gaps and
-    drops the unbounded halo fringe where an estimate is extrapolation,
-    not interpolation.
+    ``smoothed``). Output is gated to true holes (≥ 3 occupied IMMEDIATE
+    neighbors): that keeps interior gaps and drops the unbounded halo
+    fringe where an estimate is extrapolation, not interpolation.
 
-    Output per gap cell: (cell, ring1_nbrs ∈ min_ring1..6, ring2_nbrs ∈
+    Output per gap cell: (cell, ring1_nbrs ∈ 3..6, ring2_nbrs ∈
     0..12, w_num = 2·Σ₁x + Σ₂x, w_den = 2·c₁ + c₂, est = w_num/w_den).
 
     Scale posture (100 TB): input is the bounded OCCUPIED-cell rollup.
@@ -375,7 +373,7 @@ def idw_fill(cell_counts: DataFrame, min_ring1: int = 3) -> DataFrame:
     )
     gaps = agg.join(
         occ.select(F.col("cell").alias("_t")), "_t", "left_anti"
-    ).where(F.col("ring1_nbrs") >= F.lit(min_ring1))
+    ).where(F.col("ring1_nbrs") >= F.lit(3))
     return gaps.select(
         F.col("_t").alias("cell"),
         "ring1_nbrs",
@@ -386,18 +384,14 @@ def idw_fill(cell_counts: DataFrame, min_ring1: int = 3) -> DataFrame:
     )
 
 
-def semivariogram_exact(
-    cell_counts: DataFrame,
-    cnt_col: str = "n",
-    max_h: int = 3,
-) -> DataFrame:
+def semivariogram_exact(cell_counts: DataFrame) -> DataFrame:
     """Empirical semivariogram over the hex-cell rollup in EXACT integer
     arithmetic (Matheron 1963 estimator, public) — the geostatistics
     primitive that quantifies HOW FAR spatial correlation reaches:
 
         γ(h) = Σ_{pairs at hex distance h} (x_i − x_j)² / (2·N_h)
 
-    for each lag h = 1..max_h. Moran's I gives one global clustering
+    for each lag h = 1..3. Moran's I gives one global clustering
     number, G_i* flags individual cells; the variogram gives the
     *structure* — γ rising toward a sill tells you the practical
     correlation range, which is exactly the number that should pick the
@@ -413,13 +407,13 @@ def semivariogram_exact(
 
     Scale posture (100 TB): input is the bounded OCCUPIED-cell rollup;
     one (3·Σh)× explode + ONE equi-join on the BIGINT neighbor id (AQE
-    co-partitioned with the fan shuffle) + a ≤max_h-row rollup. No UDF,
+    co-partitioned with the fan shuffle) + a ≤3-row rollup. No UDF,
     no geometry, no all-pairs — pair count is bounded by 3·Σh × occupied
     cells, never quadratic.
     """
     occ = cell_counts.select(
         F.col("cell").cast("long").alias("cell"),
-        F.col(cnt_col).cast("long").alias("x"),
+        F.col("n").cast("long").alias("x"),
     )
     fan = F.array(
         *[
@@ -427,7 +421,7 @@ def semivariogram_exact(
                 (F.col("cell") + F.lit(o).cast("long")).alias("t"),
                 F.lit(h).alias("h"),
             )
-            for h in range(1, max_h + 1)
+            for h in range(1, 4)
             for o in cells.hex_ring(h)
             if o > 0
         ]

@@ -41,17 +41,15 @@ def st_within(
     radius_deg: float,
     tau_seconds: int,
     id_col: str = "id",
-    ts_col: str = "ts",
     rings: int = 1,
-    res: int | None = None,
 ) -> DataFrame:
     """EXACT space-time pair join: unordered pairs (a, b, dist2, dt_s)
     with planar degree distance ≤ ``radius_deg`` AND |Δts| ≤
-    ``tau_seconds``. ``res`` defaults to the finest resolution whose
+    ``tau_seconds``. The resolution is the finest one whose
     ring-``rings`` coverage certifies the radius (smallest complete
     buckets), through the same ``certified_res`` guard as
     within_distance."""
-    res = certified_res(radius_deg, rings, res)
+    res = certified_res(radius_deg, rings)
     tau = int(tau_seconds)
     base = points.select(
         F.col(id_col).alias("id"),
@@ -59,7 +57,7 @@ def st_within(
         "lat",
         # NTZ has no direct long cast; session TZ is UTC so the hop
         # through TIMESTAMP preserves the instant
-        F.col(ts_col).cast("timestamp").cast("long").alias("_ep"),
+        F.col("ts").cast("timestamp").cast("long").alias("_ep"),
     ).withColumn(
         "home_cell",
         cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")),

@@ -170,22 +170,21 @@ def od_flows(points: DataFrame, id_col: str = "id") -> DataFrame:
 def simplify_tracks(
     points: DataFrame,
     eps_milli: int,
-    max_depth: int = 4,
     id_col: str = "id",
 ) -> DataFrame:
     """Depth-capped Douglas–Peucker polyline simplification per track
     (Douglas & Peucker 1973, public) — keep a point when its perpendicular
     deviation from the current chord exceeds ``eps_milli`` millidegrees,
-    recursing into both halves, at most ``max_depth`` levels deep.
+    recursing into both halves, at most 4 levels deep.
 
     The depth cap is not a shortcut but the DISTRIBUTED framing: classic
     DP is unboundedly recursive, which neither a fixed SQL oracle nor a
     bounded work estimate can follow; capping the split tree makes the
-    operator a fixed pipeline of `max_depth` argmax rounds (each level ≤
-    2^L segments/track), bounds kept interior points at 2^max_depth − 1,
-    and keeps the oracle expressible as `max_depth` unrolled SQL stages —
-    the same discipline as the unrolled-Lloyd kmeans oracle. At the
-    default 4 the cap binds only on tracks needing > 15 kept vertices.
+    operator a fixed pipeline of 4 argmax rounds (each level ≤ 2^L
+    segments/track), bounds kept interior points at 2^4 − 1 = 15, and
+    keeps the oracle expressible as 4 unrolled SQL stages — the same
+    discipline as the unrolled-Lloyd kmeans oracle. The cap binds only
+    on tracks needing > 15 kept vertices.
 
     Exactness: coordinates are quantized to integer 1/1000 degrees
     (lossless on the synthetic milli-degree lattice) and every DP decision
@@ -196,13 +195,11 @@ def simplify_tracks(
     index; strict `>` means on-the-chord points never split.
 
     Scale posture: ONE shuffle on the track key (applyInPandas); per-group
-    work is O(n · 2^max_depth) comparisons on a track of n points with
+    work is O(n · 2^4) comparisons on a track of n points with
     NO global state — the embarrassingly-parallel per-key shape. Output:
     (user_id, idx, lon, lat) — kept points with their 0-based position in
     the (ts, id)-ordered track; endpoints always kept.
     """
-    if max_depth < 1:
-        raise ValueError("max_depth must be >= 1")
     if eps_milli < 0:
         raise ValueError("eps_milli must be >= 0")
     pts = points.select(
@@ -233,7 +230,7 @@ def simplify_tracks(
         stack = [(0, n - 1, 0)]
         while stack:
             i, j, d = stack.pop()
-            if j - i < 2 or d >= max_depth:
+            if j - i < 2 or d >= 4:
                 continue
             ax, ay = int(xs[i]), int(ys[i])
             dx, dy = int(xs[j]) - ax, int(ys[j]) - ay

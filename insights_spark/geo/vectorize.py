@@ -229,7 +229,6 @@ def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
 def tile_regions(
     tiles: DataFrame,
     min_density: float = 1,
-    max_sweeps: int = 30,
 ) -> DataFrame:
     """Merged hot-tile regions: 4-adjacency connected components.
 
@@ -244,8 +243,6 @@ def tile_regions(
     caller runs ``unpersist()`` or ``spark.catalog.clearCache()``: the
     ContextCleaner does not reclaim persisted DataFrames.
     """
-    if max_sweeps < 1:
-        raise ValueError("max_sweeps must be >= 1")
     hot = (
         tiles.filter(F.col("density") >= F.lit(min_density))
         .select("z", "x", "y", "density", tile_id().alias("id"))
@@ -275,7 +272,7 @@ def tile_regions(
     )
     edges.count()
 
-    labels, _ = star_cc_labels(edges, max_sweeps)
+    labels, _ = star_cc_labels(edges)
     return (
         hot.join(labels, "id", "left")
         .select(

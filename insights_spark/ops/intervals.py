@@ -60,7 +60,6 @@ def auto_chunk_seconds(
 def interval_join(
     left: DataFrame,
     right: DataFrame,
-    chunk_seconds: int | None = None,
     left_cols: tuple[str, str, str] = ("id", "start_ts", "end_ts"),
     right_cols: tuple[str, str, str] = ("id", "start_ts", "end_ts"),
 ) -> DataFrame:
@@ -68,13 +67,11 @@ def interval_join(
 
     Output: (a, b, a_start, b_start) — one row per overlapping pair.
     One shuffle keyed on the chunk id; replication factor per row =
-    ceil(interval length / chunk_seconds) + 1. Degenerate (end < start)
-    intervals never match anything. `chunk_seconds=None` (default)
-    auto-picks via `auto_chunk_seconds` (≈ median span); pass an explicit
-    value to override — results are chunk-size invariant either way.
+    ceil(interval length / chunk_seconds) + 1, with the chunk length from
+    `auto_chunk_seconds` (≈ median span); results are chunk-size
+    invariant. Degenerate (end < start) intervals never match anything.
     """
-    if chunk_seconds is None:
-        chunk_seconds = auto_chunk_seconds(left, right, left_cols, right_cols)
+    chunk_seconds = auto_chunk_seconds(left, right, left_cols, right_cols)
     lid, ls, le = left_cols
     rid, rs, re_ = right_cols
 

@@ -174,7 +174,6 @@ def asof_join(
     right: DataFrame,
     on: str,
     right_cols: list[str] | None = None,
-    right_order: str | None = None,
 ) -> DataFrame:
     """Generic two-table AS-OF join: every left row gets the LATEST right
     row with ``right.ts <= left.ts`` for the same key (NULLs if none) —
@@ -191,8 +190,8 @@ def asof_join(
 
     Ties: a right row AT the left timestamp matches (inclusive ≤, right
     side sorts before left at equal ts); equal right timestamps resolve
-    by ``right_order`` ascending — the LARGEST value wins (pass e.g. a
-    version/id column; defaults to the first right_col).
+    by the first right column ascending — the LARGEST value wins (put a
+    version/id column first).
     """
     if right_cols is not None and not right_cols:
         raise ValueError("asof_join: right_cols, when passed, must be non-empty")
@@ -204,9 +203,9 @@ def asof_join(
         # a name that cannot collide with a left column
         right = right.withColumn("_asof_ts", F.col("ts"))
         rcols = ["_asof_ts"]
-    # default equal-ts tiebreak: first right attribute — never an
-    # IndexError now (and the column-order dependence is documented above)
-    ordc = right_order or rcols[0]
+    # equal-ts tiebreak: first right attribute — never an IndexError
+    # (and the column-order dependence is documented above)
+    ordc = rcols[0]
     # the right attributes travel as ONE struct: last(ignorenulls) must
     # pick the whole latest right ROW — per-attribute lasts would
     # resurrect an older non-null value wherever the matched row holds a

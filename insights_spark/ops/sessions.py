@@ -350,15 +350,15 @@ def event_gap_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def covered_time(events: DataFrame, window_s: int = 600) -> DataFrame:
+def covered_time(events: DataFrame) -> DataFrame:
     """Interval-UNION length per user — "how many seconds was the user
-    actually active?" when each event opens a ``window_s``-second activity
+    actually active?" when each event opens a 600-second activity
     interval: overlapping intervals must count once (the classic
     interval-coalescing problem; Σ min(gap, window) over the time-sorted
     stream is the closed form, no merge loop needed).
 
     With events sorted by (epoch, id) per user, event i covers
-    ``min(next_epoch − epoch, window_s)`` NEW seconds (its window up to
+    ``min(next_epoch − epoch, 600)`` NEW seconds (its window up to
     where the next event's window takes over), and the last event covers
     the full window — so the union is ONE lead() window away, exact
     integer seconds. Duplicate timestamps contribute 0 (fully shadowed),
@@ -369,8 +369,6 @@ def covered_time(events: DataFrame, window_s: int = 600) -> DataFrame:
     Output: (user_id, n_events, covered_s). One user-partitioned window
     + one decomposable rollup; skew bounded by the busiest user.
     """
-    if window_s < 1:
-        raise ValueError("window_s must be >= 1")
     pts = events.select(
         F.col("user_id"),
         F.col("ts").cast("timestamp").cast("long").alias("_ep"),
@@ -379,8 +377,8 @@ def covered_time(events: DataFrame, window_s: int = 600) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("_ep", "_id")
     nxt = F.lead("_ep").over(w)
     contrib = F.when(
-        nxt.isNull(), F.lit(window_s)
-    ).otherwise(F.least(nxt - F.col("_ep"), F.lit(window_s)))
+        nxt.isNull(), F.lit(600)
+    ).otherwise(F.least(nxt - F.col("_ep"), F.lit(600)))
     return (
         pts.withColumn("_c", contrib)
         .groupBy("user_id")

@@ -5,8 +5,8 @@ non-delete element-history rows, GROUP BY changeset with ten conditional
 counters plus two geodesic-length sums. The reference drives this as a
 Python loop over 50,000-id chunks issuing one INSERT..SELECT each (and has
 an off-by-one in the 10k repair pass); the engine computes it as ONE
-shuffle — partial aggregation map-side, AQE handles skewed changesets, and
-the optional `salt` two-level aggregation covers mega-changesets explicitly.
+shuffle — partial aggregation map-side absorbs mega-changesets (every
+counter is a decomposable SUM), and AQE handles the skew that remains.
 
 Null semantics match Postgres: a predicate over a missing tag value is
 NULL, `(NULL)::int` is NULL, and SUM skips NULLs — Spark's three-valued
@@ -32,14 +32,12 @@ def _cnt(pred: Column) -> Column:
     return F.sum(pred.cast("int"))
 
 
-def changeset_stats(elements: DataFrame, salt_buckets: int = 0) -> DataFrame:
+def changeset_stats(elements: DataFrame) -> DataFrame:
     """elements (element_history rows) → one stats row per changeset.
 
-    `salt_buckets` > 0 enables two-level aggregation: partial agg on
-    (changeset, salt) then final agg on changeset — the explicit skew
-    treatment for mega-changesets (SURVEY §4 X10). With 0 the single
-    groupBy relies on map-side partial agg + AQE, which is correct and
-    usually enough.
+    One groupBy: map-side partial aggregation collapses a mega-changeset
+    to one partial row per map task before the shuffle, so no explicit
+    salting is needed (SURVEY §4 X10); AQE handles the rest.
     """
     e = elements.filter(F.col("action") != "delete")
     t = F.col("tags")
@@ -63,19 +61,9 @@ def changeset_stats(elements: DataFrame, salt_buckets: int = 0) -> DataFrame:
         "added_places": place_in & way_node & (act == "create"),
         "modified_places": place_in & way_node & (act == "modify"),
     }
-    aggs = [_cnt(p).alias(name) for name, p in preds.items()]
-
-    if salt_buckets > 0:
-        salted = e.withColumn(
-            "_salt", F.pmod(F.hash("id", "version", "type"), F.lit(salt_buckets))
-        )
-        partial = salted.groupBy("changeset", "_salt").agg(*aggs)
-        counts = partial.groupBy("changeset").agg(
-            *[F.sum(name).alias(name) for name in preds]
-        )
-    else:
-        counts = e.groupBy("changeset").agg(*aggs)
-    return counts
+    return e.groupBy("changeset").agg(
+        *[_cnt(p).alias(name) for name, p in preds.items()]
+    )
 
 
 def changeset_stats_with_meters(elements: DataFrame) -> DataFrame:
@@ -203,20 +191,18 @@ def winsorized_stats(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    p_lo: int = 5,
-    p_hi: int = 95,
 ) -> DataFrame:
     """Winsorized robust statistics per group in EXACT integer arithmetic
     (winsorization per Tukey/Dixon, public) — the outlier-resistant
     aggregate a profiling layer wants next to the raw mean, with the
     percentile defined RANK-EXACTLY so two engines cannot disagree:
 
-        k_q = max(1, ⌈q·n/100⌉),  p_q = the k_q-th smallest value
+        k_q = max(1, ⌈q·n/100⌉),  p_q = the k_q-th smallest value, q ∈ {5, 95}
 
     (type-1/lower quantile; the value at a rank is well-defined under
     ties regardless of tie order). Values are quantized to integer
     1/100 units (lossless on 2-decimal money-style columns), the
-    winsorized sum clamps each value into [p_lo, p_hi] before an exact
+    winsorized sum clamps each value into [p_5, p_95] before an exact
     BIGINT sum — no float accumulation anywhere; the winsorized MEAN is
     the consumer's one division.
 
@@ -229,8 +215,6 @@ def winsorized_stats(
     """
     from pyspark.sql.window import Window
 
-    if not (0 <= p_lo <= p_hi <= 100):
-        raise ValueError("need 0 <= p_lo <= p_hi <= 100")
     v = (
         df.select(
             F.col(group_col).alias("grp"),
@@ -244,8 +228,8 @@ def winsorized_stats(
         F.row_number().over(w).alias("_rn"),
         F.count(F.lit(1)).over(Window.partitionBy("grp")).alias("_n"),
     ).persist()
-    k_lo = F.greatest(F.lit(1), F.ceil(F.col("_n") * p_lo / 100))
-    k_hi = F.greatest(F.lit(1), F.ceil(F.col("_n") * p_hi / 100))
+    k_lo = F.greatest(F.lit(1), F.ceil(F.col("_n") * 5 / 100))
+    k_hi = F.greatest(F.lit(1), F.ceil(F.col("_n") * 95 / 100))
     bounds = (
         ranked.where((F.col("_rn") == k_lo) | (F.col("_rn") == k_hi))
         .groupBy("grp")

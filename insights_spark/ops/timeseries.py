@@ -35,29 +35,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_STEP = {"week": "interval 7 days", "day": "interval 1 day"}
-
-
-def gapfill_counts(df: DataFrame, bucket: str = "week") -> DataFrame:
-    """Per-(key, bucket) row counts with zero-filled gaps.
+def gapfill_counts(df: DataFrame) -> DataFrame:
+    """Per-(key, week) row counts with zero-filled gaps.
 
     Output: (event_type, bucket_start timestamp, n_events bigint) — one row
-    for EVERY (observed key, bucket) pair between the global min and max
-    occupied bucket, zeros where the key was silent. Rows with NULL ts
+    for EVERY (observed key, week) pair between the global min and max
+    occupied week, zeros where the key was silent. Rows with NULL ts
     or NULL key are excluded (they have no place on the spine).
     """
-    if bucket not in _STEP:
-        raise ValueError(f"bucket must be one of {sorted(_STEP)}")
     facts = df.filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
-    bk = F.date_trunc(bucket, F.col("ts"))
+    bk = F.date_trunc("week", F.col("ts"))
 
     rollup = facts.groupBy(
         F.col("event_type"), bk.alias("bucket_start")
     ).agg(F.count(F.lit(1)).alias("n_events"))
 
     bounds = facts.agg(
-        F.date_trunc(bucket, F.min("ts")).alias("_b0"),
-        F.date_trunc(bucket, F.max("ts")).alias("_b1"),
+        F.date_trunc("week", F.min("ts")).alias("_b0"),
+        F.date_trunc("week", F.max("ts")).alias("_b1"),
     )
     spine = (
         facts.select("event_type").distinct()
@@ -65,7 +60,7 @@ def gapfill_counts(df: DataFrame, bucket: str = "week") -> DataFrame:
         .select(
             "event_type",
             F.explode(
-                F.sequence(F.col("_b0"), F.col("_b1"), F.expr(_STEP[bucket]))
+                F.sequence(F.col("_b0"), F.col("_b1"), F.expr("interval 7 days"))
             ).alias("bucket_start"),
         )
     )
@@ -156,17 +151,17 @@ def merge_distinct_sketches(
     )
 
 
-def rolling_active_sketches(events: DataFrame, window_days: int = 7) -> DataFrame:
-    """DAU + trailing-window active users per day from HLL sketches —
-    the DAU/WAU/MAU board without ever re-scanning raw events: the fact
+def rolling_active_sketches(events: DataFrame) -> DataFrame:
+    """DAU + trailing-7-day active users per day from HLL sketches —
+    the DAU/WAU board without ever re-scanning raw events: the fact
     table is touched ONCE (one day-keyed sketch build); every trailing
-    window is a register-max merge of ≤ window_days stored sketches.
+    window is a register-max merge of ≤ 7 stored sketches.
 
     The naive alternatives both fail at scale: count_distinct OVER a
     RANGE frame holds per-user state per day, and a day×window re-scan
-    reads the raw table window_days times. Here each day's sketch
-    contributes to its next window_days target days via a bounded
-    sequence-explode (window_days rows per day — dimension-sized), one
+    reads the raw table 7 times. Here each day's sketch contributes to
+    its next 7 target days via a bounded sequence-explode (7 rows per
+    day — dimension-sized), one
     groupBy merges. Merge is lossless wrt the sketch (register max), so
     the trailing estimate EQUALS a direct build over the window's raw
     union — pytest-pinned.
@@ -181,7 +176,7 @@ def rolling_active_sketches(events: DataFrame, window_days: int = 7) -> DataFram
         F.hll_sketch_agg("u").alias("sketch")
     )
     contrib = sk.select(
-        F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias("off"),
+        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("off"),
         F.col("day"), "sketch",
     ).select(F.date_add(F.col("day"), F.col("off")).alias("tday"), "sketch")
     wactive = contrib.groupBy("tday").agg(

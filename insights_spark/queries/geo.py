@@ -8,7 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from insights_spark.geo import cells as _cells
-from insights_spark.geo.cells import geohash_sql as _gh_sql
 from insights_spark.queries import query
 from insights_spark.queries._fixtures import (
     _boundary_rows,
@@ -919,7 +918,7 @@ def _q_simplify_tracks(spark, sf_dir):
         _t(spark, sf_dir, "events").select("event_id", "user_id", "ts"),
         "event_id",
     )
-    return simplify_tracks(pts, eps_milli=20000, max_depth=4, id_col="event_id")
+    return simplify_tracks(pts, eps_milli=20000, id_col="event_id")
 
 
 @query("move_rose", headline=True, oracle=f"""
@@ -1152,7 +1151,7 @@ def _q_idw_fill(spark, sf_dir):
     counts = pts.groupBy(
         cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
-    return idw_fill(counts, min_ring1=3)
+    return idw_fill(counts)
 
 
 _vario = ", ".join(
@@ -1187,7 +1186,7 @@ def _q_semivariogram(spark, sf_dir):
     counts = pts.groupBy(
         cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
-    return semivariogram_exact(counts, max_h=3)
+    return semivariogram_exact(counts)
 
 
 @query("knn_join", headline=True, oracle=f"""
@@ -1299,7 +1298,7 @@ def _q_knn_cell_local(spark, sf_dir):
 
 @query("geohash_cells", headline=True, oracle=f"""
         WITH pts AS ({_EV_PTS})
-        SELECT {_gh_sql('lon', 'lat', 5)} AS gh,
+        SELECT {_cells.geohash_sql('lon', 'lat', 5)} AS gh,
                CAST(count(*) AS BIGINT) AS n
         FROM pts GROUP BY 1
     """)
@@ -1435,9 +1434,7 @@ def _q_ripley_k(spark, sf_dir):
     from insights_spark.geo.knn import ripley_k
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return ripley_k(
-        pts.withColumnRenamed("event_id", "id"), [1.0, 2.0, 3.0], rings=2
-    )
+    return ripley_k(pts.withColumnRenamed("event_id", "id"), [1.0, 2.0, 3.0])
 
 
 @query("nn_distance_hist", headline=True, oracle="""
@@ -1464,9 +1461,7 @@ def _q_nn_distance_hist(spark, sf_dir):
     from insights_spark.geo.knn import nn_distance_hist
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    return nn_distance_hist(
-        pts.withColumnRenamed("event_id", "id"), res=None
-    )
+    return nn_distance_hist(pts.withColumnRenamed("event_id", "id"))
 
 
 @query("cube_rollup", headline=True, oracle=f"""

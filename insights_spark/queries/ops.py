@@ -853,7 +853,7 @@ def _q_rolling_active(spark, sf_dir):
     lossless-merge equality is pytest-pinned."""
     from insights_spark.ops.timeseries import rolling_active_sketches
 
-    return rolling_active_sketches(_t(spark, sf_dir, "events"), 7)
+    return rolling_active_sketches(_t(spark, sf_dir, "events"))
 
 
 @query("event_transitions", headline=True, oracle="""
@@ -2013,7 +2013,7 @@ def _q_spatial_layout_scan(spark, sf_dir):
     path = f"/tmp/spark_graft_layout_{digest}"
     shutil.rmtree(path, ignore_errors=True)
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    cluster_spatial(pts, path, level=14, partitions=8)
+    cluster_spatial(pts, path, partitions=8)
     return spatial_scan(spark, path, _layout_qcell()).select("event_id")
 
 

@@ -465,9 +465,7 @@ def _q_ngram_jaccard(spark, sf_dir):
     cap)."""
     from insights_spark.text.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5, max_gram_df=50
-    )
+    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), max_gram_df=50)
 
 
 @query("kcore", headline=True, oracle=_kcore_sql(k=5, rounds=6))
@@ -478,10 +476,8 @@ def _q_kcore(spark, sf_dir):
     bit-equal to the unrolled SQL."""
     from insights_spark.text.links import kcore_peel
 
-    return kcore_peel(_doc_graph(_t(spark, sf_dir, "documents")),
-                      k=5, rounds=6).select(
-        F.col("id").alias("doc_id"), "core_deg"
-    )
+    g = _doc_graph(_t(spark, sf_dir, "documents"))
+    return kcore_peel(g, k=5).select(F.col("id").alias("doc_id"), "core_deg")
 
 
 @query("normalize_text", headline=True, oracle="""
@@ -566,7 +562,7 @@ def _q_sorted_neighborhood(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", title.alias("title")
     )
-    return sorted_neighborhood_pairs(d, "title", window=4)
+    return sorted_neighborhood_pairs(d, "title")
 
 
 @query("hits", headline=True, oracle=_hits_sql(iters=4, scale=10**6))
@@ -577,10 +573,8 @@ def _q_hits(spark, sf_dir):
     single score cannot make; bit-equal to the unrolled SQL recurrence."""
     from insights_spark.text.links import hits_fixed_point
 
-    return hits_fixed_point(_doc_graph(_t(spark, sf_dir, "documents")),
-                            iters=4).select(
-        F.col("id").alias("doc_id"), "hub", "auth"
-    )
+    g = _doc_graph(_t(spark, sf_dir, "documents"))
+    return hits_fixed_point(g).select(F.col("id").alias("doc_id"), "hub", "auth")
 
 
 @query("communities", headline=True, oracle=(
@@ -594,10 +588,8 @@ def _q_communities(spark, sf_dir):
     star-CC (one component here) cannot see."""
     from insights_spark.text.links import label_propagation
 
-    return label_propagation(_doc_graph(_t(spark, sf_dir, "documents")),
-                             iters=4).select(
-        F.col("id").alias("doc_id"), "label"
-    )
+    g = _doc_graph(_t(spark, sf_dir, "documents"))
+    return label_propagation(g).select(F.col("id").alias("doc_id"), "label")
 
 
 @query(
@@ -612,9 +604,7 @@ def _q_kmeans(spark, sf_dir):
     dim)-keyed update; bit-identical to the unrolled SQL recurrence."""
     from insights_spark.text.simsearch import kmeans_lloyd_int
 
-    return kmeans_lloyd_int(
-        _t(spark, sf_dir, "embeddings"), k=8, iters=3, scale=1024
-    )
+    return kmeans_lloyd_int(_t(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -659,9 +649,7 @@ def _q_prefix_jaccard(spark, sf_dir):
     prefix lemma's completeness on real data."""
     from insights_spark.text.dedup import prefix_jaccard_pairs
 
-    return prefix_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), t_num=1, t_den=2, n=3
-    )
+    return prefix_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 _BM25_SQL = f"""
@@ -908,7 +896,7 @@ def _q_passage_dedup(spark, sf_dir):
     dedup misses."""
     from insights_spark.text.dedup import passage_dedup
 
-    return passage_dedup(_t(spark, sf_dir, "documents"), chunk_tokens=10)
+    return passage_dedup(_t(spark, sf_dir, "documents"))
 
 
 @query("heavy_hitters", headline=True, oracle=f"""
@@ -927,7 +915,7 @@ def _q_heavy_hitters(spark, sf_dir):
     sf0.01; 'the' and the planted 'dup' marker do not)."""
     from insights_spark.text.freq import heavy_hitters
 
-    return heavy_hitters(_t(spark, sf_dir, "documents"), k=32)
+    return heavy_hitters(_t(spark, sf_dir, "documents"))
 
 
 @query("novelty", headline=True, oracle=f"""
@@ -1025,7 +1013,7 @@ def _q_top_terms_per_source(spark, sf_dir):
     one map-side-combined rollup + one source-partitioned window."""
     from insights_spark.text.freq import top_terms_per_source
 
-    return top_terms_per_source(_t(spark, sf_dir, "documents"), k=5)
+    return top_terms_per_source(_t(spark, sf_dir, "documents"))
 
 
 @query("kn_continuation", headline=True, oracle=f"""
@@ -1099,7 +1087,7 @@ def _q_token_lorenz(spark, sf_dir):
     global_cumsum_multi scan — never an unpartitioned window."""
     from insights_spark.text.freq import token_share_curve
 
-    return token_share_curve(_t(spark, sf_dir, "documents"), buckets=10)
+    return token_share_curve(_t(spark, sf_dir, "documents"))
 
 
 @query("ann_topk", oracle="""
@@ -1121,7 +1109,7 @@ def _q_ann_topk(spark, sf_dir):
     """Similarity search: exact cosine top-5 (sequential-fold dot product)."""
     from insights_spark.text.simsearch import cosine_topk
 
-    return cosine_topk(_t(spark, sf_dir, "embeddings"), k=5)
+    return cosine_topk(_t(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -1147,7 +1135,7 @@ def _q_cos_near_dups(spark, sf_dir):
     pytest against this exact baseline."""
     from insights_spark.text.simsearch import embedding_near_dups
 
-    return embedding_near_dups(_t(spark, sf_dir, "embeddings"), threshold=0.4)
+    return embedding_near_dups(_t(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -1408,7 +1396,7 @@ def _q_prepare_corpus(spark, sf_dir):
     cleaned = clean_corpus(docs)
     with_src = cleaned.join(docs.select("doc_id", "source"), "doc_id")
     capped = per_source_cap(with_src, 15)
-    split = train_test_split(capped, test_permille=100)
+    split = train_test_split(capped)
     return split.groupBy("split", "lang_pred").agg(
         F.count(F.lit(1)).cast("bigint").alias("docs"),
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
@@ -1457,7 +1445,7 @@ def _q_train_split(spark, sf_dir):
     from insights_spark.text.clean import train_test_split
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    return train_test_split(d, test_permille=100).select("doc_id", "split")
+    return train_test_split(d).select("doc_id", "split")
 
 
 @query("inverted_index", headline=True, oracle=f"""
@@ -1564,7 +1552,7 @@ def _q_decontam(spark, sf_dir):
         .filter(F.size(toks) >= 16)
         .select(F.array_join(F.slice(toks, 4, 13), " ").alias("text"))
     )
-    return contaminated_docs(d, bench, n=13)
+    return contaminated_docs(d, bench)
 
 
 @query("stratified_sample", oracle="""
@@ -1734,7 +1722,7 @@ def _q_ann_ivf(spark, sf_dir):
         cosine_topk_bucketed, cosine_topk_sample)
 
     emb = _t(spark, sf_dir, "embeddings")
-    approx = cosine_topk_bucketed(emb, k=5, nprobe=3)
+    approx = cosine_topk_bucketed(emb, nprobe=3)
     m_mod = 1 << 20
     n_row = emb.agg(F.count(F.lit(1)).alias("_n"))
     sample = (
@@ -1745,7 +1733,7 @@ def _q_ann_ivf(spark, sf_dir):
         )
         .drop("_n")
     )
-    exact = cosine_topk_sample(emb, queries=sample, k=5)
+    exact = cosine_topk_sample(emb, queries=sample)
     hit = exact.join(
         approx.select("id", "neighbor_id").withColumn("_h", F.lit(1)),
         ["id", "neighbor_id"], "left",
@@ -1845,7 +1833,7 @@ _MINHASH_LSH_PAIRS_SQL = f"""
 def _q_minhash_lsh(spark, sf_dir):
     from insights_spark.text.dedup import minhash_near_dups
 
-    return minhash_near_dups(_t(spark, sf_dir, "documents"), threshold=0.5)
+    return minhash_near_dups(_t(spark, sf_dir, "documents"))
 
 
 @query("multimodal_features", oracle="""
@@ -1870,7 +1858,7 @@ def _q_multimodal(spark, sf_dir):
     from insights_spark.text.multimodal import image_features, media_from_docs
 
     media = media_from_docs(_t(spark, sf_dir, "documents"))
-    feats = image_features(media)
+    feats = image_features(media, use_codec=False)
     return feats.select(
         "media_id",
         "n_bytes",
@@ -2252,7 +2240,7 @@ def _q_dedup_clusters(spark, sf_dir):
     from insights_spark.text.dedup import minhash_near_dups, near_dup_clusters
 
     d = _t(spark, sf_dir, "documents")
-    return near_dup_clusters(d, minhash_near_dups(d, threshold=0.5))
+    return near_dup_clusters(d, minhash_near_dups(d))
 
 
 @query("cluster_savings", headline=True, oracle=f"""
@@ -2291,7 +2279,7 @@ def _q_cluster_savings(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    return cluster_savings(d, near_dup_clusters(d, minhash_near_dups(d, threshold=0.5)))
+    return cluster_savings(d, near_dup_clusters(d, minhash_near_dups(d)))
 
 
 @query("corpus_shuffle", headline=True, oracle="""
@@ -2510,7 +2498,7 @@ def _q_cluster_safe_split(spark, sf_dir):
     from insights_spark.text.dedup import minhash_near_dups, near_dup_clusters
 
     d = _t(spark, sf_dir, "documents")
-    labels = near_dup_clusters(d, minhash_near_dups(d, threshold=0.5))
+    labels = near_dup_clusters(d, minhash_near_dups(d))
     return cluster_safe_split(labels)
 
 
@@ -2581,9 +2569,7 @@ def _q_semantic_prune(spark, sf_dir):
     with list_dot_product float parity (same fold as cos_near_dups)."""
     from insights_spark.text.simsearch import semantic_prune
 
-    return semantic_prune(
-        _t(spark, sf_dir, "embeddings"), num_centroids=16, threshold=0.4
-    )
+    return semantic_prune(_t(spark, sf_dir, "embeddings"))
 
 
 # systematic PPS sampling, replayed with the identical integer
@@ -2648,7 +2634,7 @@ def _q_ann_int8(spark, sf_dir):
     from insights_spark.text.quant import int8_topk, quantize_embeddings
 
     codes = quantize_embeddings(_t(spark, sf_dir, "embeddings"))
-    return int8_topk(codes, query_ids=[0, 1, 2, 3], k=5)
+    return int8_topk(codes, query_ids=[0, 1, 2, 3])
 
 
 # BFS: UNION (not ALL) dedups (id, dist) pairs, so the recursion
@@ -2917,8 +2903,7 @@ def _q_cooccur(spark, sf_dir):
     0- vs 1-base difference cancels)."""
     from insights_spark.text.freq import cooccurrence_counts
 
-    return cooccurrence_counts(
-        _t(spark, sf_dir, "documents"), window=3, min_count=50)
+    return cooccurrence_counts(_t(spark, sf_dir, "documents"), window=3)
 
 
 @query("source_drift", headline=True, oracle=f"""
@@ -2950,4 +2935,4 @@ def _q_source_drift(spark, sf_dir):
     instead of KL's libm-dependent logarithm."""
     from insights_spark.text.freq import source_drift_chi2
 
-    return source_drift_chi2(_t(spark, sf_dir, "documents"), min_count=50)
+    return source_drift_chi2(_t(spark, sf_dir, "documents"))

@@ -48,12 +48,11 @@ KEY_COL = "s2_key"
 def cluster_spatial(
     df: DataFrame,
     out_path: str,
-    level: int = 14,
     partitions: int | None = None,
 ) -> None:
     """Write `df` to parquet clustered on the S2 Hilbert curve.
 
-    Adds ``s2_key`` (level-`level` cell id) and lays rows out so each
+    Adds ``s2_key`` (level-14 cell id) and lays rows out so each
     file/row group owns a contiguous curve segment. One range exchange —
     the write's own layout shuffle, nothing extra. NULL coordinates sort
     first (the UDF yields NULL) and land in the first partition; they
@@ -61,7 +60,7 @@ def cluster_spatial(
     """
     spark = df.sparkSession
     n = partitions or spark.sparkContext.defaultParallelism
-    key = s2_udf(level)(F.col("lon"), F.col("lat")).alias(KEY_COL)
+    key = s2_udf(14)(F.col("lon"), F.col("lat")).alias(KEY_COL)
     tagged = df.select("*", key)
     (
         tagged.repartitionByRange(n, F.col(KEY_COL))

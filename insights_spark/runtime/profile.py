@@ -4,11 +4,9 @@ per-chunk logging; this is the set-based engine twin).
 
 One aggregation pass computes per-column null counts, distinct counts and
 min/max; the single 1-row result is then exploded to one row per column —
-no second scan, no per-column jobs. Distinct counts are EXACT by default
-(multiple count-distincts compile to one Expand + shuffle — rows × #cols,
-the documented cost); pass approx=True for the 100 TB path where
-approx_count_distinct (HyperLogLog++) keeps the pass to a plain map-side
-aggregation with no Expand.
+no second scan, no per-column jobs. Distinct counts are EXACT (multiple
+count-distincts compile to one Expand + shuffle — rows × #cols, the
+documented cost), so the oracle compares them bit for bit.
 """
 
 from __future__ import annotations
@@ -17,7 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
-def column_profile(df: DataFrame, approx: bool = False) -> DataFrame:
+
+def column_profile(df: DataFrame) -> DataFrame:
     """Profile every column: (col_name, n_rows, n_null, n_distinct, min_str,
     max_str, min_num, max_num).
 
@@ -33,10 +32,7 @@ def column_profile(df: DataFrame, approx: bool = False) -> DataFrame:
     for c in cols:
         is_num = isinstance(by_name[c], NumericType)
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"_null_{c}"))
-        if approx:
-            aggs.append(F.approx_count_distinct(c).alias(f"_dist_{c}"))
-        else:
-            aggs.append(F.count_distinct(F.col(c)).alias(f"_dist_{c}"))
+        aggs.append(F.count_distinct(F.col(c)).alias(f"_dist_{c}"))
         if is_num:
             aggs.append(F.min(c).cast("double").alias(f"_min_{c}"))
             aggs.append(F.max(c).cast("double").alias(f"_max_{c}"))
@@ -68,28 +64,26 @@ def column_profile(df: DataFrame, approx: bool = False) -> DataFrame:
     return one.select(F.explode(F.array(*per_col)).alias("p")).select("p.*")
 
 
-def equi_depth_histogram(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
+def equi_depth_histogram(df: DataFrame, col: str) -> DataFrame:
     """Equal-population histogram of a numeric column — the optimizer-
     style column statistic (equi-depth beats equi-width under skew: every
     bucket carries ~n/k rows, so selectivity estimates stay honest).
 
     Eight buckets; boundaries are the exact interpolated percentiles at k/8
     (Spark `percentile` == DuckDB quantile_cont — the
-    lang_quality_median parity precedent); pass approx=True to swap in
-    approx_percentile (t-digest) for the 100 TB single-pass path, same
-    output shape. Bucket of a value = 1 + Σ_k [v > bound_k] — a branch-
-    free total rule both engines evaluate identically; NULLs are
-    excluded. Two passes: one aggregation for the bounds row (broadcast
-    back), one groupBy for the counts.
+    lang_quality_median parity precedent). Bucket of a value =
+    1 + Σ_k [v > bound_k] — a branch-free total rule both engines
+    evaluate identically; NULLs are excluded. Two passes: one
+    aggregation for the bounds row (broadcast back), one groupBy for the
+    counts.
 
     Output: (bucket int 1-based, lo, hi, n) — lo/hi are the bucket's
     boundary values (global min/max at the edges); empty buckets
     (possible under heavy value duplication) are omitted.
     """
     fracs = ", ".join(str(k / 8) for k in range(1, 8))
-    fn = "approx_percentile" if approx else "percentile"
     bounds = df.filter(F.col(col).isNotNull()).agg(
-        F.expr(f"{fn}({col}, array({fracs}))").alias("_bs"),
+        F.expr(f"percentile({col}, array({fracs}))").alias("_bs"),
         F.min(col).cast("double").alias("_lo"),
         F.max(col).cast("double").alias("_hi"),
     )

@@ -36,25 +36,23 @@ def token_weight(tok: Column) -> Column:
     return (doc_fingerprint(tok) % 97 - 48).cast("long")
 
 
-def classifier_score(docs: DataFrame, weights: DataFrame | None = None) -> DataFrame:
+def classifier_score(docs: DataFrame) -> DataFrame:
     """Score every document with the linear model; emit
     (id, n_tokens, score, keep).
 
-    ``weights`` (columns: tok, w) is the model. When None, a weight table
-    is derived in-query from the corpus vocabulary (one distinct shuffle —
-    bounded by Heaps' law; a real deployment passes its exported table
-    instead and skips that stage). Either way the model side is broadcast.
-    Docs with no tokens carry no evidence and are not scored.
+    The model (tok, w) is derived in-query from the corpus vocabulary
+    with ``token_weight`` (one distinct shuffle — bounded by Heaps' law)
+    and broadcast. Docs with no tokens carry no evidence and are not
+    scored.
     """
     tok_rows = (
         docs.filter(F.col("text").isNotNull())
         .select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
     )
-    if weights is None:
-        weights = (
-            tok_rows.select("tok").distinct()
-            .withColumn("w", token_weight(F.col("tok")))
-        )
+    weights = (
+        tok_rows.select("tok").distinct()
+        .withColumn("w", token_weight(F.col("tok")))
+    )
     agg = (
         tok_rows.join(F.broadcast(weights), "tok")
         .groupBy("doc_id")

@@ -53,7 +53,7 @@ def clean_corpus(docs: DataFrame) -> DataFrame:
     )
 
 
-def train_test_split(docs: DataFrame, test_permille: int = 100) -> DataFrame:
+def train_test_split(docs: DataFrame) -> DataFrame:
     """Deterministic content-stable train/test split: adds a `split` column
     ('train'/'test') keyed on a multiplicative hash of the document id —
     NOT on row position or RNG, so the assignment survives repartitioning,
@@ -61,7 +61,7 @@ def train_test_split(docs: DataFrame, test_permille: int = 100) -> DataFrame:
     pipeline actually needs: a doc never migrates between splits across
     runs).
 
-    `test_permille`/1000 of the id space goes to test. Pure column
+    100/1000 of the id space goes to test. Pure column
     arithmetic (one codegen'd expression, no shuffle, no UDF), and exactly
     reproducible in ANSI SQL — the driver oracle replays the identical
     `mod(id*1000003+7, 1000)` bucket on DuckDB.
@@ -78,7 +78,7 @@ def train_test_split(docs: DataFrame, test_permille: int = 100) -> DataFrame:
                     F.lit(1000))
     return docs.withColumn(
         "split",
-        F.when(bucket < test_permille, F.lit("test")).otherwise(F.lit("train")),
+        F.when(bucket < 100, F.lit("test")).otherwise(F.lit("train")),
     )
 
 
@@ -215,11 +215,11 @@ def budget_select(docs: DataFrame, token_budget: int) -> DataFrame:
     )
 
 
-def boilerplate_flags(docs: DataFrame, seg_tokens: int = 10) -> DataFrame:
+def boilerplate_flags(docs: DataFrame) -> DataFrame:
     """CCNet-style boilerplate detection: cross-document duplicate
     segments (nav bars, cookie banners, footers) flagged by document
     frequency. The fixture text has no newlines, so "lines" are
-    deterministic ``seg_tokens``-token windows of the token stream — the
+    deterministic 10-token windows of the token stream — the
     same primitive, content-defined instead of layout-defined.
 
     Shape: segment → one content-keyed aggregation (distinct-doc count
@@ -238,7 +238,7 @@ def boilerplate_flags(docs: DataFrame, seg_tokens: int = 10) -> DataFrame:
     """
     from .quality import tokens
 
-    s = seg_tokens
+    s = 10
     toks = tokens(F.col("text"))
     base = (
         docs.filter(F.col("text").isNotNull())

@@ -66,11 +66,11 @@ def _distinct_gram_hashes_udf(n: int):
     return _gh
 
 
-def contaminated_docs(docs: DataFrame, benchmark: DataFrame, n: int = 13) -> DataFrame:
-    """(doc_id, n_bench_grams) for every doc sharing ≥1 n-gram with the
+def contaminated_docs(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """(doc_id, n_bench_grams) for every doc sharing ≥1 13-gram with the
     benchmark; n_bench_grams = how many DISTINCT benchmark gram hashes the
     doc contains."""
-    gh = _distinct_gram_hashes_udf(n)
+    gh = _distinct_gram_hashes_udf(13)
     bench_grams = (
         benchmark.select(F.explode(gh(F.col("text"))).alias("_gh"))
         .distinct()

@@ -69,7 +69,7 @@ def word_ngrams(text: Column) -> Column:
     return F.array_distinct(grams)
 
 
-def word_ngrams_np(n: int = 3):
+def word_ngrams_np():
     """pandas UDF mirror of word_ngrams() — same values, Arrow-batched.
 
     Spark evaluates higher-order functions interpreted (no codegen), which
@@ -79,7 +79,7 @@ def word_ngrams_np(n: int = 3):
 
     @pandas_udf("array<string>")
     def _grams(texts: pd.Series) -> pd.Series:
-        return pd.Series([_word_ngrams_py(t, n) if t is not None else [] for t in texts])
+        return pd.Series([_word_ngrams_py(t, 3) if t is not None else [] for t in texts])
 
     return _grams
 
@@ -112,7 +112,7 @@ def _gram_overlap(
     per branch — locally a persist, at cluster scale a materialized grams
     table. Sizes via F.size (no extra shuffle) in the uncapped path."""
     ga = df.select(
-        F.col("doc_id").alias("a"), word_ngrams_np(3)(F.col("text")).alias("_grams")
+        F.col("doc_id").alias("a"), word_ngrams_np()(F.col("text")).alias("_grams")
     ).persist()
     g = ga.select("a", F.explode("_grams").alias("gram"))
     if max_gram_df is not None:
@@ -201,12 +201,11 @@ def _band_self_join(banded: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    threshold: float = 0.5,
     max_gram_df: int | None = None,
 ) -> DataFrame:
     """Exact word-3-gram Jaccard similarity for all pairs sharing ≥1 gram.
 
-    (a, b, jaccard) with a < b, jaccard ≥ threshold. Shuffle key = gram;
+    (a, b, jaccard) with a < b, jaccard ≥ 0.5. Shuffle key = gram;
     pairs never materialize unless they share a gram.
 
     ``max_gram_df`` is the 100 TB guard: grams occurring in more than that
@@ -226,7 +225,7 @@ def ngram_jaccard_pairs(
             "jaccard",
             F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("a", "b", "jaccard")
     )
 
@@ -283,17 +282,17 @@ def minhash_signature_np(num_hashes: int = 16, n: int = 3):
     return _sig
 
 
-def minhash_signature(text: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: array of num_hashes min-values over gram hashes.
+def minhash_signature(text: Column) -> Column:
+    """MinHash signature: array of 16 min-values over gram hashes.
 
     h_k(g) = (A_k * poly(g) + B_k) mod MOD with fixed odd A_k, B_k.
     Empty-gram docs get MOD (sentinel > any hash).
     """
     grams = word_ngrams(text)
     gh = F.transform(grams, lambda g: poly_hash(g))
-    a_k, b_k = _minhash_coeffs(num_hashes)
+    a_k, b_k = _minhash_coeffs(16)
     sigs = []
-    for k in range(num_hashes):
+    for k in range(16):
         a, b = int(a_k[k]), int(b_k[k])
         hk = F.transform(gh, lambda h: (h * a + b) % F.lit(MOD))
         sigs.append(
@@ -302,12 +301,9 @@ def minhash_signature(text: Column, num_hashes: int = 16) -> Column:
     return F.array(*sigs)
 
 
-def minhash_near_dups(
-    df: DataFrame,
-    threshold: float = 0.5,
-    bands: int = 4,
-) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
+def minhash_near_dups(df: DataFrame) -> DataFrame:
+    """Full near-dup pipeline: LSH candidates (16 hashes in 4 bands) →
+    exact Jaccard verify, keeping pairs with jaccard ≥ 0.5.
 
     Grams + signatures come from ONE fused pandas-UDF pass, persisted: the
     banding branch needs the signature and the verify branch needs the gram
@@ -336,7 +332,7 @@ def minhash_near_dups(
     # exclude them from banding (the verify side keeps them — joins on
     # candidate ids only, so output is unchanged)
     cand = _band_self_join(_band_explode(
-        base.filter(F.size("_grams") > 0), _sig_band_keys("_sig", 16, bands)
+        base.filter(F.size("_grams") > 0), _sig_band_keys("_sig", 16, 4)
     ))
     g = base.select(F.col("_id").alias("_gid"), F.col("_grams"))
     j = (
@@ -346,7 +342,7 @@ def minhash_near_dups(
         .withColumn("uni", F.size(F.array_union("ga", "gb")))
         .withColumn("jaccard", F.when(F.col("uni") > 0, F.col("inter") / F.col("uni"))
                     .otherwise(F.lit(0.0)))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("a", "b", "jaccard")
     )
     return j
@@ -402,22 +398,21 @@ def with_simhash(df: DataFrame) -> DataFrame:
     return df.withColumn("simhash", _sh(F.col("text")))
 
 
-def simhash_near_dups(df: DataFrame, max_hamming: int = 3, bands: int = 4) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dups by simhash hamming distance ≤ max_hamming.
 
-    Banding (pigeonhole): distance ≤ bands-1 implies one of `bands` 16-bit
+    Banding (pigeonhole): distance ≤ 3 implies one of 4 16-bit
     slices matches exactly → candidates join on (band, slice), verified by
     exact popcount. Never all-pairs.
 
     RECALL CONTRACT: every emitted pair truly has hamming ≤ max_hamming
     (precision is exact), but candidate recall is only GUARANTEED for
-    distance ≤ bands-1 (pigeonhole). With the default bands=4 and
-    max_hamming > 3 this is banding-limited recall — the standard simhash
-    trade (Manku et al.'s table-based scheme makes the same one): a true
-    pair whose four 16-bit slices all differ is not surfaced. For
-    guaranteed-complete output at a given threshold, set
-    ``bands = max_hamming + 1`` (64 must be divisible by bands, so in
-    practice 8, 16, 32) and pay the proportionally larger band join.
+    distance ≤ 3 (pigeonhole). With max_hamming > 3 this is
+    banding-limited recall — the standard simhash trade (Manku et al.'s
+    table-based scheme makes the same one): a true pair whose four 16-bit
+    slices all differ is not surfaced. ``banded_hamming_pairs`` with
+    ``bands = max_hamming + 1`` gives guaranteed-complete output at the
+    price of a proportionally larger band join.
 
     Tokenless docs (simhash 0) are excluded up front: they'd pairwise match
     at hamming 0 (O(empty²) output) while sharing no content at all. The
@@ -431,7 +426,7 @@ def simhash_near_dups(df: DataFrame, max_hamming: int = 3, bands: int = 4) -> Da
         F.col("text").isNotNull() & (token_count(F.col("text")) > 0)
     )
     sh = with_simhash(src).select(F.col("doc_id").alias("_id"), "simhash")
-    return banded_hamming_pairs(sh, "simhash", max_hamming, bands)
+    return banded_hamming_pairs(sh, "simhash", max_hamming, 4)
 
 
 def banded_hamming_pairs(
@@ -490,7 +485,7 @@ def near_dup_clusters(
     from ..geo.vectorize import star_cc_labels
 
     edges = pairs.select(F.col("a").alias("id"), F.col("b").alias("nbr_id"))
-    labels, _ = star_cc_labels(edges, 30)
+    labels, _ = star_cc_labels(edges)
     base = docs.select(F.col(id_col))
     joined = base.join(labels.withColumnRenamed("id", id_col), id_col, "left")
     cl = F.coalesce(F.col("label"), F.col(id_col))
@@ -501,11 +496,7 @@ def near_dup_clusters(
     )
 
 
-def minhash_vs_index(
-    batch_sigs: DataFrame,
-    index_sigs: DataFrame,
-    bands: int = 4,
-) -> DataFrame:
+def minhash_vs_index(batch_sigs: DataFrame, index_sigs: DataFrame) -> DataFrame:
     """Incremental near-dedup: NEW documents against an EXISTING corpus's
     stored MinHash signature index — the cross-corpus step the corpus job
     runs per ingest batch (its exact-hash anti-join catches verbatim
@@ -536,7 +527,7 @@ def minhash_vs_index(
         s = df.filter(F.element_at("sig", 1) != MOD).select(
             F.col(idc).alias("_id"), F.col("sig").alias("_sig")
         )
-        return _band_explode(s, _sig_band_keys("_sig", 16, bands)) \
+        return _band_explode(s, _sig_band_keys("_sig", 16, 4)) \
             .withColumnRenamed("_id", side)
 
     cand = (
@@ -602,13 +593,13 @@ def containment_pairs(
     )
 
 
-def passage_dedup(df: DataFrame, chunk_tokens: int = 10) -> DataFrame:
+def passage_dedup(df: DataFrame) -> DataFrame:
     """Sub-document exact dedup — the C4/RefinedWeb "repeated passage"
     rule the whole-document detectors structurally miss: a boilerplate
     block or syndicated paragraph pasted into otherwise-distinct pages
     never makes the DOCUMENTS near-dups, but its second and later copies
     are still zero-information for training. Each document's token stream
-    is cut into fixed ``chunk_tokens`` windows (non-overlapping, last one
+    is cut into fixed 10-token windows (non-overlapping, last one
     short); a chunk instance SURVIVES iff it is the globally FIRST
     occurrence of that exact chunk text in (doc_id, position) order —
     deterministic, partitioning-invariant, and exactly reproducible by
@@ -625,7 +616,7 @@ def passage_dedup(df: DataFrame, chunk_tokens: int = 10) -> DataFrame:
     doc-keyed rollup; no UDF, no collect. Chunking itself is a
     transform/slice column expression — map-only.
     """
-    C = chunk_tokens
+    C = 10
     toks = df.select(
         F.col("doc_id"), tokens(F.col("text")).alias("_tok")
     ).filter(F.size("_tok") > 0)
@@ -693,12 +684,7 @@ def cluster_savings(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     ).withColumn("saved_chars", F.col("total_chars") - F.col("kept_chars"))
 
 
-def prefix_jaccard_pairs(
-    df: DataFrame,
-    t_num: int = 1,
-    t_den: int = 2,
-    n: int = 3,
-) -> DataFrame:
+def prefix_jaccard_pairs(df: DataFrame) -> DataFrame:
     """EXACT Jaccard similarity join via prefix filtering — the scalable
     exact counterpart to MinHash-LSH (Chaudhuri et al. ICDE'06 /
     Bayardo et al. WWW'07 "Scaling Up All Pairs", both public). LSH is
@@ -706,20 +692,20 @@ def prefix_jaccard_pairs(
     is exact but joins on EVERY shared gram; prefix filtering is exact
     AND generates candidates only from each document's rarest grams.
 
-    Threshold is the rational ``t_num/t_den`` (default 1/2) so both the
-    prefix length and the final gate are INTEGER arithmetic: under one
-    global gram order, two sets with J ≥ t must share a gram within
-    their first ``|s| − ⌈t·|s|⌉ + 1`` grams (if the prefixes were
-    disjoint, the overlap is at most min(|a|,|b|) − prefix excess <
-    t·|a∪b| — the standard lemma), where ⌈t·|s|⌉ =
-    (t_num·|s| + t_den − 1) div t_den. The global order is (df, gram)
-    ascending — rarest first, total because gram strings are unique —
-    so prefixes hold precisely the grams least likely to collide.
+    Threshold is the rational t = 1/2 so both the prefix length and the
+    final gate are INTEGER arithmetic: under one global gram order, two
+    sets with J ≥ t must share a gram within their first
+    ``|s| − ⌈t·|s|⌉ + 1`` grams (if the prefixes were disjoint, the
+    overlap is at most min(|a|,|b|) − prefix excess < t·|a∪b| — the
+    standard lemma), where ⌈t·|s|⌉ = (1·|s| + 1) div 2. The global
+    order is (df, gram) ascending — rarest first, total because gram
+    strings are unique — so prefixes hold precisely the grams least
+    likely to collide.
 
     Output: (a, b, inter, uni, jaccard) with a < b and
-    inter·t_den ≥ uni·t_num (exact integer gate); ``jaccard`` itself is
+    inter·2 ≥ uni·1 (exact integer gate); ``jaccard`` itself is
     ONE IEEE division of the two exact integers. Grams are DISTINCT word
-    n-grams; docs with < n tokens have no grams and never pair.
+    3-grams; docs with < 3 tokens have no grams and never pair.
 
     Scale posture (100 TB): the df table is one decomposable gram-keyed
     count; the sort key attach is ONE gram-keyed join back to the
@@ -733,7 +719,7 @@ def prefix_jaccard_pairs(
     """
     ga = df.select(
         F.col("doc_id").alias("id"),
-        word_ngrams_np(n)(F.col("text")).alias("_g"),
+        word_ngrams_np()(F.col("text")).alias("_g"),
     ).where(F.size("_g") > 0).persist()
     g = ga.select("id", F.explode("_g").alias("gram"))
     dfreq = g.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("_df"))
@@ -749,9 +735,7 @@ def prefix_jaccard_pairs(
         )
     )
     sz = F.size("_grams")
-    ceil_ts = F.expr(
-        f"({t_num} * size(_grams) + {t_den - 1}) div {t_den}"
-    )
+    ceil_ts = F.expr("(1 * size(_grams) + 1) div 2")
     plen = sz.cast("long") - ceil_ts + F.lit(1)
     prefix = sorted_g.select(
         "id", F.explode(F.slice("_grams", 1, plen)).alias("gram")
@@ -781,7 +765,7 @@ def prefix_jaccard_pairs(
             (F.size("_ga") + F.size("_gb")).cast("long").alias("_sab"),
         )
         .withColumn("uni", F.col("_sab") - F.col("inter"))
-        .where(F.col("inter") * F.lit(t_den) >= F.col("uni") * F.lit(t_num))
+        .where(F.col("inter") * F.lit(2) >= F.col("uni") * F.lit(1))
     )
     return verified.select(
         "a", "b", "inter", "uni",
@@ -789,11 +773,11 @@ def prefix_jaccard_pairs(
     )
 
 
-def cdc_chunks(df: DataFrame, window: int = 8) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking — the rsync/LBFS rolling-hash boundary
     scheme (Muthitacharoen et al. SOSP'01, public) that underlies
     binary-level corpus dedup: a chunk boundary falls AFTER character i
-    whenever the polynomial hash of the trailing ``window`` chars is
+    whenever the polynomial hash of the trailing 8 chars is
     ≡ 0 (mod 64), so boundaries are anchored to CONTENT, not
     offsets — an insertion early in a document shifts every fixed-size
     chunk but leaves all CDC chunks after the next anchor identical,
@@ -817,8 +801,7 @@ def cdc_chunks(df: DataFrame, window: int = 8) -> DataFrame:
     """
     from pyspark.sql.functions import pandas_udf
 
-    if window < 1:
-        raise ValueError("window must be >= 1")
+    window = 8
     bw = pow(BASE, window - 1, MOD)  # base^(w-1) for the rolling eviction
     # the seed contributes the CONSTANT 7·base^w to every window hash, so
     # the rolling state tracks the seedless char polynomial and the

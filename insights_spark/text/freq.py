@@ -68,9 +68,10 @@ def _mg_update(counters: dict, toks: list, k: int) -> None:
                 del counters[key]
 
 
-def heavy_hitters(docs: DataFrame, k: int = 32) -> DataFrame:
-    """All terms with exact global count · k > total tokens, as
-    (term, n) with n EXACT — Misra–Gries bounds the candidate set, an
+def heavy_hitters(docs: DataFrame) -> DataFrame:
+    """All terms with exact global count · 32 > total tokens, as
+    (term, n) with n EXACT — Misra–Gries (32 counters) bounds the
+    candidate set, an
     exact recount of only those candidates produces the answer (see
     module docstring for the completeness proof)."""
 
@@ -81,7 +82,7 @@ def heavy_hitters(docs: DataFrame, k: int = 32) -> DataFrame:
                 if txt is None:
                     continue
                 toks = [t for t in _WS.split(str(txt).lower()) if t]
-                _mg_update(counters, toks, k)
+                _mg_update(counters, toks, 32)
         yield pd.DataFrame({"term": list(counters)})
 
     cand = (
@@ -96,7 +97,7 @@ def heavy_hitters(docs: DataFrame, k: int = 32) -> DataFrame:
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
         .crossJoin(F.broadcast(total))
-        .filter(F.col("n") * F.lit(k) > F.col("_N"))
+        .filter(F.col("n") * F.lit(32) > F.col("_N"))
         .select("term", "n")
     )
 
@@ -110,7 +111,7 @@ def novelty_scores(docs: DataFrame) -> DataFrame:
     mirroring containment_pairs' zero-denominator rule."""
     grams = docs.select(
         F.col("doc_id"),
-        F.explode(word_ngrams_np(3)(F.col("text"))).alias("gram"),
+        F.explode(word_ngrams_np()(F.col("text"))).alias("gram"),
     )
     df_counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
     return (
@@ -124,8 +125,8 @@ def novelty_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def top_terms_per_source(docs: DataFrame, k: int = 5) -> DataFrame:
-    """k most frequent terms PER SOURCE (ties broken by term asc) — the
+def top_terms_per_source(docs: DataFrame) -> DataFrame:
+    """5 most frequent terms PER SOURCE (ties broken by term asc) — the
     per-group top-k shape every per-domain profiling report needs, as
     distinct from the global top-k (``term_freq``'s
     TakeOrderedAndProject) and the global heavy hitters.
@@ -149,22 +150,22 @@ def top_terms_per_source(docs: DataFrame, k: int = 5) -> DataFrame:
     )
     return (
         counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("source", "term", "n", "rank")
     )
 
 
-def token_share_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
+def token_share_curve(docs: DataFrame) -> DataFrame:
     """Corpus concentration (Lorenz curve): rank documents by token count
     DESCENDING (ties by id asc) and report the cumulative token share at
     each rank decile — "the top 10% of docs hold X% of the tokens", the
     skew diagnostic that decides whether per-doc caps are worth running.
 
-    Output: (bucket 1..buckets, docs_cum, tokens_cum, token_share) with
+    Output: (bucket 1..10, docs_cum, tokens_cum, token_share) with
     docs_cum/tokens_cum exact integers and token_share one IEEE division.
     Both global prefix sums (tokens and row rank) ride ONE
     ``global_cumsum_multi`` scan — no unpartitioned window anywhere; the
-    final rollup is `buckets` rows."""
+    final rollup is ≤ 10 rows."""
     from .pack import global_cumsum_multi
     from .quality import token_count
 
@@ -186,8 +187,8 @@ def token_share_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
         F.max("rank").alias("_n"), F.max("tokens_cum").alias("_tok")
     )
     bucket = (
-        (F.col("rank") - 1) * F.lit(int(buckets)) - F.pmod(
-            (F.col("rank") - 1) * F.lit(int(buckets)), F.col("_n")
+        (F.col("rank") - 1) * F.lit(10) - F.pmod(
+            (F.col("rank") - 1) * F.lit(10), F.col("_n")
         )
     ) / F.col("_n") + 1
     return (
@@ -202,7 +203,7 @@ def token_share_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
     )
 
 
-def source_drift_chi2(docs: DataFrame, min_count: int = 50) -> DataFrame:
+def source_drift_chi2(docs: DataFrame) -> DataFrame:
     """χ² drift of each source's term distribution against the corpus —
     "which domains use which vocabulary unusually often/rarely", the
     per-source distribution-shift monitor a crawl pipeline runs per
@@ -211,7 +212,7 @@ def source_drift_chi2(docs: DataFrame, min_count: int = 50) -> DataFrame:
     differs across engines).
 
     For each (source s, term t) with t in the HEAVY vocabulary (global
-    count ≥ min_count — a threshold, not a top-k, so no global sort):
+    count ≥ 50 — a threshold, not a top-k, so no global sort):
 
         obs = c_st,  exp = c_s·c_t / c
         contribution = (obs − exp)² / exp
@@ -239,7 +240,7 @@ def source_drift_chi2(docs: DataFrame, min_count: int = 50) -> DataFrame:
     t = (
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("c_t"))
-        .filter(F.col("c_t") >= min_count)
+        .filter(F.col("c_t") >= 50)
     )
     s = toks.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("c_s"))
@@ -261,7 +262,6 @@ def source_drift_chi2(docs: DataFrame, min_count: int = 50) -> DataFrame:
 def cooccurrence_counts(
     docs: DataFrame,
     window: int = 5,
-    min_count: int = 50,
 ) -> DataFrame:
     """Windowed term co-occurrence counts over the heavy vocabulary — the
     integer core of PMI / GloVe / SGNS-style association statistics
@@ -270,7 +270,7 @@ def cooccurrence_counts(
     occurrences sit within ``window`` tokens in the same document; PMI's
     logarithm is the consumer's — counts stay exact integers.
 
-    Scale posture: the vocabulary filter (global count ≥ min_count — a
+    Scale posture: the vocabulary filter (global count ≥ 50 — a
     threshold, no global sort) is BROADCAST back so the position table
     shrinks before the only expensive step; the pair join is keyed on
     doc_id (co-partitioned self-join, never cross-doc), its fan-out
@@ -285,7 +285,7 @@ def cooccurrence_counts(
     heavy = (
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
+        .filter(F.col("c") >= 50)
         .select("term")
     )
     pos = toks.join(F.broadcast(heavy), "term")

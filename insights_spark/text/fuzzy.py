@@ -69,20 +69,19 @@ def fuzzy_pairs(df: DataFrame) -> DataFrame:
 def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,
-    window: int = 4,
 ) -> DataFrame:
     """Sorted-neighborhood dedup blocking (Hernández & Stolfo SIGMOD'95,
     public) — the third blocking family next to MinHash-LSH
     (probabilistic, set similarity) and FastSS deletion variants (exact,
     edit distance ≤ k): sort every record by a blocking key, candidates
-    are the pairs within ``window`` positions. The classic
+    are the pairs within 4 positions. The classic
     merge/purge shape for messy entity data whose errors DON'T move the
     sort key far (trailing typos, suffix noise); its known blind spot —
     a typo in the key's first character teleports the record — is why
     production systems multi-pass with rotated keys (compose this
     operator per key and union).
 
-    Output: (a, b, dist — rank distance 1..window, lev — exact
+    Output: (a, b, dist — rank distance 1..4, lev — exact
     Levenshtein between the two keys, JVM-side) with rank(a) < rank(b).
     A downstream dedup keeps pairs with small ``lev``; emitting the
     distance instead of a verdict keeps the operator a pure
@@ -90,9 +89,9 @@ def sorted_neighborhood_pairs(
 
     Scale posture (100 TB): the global sort rank rides the shared
     two-phase distributed prefix scan (text/pack.py:global_cumsum — NO
-    single-partition window); the band pairing is a ``window``-way
-    explode + ONE equi-join on the target rank — candidates are exactly
-    n·window, NEVER quadratic, and skew-free by construction (ranks are
+    single-partition window); the band pairing is a 4-way explode + ONE
+    equi-join on the target rank — candidates are exactly n·4, NEVER
+    quadratic, and skew-free by construction (ranks are
     unique). Levenshtein evaluates JVM-side on the bounded candidate
     set only.
     """
@@ -111,7 +110,7 @@ def sorted_neighborhood_pairs(
         F.col("key").alias("_ka"),
         F.col("rank").alias("_ra"),
         F.explode(
-            F.sequence(F.col("rank") + 1, F.col("rank") + F.lit(window))
+            F.sequence(F.col("rank") + 1, F.col("rank") + F.lit(4))
         ).alias("_target"),
     )
     right = ranked.select(

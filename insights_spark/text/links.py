@@ -264,7 +264,7 @@ def sssp_weighted(
     return dist
 
 
-def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan,
     Albert & Kumara 2007, public) with DETERMINISTIC tie-breaking —
     communities are the modular structure star-CC cannot see (CC merges
@@ -276,7 +276,7 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     adopts the most frequent label among its neighbors, ties to the
     SMALLEST label (canonical LPA breaks ties randomly — useless for an
     engine-exact gate; the (count DESC, label ASC) rule is the same
-    min(struct) argmax as home_cells/cusum). A FIXED ``iters`` keeps
+    min(struct) argmax as home_cells/cusum). A FIXED 4 rounds keep
     the result well-defined under the known sync-LPA oscillation on
     bipartite-ish structures — bit-identical across engines either way.
     Output: (id, label) for every edge endpoint.
@@ -295,7 +295,7 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(iters):
+    for _ in range(4):
         nbr = ue.join(labels, ue["src"] == labels["id"]).select(
             F.col("dst").alias("nid"), "label"
         )
@@ -313,21 +313,17 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     return labels
 
 
-def hits_fixed_point(
-    edges: DataFrame,
-    iters: int = 4,
-    scale: int = 10**6,
-) -> DataFrame:
+def hits_fixed_point(edges: DataFrame) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, public) in exact integer
     fixed point — the second classic link-analysis ranking next to
     PageRank: authorities are pages many good hubs point AT, hubs are
     pages pointing at many good authorities (directory pages vs content
     pages — a distinction PageRank's single score cannot make).
 
-    Per round: a(v) = Σ_{u→v} h(u), then L∞-normalize to ``scale``
-    (a ← a·scale div max(a) — ONE scalar max broadcast back, the
+    Per round (4 rounds): a(v) = Σ_{u→v} h(u), then L∞-normalize to
+    10^6 (a ← a·10^6 div max(a) — ONE scalar max broadcast back, the
     deterministic integer stand-in for the usual L2 norm; without it
-    scores grow ~deg^2·iters and overflow at hub degrees that exist at
+    scores grow ~deg^2·rounds and overflow at hub degrees that exist at
     web scale); then h(v) = Σ_{v→u} a(u), normalized the same way.
     All-integer sums are order-free → bit-identical across partitionings
     and engines; the oracle unrolls the same recurrence. Multi-edges
@@ -351,7 +347,7 @@ def hits_fixed_point(
 
     def half_round(score: DataFrame, by: str, to: str, name: str):
         """Sum ``score`` along edges from e[by] into e[to], then
-        L∞-normalize to ``scale`` as column ``name``."""
+        L∞-normalize to 10^6 as column ``name``."""
         sums = (
             e.join(score, e[by] == score["id"])
             .groupBy(F.col(to).alias("id"))
@@ -364,7 +360,7 @@ def hits_fixed_point(
         # checkpoint nests that doubling across half-rounds (4× the edge
         # join per iteration, hits 1.9 s → 5.4 s at sf0.1)
         return sums.crossJoin(F.broadcast(m)).select(
-            "id", F.expr(f"(raw * {scale}) div m").alias(name)
+            "id", F.expr("(raw * 1000000) div m").alias(name)
         ).localCheckpoint(eager=True)
 
     # Sparse score vectors (r6, guide §2.4): a score table only needs rows
@@ -376,7 +372,7 @@ def hits_fixed_point(
     # so the per-half-round `nodes ⋈ sums` full-coverage join (2 joins per
     # iteration, 8 for the default 4) is dropped with bit-identical output.
     h = nodes.withColumn("h", F.lit(1).cast("long"))
-    for _ in range(iters):
+    for _ in range(4):
         a = half_round(h, "src", "dst", "a")
         h = half_round(a, "dst", "src", "h")
     e.unpersist()
@@ -391,7 +387,7 @@ def hits_fixed_point(
     )
 
 
-def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 3) -> DataFrame:
     """k-core by iterative peeling (Seidman 1983, public) — the maximal
     subgraph where every node keeps ≥ k neighbors INSIDE the subgraph:
     the density measure behind spam-farm cores and community nuclei
@@ -399,10 +395,10 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     degree and an empty 2-core; triangles catch 3-cliques but not
     sparser cohesion).
 
-    Synchronous peel, ``rounds`` FIXED in both engines (the LPA rule —
+    Synchronous peel, 6 rounds FIXED in both engines (the LPA rule —
     engine-exact beats adaptive): each round drops every node whose
     degree in the CURRENT induced subgraph is < k, then recomputes.
-    Peeling is monotone, so after R rounds the survivor set is a
+    Peeling is monotone, so after 6 rounds the survivor set is a
     superset of the true k-core that equals it once a round removes
     nothing (the fixture test pins convergence; at web scale ~10–20
     rounds settle real graphs because peel cascades are shallow).
@@ -416,12 +412,10 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     so the last round's table IS the output and the edge pin is released
     before returning.
     """
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
     ue = _undirected(edges).persist()
     alive = ue.select(F.col("src").alias("id")).distinct() \
         .localCheckpoint(eager=True)
-    for _ in range(rounds):
+    for _ in range(6):
         alive = (
             ue.join(alive.select(F.col("id").alias("src")), "src",
                     "left_semi")

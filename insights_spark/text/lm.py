@@ -70,17 +70,14 @@ def bigram_lm_scores(
     docs: DataFrame,
     train_pred,
     keep_below_milli: int,
-    min_count: int = 1,
 ) -> DataFrame:
     """Score every document's fluency under a bigram LM trained on the
     ``train_pred`` slice (a boolean Column over ``docs``).
 
     Output per document with ≥ 1 bigram: (doc_id, n_bigrams, bits_sum,
     bits_per_bigram_milli, keep) — all BIGINT/INT, exactly reproducible.
-    ``keep`` = 1 iff bits_per_bigram_milli < keep_below_milli.
-
-    ``min_count`` prunes model bigrams with c12 < min_count (KenLM-style
-    prune): pruned/unseen pairs back off to c12 = 0 (pure Laplace mass).
+    ``keep`` = 1 iff bits_per_bigram_milli < keep_below_milli. Unseen
+    pairs back off to c12 = 0 (pure Laplace mass).
     """
     grams = _bigrams(docs)
     train = _bigrams(docs.filter(train_pred))
@@ -88,7 +85,6 @@ def bigram_lm_scores(
     big = (
         train.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c12"))
-        .filter(F.col("c12") >= min_count)
     )
     uni = train.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("c1"))
     voc = train.agg(

@@ -75,19 +75,15 @@ def quantize_embeddings(emb: DataFrame) -> DataFrame:
     )
 
 
-def int8_topk(
-    codes: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-) -> DataFrame:
-    """Top-k neighbours by integer dot product of int8 CODES — the
+def int8_topk(codes: DataFrame, query_ids: list[int]) -> DataFrame:
+    """Top-5 neighbours by integer dot product of int8 CODES — the
     compute half over the quantized store (symmetric code-space ranking,
     the public FAISS scalar-quantizer shape): search runs on the 4×
     smaller int8 column without dequantizing, which is the point of
     storing codes at 10^12 rows.
 
     Input: `quantize_embeddings` output; `query_ids` a BOUNDED id list
-    (broadcast side). Output: (query_id, vec_id, dot) — k rows per query,
+    (broadcast side). Output: (query_id, vec_id, dot) — 5 rows per query,
     self excluded, ties broken by vec_id ascending.
 
     Exactness: dot(q, c) = Σ code_q·code_c ≤ 255²·dim per pair — exact
@@ -96,7 +92,7 @@ def int8_topk(
     is `zip_with` + `aggregate` — JVM codegen, no UDF, no Arrow crossing.
 
     Scale shape: queries broadcast (the cosine_topk pattern), ONE scan of
-    the code table, per-query TakeOrdered state k-bounded. The same
+    the code table, per-query TakeOrdered state 5-bounded. The same
     IVF-bucket pre-filter simsearch uses for float vectors composes in
     front unchanged when the corpus side is too big for a full scan.
     """
@@ -135,6 +131,6 @@ def int8_topk(
         codes.join(F.broadcast(q), codes["vec_id"] != q["query_id"])
         .select("query_id", "vec_id", dot.alias("dot"))
         .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
+        .filter(F.col("_rk") <= 5)
         .drop("_rk")
     )

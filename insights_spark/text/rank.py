@@ -126,19 +126,19 @@ def bm25_scores(docs: DataFrame, query_terms: DataFrame) -> DataFrame:
     )
 
 
-def rrf_fuse(a: DataFrame, b: DataFrame, k: int = 60, scale: int = 10**9) -> DataFrame:
+def rrf_fuse(a: DataFrame, b: DataFrame) -> DataFrame:
     """Reciprocal-rank fusion of two rankers (Cormack, Clarke &
     Büttcher SIGIR'09, public) — the standard hybrid-search combiner
     (BM25 lexical + embedding semantic): score-scale-free, it fuses on
     RANKS alone, so a ranker with inflated score magnitudes cannot
     dominate:
 
-        rrf(d) = Σ_r floor(scale / (k + rank_r(d)))
+        rrf(d) = Σ_r floor(10^9 / (60 + rank_r(d)))
 
     The floor makes every contribution an exact integer (the canonical
-    1/(k+rank) times a fixed scale), so the fused score is order-free
-    and engine-exact. Ranks are (score DESC, id ASC) — a total order.
-    A document absent from one ranker contributes 0 from it (standard
+    1/(k+rank) at k = 60, times a fixed 10^9 scale), so the fused score
+    is order-free and engine-exact. Ranks are (score DESC, id ASC) — a
+    total order. A document absent from one ranker contributes 0 from it (standard
     RRF over finite lists); its rank column is NULL in the output.
 
     Scale posture (100 TB): each ranker's global rank rides the shared
@@ -162,11 +162,11 @@ def rrf_fuse(a: DataFrame, b: DataFrame, k: int = 60, scale: int = 10**9) -> Dat
     j = ra.join(rb, "id", "full_outer")
     ca = F.when(
         F.col("rank_a").isNotNull(),
-        F.expr(f"{scale} div ({k} + rank_a)"),
+        F.expr("1000000000 div (60 + rank_a)"),
     ).otherwise(F.lit(0))
     cb = F.when(
         F.col("rank_b").isNotNull(),
-        F.expr(f"{scale} div ({k} + rank_b)"),
+        F.expr("1000000000 div (60 + rank_b)"),
     ).otherwise(F.lit(0))
     return j.select(
         F.col("id").alias("doc_id"),

@@ -1,6 +1,6 @@
 """Similarity search over an embedding column (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline and
+- ``cosine_topk``: brute-force exact top-5 — the correctness baseline and
   the oracle-matchable path. Dot products are computed as a SEQUENTIAL
   double fold (F.aggregate over zip_with), which is bit-identical to the
   DuckDB oracle's list_dot_product on DOUBLE[] — exact FP parity, no
@@ -60,16 +60,12 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame | None = None,
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k of every query against the vector set.
+def cosine_topk(vectors: DataFrame) -> DataFrame:
+    """Exact cosine top-5 of every vector against the vector set.
 
     Output: (id, neighbor_id, score, rank); self-pairs excluded; ties broken
-    by neighbor_id asc. The vector side is broadcast (embedding dims ×
-    float ≪ memory); the query side streams.
+    by neighbor_id asc. One side is broadcast (embedding dims × float ≪
+    memory); the query side streams.
 
     Execution notes (same IEEE values, much cheaper plan): the fold is a
     Catalyst higher-order function — interpreted, NOT whole-stage-codegen'd
@@ -77,15 +73,15 @@ def cosine_topk(
     instead of re-folding per PAIR (3 folds/pair → 1), and (b) the query
     side is round-robin repartitioned to the default parallelism first:
     the broadcast nested-loop join evaluates every pair in the query
-    side's scan stage, and a small query sample otherwise sits in ONE
-    parquet partition, serializing the whole O(q·n·dim) fold on one core.
+    side's scan stage, and the vector table otherwise sits in ONE parquet
+    partition, serializing the whole O(n²·dim) fold on one core.
     """
     par = vectors.sparkSession.sparkContext.defaultParallelism
     vs = vectors.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_v")
     ).withColumn("_vn", norm(F.col("_v")))
     qs = (
-        (queries or vectors)
+        vectors
         .select(F.col("vec_id").alias("id"), F.col("embedding").alias("_q"))
         .repartition(par)
         .withColumn("_qn", norm(F.col("_q")))
@@ -96,14 +92,14 @@ def cosine_topk(
     return (
         joined.withColumn("score", score)
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("id", "neighbor_id", "score", "rank")
     )
 
 
-def embedding_near_dups(vectors: DataFrame, threshold: float = 0.4) -> DataFrame:
+def embedding_near_dups(vectors: DataFrame) -> DataFrame:
     """Exact embedding-cosine near-dup pairs: (a, b, cosine) with a < b and
-    cosine ≥ threshold — the embedding analogue of ngram_jaccard_pairs.
+    cosine ≥ 0.4 — the embedding analogue of ngram_jaccard_pairs.
 
     Dot products use the SEQUENTIAL double fold (oracle-parity with
     DuckDB's list_dot_product); the small side is broadcast. This is the
@@ -132,8 +128,6 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.4) -> DataFrame
     yn = _fold_norm_np(Y)
     bc = spark.sparkContext.broadcast((yids, Y, yn))
 
-    thr = float(threshold)
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_y, Ym, ny = bc.value
         # chunk the broadcast side so the n×m accumulator stays bounded
@@ -154,7 +148,7 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.4) -> DataFrame
                     acc = acc + X[:, j][:, None] * Yc[:, j][None, :]
                 cos = acc / (nx[:, None] * ny[s:s + CH][None, :])
                 mask = (xids[:, None] < ids_y[s:s + CH][None, :]) \
-                    & (cos >= thr)
+                    & (cos >= 0.4)
                 ai, bi = np.nonzero(mask)
                 if len(ai):
                     yield pd.DataFrame({
@@ -259,14 +253,10 @@ def embedding_near_dups_lsh(
     )
 
 
-def sample_centroids(
-    vectors: DataFrame,
-    n_total: int,
-    num_centroids: int,
-    seed: int = 42,
-) -> np.ndarray:
-    """The `num_centroids` vectors with the SMALLEST deterministic hash,
-    L2-normalized, as a (num_centroids × dim) matrix.
+def sample_centroids(vectors: DataFrame, n_total: int, num_centroids: int) -> list:
+    """The `num_centroids` (vec_id, embedding) rows with the SMALLEST
+    deterministic hash of vec_id, in hash order — the centroid sample of
+    both ``cosine_topk_bucketed`` and ``semantic_prune``.
 
     Selected WITHOUT ordering the full table: a hash-threshold filter keeps
     ~4× the needed rows (binomial concentration makes a shortfall
@@ -277,29 +267,27 @@ def sample_centroids(
     IVF index build's reservoir step.
     """
     M = n_total * 2 + 1
-    hash_col = F.pmod(F.col("vec_id") * 2654435761 + seed, F.lit(M))
+    hash_col = F.pmod(F.col("vec_id") * 2654435761 + 42, F.lit(M))
     t = max(1, (M * num_centroids * 4) // max(n_total, 1))
     while True:
         sliver = vectors.select("vec_id", "embedding").filter(hash_col < t)
         rows = sliver.orderBy(hash_col, F.col("vec_id")).limit(num_centroids).collect()
         if len(rows) >= min(num_centroids, n_total) or t >= M:
-            break
+            return rows
         t *= 4
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
 
-def cosine_topk_sample(vectors: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Exact cosine top-k for a SMALL query set against the full vector
+def cosine_topk_sample(vectors: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-5 for a SMALL query set against the full vector
     table — the recall-gate / eval-probe shape (sample × n), as one
     numpy-matmul SCAN instead of an interpreted per-pair fold.
 
     The bounded query side (≈10²-10³ rows by contract) is collected and
     broadcast as a dense matrix; mapInPandas streams the big side once,
-    emitting each Arrow batch's local top-k per query (≤ q·k rows per
+    emitting each Arrow batch's local top-5 per query (≤ q·5 rows per
     batch); one window merges. No shuffle of the vector table, no
     collect of the big side — at 10^10 vectors this is a map-side scan +
-    a q·k-row merge, while the fold-based `cosine_topk` (kept for the
+    a q·5-row merge, while the fold-based `cosine_topk` (kept for the
     oracle-hashed `ann_topk`, where DuckDB float parity matters) costs
     ~40× more per pair in interpreted evaluation (measured: the ann_ivf
     gate at sf1 was 115 s fold-based, ~4 s as this scan).
@@ -330,7 +318,7 @@ def cosine_topk_sample(vectors: DataFrame, queries: DataFrame, k: int = 5) -> Da
             mid = pdf["vec_id"].to_numpy(np.int64)
             S = Qm @ X.T                      # (q × batch)
             S[qid[:, None] == mid[None, :]] = -np.inf   # exclude self
-            kk = min(k, S.shape[1])
+            kk = min(5, S.shape[1])
             rows = []
             for r in range(S.shape[0]):
                 order = np.lexsort((mid, -S[r]))[:kk]
@@ -346,33 +334,31 @@ def cosine_topk_sample(vectors: DataFrame, queries: DataFrame, k: int = 5) -> Da
     w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         part.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 
-def cosine_topk_bucketed(
-    vectors: DataFrame,
-    k: int = 5,
-    num_centroids: int | None = None,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-style approximate self-top-k.
+def cosine_topk_bucketed(vectors: DataFrame, nprobe: int = 2) -> DataFrame:
+    """IVF-style approximate self-top-5.
 
-    Centroids = deterministic sample of the vectors themselves (no
-    iterative k-means — one pass, reproducible). Every vector lands in its
-    nearest centroid bucket; each query probes its `nprobe` nearest
-    buckets. applyInPandas per bucket computes the local top-k with numpy;
-    a final window merges probe results.
+    Centroids = deterministic sample of √N of the vectors themselves (no
+    iterative k-means — one pass, reproducible), L2-normalized. Every
+    vector lands in its nearest centroid bucket; each query probes its
+    `nprobe` nearest buckets. applyInPandas per bucket computes the local
+    top-5 with numpy; a final window merges probe results. An empty
+    vector table gives an empty result.
     """
     from pyspark.sql.types import (
         DoubleType, IntegerType, LongType, StructField, StructType,
     )
 
     n_total = vectors.count()
-    if num_centroids is None:
-        num_centroids = max(1, int(np.sqrt(n_total)))
-
-    C = sample_centroids(vectors, n_total, num_centroids)
+    if n_total == 0:
+        schema = "id long, neighbor_id long, score double, rank int"
+        return local_df(vectors.sparkSession, [], schema)
+    rows = sample_centroids(vectors, n_total, max(1, int(np.sqrt(n_total))))
+    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     bc = vectors.sparkSession.sparkContext.broadcast(C)
 
     from pyspark.sql.functions import pandas_udf
@@ -421,7 +407,7 @@ def cosine_topk_bucketed(
         qid = q["id"].to_numpy(np.int64)
         mid = m["mid"].to_numpy(np.int64)
         S[qid[:, None] == mid[None, :]] = -np.inf
-        kk = min(k, S.shape[1])
+        kk = min(5, S.shape[1])
         rows = []
         for r in range(S.shape[0]):
             order = np.lexsort((mid, -S[r]))[:kk]
@@ -446,25 +432,20 @@ def cosine_topk_bucketed(
         .groupBy("bucket")
         .applyInPandas(solve, out_schema)
     )
-    # merge probe results: global top-k per query
+    # merge probe results: global top-5 per query
     w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         local.dropDuplicates(["id", "neighbor_id"])
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 
-def semantic_prune(
-    vectors: DataFrame,
-    num_centroids: int = 16,
-    threshold: float = 0.4,
-) -> DataFrame:
+def semantic_prune(vectors: DataFrame) -> DataFrame:
     """SemDeDup-style semantic pruning: partition the embedding space into
-    IVF buckets (hash-sampled centroids, same selection as
-    sample_centroids), find within-bucket cosine near-dup pairs ≥
-    threshold, resolve transitive components, keep the min-id vector per
-    component.
+    16 IVF buckets (centroids from sample_centroids), find within-bucket
+    cosine near-dup pairs ≥ 0.4, resolve transitive components, keep the
+    min-id vector per component.
 
     The within-bucket pair step is quadratic PER BUCKET — that is
     SemDeDup's actual published cost model (Abbas et al. 2023 run k-means
@@ -485,16 +466,7 @@ def semantic_prune(
     """
     from .dedup import near_dup_clusters
 
-    n_total = vectors.count()
-    M = n_total * 2 + 1
-    hash_col = F.pmod(F.col("vec_id") * 2654435761 + 42, F.lit(M))
-    t = max(1, (M * num_centroids * 4) // max(n_total, 1))
-    while True:
-        sliver = vectors.select("vec_id", "embedding").filter(hash_col < t)
-        rows = sliver.orderBy(hash_col, F.col("vec_id")).limit(num_centroids).collect()
-        if len(rows) >= min(num_centroids, n_total) or t >= M:
-            break
-        t *= 4
+    rows = sample_centroids(vectors, vectors.count(), 16)
     from pyspark.sql.functions import pandas_udf
 
     # r6 (guide §4.1/§4.2): the centroid assignment was a ×k crossJoin +
@@ -538,7 +510,7 @@ def semantic_prune(
         lhs.join(rhs, "cent_id")
         .filter(F.col("a") < F.col("b"))
         .withColumn("cosine", cos_fold(F.col("ea"), F.col("eb")))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.4)
         .select("a", "b")
     )
     labeled = near_dup_clusters(vectors, pairs, id_col="vec_id")
@@ -552,16 +524,11 @@ def semantic_prune(
     )
 
 
-def kmeans_lloyd_int(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    scale: int = 1024,
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column in EXACT integer
-    arithmetic (Lloyd 1957/1982, public) — the clustering primitive
-    behind semantic corpus partitioning, cluster-balanced mixing, and
-    SemDeDup-style pruning, here with a bit-reproducible contract no
+def kmeans_lloyd_int(emb: DataFrame) -> DataFrame:
+    """Lloyd's k-means (k = 8, 3 iterations) over an embedding column in
+    EXACT integer arithmetic (Lloyd 1957/1982, public) — the clustering
+    primitive behind semantic corpus partitioning, cluster-balanced
+    mixing, and SemDeDup-style pruning, here with a bit-reproducible contract no
     float k-means can offer (float centroid sums reorder under shuffle).
 
     Three exactness devices:
@@ -593,10 +560,10 @@ def kmeans_lloyd_int(
         F.col("vec_id").alias("id"),
         F.expr(
             "transform(embedding, x -> "
-            f"CAST(floor(CAST(x AS DOUBLE) * {scale}.0) AS BIGINT))"
+            "CAST(floor(CAST(x AS DOUBLE) * 1024.0) AS BIGINT))"
         ).alias("q"),
     ).persist()
-    init = q.orderBy("id").limit(k).collect()     # bounded: k rows
+    init = q.orderBy("id").limit(8).collect()     # bounded: k rows
     cents = [(i, list(r["q"])) for i, r in enumerate(init)]
 
     from pyspark.sql.functions import pandas_udf
@@ -629,13 +596,13 @@ def kmeans_lloyd_int(
         return _assign
 
     assigned = None
-    for it in range(iters):
+    for it in range(3):
         best = _assign_udf(cents)(F.col("q"))
         assigned = q.select(
             "id", "q",
             best["cluster"].alias("cluster"), best["dist"].alias("dist"),
         )
-        if it == iters - 1:
+        if it == 2:
             break
         upd = (
             assigned.select("cluster", F.posexplode("q").alias("pos", "val"))

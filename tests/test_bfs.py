@@ -184,12 +184,9 @@ def test_label_propagation_brute_force(spark):
         return lab
 
     df = spark.createDataFrame(e, "src long, dst long")
-    for iters in (1, 4):
-        got = {r["id"]: r["label"]
-               for r in label_propagation(df, iters=iters).collect()}
-        assert got == brute(iters)
     final = {r["id"]: r["label"]
-             for r in label_propagation(df, iters=4).collect()}
+             for r in label_propagation(df).collect()}
+    assert final == brute(4)
     assert 7 not in final                      # self-loop-only node absent
     a_labels = {final[n] for n in range(5)}
     b_labels = {final[n] for n in range(10, 15)}
@@ -206,7 +203,7 @@ def test_hits_fixed_point_brute_force(spark):
     # hubs 0,1 point at authorities 10,11,12; 20 is isolated-ish
     e = [(0, 10), (0, 11), (0, 12), (1, 10), (1, 11),
          (2, 10), (10, 20), (0, 10)]          # (0,10) doubled: multi-edge
-    scale, iters = 10**6, 4
+    scale, iters = 10**6, 4  # hits_fixed_point's fixed recurrence
 
     def brute():
         nodes = sorted({n for p in e for n in p})
@@ -227,7 +224,7 @@ def test_hits_fixed_point_brute_force(spark):
 
     df = spark.createDataFrame(e, "src long, dst long")
     got = {r["id"]: (r["hub"], r["auth"])
-           for r in hits_fixed_point(df, iters=iters, scale=scale).collect()}
+           for r in hits_fixed_point(df).collect()}
     want = brute()
     assert got == want
     assert got[0][0] == scale                  # 0 is the top hub
@@ -263,14 +260,12 @@ def test_kcore_peel_brute_force(spark):
         return {n: d for n, d in deg.items() if d >= k}
 
     df = spark.createDataFrame(e, "src long, dst long")
-    for k, rounds in ((3, 6), (2, 4), (3, 1)):
+    for k in (3, 2):
         got = {r["id"]: r["core_deg"]
-               for r in kcore_peel(df, k=k, rounds=rounds).collect()}
-        assert got == brute(k, rounds), (k, rounds)
+               for r in kcore_peel(df, k=k).collect()}
+        assert got == brute(k, 6), k
     final = {r["id"]: r["core_deg"]
-             for r in kcore_peel(df, k=3, rounds=6).collect()}
+             for r in kcore_peel(df, k=3).collect()}
     assert set(final) == set(range(5))         # only the K5 clique
     assert all(d == 4 for d in final.values())
     assert brute(3, 6) == brute(3, 7)          # converged within 6 rounds
-    with pytest.raises(ValueError, match="rounds"):
-        kcore_peel(df, k=3, rounds=0)

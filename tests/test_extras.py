@@ -45,6 +45,28 @@ def test_use_codec_false_is_fake_even_with_pil(spark):
     assert sum(rows[0]["hist"]) == 768
 
 
+def test_multimodal_features_query_pins_fake_decode(spark, monkeypatch, tmp_path):
+    """The oracle-registered multimodal_features builder passes
+    use_codec=False, so its result cannot change when Pillow is installed
+    (the default auto-detects the codec). Checked with a driver-side spy:
+    the decode itself runs in Python workers, where a patched _PIL would
+    not reach."""
+    import __spark_entry__ as entry
+
+    calls, real = [], multimodal.image_features
+
+    def spy(media, *args, **kwargs):
+        calls.append((args, kwargs))
+        return real(media, *args, **kwargs)
+
+    monkeypatch.setattr(multimodal, "image_features", spy)
+    spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    entry.queries()["multimodal_features"](spark, str(tmp_path))
+    assert calls == [((), {"use_codec": False})]
+
+
 @pytest.mark.extras
 def test_real_pil_decode_through_image_features(spark):
     """With Pillow installed, the real-decode branch must run end-to-end

@@ -255,19 +255,19 @@ def test_knn_cert_radius_geometry():
 
 
 @pytest.mark.parametrize("call", [
-    lambda df, r, **kw: knn.within_distance(df, r, **kw),
-    lambda df, r, **kw: knn.ripley_k(df, [r], **kw),
-    lambda df, r, **kw: stjoin.st_within(df, r, 3600, **kw),
+    lambda df, r: knn.within_distance(df, r),
+    lambda df, r: knn.ripley_k(df, [r]),
+    lambda df, r: stjoin.st_within(df, r, 3600),
 ], ids=["within_distance", "ripley_k", "st_within"])
 def test_certified_res_guard(spark, monkeypatch, call):
-    """All three radius joins go through knn.certified_res: a too-fine res
-    and a radius beyond res-0 coverage raise, and the auto pick is the
-    finest res whose ring coverage still certifies the radius."""
+    """All three radius joins go through knn.certified_res: a radius
+    beyond res-0 coverage raises, and the pick is the finest res whose
+    ring coverage still certifies the radius."""
     picked, real = [], knn.certified_res
 
-    def spy(radius_deg, rings, res):
-        picked.append(real(radius_deg, rings, res))
-        return picked[-1]
+    def spy(radius_deg, rings):
+        picked.append((real(radius_deg, rings), rings))
+        return picked[-1][0]
 
     monkeypatch.setattr(knn, "certified_res", spy)
     monkeypatch.setattr(stjoin, "certified_res", spy)
@@ -275,14 +275,13 @@ def test_certified_res_guard(spark, monkeypatch, call):
         [(0, 1.0, 2.0, 0)], "id long, lon double, lat double, ts long"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     with pytest.raises(ValueError):
-        call(df, 1.0, rings=1, res=8)      # cert radius too small at res 8
-    with pytest.raises(ValueError):
-        call(df, 1e6, rings=1)             # beyond res-0 coverage
+        call(df, 1e6)                      # beyond res-0 coverage
     for r in (0.05, 1.0, 3.0, 9.0):
         picked.clear()
-        call(df, r, rings=1)
-        (res,) = picked
-        assert knn.cert_radius_deg(res, 1) >= r > knn.cert_radius_deg(res + 1, 1)
+        call(df, r)
+        ((res, rings),) = picked
+        assert (knn.cert_radius_deg(res, rings) >= r
+                > knn.cert_radius_deg(res + 1, rings))
 
 
 def test_hex_ring_partitions_the_disk():
@@ -447,8 +446,6 @@ def test_within_distance_matches_bruteforce(spark):
     # auto-res picks the finest covering resolution
     assert knn_mod.cert_radius_deg(1, 1) >= 3.0 > knn_mod.cert_radius_deg(2, 1)
     with pytest.raises(ValueError):
-        knn_mod.within_distance(df, 1.0, res=8)     # cert radius too small
-    with pytest.raises(ValueError):
         knn_mod.within_distance(df, 1e6, rings=1)   # impossible radius
 
 
@@ -481,8 +478,6 @@ def test_ripley_k_matches_bruteforce(spark):
     assert zero == {1000: 0, 2000: 0}
     with pytest.raises(ValueError):
         knn_mod.ripley_k(df, [])
-    with pytest.raises(ValueError):
-        knn_mod.ripley_k(df, [3.0], res=8)  # cert radius too small
 
 
 def test_hex_cover_bbox(spark):
@@ -558,8 +553,7 @@ def test_tile_regions_multi_z_isolation(spark):
 
 def test_tile_regions_nonconvergence_raises(spark):
     """A sweep cap too small for the component diameter must raise, not
-    return silently partial region ids (ADVICE r2); a cap below one sweep
-    is rejected up front."""
+    return silently partial region ids (ADVICE r2)."""
     import pytest
 
     from insights_spark.geo import vectorize
@@ -570,11 +564,6 @@ def test_tile_regions_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         vectorize.star_cc_labels(snake_edges, max_sweeps=1, collect_cap=0)
-    snake = spark.createDataFrame(
-        [(8, 20, y, 7) for y in range(5, 13)], "z int, x int, y int, density long"
-    )
-    with pytest.raises(ValueError):
-        vectorize.tile_regions(snake, min_density=1, max_sweeps=0)
 
 
 @pytest.mark.extras
@@ -728,7 +717,7 @@ def test_nn_distance_hist_bruteforce(spark):
         "id long, lon double, lat double",
     )
     got = {r["band"]: (r["n_points"], r["min_d2"], r["max_d2"])
-           for r in nn_distance_hist(df, res=2).collect()}
+           for r in nn_distance_hist(df).collect()}
     d2 = (xm[:, None] - xm[None, :]) ** 2 + (ym[:, None] - ym[None, :]) ** 2
     np.fill_diagonal(d2, np.iinfo(np.int64).max)
     nn = d2.min(axis=1)
@@ -743,7 +732,7 @@ def test_nn_distance_hist_bruteforce(spark):
     two = spark.createDataFrame(
         [(0, 0.0, 0.0), (1, 0.003, 0.004)], "id long, lon double, lat double")
     assert {r["band"]: (r["n_points"], r["min_d2"], r["max_d2"])
-            for r in nn_distance_hist(two, res=2).collect()} == {2: (2, 25, 25)}
+            for r in nn_distance_hist(two).collect()} == {2: (2, 25, 25)}
 
 
 def test_move_rose_sectors(spark):
@@ -814,54 +803,57 @@ def test_directional_hull_semantics(spark):
 def test_simplify_tracks_semantics(spark):
     """Depth-capped DP pinned on hand cases: collinear tracks keep only
     endpoints (strict >), the classic bump keeps its apex, a degenerate
-    closed loop falls back to point distance, the depth cap binds on a
-    zigzag, short tracks pass through, and input row order is irrelevant
-    (the (ts, id) sort is the track order)."""
-    from datetime import datetime
+    closed loop falls back to point distance, a zigzag needs two levels,
+    the 4-level cap binds on a convex arc, short tracks pass through, and
+    input row order is irrelevant (the (ts, id) sort is the track order)."""
+    from datetime import datetime, timedelta
 
     from insights_spark.geo.track import simplify_tracks
 
     def mk(rows):  # rows: (user, second, id, lon_milli, lat_milli)
+        t0 = datetime(2024, 1, 1)
         return spark.createDataFrame(
-            [(u, datetime(2024, 1, 1, 0, 0, s), i, xm / 1000.0, ym / 1000.0)
+            [(u, t0 + timedelta(seconds=s), i, xm / 1000.0, ym / 1000.0)
              for (u, s, i, xm, ym) in rows],
             "user_id long, ts timestamp, id long, lon double, lat double",
         )
 
-    def got(df, eps, depth=4):
+    def got(df, eps):
         return {
             (r["user_id"], r["idx"]) for r in
-            simplify_tracks(df, eps_milli=eps, max_depth=depth).collect()
+            simplify_tracks(df, eps_milli=eps).collect()
         }
 
     # collinear: interior deviation is exactly 0, strict > drops it all
     coll = mk([(1, s, s, 1000 * s, 2000 * s) for s in range(5)])
     assert got(coll, eps=0) == {(1, 0), (1, 4)}
-    # classic bump: apex (idx 2) survives, flat shoulders don't
+    # classic bump: apex (idx 2) survives, flat shoulders (1192 and 1208
+    # milli off the level-2 chords) don't
     bump = mk([(1, 0, 0, 0, 0), (1, 1, 1, 2000, 10), (1, 2, 2, 4000, 3000),
                (1, 3, 3, 6000, -10), (1, 4, 4, 8000, 0)])
-    assert got(bump, eps=500, depth=1) == {(1, 0), (1, 2), (1, 4)}
+    assert got(bump, eps=1300) == {(1, 0), (1, 2), (1, 4)}
+    assert got(bump, eps=1200) == {(1, 0), (1, 2), (1, 3), (1, 4)}
     # closed loop (A == B): chord degenerates to point distance from A
     loop = mk([(1, 0, 0, 0, 0), (1, 1, 1, 5000, 0), (1, 2, 2, 0, 0)])
     assert got(loop, eps=4999) == {(1, 0), (1, 1), (1, 2)}
     assert got(loop, eps=5000) == {(1, 0), (1, 2)}       # strict >
-    # depth cap: zigzag needs two levels to keep both teeth
+    # zigzag: level 1 keeps tooth idx1 (tie 8|8 -> smallest idx); level 2
+    # adds tooth idx3; idx2 is collinear with the teeth and never survives
     zig = mk([(1, 0, 0, 0, 0), (1, 1, 1, 1000, 8000), (1, 2, 2, 2000, 0),
               (1, 3, 3, 3000, -8000), (1, 4, 4, 4000, 0)])
-    d1 = got(zig, eps=500, depth=1)
-    d2 = got(zig, eps=500, depth=2)
-    # level 1 keeps tooth idx1 (tie 8|8 -> smallest idx); level 2 adds
-    # tooth idx3; idx2 is collinear with the teeth and never survives
-    assert d1 == {(1, 0), (1, 1), (1, 4)}
-    assert d2 == {(1, 0), (1, 1), (1, 3), (1, 4)}
+    assert got(zig, eps=500) == {(1, 0), (1, 1), (1, 3), (1, 4)}
+    # depth cap: on the parabola y = 10·i² every point is > 1 milli off
+    # every chord and each split lands on the chord's midpoint, so the 4
+    # levels keep idx 32; 16, 48; 8, 24, ...; 4, 12, ..., 60 — the
+    # multiples of 4 — and drop the other 48 interior points
+    arc = mk([(1, i, i, 1000 * i, 10 * i * i) for i in range(65)])
+    assert got(arc, eps=1) == {(1, i) for i in range(0, 65, 4)}
     # 1- and 2-point tracks pass through; row order never matters
     short = mk([(7, 0, 0, 0, 0), (8, 0, 0, 0, 0), (8, 1, 1, 9000, 9000)])
     assert got(short, eps=1) == {(7, 0), (8, 0), (8, 1)}
     shuffled = mk([(1, 3, 3, 6000, -10), (1, 0, 0, 0, 0), (1, 4, 4, 8000, 0),
                    (1, 2, 2, 4000, 3000), (1, 1, 1, 2000, 10)])
-    assert got(shuffled, eps=500, depth=1) == {(1, 0), (1, 2), (1, 4)}
-    with pytest.raises(ValueError):
-        simplify_tracks(coll, eps_milli=1, max_depth=0)
+    assert got(shuffled, eps=1300) == {(1, 0), (1, 2), (1, 4)}
     with pytest.raises(ValueError):
         simplify_tracks(coll, eps_milli=-1)
 
@@ -1006,8 +998,6 @@ def test_st_within_brute_force(spark):
     import random
     from datetime import datetime, timedelta
 
-    import pytest as _pytest
-
     from insights_spark.geo.stjoin import st_within
 
     rng = random.Random(47)
@@ -1039,8 +1029,6 @@ def test_st_within_brute_force(spark):
     got = {(r["a"], r["b"])
            for r in st_within(df, radius, tau, rings=2).collect()}
     assert got == want
-    with _pytest.raises(ValueError):
-        st_within(df, radius_deg=50.0, tau_seconds=tau, rings=1, res=5)
 
 
 def test_user_tracks_hand_computed(spark):
@@ -1138,7 +1126,7 @@ def test_tile_pyramid_merge_equals_full(spark):
 
 def test_decayed_cell_scores_hand_buckets(spark):
     """Bucket math and dyadic exactness pinned by hand: fresh events weigh
-    1.0, one-halflife-old weigh 0.5, ancient clamp to 2^-max, future
+    1.0, one-halflife-old weigh 0.5, ancient clamp to 2^-20, future
     clamp to bucket 0 — and the score equals the exact fraction."""
     from datetime import datetime, timezone
 
@@ -1158,17 +1146,15 @@ def test_decayed_cell_scores_hand_buckets(spark):
         (at(999), 1.0, 1.0),     # still bucket 0
         (at(1000), 1.0, 1.0),    # bucket 1 -> 0.5
         (at(2500), 1.0, 1.0),    # bucket 2 -> 0.25
-        (at(10**9), 1.0, 1.0),   # ancient -> clamp bucket 3 (max)
+        (at(10**9), 1.0, 1.0),   # ancient -> clamp bucket 20 (max)
         (at(-50), 1.0, 1.0),     # future -> clamp bucket 0
     ]
     df = spark.createDataFrame(rows, "ts timestamp, lon double, lat double")
-    out = decayed_cell_scores(
-        df, res=1, halflife_s=hl, now_epoch_s=now, max_buckets=3
-    ).collect()
+    out = decayed_cell_scores(df, res=1, halflife_s=hl, now_epoch_s=now).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_events"] == 6
-    assert r["score"] == 1.0 + 1.0 + 0.5 + 0.25 + 0.125 + 1.0
+    assert r["score"] == 1.0 + 1.0 + 0.5 + 0.25 + 2.0 ** -20 + 1.0
 
 
 def test_frontier_cells_brute_force(spark):
@@ -1479,7 +1465,7 @@ def test_idw_fill_brute_force(spark):
     got = {
         r["cell"]: (r["ring1_nbrs"], r["ring2_nbrs"], r["w_num"],
                     r["w_den"], r["est"])
-        for r in idw_fill(df, min_ring1=min_ring1).collect()
+        for r in idw_fill(df).collect()
     }
     assert set(got) == set(want)
     for cell, (c1, c2, num, den, frac) in want.items():
@@ -1530,13 +1516,11 @@ def test_semivariogram_brute_force(spark):
     assert set(want) == {1, 2, 3}
 
     df = spark.createDataFrame(
-        [(c, n) for c, n in counts.items()], "cell long, x long"
+        [(c, n) for c, n in counts.items()], "cell long, n long"
     )
     got = {
         r["h"]: (r["n_pairs"], r["sse"], r["gamma"])
-        for r in semivariogram_exact(
-            df, cnt_col="x", max_h=max_h
-        ).collect()
+        for r in semivariogram_exact(df).collect()
     }
     assert set(got) == set(want)
     for h, (n, s) in want.items():
@@ -1547,11 +1531,11 @@ def test_semivariogram_brute_force(spark):
     # spatial correlation: variance grows with lag on a gradient field
     assert got[1][2] < got[2][2] < got[3][2]
     # empty + singleton inputs -> no pairs, no crash
-    empty = spark.createDataFrame([], "cell long, x long")
-    assert semivariogram_exact(empty, cnt_col="x").count() == 0
+    empty = spark.createDataFrame([], "cell long, n long")
+    assert semivariogram_exact(empty).count() == 0
     one = spark.createDataFrame([(hex_encode(6, 0, 0), 5)],
-                                "cell long, x long")
-    assert semivariogram_exact(one, cnt_col="x").count() == 0
+                                "cell long, n long")
+    assert semivariogram_exact(one).count() == 0
 
 
 def test_od_flows_brute_force(spark):

@@ -16,7 +16,7 @@ from insights_spark.runtime.layout import (
 )
 
 N = 20_000
-LEVEL = 14
+LEVEL = 14  # the S2 level of the key cluster_spatial writes
 
 
 def _pts(spark):
@@ -56,7 +56,7 @@ def test_cluster_spatial_prunes_and_matches_brute_force(spark, tmp_path):
     clustered = str(tmp_path / "clustered")
     scattered = str(tmp_path / "scattered")
     pts = _pts(spark)
-    cluster_spatial(pts, clustered, level=LEVEL, partitions=8)
+    cluster_spatial(pts, clustered, partitions=8)
     # same key column, row-order layout (round-robin = spatially random)
     (
         pts.select("*", s2_udf(LEVEL)(F.col("lon"), F.col("lat")).alias(KEY_COL))
@@ -89,7 +89,7 @@ def test_cluster_spatial_prunes_and_matches_brute_force(spark, tmp_path):
 
 def test_spatial_scan_pushes_filter_to_parquet(spark, tmp_path):
     path = str(tmp_path / "t")
-    cluster_spatial(_pts(spark), path, level=LEVEL, partitions=4)
+    cluster_spatial(_pts(spark), path, partitions=4)
     pid, lon, lat = _np_pts()
     qcell = int(s2_cell_id(lon[:1], lat[:1], 6)[0])
     plan = spatial_scan(spark, path, qcell)._jdf.queryExecution().executedPlan().toString()
@@ -113,7 +113,7 @@ def test_null_coordinates_survive_layout(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, 10.0, 20.0), (2, None, None)], "pid long, lon double, lat double"
     )
-    cluster_spatial(df, path, level=LEVEL, partitions=2)
+    cluster_spatial(df, path, partitions=2)
     back = spark.read.parquet(path)
     assert back.count() == 2
     assert back.filter(F.col(KEY_COL).isNull()).count() == 1

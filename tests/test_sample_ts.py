@@ -97,26 +97,22 @@ def test_gapfill_weekly_zero_rows(spark):
     }
 
 
-def test_gapfill_daily_and_null_exclusion(spark):
+def test_gapfill_null_exclusion(spark):
     t = dt.datetime
     rows = [
-        ("x", t(2024, 3, 1, 1)),
-        ("x", t(2024, 3, 3, 23)),
+        ("x", t(2024, 3, 4, 1)),     # week of Mon 2024-03-04
+        ("x", t(2024, 3, 20, 23)),   # week of 2024-03-18
         ("x", None),                 # NULL ts: no place on the spine
-        (None, t(2024, 3, 2)),       # NULL key: excluded
+        (None, t(2024, 3, 12)),      # NULL key: excluded, no week of its own
     ]
     out = {
-        (r["bucket_start"], r["n_events"])
-        for r in gapfill_counts(_ev(spark, rows), bucket="day").collect()
+        (r["event_type"], r["bucket_start"], r["n_events"])
+        for r in gapfill_counts(_ev(spark, rows)).collect()
     }
     assert out == {
-        (t(2024, 3, 1), 1), (t(2024, 3, 2), 0), (t(2024, 3, 3), 1),
+        ("x", t(2024, 3, 4), 1), ("x", t(2024, 3, 11), 0),
+        ("x", t(2024, 3, 18), 1),
     }
-
-
-def test_gapfill_bad_bucket_raises(spark):
-    with pytest.raises(ValueError):
-        gapfill_counts(_ev(spark, []), bucket="fortnight")
 
 
 def test_gapfill_counts_are_long(spark):
@@ -173,8 +169,8 @@ def test_int8_topk_hand_pinned(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    out = int8_topk(quantize_embeddings(emb), query_ids=[0], k=3).collect()
-    got = [(r["vec_id"], r["dot"]) for r in out]
+    out = int8_topk(quantize_embeddings(emb), query_ids=[0]).collect()
+    got = [(r["vec_id"], r["dot"]) for r in out]   # 3 candidates < top 5
     # dot(q0,c1)=255·255=65025; c2 and c3 both 0 → tie broken by vec_id
     assert got == [(1, 65025), (2, 0), (3, 0)]
     assert all(r["query_id"] == 0 for r in out)
@@ -187,9 +183,9 @@ def test_int8_topk_excludes_self_and_bounds_k(spark):
         [(i, [float(i), float(2 * i + 1)]) for i in range(10)],
         "vec_id long, embedding array<double>",
     )
-    out = int8_topk(quantize_embeddings(emb), query_ids=[4, 7], k=2)
+    out = int8_topk(quantize_embeddings(emb), query_ids=[4, 7])
     rows = out.collect()
-    assert len(rows) == 4  # 2 queries × k=2
+    assert len(rows) == 10  # 2 queries × top 5
     assert all(r["vec_id"] != r["query_id"] for r in rows)
 
 
@@ -250,16 +246,17 @@ def test_rolling_active_sketches(spark):
             eid += 1
     ev = spark.createDataFrame(rows, "event_id long, ts timestamp_ntz, user_id long")
     got = {str(r["day"]): (r["dau_est"], r["wactive_est"])
-           for r in rolling_active_sketches(ev, window_days=3).collect()}
+           for r in rolling_active_sketches(ev).collect()}
     assert set(got) == {"2024-01-01", "2024-01-02", "2024-01-03",
                         "2024-01-06", "2024-01-10"}  # observed days only
     # tiny cardinalities: HLL exact here → DAU = users that day,
-    # trailing-3 = union of days t-2..t
+    # trailing-7 = union of days t-6..t (each day's users are a superset
+    # of the days before it)
     assert got["2024-01-01"] == (10, 10)
     assert got["2024-01-02"] == (11, 11)   # users ⊂ day-2's set
     assert got["2024-01-03"] == (12, 12)
-    assert got["2024-01-06"] == (15, 15)   # days 4-5 silent; only day 5's
-    assert got["2024-01-10"] == (19, 19)
+    assert got["2024-01-06"] == (15, 15)   # days 0-2 in window, ⊂ day 5's
+    assert got["2024-01-10"] == (19, 19)   # only days 5 and 9 in window
 
 
 def test_cube_rollup_and_pivot_queries(spark):

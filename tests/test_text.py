@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from insights_spark.session import local_df
 from insights_spark.text import dedup, multimodal, quality, simsearch
 
 
@@ -36,7 +37,7 @@ def test_exact_dedup(spark, docs):
 
 def test_ngram_jaccard_pairs(spark, docs):
     out = {(r["a"], r["b"]): r["jaccard"]
-           for r in dedup.ngram_jaccard_pairs(docs, threshold=0.3).collect()}
+           for r in dedup.ngram_jaccard_pairs(docs).collect()}
     assert (1, 2) in out and out[(1, 2)] == 1.0
     assert (1, 6) in out and out[(1, 6)] == 1.0
     assert (1, 3) in out and 0.4 < out[(1, 3)] < 0.8
@@ -45,32 +46,32 @@ def test_ngram_jaccard_pairs(spark, docs):
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
     got = {(r["a"], r["b"]): r["jaccard"]
-           for r in dedup.minhash_near_dups(docs, threshold=0.3).collect()}
+           for r in dedup.minhash_near_dups(docs).collect()}
     assert (1, 2) in got and got[(1, 2)] == 1.0
     assert (1, 6) in got
     # exact-dup pairs must survive any banding; near-dup 1-3 likely but not
     # guaranteed by LSH — verify against exact jaccard if present
     for (a, b), j in got.items():
-        assert j >= 0.3
+        assert j >= 0.5
 
 
 def test_minhash_signature_properties(spark, docs):
     sig = docs.select(
-        "doc_id", dedup.minhash_signature(F.col("text"), 8).alias("sig")
+        "doc_id", dedup.minhash_signature(F.col("text")).alias("sig")
     ).collect()
     by_id = {r["doc_id"]: r["sig"] for r in sig}
     assert by_id[1] == by_id[2] == by_id[6]          # identical after normalize
     assert by_id[1] != by_id[4]
-    assert len(by_id[1]) == 8
-    assert by_id[7] == [dedup.MOD] * 8               # empty doc sentinel
+    assert len(by_id[1]) == 16
+    assert by_id[7] == [dedup.MOD] * 16              # empty doc sentinel
 
 
 def test_minhash_np_matches_column_fold(spark, docs):
     """The numpy fast path must be bit-identical to the portable column fold."""
     col_sig = {r["doc_id"]: r["s"] for r in docs.select(
-        "doc_id", dedup.minhash_signature(F.col("text"), 8).alias("s")).collect()}
+        "doc_id", dedup.minhash_signature(F.col("text")).alias("s")).collect()}
     np_sig = {r["doc_id"]: r["s"] for r in docs.select(
-        "doc_id", dedup.minhash_signature_np(8, 3)(F.col("text")).alias("s")).collect()}
+        "doc_id", dedup.minhash_signature_np()(F.col("text")).alias("s")).collect()}
     assert col_sig == np_sig
     # and the numpy poly hash matches the python definition
     import numpy as np
@@ -120,21 +121,22 @@ def test_decontam_flags_planted_overlap(spark):
     a different order is NOT; counts are per distinct benchmark gram."""
     from insights_spark.text.decontam import contaminated_docs
 
-    bench = spark.createDataFrame(
-        [("alpha beta gamma delta",)], "text string")
+    item = [f"w{i}" for i in range(13)]      # one 13-gram window
+    bench = spark.createDataFrame([(" ".join(item),)], "text string")
     docs = spark.createDataFrame(
         [
-            (1, "intro alpha beta gamma delta outro"),      # verbatim → hit
-            (2, "ALPHA  beta Gamma\tdelta"),                # normalized → hit
-            (3, "alpha beta gamma epsilon delta"),          # broken window
-            (4, "delta gamma beta alpha"),                  # wrong order
-            (5, None),                                      # null-safe
-            (6, "alpha beta"),                              # too short
+            (1, " ".join(["intro", *item, "outro"])),    # verbatim → hit
+            (2, "  ".join(w.upper() for w in item[:6])
+             + "\t" + " ".join(item[6:])),               # normalized → hit
+            (3, " ".join([*item[:12], "epsilon", item[12]])),  # broken
+            (4, " ".join(reversed(item))),               # wrong order
+            (5, None),                                   # null-safe
+            (6, " ".join(item[:12])),                    # too short
         ],
         "doc_id long, text string",
     )
     got = {r["doc_id"]: r["n_bench_grams"]
-           for r in contaminated_docs(docs, bench, n=4).collect()}
+           for r in contaminated_docs(docs, bench).collect()}
     assert got == {1: 1, 2: 1}
 
 
@@ -165,7 +167,7 @@ def test_cosine_topk_exact(spark):
     ]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
     out = {(r["id"], r["rank"]): r["neighbor_id"]
-           for r in simsearch.cosine_topk(df, k=2).collect()}
+           for r in simsearch.cosine_topk(df).collect()}
     assert out[(1, 1)] == 2 and out[(1, 2)] == 5
     assert out[(3, 1)] == 5
 
@@ -180,9 +182,9 @@ def test_cosine_topk_sample_matches_fold_path(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     sample = df.filter(F.col("vec_id") % 7 == 0)
     want = {(r["id"], r["rank"]): r["neighbor_id"]
-            for r in simsearch.cosine_topk(df, queries=sample, k=4).collect()}
+            for r in simsearch.cosine_topk(df).collect() if r["id"] % 7 == 0}
     got = {(r["id"], r["rank"]): r["neighbor_id"]
-           for r in simsearch.cosine_topk_sample(df, sample, k=4).collect()}
+           for r in simsearch.cosine_topk_sample(df, sample).collect()}
     assert got == want
     assert all(i != n for (i, _rk), n in got.items())
 
@@ -200,29 +202,33 @@ def test_cosine_topk_bucketed_recall(spark):
             i += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     exact = {(r["id"], r["rank"]): r["neighbor_id"]
-             for r in simsearch.cosine_topk(df, k=3).collect()}
+             for r in simsearch.cosine_topk(df).collect()}
     with warnings.catch_warnings():
         # a partly annotated applyInPandas kernel makes PySpark warn that it
         # cannot infer the eval type from the type hints
         warnings.simplefilter("error", UserWarning)
         approx = {(r["id"], r["rank"]): r["neighbor_id"]
-                  for r in simsearch.cosine_topk_bucketed(df, k=3, num_centroids=3,
-                                                          nprobe=2).collect()}
+                  for r in simsearch.cosine_topk_bucketed(df).collect()}
     agree = sum(1 for k_ in exact if approx.get(k_) == exact[k_])
     assert agree / len(exact) > 0.9
+    # an empty vector table has no centroids to sample: empty result
+    empty = local_df(spark, [], "vec_id long, embedding array<double>")
+    out = simsearch.cosine_topk_bucketed(empty)
+    assert out.columns == ["id", "neighbor_id", "score", "rank"]
+    assert out.collect() == []
 
 
 def test_ngram_df_cap_bounds_hot_gram_pairs(spark):
-    """40 docs sharing one stop-gram: uncapped, the gram equi-join
-    materializes C(40,2)=780 pairs through that single gram; with the df
-    cap the hot gram is dropped, so those docs produce NO pairs at all
-    (threshold=0 makes the pair count directly observable), while a true
+    """40 docs sharing six stop-grams: uncapped, the gram equi-join
+    materializes C(40,2)=780 pairs through those grams (each pair at
+    jaccard 6/8, over the 0.5 threshold); with the df cap the hot grams
+    are dropped, so those docs produce NO pairs at all, while a true
     near-dup pair through low-df grams is retained with identical jaccard."""
-    rows = [(i, f"common stop gram u{i} v{i} w{i} x{i}") for i in range(40)]
+    rows = [(i, f"s1 s2 s3 s4 s5 s6 s7 s8 u{i}") for i in range(40)]
     rows += [(100, "aa bb cc dd ee"), (101, "aa bb cc dd ee ff")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = dedup.ngram_jaccard_pairs(df, threshold=0.0)
-    capped = dedup.ngram_jaccard_pairs(df, threshold=0.0, max_gram_df=10)
+    uncapped = dedup.ngram_jaccard_pairs(df)
+    capped = dedup.ngram_jaccard_pairs(df, max_gram_df=10)
     hot = (F.col("a") < 40) & (F.col("b") < 40)
     assert uncapped.filter(hot).count() == 780
     assert capped.filter(hot).count() == 0
@@ -239,7 +245,7 @@ def test_empty_doc_banding_filters(spark):
             (2, "the quick brown fox jumps over the lazy dog tonight")]
     rows += [(10 + i, "   " if i % 2 else "") for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    mh = dedup.minhash_near_dups(df, threshold=0.3).collect()
+    mh = dedup.minhash_near_dups(df).collect()
     assert {(r["a"], r["b"]) for r in mh} == {(1, 2)}
     sh = dedup.simhash_near_dups(df, max_hamming=10).collect()
     assert all(r["a"] not in range(10, 16) and r["b"] not in range(10, 16)
@@ -284,28 +290,26 @@ def test_bit_band_keys_read_negative_sketch_unsigned(spark):
     assert got == want
 
 
-def test_minhash_near_dups_at_zero_threshold_is_lsh_candidates(spark, docs):
-    """Verification at threshold 0 keeps every candidate: the fused pipeline
-    bands exactly like the band join over the standalone signatures."""
-    nd = {(r["a"], r["b"]) for r in dedup.minhash_near_dups(docs, threshold=0.0).collect()}
+def test_minhash_near_dups_are_verified_lsh_candidates(spark, docs):
+    """The fused pipeline bands exactly like the band join over the
+    standalone signatures, then keeps the candidates whose exact Jaccard
+    (ngram_jaccard_pairs) reaches 0.5."""
+    nd = {(r["a"], r["b"]) for r in dedup.minhash_near_dups(docs).collect()}
     sigs = {r["doc_id"]: r["sig"] for r in docs.select(
         "doc_id", dedup.minhash_signature_np()(F.col("text")).alias("sig")).collect()
         if r["sig"][0] != dedup.MOD}
     cand = {(r["a"], r["b"]) for r in _sig_band_pairs(spark, sigs, 16, 4)}
-    assert nd == cand and (1, 2) in cand
+    exact = {(r["a"], r["b"]) for r in dedup.ngram_jaccard_pairs(docs).collect()}
+    assert nd == cand & exact and (1, 2) in nd
 
 
-def test_band_geometry_must_tile_the_sketch(spark, docs):
+def test_band_geometry_must_tile_the_sketch(spark):
     """bands must be >= 1 and divide the sketch; leftover hashes or bits are
     an error, not silently dropped."""
     vecs = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    sigs = docs.select("doc_id", dedup.minhash_signature_np()(F.col("text")).alias("sig"))
     bad = [
-        lambda: dedup.simhash_near_dups(docs, bands=3),
-        lambda: dedup.simhash_near_dups(docs, bands=0),
-        lambda: dedup.minhash_near_dups(docs, bands=3),
-        lambda: dedup.minhash_near_dups(docs, bands=0),
-        lambda: dedup.minhash_vs_index(sigs, sigs, bands=5),
+        lambda: dedup._sig_band_keys("_sig", 16, 3),
+        lambda: dedup._bit_band_keys("_h", 64, 0),
         lambda: simsearch.embedding_lsh_candidates(vecs, n_bits=32, bands=5),
         lambda: dedup.banded_hamming_pairs(
             spark.createDataFrame([(1, 5)], "_id long, h long"), "h", 3, 128),
@@ -322,28 +326,23 @@ def test_band_geometry_must_tile_the_sketch(spark, docs):
 def test_centroid_sampling_matches_global_sort(spark):
     """Hash-threshold centroid selection must equal the naive full-table
     sort-limit selection (same ordering key) — the scale fix may not change
-    which vectors become centroids."""
+    which vectors become centroids, nor their stored values."""
     import numpy as np
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(3)
     rows = [(int(i), [float(x) for x in rng.normal(size=8)]) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    n, c, seed = 200, 14, 42
-    got = simsearch.sample_centroids(df, n, c, seed=seed)
+    n, c = 200, 14
+    got = simsearch.sample_centroids(df, n, c)
     M = n * 2 + 1
-    naive = [
-        np.asarray(r["embedding"], dtype=np.float64)
-        for r in df.orderBy(
-            F.pmod(F.col("vec_id") * 2654435761 + seed, F.lit(M)), F.col("vec_id")
-        ).limit(c).collect()
-    ]
-    naive = np.stack(naive)
-    naive = naive / np.maximum(np.linalg.norm(naive, axis=1, keepdims=True), 1e-12)
-    assert np.array_equal(got, naive)
+    naive = df.orderBy(
+        F.pmod(F.col("vec_id") * 2654435761 + 42, F.lit(M)), F.col("vec_id")
+    ).limit(c).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in naive]
     # degenerate: more centroids than vectors still terminates
     tiny = spark.createDataFrame(rows[:3], "vec_id long, embedding array<float>")
-    assert simsearch.sample_centroids(tiny, 3, 10).shape[0] == 3
+    assert len(simsearch.sample_centroids(tiny, 3, 10)) == 3
 
 
 def synth_media(spark, n: int = 64, seed: int = 42):
@@ -429,13 +428,13 @@ def test_embedding_near_dups_exact(spark):
     rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {(r["a"], r["b"]): r["cosine"]
-           for r in simsearch.embedding_near_dups(df, threshold=0.3).collect()}
+           for r in simsearch.embedding_near_dups(df).collect()}
     X = np.stack([np.asarray(v, dtype=np.float32).astype(np.float64)
                   for _, v in rows])
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     S = Xn @ Xn.T
     want = {(a, b) for a in range(30) for b in range(a + 1, 30)
-            if S[a, b] >= 0.3 - 1e-9}
+            if S[a, b] >= 0.4 - 1e-9}
     # fold-order float differences can flip pairs sitting exactly on the
     # threshold; keep the comparison off-threshold
     assert {p for p in got} == want
@@ -502,22 +501,22 @@ def test_inverted_index_matches_bruteforce(spark, docs):
 
 def test_train_test_split_stable_and_stratified(spark, docs):
     """Assignment is a pure function of the id: stable under repartition
-    and union-order changes, and both splits non-degenerate at a 50%
-    target on a wider id range."""
+    and union-order changes, and exactly 10% test on whole blocks of
+    1000 ids."""
     from insights_spark.text.clean import train_test_split
 
     ids = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"]: r["split"] for r in
-         train_test_split(ids, test_permille=500).collect()}
+    a = {r["doc_id"]: r["split"] for r in train_test_split(ids).collect()}
     b = {r["doc_id"]: r["split"] for r in
-         train_test_split(ids.repartition(7), test_permille=500).collect()}
+         train_test_split(ids.repartition(7)).collect()}
     assert a == b
     n_test = sum(1 for v in a.values() if v == "test")
-    assert 800 < n_test < 1200  # hash-uniform around 50%
+    # bucket = (3·(id mod 1000) + 7) mod 1000 permutes the residues, so
+    # each block of 1000 ids holds exactly 100 test docs
+    assert n_test == 200
     # appends never migrate earlier docs
     more = spark.range(0, 3000).withColumnRenamed("id", "doc_id")
-    c = {r["doc_id"]: r["split"] for r in
-         train_test_split(more, test_permille=500).collect()}
+    c = {r["doc_id"]: r["split"] for r in train_test_split(more).collect()}
     assert all(c[k] == v for k, v in a.items())
 
 
@@ -685,29 +684,32 @@ def test_repetition_scores_hand_computed(spark):
 
 
 def test_boilerplate_flags_hand_computed(spark):
-    """Cross-doc duplicate segments flagged by df>=2: with seg_tokens=2,
-    docs 1 and 2 share segment 'nav bar'; doc 1's unique tail survives.
-    Within-doc repeats (doc 3) do NOT flag — df counts distinct docs."""
+    """Cross-doc duplicate segments flagged by df>=2: in 10-token
+    segments, docs 1 and 2 share the nav segment; doc 1's unique tail
+    survives. Within-doc repeats (doc 3) do NOT flag — df counts distinct
+    docs."""
     from insights_spark.text.clean import boilerplate_flags
+
+    def words(p, n):
+        return " ".join(f"{p}{i}" for i in range(n))
 
     df = spark.createDataFrame(
         [
-            (1, "nav bar real content here"),   # segs: 'nav bar','real content','here'
-            (2, "nav bar other words"),          # segs: 'nav bar','other words'
-            (3, "same same same same"),          # segs: 'same same'×2 (one doc)
+            (1, f"{words('nav', 10)} {words('real', 10)} here"),  # 3 segs
+            (2, f"{words('nav', 10)} {words('other', 5)}"),       # 2 segs
+            (3, " ".join(["same"] * 40)),   # 4 equal segs in one doc
             (4, None),
         ],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in
-            boilerplate_flags(df, seg_tokens=2).collect()}
+    rows = {r["doc_id"]: r for r in boilerplate_flags(df).collect()}
     assert set(rows) == {1, 2, 3}
     assert rows[1]["n_segs"] == 3
     assert rows[1]["boiler_segs"] == 1
     assert rows[1]["boiler_frac"] == pytest.approx(1 / 3)
-    assert rows[1]["kept_tokens"] == 3  # 'real content' + 'here'
-    assert rows[2]["boiler_segs"] == 1 and rows[2]["kept_tokens"] == 2
-    assert rows[3]["boiler_segs"] == 0 and rows[3]["kept_tokens"] == 4
+    assert rows[1]["kept_tokens"] == 11  # the real0-9 segment + 'here'
+    assert rows[2]["boiler_segs"] == 1 and rows[2]["kept_tokens"] == 5
+    assert rows[3]["boiler_segs"] == 0 and rows[3]["kept_tokens"] == 40
 
 
 def test_frame_schedule_metadata_only(spark):
@@ -773,22 +775,26 @@ def test_budget_select_hand_computed(spark):
 
 
 def test_classifier_score_hand_computed(spark):
-    """Linear scorer with an EXPLICIT weight table: doc 1 = a a b →
-    sw = 2·3 + (-5) = 1 → keep; doc 2 = b b → sw = -10 → drop; exact
-    score = sw / (97·n). OOV tokens (doc 3) carry no evidence (inner
-    join), and a fully-OOV doc is unscored like an empty one."""
-    from insights_spark.text.classify import classifier_score
+    """Linear scorer over the token_weight model: doc 1 = a a b →
+    sw = 2·w(a) + w(b), doc 2 = B b → sw = 2·w(b) (tokens lowercase);
+    exact score = sw / (97·n), keep ⇔ sw > 0. Empty and NULL docs carry
+    no evidence and are unscored."""
+    from insights_spark.text.classify import classifier_score, token_weight
+    from pyspark.sql import functions as F
 
     docs = spark.createDataFrame(
-        [(1, "a a b"), (2, "b b"), (3, "zz zz"), (4, None)],
+        [(1, "a a b"), (2, "B b"), (3, ""), (4, None)],
         "doc_id long, text string",
     )
-    w = spark.createDataFrame([("a", 3), ("b", -5)], "tok string, w long")
-    rows = {r["doc_id"]: r for r in classifier_score(docs, weights=w).collect()}
+    w = {r["tok"]: r["w"] for r in spark.createDataFrame(
+        [("a",), ("b",)], "tok string"
+    ).select("tok", token_weight(F.col("tok")).alias("w")).collect()}
+    rows = {r["doc_id"]: r for r in classifier_score(docs).collect()}
     assert set(rows) == {1, 2}
-    assert rows[1]["keep"] is True and rows[2]["keep"] is False
-    assert rows[1]["score"] == pytest.approx(1 / (97 * 3), abs=0)
-    assert rows[2]["score"] == pytest.approx(-10 / (97 * 2), abs=0)
+    for doc, sw, n in ((1, 2 * w["a"] + w["b"], 3), (2, 2 * w["b"], 2)):
+        assert rows[doc]["n_tokens"] == n
+        assert rows[doc]["score"] == sw / (97 * n)
+        assert rows[doc]["keep"] is (sw > 0)
 
 
 def test_classifier_derived_weights_deterministic(spark):
@@ -887,7 +893,7 @@ def test_containment_catches_quote_inclusion_jaccard_misses(spark):
     }
     assert got == {(1, 2): 1.0}
     # same pair, Jaccard: |a| grams all shared but |b| dwarfs them
-    jac = ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    jac = ngram_jaccard_pairs(docs).collect()
     assert jac == []
 
 
@@ -1048,8 +1054,6 @@ def test_cdc_chunks_structure_and_edit_robustness(spark):
     while t1[-1 - k] == t2[-1 - k]:
         k += 1
     assert k >= len(t1) - 2               # at most the head chunks differ
-    with pytest.raises(ValueError):
-        cdc_chunks(df, window=0)
 
 
 def test_cdc_containment_pairs_and_dfcap(spark):
@@ -1079,19 +1083,21 @@ def test_cdc_containment_pairs_and_dfcap(spark):
 
 
 def test_passage_dedup_keep_first_order(spark):
-    """Keep-first semantics pinned by hand: a chunk repeated WITHIN a doc
-    loses its second instance, a passage copied into a later doc is
-    removed there, and the (doc_id, idx) order decides the survivor.
-    chunk_tokens=3 so the fixture is readable."""
+    """Keep-first semantics pinned by hand on 10-token chunks: a chunk
+    repeated WITHIN a doc loses its second instance, a passage copied
+    into a later doc is removed there, and the (doc_id, idx) order
+    decides the survivor."""
     from insights_spark.text.dedup import passage_dedup
 
+    A = " ".join(f"a{i}" for i in range(10))
+    P = " ".join(f"p{i}" for i in range(10))
     rows = [
-        # doc 1: chunks [a b c], [a b c], [x y] — internal repeat
-        (1, "a b c a b c x y"),
-        # doc 2: [a b c], [p q r] — first chunk already seen in doc 1
-        (2, "a b c p q r"),
-        # doc 3: [p q r] seen in doc 2; [z] fresh
-        (3, "p q r z"),
+        # doc 1: chunks [A], [A], [x y] — internal repeat
+        (1, f"{A} {A} x y"),
+        # doc 2: [A], [P] — first chunk already seen in doc 1
+        (2, f"{A} {P}"),
+        # doc 3: [P] seen in doc 2; [z] fresh
+        (3, f"{P} z"),
         (4, None),          # NULL text → no tokens → absent
         (5, ""),            # empty → absent
     ]
@@ -1099,14 +1105,13 @@ def test_passage_dedup_keep_first_order(spark):
         r["doc_id"]: (r["n_chunks"], r["n_kept"], r["tokens_kept"],
                       r["tokens_removed"])
         for r in passage_dedup(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            chunk_tokens=3,
+            spark.createDataFrame(rows, "doc_id long, text string")
         ).collect()
     }
     assert got == {
-        1: (3, 2, 5, 3),   # second [a b c] removed
-        2: (2, 1, 3, 3),   # [a b c] removed, [p q r] kept (first)
-        3: (2, 1, 1, 3),   # [p q r] removed, [z] kept
+        1: (3, 2, 12, 10),  # second [A] removed
+        2: (2, 1, 10, 10),  # [A] removed, [P] kept (first)
+        3: (2, 1, 1, 10),   # [P] removed, [z] kept
     }
 
 
@@ -1121,7 +1126,7 @@ def test_heavy_hitters_exact_and_partitioning_invariant(spark):
     from insights_spark.text.freq import heavy_hitters, _mg_update
 
     rng = random.Random(7)
-    words = [f"w{i}" for i in range(40)]
+    words = [f"w{i}" for i in range(100)]
     # zipf-ish: w0 very hot, long uniform tail
     stream = (["w0"] * 600 + ["w1"] * 300 + ["w2"] * 150
               + [rng.choice(words[3:]) for _ in range(950)])
@@ -1129,18 +1134,18 @@ def test_heavy_hitters_exact_and_partitioning_invariant(spark):
     docs = [(i, " ".join(stream[i * 20:(i + 1) * 20])) for i in range(100)]
     exact = Counter(t for _, txt in docs for t in txt.split())
     N = sum(exact.values())
-    k = 8
+    k = 32  # heavy_hitters' counter budget
     want = {(t, c) for t, c in exact.items() if c * k > N}
     assert want and len(want) < len(exact)  # fixture is non-trivial
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {(r["term"], r["n"]) for r in heavy_hitters(df, k=k).collect()}
+    got = {(r["term"], r["n"]) for r in heavy_hitters(df).collect()}
     assert got == want
     got7 = {(r["term"], r["n"])
-            for r in heavy_hitters(df.repartition(7), k=k).collect()}
+            for r in heavy_hitters(df.repartition(7)).collect()}
     assert got7 == want
 
-    # the MG kernel itself decrements: 40 distinct words can't fit in 8
+    # the MG kernel itself decrements: 100 distinct words can't fit in 32
     # counters, so a full pass must have evicted at least once
     counters = {}
     _mg_update(counters, stream, k)
@@ -1319,7 +1324,7 @@ def test_round4_ops_survive_garbage_inputs(spark):
     assert passage_dedup(bad_docs).count() == 1          # only doc 4 tokens
     assert containment_pairs(bad_docs).count() == 0
     assert novelty_scores(bad_docs).count() == 0          # no doc has 3 tokens
-    assert heavy_hitters(bad_docs, k=4).count() == 1      # 'x' is total
+    assert heavy_hitters(bad_docs).count() == 1           # 'x' is total
     assert sliding_windows(bad_docs).count() == 1
     assert bm25_scores(bad_docs, query_terms_by_df(bad_docs)).count() >= 0
     assert mix_sources(bad_docs, {"s0": 1.0}, total=10).count() == 2
@@ -1370,19 +1375,22 @@ def test_geotag_documents_tie_rule_and_absence(spark):
 
 def test_top_terms_per_source_isolated_groups(spark):
     """Rank is per-source (one source's hot term doesn't displace
-    another's), ties break by term asc, k truncates."""
+    another's), ties break by term asc, the top 5 truncates."""
     from insights_spark.text.freq import top_terms_per_source
 
     rows = [
         (1, "apple apple apple pear", "s0"),
-        (2, "kiwi", "s0"),
+        (2, "kiwi lime grape fig", "s0"),
         (3, "zebra zebra yak yak", "s1"),   # tie 2-2 -> yak before zebra
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     got = {(r["source"], r["rank"]): (r["term"], r["n"])
-           for r in top_terms_per_source(df, k=2).collect()}
+           for r in top_terms_per_source(df).collect()}
     assert got == {
-        ("s0", 1): ("apple", 3), ("s0", 2): ("kiwi", 1),   # pear=kiwi tie -> kiwi
+        # five 1-count ties ordered by term; pear (6th) truncated
+        ("s0", 1): ("apple", 3), ("s0", 2): ("fig", 1),
+        ("s0", 3): ("grape", 1), ("s0", 4): ("kiwi", 1),
+        ("s0", 5): ("lime", 1),
         ("s1", 1): ("yak", 2), ("s1", 2): ("zebra", 2),
     }
 
@@ -1426,24 +1434,18 @@ def test_freq_of_freqs_hand_computed(spark):
 
 
 def test_token_share_curve_hand_computed(spark):
-    """Lorenz deciles pinned by hand on a skewed corpus: one 80-token doc
-    + four 5-token docs at buckets=5 -> top bucket holds 80% of tokens."""
+    """Lorenz deciles pinned by hand on a skewed corpus: one 55-token doc
+    + nine 5-token docs -> top decile holds 55% of tokens."""
     from insights_spark.text.freq import token_share_curve
 
-    rows = [(1, " ".join(["w"] * 80))] + [
-        (i, " ".join(["w"] * 5)) for i in range(2, 6)
-    ] + [(9, ""), (10, None)]
+    rows = [(1, " ".join(["w"] * 55))] + [
+        (i, " ".join(["w"] * 5)) for i in range(2, 11)
+    ] + [(19, ""), (20, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["bucket"]: (r["docs_cum"], r["tokens_cum"], r["token_share"])
-           for r in token_share_curve(df, buckets=5).collect()}
-    # 5 ranked docs, 5 buckets -> one doc per bucket; totals 100 tokens
-    assert got == {
-        1: (1, 80, 0.80),
-        2: (2, 85, 0.85),
-        3: (3, 90, 0.90),
-        4: (4, 95, 0.95),
-        5: (5, 100, 1.00),
-    }
+           for r in token_share_curve(df).collect()}
+    # 10 ranked docs, 10 buckets -> one doc per bucket; totals 100 tokens
+    assert got == {b: (b, 50 + 5 * b, (50 + 5 * b) / 100) for b in range(1, 11)}
 
 
 def test_cluster_savings_hand_computed(spark):
@@ -1490,42 +1492,52 @@ def test_pagerank_fixed_point_hand_cases(spark):
 
 
 def test_source_drift_chi2_hand_case(spark):
-    """Two sources, two terms, hand-computed χ² cells — including the
-    obs=0 cell the grid must generate."""
+    """Two sources, two heavy terms (count ≥ 50), hand-computed χ² cells —
+    including the obs=0 cell the grid must generate; a term seen 49
+    times stays out of the vocabulary."""
     from insights_spark.text.freq import source_drift_chi2
 
     docs = spark.createDataFrame(
-        [(0, "aa aa aa bb", "s1"), (1, "aa", "s2")],
+        [(0, "aa " * 150 + "bb " * 50 + "cc " * 49, "s1"),
+         (1, "aa " * 50, "s2")],
         "doc_id long, text string, source string")
-    rows = source_drift_chi2(docs, min_count=1).collect()
+    rows = source_drift_chi2(docs).collect()
     got = {(r["source"], r["term"]): (int(r["chi2_num"]), int(r["chi2_den"]))
            for r in rows}
-    # c=5, c_s1=4, c_s2=1, c_aa=4, c_bb=1
-    # (s1,aa): obs=3 → (5*3-4*4)² = 1,  den = 5*4*4 = 80
-    # (s1,bb): obs=1 → (5*1-4*1)² = 1,  den = 5*4*1 = 20
-    # (s2,aa): obs=1 → (5*1-1*4)² = 1,  den = 5*1*4 = 20
-    # (s2,bb): obs=0 → (0-1*1)²  = 1,  den = 5*1*1 = 5
-    assert got == {("s1", "aa"): (1, 80), ("s1", "bb"): (1, 20),
-                   ("s2", "aa"): (1, 20), ("s2", "bb"): (1, 5)}
+    # c=299, c_s1=249, c_s2=50, c_aa=200, c_bb=50 (cc: 49 < 50, dropped)
+    # (s1,aa): obs=150 → (299*150-249*200)² = 4950²,  den = 299*249*200
+    # (s1,bb): obs=50  → (299*50-249*50)²   = 2500²,  den = 299*249*50
+    # (s2,aa): obs=50  → (299*50-50*200)²   = 4950²,  den = 299*50*200
+    # (s2,bb): obs=0   → (0-50*50)²         = 2500²,  den = 299*50*50
+    assert got == {
+        ("s1", "aa"): (4950 ** 2, 299 * 249 * 200),
+        ("s1", "bb"): (2500 ** 2, 299 * 249 * 50),
+        ("s2", "aa"): (4950 ** 2, 299 * 50 * 200),
+        ("s2", "bb"): (2500 ** 2, 299 * 50 * 50),
+    }
 
 
 def test_cooccurrence_counts_hand_case(spark):
     """Hand-pinned window semantics: unordered pairs, same-term pairs
-    counted, window boundary inclusive, cross-doc never paired."""
+    counted, window boundary inclusive, cross-doc never paired, terms
+    seen fewer than 50 times left out."""
     from insights_spark.text.freq import cooccurrence_counts
 
-    docs = spark.createDataFrame(
-        [(0, "a b a x c"), (1, "c a")],
-        "doc_id long, text string")
+    rows = [(2 * i, "a b a x c") for i in range(50)]
+    rows += [(2 * i + 1, "c a") for i in range(50)]
+    rows += [(1000, "a z")]                # z: 1 occurrence, not heavy
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["term_a"], r["term_b"]): r["n"] for r in
-           cooccurrence_counts(docs, window=2, min_count=1).collect()}
-    # doc0 positions: a0 b1 a2 x3 c4 ; window 2 pairs:
-    # (a0,b1) (a0,a2) (b1,a2) (b1,x3) (a2,x3) (x3,c4) (a2? c4 dist2? a2→c4 dist 2 yes)
-    assert got[("a", "a")] == 1            # same-term pair within window
-    assert got[("a", "b")] == 2            # (a0,b1) + (b1,a2)
-    assert got[("a", "c")] == 2            # (a2,c4) in doc0 + (c,a) in doc1
-    assert got[("c", "x")] == 1 and got[("a", "x")] == 1 and got[("b", "x")] == 1
+           cooccurrence_counts(docs, window=2).collect()}
+    # each "a b a x c" doc: positions a0 b1 a2 x3 c4 ; window 2 pairs:
+    # (a0,b1) (a0,a2) (b1,a2) (b1,x3) (a2,x3) (a2,c4) (x3,c4) — ×50 docs
+    assert got[("a", "a")] == 50           # same-term pair within window
+    assert got[("a", "b")] == 100          # (a0,b1) + (b1,a2)
+    assert got[("a", "c")] == 100          # (a2,c4) + each "c a" doc
+    assert got[("c", "x")] == 50 and got[("a", "x")] == 50
+    assert got[("b", "x")] == 50
     assert ("b", "c") not in got           # distance 3 > window
+    assert not any("z" in p for p in got)  # below the vocabulary threshold
 
 
 def test_semantic_prune(spark):
@@ -1539,8 +1551,7 @@ def test_semantic_prune(spark):
     rows = [(i, v) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {r["vec_id"]: (r["cent_id"], r["cluster_id"], r["is_kept"])
-           for r in simsearch.semantic_prune(
-               df, num_centroids=4, threshold=0.9).collect()}
+           for r in simsearch.semantic_prune(df).collect()}
 
     # python replay with float32-faithful inputs and sequential folds
     import struct as _struct
@@ -1556,13 +1567,13 @@ def test_semantic_prune(spark):
     cos = lambda a, b: sdot(a, b) / (sdot(a, a) ** 0.5 * sdot(b, b) ** 0.5)
     M = 2 * len(rows) + 1
     order = sorted(rows, key=lambda r: ((r[0] * 2654435761 + 42) % M, r[0]))
-    cent = {ci + 1: f32(r[1]) for ci, r in enumerate(order[:4])}
+    cent = {ci + 1: f32(r[1]) for ci, r in enumerate(order[:16])}
     asg = {}
     for i, v in V.items():
         best = max(cent, key=lambda c: (cos(V[i], cent[c]), -c))
         asg[i] = best
     pairs = [(a, b) for a in V for b in V if a < b and asg[a] == asg[b]
-             and cos(V[a], V[b]) >= 0.9]
+             and cos(V[a], V[b]) >= 0.4]
     root = {i: i for i in V}
 
     def find(x):
@@ -1677,8 +1688,8 @@ def test_bigram_lm_scores_hand_case(spark):
     """Exact hand-computed surprisal bits on a 4-doc corpus: the model
     trains on docs 0 and 4 (id % 4 == 0); an in-model doc scores fewer
     bits than a fully-OOV doc and the keep threshold separates them; a
-    1-token doc is dropped (guards the sequence(1,0) reversed-pair trap);
-    min_count prunes hapax bigrams."""
+    1-token doc is dropped (guards the sequence(1,0) reversed-pair
+    trap)."""
     from insights_spark.text.lm import bigram_lm_scores
 
     docs = spark.createDataFrame(
@@ -1718,16 +1729,6 @@ def test_bigram_lm_scores_hand_case(spark):
     assert out[2]["bits_sum"] == 2 * bits(0, 0)
     assert out[2]["bits_per_bigram_milli"] == oov
     assert out[2]["keep"] == 0
-
-    # min_count=2 prunes the hapax bigrams -> doc 1's (cat,sat) backs off
-    out_p = {
-        r["doc_id"]: r
-        for r in bigram_lm_scores(
-            docs, F.expr("doc_id % 4 = 0"), keep_below_milli=thresh,
-            min_count=2,
-        ).collect()
-    }
-    assert out_p[1]["bits_sum"] == bits(2, 2) + bits(2, 0)
 
 
 def test_path_tree_hand_case(spark):
@@ -1848,8 +1849,7 @@ def test_prefix_jaccard_exact_vs_brute_force(spark):
         (7, "spark shuffle planning is completely different text about"),
         (8, ""),
     ]
-    t_num, t_den, n = 1, 2, 3
-    sets = {i: set(_word_ngrams_py(t, n)) for i, t in docs}
+    sets = {i: set(_word_ngrams_py(t, 3)) for i, t in docs}
     want = {}
     ids = sorted(sets)
     for x in range(len(ids)):
@@ -1860,7 +1860,7 @@ def test_prefix_jaccard_exact_vs_brute_force(spark):
                 continue
             inter = len(ga & gb)
             uni = len(ga | gb)
-            if inter * t_den >= uni * t_num:
+            if 2 * inter >= uni:            # J >= 1/2
                 want[(a, b)] = (inter, uni)
     assert want, "fixture must contain similar pairs"
     assert (1, 3) in want and want[(1, 3)][0] == want[(1, 3)][1]  # exact dup
@@ -1868,7 +1868,7 @@ def test_prefix_jaccard_exact_vs_brute_force(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["a"], r["b"]): (r["inter"], r["uni"], r["jaccard"])
-        for r in prefix_jaccard_pairs(df, t_num, t_den, n).collect()
+        for r in prefix_jaccard_pairs(df).collect()
     }
     assert set(got) == set(want)
     for k, (i, u) in want.items():
@@ -1890,7 +1890,7 @@ def test_kmeans_lloyd_int_brute_force(spark):
     from insights_spark.text.simsearch import kmeans_lloyd_int
 
     rng = random.Random(83)
-    d, k, iters, scale = 4, 3, 3, 1024
+    d, k, iters, scale = 4, 8, 3, 1024  # kmeans_lloyd_int's fixed run
     vecs = []
     for i in range(40):
         base = [(-1.0, -1.0), (1.0, 1.0), (0.0, 2.0)][i % 3]
@@ -1945,10 +1945,10 @@ def test_kmeans_lloyd_int_brute_force(spark):
     )
     got = {
         r["cluster"]: (r["n"], r["inertia"], tuple(r["centroid"]))
-        for r in kmeans_lloyd_int(df, k=k, iters=iters, scale=scale).collect()
+        for r in kmeans_lloyd_int(df).collect()
     }
     assert got == want
-    assert len(got) == k and sum(n for n, _, _ in got.values()) == 40
+    assert len(got) <= k and sum(n for n, _, _ in got.values()) == 40
 
 
 def test_sorted_neighborhood_brute_force(spark):
@@ -1964,7 +1964,7 @@ def test_sorted_neighborhood_brute_force(spark):
         (6, "gamma draconis"), (7, "beta orioniz"),     # near-dup of 3
         (8, "delta pavonis"),
     ]
-    window = 3
+    window = 4  # sorted_neighborhood_pairs' rank window
     order = sorted(rows, key=lambda r: (r[1], r[0]))
     want = {}
     for i, (ida, ka) in enumerate(order):
@@ -1989,8 +1989,7 @@ def test_sorted_neighborhood_brute_force(spark):
     for d in (df, df.repartition(5)):
         got = {
             (r["a"], r["b"]): (r["dist"], r["lev"])
-            for r in sorted_neighborhood_pairs(
-                d, "title", window=window).collect()
+            for r in sorted_neighborhood_pairs(d, "title").collect()
         }
         assert got == want
     assert got[(1, 5)] == (1, 0)        # exact dups adjacent
@@ -2032,7 +2031,7 @@ def test_rrf_fuse_brute_force(spark):
 
     a = [(1, 9.0), (2, 9.0), (3, 5.0), (4, 1.0)]          # tie 1-2 by id
     b = [(3, 1e6), (5, 5e5), (1, 1.0)]                    # huge scores, 5 only here
-    k, scale = 60, 10**9
+    k, scale = 60, 10**9  # rrf_fuse's fixed constants
 
     def ranks(rows):
         order = sorted(rows, key=lambda r: (-r[1], r[0]))
@@ -2052,7 +2051,7 @@ def test_rrf_fuse_brute_force(spark):
     db = spark.createDataFrame(b, "doc_id long, score double")
     for pa, pb in ((da, db), (da.repartition(5), db.repartition(3))):
         got = {r["doc_id"]: (r["rank_a"], r["rank_b"], r["rrf"])
-               for r in rrf_fuse(pa, pb, k=k, scale=scale).collect()}
+               for r in rrf_fuse(pa, pb).collect()}
         assert got == want
     assert want[1][0] == 1 and want[2][0] == 2            # tie broken by id
     assert want[5][0] is None                             # one-sided member
