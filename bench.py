@@ -1,7 +1,16 @@
-"""Benchmark harness — one JSON line for the driver.
+"""Query harness: times the registered queries, or dumps their plans.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and prints:
+    python bench.py                      # the headline suite (below)
+    python bench.py q1 q2 ...            # time only the named queries
+    python bench.py --plans DIR [q ...]  # write plans, time nothing
+
+Queries read $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1). The
+session follows get_spark's core rule (local[$SPARK_GRAFT_CPUS], or
+local[*] when unset) with max(cores, 8) shuffle partitions. A name that is
+not a registered query exits non-zero before the session starts, so a
+misspelled name cannot silently drop out of a timing or a plan diff.
+
+The headline suite prints one JSON line for the driver:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <float>,
@@ -9,6 +18,9 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
      "reps": R, "rep_totals": [sec, ...]}
 
 Each query is forced with a noop sink (full execution, no driver collect).
+A named run prints the same line without the flagship throughput and skips
+the flagship, sf1 and BENCH_FULL.json steps, so it never overwrites the
+committed artifact.
 
 MIN-OF-N DISCIPLINE (default reps=3, $SPARK_GRAFT_REPS to override): this
 sandbox VM has measured 2-3× invisible-throttling variance between
@@ -27,12 +39,21 @@ The JSON grows `queries_sf1`, `scaling_sf1` (per-query sf1/sf0.1 ratio;
 ~10 ≈ linear in data) and `sf1_excluded` — queries whose OUTPUT is
 super-linear by construction are excluded with named reasons, never
 silently dropped.
+
+PLAN DUMPS (--plans DIR): each query's formatted plan goes to
+DIR/<name>.txt, every registered query when none is named. Expression ids
+(#123), [plan_id=N], pythonUDFn and RDD[N] numbers and the uuid suffix of
+snapshot-table data dirs (/c2-a442fb60) are replaced by placeholders, so
+the plan dirs of two checkouts compare with `diff -r` — the check for a
+refactor that should leave plans unchanged.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -48,26 +69,70 @@ from insights_spark.session import get_spark  # noqa: E402
 # at sf0.01 and would dominate wall time at sf0.1.
 HEADLINE = [q.name for q in REGISTRY if q.headline]
 
+_RUN_IDS = (
+    (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
+    (re.compile(r"pythonUDF\d+"), "pythonUDF_"),
+    # RDD ids count every RDD the process made before, so they shift with
+    # the jobs earlier queries ran
+    (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    # SnapshotTable data dirs are c<snapshot>-<uuid hex[:8]>, new each run
+    (re.compile(r"(/c\d+-)[0-9a-f]{8}\b"), r"\1_"),
+)
+
+
+def normalised(plan: str) -> str:
+    """The plan with its per-run ids replaced by placeholders."""
+    for pat, repl in _RUN_IDS:
+        plan = pat.sub(repl, plan)
+    return plan
+
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Time registered queries (default: the headline suite), "
+                    "or write their normalised plans with --plans.")
+    ap.add_argument("names", nargs="*", help="registered query names")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write each query's plan to DIR/<name>.txt "
+                         "(all queries when none is named) and time nothing")
+    args = ap.parse_args()
+    qs = entrymod.queries()
+    unknown = [name for name in args.names if name not in qs]
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else 0.0
 
-    spark = get_spark("insights-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 8))
+    spark = get_spark("insights-bench")
+    cpus = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus, 8)))
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
 
     # warm the JVM + parquet footers + Python UDF workers once (excluded from
     # timings): semi_join exercises the JVM/scan path, pip_countries spins up
-    # the pandas-UDF worker pool so no timed query is charged worker startup
+    # the pandas-UDF worker pool so no timed query is charged worker startup.
+    # Plan dumps run it too: column_profile's Expand column order follows
+    # the expression ids, so its plan depends on what the process ran before.
     force(qs["semi_join"](spark, sf_dir))
     force(qs["pip_countries"](spark, sf_dir))
+
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+        for name in args.names or qs:
+            df = qs[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                fh.write(normalised(plan))
+            print(f"{name}: plan written")
+        spark.stop()
+        return
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "3")))
     # wall-clock budget (sec) for the rep loop: in a throttled window one
@@ -85,7 +150,7 @@ def main() -> None:
     loop_t0 = time.perf_counter()
     for _rep in range(reps):
         rep_total = 0.0
-        for name in HEADLINE:
+        for name in args.names or HEADLINE:
             t0 = time.perf_counter()
             force(qs[name](spark, sf_dir))
             dt = time.perf_counter() - t0
@@ -98,6 +163,21 @@ def main() -> None:
     timings = {k: round(v, 3) for k, v in timings.items()}
 
     total = round(sum(timings.values()), 3)
+    out = {
+        "metric": ("named queries wall time" if args.names else
+                   "headline suite wall time (PIP+tiles+knn+dedup+ann)"),
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "cpus": cpus,
+        "reps": reps,
+        "rep_totals": rep_totals,
+    }
+    if args.names:
+        print(json.dumps(out, separators=(",", ":")))
+        spark.stop()
+        return
 
     # flagship throughput: events rows processed per second end-to-end
     # (min-of-reps wall time, same discipline as the suite)
@@ -187,17 +267,8 @@ def main() -> None:
     # detail — sf1 timings, ratios, pass counts, exclusions — goes to
     # BENCH_FULL.json next to this script; stdout carries the compact
     # headline line with an sf1 SUMMARY only.
-    full = {
-        "metric": "headline suite wall time (PIP+tiles+knn+dedup+ann)",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "throughput_rows_per_sec": rows_per_sec,
-        "cpus": cpus,
-        "reps": reps,
-        "rep_totals": rep_totals,
-    }
+    out["throughput_rows_per_sec"] = rows_per_sec
+    full = dict(out)
     if sf1_queries:
         full["queries_sf1"] = sf1_queries
         full["sf1_passes"] = sf1_passes
@@ -214,18 +285,7 @@ def main() -> None:
     except OSError:
         pass  # read-only checkout: stdout still carries the headline
 
-    out = {
-        "metric": full["metric"],
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "throughput_rows_per_sec": rows_per_sec,
-        "cpus": cpus,
-        "reps": reps,
-        "rep_totals": rep_totals,
-        "detail": "BENCH_FULL.json",
-    }
+    out["detail"] = "BENCH_FULL.json"
     if sf1_queries:
         out["sf1"] = {
             "sum_sec": round(sum(sf1_queries.values()), 1),

@@ -18,7 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from . import ref_parser
 from .schemas import CHANGESET_COMMENTS, CHANGESETS, ELEMENT_HISTORY
@@ -91,30 +91,6 @@ def _batch_extract_changesets(pdf: pd.DataFrame) -> tuple[list[dict], list[dict]
     return changesets, comments
 
 
-def extract_changesets(pages: DataFrame) -> DataFrame:
-    """pages → changesets rows (reference table osm_changeset, queries.py:6-20)."""
-    src = pages.filter(F.col("url").contains("/changeset-dump/")).select("url", "html")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CHANGESETS.fields]
-        for pdf in batches:
-            yield _columnar(_batch_extract_changesets(pdf)[0], cols)
-
-    return src.mapInPandas(gen, CHANGESETS)
-
-
-def extract_comments(pages: DataFrame) -> DataFrame:
-    """pages → changeset discussion comments (queries.py:21-27)."""
-    src = pages.filter(F.col("url").contains("/changeset-dump/")).select("url", "html")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CHANGESET_COMMENTS.fields]
-        for pdf in batches:
-            yield _columnar(_batch_extract_changesets(pdf)[1], cols)
-
-    return src.mapInPandas(gen, CHANGESET_COMMENTS)
-
-
 def _batch_extract_elements(pdf: pd.DataFrame) -> list[dict]:
     """Records-only element parse of one Arrow batch (no canonical text).
 
@@ -146,15 +122,13 @@ def _columnar(rows: list[dict], cols: list[str]) -> pd.DataFrame:
 
 
 def extract_changeset_bundles(pages: DataFrame) -> DataFrame:
-    """One parse pass over changeset-dump pages yielding BOTH outputs as
-    array columns: (changesets: array<struct>, comments: array<struct>).
-
-    extract_changesets + extract_comments each parse every changeset page;
-    a pipeline that sinks both tables pays the parse twice. Callers persist
-    this bundle and explode each array — one parse, two tables.
+    """pages → changesets (reference table osm_changeset, queries.py:6-20)
+    and their discussion comments (queries.py:21-27), from ONE parse pass
+    over the changeset-dump pages: one row per Arrow batch with both
+    outputs as array columns (changesets: array<struct>, comments:
+    array<struct>). A pipeline that sinks both tables persists this bundle
+    and explodes each array — one parse, two tables.
     """
-    from pyspark.sql.types import ArrayType, StructField, StructType
-
     schema = StructType(
         [
             StructField("changesets", ArrayType(CHANGESETS), True),

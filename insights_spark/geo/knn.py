@@ -326,10 +326,9 @@ def _density_counts(points):
 
 
 def auto_cell_res(points: DataFrame, k: int = 3) -> int:
-    """Measure, don't guess — the `top_keys` discipline applied to space:
-    the smallest hex resolution whose mean occupied-cell density is ≤
-    4·k (enough candidates per cell to certify most queries at rings=2),
-    measured on the FULL dataset.
+    """Measure, don't guess: the smallest hex resolution whose mean
+    occupied-cell density is ≤ 4·k (enough candidates per cell to certify
+    most queries at rings=2), measured on the FULL dataset.
 
     Why it matters at scale: the ring join's pair volume is Σ_cell
     q_c·cand_c ∝ n·density. A FIXED res makes density — and therefore

@@ -21,9 +21,9 @@ Scale posture (100 TB): ONE shuffle on the user key (the window and the
 groupBy share it — AQE reuses the exchange). The collect_list holds one
 user's LEG LENGTHS (8 bytes each), bounded by that user's event count —
 the same per-key-bounded state every sessionization/track system
-carries; for pathological single-key hotspots (a firehose bot), route
-through runtime/skew.salted_group_apply with a monoid re-merge, noted
-here rather than silently assumed away.
+carries; a pathological single-key hotspot (a firehose bot) would need
+the user's legs split by a salt and the summaries re-merged as a monoid,
+noted here rather than silently assumed away.
 """
 
 from __future__ import annotations

@@ -1445,8 +1445,7 @@ def _q_conditional_battery_salted(spark, sf_dir):
         "n": F.count(F.lit(1)),
     }
     return salted_agg(
-        li, ["l_orderkey"], aggs, salt_source_cols=["l_linenumber", "l_partkey"],
-        buckets=16,
+        li, ["l_orderkey"], aggs, salt_source_cols=["l_linenumber", "l_partkey"]
     )
 
 

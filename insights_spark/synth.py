@@ -300,9 +300,9 @@ def pages_df(spark, n_pages: int = 60):
 
 
 # ---------------------------------------------------------------------------
-# distributed page generation — for scale benchmarks. Same page content
+# independent page generation — for benchmarks. Same page content
 # machinery, but id allocation is stride-based (page seq × fixed stride)
-# instead of sequential, so every page generates independently on executors.
+# instead of sequential, so every page generates without the pages before it.
 # ---------------------------------------------------------------------------
 
 _CS_STRIDE = 16  # max changesets per dump page < stride
@@ -344,24 +344,3 @@ def gen_page_dist(seq: int, seed: int = 42) -> dict:
         "text": golden["text"],
         "lang": lang,
     }
-
-
-def pages_df_dist(spark, n_pages: int, partitions: int | None = None):
-    """Distributed deterministic pages table: generation itself runs on
-    executors (mapInPandas over a range), so fixture size scales with the
-    cluster instead of the driver."""
-    import pandas as pd
-
-    from .schemas import PAGES
-
-    parts = partitions or max(32, n_pages // 500)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [gen_page_dist(int(s)) for s in pdf["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGES.fields])
-
-    return (
-        spark.range(0, n_pages, numPartitions=parts)
-        .mapInPandas(gen, PAGES)
-    )

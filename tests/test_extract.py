@@ -6,7 +6,16 @@ text the pinned single-process oracle parser produces (SURVEY §5 item 3).
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from insights_spark import extract, ref_parser
+
+
+def _bundled(pages, col):
+    """One array of the changeset-bundle kernel the pipeline runs, exploded
+    to one row per record — as jobs.pipeline.run sinks it."""
+    return (extract.extract_changeset_bundles(pages)
+            .select(F.explode(col).alias("r")).select("r.*"))
 
 
 def test_extracted_text_byte_identical(spark, pages, pages_rows):
@@ -18,7 +27,7 @@ def test_extracted_text_byte_identical(spark, pages, pages_rows):
 
 
 def test_changeset_rows_match_oracle(spark, pages, pages_rows):
-    df = extract.extract_changesets(pages)
+    df = _bundled(pages, "changesets")
     rows = {r["id"]: r for r in df.collect()}
     want = []
     for p in pages_rows:
@@ -37,7 +46,7 @@ def test_changeset_rows_match_oracle(spark, pages, pages_rows):
 
 
 def test_comment_last_text_wins(spark, pages, pages_rows):
-    df = extract.extract_comments(pages)
+    df = _bundled(pages, "comments")
     got = sorted(
         (r["comment_changeset_id"], r["comment_user_id"], r["comment_text"])
         for r in df.collect()
@@ -176,8 +185,8 @@ def test_null_and_garbage_payloads_skip(spark):
         ],
         "page_id long, url string, html binary",
     )
-    assert extract.extract_changesets(bad).count() == 0
-    assert extract.extract_comments(bad).count() == 0
+    assert _bundled(bad, "changesets").count() == 0
+    assert _bundled(bad, "comments").count() == 0
     assert extract.extract_elements(bad).count() == 0
     assert extract.payload_of(None) == b""
     assert extract.payload_of(b"") == b""

@@ -2,9 +2,9 @@
 insights_spark/ (outside queries/) must get a value other than its default
 from some call outside tests/ — the library, its query registry, jobs,
 benchmarks and tools. A call matches by the callee's name (a plain name, an
-attribute, or a class name for __init__); it sets a parameter when it passes
-a different literal, any non-literal expression, or a *args/**kwargs that may
-cover it. A parameter only tests set selects a path no real input takes, and
+attribute, or a class name for __init__; a name imported as `from m import
+f as g` is `f`); it sets a parameter when it passes a different literal, any
+non-literal expression, or a *args/**kwargs that may cover it. A parameter only tests set selects a path no real input takes, and
 one nobody sets is a constant: either way, write the default into the body,
 delete the parameter, and test the fixed value. ALLOW maps
 "<path under insights_spark/>:<function>.<param>" to why it stays; beyond a
@@ -81,12 +81,17 @@ class _Defs(ast.NodeVisitor):
 
 
 def _calls(tree: ast.AST):
+    """(callee name, call) for every call in the tree; a plain name bound
+    by `from m import f as g` resolves to `f`."""
+    alias = {a.asname: a.name for n in ast.walk(tree)
+             if isinstance(n, ast.ImportFrom) for a in n.names if a.asname}
     for n in ast.walk(tree):
         if isinstance(n, ast.Call):
             f = n.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name:
-                yield name, n
+            if isinstance(f, ast.Name):
+                yield alias.get(f.id, f.id), n
+            elif isinstance(f, ast.Attribute):
+                yield f.attr, n
 
 
 def _files() -> dict[Path, ast.AST]:

@@ -395,7 +395,7 @@ def test_salted_join_skewed_matches_plain(spark):
         want = sorted(r["payload"] for r in fact.join(dim, "k", how).collect())
         got = sorted(
             r["payload"]
-            for r in salted_join_skewed(fact, dim, "k", ["payload"], 8, how).collect()
+            for r in salted_join_skewed(fact, dim, "k", ["payload"], how).collect()
         )
         assert got == want, how
 

@@ -26,8 +26,6 @@ ALLOW = {
     "geo/cells.py:hex_center": "tests check hex_cell_id and hex_cover_bbox against it",
     "geo/cells.py:hex_ring_ids": "tests check hex_ring_col and the ring-neighbour "
                                  "queries against it",
-    "extract.py:extract_comments": "the staged parse tests check the fused "
-                                   "changeset-bundle kernel against",
     "extract.py:extract_elements": "the staged parse tests check the fused "
                                    "enriched-element kernel against",
     "extract.py:extract_text": "tests pin the byte-identical text invariant with it",

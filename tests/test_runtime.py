@@ -17,7 +17,7 @@ from insights_spark import synth
 from insights_spark.jobs import pipeline
 from insights_spark.runtime.checkpoint import CheckpointStore, incremental_filter
 from insights_spark.runtime.lineage import LineageLog
-from insights_spark.runtime.skew import salted_agg, top_keys, with_salt
+from insights_spark.runtime.skew import salted_agg, with_salt
 from insights_spark.schemas import CHECKPOINTS, LINEAGE
 from insights_spark.session import local_df
 
@@ -99,7 +99,7 @@ def test_salted_agg_matches_plain(spark):
     salted = {r["k"]: (r["s"], r["c"]) for r in
               salted_agg(df, ["k"],
                          {"s": F.sum("v"), "c": F.count(F.lit(1))},
-                         ["id"], buckets=8).collect()}
+                         ["id"]).collect()}
     assert plain == salted
 
 
@@ -137,61 +137,6 @@ def test_salting_spreads_hot_key_partitions(spark):
     salted = max_part(with_salt(df, ["payload"], buckets), "k", "_salt")
     assert plain >= n * 0.5          # the hot key really concentrates
     assert salted <= plain / 8       # and salting really spreads it
-
-
-def test_salted_group_apply_matches_plain(spark):
-    """Two-level applyInPandas == plain per-key kernel on the hot-key
-    fixture (integer stats — exact equality, no FP order games)."""
-    from insights_spark.runtime.skew import salted_group_apply
-
-    df = _skewed_df(spark, 20_000)
-
-    def partial(pdf):
-        import pandas as pd
-
-        return pd.DataFrame({
-            "k": [pdf["k"].iloc[0]],
-            "_salt": [pdf["_salt"].iloc[0] if "_salt" in pdf else 0],
-            "n": [len(pdf)],
-            "vmin": [int(pdf["v"].min())],
-            "vmax": [int(pdf["v"].max())],
-            "vsum": [int(pdf["v"].sum())],
-        })
-
-    schema = "k long, _salt int, n long, vmin long, vmax long, vsum long"
-    merge = {"n": F.sum("n"), "vmin": F.min("vmin"),
-             "vmax": F.max("vmax"), "vsum": F.sum("vsum")}
-    got = {
-        r["k"]: (r["n"], r["vmin"], r["vmax"], r["vsum"])
-        for r in salted_group_apply(
-            df, ["k"], partial, schema, merge, ["payload"], buckets=8,
-        ).collect()
-    }
-    # hot-only salting (the production path): identical results
-    got_hot = {
-        r["k"]: (r["n"], r["vmin"], r["vmax"], r["vsum"])
-        for r in salted_group_apply(
-            df, ["k"], partial, schema, merge, ["payload"], buckets=8,
-            hot_threshold_rows=1000,
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["n"], r["vmin"], r["vmax"], r["vsum"])
-        for r in df.groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.min("v").alias("vmin"),
-            F.max("v").alias("vmax"), F.sum("v").alias("vsum"),
-        ).collect()
-    }
-    assert got == want
-    assert got_hot == want
-
-
-def test_top_keys(spark):
-    df = spark.createDataFrame(
-        [(1,)] * 100 + [(2,)] * 5 + [(3,)] * 3, "k int"
-    )
-    hot = [r["k"] for r in top_keys(df, ["k"], 50).collect()]
-    assert hot == [1]
 
 
 def test_workers_import_package_from_any_cwd(tmp_path):
