@@ -67,7 +67,7 @@ def cell_dbscan(cell_counts: DataFrame, minpts: int) -> DataFrame:
     )
     core_ids = core.select(F.col("cell").alias("nbr_id"))
     edges = fan.join(core_ids, "nbr_id")  # both endpoints must be core
-    labels, _ = star_cc_labels(edges)
+    labels = star_cc_labels(edges)
     core_lab = (
         core.join(labels, core["cell"] == labels["id"], "left")
         .select(
@@ -127,7 +127,7 @@ def region_shape(cell_counts: DataFrame) -> DataFrame:
     edges = fan.join(cnts.select(F.col("cell").alias("nbr_id")), "nbr_id").persist()
     # occupied-neighbor degree per cell (0 for isolated cells, via left join)
     deg = edges.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    labels, _ = star_cc_labels(edges)
+    labels = star_cc_labels(edges)
     return (
         cnts.join(labels, cnts["cell"] == labels["id"], "left")
         .select(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..runtime.supersteps import supersteps
 from ..session import local_df
 
 _PI = 3.141592653589793
@@ -90,16 +91,16 @@ def tile_id() -> Column:
 
 
 def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
-                   collect_cap: int = 300_000):
+                   collect_cap: int = 300_000) -> DataFrame:
     """Connected components over an edge list via alternating
     large-star/small-star (Kiveris et al., SoCC'14 — public algorithm),
     with a size-gated driver union-find fast path for small edge lists.
 
     `edges`: (id, nbr_id) directed pairs (both directions present or not —
-    the first step symmetrizes). Returns ``(labels, sweeps_used)`` where
-    labels is (id, label) for every node THAT APPEARS IN AN EDGE, label =
-    the component's minimum node id. Isolated nodes are the caller's
-    coalesce.
+    the first step symmetrizes). Returns (id, label) for every node THAT
+    APPEARS IN AN EDGE, label = the component's minimum node id. Isolated
+    nodes are the caller's coalesce. Raises RuntimeError when the
+    contraction has not converged after ``max_sweeps`` sweeps.
 
     Why star contraction: min-label propagation needs O(log diameter)
     sweeps even WITH pointer jumping, and each sweep carries the full
@@ -170,11 +171,9 @@ def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
                 else:
                     parent[ru] = rv
         rows = [(int(x), int(find(x))) for x in parent]
-        labels = local_df(edges.sparkSession, rows, "id long, label long")
-        return labels, 0
-    sweeps = 0
-    for _ in range(max_sweeps):
-        sweeps += 1
+        return local_df(edges.sparkSession, rows, "id long, label long")
+
+    def sweep(E: DataFrame) -> DataFrame:
         # E is (u > v)-normalized and distinct, so the two orientations
         # are disjoint: no distinct needed after the union
         sym = E.unionByName(
@@ -195,35 +194,32 @@ def star_cc_labels(edges: DataFrame, max_sweeps: int = 30,
         # small-star input = each node's ≤-neighbors; e1 is already
         # (u > v)-normalized, so that is e1 itself — no re-symmetrize
         m_sm = e1.groupBy("u").agg(F.min("v").alias("m"))
-        e2 = (
+        return (
             e1.join(m_sm, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(m_sm.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
-        cnt = e2.count()
-        changed = (
-            1
-            if cnt != prev_cnt
-            else e2.join(E, ["u", "v"], "left_anti").count()
-        )
-        E, prev_cnt = e2, cnt
-        if changed == 0:
-            break
-    else:
+
+    def converged(prev: DataFrame, cur: DataFrame) -> bool:
+        nonlocal prev_cnt
+        last, prev_cnt = prev_cnt, cur.count()
+        return prev_cnt == last and \
+            cur.join(prev, ["u", "v"], "left_anti").count() == 0
+
+    E, halted = supersteps(E, sweep, max_sweeps, halt=converged)
+    if not halted:
         raise RuntimeError(
             f"star_cc_labels did not converge within max_sweeps={max_sweeps}"
         )
     # fixpoint edges are (node, root) stars: one-hop min read-off
-    labels = (
+    return (
         E.unionByName(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .groupBy("u")
         .agg(F.least(F.min("v"), F.first("u")).alias("label"))
         .select(F.col("u").alias("id"), "label")
     )
-    return labels, sweeps
 
 
 def tile_regions(
@@ -272,7 +268,7 @@ def tile_regions(
     )
     edges.count()
 
-    labels, _ = star_cc_labels(edges)
+    labels = star_cc_labels(edges)
     return (
         hot.join(labels, "id", "left")
         .select(

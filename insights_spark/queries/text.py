@@ -471,7 +471,7 @@ def _q_ngram_jaccard(spark, sf_dir):
 @query("kcore", headline=True, oracle=_kcore_sql(k=5, rounds=6))
 def _q_kcore(spark, sf_dir):
     """k-core peel (text/links.py:kcore_peel): 6 synchronous rounds of
-    degree-<3 removal over the symmetrized 3-out doc graph — the
+    degree-<5 removal (k = 5) over the symmetrized 3-out doc graph — the
     cohesion measure degree and triangles both miss; R-round recurrence
     bit-equal to the unrolled SQL."""
     from insights_spark.text.links import kcore_peel

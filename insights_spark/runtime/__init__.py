@@ -1,1 +1,1 @@
-"""Runtime: checkpoint/resume, per-partition lineage metrics, skew salting."""
+"""Runtime: checkpoint/resume, lineage metrics, skew salting, supersteps."""

@@ -485,7 +485,7 @@ def near_dup_clusters(
     from ..geo.vectorize import star_cc_labels
 
     edges = pairs.select(F.col("a").alias("id"), F.col("b").alias("nbr_id"))
-    labels, _ = star_cc_labels(edges)
+    labels = star_cc_labels(edges)
     base = docs.select(F.col(id_col))
     joined = base.join(labels.withColumnRenamed("id", id_col), id_col, "left")
     cl = F.coalesce(F.col("label"), F.col(id_col))

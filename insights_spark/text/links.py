@@ -14,11 +14,10 @@ of training documents.
 Shared pieces: ``_undirected`` is the one undirected view (symmetrize,
 drop self-loops, dedup) that label propagation, k-core and triangles
 read; hop-distance BFS is unit-weight ``sssp_weighted``, not a loop of
-its own. The remaining loops stay hand-written because they differ in
-what they materialize each round — HITS checkpoints mid-round, SSSP
-checkpoints one relaxed table, PageRank pins only its edges — so a
-shared driver would still leave each caller choosing where to
-checkpoint.
+its own. Every loop is one call of ``runtime.supersteps.supersteps``: the
+operator writes its initial state and its step (HITS's step is one
+half-round), and ``supersteps`` owns the per-round checkpoint, the round
+cap, the halt test and the release of the edge pins.
 
 Determinism contract: every score or distance is integer arithmetic —
 PageRank's scores are FIXED-POINT int64 (``scale`` units = probability
@@ -40,14 +39,15 @@ aggregation — the classic 2-shuffle Pregel superstep. No collect, no
 driver loop over rows; round counts are fixed and small. Skew from
 mega-degree hubs lands in the keyed aggregation, which map-side partial
 aggregation absorbs (the measured r4 result: salting LOSES to map-side
-combine on decomposable aggs). State read by the next round is
-localCheckpointed so iterative plans do not accrete.
+combine on decomposable aggs).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..runtime.supersteps import supersteps
 
 SCALE = 10**12
 
@@ -80,9 +80,8 @@ def pagerank_fixed_point(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     e = edges.join(deg, "src").persist()
     n_df = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
     base = F.expr(f"{SCALE * 3} div (20 * n)")
-    cur = nodes.crossJoin(F.broadcast(n_df)).select(
-        "id", F.expr(f"{SCALE} div n").alias("score"))
-    for _ in range(5):
+
+    def superstep(cur: DataFrame) -> DataFrame:
         contrib = (
             e.join(cur, e["src"] == cur["id"])
             .select(
@@ -91,7 +90,7 @@ def pagerank_fixed_point(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             )
         )
         sums = contrib.groupBy("id").agg(F.sum("c").alias("csum"))
-        cur = (
+        return (
             nodes.join(sums, "id", "left")
             .crossJoin(F.broadcast(n_df))
             .select(
@@ -100,13 +99,16 @@ def pagerank_fixed_point(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                 .cast("long").alias("score"),
             )
         )
-    return cur
+
+    cur = nodes.crossJoin(F.broadcast(n_df)).select(
+        "id", F.expr(f"{SCALE} div n").alias("score"))
+    return supersteps(cur, superstep, 5, e)[0]
 
 
 def bfs_hop_distance(
     edges: DataFrame,
     sources: DataFrame,
-    max_hops: int = 6,
+    max_hops: int,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance from ANY source node.
 
@@ -206,7 +208,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 def sssp_weighted(
     edges: DataFrame,
     sources: DataFrame,
-    rounds: int = 6,
+    rounds: int,
 ) -> DataFrame:
     """Bounded-horizon weighted single-source shortest paths — the
     general form of ``bfs_hop_distance`` (Bellman–Ford 1958 with
@@ -232,36 +234,34 @@ def sssp_weighted(
     distance, and a winning candidate marks the node as improved. The
     MIN is decomposable, so map-side partials absorb hub skew (the
     measured r4 rule), and the relaxation needs no join against dist.
-    The result is localCheckpointed per round — an iterative plan
-    otherwise accretes a chain ``rounds`` deep and re-executes every
-    prior round at each action — and its improved rows are the next
-    frontier. Vote-to-halt is one bounded isEmpty scalar. The MIN also
-    collapses duplicate seed ids to one row.
+    The round state is that tagged (id, dist, new) table, the seeds all
+    new; its improved rows are the next frontier, and vote-to-halt is one
+    bounded isEmpty scalar on them. The MIN also collapses duplicate seed
+    ids to one row.
     """
-    dist = sources.select(
-        F.col("id"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(rounds):
-        reached = edges.join(frontier, edges["src"] == frontier["id"]).select(
+
+    def relax(best: DataFrame) -> DataFrame:
+        front = best.where(F.col("new") == 1).select("id", "dist")
+        reached = edges.join(front, edges["src"] == front["id"]).select(
             F.col("dst").alias("id"),
             (F.col("dist") + F.col("w").cast("long")).alias("dist"),
             F.lit(1).alias("new"),
         )
-        best = (
-            dist.select("id", "dist", F.lit(0).alias("new"))
+        return (
+            best.select("id", "dist", F.lit(0).alias("new"))
             .unionByName(reached)
             .groupBy("id")
             .agg(F.min(F.struct("dist", "new")).alias("b"))
             .select("id", F.col("b.dist").alias("dist"),
                     F.col("b.new").alias("new"))
-            .localCheckpoint(eager=True)
         )
-        dist = best.select("id", "dist")
-        frontier = best.where(F.col("new") == 1).select("id", "dist")
-        if frontier.isEmpty():
-            break
-    return dist
+
+    seeds = sources.select(
+        F.col("id"), F.lit(0).cast("long").alias("dist"), F.lit(1).alias("new"))
+    best, _ = supersteps(
+        seeds, relax, rounds,
+        halt=lambda _, b: b.where(F.col("new") == 1).isEmpty())
+    return best.select("id", "dist")
 
 
 def label_propagation(edges: DataFrame) -> DataFrame:
@@ -284,33 +284,27 @@ def label_propagation(edges: DataFrame) -> DataFrame:
     Scale posture (10^12 edges): per round ONE edges⋈labels hash join
     (src-keyed), ONE decomposable (dst, label) count (map-side partials
     absorb hub skew), ONE min(struct) argmax groupBy — the 2-shuffle
-    Pregel superstep, same as pagerank. Labels are localCheckpointed per
-    round (plan-accretion lesson); no collect anywhere. The undirected
-    edge pin is released before returning: the result reads only the
-    last checkpoint.
+    Pregel superstep, same as pagerank. No collect anywhere.
     """
     ue = _undirected(edges).persist()
-    labels = (
-        ue.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(4):
+
+    def adopt(labels: DataFrame) -> DataFrame:
         nbr = ue.join(labels, ue["src"] == labels["id"]).select(
             F.col("dst").alias("nid"), "label"
         )
         cnt = nbr.groupBy("nid", "label").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
-        labels = (
+        return (
             cnt.groupBy("nid")
             .agg(F.min(F.struct((-F.col("c")).alias("negc"),
                                 F.col("label").alias("l"))).alias("p"))
             .select(F.col("nid").alias("id"), F.col("p.l").alias("label"))
-            .localCheckpoint(eager=True)
         )
-    ue.unpersist()
-    return labels
+
+    labels = ue.select(F.col("src").alias("id")).distinct() \
+        .withColumn("label", F.col("id"))
+    return supersteps(labels, adopt, 4, ue)[0]
 
 
 def hits_fixed_point(edges: DataFrame) -> DataFrame:
@@ -335,50 +329,41 @@ def hits_fixed_point(edges: DataFrame) -> DataFrame:
     current score vector + ONE decomposable keyed SUM (map-side partials
     absorb hub skew) + a 1-row max broadcast via crossJoin (the freq.py
     one-row-total idiom, no driver round-trip). The 2-shuffle Pregel
-    superstep, twice per iteration.
+    superstep, twice per iteration: each ``supersteps`` round is one
+    half-round.
     """
     e = edges.select("src", "dst").persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .persist()
-    )
 
-    def half_round(score: DataFrame, by: str, to: str, name: str):
-        """Sum ``score`` along edges from e[by] into e[to], then
-        L∞-normalize to 10^6 as column ``name``."""
+    def half_round(score: DataFrame) -> DataFrame:
+        """Sum ``h`` along src→dst into ``a``, or ``a`` along dst→src into
+        ``h``, L∞-normalized to 10^6. The ``supersteps`` checkpoint of each
+        half-round is LOAD-BEARING: the L∞ max's broadcast subquery
+        duplicates the un-materialized sums, a doubling that nests across
+        half-rounds without it (r6: hits 1.9 s → 5.4 s at sf0.1)."""
+        by, to, name = (("src", "dst", "a") if "h" in score.columns
+                        else ("dst", "src", "h"))
         sums = (
             e.join(score, e[by] == score["id"])
             .groupBy(F.col(to).alias("id"))
             .agg(F.sum(score.columns[1]).cast("long").alias("raw"))
         )
         m = sums.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
-        # the per-half-round eager checkpoint is LOAD-BEARING (r6,
-        # measured): the L∞ max rides a broadcast scalar subquery whose
-        # subtree duplicates the un-materialized sums — dropping this
-        # checkpoint nests that doubling across half-rounds (4× the edge
-        # join per iteration, hits 1.9 s → 5.4 s at sf0.1)
         return sums.crossJoin(F.broadcast(m)).select(
             "id", F.expr("(raw * 1000000) div m").alias(name)
-        ).localCheckpoint(eager=True)
+        )
 
-    # Sparse score vectors (r6, guide §2.4): a score table only needs rows
-    # for nodes that CAN be nonzero — {indeg>0} for a, {outdeg>0} for h.
-    # A zero-score row cannot move the L∞ max (scores are ≥ 0; the
-    # empty-relation case is covered by greatest(max, 1) since max(∅) is
-    # NULL and greatest skips NULLs), contributes nothing through the edge
-    # join, and is re-materialized as 0 by the final left-join coalesce —
-    # so the per-half-round `nodes ⋈ sums` full-coverage join (2 joins per
-    # iteration, 8 for the default 4) is dropped with bit-identical output.
-    h = nodes.withColumn("h", F.lit(1).cast("long"))
-    for _ in range(4):
-        a = half_round(h, "src", "dst", "a")
-        h = half_round(a, "dst", "src", "h")
-    e.unpersist()
+    # Sparse score vectors (r6): a score table only has rows for nodes that
+    # CAN be nonzero — {outdeg>0} for h, {indeg>0} for a. A missing row
+    # cannot move the L∞ max (scores are ≥ 0, and greatest(max, 1) skips
+    # the NULL max of an empty table), adds nothing through the edge join,
+    # and reads as 0 in the final full-join coalesce, which covers every
+    # node. 4 rounds = 8 half-rounds, ending on a and on h.
+    h = e.select(F.col("src").alias("id")).distinct() \
+        .withColumn("h", F.lit(1).cast("long"))
+    a = supersteps(h, half_round, 7)[0]
+    h = supersteps(a, half_round, 1, e)[0]
     return (
-        nodes.join(h, "id", "left")
-        .join(a, "id", "left")
+        h.join(a, "id", "full")
         .select(
             "id",
             F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub"),
@@ -387,7 +372,7 @@ def hits_fixed_point(edges: DataFrame) -> DataFrame:
     )
 
 
-def kcore_peel(edges: DataFrame, k: int = 3) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int) -> DataFrame:
     """k-core by iterative peeling (Seidman 1983, public) — the maximal
     subgraph where every node keeps ≥ k neighbors INSIDE the subgraph:
     the density measure behind spam-farm cores and community nuclei
@@ -407,16 +392,13 @@ def kcore_peel(edges: DataFrame, k: int = 3) -> DataFrame:
 
     Scale posture (10^12 edges): per round TWO alive-set semi-joins on
     the persisted undirected edge list + ONE decomposable src-keyed count
-    — no all-pairs, no collect. The loop state is the survivor table
-    (id, core_deg), localCheckpointed per round (plan-accretion lesson),
-    so the last round's table IS the output and the edge pin is released
-    before returning.
+    — no all-pairs, no collect. The round state is the survivor table
+    (id, core_deg), so the last round's table IS the output.
     """
     ue = _undirected(edges).persist()
-    alive = ue.select(F.col("src").alias("id")).distinct() \
-        .localCheckpoint(eager=True)
-    for _ in range(6):
-        alive = (
+
+    def peel(alive: DataFrame) -> DataFrame:
+        return (
             ue.join(alive.select(F.col("id").alias("src")), "src",
                     "left_semi")
             .join(alive.select(F.col("id").alias("dst")), "dst",
@@ -424,7 +406,7 @@ def kcore_peel(edges: DataFrame, k: int = 3) -> DataFrame:
             .groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
             .where(F.col("core_deg") >= F.lit(k))
-            .localCheckpoint(eager=True)
         )
-    ue.unpersist()
-    return alive
+
+    alive = ue.select(F.col("src").alias("id")).distinct()
+    return supersteps(alive, peel, 6, ue)[0]

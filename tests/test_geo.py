@@ -615,16 +615,15 @@ def test_star_cc_sweep_count_on_snake(spark):
         "id long, nbr_id long",
     )
     # collect_cap=0 forces the DISTRIBUTED contraction (the default would
-    # take the bounded driver union-find fast path on 63 edges)
-    labels, sweeps = vectorize.star_cc_labels(edges, max_sweeps=12,
-                                              collect_cap=0)
+    # take the bounded driver union-find fast path on 63 edges); a cap of
+    # 8 sweeps raises unless it converges within them
+    labels = vectorize.star_cc_labels(edges, max_sweeps=8, collect_cap=0)
     got = {r["id"]: r["label"] for r in labels.collect()}
     assert got == {i: 1 for i in ids}
-    assert sweeps <= 8, sweeps
 
-    # the union-find fast path must produce identical labels
-    fast, fsweeps = vectorize.star_cc_labels(edges, max_sweeps=12)
-    assert fsweeps == 0
+    # the union-find fast path must produce identical labels, and runs no
+    # sweep: with a cap of 0 sweeps the contraction would raise
+    fast = vectorize.star_cc_labels(edges, max_sweeps=0)
     assert {r["id"]: r["label"] for r in fast.collect()} == got
 
 

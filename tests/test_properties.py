@@ -190,7 +190,7 @@ def test_star_cc_random_graphs_match_union_find(spark):
         # cover BOTH physical paths: the distributed star contraction
         # (collect_cap=0) and the bounded driver union-find fast path
         for cap in (0, 300_000):
-            labels, _ = star_cc_labels(df, max_sweeps=20, collect_cap=cap)
+            labels = star_cc_labels(df, max_sweeps=20, collect_cap=cap)
             got = {}
             for r in labels.collect():
                 got.setdefault(r["label"], set()).add(r["id"])
