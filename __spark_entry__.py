@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from insights_spark.queries import REGISTRY, Builder  # noqa: E402
 from insights_spark.queries._fixtures import _COUNTRIES, _points  # noqa: E402,F401
+from insights_spark.session import release_pins  # noqa: E402
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -53,26 +54,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _cold(fn: Builder) -> Builder:
-    """Bench-isolation guard (r6): drop the session's SQL cache before
-    building a registered query.
+    """Release the engine's pins before building a registered query.
 
-    Several operators persist() an intermediate that feeds multiple
-    branches of ONE execution (legitimate plan-shape: the subtree would
-    otherwise compute once per consumer). But Spark's CacheManager
-    substitutes cached plans by CANONICAL-PLAN equality, so a harness
-    that times the same query function repeatedly (bench.py min-of-N) —
-    or two queries sharing a subtree (clean_corpus inside
-    prepare_corpus) — would silently serve later invocations from the
-    previous invocation's cache, and the recorded minimum would time a
-    cache hit instead of the query (measured: triangles 2.3 s cold vs
-    0.8 s on the second build of the identical plan). Clearing the SQL
-    cache at build time guarantees every invocation computes from the
-    parquet inputs; intra-query persists still work (they are registered
-    after the clear, during this invocation's own build/execution)."""
+    Spark's CacheManager substitutes cached plans by canonical-plan
+    equality, so a harness that builds the same query repeatedly (bench.py
+    min-of-N), or two queries that share a subtree (clean_corpus inside
+    prepare_corpus), would otherwise time a cache hit on the previous
+    build's pins (triangles: 2.3 s cold vs 0.8 s). Frames the caller
+    persisted are not touched."""
 
     @functools.wraps(fn)
     def _wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.catalog.clearCache()
+        release_pins()
         return fn(spark, sf_dir)
 
     return _wrapped

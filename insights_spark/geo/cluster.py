@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import cells
 from .vectorize import star_cc_labels
 
@@ -56,10 +57,10 @@ def cell_dbscan(cell_counts: DataFrame, minpts: int) -> DataFrame:
     """
     # persist the rollup, not just the core slice: the border branch
     # re-reads it, and without the pin the full point→cell pass runs twice
-    cnts = cell_counts.select(
+    cnts = pin(cell_counts.select(
         F.col("cell").cast("long").alias("cell"),
         F.col("n").cast("long").alias("n"),
-    ).persist()
+    ))
     core = cnts.filter(F.col("n") >= F.lit(minpts))
     nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = core.select(
@@ -68,7 +69,7 @@ def cell_dbscan(cell_counts: DataFrame, minpts: int) -> DataFrame:
     core_ids = core.select(F.col("cell").alias("nbr_id"))
     edges = fan.join(core_ids, "nbr_id")  # both endpoints must be core
     labels = star_cc_labels(edges)
-    core_lab = (
+    core_lab = pin(
         core.join(labels, core["cell"] == labels["id"], "left")
         .select(
             core["cell"],
@@ -79,7 +80,6 @@ def cell_dbscan(cell_counts: DataFrame, minpts: int) -> DataFrame:
         )
         # evaluated twice (core output rows + the border attach join);
         # its lineage carries the whole CC read-off — pin it
-        .persist()
     )
     border = (
         cnts.filter(F.col("n") < F.lit(minpts))
@@ -118,13 +118,13 @@ def region_shape(cell_counts: DataFrame) -> DataFrame:
     CC (O(log² n) rounds), one region-keyed rollup. Everything after the
     point→cell rollup is bounded by OCCUPIED CELLS, not points.
     """
-    cnts = cell_counts.select(
+    cnts = pin(cell_counts.select(
         F.col("cell").cast("long").alias("cell"),
         F.col("n").cast("long").alias("n"),
-    ).persist()
+    ))
     nbrs = cells.hex_fan(F.col("cell"), cells.hex_ring(1))
     fan = cnts.select(F.col("cell").alias("id"), F.explode(nbrs).alias("nbr_id"))
-    edges = fan.join(cnts.select(F.col("cell").alias("nbr_id")), "nbr_id").persist()
+    edges = pin(fan.join(cnts.select(F.col("cell").alias("nbr_id")), "nbr_id"))
     # occupied-neighbor degree per cell (0 for isolated cells, via left join)
     deg = edges.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     labels = star_cc_labels(edges)

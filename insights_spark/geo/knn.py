@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import pin
 from . import cells
 
 
@@ -88,7 +89,7 @@ def _cell_pairs(queries, candidates, res: int, rings: int):
     if self_join:
         # self-kNN: encode once, persist — the query and candidate branches
         # would otherwise each run the cell UDF over every point
-        q = q.persist()
+        q = pin(q)
         cand_cells = q.withColumn("home_cell", F.col("cell"))
     else:
         cand_cells = candidates.withColumn(
@@ -138,9 +139,9 @@ def _cell_pairs_half(pts, res: int, rings: int):
     (dist2 is a symmetric IEEE expression, bit-equal in either
     orientation).
     """
-    enc = pts.withColumn(
+    enc = pin(pts.withColumn(
         "cell", cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
-    ).persist()
+    ))
     q = enc.select("cell", "id", "lon", "lat")
     pos = [o for o in cells.hex_ring_offsets(rings) if o > 0]
     fan = cells.hex_fan(F.col("cell"), pos)
@@ -370,22 +371,18 @@ def _certified_topk(q, c, k: int, res: int | None, rings: int) -> DataFrame:
     plan, never the answer.
 
     The top-k pass feeds both the certification probe and the certified
-    output, so it is persisted for the duration of the returned plan. The
-    CacheManager holds it until ``unpersist()`` or
-    ``spark.catalog.clearCache()``: the ContextCleaner does not reclaim
-    persisted DataFrames.
+    output, so it is pinned until ``session.release_pins()``.
     """
     self_join = q is c
     if res is None:
         res = auto_cell_res(c, k=k)
     w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
-    first = (
+    first = pin(
         _cell_pairs(q, c, res, rings)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("id", "neighbor_id", "dist2",
                 F.col("rank").cast("int").alias("rank"))
-        .persist()
     )
     cert2 = F.lit(cert_radius_deg(res, rings) ** 2)
     ok_ids = (
@@ -559,7 +556,7 @@ def nn_distance_hist(points: DataFrame) -> DataFrame:
         )
         return pd.Series(ids.tolist()).where(mask, None)
 
-    cand = pts.withColumn("_cells", all_cells("lon", "lat")).persist()
+    cand = pin(pts.withColumn("_cells", all_cells("lon", "lat")))
 
     remaining = cand.select("id", "lon", "lat", "_cells")
     certified_parts = []

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import cells
 from .knn import certified_res, dist2
 
@@ -51,7 +52,7 @@ def st_within(
     within_distance."""
     res = certified_res(radius_deg, rings)
     tau = int(tau_seconds)
-    base = points.select(
+    base = pin(points.select(
         F.col(id_col).alias("id"),
         "lon",
         "lat",
@@ -63,7 +64,7 @@ def st_within(
         cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")),
     ).withColumn(
         "_chunk", F.expr(f"_ep DIV {tau}")
-    ).persist()  # encoded once; feeds both join sides
+    ))  # encoded once; feeds both join sides
 
     q = base.select(
         F.col("home_cell").alias("cell"), "_chunk", "id", "lon", "lat", "_ep"

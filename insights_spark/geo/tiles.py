@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 MAX_MERC_LAT = 85.05112878
 
 
@@ -67,9 +69,9 @@ def tile_pyramid(df: DataFrame, zooms: list[int]) -> DataFrame:
     one instead of rescanning the fact table (log-depth rollup, the Spark
     answer to the reference's per-period loop pattern, hashtags.py:162-349).
 
-    The base rollup is pinned (MEMORY_AND_DISK): without it Spark's
-    union recomputes the fact scan once per level — AQE exchange reuse does
-    NOT kick in here because each level's subtree canonicalizes differently.
+    The base rollup is pinned: without it Spark's union recomputes the
+    fact scan once per level — AQE exchange reuse does NOT kick in here
+    because each level's subtree canonicalizes differently.
     The base rollup is tiny (≤4^base_z tile rows), so persisting is safe at
     any scale; on a real pipeline the base level is written to a table and
     coarser levels derive from the read-back.
@@ -78,9 +80,7 @@ def tile_pyramid(df: DataFrame, zooms: list[int]) -> DataFrame:
     base_z = zooms[0]
     base = density_rollup(df, base_z)
     if len(zooms) > 1:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+        base = pin(base)
     out = base
     prev, prev_z = base, base_z
     for z in zooms[1:]:

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..runtime.supersteps import supersteps
-from ..session import local_df
+from ..session import local_df, pin
 
 _PI = 3.141592653589793
 
@@ -235,14 +235,13 @@ def tile_regions(
     any topology, driver union-find when the edge list is small).
     Isolated hot tiles appear in no edge and are their own region.
 
-    The ``hot``/``edges`` persists stay in the CacheManager until the
-    caller runs ``unpersist()`` or ``spark.catalog.clearCache()``: the
-    ContextCleaner does not reclaim persisted DataFrames.
+    ``hot`` is pinned (it feeds the edges and the label join) until
+    ``session.release_pins()``. ``edges`` is not: ``star_cc_labels`` reads
+    it once, into its eager checkpoint.
     """
-    hot = (
+    hot = pin(
         tiles.filter(F.col("density") >= F.lit(min_density))
         .select("z", "x", "y", "density", tile_id().alias("id"))
-        .persist()
     )
 
     # Directed 4-adjacency edges (each unordered pair appears both ways;
@@ -264,9 +263,7 @@ def tile_regions(
             hot.select("z", "x", "y", F.col("id").alias("nbr_id")), ["z", "x", "y"]
         )
         .select("id", "nbr_id")
-        .persist()
     )
-    edges.count()
 
     labels = star_cc_labels(edges)
     return (

@@ -60,6 +60,7 @@ from pyspark.sql.window import Window
 
 from ..runtime.checkpoint import CheckpointStore
 from ..runtime.lineage import LineageLog
+from ..session import pin, release_pins
 from ..text.clean import train_test_split
 from ..text.dedup import normalized
 from ..text.index import inverted_index
@@ -96,157 +97,159 @@ def run(
     resume: bool = False,
 ) -> dict[str, str]:
     """Run the corpus pipeline; returns {table_name: path}."""
-    ckpt = CheckpointStore(spark, os.path.join(out_dir, "_checkpoints"))
-    lin = LineageLog(spark, os.path.join(out_dir, "_lineage"))
-    paths = {
-        "corpus": os.path.join(out_dir, "corpus"),
-        "dedup_index": os.path.join(out_dir, "dedup_index"),
-        "postings": os.path.join(out_dir, "postings"),
-        "accounting": os.path.join(out_dir, "accounting"),
-        "accounting_batches": os.path.join(out_dir, "accounting_batches"),
-    }
+    try:
+        ckpt = CheckpointStore(spark, os.path.join(out_dir, "_checkpoints"))
+        lin = LineageLog(spark, os.path.join(out_dir, "_lineage"))
+        paths = {
+            "corpus": os.path.join(out_dir, "corpus"),
+            "dedup_index": os.path.join(out_dir, "dedup_index"),
+            "postings": os.path.join(out_dir, "postings"),
+            "accounting": os.path.join(out_dir, "accounting"),
+            "accounting_batches": os.path.join(out_dir, "accounting_batches"),
+        }
 
-    last = ckpt.last_sequence(PIPELINE, "corpus") if resume else None
-    batch = docs if last is None else docs.filter(F.col("doc_id") > last)
-    # deterministic per-attempt batch id: a crashed attempt's retry reads
-    # the same (uncommitted) checkpoint, recomputes the same batch, and
-    # OVERWRITES the same batch partitions — appends cannot double up
-    bid = "full" if last is None else f"b{last}"
+        last = ckpt.last_sequence(PIPELINE, "corpus") if resume else None
+        batch = docs if last is None else docs.filter(F.col("doc_id") > last)
+        # deterministic per-attempt batch id: a crashed attempt's retry reads
+        # the same (uncommitted) checkpoint, recomputes the same batch, and
+        # OVERWRITES the same batch partitions — appends cannot double up
+        bid = "full" if last is None else f"b{last}"
 
-    # 1. stamp (map-only)
-    stamped = _stamp(batch).persist()
+        # 1. stamp (map-only)
+        stamped = pin(_stamp(batch))
 
-    # 2. dedup: in-batch representative, then anti-join the admitted index
-    in_batch = stamped.withColumn(
-        "_rn",
-        F.row_number().over(
-            Window.partitionBy("_norm_hash").orderBy(F.asc("doc_id"))
-        ),
-    ).filter(F.col("_rn") == 1).drop("_rn")
-    if os.path.isdir(paths["dedup_index"]):
-        # exclude THIS attempt's own batch partition: if a prior crashed
-        # attempt already wrote the index rows, the anti-join must not see
-        # them, or the retry would admit nothing and overwrite the corpus
-        # batch with an empty set (silent data loss on replay)
-        seen = (
-            spark.read.parquet(paths["dedup_index"])
-            .filter(F.col("batch") != bid)
-            .select("_norm_hash")
-        )
-        admitted = in_batch.join(seen, "_norm_hash", "left_anti")
-    else:
-        admitted = in_batch
-    # localCheckpoint, NOT persist: stage 3 APPENDS to dedup_index, and a
-    # parquet write refreshes the path's FileIndex and invalidates every
-    # cached plan that reads it — a merely-persisted `admitted` would
-    # silently RE-EVALUATE against the index that now contains its own
-    # hashes and come back empty. Checkpointing severs the lineage to the
-    # index files before the self-referential write.
-    admitted = admitted.localCheckpoint()
-    lin.record("dedup", stamped, admitted)
-
-    # 3. index + corpus, batch-scoped OVERWRITE (idempotent on replay).
-    # Index FIRST: a crash between the two writes then leaves index entries
-    # without corpus rows — the safe direction (the replay's anti-join
-    # excludes its own batch partition, recomputes the same admitted set
-    # and overwrites both), never committed corpus rows missing from the
-    # index. Writes are skipped for an empty admitted set so a post-success
-    # replay (empty batch) cannot leave parquet-less partition dirs behind.
-    out_cols = [c for c in admitted.columns if c != "_norm_hash"]
-    if not admitted.isEmpty():
-        admitted.select("_norm_hash").distinct().write.mode("overwrite").parquet(
-            os.path.join(paths["dedup_index"], f"batch={bid}")
-        )
-        _crashpoint("between_index_and_corpus")
-        admitted.select(*out_cols).write.mode("overwrite").partitionBy(
-            "split"
-        ).parquet(os.path.join(paths["corpus"], f"batch={bid}"))
-
-    # 4. postings: merge only touched term-hash buckets
-    new_post = inverted_index(
-        admitted, min_df=1, max_df=1 << 30, ngram=2
-    ).withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(POSTING_BUCKETS)))
-    if os.path.isdir(paths["postings"]):
-        touched = [r["bucket"] for r in new_post.select("bucket").distinct().collect()]
-        old = spark.read.parquet(paths["postings"]).filter(
-            F.col("bucket").isin(touched)
-        )
-        merged = (
-            old.unionByName(new_post)
-            # re-sort NUMERICALLY: csv ids are strings, and lexicographic
-            # order ('10' < '9') would corrupt the ascending-id contract
-            .withColumn(
-                "_ids",
-                F.transform(F.split("posting_csv", ","),
-                            lambda x: x.cast("long")),
+        # 2. dedup: in-batch representative, then anti-join the admitted index
+        in_batch = stamped.withColumn(
+            "_rn",
+            F.row_number().over(
+                Window.partitionBy("_norm_hash").orderBy(F.asc("doc_id"))
+            ),
+        ).filter(F.col("_rn") == 1).drop("_rn")
+        if os.path.isdir(paths["dedup_index"]):
+            # exclude THIS attempt's own batch partition: if a prior crashed
+            # attempt already wrote the index rows, the anti-join must not see
+            # them, or the retry would admit nothing and overwrite the corpus
+            # batch with an empty set (silent data loss on replay)
+            seen = (
+                spark.read.parquet(paths["dedup_index"])
+                .filter(F.col("batch") != bid)
+                .select("_norm_hash")
             )
-            .groupBy("bucket", "term")
-            # array_distinct: a replayed crashed attempt re-merges the same
-            # batch postings; de-duplicating ids makes that merge idempotent
-            .agg(F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("_ids")))
-            ).alias("_all"))
-            .select(
-                "bucket", "term",
-                F.size("_all").cast("bigint").alias("df"),
-                F.array_join(F.col("_all").cast("array<string>"), ",")
-                .alias("posting_csv"),
+            admitted = in_batch.join(seen, "_norm_hash", "left_anti")
+        else:
+            admitted = in_batch
+        # localCheckpoint, NOT persist: stage 3 APPENDS to dedup_index, and a
+        # parquet write refreshes the path's FileIndex and invalidates every
+        # cached plan that reads it — a merely-persisted `admitted` would
+        # silently RE-EVALUATE against the index that now contains its own
+        # hashes and come back empty. Checkpointing severs the lineage to the
+        # index files before the self-referential write.
+        admitted = admitted.localCheckpoint()
+        lin.record("dedup", stamped, admitted)
+
+        # 3. index + corpus, batch-scoped OVERWRITE (idempotent on replay).
+        # Index FIRST: a crash between the two writes then leaves index entries
+        # without corpus rows — the safe direction (the replay's anti-join
+        # excludes its own batch partition, recomputes the same admitted set
+        # and overwrites both), never committed corpus rows missing from the
+        # index. Writes are skipped for an empty admitted set so a post-success
+        # replay (empty batch) cannot leave parquet-less partition dirs behind.
+        out_cols = [c for c in admitted.columns if c != "_norm_hash"]
+        if not admitted.isEmpty():
+            admitted.select("_norm_hash").distinct().write.mode("overwrite").parquet(
+                os.path.join(paths["dedup_index"], f"batch={bid}")
             )
-        )
-        # tmp-and-swap per touched bucket: merged READS the live postings,
-        # so overwriting them in the same job would truncate its own input
-        # (the self-overwrite hazard ParquetSinks._publish guards against too)
-        import shutil
-        import uuid
+            _crashpoint("between_index_and_corpus")
+            admitted.select(*out_cols).write.mode("overwrite").partitionBy(
+                "split"
+            ).parquet(os.path.join(paths["corpus"], f"batch={bid}"))
 
-        tmp = f"{paths['postings']}__merge_{uuid.uuid4().hex[:8]}"
-        merged.select("term", "df", "posting_csv", "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(tmp)
-        for b in touched:
-            src = os.path.join(tmp, f"bucket={b}")
-            dst = os.path.join(paths["postings"], f"bucket={b}")
-            if os.path.isdir(src):
-                shutil.rmtree(dst, ignore_errors=True)
-                os.rename(src, dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-    else:
-        new_post.select("term", "df", "posting_csv", "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(paths["postings"])
-    lin.record("postings", admitted, new_post)
+        # 4. postings: merge only touched term-hash buckets
+        new_post = inverted_index(
+            admitted, min_df=1, max_df=1 << 30, ngram=2
+        ).withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(POSTING_BUCKETS)))
+        if os.path.isdir(paths["postings"]):
+            touched = [r["bucket"] for r in new_post.select("bucket").distinct().collect()]
+            old = spark.read.parquet(paths["postings"]).filter(
+                F.col("bucket").isin(touched)
+            )
+            merged = (
+                old.unionByName(new_post)
+                # re-sort NUMERICALLY: csv ids are strings, and lexicographic
+                # order ('10' < '9') would corrupt the ascending-id contract
+                .withColumn(
+                    "_ids",
+                    F.transform(F.split("posting_csv", ","),
+                                lambda x: x.cast("long")),
+                )
+                .groupBy("bucket", "term")
+                # array_distinct: a replayed crashed attempt re-merges the same
+                # batch postings; de-duplicating ids makes that merge idempotent
+                .agg(F.array_sort(
+                    F.array_distinct(F.flatten(F.collect_list("_ids")))
+                ).alias("_all"))
+                .select(
+                    "bucket", "term",
+                    F.size("_all").cast("bigint").alias("df"),
+                    F.array_join(F.col("_all").cast("array<string>"), ",")
+                    .alias("posting_csv"),
+                )
+            )
+            # tmp-and-swap per touched bucket: merged READS the live postings,
+            # so overwriting them in the same job would truncate its own input
+            # (the self-overwrite hazard ParquetSinks._publish guards against too)
+            import shutil
+            import uuid
 
-    # 5. accounting — idempotent by construction (r5, no checkpoint guard
-    # needed): per-batch counters OVERWRITE their own batch partition (a
-    # replayed attempt rewrites the same rows), then the global rollup is
-    # REGENERATED from the batch partitions. The rollup reads
-    # accounting_batches, never its own output, so the overwrite has no
-    # self-read hazard, and a crash at ANY point converges on replay —
-    # there is no read-modify-write merge left to double-count. The
-    # regeneration scan is bounded by #batches × #splits × #langs counter
-    # rows, trivial at any corpus scale.
-    seq_row = batch.agg(F.max("doc_id").alias("m")).first()
-    seq = int(seq_row["m"]) if seq_row and seq_row["m"] is not None else None
-    if seq is not None:
-        acct = admitted.groupBy("split", "lang_pred").agg(
-            F.count(F.lit(1)).cast("bigint").alias("docs"),
-            F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        )
-        acct.write.mode("overwrite").parquet(
-            os.path.join(paths["accounting_batches"], f"batch={bid}"))
-        _crashpoint("between_accounting_batch_and_rollup")
-        rolled = (
-            spark.read.parquet(paths["accounting_batches"])
-            .groupBy("split", "lang_pred")
-            .agg(F.sum("docs").cast("bigint").alias("docs"),
-                 F.sum("total_tokens").cast("bigint").alias("total_tokens"))
-        )
-        rolled.write.mode("overwrite").parquet(paths["accounting"])
+            tmp = f"{paths['postings']}__merge_{uuid.uuid4().hex[:8]}"
+            merged.select("term", "df", "posting_csv", "bucket").write.mode(
+                "overwrite"
+            ).partitionBy("bucket").parquet(tmp)
+            for b in touched:
+                src = os.path.join(tmp, f"bucket={b}")
+                dst = os.path.join(paths["postings"], f"bucket={b}")
+                if os.path.isdir(src):
+                    shutil.rmtree(dst, ignore_errors=True)
+                    os.rename(src, dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            new_post.select("term", "df", "posting_csv", "bucket").write.mode(
+                "overwrite"
+            ).partitionBy("bucket").parquet(paths["postings"])
+        lin.record("postings", admitted, new_post)
 
-    if seq is not None:
-        ckpt.commit(PIPELINE, "corpus", seq)
-    stamped.unpersist()
-    return paths
+        # 5. accounting — idempotent by construction (r5, no checkpoint guard
+        # needed): per-batch counters OVERWRITE their own batch partition (a
+        # replayed attempt rewrites the same rows), then the global rollup is
+        # REGENERATED from the batch partitions. The rollup reads
+        # accounting_batches, never its own output, so the overwrite has no
+        # self-read hazard, and a crash at ANY point converges on replay —
+        # there is no read-modify-write merge left to double-count. The
+        # regeneration scan is bounded by #batches × #splits × #langs counter
+        # rows, trivial at any corpus scale.
+        seq_row = batch.agg(F.max("doc_id").alias("m")).first()
+        seq = int(seq_row["m"]) if seq_row and seq_row["m"] is not None else None
+        if seq is not None:
+            acct = admitted.groupBy("split", "lang_pred").agg(
+                F.count(F.lit(1)).cast("bigint").alias("docs"),
+                F.sum("n_tokens").cast("bigint").alias("total_tokens"),
+            )
+            acct.write.mode("overwrite").parquet(
+                os.path.join(paths["accounting_batches"], f"batch={bid}"))
+            _crashpoint("between_accounting_batch_and_rollup")
+            rolled = (
+                spark.read.parquet(paths["accounting_batches"])
+                .groupBy("split", "lang_pred")
+                .agg(F.sum("docs").cast("bigint").alias("docs"),
+                     F.sum("total_tokens").cast("bigint").alias("total_tokens"))
+            )
+            rolled.write.mode("overwrite").parquet(paths["accounting"])
+
+        if seq is not None:
+            ckpt.commit(PIPELINE, "corpus", seq)
+        return paths
+    finally:
+        release_pins()
 
 
 def main() -> None:  # pragma: no cover — exercised via spark-submit

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .latest import latest_version
 
 _PROPAGATED = ("lat", "lon", "country")
@@ -109,8 +110,6 @@ def propagate_locations(elements: DataFrame) -> DataFrame:
     input and intermediate is the local analogue of the reference's
     load-then-UPDATE staging (element_history lands first, propagation
     reads it back)."""
-    from pyspark import StorageLevel
-
-    elements = elements.persist(StorageLevel.MEMORY_AND_DISK)
-    mid = propagate_way_locations(elements).persist(StorageLevel.MEMORY_AND_DISK)
+    elements = pin(elements)
+    mid = pin(propagate_way_locations(elements))
     return propagate_relation_locations(mid)

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..geo.length import way_length_m
+from ..session import pin
 from .tags import tag_exists, tag_get
 
 # exact 7-value place list (reference changesetStats.py:87-92)
@@ -223,11 +224,11 @@ def winsorized_stats(
         .where(F.col("_v").isNotNull())
     )
     w = Window.partitionBy("grp").orderBy("_v")
-    ranked = v.select(
+    ranked = pin(v.select(
         "grp", "_v",
         F.row_number().over(w).alias("_rn"),
         F.count(F.lit(1)).over(Window.partitionBy("grp")).alias("_n"),
-    ).persist()
+    ))
     k_lo = F.greatest(F.lit(1), F.ceil(F.col("_n") * 5 / 100))
     k_hi = F.greatest(F.lit(1), F.ceil(F.col("_n") * 95 / 100))
     bounds = (

@@ -19,7 +19,7 @@ from insights_spark.queries._fixtures import (
     _s2_cells_sql,
     _t,
 )
-from insights_spark.session import local_df
+from insights_spark.session import local_df, pin
 
 
 _CUST_PTS = f"SELECT c_custkey, {_POINTS_SQL.format(k='c_custkey')} FROM customer"
@@ -262,24 +262,16 @@ def _q_tile_pyramid(spark, sf_dir):
     return tiles.tile_pyramid(pts, [6, 4])
 
 
-_RASTER_MEMO: dict = {}
-
-
 def _z5_raster_thr(spark, sf_dir):
-    """Shared persisted z5 density raster + avg-density threshold for the
-    raster queries (tile_vectorize / tile_regions / tile_regions_star): ONE
-    rollup per (session, sf_dir) instead of one per query (r3 verdict #7). The `.first()`
-    is a bounded 1-row aggregate over the ≤4^z-row persisted raster."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _RASTER_MEMO.get(key)
-    if hit is None:
-        from insights_spark.geo import tiles
+    """The z5 density raster of the raster queries (tile_vectorize /
+    tile_regions / tile_regions_star), pinned for this build, and its
+    avg-density threshold. The `.first()` is a bounded 1-row aggregate over
+    the ≤4^z-row raster, which the query then reads from the pin."""
+    from insights_spark.geo import tiles
 
-        pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-        raster = tiles.density_rollup(pts, 5).persist()
-        thr = raster.agg(F.avg("density")).first()[0]
-        _RASTER_MEMO[key] = hit = (raster, thr)
-    return hit
+    pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
+    raster = pin(tiles.density_rollup(pts, 5))
+    return raster, raster.agg(F.avg("density")).first()[0]
 
 
 # inverse web-mercator lat of tile-fraction {yf}, sinh in exp-form —

@@ -10,7 +10,7 @@ from pyspark.sql.window import Window
 from insights_spark import synth as _synth
 from insights_spark.queries import query
 from insights_spark.queries._fixtures import _t
-from insights_spark.session import local_df
+from insights_spark.session import local_df, pin
 from insights_spark.text.pii import EMAIL_RE, IPV4_RE, PHONE_RE
 
 
@@ -1179,10 +1179,10 @@ def _q_cos_near_dups_lsh(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     par = spark.sparkContext.defaultParallelism
-    cand = embedding_lsh_candidates(emb, n_bits=36, bands=6).persist()
-    pairs = embedding_near_dups_lsh(
+    cand = pin(embedding_lsh_candidates(emb, n_bits=36, bands=6))
+    pairs = pin(embedding_near_dups_lsh(
         emb, n_bits=36, bands=6, candidates=cand
-    ).persist()
+    ))
 
     m_mod = 1 << 20
     n_row = emb.agg(F.count(F.lit(1)).alias("_n"))
@@ -2349,10 +2349,9 @@ def _q_minhash_vs_index(spark, sf_dir):
     # persisted (r6): each side feeds BOTH the band explode and the
     # signature re-attach join inside minhash_vs_index — without the pin
     # the signature UDF pass would run twice per side
-    sigs = (
+    sigs = pin(
         _t(spark, sf_dir, "documents")
         .select("doc_id", minhash_signature_np()(F.col("text")).alias("sig"))
-        .persist()
     )
     batch = sigs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
     index = sigs.filter(F.pmod(F.col("doc_id"), F.lit(3)) != 0)

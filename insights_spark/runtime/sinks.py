@@ -105,11 +105,11 @@ class ParquetSinks:
         are already present, then append (no table rewrite). Exactly the
         reference's ON CONFLICT DO NOTHING cost profile.
 
-        Returns the actually-appended rows (persisted): downstream
-        incremental stages (stats repair, tile merge) consume exactly this
-        delta, so the pipeline's per-batch work stays O(batch) instead of
-        O(history). The caller owns the unpersist once its consumers have
-        run.
+        Returns the actually-appended rows as an eager localCheckpoint:
+        downstream incremental stages (stats repair, tile merge) consume
+        exactly this delta, so the pipeline's per-batch work stays
+        O(batch) instead of O(history). A checkpoint has no CacheManager
+        entry, so there is nothing for the caller to unpersist.
 
         `cluster_by`/`sort_by` implement the physical layout (X3) HERE,
         after the dedup shuffle: clustering before the call is futile

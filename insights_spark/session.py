@@ -24,6 +24,7 @@ workers; and the workers get the package's parent directory on their
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
@@ -135,3 +136,26 @@ def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
         [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
+
+
+_PINS: list[DataFrame] = []
+_PINS_LOCK = threading.Lock()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df.persist()``, recorded for :func:`release_pins`: the package's one
+    persist. The ContextCleaner never reclaims a persisted plan."""
+    df.persist()
+    with _PINS_LOCK:
+        _PINS.append(df)
+    return df
+
+
+def release_pins() -> None:
+    """Unpersist every frame :func:`pin` recorded; frames persisted
+    elsewhere are not touched."""
+    with _PINS_LOCK:
+        pins = _PINS[:]
+        _PINS.clear()
+    for df in pins:
+        df.unpersist()

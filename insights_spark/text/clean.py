@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import local_df, pin
 from .dedup import exact_dedup, ngram_jaccard_pairs
 from .quality import lang_id, quality_scores
 
@@ -34,11 +34,11 @@ def clean_corpus(docs: DataFrame) -> DataFrame:
     # persisted (r6, interleaved A/B ~8%): the gate feeds both the
     # exact-dedup branch and the survivor semi-join — without the pin the
     # quality+lang scoring chain runs twice
-    gated = scored.filter(
+    gated = pin(scored.filter(
         (F.col("n_tokens") >= F.lit(5))
         & (F.col("uniq_token_ratio") >= F.lit(0.2))
         & F.col("lang_pred").isin("en", "de", "fr")
-    ).persist()
+    ))
     reps = exact_dedup(gated).select("doc_id")
     # NOT persisted (r6 cold-cache A/B): surv feeds the gram pass and the
     # final anti-join, but both re-derive cheaply from the cached gate —

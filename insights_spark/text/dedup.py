@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .quality import tokens
 
 MOD = 1_000_000_007
@@ -111,9 +112,9 @@ def _gram_overlap(
     self-join sides + sizes) and would otherwise re-run the gram kernel
     per branch — locally a persist, at cluster scale a materialized grams
     table. Sizes via F.size (no extra shuffle) in the uncapped path."""
-    ga = df.select(
+    ga = pin(df.select(
         F.col("doc_id").alias("a"), word_ngrams_np()(F.col("text")).alias("_grams")
-    ).persist()
+    ))
     g = ga.select("a", F.explode("_grams").alias("gram"))
     if max_gram_df is not None:
         hot = (
@@ -124,7 +125,7 @@ def _gram_overlap(
         )
         # anti-join against the (tiny) hot-gram set; persisted because the
         # filtered grams feed both self-join sides and the size recount
-        g = g.join(hot, "gram", "left_anti").persist()
+        g = pin(g.join(hot, "gram", "left_anti"))
         sizes = g.groupBy("a").agg(F.count(F.lit(1)).alias("size_a"))
     else:
         sizes = ga.select("a", F.size("_grams").alias("size_a"))
@@ -321,10 +322,9 @@ def minhash_near_dups(df: DataFrame) -> DataFrame:
         grams = [_word_ngrams_py(t, 3) if t is not None else [] for t in texts]
         return pd.DataFrame({"grams": grams, "sig": [_minhash_np(g, a, b) for g in grams]})
 
-    base = (
+    base = pin(
         df.select(F.col("doc_id").alias("_id"), _gs(F.col("text")).alias("_gs"))
         .select("_id", F.col("_gs.grams").alias("_grams"), F.col("_gs.sig").alias("_sig"))
-        .persist()
     )
 
     # empty-gram docs all share the sentinel signature → they'd bucket with
@@ -717,10 +717,10 @@ def prefix_jaccard_pairs(df: DataFrame) -> DataFrame:
     semantics). Verification joins the two bounded gram arrays per
     surviving candidate — never all-pairs.
     """
-    ga = df.select(
+    ga = pin(df.select(
         F.col("doc_id").alias("id"),
         word_ngrams_np()(F.col("text")).alias("_g"),
-    ).where(F.size("_g") > 0).persist()
+    ).where(F.size("_g") > 0))
     g = ga.select("id", F.explode("_g").alias("gram"))
     dfreq = g.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("_df"))
     # global (df, gram) sort order attached in one gram-keyed join, then
@@ -746,12 +746,6 @@ def prefix_jaccard_pairs(df: DataFrame) -> DataFrame:
         .where(F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
-        # pinned-count fan-out (r6, guide §2.5): the candidate pair rows
-        # are byte-tiny, so AQE coalesced the verify stage to a few tasks
-        # — but each pair pays an array_intersect over the full gram
-        # arrays (CPU-dense); a user-specified repartition is exempt from
-        # coalescing and the verify joins stay broadcast map-side
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
     verified = (
         cand.join(ga.select(F.col("id").alias("a"),
@@ -885,7 +879,7 @@ def cdc_containment(df: DataFrame) -> DataFrame:
         .where(F.col("_df") <= F.lit(64))
         .select("chash", "length")
     )
-    ch = ch.join(keep, ["chash", "length"]).persist()
+    ch = pin(ch.join(keep, ["chash", "length"]))
     pairs = (
         ch.select(F.col("doc_id").alias("a"), "chash", "length")
         .join(ch.select(F.col("doc_id").alias("b"), "chash", "length"),

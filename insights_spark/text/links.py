@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..runtime.supersteps import supersteps
+from ..session import pin
 
 SCALE = 10**12
 
@@ -77,7 +78,7 @@ def pagerank_fixed_point(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("outdeg"))
     # persisted: re-read by every superstep's join — without the pin the
     # edge derivation + degree shuffle would re-execute once per superstep
-    e = edges.join(deg, "src").persist()
+    e = pin(edges.join(deg, "src"))
     n_df = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
     base = F.expr(f"{SCALE * 3} div (20 * n)")
 
@@ -164,7 +165,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # single-long order key: (deg, id) — deg ≤ n so deg*2^32 never collides
     okey = (F.col("deg") * F.lit(1 << 32) + F.col("id")).alias("okey")
     keyed = deg.select("id", okey)
-    e = (
+    e = pin(
         ue.join(keyed.withColumnRenamed("id", "a").withColumnRenamed("okey", "ka"), "a")
         .join(keyed.withColumnRenamed("id", "b").withColumnRenamed("okey", "kb"), "b")
         .select(
@@ -177,10 +178,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         # whose different key forces a recompute of the whole
         # symmetrize+degree+orient subtree without the pin. At scale that
         # recompute is two extra scans + three extra shuffles; locally
-        # interleaved A/B measured 2.35 -> 1.69 s. The CacheManager holds
-        # the pin until unpersist() or clearCache(); the ContextCleaner
-        # does not reclaim persisted DataFrames.
-        .persist()
+        # interleaved A/B measured 2.35 -> 1.69 s. The pin is held until
+        # session.release_pins().
     )
     w = (
         e.alias("x")
@@ -286,7 +285,7 @@ def label_propagation(edges: DataFrame) -> DataFrame:
     absorb hub skew), ONE min(struct) argmax groupBy — the 2-shuffle
     Pregel superstep, same as pagerank. No collect anywhere.
     """
-    ue = _undirected(edges).persist()
+    ue = pin(_undirected(edges))
 
     def adopt(labels: DataFrame) -> DataFrame:
         nbr = ue.join(labels, ue["src"] == labels["id"]).select(
@@ -332,7 +331,7 @@ def hits_fixed_point(edges: DataFrame) -> DataFrame:
     superstep, twice per iteration: each ``supersteps`` round is one
     half-round.
     """
-    e = edges.select("src", "dst").persist()
+    e = pin(edges.select("src", "dst"))
 
     def half_round(score: DataFrame) -> DataFrame:
         """Sum ``h`` along src→dst into ``a``, or ``a`` along dst→src into
@@ -395,7 +394,7 @@ def kcore_peel(edges: DataFrame, k: int) -> DataFrame:
     — no all-pairs, no collect. The round state is the survivor table
     (id, core_deg), so the last round's table IS the output.
     """
-    ue = _undirected(edges).persist()
+    ue = pin(_undirected(edges))
 
     def peel(alive: DataFrame) -> DataFrame:
         return (

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import local_df
+from ..session import local_df, pin
 from .dedup import _band_explode, _band_self_join, _bit_band_keys
 
 
@@ -379,10 +379,10 @@ def cosine_topk_bucketed(vectors: DataFrame, nprobe: int = 2) -> DataFrame:
     # (Spark recomputes shared subtrees per branch — the bucket assignment
     # would otherwise run twice over every vector). At cluster scale this is
     # the materialized IVF assignment table an index build writes once.
-    tagged = vectors.select(
+    tagged = pin(vectors.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
         nearest_buckets(F.col("embedding")).alias("probes"),
-    ).persist()
+    ))
     # members: bucket = nearest centroid (probes[0]); queries probe all nprobe
     members = tagged.select(
         F.col("probes")[0].alias("bucket"), F.col("id").alias("mid"), F.col("v").alias("mv")
@@ -556,13 +556,13 @@ def kmeans_lloyd_int(emb: DataFrame) -> DataFrame:
     partials absorb the biggest-cluster skew. The quantized vector table
     is persisted once and reused by all iterations.
     """
-    q = emb.select(
+    q = pin(emb.select(
         F.col("vec_id").alias("id"),
         F.expr(
             "transform(embedding, x -> "
             "CAST(floor(CAST(x AS DOUBLE) * 1024.0) AS BIGINT))"
         ).alias("q"),
-    ).persist()
+    ))
     init = q.orderBy("id").limit(8).collect()     # bounded: k rows
     cents = [(i, list(r["q"])) for i, r in enumerate(init)]
 

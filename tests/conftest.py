@@ -16,6 +16,17 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def cache_empty(spark):
+    """A probe: does Spark's CacheManager hold no cached plan? It has no
+    public view, so the probe needs the classic JVM session and skips the
+    test on any other."""
+    if not hasattr(spark, "_jsparkSession"):
+        pytest.skip("the CacheManager is reachable only from the classic session")
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    return manager.isEmpty
+
+
 @pytest.fixture(scope="session")
 def pages(spark):
     from insights_spark import synth

@@ -164,11 +164,13 @@ spark.stop()
     assert "ROWS 2" in out.stdout
 
 
-def test_pipeline_end_to_end_and_resume(spark, tmp_path):
+def test_pipeline_end_to_end_and_resume(spark, tmp_path, cache_empty):
     out = str(tmp_path / "wh")
     pages = synth.pages_df(spark, n_pages=12)
+    spark.catalog.clearCache()
 
     tables = pipeline.run(spark, pages, out)
+    assert cache_empty(), "the first batch left a pin behind"
     assert set(tables) >= {"changesets", "element_history", "all_changesets_stats",
                            "tile_density", "all_osm_hashtags"}
     cs1 = spark.read.parquet(tables["changesets"]).count()
@@ -178,6 +180,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     # resume with NO new pages → no-op, tables unchanged
     again = pipeline.run(spark, pages, out, resume=True)
     assert again == {}
+    assert cache_empty(), "the empty resume left a pin behind"
     assert spark.read.parquet(tables["changesets"]).count() == cs1
 
     # file-level: the resume run must not rewrite existing changeset files
@@ -193,6 +196,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     more = synth.pages_df(spark, n_pages=18)  # first 12 identical (same seed)
     t2 = pipeline.run(spark, more, out, resume=True)
     assert t2
+    assert cache_empty(), "the resume batch left a pin behind"
     cs2 = spark.read.parquet(tables["changesets"]).count()
     el2 = spark.read.parquet(tables["element_history"]).count()
     assert cs2 > cs1 and el2 > el1
@@ -316,7 +320,8 @@ def test_corpus_pipeline_incremental_equals_full(spark, tmp_path):
     assert corpus_ids(inc_dir) == before
 
 
-def test_corpus_crash_between_appends_replay_converges(spark, tmp_path):
+def test_corpus_crash_between_appends_replay_converges(spark, tmp_path,
+                                                       cache_empty):
     """Kill the job BETWEEN the dedup-index append and the corpus append
     (and, separately, between the accounting batch write and the rollup),
     then replay with --resume: every table converges to the no-crash
@@ -327,9 +332,11 @@ def test_corpus_crash_between_appends_replay_converges(spark, tmp_path):
     from insights_spark.jobs import corpus as cj
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.catalog.clearCache()
 
     ok_dir = str(tmp_path / "ok")
     cj.run(spark, docs, ok_dir)
+    assert cache_empty(), "the run left a pin behind"
 
     def snap(d):
         ids = sorted(r["doc_id"] for r in
@@ -349,6 +356,7 @@ def test_corpus_crash_between_appends_replay_converges(spark, tmp_path):
                 cj.run(spark, docs, d)
         finally:
             cj._TEST_CRASH_POINTS.discard(point)
+        assert cache_empty(), f"the run that crashed {point} left a pin behind"
         cj.run(spark, docs, d, resume=True)
         assert snap(d) == snap(ok_dir), point
 

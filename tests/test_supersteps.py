@@ -82,10 +82,9 @@ OPS = {
 
 
 @pytest.mark.parametrize("op", OPS)
-def test_iterative_operators_release_their_pins(spark, op):
+def test_iterative_operators_release_their_pins(spark, cache_empty, op):
     """Once the result is collected, no persisted block is left in the
     CacheManager: every pin a loop takes is released by supersteps()."""
     spark.catalog.clearCache()
     assert OPS[op](spark, _graph(spark)).collect()
-    released = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert released, "a persisted input is still in the CacheManager"
+    assert cache_empty(), "a persisted input is still in the CacheManager"
