@@ -245,6 +245,7 @@ def run(
             )
             rolled.write.mode("overwrite").parquet(paths["accounting"])
 
+        lin.flush()
         if seq is not None:
             ckpt.commit(PIPELINE, "corpus", seq)
         return paths

@@ -12,15 +12,23 @@ per-partition, so `partition_counts` tags every row with its partition id
 (pure column expr — spark_partition_id) and aggregates to one row per
 partition. The observed DataFrames are read, never changed.
 
-Cost of one `record`: a partition-count aggregation of the out side (and
-of the in side when given), a full-outer join of the two on partition id
-(a shuffle), and a one-file parquet append — about 2.5 Spark jobs per
-record under AQE. The sentinel row is built on the JVM
-(`session.local_df`), so a record runs no Python task.
+`record` only plans a stage's counts and queues them; `flush` writes every
+queued stage in one append. A job calls `flush` once, before it commits
+its checkpoint, so a batch whose stages run on several driver threads
+never has two appends racing in the log's `_temporary` directory.
+
+Cost of one `flush`: per queued stage, a partition-count aggregation of
+the out side (and of the in side when given) and a full-outer join of the
+two on partition id; then one one-file parquet append of their union. The
+aggregations are independent shuffle map stages of one query, which AQE
+runs side by side, so the Spark jobs no longer grow by ~2.5 per stage.
+The sentinel rows are built on the JVM (`session.local_df`), so a flush
+runs no Python task.
 """
 
 from __future__ import annotations
 
+import functools
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,14 +56,19 @@ class LineageLog:
         self.spark = spark
         self.path = path
         self.run_id = new_run_id()
+        self._queued: list[DataFrame] = []
 
     def record(self, stage: str, df_in: DataFrame | None, df_out: DataFrame,
                sequence: int | None = None) -> None:
-        """Write per-partition row counts for a stage (in optional).
+        """Queue per-partition row counts for a stage (in optional); `flush`
+        writes them. The frames must still hold the stage's rows then:
+        pinned, checkpointed or re-derivable from unchanged inputs. Threads
+        may record at once (the queue takes one `list.append` each); `flush`
+        runs after they have stopped.
 
         Fully distributed — the counts DataFrame is written directly, never
         collected to the driver, so a 10⁵-partition stage costs the driver
-        no memory (the per-record job cost is in the module docstring). The
+        no memory (the job cost is in the module docstring). The
         in-side is full-outer joined so a partition whose rows were ALL
         dropped still appears (rows_in>0, rows_out=0) — that row IS the
         extraction-drop signal. A (-1, 0, 0) sentinel row is always appended
@@ -86,9 +99,16 @@ class LineageLog:
         sentinel = local_df(
             self.spark, [(self.run_id, stage, -1, 0, 0, sequence)], LINEAGE
         )
-        counts.unionByName(sentinel).coalesce(1).write.mode("append").parquet(
-            self.path
-        )
+        self._queued.append(counts.unionByName(sentinel))
+
+    def flush(self) -> None:
+        """Append every queued stage's counts as one file; a no-op when
+        nothing is queued."""
+        if not self._queued:
+            return
+        frames, self._queued = self._queued, []
+        union = functools.reduce(DataFrame.unionByName, frames)
+        union.coalesce(1).write.mode("append").parquet(self.path)
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(LINEAGE).parquet(self.path)

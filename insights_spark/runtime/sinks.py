@@ -22,6 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 
@@ -49,7 +50,11 @@ def merge_rows(old: DataFrame | None, new: DataFrame, keys: list[str]) -> DataFr
 
 class ParquetSinks:
     """The warehouse backend: directory-parquet tables behind the 4 verbs
-    jobs program against (merge / merge_sum / append_dedup / read)."""
+    jobs program against (merge / merge_sum / append_dedup / read).
+
+    Every read passes the schema its caller already holds (the incoming
+    frame's, for the three writes), so no read runs a schema-inference job
+    over the table's footers."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -68,7 +73,7 @@ class ParquetSinks:
 
     def merge(self, df: DataFrame, path: str, keys: list[str]) -> None:
         """MERGE df into the parquet table at `path` on `keys` (`merge_rows`)."""
-        old = self.read(path)
+        old = self.read(path, df.schema)
         if old is not None:
             # fast path: when no batch key collides with an existing row,
             # MERGE degenerates to INSERT — dedup the batch internally and
@@ -92,7 +97,7 @@ class ParquetSinks:
         of an additive aggregate, so a batch contributes O(batch)
         aggregation work instead of recomputing the rollup over all
         history."""
-        old = self.read(path)
+        old = self.read(path, df.schema)
         rows = df if old is None else old.unionByName(df)
         self._publish(
             rows.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols]), path)
@@ -118,7 +123,7 @@ class ParquetSinks:
         write to 3 tasks — cluster on the full composite so all shuffle
         partitions stay busy."""
         batch = df.dropDuplicates(keys)
-        old = self.read(path)
+        old = self.read(path, df.schema)
         if old is not None:
             batch = batch.join(old.select(*keys), keys, "left_anti")
         if cluster_by:
@@ -140,6 +145,11 @@ class ParquetSinks:
         w.parquet(path)
         return batch
 
-    def read(self, path: str) -> DataFrame | None:
-        """The table at `path`, or None while it holds no parquet file."""
-        return self.spark.read.parquet(path) if has_parquet(path) else None
+    def read(self, path: str, schema: StructType | str) -> DataFrame | None:
+        """The table at `path` read as `schema` (a `StructType` or DDL
+        string, a subset of the table's columns allowed), or None while it
+        holds no parquet file. A partition column keeps its name and type
+        from `schema` but comes last, as in an inferred read."""
+        if not has_parquet(path):
+            return None
+        return self.spark.read.schema(schema).parquet(path)

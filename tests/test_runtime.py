@@ -80,14 +80,47 @@ def test_incremental_filter(spark):
 
 
 def test_lineage_records_partition_counts(spark, tmp_path):
-    lin = LineageLog(spark, str(tmp_path / "lin"))
+    """`record` queues and writes nothing; one `flush` appends every queued
+    stage's rows as one file, and a second `flush` has nothing to write."""
+    path = tmp_path / "lin"
+    lin = LineageLog(spark, str(path))
     df = spark.range(1000).repartition(4)
     lin.record("stage1", df, df, sequence=1)
+    lin.record("stage2", None, df.filter(F.col("id") < 10), sequence=1)
+    assert not path.exists()
+    lin.flush()
+    lin.flush()
+    assert len(list(path.glob("*.parquet"))) == 1
     rows = lin.read().collect()
-    assert sum(r["rows_out"] for r in rows) == 1000
-    assert {r["stage"] for r in rows} == {"stage1"}
+    assert {r["stage"] for r in rows} == {"stage1", "stage2"}
     assert all(r["run_id"] == lin.run_id for r in rows)
-    assert sum(1 for r in rows if r["partition_id"] >= 0) == 4
+    one = [r for r in rows if r["stage"] == "stage1"]
+    assert sum(r["rows_out"] for r in one) == 1000
+    assert sum(1 for r in one if r["partition_id"] >= 0) == 4
+    two = [r for r in rows if r["stage"] == "stage2"]
+    assert sum(r["rows_out"] for r in two) == 10
+    assert all(r["rows_in"] is None for r in two if r["partition_id"] >= 0)
+
+
+def test_lineage_records_from_threads_lose_no_stage(spark, tmp_path):
+    """The pipeline records from its chain threads: more recording threads
+    than cores, switching often, still flush every stage once."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    lin = LineageLog(spark, str(tmp_path / "lin3"))
+    df = spark.range(100).repartition(2)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            done = list(pool.map(lambda i: lin.record(f"t{i}", None, df, i), range(16)))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(done) == 16
+    lin.flush()
+    got = lin.read().groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
+    assert sorted((r["stage"], r["n"]) for r in got) == sorted(
+        (f"t{i}", 100) for i in range(16))
 
 
 def test_salted_agg_matches_plain(spark):
@@ -251,6 +284,74 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, cache_empty):
     assert ck.last_sequence(pipeline.PIPELINE, "extract") is not None
 
 
+def _table_rows(spark, path):
+    """A table's rows as a sorted list, columns by name, maps as sorted
+    items and doubles to 12 significant digits, so runs that sum in another
+    order compare equal."""
+
+    def norm(v):
+        if isinstance(v, float):
+            return float(f"{v:.12g}")
+        if isinstance(v, dict):
+            return tuple(sorted((k, norm(x)) for k, x in v.items()))
+        if isinstance(v, (list, tuple)):
+            return tuple(norm(x) for x in v)
+        return v
+
+    df = spark.read.parquet(path)
+    rows = df.select(*sorted(df.columns)).collect()
+    return sorted((norm(r) for r in rows), key=repr)
+
+
+def test_pipeline_chain_failure_commits_nothing_and_resume_converges(
+    spark, tmp_path, cache_empty, monkeypatch
+):
+    """The changeset chain fails (in the vocabulary stage) beside the
+    element chain: `run` re-raises only after every chain has stopped, with
+    no checkpoint row, no pin and no pool thread left. The failure neither
+    cancels nor skips the element chain or the stats and tiles chains that
+    follow it. A resume rerun then equals a one-shot run on every table."""
+    import threading
+
+    from insights_spark.ops import tags as tags_ops
+
+    out = str(tmp_path / "wh")
+    first, more = synth.pages_df(spark, n_pages=12), synth.pages_df(spark, n_pages=18)
+    pipeline.run(spark, first, out)
+    ck = CheckpointStore(spark, f"{out}/_checkpoints")
+    seq1 = ck.last_sequence(pipeline.PIPELINE, "extract")
+    el1 = spark.read.parquet(f"{out}/element_history").count()
+
+    def vocabulary_fails(changesets):
+        raise RuntimeError("injected: vocabulary")
+
+    monkeypatch.setattr(tags_ops, "hashtag_vocabulary", vocabulary_fails)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipeline.run(spark, more, out, resume=True)
+    assert ck.last_sequence(pipeline.PIPELINE, "extract") == seq1
+    assert cache_empty(), "the failed batch left a pin behind"
+    assert not [t for t in threading.enumerate() if t.name.startswith(pipeline.PIPELINE)]
+    # the other chains ran to the end: the history grew, every located
+    # element of it is in the pyramid once per zoom, and every changeset
+    # has stats
+    el = spark.read.parquet(f"{out}/element_history")
+    assert el.count() > el1
+    located = el.filter(F.col("lat").isNotNull() & F.col("lon").isNotNull()).count()
+    density = spark.read.parquet(f"{out}/tile_density").agg(F.sum("density")).first()[0]
+    assert located > 0 and density == 3 * located
+    stats = spark.read.parquet(f"{out}/all_changesets_stats")
+    assert el.select("changeset").distinct().join(
+        stats, "changeset", "left_anti").count() == 0
+
+    monkeypatch.undo()
+    assert pipeline.run(spark, more, out, resume=True)
+    assert ck.last_sequence(pipeline.PIPELINE, "extract") > seq1
+    ref = str(tmp_path / "ref")
+    pipeline.run(spark, more, ref)
+    for t in pipeline.TABLES:
+        assert _table_rows(spark, f"{out}/{t}") == _table_rows(spark, f"{ref}/{t}"), t
+
+
 def test_pipeline_element_history_layout(spark, tmp_path):
     """The physical design claim: element_history is partitioned by type."""
     out = str(tmp_path / "wh2")
@@ -268,6 +369,7 @@ def test_lineage_drop_visibility_and_no_collect(spark, tmp_path):
     lin = LineageLog(spark, str(tmp_path / "lin2"))
     df = spark.range(100).repartition(4)
     lin.record("all_dropped", df, df.filter(F.lit(False)))
+    lin.flush()
     rows = lin.read().filter(F.col("stage") == "all_dropped").collect()
     real = [r for r in rows if r["partition_id"] >= 0]
     assert len(real) == 4

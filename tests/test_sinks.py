@@ -46,3 +46,30 @@ def test_append_dedup(spark, tmp_path):
     got = {r["k"]: r["v"] for r in spark.read.parquet(p).collect()}
     assert got[2] == "b" and got[1] in ("a", "a2")  # existing key untouched
     assert spark.read.parquet(p).count() == 2
+
+
+def test_read_with_schema_runs_no_spark_job(spark, tmp_path):
+    """`read` passes its caller's schema, so opening a table runs no
+    schema-inference job; an inferred read of the same table runs one,
+    which shows that the job-group probe sees such jobs."""
+    p = str(tmp_path / "t7")
+    df = spark.createDataFrame([(1, "a", 1), (2, "b", 2)], "k long, v string, seq long")
+    ParquetSinks(spark).append_dedup(df, p, ["k"], partition_by=["v"])
+    sc = spark.sparkContext
+
+    def jobs_of(group, open_table):
+        sc.setJobGroup(group, group)
+        try:
+            table = open_table()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        return table, sc.statusTracker().getJobIdsForGroup(group)
+
+    table, jobs = jobs_of("sinks-read-schema", lambda: ParquetSinks(spark).read(p, df.schema))
+    assert jobs == []
+    assert sorted(tuple(r) for r in table.select("k", "v", "seq").collect()) == [
+        (1, "a", 1), (2, "b", 2)]
+    assert table.columns == ["k", "seq", "v"]  # the partition column comes last
+    _, jobs = jobs_of("sinks-read-infer", lambda: spark.read.parquet(p))
+    assert jobs
