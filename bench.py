@@ -221,15 +221,16 @@ def main() -> None:
 
         def run_one(name):
             if name == "cos_near_dups_lsh_g10":
+                from insights_spark.session import pin, release_pins
                 from insights_spark.text.simsearch import (
                     embedding_lsh_candidates, embedding_near_dups_lsh)
 
                 emb = spark.read.parquet(f"{sf1_dir}/embeddings.parquet")
-                # persist candidates exactly like the registered query does
-                cnd = embedding_lsh_candidates(emb, n_bits=60, bands=6).persist()
+                # pin candidates exactly like the registered query does
+                cnd = pin(embedding_lsh_candidates(emb, n_bits=60, bands=6))
                 force(embedding_near_dups_lsh(emb, n_bits=60, bands=6,
                                               candidates=cnd))
-                cnd.unpersist()
+                release_pins()
             else:
                 force(qs[name](spark, sf1_dir))
 

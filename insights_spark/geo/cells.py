@@ -9,11 +9,12 @@ which is what makes them shuffle-partitionable at 100 TB.
   S2 cell-id construction (face → (u,v) quadratic projection → (i,j) →
   Hilbert position), default level 12 per the north rule. Pure numpy, one
   pass over the batch, no per-row Python.
-- ``hex_cell_id``: the `h3` package is not installed in this environment,
-  so `h3_r8` columns are produced by this deterministic axial hex binning
-  (pointy-top hexagons on an equirectangular plane, aperture-7-style size
-  schedule so res 8 cell size is commensurate with H3 res 8). If `h3`
-  becomes available it is used instead (import-gated).
+- ``hex_cell_id``: `h3_r8` columns are produced by this deterministic
+  axial hex binning (pointy-top hexagons on an equirectangular plane,
+  aperture-7-style size schedule so res 8 cell size is commensurate with
+  H3 res 8). It is the one hex encoder: the ring fan, the centre decode,
+  the cover, the certified radius and the SQL oracles all assume its
+  axial packing.
 - ``grid_cell_col``: pure Spark-column rectangular binning (no UDF at all)
   — used where an ANSI-SQL oracle must reproduce the cell math exactly.
 """
@@ -25,11 +26,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
-
-try:  # pragma: no cover - not installed in this sandbox
-    import h3 as _h3
-except ImportError:
-    _h3 = None
 
 # --- S2 ---------------------------------------------------------------
 # Hilbert-curve lookup tables from the public S2 geometry spec.
@@ -126,21 +122,11 @@ def hex_edge_deg(res: int) -> float:
     return _HEX_RES0_EDGE_DEG / (_SQRT7 ** res)
 
 
-def hex_cell_id(lon: np.ndarray, lat: np.ndarray, res: int = 8,
-                use_h3: bool = True) -> np.ndarray:
+def hex_cell_id(lon: np.ndarray, lat: np.ndarray, res: int = 8) -> np.ndarray:
     """Deterministic axial hex binning (pointy-top) on the lon/lat plane.
 
     Returns int64: (res << 56) | (q + 2^26) << 28 | (r + 2^26).
-
-    ``use_h3=False`` forces the axial fallback even when the real `h3`
-    package is importable — required wherever an ANSI-SQL oracle replicates
-    the axial formula (the library and the fallback diverge by design).
     """
-    if _h3 is not None and use_h3:  # pragma: no cover
-        return np.array(
-            [_h3.str_to_int(_h3.latlng_to_cell(b, a, res)) for a, b in zip(lon, lat)],
-            dtype=np.uint64,
-        ).view(np.int64)
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     size = hex_edge_deg(res)
@@ -265,7 +251,7 @@ def s2_udf(level: int = 12):
     return _enc
 
 
-def hex_udf(res: int = 8, use_h3: bool = True):
+def hex_udf(res: int = 8):
     """pandas-UDF hex cell encode (vectorized numpy kernel per batch).
 
     r6 note (measured, kept deliberately): a pure-Catalyst expression
@@ -285,8 +271,7 @@ def hex_udf(res: int = 8, use_h3: bool = True):
         mask = lon.notna() & lat.notna()
         out = pd.Series(np.zeros(len(lon), dtype=np.int64), index=lon.index, dtype="Int64")
         if mask.any():
-            out[mask] = hex_cell_id(lon[mask].to_numpy(), lat[mask].to_numpy(), res,
-                                    use_h3=use_h3)
+            out[mask] = hex_cell_id(lon[mask].to_numpy(), lat[mask].to_numpy(), res)
         out[~mask] = None
         return out
 

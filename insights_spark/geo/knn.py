@@ -27,10 +27,13 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..ops.latest import top_k
 from ..session import pin
 from . import cells
+
+# kNN rank order: nearest first, the smaller neighbor id on a distance tie
+_NEAREST = ("dist2", "neighbor_id")
 
 
 def dist2(lon: str = "lon", lat: str = "lat"):
@@ -66,13 +69,10 @@ def knn_exact(points: DataFrame, k: int, id_col: str = "id") -> DataFrame:
         F.col("lat").alias("_qlat"),
     )
     joined = q.join(F.broadcast(nb), F.col("id") != F.col("neighbor_id"))
-    w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
-    return (
-        joined.withColumn("dist2", dist2("_qlon", "_qlat"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "dist2", "rank")
-    )
+    return top_k(
+        joined.withColumn("dist2", dist2("_qlon", "_qlat")), ["id"], _NEAREST,
+        k, rank="rank",
+    ).select("id", "neighbor_id", "dist2", "rank")
 
 
 def _cell_pairs(queries, candidates, res: int, rings: int):
@@ -80,10 +80,8 @@ def _cell_pairs(queries, candidates, res: int, rings: int):
     Only the self-join (``candidates is queries``) drops id == neighbor_id:
     across two tables equal ids are distinct entities (a customer and an
     event sharing key 5)."""
-    # use_h3=False: hex_ring_ids/cert_radius_deg assume the axial bit layout;
-    # real H3 ids would break the ring join and the coverage certificate.
     q = queries.withColumn(
-        "cell", cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
+        "cell", cells.hex_udf(res)(F.col("lon"), F.col("lat"))
     )
     self_join = candidates is queries
     if self_join:
@@ -93,7 +91,7 @@ def _cell_pairs(queries, candidates, res: int, rings: int):
         cand_cells = q.withColumn("home_cell", F.col("cell"))
     else:
         cand_cells = candidates.withColumn(
-            "home_cell", cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
+            "home_cell", cells.hex_udf(res)(F.col("lon"), F.col("lat"))
         )
     # ring fan = packed-id addition (cells.hex_ring_offsets): pure JVM
     # codegen explode — the per-row Python ring UDF was an ArrowEvalPython
@@ -140,7 +138,7 @@ def _cell_pairs_half(pts, res: int, rings: int):
     orientation).
     """
     enc = pin(pts.withColumn(
-        "cell", cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
+        "cell", cells.hex_udf(res)(F.col("lon"), F.col("lat"))
     ))
     q = enc.select("cell", "id", "lon", "lat")
     pos = [o for o in cells.hex_ring_offsets(rings) if o > 0]
@@ -318,7 +316,7 @@ def _density_counts(points):
         F.count(F.lit(1)).alias("_n"),
         *[
             F.approx_count_distinct(
-                cells.hex_udf(r, use_h3=False)(F.col("lon"), F.col("lat"))
+                cells.hex_udf(r)(F.col("lon"), F.col("lat"))
             ).alias(f"c{r}")
             for r in range(7)
         ],
@@ -376,13 +374,9 @@ def _certified_topk(q, c, k: int, res: int | None, rings: int) -> DataFrame:
     self_join = q is c
     if res is None:
         res = auto_cell_res(c, k=k)
-    w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
     first = pin(
-        _cell_pairs(q, c, res, rings)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "dist2",
-                F.col("rank").cast("int").alias("rank"))
+        top_k(_cell_pairs(q, c, res, rings), ["id"], _NEAREST, k, rank="rank")
+        .select("id", "neighbor_id", "dist2", "rank")
     )
     cert2 = F.lit(cert_radius_deg(res, rings) ** 2)
     ok_ids = (
@@ -403,12 +397,10 @@ def _certified_topk(q, c, k: int, res: int | None, rings: int) -> DataFrame:
         nb.join(F.broadcast(shortq), F.col("id") != F.col("neighbor_id"))
         if self_join else nb.crossJoin(F.broadcast(shortq))
     )
-    fb = (
-        tail.withColumn("dist2", dist2("_qlon", "_qlat"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "dist2", "rank")
-    )
+    fb = top_k(
+        tail.withColumn("dist2", dist2("_qlon", "_qlat")), ["id"], _NEAREST,
+        k, rank="rank",
+    ).select("id", "neighbor_id", "dist2", "rank")
     return certified.unionByName(fb)
 
 
@@ -552,7 +544,7 @@ def nn_distance_hist(points: DataFrame) -> DataFrame:
         lons, lats = lon.to_numpy()[mask], lat.to_numpy()[mask]
         ids = np.zeros((len(mask), len(levels)), dtype=np.int64)
         ids[mask] = np.column_stack(
-            [cells.hex_cell_id(lons, lats, lv, use_h3=False) for lv in levels]
+            [cells.hex_cell_id(lons, lats, lv) for lv in levels]
         )
         return pd.Series(ids.tolist()).where(mask, None)
 

@@ -23,7 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
-from pyspark.sql.window import Window
+
+from ..ops.latest import top_k
 
 _WGS84_A = 6378137.0
 _WGS84_F = 1.0 / 298.257223563
@@ -167,14 +168,9 @@ def construct_way_geometry(ways: DataFrame, nodes: DataFrame) -> DataFrame:
 
     j = w.join(n, "node_id", "left")
     j = j.filter(F.col("node_ts").isNull() | (F.col("node_ts") <= F.col("way_ts")))
-    pick = Window.partitionBy("way_id", "way_version", "pos").orderBy(
-        F.desc_nulls_last("node_version")
-    )
-    resolved = (
-        j.withColumn("_rn", F.row_number().over(pick))
-        .filter(F.col("_rn") == 1)
-        .select("way_id", "way_version", "way_ts", "pos", "lon", "lat")
-    )
+    resolved = top_k(
+        j, ["way_id", "way_version", "pos"], [F.desc_nulls_last("node_version")]
+    ).select("way_id", "way_version", "way_ts", "pos", "lon", "lat")
     return (
         resolved.filter(F.col("lon").isNotNull())
         .groupBy("way_id", "way_version")

@@ -228,9 +228,7 @@ def assign_country_cells(df: DataFrame, boxes: list[tuple], id_col: str) -> Data
              "_interior")
 
     pts = df.withColumn(
-        # use_h3=False: the cover (hex_cover_bbox) and the center decode
-        # (hex_center_col) are axial-formula-specific — a real H3 id would never match.
-        "_cell", cells.hex_udf(2, use_h3=False)(F.col("lon"), F.col("lat"))
+        "_cell", cells.hex_udf(2)(F.col("lon"), F.col("lat"))
     )
     cand = pts.join(F.broadcast(cover), pts["_cell"] == cover["cell"])
     hit = F.col("_interior") | (

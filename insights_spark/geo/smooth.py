@@ -126,7 +126,7 @@ def decayed_cell_scores(
     )
     per = (
         points.groupBy(
-            cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")).alias(
+            cells.hex_udf(res)(F.col("lon"), F.col("lat")).alias(
                 "cell"
             ),
             bucket.alias("_b"),

@@ -61,7 +61,7 @@ def st_within(
         F.col("ts").cast("timestamp").cast("long").alias("_ep"),
     ).withColumn(
         "home_cell",
-        cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat")),
+        cells.hex_udf(res)(F.col("lon"), F.col("lat")),
     ).withColumn(
         "_chunk", F.expr(f"_ep DIV {tau}")
     ))  # encoded once; feeds both join sides

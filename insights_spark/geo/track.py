@@ -96,7 +96,7 @@ def home_cells(points: DataFrame) -> DataFrame:
     per = (
         points.select(
             F.col("user_id"),
-            _c.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias(
+            _c.hex_udf(1)(F.col("lon"), F.col("lat")).alias(
                 "cell"
             ),
         )
@@ -150,7 +150,7 @@ def od_flows(points: DataFrame, id_col: str = "id") -> DataFrame:
         F.col("user_id"),
         F.col("ts").alias("_ts"),
         F.col(id_col).alias("_id"),
-        hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
+        hex_udf(0)(F.col("lon"), F.col("lat"))
         .alias("cell"),
     )
     w = W.partitionBy("user_id").orderBy(F.asc("_ts"), F.asc("_id"))

@@ -56,8 +56,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..ops.latest import top_k
 from ..runtime.checkpoint import CheckpointStore
 from ..runtime.lineage import LineageLog
 from ..session import pin, release_pins
@@ -119,12 +119,7 @@ def run(
         stamped = pin(_stamp(batch))
 
         # 2. dedup: in-batch representative, then anti-join the admitted index
-        in_batch = stamped.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_norm_hash").orderBy(F.asc("doc_id"))
-            ),
-        ).filter(F.col("_rn") == 1).drop("_rn")
+        in_batch = top_k(stamped, ["_norm_hash"], ["doc_id"])
         if os.path.isdir(paths["dedup_index"]):
             # exclude THIS attempt's own batch partition: if a prior crashed
             # attempt already wrote the index rows, the anti-join must not see

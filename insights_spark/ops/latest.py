@@ -16,9 +16,28 @@ month-end country insights.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def top_k(df: DataFrame, keys: Sequence[str], order: Sequence[Column | str],
+          k: int | Column = 1, rank: str | None = None) -> DataFrame:
+    """The one per-key selection rule: rank the rows inside each key by
+    `order` (Columns, or names for ascending; put a unique tiebreak last so
+    the pick is deterministic) and keep the first `k` rows of each key.
+
+    `k` may be a Column (a per-row quota, as in ``mix_sources``). The
+    rank survives as column `rank` only when a name is given. Plan: one
+    `row_number()` window over `keys`, one shuffle on them; with a literal
+    `k` Spark also puts a WindowGroupLimit under the window.
+    """
+    col = rank or "_rk"
+    w = Window.partitionBy(*keys).orderBy(*order)
+    out = df.withColumn(col, F.row_number().over(w)).filter(F.col(col) <= k)
+    return out if rank else out.drop(col)
 
 
 def latest_version(
@@ -37,12 +56,7 @@ def latest_version(
     """
     if cutoff is not None:
         df = df.filter(F.col(cutoff_col) < cutoff)
-    w = Window.partitionBy(*keys).orderBy(F.desc(version_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return top_k(df, keys, [F.desc(version_col)])
 
 
 def scalar_pick(
@@ -58,12 +72,7 @@ def scalar_pick(
     the value from the row with MAX(order_col) wins. Returns one row per
     group: (group_keys..., value_col).
     """
-    w = Window.partitionBy(*group_keys).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*group_keys, value_col)
-    )
+    return top_k(df, group_keys, [F.desc(order_col)]).select(*group_keys, value_col)
 
 
 def scd2_intervals(df: DataFrame, version_col: str = "version") -> DataFrame:

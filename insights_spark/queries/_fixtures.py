@@ -88,14 +88,14 @@ def _boundary_rows():
     return rows
 
 
-def _country_case_sql(lon: str = "lon", lat: str = "lat") -> str:
+def _country_case_sql() -> str:
     """CASE replicating the PIP kernel's deterministic tie-break order."""
     branches = []
     for name, _pri, x0, y0, x1, y1 in [
         _COUNTRIES[0], _COUNTRIES[1], _COUNTRIES[2], _COUNTRIES[3]
     ]:
         branches.append(
-            f"WHEN {lon} >= {x0} AND {lon} <= {x1} AND {lat} >= {y0} AND {lat} <= {y1} "
+            f"WHEN lon >= {x0} AND lon <= {x1} AND lat >= {y0} AND lat <= {y1} "
             f"THEN '{name}'"
         )
     return "CASE " + " ".join(branches) + " ELSE NULL END"

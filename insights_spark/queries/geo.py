@@ -36,7 +36,7 @@ def _hex_cells_chain_sql(res: int, src: str | None = None,
                          carry: str = "event_id") -> str:
     """CTE chain ``pts → … → hexed`` replicating geo.cells' axial hex
     encode at ``res`` — the bit-exact SQL twin of
-    ``cells.hex_udf(res, use_h3=False)``. ``src`` is the pts SELECT
+    ``cells.hex_udf(res)``. ``src`` is the pts SELECT
     (defaults to the derived event points), ``carry`` the key column(s)
     threaded through to ``hexed(carry…, cell)``. Constants come from the
     kernel itself via repr round-trip."""
@@ -78,7 +78,7 @@ def _hex_cnts_sql(res: int) -> str:
                  FROM hexed GROUP BY 1)"""
 
 
-def _dp_sql(eps_milli: int = 20000, depth: int = 4) -> str:
+def _dp_sql() -> str:
     """Unrolled depth-capped Douglas-Peucker: the same argmax-and-split
     recurrence as geo.track.simplify_tracks, one SQL stage per level
     (kmeans-unroll discipline). Integer millidegree coordinates come
@@ -86,8 +86,10 @@ def _dp_sql(eps_milli: int = 20000, depth: int = 4) -> str:
     HUGEINT so the squared deviation (~1e23) never overflows; the
     argmax tie-break (score DESC, idx ASC) and the strict > gate match
     the kernel exactly. Ordering is (epoch-SECONDS, event_id) — the same
-    second-truncated key the Spark side sorts on."""
-    e2 = int(eps_milli) * int(eps_milli)
+    second-truncated key the Spark side sorts on. Tolerance 20000
+    millidegrees, depth 4."""
+    eps_milli, depth = 20000, 4
+    e2 = eps_milli * eps_milli
     parts = [f"""
         pts AS (SELECT user_id AS u, ts, event_id,
                        mod(event_id * 7919, 360000) - 180000 AS x,
@@ -429,7 +431,7 @@ def _q_theil_sen(spark, sf_dir):
         _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
     )
     wk = pts.groupBy(
-        cells.hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
+        cells.hex_udf(0)(F.col("lon"), F.col("lat"))
         .alias("cell"),
         F.date_trunc("day", F.col("ts")).alias("day"),
     ).agg(
@@ -506,7 +508,7 @@ def _q_mann_kendall(spark, sf_dir):
         _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
     )
     wk = pts.groupBy(
-        cells.hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
+        cells.hex_udf(0)(F.col("lon"), F.col("lat"))
         .alias("cell"),
         F.date_trunc("day", F.col("ts")).alias("day"),
     ).agg(
@@ -599,7 +601,7 @@ def _q_cusum(spark, sf_dir):
         _t(spark, sf_dir, "events").select("event_id", "ts"), "event_id"
     )
     wk = pts.groupBy(
-        cells.hex_udf(0, use_h3=False)(F.col("lon"), F.col("lat"))
+        cells.hex_udf(0)(F.col("lon"), F.col("lat"))
         .alias("cell"),
         F.date_trunc("day", F.col("ts")).alias("day"),
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -710,11 +712,8 @@ def _q_hex_cells(spark, sf_dir):
     from insights_spark.geo import cells
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
-    # use_h3=False: the oracle replicates the AXIAL formula; in an
-    # environment where the optional real-h3 package exists, the library
-    # path would diverge from the SQL by construction
     return pts.groupBy(
-        cells.hex_udf(6, use_h3=False)(F.col("lon"), F.col("lat")).alias("h3_r6")
+        cells.hex_udf(6)(F.col("lon"), F.col("lat")).alias("h3_r6")
     ).agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -743,7 +742,7 @@ def _q_hex_smooth(spark, sf_dir):
     # res-1 cells hold ~6 points and rings are genuinely occupied.
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return hex_focal_smooth(counts)
 
@@ -784,7 +783,7 @@ def _q_cell_clusters(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return cell_dbscan(counts, minpts=8)
 
@@ -823,7 +822,7 @@ def _q_region_shape(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(2, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(2)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return region_shape(counts)
 
@@ -898,7 +897,7 @@ def _q_directional_hull(spark, sf_dir):
     return directional_hull(pts, id_col="event_id")
 
 
-@query("simplify_tracks", headline=True, oracle=_dp_sql(20000, 4))
+@query("simplify_tracks", headline=True, oracle=_dp_sql())
 def _q_simplify_tracks(spark, sf_dir):
     """Depth-capped Douglas-Peucker per user track (geo/track.py
     simplify_tracks): eps 20°, 4 argmax levels, integer millidegree
@@ -1102,7 +1101,7 @@ def _q_frontier_cells(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return frontier_cells(counts)
 
@@ -1141,7 +1140,7 @@ def _q_idw_fill(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return idw_fill(counts)
 
@@ -1176,7 +1175,7 @@ def _q_semivariogram(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return semivariogram_exact(counts)
 
@@ -1748,7 +1747,7 @@ def _q_moran_i(spark, sf_dir):
 
     pts = _points(_t(spark, sf_dir, "events").select("event_id"), "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     return moran_i_exact(counts)
 
@@ -1807,7 +1806,7 @@ def _q_getis_ord(spark, sf_dir):
     pts = _points(_t(spark, sf_dir, "events").select("event_id", "value"),
                   "event_id")
     counts = pts.groupBy(
-        cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("cell")
+        cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("cell")
     ).agg(F.sum(F.floor(F.col("value"))).cast("long").alias("n"))
     return getis_ord_exact(counts)
 

@@ -1973,8 +1973,8 @@ def _q_anomaly_weeks(spark, sf_dir):
     return anomaly_buckets(ev.unionByName(burst))
 
 
-def _layout_qcell(level: int = 3) -> int:
-    """Level-`level` S2 cell of event_id=1's synthetic point — the
+def _layout_qcell() -> int:
+    """Level-3 S2 cell of event_id=1's synthetic point — the
     deterministic probe cell for the layout-scan query (same derivation
     formula both engines)."""
     import numpy as np
@@ -1983,7 +1983,7 @@ def _layout_qcell(level: int = 3) -> int:
 
     lon = np.array([(1 * 7919 % 360000) / 1000.0 - 180.0])
     lat = np.array([(1 * 104729 % 170000) / 1000.0 - 85.0])
-    return int(s2_cell_id(lon, lat, level)[0])
+    return int(s2_cell_id(lon, lat, 3)[0])
 
 
 # layout scan: exact level-4 membership via the unrolled Hilbert

@@ -24,14 +24,14 @@ _TOKENS = (
 )
 
 
-def _kmeans_sql(k: int = 8, iters: int = 3, scale: int = 1024,
-                d: int = 64) -> str:
+def _kmeans_sql() -> str:
     """Unrolled integer Lloyd k-means: the same floor-quantize /
     argmin-(dist, cid) / floor-mean-adjusted-numerator recurrence as
     text/simsearch.py:kmeans_lloyd_int. The power-of-two scale makes the
     quantization exact in both engines; ``(s - ((s % m + m) % m)) // m``
     hits an exact multiple so DuckDB's truncating ``//`` equals Spark's
     truncating ``div`` equals floor, negative sums included."""
+    k, iters, scale, d = 8, 3, 1024, 64
     dist = (f"CAST(list_aggregate(list_transform(range(1, {d + 1}), "
             f"i -> (q.q[i] - c.cv[i]) * (q.q[i] - c.cv[i])), 'sum') "
             f"AS BIGINT)")
@@ -106,11 +106,12 @@ _DOC_GRAPH_SQL = """
                WHERE dst <> src)"""
 
 
-def _kcore_sql(k: int = 3, rounds: int = 6) -> str:
-    """Unrolled R-round k-core peel over the shared symmetrized 3-out doc
+def _kcore_sql(k: int) -> str:
+    """Unrolled 6-round k-core peel over the shared symmetrized 3-out doc
     graph: d_t = degrees induced by alive_t, alive_{t+1} = {d_t >= k},
     output = final d where >= k — same recurrence as
     text/links.py:kcore_peel."""
+    rounds = 6
     parts = [_DOC_GRAPH_SQL + """,
         e AS (SELECT src, dst FROM e0
               UNION SELECT dst, src FROM e0),
@@ -129,11 +130,13 @@ def _kcore_sql(k: int = 3, rounds: int = 6) -> str:
     """
 
 
-def _hits_sql(iters: int = 4, scale: int = 10**6) -> str:
+def _hits_sql() -> str:
     """Unrolled integer HITS over the shared 3-out doc graph (multi-edges
     preserved): same sum / L-inf div-normalize recurrence as
     text/links.py:hits_fixed_point; all operands nonnegative so DuckDB's
-    truncating ``//`` equals Spark's ``div`` equals floor."""
+    truncating ``//`` equals Spark's ``div`` equals floor. Four rounds,
+    scores scaled by 10⁶."""
+    iters, scale = 4, 10**6
     parts = [_DOC_GRAPH_SQL + """,
         e AS (SELECT src, dst FROM e0),
         nodes AS (SELECT DISTINCT id FROM (
@@ -169,10 +172,11 @@ def _hits_sql(iters: int = 4, scale: int = 10**6) -> str:
     """
 
 
-def _lpa_sql(iters: int = 4) -> str:
-    """Unrolled synchronous label propagation over the shared 3-out doc
-    graph (symmetrized, self-loops dropped): same (count DESC, label
-    ASC) struct-argmax recurrence as text/links.py:label_propagation."""
+def _lpa_sql() -> str:
+    """Unrolled 4-round synchronous label propagation over the shared
+    3-out doc graph (symmetrized, self-loops dropped): same (count DESC,
+    label ASC) struct-argmax recurrence as text/links.py:label_propagation."""
+    iters = 4
     parts = [_DOC_GRAPH_SQL + """,
         e AS (SELECT src, dst FROM e0
               UNION
@@ -193,13 +197,14 @@ def _lpa_sql(iters: int = 4) -> str:
     """
 
 
-def _pagerank_sql(iters: int = 5) -> str:
+def _pagerank_sql() -> str:
     """Unrolled fixed-point PageRank: the same integer recurrence as
     text/links.py (score' = floor(3e12/(20n)) + Σ floor(score·17/(20·deg)))
     over the same deterministic 3-out graph — `//` is DuckDB floor
     division, exact for the all-positive operands; the per-step CAST back
     to BIGINT matches Spark's long sums (DuckDB SUM(BIGINT) widens to
-    HUGEINT)."""
+    HUGEINT). Five steps."""
+    iters = 5
     steps = []
     for i in range(iters):
         steps.append(f"""
@@ -468,7 +473,7 @@ def _q_ngram_jaccard(spark, sf_dir):
     return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), max_gram_df=50)
 
 
-@query("kcore", headline=True, oracle=_kcore_sql(k=5, rounds=6))
+@query("kcore", headline=True, oracle=_kcore_sql(5))
 def _q_kcore(spark, sf_dir):
     """k-core peel (text/links.py:kcore_peel): 6 synchronous rounds of
     degree-<5 removal (k = 5) over the symmetrized 3-out doc graph — the
@@ -565,7 +570,7 @@ def _q_sorted_neighborhood(spark, sf_dir):
     return sorted_neighborhood_pairs(d, "title")
 
 
-@query("hits", headline=True, oracle=_hits_sql(iters=4, scale=10**6))
+@query("hits", headline=True, oracle=_hits_sql())
 def _q_hits(spark, sf_dir):
     """HITS hubs & authorities (text/links.py:hits_fixed_point): 4
     rounds of integer sum + L∞ div-normalization over the directed
@@ -578,7 +583,7 @@ def _q_hits(spark, sf_dir):
 
 
 @query("communities", headline=True, oracle=(
-    _lpa_sql(iters=4)
+    _lpa_sql()
     .replace("SELECT id, label", "SELECT id AS doc_id, label")
 ))
 def _q_communities(spark, sf_dir):
@@ -595,7 +600,7 @@ def _q_communities(spark, sf_dir):
 @query(
     "kmeans",
     headline=True,
-    oracle=_kmeans_sql(k=8, iters=3, scale=1024, d=64),
+    oracle=_kmeans_sql(),
 )
 def _q_kmeans(spark, sf_dir):
     """Integer-exact Lloyd k-means (text/simsearch.py:kmeans_lloyd_int):
@@ -2865,7 +2870,7 @@ def _q_shard_assign(spark, sf_dir):
     return shard_layout(_t(spark, sf_dir, "documents"), target_bytes=4096)
 
 
-@query("pagerank", headline=True, oracle=_pagerank_sql(5))
+@query("pagerank", headline=True, oracle=_pagerank_sql())
 def _q_pagerank(spark, sf_dir):
     """Fixed-point int64 PageRank (text/links.py), 5 supersteps over a
     deterministic 3-out link graph on the documents table (dst =

@@ -23,7 +23,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-from pyspark.sql.window import Window
+
+from ..ops.latest import top_k
 
 
 def has_parquet(path: str) -> bool:
@@ -35,17 +36,12 @@ def merge_rows(old: DataFrame | None, new: DataFrame, keys: list[str]) -> DataFr
     """The MERGE precedence rule: one row per key of old ∪ new, new rows
     win (DO UPDATE / delete-then-insert, S11/S12). `old=None` is the
     empty table, so a first write still keeps one row per key. Rows are
-    tagged `_gen` 0 (old) / 1 (new) and `row_number` over the key picks
-    the newest generation."""
+    tagged `_gen` 0 (old) / 1 (new) and `top_k` over the key picks the
+    newest generation."""
     tagged = new.withColumn("_gen", F.lit(1))
     if old is not None:
         tagged = old.withColumn("_gen", F.lit(0)).unionByName(tagged)
-    w = Window.partitionBy(*keys).orderBy(F.desc("_gen"))
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_gen")
-    )
+    return top_k(tagged, keys, [F.desc("_gen")]).drop("_gen")
 
 
 class ParquetSinks:
@@ -125,7 +121,10 @@ class ParquetSinks:
         batch = df.dropDuplicates(keys)
         old = self.read(path, df.schema)
         if old is not None:
-            batch = batch.join(old.select(*keys), keys, "left_anti")
+            # a USING anti-join puts the keys first: restore the incoming
+            # order, so every append writes its files in one column order
+            batch = batch.join(old.select(*keys), keys, "left_anti").select(
+                *df.columns)
         if cluster_by:
             batch = batch.repartition(*[F.col(c) for c in cluster_by])
         if sort_by:

@@ -19,9 +19,10 @@ one action cleans the corpus.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..ops.latest import top_k
 from ..session import local_df, pin
 from .dedup import exact_dedup, ngram_jaccard_pairs
 from .quality import lang_id, quality_scores
@@ -70,16 +71,29 @@ def train_test_split(docs: DataFrame) -> DataFrame:
     `split` so the two corpora land in separate file sets with zero extra
     shuffle beyond the write's own layout.
     """
-    # wrap the id into the modulus BEFORE multiplying: (id mod m)·k ≡ id·k
-    # (mod m), so values are identical, but the product can no longer
-    # overflow int64 at 10^10-doc id scale (where Spark would wrap silently
-    # and ANSI engines would error — the hashes would diverge cross-engine)
+    # wrapped before the multiply, as in id_hash
     bucket = F.pmod(F.pmod(F.col("doc_id"), F.lit(1000)) * 1000003 + 7,
                     F.lit(1000))
     return docs.withColumn(
         "split",
         F.when(bucket < 100, F.lit("test")).otherwise(F.lit("train")),
     )
+
+
+def id_hash(col: Column, salt: int, modulus: int) -> Column:
+    """The content-stable id hash ``(id·2654435761 + salt) mod modulus``
+    that ranks docs and vectors wherever a reproducible pseudo-random
+    order is needed (caps, stratified and mix samples, centroid draws).
+
+    The id is wrapped into the modulus BEFORE multiplying: (id mod m)·k ≡
+    id·k (mod m), so the values are identical, but the product stays
+    below m·2654435761 < 2⁶³ for any modulus under 3.4·10⁹. Unwrapped, an
+    id of 4·10⁹ overflows int64: ANSI Spark raises ARITHMETIC_OVERFLOW
+    and a non-ANSI engine wraps silently, so the hashes would diverge
+    cross-engine.
+    """
+    return F.pmod(F.pmod(col, F.lit(modulus)) * 2654435761 + salt,
+                  F.lit(modulus))
 
 
 def cluster_safe_split(clusters: DataFrame) -> DataFrame:
@@ -120,18 +134,8 @@ def per_source_cap(docs: DataFrame, max_per_source: int) -> DataFrame:
     and at 10¹⁰ docs the per-domain counts a crawl frontier already
     maintains make this a pre-filtered pass.
     """
-    from pyspark.sql.window import Window
-
-    # (id mod 2³¹)·k ≡ id·k (mod 2³¹): same values, but the product stays
-    # ≤ (2³¹−1)·2654435761 < 2⁶³ — no silent int64 wrap at 10^10-doc ids
-    h = F.pmod(F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
-               F.lit(1 << 31))
-    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_per_source)
-        .drop("_rk")
-    )
+    h = id_hash(F.col("doc_id"), 17, 1 << 31)
+    return top_k(docs, ["source"], [h, "doc_id"], max_per_source)
 
 
 def per_source_cap_arrival(docs: DataFrame, max_per_source: int) -> DataFrame:
@@ -143,14 +147,7 @@ def per_source_cap_arrival(docs: DataFrame, max_per_source: int) -> DataFrame:
     must be content-stable under re-ingestion order; use this one when
     the earliest ids must win.
     """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("source").orderBy(F.col("doc_id").asc())
-    return (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_per_source)
-        .drop("_rk")
-    )
+    return top_k(docs, ["source"], ["doc_id"], max_per_source)
 
 
 def stratified_sample(docs: DataFrame, per_stratum: int) -> DataFrame:
@@ -163,16 +160,8 @@ def stratified_sample(docs: DataFrame, per_stratum: int) -> DataFrame:
     window); the two differ only in intent: cap = remove excess, sample =
     draw a fixed-size balanced subset.
     """
-    from pyspark.sql.window import Window
-
-    h = F.pmod(F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 29,
-               F.lit(1 << 31))  # overflow-safe, value-identical (see cap)
-    w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= per_stratum)
-        .drop("_rk")
-    )
+    h = id_hash(F.col("doc_id"), 29, 1 << 31)
+    return top_k(docs, ["lang"], [h, "doc_id"], per_stratum)
 
 
 def budget_select(docs: DataFrame, token_budget: int) -> DataFrame:
@@ -294,22 +283,15 @@ def mix_sources(docs: DataFrame, weights: dict[str, float], total: int) -> DataF
     profile as per_source_cap) after a broadcast semi-join that drops
     unweighted sources BEFORE the exchange.
     """
-    from pyspark.sql.window import Window
-
     sw = sum(weights.values())
     quotas = [(s, int(total * w / sw)) for s, w in sorted(weights.items())]
     spark = docs.sparkSession
     qdf = local_df(spark, quotas, "source string, quota long")
-    h = F.pmod(F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
-               F.lit(1 << 31))
-    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        docs.select("doc_id", "source")
-        .join(F.broadcast(qdf), "source")  # prunes BEFORE the window shuffle
-        .withColumn("mix_rank", F.row_number().over(w))
-        .filter(F.col("mix_rank") <= F.col("quota"))
-        .select("doc_id", "source", "mix_rank", "quota")
-    )
+    h = id_hash(F.col("doc_id"), 17, 1 << 31)
+    # the broadcast join prunes BEFORE the window shuffle
+    pruned = docs.select("doc_id", "source").join(F.broadcast(qdf), "source")
+    return top_k(pruned, ["source"], [h, "doc_id"], F.col("quota"),
+                 rank="mix_rank").select("doc_id", "source", "mix_rank", "quota")
 
 
 def normalize_text_nfc(df: DataFrame) -> DataFrame:

@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ops.latest import top_k
 from .dedup import word_ngrams_np
 from .quality import tokens
 
@@ -135,8 +136,6 @@ def top_terms_per_source(docs: DataFrame) -> DataFrame:
     partitioned by source — rank state is per-source, skew bounded by the
     hottest single domain's DISTINCT-term count (vocabulary-bounded, far
     below its row count)."""
-    from pyspark.sql.window import Window
-
     counts = (
         docs.select(
             F.col("source"),
@@ -145,14 +144,8 @@ def top_terms_per_source(docs: DataFrame) -> DataFrame:
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy("source").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("source", "term", "n", "rank")
-    )
+    return top_k(counts, ["source"], [F.col("n").desc(), "term"], 5,
+                 rank="rank").select("source", "term", "n", "rank")
 
 
 def token_share_curve(docs: DataFrame) -> DataFrame:

@@ -30,11 +30,12 @@ right plan).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import local_df
+from .clean import id_hash
 from .quality import token_count, tokens
 
 
@@ -148,6 +149,13 @@ def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     )
 
 
+def _doc_hash() -> Column:
+    """The shuffle key of corpus_shuffle and curriculum_order: the doc id
+    wrapped into 31 bits (as their oracles do), then `id_hash`ed mod
+    1e9+7 — the same values as hashing the wrapped id unguarded."""
+    return id_hash(F.pmod(F.col("doc_id"), F.lit(1 << 31)), 17, 1_000_000_007)
+
+
 def corpus_shuffle(docs: DataFrame) -> DataFrame:
     """Deterministic global training-order shuffle: every doc gets a
     reproducible pseudo-random position (`shuffle_rank`, 0-based) — the
@@ -162,13 +170,7 @@ def corpus_shuffle(docs: DataFrame) -> DataFrame:
     100 TB the downstream writer does ``repartitionByRange(shuffle_rank)``
     and writes; this table IS the shuffle.
     """
-    # wrap-before-multiply keeps the product in int64 at 10^10-doc ids
-    # (identical values mod 1e9+7; see train_test_split for the argument)
-    h = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
-        F.lit(1_000_000_007),
-    )
-    d = docs.select(F.col("doc_id")).withColumn("_hk", h).withColumn(
+    d = docs.select(F.col("doc_id")).withColumn("_hk", _doc_hash()).withColumn(
         "_one", F.lit(1).cast("long")
     )
     ranked = global_cumsum(
@@ -244,13 +246,9 @@ def curriculum_order(docs: DataFrame) -> DataFrame:
         F.lit(9),
         F.floor(F.col("uniq_token_ratio") * 10).cast("int"),
     ).cast("int")
-    h = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 17,
-        F.lit(1_000_000_007),
-    )
     d = (
         q.withColumn("band", band)
-        .withColumn("_hk", h)
+        .withColumn("_hk", _doc_hash())
         .withColumn("_one", F.lit(1).cast("long"))
     )
     ranked = global_cumsum(

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ops.latest import top_k
+
 
 def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """(vec_id, lo, scale, codes array<int>, dim) per non-empty vector.
@@ -123,14 +125,6 @@ def int8_topk(codes: DataFrame, query_ids: list[int]) -> DataFrame:
         ], dtype="object")
 
     dot = dot8(F.col("qcodes"), F.col("codes"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("vec_id"))
-    return (
-        codes.join(F.broadcast(q), codes["vec_id"] != q["query_id"])
-        .select("query_id", "vec_id", dot.alias("dot"))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 5)
-        .drop("_rk")
-    )
+    pairs = codes.join(F.broadcast(q), codes["vec_id"] != q["query_id"]).select(
+        "query_id", "vec_id", dot.alias("dot"))
+    return top_k(pairs, ["query_id"], [F.desc("dot"), "vec_id"], 5)

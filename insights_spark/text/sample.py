@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from insights_spark.text.clean import id_hash
 from insights_spark.text.pack import global_cumsum
 
 _DEC = "decimal(38,0)"
@@ -61,13 +62,7 @@ def pps_sample(docs: DataFrame, n: int) -> DataFrame:
     is a content-stable id hash with the id itself as tiebreak.
     """
     pos = docs.filter(F.col("n_chars") > 0)
-    # (id mod 2³¹)·k ≡ id·k (mod 2³¹): identical hash values, product
-    # can't wrap int64 at 10^10-doc ids (the train_test_split guard)
-    h = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(1 << 31)) * 2654435761 + 29,
-        F.lit(1 << 31),
-    )
-    tagged = pos.withColumn("_h", h)
+    tagged = pos.withColumn("_h", id_hash(F.col("doc_id"), 29, 1 << 31))
     cum = global_cumsum(
         tagged, "n_chars", [F.col("_h"), F.col("doc_id")], "_c"
     )

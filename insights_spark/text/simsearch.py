@@ -18,9 +18,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..ops.latest import top_k
 from ..session import local_df, pin
+from .clean import id_hash
 from .dedup import _band_explode, _band_self_join, _bit_band_keys
 
 
@@ -88,13 +89,9 @@ def cosine_topk(vectors: DataFrame) -> DataFrame:
     )
     joined = qs.join(F.broadcast(vs), F.col("id") != F.col("neighbor_id"))
     score = dot(F.col("_q"), F.col("_v")) / (F.col("_qn") * F.col("_vn"))
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        joined.withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("id", "neighbor_id", "score", "rank")
-    )
+    scored = joined.withColumn("score", score)
+    return top_k(scored, ["id"], [F.desc("score"), "neighbor_id"], 5,
+                 rank="rank").select("id", "neighbor_id", "score", "rank")
 
 
 def embedding_near_dups(vectors: DataFrame) -> DataFrame:
@@ -267,7 +264,7 @@ def sample_centroids(vectors: DataFrame, n_total: int, num_centroids: int) -> li
     IVF index build's reservoir step.
     """
     M = n_total * 2 + 1
-    hash_col = F.pmod(F.col("vec_id") * 2654435761 + 42, F.lit(M))
+    hash_col = id_hash(F.col("vec_id"), 42, M)
     t = max(1, (M * num_centroids * 4) // max(n_total, 1))
     while True:
         sliver = vectors.select("vec_id", "embedding").filter(hash_col < t)
@@ -331,11 +328,7 @@ def cosine_topk_sample(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     part = vectors.select("vec_id", "embedding").mapInPandas(
         gen, "id long, neighbor_id long, score double"
     )
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        part.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 5)
-    )
+    return top_k(part, ["id"], [F.desc("score"), "neighbor_id"], 5, rank="rank")
 
 
 def cosine_topk_bucketed(vectors: DataFrame, nprobe: int = 2) -> DataFrame:
@@ -433,12 +426,8 @@ def cosine_topk_bucketed(vectors: DataFrame, nprobe: int = 2) -> DataFrame:
         .applyInPandas(solve, out_schema)
     )
     # merge probe results: global top-5 per query
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        local.dropDuplicates(["id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-    )
+    return top_k(local.dropDuplicates(["id", "neighbor_id"]), ["id"],
+                 [F.desc("score"), "neighbor_id"], 5, rank="rank")
 
 
 def semantic_prune(vectors: DataFrame) -> DataFrame:

@@ -156,7 +156,7 @@ def test_hex_ring_col_matches_ring_ids(spark):
                                "lon double, lat double")
     for res, rings in ((1, 1), (2, 2), (6, 1)):
         enc = df.withColumn(
-            "cell", cells.hex_udf(res, use_h3=False)(F.col("lon"), F.col("lat"))
+            "cell", cells.hex_udf(res)(F.col("lon"), F.col("lat"))
         )
         got = enc.select(
             "cell", cells.hex_ring_col("cell", rings).alias("ring")
@@ -499,8 +499,7 @@ def test_hex_cover_bbox(spark):
     for c in list(got)[:50]:
         lon, lat = cells.hex_center(c)
         assert box[0] <= lon <= box[2] and box[1] <= lat <= box[3]
-        rebinned = cells.hex_cell_id(np.array([lon]), np.array([lat]), res,
-                                     use_h3=False)[0]
+        rebinned = cells.hex_cell_id(np.array([lon]), np.array([lat]), res)[0]
         assert int(rebinned) == c
     # degenerate box → empty cover, no error
     empty = spark.createDataFrame([("E", 10.0, 20.0, 10.5, 19.0)],
@@ -564,44 +563,6 @@ def test_tile_regions_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         vectorize.star_cc_labels(snake_edges, max_sweeps=1, collect_cap=0)
-
-
-@pytest.mark.extras
-def test_real_h3_parity_gate():
-    """When the optional h3 package is importable, the use_h3=True branch
-    must uphold the same structural invariants as the axial path: valid
-    resolution, deterministic encode, co-located points share a cell,
-    distant points don't, and ring sizes match the hexagonal 1+3k(k+1)
-    law the axial hex_ring_ids generator produces. (Skipped in sandboxes
-    without h3 — the import-gated branch must not bit-rot unchecked.)"""
-    import numpy as np
-    import pytest
-
-    h3 = pytest.importorskip("h3")
-    from insights_spark.geo import cells
-
-    lon = np.array([13.4050, 13.4051, -74.0060, 151.2093])
-    lat = np.array([52.5200, 52.5201, 40.7128, -33.8688])
-    for res in (2, 8):
-        got = cells.hex_cell_id(lon, lat, res, use_h3=True)
-        again = cells.hex_cell_id(lon, lat, res, use_h3=True)
-        assert (got == again).all()
-        for c in got.view(np.uint64):
-            assert h3.get_resolution(h3.int_to_str(int(c))) == res
-        ax = cells.hex_cell_id(lon, lat, res, use_h3=False)
-        # co-located Berlin pair binned together by BOTH paths at res 2;
-        # the three far-apart cities all distinct in both
-        if res == 2:
-            assert got[0] == got[1] and ax[0] == ax[1]
-        assert len({int(c) for c in got[1:]}) == 3
-        assert len({int(c) for c in ax[1:]}) == 3
-    # ring-size law: axial k-ring == canonical hex disk size == H3 grid_disk
-    h3_cell = h3.latlng_to_cell(52.52, 13.405, 8)
-    ax_cell = int(cells.hex_cell_id(np.array([13.405]), np.array([52.52]), 8,
-                                    use_h3=False)[0])
-    for k in (1, 2, 3):
-        assert len(cells.hex_ring_ids(ax_cell, k)) == 1 + 3 * k * (k + 1)
-        assert len(h3.grid_disk(h3_cell, k)) == 1 + 3 * k * (k + 1)
 
 
 def test_star_cc_sweep_count_on_snake(spark):
@@ -1089,7 +1050,7 @@ def test_home_cells_argmax_and_ties(spark):
         (r["lon"], r["lat"]): r["c"]
         for r in df.select(
             "lon", "lat",
-            cells.hex_udf(1, use_h3=False)(F.col("lon"), F.col("lat")).alias("c"),
+            cells.hex_udf(1)(F.col("lon"), F.col("lat")).alias("c"),
         ).distinct().collect()
     }
     ca, cb = cell_of[A], cell_of[B]

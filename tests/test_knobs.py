@@ -1,5 +1,5 @@
 """No unused settings: every optional parameter of a function or method under
-insights_spark/ (outside queries/) must get a value other than its default
+insights_spark/ (queries/ included) must get a value other than its default
 from some call outside tests/ — the library, its query registry, jobs,
 benchmarks and tools. A call matches by the callee's name (a plain name, an
 attribute, or a class name for __init__; a name imported as `from m import
@@ -103,7 +103,7 @@ def _defs(files: dict[Path, ast.AST]) -> list[dict]:
     out = []
     for path, tree in files.items():
         rel = path.relative_to(ROOT).as_posix().removeprefix("insights_spark/")
-        if path.is_relative_to(PKG) and not rel.startswith("queries/"):
+        if path.is_relative_to(PKG):
             v = _Defs(rel)
             v.visit(tree)
             out += v.out

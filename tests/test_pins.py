@@ -4,8 +4,8 @@
 it; ``queries()`` releases before every build and the jobs when a batch
 ends. A bare ``.persist(`` or ``.cache(`` under insights_spark/ would be
 held by the CacheManager with no owner, and ``clearCache`` would drop the
-caller's own cached frames too. This fails on any of them, in the package
-or in ``__spark_entry__.py``."""
+caller's own cached frames too. This fails on any of them, in the package,
+in ``__spark_entry__.py``, ``bench.py`` or ``tools/``."""
 
 from __future__ import annotations
 
@@ -26,7 +26,8 @@ def _pin_lines() -> range:
 def test_only_pin_persists_and_nothing_clears_the_cache():
     allowed = _pin_lines()
     calls = []
-    for path in [*sorted(PKG.rglob("*.py")), ROOT / "__spark_entry__.py"]:
+    for path in [*sorted(PKG.rglob("*.py")), ROOT / "__spark_entry__.py",
+                 ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]:
         for n in ast.walk(ast.parse(path.read_text())):
             if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
                 continue

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pyarrow.parquet as pq
+
 from insights_spark.runtime.sinks import ParquetSinks
 
 
@@ -46,6 +50,20 @@ def test_append_dedup(spark, tmp_path):
     got = {r["k"]: r["v"] for r in spark.read.parquet(p).collect()}
     assert got[2] == "b" and got[1] in ("a", "a2")  # existing key untouched
     assert spark.read.parquet(p).count() == 2
+
+
+def test_append_dedup_keeps_incoming_column_order(spark, tmp_path):
+    """The anti-join of a later append puts its USING keys first; every
+    part file must still store the columns in the incoming order."""
+    p = tmp_path / "t8"
+    sinks = ParquetSinks(spark)
+    ddl = "v string, seq long, k long"
+    sinks.append_dedup(spark.createDataFrame([("a", 1, 1)], ddl), str(p), ["k"])
+    sinks.append_dedup(spark.createDataFrame([("b", 2, 2)], ddl), str(p), ["k"])
+    sinks.append_dedup(spark.createDataFrame([("c", 3, 3)], ddl), str(p), ["k"])
+    files = sorted(Path(p).glob("*.parquet"))
+    assert len(files) >= 3
+    assert {tuple(pq.read_schema(f).names) for f in files} == {("v", "seq", "k")}
 
 
 def test_read_with_schema_runs_no_spark_job(spark, tmp_path):
