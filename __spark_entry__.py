@@ -19,13 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from insights_spark.queries import REGISTRY, Builder  # noqa: E402
 from insights_spark.queries._fixtures import _COUNTRIES, _points  # noqa: E402,F401
+from insights_spark.schemas import FIXTURES  # noqa: E402
 from insights_spark.session import release_pins  # noqa: E402
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+TABLES = list(FIXTURES)
 
 # ORDER MATTERS: the driver's correctness gate checks the FIRST 50 entries
 # of queries(), so those are pinned here; every other query follows in

@@ -61,6 +61,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from insights_spark.queries import REGISTRY  # noqa: E402
+from insights_spark.queries._fixtures import _t  # noqa: E402
 from insights_spark.session import get_spark  # noqa: E402
 
 # Headline = the queries registered with headline=True, in registry order:
@@ -181,7 +182,7 @@ def main() -> None:
 
     # flagship throughput: events rows processed per second end-to-end
     # (min-of-reps wall time, same discipline as the suite)
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    n_events = _t(spark, sf_dir, "events").count()
     flagship_sec = None
     fl_t0 = time.perf_counter()
     for _rep in range(reps):
@@ -225,7 +226,7 @@ def main() -> None:
                 from insights_spark.text.simsearch import (
                     embedding_lsh_candidates, embedding_near_dups_lsh)
 
-                emb = spark.read.parquet(f"{sf1_dir}/embeddings.parquet")
+                emb = _t(spark, sf1_dir, "embeddings")
                 # pin candidates exactly like the registered query does
                 cnd = pin(embedding_lsh_candidates(emb, n_bits=60, bands=6))
                 force(embedding_near_dups_lsh(emb, n_bits=60, bands=6,

@@ -56,6 +56,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..ops.latest import top_k
 from ..runtime.checkpoint import CheckpointStore
@@ -126,7 +127,8 @@ def run(
             # them, or the retry would admit nothing and overwrite the corpus
             # batch with an empty set (silent data loss on replay)
             seen = (
-                spark.read.parquet(paths["dedup_index"])
+                spark.read.schema("_norm_hash BIGINT, batch STRING")
+                .parquet(paths["dedup_index"])
                 .filter(F.col("batch") != bid)
                 .select("_norm_hash")
             )
@@ -165,9 +167,9 @@ def run(
         ).withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(POSTING_BUCKETS)))
         if os.path.isdir(paths["postings"]):
             touched = [r["bucket"] for r in new_post.select("bucket").distinct().collect()]
-            old = spark.read.parquet(paths["postings"]).filter(
-                F.col("bucket").isin(touched)
-            )
+            # new_post's columns, the partition column `bucket` last
+            old = spark.read.schema(new_post.schema).parquet(
+                paths["postings"]).filter(F.col("bucket").isin(touched))
             merged = (
                 old.unionByName(new_post)
                 # re-sort NUMERICALLY: csv ids are strings, and lexicographic
@@ -232,8 +234,9 @@ def run(
             acct.write.mode("overwrite").parquet(
                 os.path.join(paths["accounting_batches"], f"batch={bid}"))
             _crashpoint("between_accounting_batch_and_rollup")
+            batches = StructType(acct.schema.fields + [StructField("batch", StringType())])
             rolled = (
-                spark.read.parquet(paths["accounting_batches"])
+                spark.read.schema(batches).parquet(paths["accounting_batches"])
                 .groupBy("split", "lang_pred")
                 .agg(F.sum("docs").cast("bigint").alias("docs"),
                      F.sum("total_tokens").cast("bigint").alias("total_tokens"))

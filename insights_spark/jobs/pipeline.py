@@ -160,7 +160,9 @@ def run(
                     stats_ops.missed_changesets(el, existing_stats)
                 ).distinct()
             el_touched = pin(el.join(touched, "changeset", "left_semi"))
-            st = pin(stats_ops.changeset_stats_with_meters(el_touched))
+            # way geometry takes its nodes from the whole history: a touched
+            # way's nodes may sit in changesets of an earlier batch
+            st = pin(stats_ops.changeset_stats_with_meters(el_touched, el))
             sink_ops.merge(st, out["all_changesets_stats"], keys=["changeset"])
             # lineage records the stage's actual increment: rows_in = touched
             # element-history rows, rows_out = recomputed stats rows (both

@@ -67,7 +67,7 @@ def changeset_stats(elements: DataFrame) -> DataFrame:
     )
 
 
-def changeset_stats_with_meters(elements: DataFrame) -> DataFrame:
+def changeset_stats_with_meters(elements: DataFrame, history: DataFrame) -> DataFrame:
     """Full battery incl. added/modified_highway_meters (A2).
 
     The geodesic CASE-sum over ``construct_geometry`` becomes: reconstruct
@@ -75,6 +75,12 @@ def changeset_stats_with_meters(elements: DataFrame) -> DataFrame:
     join), then join lengths back by (id, version) and sum per changeset.
     The reference recomputed the geometry per chunk per run; here the
     length table is a reusable intermediate.
+
+    ``elements`` are the rows of the changesets to aggregate; ``history``
+    is the element history their ways' nodes are taken from. A way's nodes
+    may belong to changesets outside ``elements`` (an incremental batch
+    aggregates only the changesets it touched), so the pipeline passes the
+    full table.
     """
     counts = changeset_stats(elements)
 
@@ -83,7 +89,7 @@ def changeset_stats_with_meters(elements: DataFrame) -> DataFrame:
         & tag_exists(F.col("tags"), "highway")
         & F.col("type").isin("way", "relation")
     )
-    nodes = elements.filter(F.col("type") == "node")
+    nodes = history.filter(F.col("type") == "node")
     lengths = way_length_m(
         hw.select("id", "type", "version", "timestamp", "nds"), nodes
     )

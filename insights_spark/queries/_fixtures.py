@@ -10,6 +10,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import FIXTURES
 
 # Tables fanned out after the scan (see _t) and the size cap above which a
 # table is taken to have enough row groups to parallelize on its own.
@@ -18,7 +19,9 @@ _FANOUT_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table.
+    """Read one testdata table as its declared schema
+    (``schemas.FIXTURES``), which spares the read Spark's footer-inference
+    job.
 
     The fixture parquet ships ONE row group per file, so every row lands
     in the single scan task holding the row group's offset and all
@@ -33,9 +36,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``_FANOUT_MAX_BYTES`` or more (production shards with many row
     groups) never pay the shuffle.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(FIXTURES[name]).parquet(path)
     if name in _FANOUT_TABLES:
-        path = f"{sf_dir}/{name}.parquet"
         try:
             if os.path.isdir(path):
                 # spark-written tables are directories of part files

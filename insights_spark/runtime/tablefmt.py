@@ -142,7 +142,7 @@ class SnapshotTable:
         rel = f"c{sid_hint}-{uuid.uuid4().hex[:8]}"
         full = os.path.join(self._data, rel)
         df.write.mode("overwrite").parquet(full)
-        rows = self.spark.read.parquet(full).count()
+        rows = self.spark.read.schema(df.schema).parquet(full).count()
         return rel, rows
 
     def _retrying(self, build_dirs, operation: str, ts: int | None) -> int:

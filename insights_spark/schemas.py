@@ -1,7 +1,8 @@
 """Engine catalog: explicit StructType schemas (never inference).
 
 Mirrors the reference DDL (reference: queries.py:6-139) plus the web-pages
-source table shape from BASELINE.json input_hint. Decimal lat/lon columns are
+source table shape from BASELINE.json input_hint, and the fixture tables
+the registered queries read (``FIXTURES``). Decimal lat/lon columns are
 declared where the reference declares numeric(10,7)/(9,7); compute kernels
 work in double and cast at the edge.
 """
@@ -13,6 +14,7 @@ from pyspark.sql.types import (
     BinaryType,
     BooleanType,
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     MapType,
@@ -114,3 +116,84 @@ LINEAGE = StructType(
         StructField("sequence", LongType(), True),
     ]
 )
+
+# The query fixtures (`queries._fixtures._t`): a TPC-H-like star schema, an
+# `events` stream, a `documents` corpus and an `embeddings` table, as Spark
+# infers them from the pandas-written files (every column nullable, naive
+# timestamps as TIMESTAMP_NTZ). Declaring them spares each read a
+# footer-inference job. A typed read turns a column missing from a file
+# into nulls rather than an analysis error; tests/test_fixture_schemas.py
+# holds these equal to what Spark infers from the testdata tables.
+FIXTURES: dict[str, StructType] = {
+    "region": StructType([
+        StructField("r_regionkey", IntegerType()),
+        StructField("r_name", StringType()),
+    ]),
+    "nation": StructType([
+        StructField("n_nationkey", IntegerType()),
+        StructField("n_name", StringType()),
+        StructField("n_regionkey", IntegerType()),
+    ]),
+    "customer": StructType([
+        StructField("c_custkey", LongType()),
+        StructField("c_name", StringType()),
+        StructField("c_nationkey", IntegerType()),
+        StructField("c_acctbal", DoubleType()),
+        StructField("c_mktsegment", StringType()),
+    ]),
+    "supplier": StructType([
+        StructField("s_suppkey", LongType()),
+        StructField("s_name", StringType()),
+        StructField("s_nationkey", IntegerType()),
+        StructField("s_acctbal", DoubleType()),
+    ]),
+    "part": StructType([
+        StructField("p_partkey", LongType()),
+        StructField("p_name", StringType()),
+        StructField("p_brand", StringType()),
+        StructField("p_type", StringType()),
+        StructField("p_size", IntegerType()),
+        StructField("p_retailprice", DoubleType()),
+    ]),
+    "orders": StructType([
+        StructField("o_orderkey", LongType()),
+        StructField("o_custkey", LongType()),
+        StructField("o_orderstatus", StringType()),
+        StructField("o_totalprice", DoubleType()),
+        StructField("o_orderdate", TimestampNTZType()),
+        StructField("o_orderpriority", StringType()),
+    ]),
+    "lineitem": StructType([
+        StructField("l_orderkey", LongType()),
+        StructField("l_partkey", LongType()),
+        StructField("l_suppkey", LongType()),
+        StructField("l_linenumber", IntegerType()),
+        StructField("l_quantity", DoubleType()),
+        StructField("l_extendedprice", DoubleType()),
+        StructField("l_discount", DoubleType()),
+        StructField("l_tax", DoubleType()),
+        StructField("l_returnflag", StringType()),
+        StructField("l_linestatus", StringType()),
+        StructField("l_shipdate", TimestampNTZType()),
+    ]),
+    "events": StructType([
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampNTZType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]),
+    "documents": StructType([
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+        StructField("source", StringType()),
+        StructField("n_chars", LongType()),
+    ]),
+    "embeddings": StructType([
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(FloatType())),
+        StructField("label", IntegerType()),
+    ]),
+}

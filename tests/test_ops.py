@@ -175,7 +175,7 @@ def test_changeset_stats_battery(spark):
 def test_changeset_stats_meters(spark):
     e = _mk_elements(spark)
     got = {r["changeset"]: r.asDict()
-           for r in stats.changeset_stats_with_meters(e).collect()}
+           for r in stats.changeset_stats_with_meters(e, e).collect()}
     # way 5 (highway, create, cs 101): nds [2,1] → node2(2,2) to node1 —
     # node1 latest version as-of way ts T is v1 at (1,1)
     from insights_spark.geo.length import vincenty_m

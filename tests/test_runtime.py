@@ -352,6 +352,38 @@ def test_pipeline_chain_failure_commits_nothing_and_resume_converges(
         assert _table_rows(spark, f"{out}/{t}") == _table_rows(spark, f"{ref}/{t}"), t
 
 
+def _history_page(seq: int, body: str) -> tuple:
+    """A hand-written element-history page (a PAGES row) at minute `seq`."""
+    return (f"https://example.org/osm/element-history/{seq:09d}",
+            datetime(2021, 8, 5, 0, seq),
+            f"<html><body><pre><osm version='0.6'>{body}</osm></pre></body></html>"
+            .encode(), None, "en")
+
+
+def test_pipeline_resume_meters_take_nodes_from_earlier_batches(spark, tmp_path):
+    """A highway way whose nodes came in an earlier batch's changeset gets
+    its length on resume: the stats of the resumed run equal a one-shot
+    run's, and the way's ~1113 m is counted."""
+    from insights_spark.schemas import PAGES
+
+    nodes = _history_page(1, "".join(
+        f"<node id='{i}' version='1' timestamp='2021-08-05T00:00:0{i}Z' uid='7'"
+        f" changeset='500' lat='0.0' lon='{lon}'/>" for i, lon in ((1, 0.0), (2, 0.01))))
+    way = _history_page(2, (
+        "<way id='10' version='1' timestamp='2021-08-05T00:01:00Z' uid='7'"
+        " changeset='501'><nd ref='1'/><nd ref='2'/>"
+        "<tag k='highway' v='residential'/></way>"))
+    out, ref = str(tmp_path / "wh"), str(tmp_path / "ref")
+    pipeline.run(spark, local_df(spark, [nodes], PAGES), out)
+    pipeline.run(spark, local_df(spark, [nodes, way], PAGES), out, resume=True)
+    pipeline.run(spark, local_df(spark, [nodes, way], PAGES), ref)
+    resumed = _table_rows(spark, f"{out}/all_changesets_stats")
+    assert resumed == _table_rows(spark, f"{ref}/all_changesets_stats")
+    meters = spark.read.parquet(f"{out}/all_changesets_stats").filter(
+        F.col("changeset") == 501).first()["added_highway_meters"]
+    assert meters == pytest.approx(1113.19, abs=0.01)
+
+
 def test_pipeline_element_history_layout(spark, tmp_path):
     """The physical design claim: element_history is partitioned by type."""
     out = str(tmp_path / "wh2")
